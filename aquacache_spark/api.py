@@ -57,15 +57,19 @@ def _window(df: DataFrame, start: Optional[str], end: Optional[str],
     return df
 
 
-def _series_type(store: FixtureStore, timeseries_id: int) -> str:
+def _catalog_field(store: FixtureStore, timeseries_id: int, field: str):
     row = (
         store.timeseries.where(F.col("timeseries_id") == timeseries_id)
-        .select("timeseries_type")
+        .select(field)
         .collect()
     )
     if not row:
         raise KeyError(f"unknown timeseries_id {timeseries_id}")
     return row[0][0]
+
+
+def _series_type(store: FixtureStore, timeseries_id: int) -> str:
+    return _catalog_field(store, timeseries_id, "timeseries_type")
 
 
 def _resolve_raw(
@@ -186,11 +190,7 @@ def measurements_calculated_daily(
     excluded (when the store carries a period column), and so is any
     point inside a non-zero-width unusable grade-'N' window (inclusive
     BETWEEN, ``g.start_dt <> g.end_dt``)."""
-    agg_type = (
-        store.timeseries.where(F.col("timeseries_id") == timeseries_id)
-        .select("aggregation_type")
-        .collect()[0][0]
-    )
+    agg_type = _catalog_field(store, timeseries_id, "aggregation_type")
     corrected = measurements_continuous_corrected(store, timeseries_id)
     if "period_seconds" in corrected.columns:
         corrected = corrected.where(F.col("period_seconds") <= 86400)

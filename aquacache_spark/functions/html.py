@@ -13,6 +13,10 @@ model): the main text is the concatenation of <p>-block contents —
 the text-bearing tag — so navs, footers, scripts, styles, and bare
 divs drop out as boilerplate; ``boilerplate_ratio`` reports how much
 of the tag-stripped page text was discarded.
+
+Not part of the AquaCache surface: reached only from
+``queries/web.py`` — perfbench's ``warc_crawl_corpus`` probe and the
+web-tier queries a later change still has to cut.
 """
 
 from __future__ import annotations

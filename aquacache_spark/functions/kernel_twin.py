@@ -4,9 +4,9 @@ A *kernel twin* is an Arrow/numpy re-expression of an existing JVM
 DataFrame operator that produces BIT-IDENTICAL output — the engine
 keeps the declarative plan as the semantic source of truth and offers
 the twin where the JVM expression tree re-does per-instance work a
-per-task kernel can amortize (measured wins: cosine_topk_blas,
-semantic_dedup_blas, hashed_linear_score_frame at ~10x,
-mann_kendall_blas).  Three proven instances shared an implicit
+per-task kernel can amortize (measured wins:
+hashed_linear_score_frame at ~10x, mann_kendall_blas).  The proven
+instances shared an implicit
 contract; this module makes it explicit so the next twin is a page,
 not a module:
 

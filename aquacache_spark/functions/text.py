@@ -43,7 +43,7 @@ def bind(col: Column, f) -> Column:
 
     A sub-expression referenced inside a transform/filter lambda body is
     re-evaluated per element (CollapseProject inlines aliases into the
-    lambda), turning O(n) kernels O(n²) — winnow_fingerprints measured
+    lambda), turning O(n) kernels O(n²) — a winnowing kernel measured
     513s -> 0.6s at sf0.001 from this alone. ``transform(array(x),
     v -> body)`` forces one evaluation; ``element_at(..., 1)`` unwraps.
     """
@@ -485,7 +485,7 @@ def hashed_linear_score_frame(
     cache_cap: int = 1 << 20,
 ):
     """Arrow-kernel twin of :func:`hashed_linear_score` (the
-    similarity.cosine_topk_blas technique applied to the #1 bench
+    functions/kernel_twin.py technique applied to the #1 bench
     query): per Arrow batch, hash each UNIQUE gram once (token
     frequencies are Zipf — the JVM expression md5-hashes every gram
     INSTANCE, so a task-lifetime qw-cache removes the vast majority of

@@ -34,6 +34,10 @@ each yield ONE record dict with ``ok=False`` and a diagnostic
 ``error``; parsing resumes at the next gzip member when boundaries
 are still known, else stops (a corrupt mid-stream plain record has no
 resync point).
+
+Not part of the AquaCache surface: reached only from
+``queries/web.py`` — perfbench's ``warc_crawl_corpus`` probe and the
+web-tier queries a later change still has to cut.
 """
 
 from __future__ import annotations

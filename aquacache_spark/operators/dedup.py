@@ -1,21 +1,21 @@
-"""Deduplication operators for large-scale training-data pipelines.
-
-Four tiers, all shuffle-on-key distributed designs (100 TB ready):
+"""Deduplication operators for text-corpus pipelines.
 
 - **exact**: md5 fingerprint groupBy — one shuffle on the hash, group
   sizes are duplicate-cluster sizes.
 - **MinHash + LSH**: k-word shingles -> m portable hash functions ->
-  per-band bucket keys -> candidate pairs via bucket self-join. The
-  self-join is on (band, bucket-signature), so only near-duplicates
-  collide; cost is proportional to true duplicate mass, not n².
+  per-band bucket keys -> candidate pairs from each bucket's member
+  list. Only documents that share a band key meet, so cost follows
+  true duplicate mass, not n².
 - **SimHash**: per-token hash bits weighted-summed into a compact
   signature; near-dups share signatures / low Hamming distance.
-- **n-gram Jaccard**: exact verification on candidate pairs (or, at
-  small scale, all pairs that share >=1 shingle via inverted-index
-  self-join — never a cross join).
+- **n-gram Jaccard**: exact verification on candidate pairs.
 
 The hash primitive (md5-hex -> int, functions/text.py) is bit-identical
 in the DuckDB oracle, so every stage is differentially testable.
+
+Not part of the AquaCache surface: reached only from
+``queries/dedup.py`` — perfbench's ``minhash_lsh_pairs`` probe and the
+dedup-tier queries a later change still has to cut.
 """
 
 from __future__ import annotations
@@ -24,6 +24,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import fingerprint, md5_int, tokens, word_shingles
+from ._scan import spread_scan
 
 # MinHash universal-hash family over the Mersenne-31 field (r11 fix):
 # the original family h_i = (a_i * base + b_i) mod (2^61 - 1) with a
@@ -42,31 +43,14 @@ MINHASH_A = [(1103515245 * (i + 1) + 12345) % MINHASH_P31
              for i in range(64)]
 MINHASH_B = [(2654435761 * (i + 1) + 1013904223) % MINHASH_P31
              for i in range(64)]
+
+
 # Stamped into every persisted signature/band-key artifact (ADVICE
 # r11): the r11 family change silently invalidated any store built
 # under the degenerate 2^61 family — a mixed-version incremental run
 # would see ZERO collisions, not an error. Bump on any change to the
 # hash family, shingling, or band-key layout.
 MINHASH_FAMILY = "mersenne31-v2"
-
-
-def _spread_scan(df: DataFrame, key: str) -> DataFrame:
-    """Decouple compute parallelism from file splits for hash-heavy
-    map stages (one md5 per shingle/token/char-gram): a small or
-    single-row-group parquet reads as ONE task, which would serialize
-    the hashing before the first shuffle. Redistributing the raw text
-    once is cheap relative to the hashing; left alone when the scan
-    already yields enough splits (the 100 TB case).
-
-    No-op on streaming frames: .rdd is illegal on a streaming plan
-    (AnalysisException), and micro-batch parallelism is governed by
-    the source's maxFilesPerTrigger/partitioning, not file splits."""
-    if df.isStreaming:
-        return df
-    sc = df.sparkSession.sparkContext
-    if df.rdd.getNumPartitions() < sc.defaultParallelism:
-        df = df.repartition(sc.defaultParallelism, key)
-    return df
 
 
 def _with_corpus_total(freq: DataFrame, cnt_col: str) -> DataFrame:
@@ -361,7 +345,7 @@ def minhash_signatures(
         raise ValueError(
             f"num_hashes={num_hashes} exceeds the {len(MINHASH_A)} "
             "precomputed family constants (extend MINHASH_A/B)")
-    sh = _spread_scan(df, id_col).select(
+    sh = spread_scan(df, id_col).select(
         F.col(id_col), F.explode(word_shingles(F.col(text_col), shingle_k)).alias("sh")
     )
     base = md5_int(F.col("sh"), 8) % MINHASH_P31
@@ -583,7 +567,7 @@ def incremental_lsh_pairs(
         store.check_props(lsh_props)
     # r13 (guide §2.2 fewer/larger partitions): the cached key frame
     # used to inherit the MinHash map stage's partitioning (wide — one
-    # partition per core via _spread_scan, right for the md5 mass,
+    # partition per core via spread_scan, right for the md5 mass,
     # wrong for the small banded OUTPUT): every downstream consumer of
     # the cache then ran one task per map partition over a few hundred
     # rows each, and the query got SLOWER with more cores. The
@@ -699,7 +683,7 @@ def simhash(
     Token-level explode + bit explode (plan-time constant width), one
     aggregation keyed by doc — linear in corpus token count.
     """
-    tok = _spread_scan(df, id_col).select(
+    tok = spread_scan(df, id_col).select(
         F.col(id_col), F.explode(tokens(F.lower(F.col(text_col)))).alias("tok")
     ).withColumn("h", md5_int(F.col("tok")))
     bit_sums = [
@@ -714,48 +698,6 @@ def simhash(
         term = F.when(F.col(f"b{j}") > 0, F.lit(1 << j)).otherwise(F.lit(0))
         sig = term if sig is None else sig + term
     return agg.select(id_col, sig.cast("long").alias("simhash"))
-
-
-def jaccard_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingle_k: int = 3,
-    threshold: float = 0.5,
-) -> DataFrame:
-    """Exact n-gram Jaccard similarity for every pair sharing >=1 shingle.
-
-    Inverted-index self-join on the shingle (never a cross join):
-    |A ∩ B| from the join, |A|,|B| from per-doc counts; Jaccard =
-    inter / (|A| + |B| - inter). At 100 TB this runs on LSH candidates
-    instead of all sharing pairs (compose with lsh_candidate_pairs).
-    """
-    sh = df.select(
-        F.col(id_col), F.explode(word_shingles(F.col(text_col), shingle_k)).alias("sh")
-    )
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
-    a = sh.alias("a")
-    b = sh.alias("b")
-    inter = (
-        a.join(b, "sh")
-        .where(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        .groupBy(
-            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
-        )
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col(id_col).alias("id_b"), F.col("n_sh").alias("n_b"))
-    out = (
-        inter.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn(
-            "jaccard",
-            F.col("inter") / (F.col("n_a") + F.col("n_b") - F.col("inter")),
-        )
-        .where(F.col("jaccard") >= threshold)
-    )
-    return out.select("id_a", "id_b", "inter", "n_a", "n_b", "jaccard")
 
 
 def embedding_near_duplicates(
@@ -917,7 +859,7 @@ def winnow_fingerprints(
             ),
         ).otherwise(empty)
 
-    df = _spread_scan(df, id_col)
+    df = spread_scan(df, id_col)
     norm = F.regexp_replace(F.lower(F.col(text_col)), "[^a-z0-9]", "")
     fps = bind(norm, lambda s: bind(grams_of(s), fps_of))
     return df.select(F.col(id_col), F.explode(fps).alias("fp")).distinct()
@@ -1240,14 +1182,14 @@ def contamination_overlap(
     ``overlap_ngrams`` (0 when clean) and ``contaminated`` =
     overlap >= threshold.
     """
-    t_sh = _spread_scan(train, id_col).select(
+    t_sh = spread_scan(train, id_col).select(
         F.col(id_col),
         F.explode(word_shingles(F.col(text_col), ngram_k)).alias("sh"),
     )
     # r13 (guide §2.5): the eval fixture also reads as one split — the
     # gram explode + distinct partial ran as ONE task (~0.35s of the
     # gate's critical path); spread is a no-op at real split counts
-    e_sh = _spread_scan(evalset, id_col).select(
+    e_sh = spread_scan(evalset, id_col).select(
         F.explode(word_shingles(F.col(text_col), ngram_k)).alias("sh")
     ).distinct()
     hits = (
@@ -1288,7 +1230,7 @@ def unigram_surprisal(
     the corpus, so scoring is a broadcast join + partial-aggregable
     sum. Output: (id, n_tokens, mean_surprisal).
     """
-    tok = _spread_scan(df, id_col).select(
+    tok = spread_scan(df, id_col).select(
         F.col(id_col), F.explode(tokens(F.lower(F.col(text_col)))).alias("tok")
     )
     # r13 (guide §2.4): the explicit notnull filter (a data no-op —
@@ -1339,7 +1281,7 @@ def per_language_unigram_surprisal(
     # the SAME projection as a generator loses its struct field names
     # during the explode rewrite (col1..colN) and fails analysis —
     # derive lang first, explode second
-    tok = _spread_scan(df, id_col).select(
+    tok = spread_scan(df, id_col).select(
         F.col(id_col), lang_expr.alias("lang"), F.col(text_col),
     ).select(
         id_col, "lang",
@@ -1371,109 +1313,6 @@ def per_language_unigram_surprisal(
     )
 
 
-def _repeated_gram_positions(
-    docs: DataFrame,
-    k: int,
-    id_col: str,
-    text_col: str,
-    persist: bool = False,
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Shared engine for the exact-substring family: -> (base, dup,
-    grams).
-
-    ``persist=True`` caches the exploded gram table so the two passes
-    over it (counts-only reduction + semi-join probe) hash the grams
-    once — the CALLER then owns the release (unpersist once its
-    downstream frames are materialized; long_repeated_span_coverage
-    does exactly this). ``persist=False`` (default for the LAZY
-    operators repeated_span_coverage / remove_repeated_spans, r11)
-    recomputes the map-side explode per pass instead: ~2x the gram
-    hashing inside one action, but no session-pinned MEMORY_AND_DISK
-    blocks a lazy return value cannot release — recompute-from-lineage
-    is the normal Spark answer, the cache is the exception.
-
-    ``base`` = (id, n_tokens, __toks); ``dup`` = (id, pos) start
-    positions of k-token grams whose hash occurs in >= 2 documents.
-    Shapes: the gram explode is map-side (token array bound once per
-    row); the repeated-hash reduction aggregates COUNTS only (never
-    occurrence lists — a boilerplate gram present in millions of docs
-    must not land one unbounded reducer array), then a hash-keyed
-    semi-join filters the gram table to surviving hashes: linear
-    output per hot hash, AQE-splittable, spill-safe.
-    """
-    from pyspark.sql import Window
-    from pyspark.storagelevel import StorageLevel
-
-    from ..functions.text import bind, md5_int, tokens
-
-    def grams_of(toks):
-        n = F.size(toks)
-        idx = F.sequence(F.lit(0), n - k)
-        return F.when(
-            n >= k,
-            F.transform(
-                idx,
-                lambda i: F.struct(
-                    i.alias("pos"),
-                    md5_int(F.concat_ws(" ", F.slice(toks, i + 1, k)))
-                    .alias("h"),
-                ),
-            ),
-        ).otherwise(F.array().cast("array<struct<pos:int,h:bigint>>"))
-
-    base = docs.select(
-        F.col(id_col),
-        F.size(tokens(F.lower(F.col(text_col)))).alias("n_tokens"),
-        tokens(F.lower(F.col(text_col))).alias("__toks"),
-        bind(tokens(F.lower(F.col(text_col))), grams_of).alias("__g"),
-    )
-    grams = base.select(
-        id_col, F.explode("__g").alias("g")
-    ).select(
-        id_col, F.col("g.pos").alias("pos"), F.col("g.h").alias("h")
-    )
-    if persist:
-        grams = grams.persist(StorageLevel.MEMORY_AND_DISK)
-        # counts-only reduction: count_distinct plans as a (h, doc)
-        # partial-distinct then a plain count — constant per-key
-        # state, no arrays, so a gram in millions of docs costs rows,
-        # not one reducer's heap. The semi-join back is linear in the
-        # hot hash's gram rows (right side is distinct hashes) and
-        # AQE-splittable; both passes read the cached gram table, so
-        # the hashing runs once.
-        survivors = (
-            grams.groupBy("h")
-            .agg(F.count_distinct(F.col(id_col)).alias("__nd"))
-            .where(F.col("__nd") >= 2)
-            .select("h")
-        )
-        dup = grams.join(survivors, "h", "left_semi") \
-            .select(id_col, "pos")
-        return base.drop("__g"), dup, grams
-    # Lazy path (r12): ONE pass over the grams. The former two-pass
-    # shape (count_distinct reduction + semi-join probe) recomputed
-    # the map-side gram hashing per pass and planned three shuffle
-    # exchanges plus a broadcast; "occurs in >= 2 documents" is
-    # equivalently min(doc) != max(doc) over the hash group, which one
-    # hash-keyed window computes over a SINGLE exchange of the gram
-    # rows — the gram bytes and the md5 work move exactly once (guide
-    # §2.4/§8; plans/r12/repeated_span_coverage_{before,after}.txt).
-    # Hot-gram note: a boilerplate gram shared by millions of docs now
-    # lands one sort-based window partition (linear, spill-safe, no
-    # per-key arrays) instead of an AQE-splittable probe — the same
-    # one-group-per-hot-key posture as the paragraph-dedup window; the
-    # capped/long variants remain the adversarial-corpus tier.
-    wh = Window.partitionBy("h")
-    dup = (
-        grams
-        .withColumn("__mn", F.min(id_col).over(wh))
-        .withColumn("__mx", F.max(id_col).over(wh))
-        .where(F.col("__mn") != F.col("__mx"))
-        .select(id_col, "pos")
-    )
-    return base.drop("__g"), dup, grams
-
-
 def _owned_cache_release(out: DataFrame, grams: DataFrame) -> DataFrame:
     """The long-gram ownership pattern (VERDICT r11 #2) for the k=8
     span family: eager-checkpoint the output, then release the gram
@@ -1495,136 +1334,6 @@ def _owned_cache_release(out: DataFrame, grams: DataFrame) -> DataFrame:
     else:
         out = out.localCheckpoint(eager=True)
     grams.unpersist(blocking=True)
-    return out
-
-
-def repeated_span_coverage(
-    docs: DataFrame,
-    k: int = 8,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    owned_cache: bool = False,
-) -> DataFrame:
-    """Fragment-level exact-substring duplication signal — the
-    suffix-array-free approximation of "train-set substrings repeated
-    verbatim elsewhere": positions of k-token grams whose hash occurs
-    in >= 2 documents, reduced to the per-doc fraction of tokens
-    covered by any such span (machinery shared with
-    remove_repeated_spans via _repeated_gram_positions — see its
-    docstring for the scale shape).
-
-    The covered-token union needs no interval algebra: with start
-    positions sorted, each start contributes ``min(k, s_i - s_{i-1})``
-    (first contributes k) — one lag window per doc.  The final
-    reattachment joins two corpus-cardinality frames co-partitioned on
-    the doc id.  Docs shorter than k tokens emit no grams and score 0.
-
-    ``owned_cache=True``: the caller owns the pipeline stage (a
-    curation gate, the capstone) — cache the exploded gram table so
-    the two passes hash the grams once, eager-checkpoint the small
-    per-doc output, and release the cache before returning. Default
-    stays lazy (recompute-from-lineage; see _repeated_gram_positions).
-    """
-    base, dup, grams = _repeated_gram_positions(
-        docs, k, id_col, text_col, persist=owned_cache)
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(id_col).orderBy("pos")
-    cov = (
-        dup.withColumn("__prev", F.lag("pos").over(w))
-        .withColumn(
-            "__contrib",
-            F.when(F.col("__prev").isNull(), F.lit(k)).otherwise(
-                F.least(F.lit(k), F.col("pos") - F.col("__prev"))
-            ),
-        )
-        .groupBy(id_col)
-        .agg(
-            F.sum("__contrib").alias("dup_tokens"),
-            F.count("*").alias("dup_spans"),
-        )
-    )
-    out = (
-        base.select(id_col, "n_tokens")
-        .join(cov, id_col, "left")
-        .select(
-            id_col, "n_tokens",
-            F.coalesce("dup_spans", F.lit(0)).cast("long")
-            .alias("dup_spans"),
-            F.coalesce("dup_tokens", F.lit(0)).cast("long")
-            .alias("dup_tokens"),
-            (F.coalesce("dup_tokens", F.lit(0))
-             / F.greatest(F.col("n_tokens"), F.lit(1)).cast("double"))
-            .alias("coverage_frac"),
-        )
-    )
-    if owned_cache:
-        out = _owned_cache_release(out, grams)
-    return out
-
-
-def remove_repeated_spans(
-    docs: DataFrame,
-    k: int = 8,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    owned_cache: bool = False,
-) -> DataFrame:
-    """Exact-substring deduplication ACTION (the ExactSubstr cut of
-    "Deduplicating Training Data Makes Language Models Better"):
-    rebuild each document with every token covered by a cross-document
-    repeated k-gram removed — the companion of repeated_span_coverage,
-    which only measures.
-
-    Scale shape: shares _repeated_gram_positions (counts-only
-    reduction, no hot-gram arrays); covered token indices come from a
-    bounded per-start ``sequence(pos, pos+k-1)`` explode + distinct;
-    the rebuild is a tokens-explode anti-join co-partitioned on
-    (doc, idx) and one per-doc ordered reassembly — shuffle ∝ corpus
-    tokens, the minhash cost class, nothing quadratic.
-
-    Output: (id, n_tokens, kept_tokens, cleaned_text).
-
-    ``owned_cache=True``: cache the gram table across the two passes,
-    eager-checkpoint the output corpus, release the cache before
-    returning (the capstone pattern — downstream stages re-read the
-    cleaned corpus several times, so the checkpoint doubles as their
-    shared materialization; note the checkpoint stores a full copy of
-    the cleaned text in executor storage).
-    """
-    base, dup, grams = _repeated_gram_positions(
-        docs, k, id_col, text_col, persist=owned_cache)
-    covered = dup.select(
-        id_col,
-        F.explode(
-            F.sequence(F.col("pos"), F.col("pos") + F.lit(k - 1))
-        ).alias("idx"),
-    ).distinct()
-    toks = base.select(
-        id_col, F.posexplode("__toks").alias("idx", "tok")
-    )
-    kept = toks.join(covered, [id_col, "idx"], "left_anti")
-    agg = kept.groupBy(id_col).agg(
-        F.count(F.lit(1)).cast("long").alias("kept_tokens"),
-        F.concat_ws(
-            " ",
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("idx", "tok"))),
-                lambda x: x["tok"],
-            ),
-        ).alias("cleaned_text"),
-    )
-    out = (
-        base.select(id_col, "n_tokens")
-        .join(agg, id_col, "left")
-        .select(
-            id_col, "n_tokens",
-            F.coalesce("kept_tokens", F.lit(0)).alias("kept_tokens"),
-            F.coalesce("cleaned_text", F.lit("")).alias("cleaned_text"),
-        )
-    )
-    if owned_cache:
-        out = _owned_cache_release(out, grams)
     return out
 
 
@@ -1656,7 +1365,7 @@ def bigram_surprisal(
     equi-join on the bigram key) instead of being forced broadcast.
     Output: (id, n_bigrams, mean_surprisal).
     """
-    base = _spread_scan(df, id_col).select(
+    base = spread_scan(df, id_col).select(
         F.col(id_col),
         tokens(F.lower(F.col(text_col))).alias("__toks"),
     ).withColumn("__n", F.size("__toks"))
@@ -1726,371 +1435,3 @@ def bigram_surprisal(
             "mean_surprisal",
         )
     )
-
-
-def kn_bigram_surprisal(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    discount: float = 0.75,
-) -> DataFrame:
-    """Per-document mean INTERPOLATED KNESER-NEY bigram surprisal —
-    the continuation-count rung above deleted interpolation
-    (:func:`bigram_surprisal`):
-
-        p(w | u) = ( max(c(u,w) - D, 0)
-                     + D * N1+(u,*) * (N1+(*,w) / N_bb) ) / c(u,*)
-
-    with c(u,*) = bigram positions starting with u, N1+(u,*) = distinct
-    continuations of u, N1+(*,w) = distinct histories of w (the
-    continuation probability's numerator — how many contexts w opens,
-    not how often it occurs: the 'San Francisco' correction), and
-    N_bb = distinct bigram types (= sum over w of N1+(*,w), so p_cont
-    normalizes). Every scored bigram occurs in the corpus (c >= 1), so
-    p > 0 with no extra floor. Docs with < 2 tokens report 0 bigrams
-    and a NULL mean.
-
-    Determinism: per-bigram surprisal quantizes to integer micro-nats
-    before the per-doc exact sum; the float expression shape (operand
-    order, int->double promotion points) is mirrored verbatim in the
-    DuckDB oracle so both engines agree to the ulp.
-
-    Scale: one bigram-explode aggregation (corpus-token shuffle
-    class); left/right continuation stats are two partial-aggregable
-    groupBys over the BIGRAM-TYPE frame (far below corpus
-    cardinality); N_bb is an agg + 1-row broadcast cross-join (never a
-    global window); the scoring dim is bigram-vocab-sized and left to
-    AQE. Output: (id, n_bigrams, mean_surprisal).
-    """
-    base = _spread_scan(df, id_col).select(
-        F.col(id_col),
-        tokens(F.lower(F.col(text_col))).alias("__toks"),
-    ).withColumn("__n", F.size("__toks"))
-    toks = F.col("__toks")
-    pairs = base.select(
-        F.col(id_col),
-        F.explode(
-            F.when(
-                F.col("__n") >= 2,
-                F.transform(
-                    F.sequence(F.lit(1), F.col("__n") - 1),
-                    lambda i: F.struct(
-                        F.element_at(toks, i).alias("p"),
-                        F.element_at(toks, i + 1).alias("w")),
-                ),
-            )
-        ).alias("bg"),
-    ).select(id_col, F.col("bg.p").alias("p"), F.col("bg.w").alias("w"))
-    # r13 single-derivation, ACTUALLY single at runtime (guide §2.4):
-    # the r12 dpw shape relied on AQE exchange reuse to dedupe the
-    # tokenize+explode subtree across the 5 LM/probe consumers, but
-    # reuse never fired — each consumer pushed DIFFERENT inferred
-    # IsNotNull filters (p∧w / p / w / none) below the shared
-    # aggregate, so the exchanges were not canonically equal and the
-    # explode executed 5x (runtime plan evidence in plans/r13).  Two
-    # stabilizers make every LM consumer's subtree byte-identical:
-    #  1. an explicit notnull filter on the pair stream (no-op on
-    #     data: split() never yields NULL tokens, and NULL-text docs
-    #     explode to zero rows — oracle hashes pin this);
-    #  2. a vacuous `cb > 0` predicate on the consumers that would
-    #     otherwise PRUNE the count column (count(*) >= 1 always),
-    #     keeping column pruning identical below the exchange.
-    # Result: ONE bigram explode feeds the whole LM side through a
-    # ReusedExchange; the probe is the only other explode (2 total,
-    # was 5; measured 2.0s -> 0.95s at sf0.1/local[32]).
-    pairs = pairs.where(F.col("p").isNotNull() & F.col("w").isNotNull())
-    bgc = pairs.groupBy("p", "w").agg(F.count(F.lit(1)).alias("cb"))
-    left = bgc.groupBy("p").agg(
-        F.sum("cb").alias("cu"),          # c(u,*)
-        F.count(F.lit(1)).alias("n1u"),   # N1+(u,*)
-    )
-    right = bgc.where(F.col("cb") > 0).groupBy("w").agg(
-        F.count(F.lit(1)).alias("n1w"))   # N1+(*,w)
-    nbb = bgc.where(F.col("cb") > 0).agg(F.count(F.lit(1)).alias("nbb"))
-    score = (
-        bgc.join(left, "p").join(right, "w")
-        .crossJoin(F.broadcast(nbb))
-        .select(
-            "p", "w",
-            F.floor(
-                -F.log(
-                    (F.greatest(F.col("cb") - F.lit(discount), F.lit(0.0))
-                     + F.lit(discount) * F.col("n1u")
-                     * (F.col("n1w") / F.col("nbb")))
-                    / F.col("cu"))
-                * 1e6 + F.lit(0.5)
-            ).cast("long").alias("__q"),
-        )
-    )
-    # probe: per-(doc, bigram) TYPES into the scoring join (not raw
-    # positions — at 100 TB the scoring join may not broadcast, and
-    # the type aggregate shrinks that shuffle; it costs no exchange
-    # here because the stream is already doc-partitioned).
-    # sum(__c) == count(positions) and sum(__q*__c) == sum(__q over
-    # positions) in exact long arithmetic -> bit-identical doubles.
-    dpw = pairs.groupBy(id_col, "p", "w").agg(
-        F.count(F.lit(1)).alias("__c"))
-    scored = (
-        dpw.join(score, ["p", "w"])
-        .groupBy(id_col)
-        .agg(F.sum("__c").cast("long").alias("n_bigrams"),
-             ((F.sum(F.col("__q") * F.col("__c"))) / 1e6
-              / F.sum("__c")).alias("mean_surprisal"))
-    )
-    return (
-        df.select(id_col)
-        .join(scored, id_col, "left")
-        .select(
-            id_col,
-            F.coalesce("n_bigrams", F.lit(0)).alias("n_bigrams"),
-            "mean_surprisal",
-        )
-    )
-
-
-def trigram_surprisal(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    l3: float = 0.6,
-    l2: float = 0.3,
-) -> DataFrame:
-    """Per-document mean DELETED-INTERPOLATION TRIGRAM surprisal —
-    the next rung after :func:`bigram_surprisal`:
-
-        p(w | u, v) = l3 * c(uvw)/c(uv) + l2 * c(vw)/c(v)
-                      + (1 - l3 - l2) * c(w)/N
-
-    (denominators are the lower-order counts over ALL positions — the
-    same documented deficient-normalization MLE as the bigram model,
-    so the oracle mirrors it exactly). Score = mean of ``-ln p`` over
-    trigram positions; docs with < 3 tokens report 0 trigrams and a
-    NULL mean.
-
-    Determinism + scale: identical to the bigram model one order up —
-    micro-nat quantization before the exact sum; one trigram-explode
-    aggregation for the LM; the scoring dim is trigram-vocab-sized and
-    left to AQE. Output: (id, n_trigrams, mean_surprisal).
-    """
-    base = _spread_scan(df, id_col).select(
-        F.col(id_col),
-        tokens(F.lower(F.col(text_col))).alias("__toks"),
-    ).withColumn("__n", F.size("__toks"))
-    toks = F.col("__toks")
-    # r13 (guide §2.4): explicit notnull filters keep every consumer's
-    # pushed-filter set identical so each gram explode materializes
-    # ONCE via ReusedExchange (see kn_bigram_surprisal). Data no-ops:
-    # split() never yields NULL tokens.
-    uni = _with_corpus_total(
-        base.select(F.explode(toks).alias("w"))
-        .where(F.col("w").isNotNull())
-        .groupBy("w").agg(F.count(F.lit(1)).alias("cw")),
-        "cw",
-    )
-
-    def grams(L):
-        return F.when(
-            F.col("__n") >= L,
-            F.transform(
-                F.sequence(F.lit(1), F.col("__n") - (L - 1)),
-                lambda i: F.struct(*[
-                    F.element_at(toks, i + j).alias(f"t{j}")
-                    for j in range(L)]),
-            ),
-        )
-
-    bg = base.select(F.explode(grams(2)).alias("g")).select(
-        F.col("g.t0").alias("u"), F.col("g.t1").alias("v"))
-    bg = bg.where(F.col("u").isNotNull() & F.col("v").isNotNull())
-    bgc = bg.groupBy("u", "v").agg(F.count(F.lit(1)).alias("cb"))
-    tri = base.select(
-        F.col(id_col), F.explode(grams(3)).alias("g"),
-    ).select(id_col, F.col("g.t0").alias("u"), F.col("g.t1").alias("v"),
-             F.col("g.t2").alias("w"))
-    tri = tri.where(F.col("u").isNotNull() & F.col("v").isNotNull()
-                    & F.col("w").isNotNull())
-    # per-(doc, trigram) probe aggregate (no exchange, doc-partitioned
-    # stream; shrinks the scoring join to TYPES at scale); the LM count
-    # aggregates directly off the position stream — exact long sums
-    # keep every double bit-identical either way.
-    dtr = tri.groupBy(id_col, "u", "v", "w").agg(
-        F.count(F.lit(1)).alias("__c"))
-    tric = tri.groupBy("u", "v", "w").agg(F.count(F.lit(1)).alias("ct"))
-    l1 = 1.0 - l3 - l2
-    score = (
-        tric
-        .join(bgc, ["u", "v"])                       # c(uv)
-        .join(bgc.select(F.col("u").alias("v"), F.col("v").alias("w"),
-                         F.col("cb").alias("cvw")), ["v", "w"])   # c(vw)
-        .join(uni.select(F.col("w").alias("v"), F.col("cw").alias("cv")),
-              "v")                                    # c(v)
-        .join(uni, "w")                               # c(w), N
-        .select(
-            "u", "v", "w",
-            F.floor(
-                -F.log(
-                    F.lit(l3) * F.col("ct") / F.col("cb")
-                    + F.lit(l2) * F.col("cvw") / F.col("cv")
-                    + F.lit(l1) * F.col("cw") / F.col("total"))
-                * 1e6 + F.lit(0.5)
-            ).cast("long").alias("__q"),
-        )
-    )
-    scored = (
-        dtr.join(score, ["u", "v", "w"])
-        .groupBy(id_col)
-        .agg(F.sum("__c").cast("long").alias("n_trigrams"),
-             ((F.sum(F.col("__q") * F.col("__c"))) / 1e6
-              / F.sum("__c")).alias("mean_surprisal"))
-    )
-    return (
-        df.select(id_col)
-        .join(scored, id_col, "left")
-        .select(
-            id_col,
-            F.coalesce("n_trigrams", F.lit(0)).alias("n_trigrams"),
-            "mean_surprisal",
-        )
-    )
-
-
-def long_repeated_span_coverage(
-    docs: DataFrame,
-    k0: int = 8,
-    target: int = 32,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    eager: bool = True,
-) -> DataFrame:
-    """Exact-substring duplication signal at LONG gram lengths without
-    hashing every long gram (the suffix-array-free scale path for the
-    ExactSubstr family at n >> 8): gram length doubles per round,
-    k0 -> 2*k0 -> ... -> target, and each round hashes ONLY candidate
-    positions.
-
-    The doubling filter is exact, not heuristic: a target-gram
-    repeated across documents has both of its half-grams repeated
-    across those same documents at positions p and p+k, so the
-    candidate set {p : p and p+k both survived round k} provably
-    contains every true repeat; hashing the doubled gram at the
-    candidates then removes the false combinations. At 100 TB this is
-    the difference between hashing n_tokens * (target/k0) grams and
-    hashing n_tokens once plus a geometrically SHRINKING candidate
-    tail (each round is a per-doc self-semi-join on (id, pos) plus a
-    counts-only reduction — the same no-occurrence-lists contract as
-    _repeated_gram_positions, so a million-doc boilerplate prefix
-    still costs rows, not one reducer's heap).
-
-    Output: per-doc coverage of tokens lying inside a cross-document
-    repeated ``target``-gram — (id, n_tokens, dup_spans, dup_tokens,
-    coverage_frac), the long-n twin of repeated_span_coverage.
-    ``target`` must be k0 * 2^r.
-
-    ``eager=True`` (default) materializes the small per-doc output at
-    call time and releases every internal cache — reliable
-    ``checkpoint`` (replicated, survives executor loss) when the
-    session has a checkpoint dir, else ``localCheckpoint`` (ADVICE
-    r11: lineage is truncated either way; only the reliable variant is
-    recoverable under dynamic allocation / decommission).
-    ``eager=False`` keeps full lineage and lazy semantics instead: the
-    internal round caches stay pinned for the life of the returned
-    frame (the caller owns release — materialize downstream, then
-    ``spark.catalog.clearCache()`` or drop the session), the price of
-    choosing lineage retention over cache release.
-    """
-    k = k0
-    if target < k0 or (target % k0) != 0 or (target // k0) & (target // k0 - 1):
-        raise ValueError(f"target must be k0 * 2^r, got {k0=} {target=}")
-    from pyspark.storagelevel import StorageLevel
-
-    from ..functions.text import md5_int
-
-    base, cur, grams = _repeated_gram_positions(
-        docs, k0, id_col, text_col, persist=True)
-    toks = base.select(id_col, "n_tokens", "__toks") \
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    prev_cur = None
-    while k < target:
-        # candidates: p where p AND p+k are surviving starts (the
-        # p+k <= n_tokens - k bound is inherited, so the doubled
-        # slice below is always full-length)
-        shifted = cur.select(
-            F.col(id_col), (F.col("pos") - k).alias("pos"))
-        cand = cur.select(id_col, "pos").join(
-            shifted, [id_col, "pos"], "left_semi")
-        g2 = (
-            cand.join(toks.select(id_col, "__toks"), id_col)
-            .select(
-                id_col, "pos",
-                md5_int(F.concat_ws(
-                    " ", F.slice("__toks", F.col("pos") + 1,
-                                 F.lit(2 * k))))
-                .alias("h"))
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        survivors = (
-            g2.groupBy("h")
-            .agg(F.count_distinct(F.col(id_col)).alias("__nd"))
-            .where(F.col("__nd") >= 2)
-            .select("h")
-        )
-        # materialize the (shrinking) survivor set eagerly so the
-        # superseded round's caches can be released NOW — without
-        # this every doubling round pins a g2 cache for the session
-        # (the round frames are in each other's lineage, so an early
-        # unpersist would otherwise just force recomputation)
-        cur = (g2.join(survivors, "h", "left_semi")
-               .select(id_col, "pos")
-               .persist(StorageLevel.MEMORY_AND_DISK))
-        cur.count()
-        g2.unpersist()
-        if prev_cur is not None:
-            prev_cur.unpersist()
-        prev_cur = cur
-        k *= 2
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(id_col).orderBy("pos")
-    cov = (
-        cur.withColumn("__prev", F.lag("pos").over(w))
-        .withColumn(
-            "__contrib",
-            F.when(F.col("__prev").isNull(), F.lit(k)).otherwise(
-                F.least(F.lit(k), F.col("pos") - F.col("__prev"))),
-        )
-        .groupBy(id_col)
-        .agg(F.sum("__contrib").alias("dup_tokens"),
-             F.count("*").alias("dup_spans"))
-    )
-    out = (
-        toks.select(id_col, "n_tokens")
-        .join(cov, id_col, "left")
-        .select(
-            id_col, "n_tokens",
-            F.coalesce("dup_spans", F.lit(0)).cast("long")
-            .alias("dup_spans"),
-            F.coalesce("dup_tokens", F.lit(0)).cast("long")
-            .alias("dup_tokens"),
-            (F.coalesce("dup_tokens", F.lit(0))
-             / F.greatest(F.col("n_tokens"), F.lit(1)).cast("double"))
-            .alias("coverage_frac"),
-        )
-    )
-    if not eager:
-        return out
-    # eager lineage-truncating materialization of the SMALL per-doc
-    # aggregate (4 scalars/doc) so every internal cache — the token
-    # arrays, the exploded gram table, the final round's survivor set
-    # — can be released before returning. Without this each call
-    # pinned MEMORY_AND_DISK blocks for the session (daily-cadence
-    # callers accumulated cache until OOM-driven eviction).
-    sc = out.sparkSession.sparkContext
-    if sc.getCheckpointDir():
-        out = out.checkpoint(eager=True)
-    else:
-        out = out.localCheckpoint(eager=True)
-    toks.unpersist(blocking=True)
-    grams.unpersist(blocking=True)
-    if prev_cur is not None:
-        prev_cur.unpersist(blocking=True)
-    return out

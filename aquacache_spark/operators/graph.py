@@ -140,10 +140,10 @@ def connected_components(
     max_iters: int = 25,
 ) -> DataFrame:
     """Connected components with POINTER JUMPING — the deep-graph
-    complement to operators/dedup.duplicate_clusters (plain min-label
-    propagation needs DIAMETER rounds, which is fine for LSH's shallow
-    near-cliques but hopeless for chain-shaped graphs: containment
-    chains, citation paths, redirect chains). Each round combines
+    complement to plain min-label propagation, which needs DIAMETER
+    rounds: fine for LSH's shallow near-cliques but hopeless for
+    chain-shaped graphs (containment chains, citation paths, redirect
+    chains). Each round combines
 
     - neighbor-min: l(u) <- min(l(u), min over neighbors' labels), and
     - path halving: l(u) <- min(l(u), l(l(u))),

@@ -368,10 +368,10 @@ def _spread_ids(df: DataFrame, id_col: str) -> DataFrame:
     single-task). Shuffling bare ids is free relative to the codec
     work; left alone when the scan already yields enough splits (the
     100 TB case). One shared heuristic with the hashing tier:
-    delegates to dedup._spread_scan over the projected id column."""
-    from .dedup import _spread_scan
+    delegates to _scan.spread_scan over the projected id column."""
+    from ._scan import spread_scan
 
-    return _spread_scan(df.select(id_col), id_col)
+    return spread_scan(df.select(id_col), id_col)
 
 
 def synthesize_wavs(
@@ -1265,8 +1265,8 @@ def synthesize_group_avis(
 # pool -> 2D DCT -> top-left 8x8 band (DC excluded) -> 63-bit
 # signature. The image-side near-duplicate detector: identical or
 # lightly re-encoded/re-scaled images land within a few Hamming bits,
-# then dedup.simhash_near_pairs' pigeonhole banding finds pairs
-# without an all-pairs join. Two threshold modes:
+# then a pigeonhole banding over the bits finds pairs without an
+# all-pairs join. Two threshold modes:
 #
 # - 'median' (the classic pHash, production default): bit = coefficient
 #   above the band median — illumination-invariant, ~32 bits set, well

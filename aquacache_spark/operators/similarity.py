@@ -5,19 +5,14 @@
   (``zip_with`` product + ``aggregate`` sum — sequential fold, so the
   result is deterministic and engine-portable); top-k via per-query
   ``row_number``. One pass over the corpus, no shuffle of the corpus
-  itself — scales to 100 TB as a map + per-query top-k tree-reduce.
-- **LSH-bucketed ANN** (the scale path): random-hyperplane signs bucket
-  vectors; per-bucket brute force. Hyperplanes are derived
-  deterministically from md5 so the operator needs no RNG state.
-- **IVF ANN** (the alternate scale path): corpus vectors are assigned
-  to their nearest centroid (inverted lists); each query probes its
-  ``nprobe`` nearest lists and brute-forces only those. Centroid
-  *refinement* (k-means||) is pluggable; the default seeds are the
-  first ``nlist`` corpus vectors in md5(id) order (hash-spread, no
-  id-correlation bias) so the whole operator is deterministic and
-  oracle-checkable. The list assignment is the
-  partitioning key at scale — a 100 TB corpus shuffles once at build
-  time, and each query touches ``nprobe``/``nlist`` of the data.
+  itself.
+- **LSH / IVF / PQ ANN**: random-hyperplane buckets, nearest-centroid
+  inverted lists and product-quantized codes, all seeded from md5 so
+  every operator is deterministic and oracle-checkable.
+
+Not part of the AquaCache surface: reached only from
+``queries/{ann,dedup}.py`` — perfbench's ``embedding_cosine_topk``
+probe and the ANN-tier queries a later change still has to cut.
 """
 
 from __future__ import annotations
@@ -81,14 +76,14 @@ def cosine_topk(
 
     Output: query_id, neighbor_id, cosine, rank.
     """
-    from .dedup import _spread_scan
+    from ._scan import spread_scan
 
     # the n_corpus x n_queries interpreted scoring fold runs in the
     # SCAN stage: a single-row-group parquet reads as one task and
     # serializes it on one core (r12, guide §2.5 input skew); spread
     # the narrow (id, vec) projection when the scan is under-split —
     # a no-op at real split counts
-    c = _spread_scan(corpus.select(
+    c = spread_scan(corpus.select(
         F.col(id_col).alias("neighbor_id"),
         _as_double(F.col(vec_col)).alias("__cv"),
     ), "neighbor_id")
@@ -145,11 +140,11 @@ def knn_topk(
     # runs on the identical array with the identical operation order,
     # so every score double is bit-identical to the inline form —
     # same restructure cosine_topk already carries.
-    from .dedup import _spread_scan
+    from ._scan import spread_scan
 
     # spread the under-split corpus scan (see cosine_topk): the
     # per-pair fold work otherwise serializes on the single scan task
-    c = _spread_scan(corpus.select(
+    c = spread_scan(corpus.select(
         F.col(id_col).alias("neighbor_id"),
         _as_double(F.col(vec_col)).alias("__cv")), "neighbor_id")
     q = queries.select(
@@ -447,13 +442,13 @@ def ann_topk_ivf(
     assignment — better-balanced lists, higher recall at the same
     nprobe.
     """
-    from .dedup import _spread_scan
+    from ._scan import spread_scan
 
     if train_iters > 0:
         cent = kmeans_centroids(corpus, id_col, vec_col, nlist, train_iters)
     else:
         cent = ivf_centroids(corpus, id_col, vec_col, nlist)
-    corpus = _spread_scan(corpus, id_col)
+    corpus = spread_scan(corpus, id_col)
     lists = ivf_assign(corpus, cent, id_col, vec_col, nprobe=1,
                        out_id="neighbor_id").withColumn(
         "__vn", F.sqrt(_dot(F.col("__v"), F.col("__v"))))
@@ -574,9 +569,9 @@ def ann_topk_pq(
     same expression. Composes with the IVF partitioner
     (``ann_topk_ivf``) for the probe-pruned variant
     (``ann_topk_ivfpq``)."""
-    from .dedup import _spread_scan
+    from ._scan import spread_scan
 
-    corpus = _spread_scan(corpus, id_col)
+    corpus = spread_scan(corpus, id_col)
     codes = pq_encode(corpus, codebooks := pq_codebooks(
         corpus, id_col, vec_col, m, ksub), id_col, vec_col, out_id="neighbor_id")
     q = _q_prep(queries.select(
@@ -650,13 +645,13 @@ def ivfpq_index(
     embeddings after the centroid/codebook collects. In production it
     is written once (partitioned by centroid_id) and re-read by every
     serve; the raw float corpus is never scanned again."""
-    from .dedup import _spread_scan
+    from ._scan import spread_scan
 
     cent = ivf_centroids(corpus, id_col, vec_col, nlist)
     cb = pq_codebooks(corpus, id_col, vec_col, m, ksub)
     # r13 (guide §2.5): the fixture corpus reads as ONE split, which
     # serialized the whole assignment+encode map mass on one core
-    corpus = _spread_scan(corpus, id_col)
+    corpus = spread_scan(corpus, id_col)
     lists = ivf_assign(corpus, cent, id_col, vec_col, nprobe=1, out_id="neighbor_id")
     codes = pq_encode(
         lists, cb, id_col="neighbor_id", vec_col="__v",

@@ -1,30 +1,15 @@
-"""URL normalization + domain-level curation rollups.
+"""URL canonicalization, registered-domain resolution, robots.txt and
+sitemap parsing.
 
-Standard web-corpus pipeline stage (the domain axis of curation, next
-to the per-doc quality gates in functions/text.py): canonicalize raw
-URLs, resolve the registered domain, and aggregate per-domain corpus
-statistics that drive domain filtering / mixture decisions.
+Codegen'd string expressions — split/regexp/array ops, no UDFs — with
+every rule mirrored 1:1 in the DuckDB oracles of the web queries;
+registered domains come from the small embedded multi-label suffix set
+or, via ``registered_domain_psl``/``load_psl``, from the full
+publicsuffix.org algorithm against the broadcast snapshot fixture.
 
-Everything is codegen'd string expressions — split/regexp/array ops,
-no UDFs — and every rule is mirrored 1:1 in the DuckDB oracle
-(queries.url_domain_rollup):
-
-- lowercase; strip scheme; strip one leading ``www.``;
-- host / path split at the first ``/``, query at the first ``?``;
-- any ``:port`` split off the host before label work; default ports
-  ``80``/``443`` dropped from the canonical URL, others kept;
-- tracking params dropped by NAME (``utm_*`` prefix family plus the
-  exact names ``fbclid``/``gclid``/``ref`` — ``fbclid2=`` or
-  ``refresh=`` survive), the rest sorted for a canonical query string;
-- registered domain = last two host labels, or one more when the
-  host's tail matches a multi-label public suffix: either the small
-  embedded set (zero-join fast path) or, via
-  ``registered_domain_psl``/``load_psl``, the FULL publicsuffix.org
-  algorithm (literal rules of any length, ``*.``-wildcards,
-  ``!``-exceptions, longest-rule-wins, implicit-'*' fallback) against
-  the snapshot fixture broadcast as per-length dim tables
-  (fixtures/public_suffix_snapshot.csv — regenerate from the full
-  publicsuffix.org list in a deployment, same raw-rule schema).
+Not part of the AquaCache surface: reached only from
+``queries/web.py`` — perfbench's ``warc_crawl_corpus`` probe and the
+web-tier queries a later change still has to cut.
 """
 
 from __future__ import annotations
@@ -540,13 +525,13 @@ def url_canonicalize(df: DataFrame, url_col: str = "url") -> DataFrame:
     (the spread below is a no-op at real split counts).
     Output: input columns + scheme/host/port/path/query/canonical_url.
     """
-    from .dedup import _spread_scan
+    from ._scan import spread_scan
 
     # ~10 regex extractions + an interpreted dot-segment fold per row
     # run in the SCAN stage; a single-row-group parquet reads as one
     # task and serializes them on one core (r12, guide §2.5) — spread
-    # when under-split, exactly the hashing tier's _spread_scan
-    df = _spread_scan(df, url_col)
+    # when under-split, exactly the hashing tier's spread_scan
+    df = spread_scan(df, url_col)
     u = F.col(url_col)
     # r12 staging (guide §7.2, same discipline as the GEV fit): the
     # previous single-projection form re-inlined the authority /

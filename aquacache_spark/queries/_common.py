@@ -105,8 +105,6 @@ def DSUM(col: str) -> str:
     return f"sum(CAST(floor(({col}) * 1000000 + 0.5) AS BIGINT)) / 1000000.0"
 
 
-
-
 def _lang_filter_sql(lang: str) -> str:
     from ..functions.text import LANG_STOPWORDS
 
@@ -253,58 +251,6 @@ def _raster_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor(F.col("event_id") / 100).cast("int").alias("y"),
         "value",
     )
-
-
-_BM25_QUERIES = [(0, "spark join key"), (1, "table scan fast value"),
-                 (2, "window agg batch"), (3, "customer query line slow")]
-
-
-_BM25_VALUES = ", ".join(f"({i}, '{q}')" for i, q in _BM25_QUERIES)
-
-
-_BM25_CTES = f"""q(query_id, query) AS (VALUES {_BM25_VALUES}),
-    base AS (
-      SELECT doc_id, string_split(lower(text), ' ') AS toks
-      FROM documents
-    ), dl AS (
-      SELECT doc_id, len(toks) AS dl FROM base
-    ), stats AS (
-      SELECT count(*) AS n, sum(dl) AS sumdl FROM dl
-    ), post AS (
-      SELECT doc_id, unnest(toks) AS term FROM base
-    ), tf AS (
-      SELECT doc_id, term, count(*) AS tf FROM post GROUP BY 1, 2
-    ), qt AS (
-      SELECT DISTINCT query_id, term FROM (
-        SELECT query_id, unnest(string_split(lower(query), ' ')) AS term
-        FROM q)
-    ), qterms AS (
-      SELECT DISTINCT term FROM qt
-    ), dfq AS (
-      SELECT term, count(*) AS df
-      FROM tf JOIN qterms USING (term) GROUP BY 1
-    ), contrib AS (
-      SELECT qt.query_id, tf.doc_id,
-             CAST(floor(
-               ln(1 + (s.n - dfq.df + 0.5) / (dfq.df + 0.5))
-               * tf.tf * (1.2 + 1.0)
-               / (tf.tf + 1.2 * (1.0 - 0.75
-                  + 0.75 * dl.dl / (CAST(s.sumdl AS DOUBLE) / s.n)))
-               * 1000000.0 + 0.5) AS BIGINT) AS c
-      FROM tf
-      JOIN qt USING (term)
-      JOIN dfq ON tf.term = dfq.term
-      JOIN dl ON tf.doc_id = dl.doc_id
-      CROSS JOIN stats s
-    ), sc AS (
-      SELECT query_id, doc_id, sum(c) AS cl FROM contrib GROUP BY 1, 2
-    ), ranked AS (
-      SELECT query_id, doc_id, cl,
-             row_number() OVER (PARTITION BY query_id
-                                ORDER BY cl DESC, doc_id) AS rn
-      FROM sc
-    )
-"""
 
 
 _GATE_ORACLE = f"""

@@ -1,6 +1,10 @@
-"""Similarity-search tier: brute-force and IVF/PQ/LSH ANN, BM25/hybrid retrieval, retrieval metrics.
+"""Ranking, trend and nearest-neighbour queries: as-of joins,
+Mann-Kendall family, nearest-station search, retrieval metrics.
 
-Split out of the original flat queries.py (r9); section order preserved.
+The embedding-search-tier queries here remain only for perfbench's
+batch probe (``embedding_cosine_topk``, named in
+``perfbench/batch_analytics.py``) and until a later change cuts the
+rest; tests/test_import_boundary.py lists them.
 """
 
 from __future__ import annotations
@@ -21,9 +25,6 @@ from ._common import (  # noqa: F401
     R,
     SparkSession,
     Window,
-    _BM25_CTES,
-    _BM25_QUERIES,
-    _BM25_VALUES,
     _FIXDIR,
     _GATE_ORACLE,
     _RASTER_CELLS_SQL,
@@ -171,6 +172,7 @@ def embedding_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # reconstruction ranking in SQL.
 # ---------------------------------------------------------------------------
 
+
 _PQ_ORACLE = f"""
     WITH c AS (
       SELECT vec_id AS nid, CAST(embedding AS DOUBLE[]) AS cv FROM embeddings
@@ -237,13 +239,12 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _round(out, {"cosine": 6})
 
 
-
-
 # ---------------------------------------------------------------------------
 # Similarity scale path #2: IVF ANN (inverted lists over deterministic
 # centroid seeds; nprobe probed lists per query). Recall vs brute force
 # asserted in tests/test_ann_recall.py.
 # ---------------------------------------------------------------------------
+
 
 _IVF_COS = (
     "list_dot_product({a}, {b}) / (sqrt(list_dot_product({a}, {a}))"
@@ -339,6 +340,7 @@ _SEMDEDUP_CORP_SQL = """
               for i in generate_series(1, 64)] AS emb
       FROM embeddings WHERE vec_id % 5 = 0
 """
+
 
 _SEMDEDUP_ORACLE = "WITH " + _kmeans_cte(
     16, 3, 64, corp_sql=_SEMDEDUP_CORP_SQL) + f"""
@@ -527,6 +529,7 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # serving shape. The oracle glues the IVF list/probe CTEs to the PQ
 # codebook/encode/reconstruct CTEs and ranks within probed lists only.
 # ---------------------------------------------------------------------------
+
 
 _IVFPQ_ORACLE = f"""
     WITH corp AS (
@@ -774,126 +777,6 @@ def compound_asof_expression(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _round(out, {"value": 6, "a": 6, "b": 6})
 
 
-# ---------------------------------------------------------------------------
-# BM25 + phrase/proximity scoring (operators/search.bm25_phrase_topk):
-# base BM25 plus w_bigram * ln(1+tf) per query bigram matched among a
-# document's adjacent token pairs, plus w_phrase * ln(1+tf) for the
-# full query as a consecutive run (a 2-word query earns BOTH — it IS
-# its own bigram). Every component 1e-6-quantized + exact-summed.
-# ---------------------------------------------------------------------------
-
-_BM25P_QUERIES = [(0, "batch batch"), (1, "merge slow join"),
-                  (2, "the fast key"), (3, "small part fast value")]
-_BM25P_W_BIGRAM = 0.5
-_BM25P_W_PHRASE = 1.0
-
-
-def _bm25p_grams() -> dict[int, list[tuple]]:
-    grams: dict[int, list[tuple]] = {}
-    for qid, q in _BM25P_QUERIES:
-        toks = q.split()
-        for i in range(len(toks) - 1):
-            grams.setdefault(2, []).append(
-                (qid, toks[i] + " " + toks[i + 1], _BM25P_W_BIGRAM))
-        if len(toks) >= 2:
-            grams.setdefault(len(toks), []).append(
-                (qid, " ".join(toks), _BM25P_W_PHRASE))
-    return {L: sorted(set(v)) for L, v in grams.items()}
-
-
-def _bm25p_oracle() -> str:
-    values = ", ".join(f"({i}, '{q}')" for i, q in _BM25P_QUERIES)
-    gram_ctes, bonus_selects = [], []
-    for L in sorted(_bm25p_grams()):
-        rows = ", ".join(
-            f"({qid}, '{g}', CAST({w} AS DOUBLE))"
-            for qid, g, w in _bm25p_grams()[L])
-        cat = " || ' ' || ".join(f"toks[i + {j}]" for j in range(L))
-        gram_ctes.append(f"""
-    qg{L}(query_id, gram, w) AS (VALUES {rows}),
-    dg{L} AS (
-      SELECT doc_id, {cat} AS gram
-      FROM base, unnest(generate_series(1, len(toks) - {L - 1}))
-           AS t(i)
-    ), gtf{L} AS (
-      SELECT doc_id, gram, count(*) AS tf FROM dg{L}
-      JOIN (SELECT DISTINCT gram FROM qg{L}) USING (gram)
-      GROUP BY 1, 2
-    )""")
-        bonus_selects.append(f"""
-      SELECT q.query_id, g.doc_id,
-             CAST(floor(q.w * ln(1 + g.tf) * 1000000.0 + 0.5)
-                  AS BIGINT) AS c
-      FROM gtf{L} g JOIN qg{L} q USING (gram)""")
-    grams_sql = ",".join(gram_ctes)
-    bonuses = " UNION ALL ".join(bonus_selects)
-    return f"""
-    WITH q(query_id, query) AS (VALUES {values}),
-    base AS (
-      SELECT doc_id, string_split(lower(text), ' ') AS toks
-      FROM documents
-    ),{grams_sql}, dl AS (
-      SELECT doc_id, len(toks) AS dl FROM base
-    ), stats AS (
-      SELECT count(*) AS n, sum(dl) AS sumdl FROM dl
-    ), post AS (
-      SELECT doc_id, unnest(toks) AS term FROM base
-    ), tf AS (
-      SELECT doc_id, term, count(*) AS tf FROM post GROUP BY 1, 2
-    ), qt AS (
-      SELECT DISTINCT query_id, term FROM (
-        SELECT query_id, unnest(string_split(lower(query), ' ')) AS term
-        FROM q)
-    ), qterms AS (
-      SELECT DISTINCT term FROM qt
-    ), dfq AS (
-      SELECT term, count(*) AS df
-      FROM tf JOIN qterms USING (term) GROUP BY 1
-    ), contrib AS (
-      SELECT qt.query_id, tf.doc_id,
-             CAST(floor(
-               ln(1 + (s.n - dfq.df + 0.5) / (dfq.df + 0.5))
-               * tf.tf * (1.2 + 1.0)
-               / (tf.tf + 1.2 * (1.0 - 0.75
-                  + 0.75 * dl.dl / (CAST(s.sumdl AS DOUBLE) / s.n)))
-               * 1000000.0 + 0.5) AS BIGINT) AS c
-      FROM tf
-      JOIN qt USING (term)
-      JOIN dfq ON tf.term = dfq.term
-      JOIN dl ON tf.doc_id = dl.doc_id
-      CROSS JOIN stats s
-      UNION ALL {bonuses}
-    ), sc AS (
-      SELECT query_id, doc_id, sum(c) AS cl FROM contrib GROUP BY 1, 2
-    ), ranked AS (
-      SELECT query_id, doc_id, cl,
-             row_number() OVER (PARTITION BY query_id
-                                ORDER BY cl DESC, doc_id) AS rn
-      FROM sc
-    )
-    SELECT query_id, doc_id,
-           {R('cl / 1000000.0', 6)} AS score
-    FROM ranked WHERE rn <= 5
-"""
-
-
-_BM25P_ORACLE = _bm25p_oracle()
-
-
-@register("bm25_phrase_topk", oracle=_BM25P_ORACLE)
-def bm25_phrase_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BM25 + bigram-proximity + full-phrase top-5 per probe query
-    (operators/search.bm25_phrase_topk)."""
-    from ..operators.search import bm25_phrase_topk
-
-    docs = _t(spark, sf_dir, "documents")
-    queries = _ldf(spark, _BM25P_QUERIES, "query_id int, query string")
-    out = bm25_phrase_topk(
-        docs, queries, k=5,
-        w_bigram=_BM25P_W_BIGRAM, w_phrase=_BM25P_W_PHRASE)
-    return _round(out, {"score": 6})
-
-
 # 12-bit sibling: SOF1 extended-sequential streams with precision 12
 # (functions/jpeg.encode_jpeg_12bit), so the high-bit-depth decode
 # path (16-category DC Huffman, 2048 level shift, uint16 output) is
@@ -937,6 +820,7 @@ def jpeg12_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 # inner product (MIPS) and squared-L2 next to the existing cosine —
 # the three FAISS metric families.
 # ---------------------------------------------------------------------------
+
 
 _IP_TOPK_ORACLE = f"""
     WITH q AS (
@@ -1008,89 +892,12 @@ def embedding_l2_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Distributed BPE TRAINING (functions/bpe.bpe_train): learn the merge
-# table itself — per round one vocab-sized pair-count shuffle, a
-# takeOrdered argmax (no single-partition exchange), a map-only
-# literal replace, localCheckpoint lineage truncation. The oracle
-# replays all rounds as chained CTEs (the kmeans-CTE idiom).
-# ---------------------------------------------------------------------------
-
-def _bpe_train_oracle(n: int) -> str:
-    from ..functions.bpe import PRETOKEN_RE, oracle_train_ctes
-
-    return f"""
-    WITH pre AS (
-      SELECT unnest(regexp_extract_all(lower(text), '{PRETOKEN_RE}'))
-               AS w
-      FROM documents
-    ), wc AS (
-      SELECT w, count(*) AS cnt FROM pre GROUP BY 1
-    ), {oracle_train_ctes(n)}
-    SELECT CAST(rank AS INT) AS rank, a AS left_sym, b AS right_sym,
-           a || b AS merged, CAST(c AS BIGINT) AS pair_count
-    FROM merges
-"""
-
-
-_BPE_TRAIN_N = 8
-
-
-@register("bpe_train_merges", oracle=_bpe_train_oracle(_BPE_TRAIN_N))
-def bpe_train_merges_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The first 8 learned BPE merges over the documents corpus
-    (rank, pair, merged symbol, pair count at merge time)."""
-    from ..functions.bpe import bpe_train, word_counts
-
-    docs = _t(spark, sf_dir, "documents")
-    merges, _ = bpe_train(word_counts(docs), n_merges=_BPE_TRAIN_N)
-    return _ldf(
-        spark, [(r, a, b, a + b, c) for r, a, b, c in merges],
-        "rank int, left_sym string, right_sym string, merged string,"
-        " pair_count long")
-
-
-def _bpe_vocab_oracle(n: int) -> str:
-    from ..functions.bpe import PRETOKEN_RE, oracle_train_ctes
-
-    return f"""
-    WITH pre AS (
-      SELECT unnest(regexp_extract_all(lower(text), '{PRETOKEN_RE}'))
-               AS w
-      FROM documents
-    ), wc AS (
-      SELECT w, count(*) AS cnt FROM pre GROUP BY 1
-    ), {oracle_train_ctes(n)}
-    SELECT tok AS token, CAST(sum(cnt) AS BIGINT) AS n_occurrences
-    FROM (SELECT cnt, unnest(string_split(trim(s, '|'), '||')) AS tok
-          FROM w{n})
-    GROUP BY 1
-"""
-
-
-@register("bpe_trained_vocab_tokens", oracle=_bpe_vocab_oracle(_BPE_TRAIN_N))
-def bpe_trained_vocab_tokens_q(spark: SparkSession,
-                               sf_dir: str) -> DataFrame:
-    """Corpus token frequencies under the freshly TRAINED 8-merge
-    table — the end-to-end train->encode pipeline (encodings fall out
-    of the training loop's final symbol strings)."""
-    from ..functions.bpe import bpe_train, word_counts
-
-    docs = _t(spark, sf_dir, "documents")
-    _, final_words = bpe_train(word_counts(docs), n_merges=_BPE_TRAIN_N)
-    syms = F.split(F.expr("trim(BOTH '|' FROM s)"), r"\|\|")
-    return (
-        final_words.select("cnt", F.explode(syms).alias("token"))
-        .groupBy("token")
-        .agg(F.sum("cnt").cast("long").alias("n_occurrences"))
-    )
-
-
-# ---------------------------------------------------------------------------
 # Int8 scalar quantization (operators/similarity.int8_quantize_stats):
 # the vector-DB storage codec — per-dim absmax scales (one partial-
 # aggregable posexplode max, dim-row collect = the centroid idiom),
 # then map-only quantize/reconstruct with exact pico-unit error sums.
 # ---------------------------------------------------------------------------
+
 
 _INT8_ORACLE = """
     WITH c AS (
@@ -1316,6 +1123,7 @@ def seasonal_mann_kendall_q(spark: SparkSession,
 # on the cheap prefix), each hit flagged for membership in the
 # full-dimension top-k — the per-query recall readout.
 # ---------------------------------------------------------------------------
+
 
 _MRL_ORACLE = f"""
     WITH q AS (
@@ -1698,8 +1506,6 @@ def tfpw_mann_kendall_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _round(out, {"beta": 6, "r1": 6, "var_s": 6, "z": 6})
 
 
-
-
 # ---------------------------------------------------------------------------
 # Arrow+BLAS exact brute-force cosine (operators/similarity.py
 # cosine_topk_blas): int64-quantized components make every dot/norm an
@@ -1708,6 +1514,7 @@ def tfpw_mann_kendall_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # way (the cosine therefore differs from embedding_cosine_topk's
 # unquantized value at the ~1e-6 level — by design).
 # ---------------------------------------------------------------------------
+
 
 _COSINE_BLAS_ORACLE = f"""
     WITH cq AS (
@@ -1858,6 +1665,7 @@ def mann_kendall_blas_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # labels), so the exclusion provably fires: the mined negatives are
 # exactly raw ranks 3..k+2, re-ranked 1..k.
 # ---------------------------------------------------------------------------
+
 
 _HARDNEG_ORACLE = f"""
     WITH q AS (

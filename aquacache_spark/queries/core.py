@@ -21,9 +21,6 @@ from ._common import (  # noqa: F401
     R,
     SparkSession,
     Window,
-    _BM25_CTES,
-    _BM25_QUERIES,
-    _BM25_VALUES,
     _FIXDIR,
     _GATE_ORACLE,
     _RASTER_CELLS_SQL,
@@ -2669,12 +2666,12 @@ def countmin_heavy_hitters_q(spark: SparkSession,
     one-sided error), exact equality for the absent word unless all 4
     of its counters collide."""
     from ..functions.text import tokens
-    from ..operators.dedup import _spread_scan
+    from ..operators._scan import spread_scan
     from ..operators.sketch import countmin_build, countmin_estimate
 
     # the d md5 counter hashes per token run in the scan stage —
     # spread the under-split single-file scan (r12, guide §2.5)
-    docs = _spread_scan(_t(spark, sf_dir, "documents"), "doc_id")
+    docs = spread_scan(_t(spark, sf_dir, "documents"), "doc_id")
     tok = docs.select(
         F.explode(tokens(F.lower(F.col("text")))).alias("tokk"))
     # r12 single-derivation (see verified_heavy_hitters): the CMS build
@@ -3760,165 +3757,6 @@ def import_mapping_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         "record_id", "brand", "size", "status",
         "import_mapping_id", "parameter_id",
     )
-
-
-# ---------------------------------------------------------------------------
-# Training-batch assembly tier (operators/packing.py): sequence packing
-# into fixed context windows, deterministic domain-mixture sampling,
-# DSIR-style importance weights.
-# ---------------------------------------------------------------------------
-
-_PACK_BUDGET, _PACK_SHARDS = 2048, 8
-
-_PACK_ORACLE = f"""
-    WITH RECURSIVE docs AS (
-      SELECT doc_id,
-             CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-             CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)
-                  AS BIGINT) % {_PACK_SHARDS} AS shard
-      FROM documents
-    ), ord AS (
-      SELECT *, row_number() OVER (PARTITION BY shard ORDER BY doc_id)
-               AS rn
-      FROM docs
-    ), pack AS (
-      SELECT shard, rn, doc_id, n_tokens,
-             CAST(0 AS BIGINT) AS bin_id,
-             CAST(0 AS BIGINT) AS bin_offset,
-             n_tokens AS fill
-      FROM ord WHERE rn = 1
-      UNION ALL
-      SELECT o.shard, o.rn, o.doc_id, o.n_tokens,
-             CASE WHEN p.fill + o.n_tokens > {_PACK_BUDGET}
-                  THEN p.bin_id + 1 ELSE p.bin_id END,
-             CASE WHEN p.fill + o.n_tokens > {_PACK_BUDGET}
-                  THEN CAST(0 AS BIGINT) ELSE p.fill END,
-             CASE WHEN p.fill + o.n_tokens > {_PACK_BUDGET}
-                  THEN o.n_tokens ELSE p.fill + o.n_tokens END
-      FROM ord o JOIN pack p ON o.shard = p.shard AND o.rn = p.rn + 1
-    )
-    SELECT doc_id, n_tokens, shard, bin_id, bin_offset FROM pack
-"""
-
-
-@register("sequence_packing", oracle=_PACK_ORACLE)
-def sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Next-fit packing of the corpus into 2048-token context windows,
-    8 independent shards (operators/packing.pack_sequences); oracle
-    replays the prefix recurrence as a recursive CTE."""
-    from ..operators.packing import pack_sequences
-
-    docs = _t(spark, sf_dir, "documents").select(
-        "doc_id",
-        F.size(F.split(F.col("text"), " ")).cast("long").alias("n_tokens"),
-    )
-    return pack_sequences(docs, budget=_PACK_BUDGET, n_shards=_PACK_SHARDS)
-
-
-_MIX_ORACLE = f"""
-    WITH w(domain, wt) AS (VALUES
-      ('web', 0.5), ('code', 0.3), ('wiki', 0.2)
-    ), docs AS (
-      SELECT doc_id,
-             CASE CAST(doc_id % 4 AS INT)
-               WHEN 0 THEN 'web' WHEN 1 THEN 'code'
-               WHEN 2 THEN 'wiki' ELSE 'books' END AS domain,
-             CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens
-      FROM documents
-    ), tot AS (
-      SELECT domain, sum(n_tokens) AS t FROM docs GROUP BY 1
-    ), sc AS (
-      SELECT min(CAST(t AS DOUBLE) / wt) AS scale
-      FROM tot JOIN w USING (domain) WHERE wt > 0 AND t > 0
-    ), fr AS (
-      SELECT w.domain,
-             least(1.0, wt * scale / CAST(t AS DOUBLE)) AS keep_frac
-      FROM w JOIN tot USING (domain), sc WHERE t > 0
-    )
-    SELECT d.doc_id, d.domain, d.n_tokens,
-           {R('f.keep_frac', 6)} AS keep_frac,
-           (CAST('0x' || substr(md5('mix-v1|' || CAST(d.doc_id AS VARCHAR)),
-                                1, 12) AS BIGINT)
-            / CAST(281474976710656 AS DOUBLE)) < f.keep_frac AS kept
-    FROM docs d JOIN fr f USING (domain)
-"""
-
-
-@register("mixture_domain_sample", oracle=_MIX_ORACLE)
-def mixture_domain_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic token-mixture rebalancing across four synthetic
-    domains (operators/packing.mixture_sample); 'books' has no target
-    weight and drops out."""
-    from ..operators.packing import mixture_sample
-
-    docs = _t(spark, sf_dir, "documents").select(
-        "doc_id",
-        F.when(F.col("doc_id") % 4 == 0, "web")
-        .when(F.col("doc_id") % 4 == 1, "code")
-        .when(F.col("doc_id") % 4 == 2, "wiki")
-        .otherwise("books").alias("domain"),
-        F.size(F.split(F.col("text"), " ")).cast("long").alias("n_tokens"),
-    )
-    out = mixture_sample(
-        docs, {"web": 0.5, "code": 0.3, "wiki": 0.2}
-    ).select("doc_id", "domain", "n_tokens", "keep_frac", "kept")
-    return _round(out, {"keep_frac": 6})
-
-
-_DSIR_BUCKETS = 512
-
-_DSIR_ORACLE = f"""
-    WITH docs AS (
-      SELECT doc_id, string_split(lower(text), ' ') AS toks
-      FROM documents
-    ), bg AS (
-      SELECT doc_id,
-             CAST('0x' || substr(md5(toks[i] || ' ' || toks[i + 1]), 1, 15)
-                  AS BIGINT) % {_DSIR_BUCKETS} AS bucket
-      FROM docs, unnest(generate_series(1, len(toks) - 1)) AS t(i)
-    ), counts AS (
-      SELECT bucket,
-             count(*) FILTER (WHERE doc_id % 17 = 2) AS tn,
-             count(*) AS rn
-      FROM bg GROUP BY bucket
-    ), totals AS (
-      SELECT sum(tn) AS tt, sum(rn) AS rt FROM counts
-    ), ratios AS (
-      SELECT bucket,
-             {R("ln((CAST(tn AS DOUBLE) + 1.0)"
-                f" / (CAST(tt AS DOUBLE) + {float(_DSIR_BUCKETS)}))"
-                " - ln((CAST(rn AS DOUBLE) + 1.0)"
-                f" / (CAST(rt AS DOUBLE) + {float(_DSIR_BUCKETS)}))", 6)}
-               AS log_ratio
-      FROM counts, totals
-    ), scored AS (
-      SELECT bg.doc_id, count(*) AS n_bigrams,
-             sum(CAST(floor(log_ratio * 1000000 + 0.5) AS BIGINT))
-               / 1000000.0 / count(*) AS importance
-      FROM bg JOIN ratios USING (bucket)
-      GROUP BY bg.doc_id
-    )
-    SELECT d.doc_id,
-           coalesce(s.n_bigrams, 0) AS n_bigrams,
-           {R('coalesce(s.importance, 0.0)', 6)} AS importance
-    FROM docs d LEFT JOIN scored s USING (doc_id)
-"""
-
-
-@register("dsir_importance", oracle=_DSIR_ORACLE)
-def dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hashed-bigram importance weights of every corpus doc against a
-    deterministic pseudo-target subset (doc_id % 17 == 2), the
-    data-selection-for-LM recipe (operators/packing.importance_weights).
-    """
-    from ..operators.packing import importance_weights
-
-    docs = _t(spark, sf_dir, "documents")
-    out = importance_weights(
-        docs, docs.where(F.col("doc_id") % 17 == 2),
-        num_buckets=_DSIR_BUCKETS,
-    )
-    return _round(out, {"importance": 6})
 
 
 # ---------------------------------------------------------------------------
@@ -5219,46 +5057,6 @@ def zorder_layout_key_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c_custkey",
         zorder_key(lat, lon, 50.0, 70.0, -140.0, -105.0, bits=16)
         .alias("zkey"))
-
-
-# ---------------------------------------------------------------------------
-# Document chunking (operators/packing.chunk_documents): the standard
-# pre-tokenization windowing stage — max_tokens windows advancing by
-# (max_tokens - overlap), last chunk short, <=max_tokens docs yield
-# one chunk. Pure map-side; fixture uses 24/8 so the 10-100-token docs
-# produce real multi-chunk splits.
-# ---------------------------------------------------------------------------
-
-_CHUNK_ORACLE = """
-    WITH base AS (
-      SELECT doc_id, string_split(text, ' ') AS toks,
-             len(string_split(text, ' ')) AS n
-      FROM documents
-    ), starts AS (
-      SELECT doc_id, toks, n,
-             unnest(generate_series(0,
-               greatest(CAST(floor(CAST(n - 1 - 8 AS DOUBLE) / 16)
-                             AS INT), 0))) AS i
-      FROM base
-    )
-    SELECT doc_id,
-           CAST(i AS BIGINT) AS chunk_id,
-           array_to_string(toks[i * 16 + 1 : i * 16 + 24], ' ')
-             AS chunk_text,
-           CAST(least(n - i * 16, 24) AS BIGINT) AS n_tokens,
-           CAST(i * 16 AS BIGINT) AS start_token
-    FROM starts
-"""
-
-
-@register("document_chunking", oracle=_CHUNK_ORACLE)
-def document_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Overlapping training-window chunks (24-token windows, 8-token
-    overlap) over the documents corpus."""
-    from ..operators.packing import chunk_documents
-
-    docs = _t(spark, sf_dir, "documents")
-    return chunk_documents(docs, max_tokens=24, overlap=8)
 
 
 # ---------------------------------------------------------------------------
@@ -6735,47 +6533,6 @@ def results_metadata_fr_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Real ranked-merge BPE tokenizer (functions/bpe.py): merge-table-exact
-# token budgeting. JVM pre-tokenize + vocab-sized count, Arrow-batched
-# encode of DISTINCT words only; the oracle replays the merge table as
-# a chained replace over a pipe-separated symbol string (valid because
-# the table is well-formed — see functions/bpe.py docstring).
-# ---------------------------------------------------------------------------
-
-def _bpe_oracle() -> str:
-    from ..functions.bpe import PRETOKEN_RE, oracle_replace_chain
-
-    chain = oracle_replace_chain(
-        "'|' || regexp_replace(w, '(.)', '\\1||', 'g')")
-    return f"""
-    WITH pre AS (
-      SELECT unnest(regexp_extract_all(lower(text), '{PRETOKEN_RE}'))
-               AS w
-      FROM documents
-    ), wc AS (
-      SELECT w, count(*) AS cnt FROM pre GROUP BY 1
-    ), enc AS (
-      SELECT cnt, string_split(trim({chain}, '|'), '||') AS toks
-      FROM wc
-    )
-    SELECT tok AS token, CAST(sum(cnt) AS BIGINT) AS n_occurrences
-    FROM (SELECT cnt, unnest(toks) AS tok FROM enc)
-    GROUP BY 1
-"""
-
-
-@register("bpe_tokenize_counts", oracle=_bpe_oracle())
-def bpe_tokenize_counts_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus BPE token frequencies under the fixture merge table —
-    the merge-table-exact replacement for text.bpe_token_count's
-    regex estimate."""
-    from ..functions.bpe import bpe_token_frequencies
-
-    docs = _t(spark, sf_dir, "documents")
-    return bpe_token_frequencies(docs, "text")
-
-
-# ---------------------------------------------------------------------------
 # Ordered funnel (operators/funnel.funnel_steps): first-match greedy
 # view -> click -> purchase chain with a 72h per-step window — chained
 # conditional min-aggregations on user_id, no per-user sort window.
@@ -6895,62 +6652,6 @@ def hll_token_intersection_q(spark: SparkSession,
 
 
 # ---------------------------------------------------------------------------
-# Temperature-scaled mixture sampling (operators/packing.
-# temperature_mixture_sample): multilingual-LM rebalancing with
-# alpha=0.5 (sqrt is IEEE-correctly-rounded on both engines; pow(x,
-# 0.3) is not guaranteed to be) and an exact micro-unit normalizer.
-# ---------------------------------------------------------------------------
-
-_TEMP_MIX_ORACLE = f"""
-    WITH docs AS (
-      SELECT doc_id, source AS domain,
-             CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens
-      FROM documents
-    ), tot AS (
-      SELECT domain, sum(n_tokens) AS n,
-             CAST(floor(sqrt(CAST(sum(n_tokens) AS DOUBLE))
-                        * 1000000 + CAST(0.5 AS DOUBLE)) AS BIGINT)
-               AS squ
-      FROM docs GROUP BY 1
-    ), norm AS (
-      SELECT sum(squ) AS ssum, sum(n) AS grand FROM tot
-    ), rates AS (
-      SELECT domain,
-             squ / CAST(ssum AS DOUBLE) AS q,
-             least(CAST(1 AS DOUBLE),
-                   squ / CAST(ssum AS DOUBLE)
-                   * floor(CAST(0.5 AS DOUBLE) * grand)
-                   / CAST(n AS DOUBLE)) AS keep_frac
-      FROM tot, norm
-    )
-    SELECT d.doc_id, d.domain, d.n_tokens,
-           {R('r.q', 6)} AS q, {R('r.keep_frac', 6)} AS keep_frac,
-           (CAST('0x' || substr(md5('temp-v1|' || CAST(d.doc_id AS VARCHAR)),
-                                1, 12) AS BIGINT)
-            / CAST(281474976710656 AS DOUBLE)) < r.keep_frac AS kept
-    FROM docs d JOIN rates r USING (domain)
-"""
-
-
-@register("temperature_mixture_sample", oracle=_TEMP_MIX_ORACLE)
-def temperature_mixture_sample_q(spark: SparkSession,
-                                 sf_dir: str) -> DataFrame:
-    """sqrt-temperature rebalancing of the 20 document sources at a
-    50% token budget — small sources up-weighted toward uniform."""
-    from ..operators.packing import temperature_mixture_sample
-
-    docs = _t(spark, sf_dir, "documents").select(
-        "doc_id", F.col("source").alias("domain"),
-        F.size(F.split(F.col("text"), " ")).cast("long")
-        .alias("n_tokens"))
-    out = temperature_mixture_sample(docs, budget_frac=0.5)
-    return _round(
-        out.select("doc_id", "domain", "n_tokens", "q", "keep_frac",
-                   "kept"),
-        {"q": 6, "keep_frac": 6})
-
-
-# ---------------------------------------------------------------------------
 # Code-data quality filters (The Stack / StarCoder family): line-length
 # profile, alphanumeric and alphabetic-token fractions, digit fraction,
 # markup density, auto-generated-marker detection, and the composite
@@ -7014,11 +6715,11 @@ _CODE_FILTERS_ORACLE = f"""
 def code_quality_filters_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The Stack-style source-file gates over deterministically
     mutated documents."""
-    from ..operators.dedup import _spread_scan
+    from ..operators._scan import spread_scan
 
     # regex + higher-order line/token folds per row otherwise run in
     # the single scan task of the small parquet (r12, guide §2.5)
-    docs = _spread_scan(_t(spark, sf_dir, "documents"), "doc_id")
+    docs = spread_scan(_t(spark, sf_dir, "documents"), "doc_id")
     d = F.col("doc_id")
     t = F.concat(
         F.when(d % 11 == 0, "AUTO-GENERATED do not edit\n").otherwise(""),
@@ -7059,82 +6760,6 @@ def code_quality_filters_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _round(out, {"mean_line_len": 6, "alnum_frac": 6,
                         "alpha_tok_frac": 6, "digit_frac": 6,
                         "tag_density": 6})
-
-
-# ---------------------------------------------------------------------------
-# Per-language temperature rebalancing: language_id -> sqrt-temperature
-# token budget per DETECTED LANGUAGE (the actual multilingual-LM use
-# of temperature sampling; 'und' docs drop at the gate).
-# ---------------------------------------------------------------------------
-
-_LANG_TEMP_ORACLE = f"""
-    WITH t AS (
-      SELECT doc_id, string_split(lower(text), ' ') AS toks,
-             CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens
-      FROM documents
-    ), s AS (
-      SELECT doc_id, n_tokens,
-             {_lang_filter_sql('de')} AS de,
-             {_lang_filter_sql('en')} AS en,
-             {_lang_filter_sql('es')} AS es,
-             {_lang_filter_sql('fr')} AS fr
-      FROM t
-    ), docs AS (
-      SELECT doc_id, n_tokens,
-             CASE
-               WHEN greatest(de, en, es, fr) < 0.05 THEN 'und'
-               WHEN de >= en AND de >= es AND de >= fr THEN 'de'
-               WHEN en >= es AND en >= fr THEN 'en'
-               WHEN es >= fr THEN 'es'
-               ELSE 'fr'
-             END AS lang
-      FROM s
-    ), kept_docs AS (
-      SELECT * FROM docs WHERE lang != 'und'
-    ), tot AS (
-      SELECT lang, sum(n_tokens) AS n,
-             CAST(floor(sqrt(CAST(sum(n_tokens) AS DOUBLE))
-                        * 1000000 + CAST(0.5 AS DOUBLE)) AS BIGINT)
-               AS squ
-      FROM kept_docs GROUP BY 1
-    ), norm AS (
-      SELECT sum(squ) AS ssum, sum(n) AS grand FROM tot
-    ), rates AS (
-      SELECT lang,
-             squ / CAST(ssum AS DOUBLE) AS q,
-             least(CAST(1 AS DOUBLE),
-                   squ / CAST(ssum AS DOUBLE)
-                   * floor(CAST(0.5 AS DOUBLE) * grand)
-                   / CAST(n AS DOUBLE)) AS keep_frac
-      FROM tot, norm
-    )
-    SELECT d.doc_id, d.lang, d.n_tokens,
-           {R('r.q', 6)} AS q, {R('r.keep_frac', 6)} AS keep_frac,
-           (CAST('0x' || substr(md5('temp-v1|' || CAST(d.doc_id AS VARCHAR)),
-                                1, 12) AS BIGINT)
-            / CAST(281474976710656 AS DOUBLE)) < r.keep_frac AS kept
-    FROM kept_docs d JOIN rates r USING (lang)
-"""
-
-
-@register("per_language_temperature_sample", oracle=_LANG_TEMP_ORACLE)
-def per_language_temperature_sample_q(spark: SparkSession,
-                                      sf_dir: str) -> DataFrame:
-    """Temperature rebalancing across DETECTED languages at a 50%
-    token budget; 'und' excluded before the totals."""
-    from ..functions import text as X
-    from ..operators.packing import temperature_mixture_sample
-
-    docs = _t(spark, sf_dir, "documents").select(
-        "doc_id", X.lang_id_multi(F.col("text")).alias("lang"),
-        F.size(F.split(F.col("text"), " ")).cast("long")
-        .alias("n_tokens")).where(F.col("lang") != "und")
-    out = temperature_mixture_sample(
-        docs, budget_frac=0.5, domain_col="lang")
-    return _round(
-        out.select("doc_id", "lang", "n_tokens", "q", "keep_frac",
-                   "kept"),
-        {"q": 6, "keep_frac": 6})
 
 
 # ---------------------------------------------------------------------------
@@ -7342,156 +6967,6 @@ def scd2_dimension_build_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Corpus datacard v2: the per-source release card upgraded with the
-# round-8 signals — merge-table-EXACT BPE token totals (distinct words
-# encoded once, joined back against per-source counts) and the full
-# multi-language mix, alongside dup rate and mean quality.
-# ---------------------------------------------------------------------------
-
-def _datacard_v2_oracle() -> str:
-    from ..functions.bpe import PRETOKEN_RE, oracle_replace_chain
-
-    chain = oracle_replace_chain(
-        "'|' || regexp_replace(w, '(.)', '\\1||', 'g')")
-    return f"""
-    WITH base AS (
-      SELECT doc_id, source, text,
-             string_split(lower(text), ' ') AS toks,
-             len(string_split(text, ' ')) AS ws_tokens,
-             md5(regexp_replace(lower(text), '\\s+', ' ', 'g')) AS fp
-      FROM documents
-    ), langed AS (
-      SELECT doc_id, source, ws_tokens, fp,
-             CASE
-               WHEN greatest({_lang_filter_sql('de')},
-                             {_lang_filter_sql('en')},
-                             {_lang_filter_sql('es')},
-                             {_lang_filter_sql('fr')}) < 0.05 THEN 'und'
-               WHEN {_lang_filter_sql('de')} >= {_lang_filter_sql('en')}
-                AND {_lang_filter_sql('de')} >= {_lang_filter_sql('es')}
-                AND {_lang_filter_sql('de')} >= {_lang_filter_sql('fr')}
-                 THEN 'de'
-               WHEN {_lang_filter_sql('en')} >= {_lang_filter_sql('es')}
-                AND {_lang_filter_sql('en')} >= {_lang_filter_sql('fr')}
-                 THEN 'en'
-               WHEN {_lang_filter_sql('es')} >= {_lang_filter_sql('fr')}
-                 THEN 'es'
-               ELSE 'fr'
-             END AS lang
-      FROM base
-    ), wc AS (
-      SELECT source, w, count(*) AS cnt FROM (
-        SELECT source,
-               unnest(regexp_extract_all(lower(text), '{PRETOKEN_RE}'))
-                 AS w
-        FROM documents)
-      GROUP BY 1, 2
-    ), enc AS (
-      SELECT w,
-             CAST(len(string_split(trim({chain}, '|'), '||')) AS BIGINT)
-               AS n_bpe
-      FROM (SELECT DISTINCT w FROM wc)
-    ), bpe AS (
-      SELECT source, sum(cnt * n_bpe) AS bpe_tokens
-      FROM wc JOIN enc USING (w) GROUP BY 1
-    ), dup AS (
-      SELECT source, doc_id,
-             count(*) OVER (PARTITION BY source, fp) AS m
-      FROM base
-    ), qual AS (
-      SELECT doc_id,
-             CAST(floor((least(length(text) / 200.0, 1.0)
-               + least(CAST(len(list_filter(toks, t -> t IN
-                   ('the','a','an','and','or','of','to','in','is','it',
-                    'that','for','on','with','as','are','was','at','by',
-                    'be'))) AS DOUBLE) / greatest(len(toks), 1) * 5.0,
-                 1.0)
-               + (1.0 - least((length(text) - length(regexp_replace(
-                     text, '[^a-zA-Z0-9 ]', '', 'g')))
-                   / CAST(greatest(length(text), 1) AS DOUBLE) * 4.0,
-                   1.0))) / 3.0 * 1000000 + CAST(0.5 AS DOUBLE))
-               AS BIGINT) AS ql
-      FROM base
-    ), agg AS (
-      SELECT l.source,
-             CAST(count(*) AS BIGINT) AS n_docs,
-             CAST(sum(l.ws_tokens) AS BIGINT) AS ws_tokens,
-             CAST(sum(CASE WHEN d.m > 1 THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_dup_docs,
-             sum(q.ql) AS sql_,
-             CAST(sum(CASE WHEN l.lang = 'en' THEN 1 ELSE 0 END)
-                  AS DOUBLE) / count(*) AS en_share,
-             CAST(sum(CASE WHEN l.lang = 'fr' THEN 1 ELSE 0 END)
-                  AS DOUBLE) / count(*) AS fr_share,
-             CAST(sum(CASE WHEN l.lang = 'und' THEN 1 ELSE 0 END)
-                  AS DOUBLE) / count(*) AS und_share
-      FROM langed l JOIN dup d USING (source, doc_id)
-      JOIN qual q ON q.doc_id = l.doc_id
-      GROUP BY 1
-    )
-    SELECT a.source, a.n_docs, a.ws_tokens, b.bpe_tokens AS bpe_tokens,
-           a.n_dup_docs,
-           {R('a.sql_ / 1000000.0 / a.n_docs', 6)} AS mean_quality,
-           {R('a.en_share', 6)} AS en_share,
-           {R('a.fr_share', 6)} AS fr_share,
-           {R('a.und_share', 6)} AS und_share
-    FROM agg a JOIN bpe b USING (source)
-"""
-
-
-@register("corpus_datacard_v2", oracle=_datacard_v2_oracle())
-def corpus_datacard_v2_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source datacard with exact BPE totals and language mix."""
-    from ..functions import text as X
-    from ..functions.bpe import PRETOKEN_RE, word_token_counts
-    from ..functions.text import fingerprint, quality_score
-
-    docs = _t(spark, sf_dir, "documents")
-    base = docs.select(
-        "doc_id", "source",
-        F.size(F.split(F.col("text"), " ")).cast("long")
-        .alias("ws_tokens"),
-        fingerprint(F.col("text")).alias("fp"),
-        X.lang_id_multi(F.col("text")).alias("lang"),
-        F.floor(quality_score(F.col("text")) * 1e6 + F.lit(0.5))
-        .cast("long").alias("ql"),
-    )
-    base = base.withColumn(
-        "__m",
-        F.count(F.lit(1)).over(Window.partitionBy("source", "fp")))
-    wc = docs.select(
-        "source",
-        F.explode(F.expr(
-            f"regexp_extract_all(lower(text), '{PRETOKEN_RE}', 0)"))
-        .alias("w")).groupBy("source", "w").agg(
-        F.count(F.lit(1)).alias("cnt"))
-    enc = word_token_counts(wc)
-    bpe = wc.join(enc, "w").groupBy("source").agg(
-        F.sum(F.col("cnt") * F.col("n_bpe_tokens")).cast("long")
-        .alias("bpe_tokens"))
-    agg = base.groupBy("source").agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum("ws_tokens").alias("ws_tokens"),
-        F.sum(F.when(F.col("__m") > 1, 1).otherwise(0)).cast("long")
-        .alias("n_dup_docs"),
-        (F.sum("ql") / 1e6 / F.count(F.lit(1))).alias("mean_quality"),
-        (F.sum((F.col("lang") == "en").cast("int")).cast("double")
-         / F.count(F.lit(1))).alias("en_share"),
-        (F.sum((F.col("lang") == "fr").cast("int")).cast("double")
-         / F.count(F.lit(1))).alias("fr_share"),
-        (F.sum((F.col("lang") == "und").cast("int")).cast("double")
-         / F.count(F.lit(1))).alias("und_share"),
-    )
-    out = agg.join(bpe, "source")
-    return _round(
-        out.select("source", "n_docs", "ws_tokens", "bpe_tokens",
-                   "n_dup_docs", "mean_quality", "en_share", "fr_share",
-                   "und_share"),
-        {"mean_quality": 6, "en_share": 6, "fr_share": 6,
-         "und_share": 6})
-
-
-# ---------------------------------------------------------------------------
 # Event co-occurrence lift: per ordered event-type pair, support,
 # confidence, and lift over per-user presence sets — pair mass bounded
 # at n_types^2 after a per-user distinct (the market-basket shape).
@@ -7695,11 +7170,11 @@ def verified_heavy_hitters_q(spark: SparkSession,
     """Tokens above 0.5% corpus frequency: CMS candidate pass, exact
     recheck restricted to candidates."""
     from ..functions.text import tokens
-    from ..operators.dedup import _spread_scan
+    from ..operators._scan import spread_scan
     from ..operators.sketch import countmin_build, countmin_estimate
 
     # see countmin_heavy_hitters: counter hashes run in the scan stage
-    docs = _spread_scan(_t(spark, sf_dir, "documents"), "doc_id")
+    docs = spread_scan(_t(spark, sf_dir, "documents"), "doc_id")
     tok = docs.select(
         F.explode(tokens(F.lower(F.col("text")))).alias("tokk"))
     # r12 single-derivation (guide §2.4): the token stream was consumed

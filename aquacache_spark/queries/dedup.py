@@ -1,6 +1,11 @@
-"""Deduplication tier: exact/MinHash-LSH/SimHash/containment dedup, incremental and capped variants, corpus splits and contamination checks.
+"""Text-corpus queries over ``documents`` (text metrics, language id,
+collocations, Bloom decontamination), plus cross-section, vector and
+video-shot queries.
 
-Split out of the original flat queries.py (r9); section order preserved.
+The deduplication-tier queries here remain only for perfbench's batch
+probe (``minhash_lsh_pairs``, named in ``perfbench/batch_analytics.py``)
+and until a later change cuts the rest; tests/test_import_boundary.py
+lists them.
 """
 
 from __future__ import annotations
@@ -21,9 +26,6 @@ from ._common import (  # noqa: F401
     R,
     SparkSession,
     Window,
-    _BM25_CTES,
-    _BM25_QUERIES,
-    _BM25_VALUES,
     _FIXDIR,
     _GATE_ORACLE,
     _RASTER_CELLS_SQL,
@@ -49,6 +51,7 @@ from ._common import (  # noqa: F401
 # Training-data pipeline: deduplication (exact, MinHash-LSH, SimHash,
 # n-gram Jaccard) over `documents`
 # ---------------------------------------------------------------------------
+
 
 _DEDUP_EXACT_ORACLE = """
     SELECT md5(regexp_replace(lower(text), '\\s+', ' ', 'g')) AS fingerprint,
@@ -127,7 +130,6 @@ def text_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
 # chain (de wins ties over en over es over fr) is the same ordering as
 # the engine's min over (-score, lang).
 # ---------------------------------------------------------------------------
-
 
 
 _LANG_ID_ORACLE = f"""
@@ -475,6 +477,7 @@ ORACLES["embedding_near_dup"] = _near_dup_oracle(0.3, 6)
 # brute-force baseline asserted in tests/test_ann_recall.py)
 # ---------------------------------------------------------------------------
 
+
 def _ann_oracle() -> str:
     from ..operators.similarity import hyperplanes
 
@@ -732,6 +735,7 @@ def nhn_gpkg_layer_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 # substring of length >= k + window - 1 produces a shared fingerprint.
 # ---------------------------------------------------------------------------
 
+
 _WINNOW_ORACLE = """
     WITH s AS (
       SELECT doc_id, regexp_replace(lower(text), '[^a-z0-9]', '', 'g') AS s
@@ -770,6 +774,7 @@ def winnow_fingerprints_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # symmetrized edge list.
 # ---------------------------------------------------------------------------
 
+
 _COMP_SQL = "WITH RECURSIVE " + _MINHASH_SQL + """
     , banded AS (
       SELECT doc_id, band, key FROM (
@@ -798,6 +803,7 @@ _COMP_SQL = "WITH RECURSIVE " + _MINHASH_SQL + """
     ),
     comp AS (SELECT node, min(lab) AS cluster_rep FROM reach GROUP BY node)
 """
+
 
 _CLUSTERS_ORACLE = _COMP_SQL + """
     SELECT c.node AS doc_id, c.cluster_rep,
@@ -829,6 +835,7 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 # pipeline runs between dedup and sharding.
 # ---------------------------------------------------------------------------
 
+
 _CLUSTER_SPLIT_ORACLE = _COMP_SQL + """
     , cb AS (
       SELECT node AS doc_id, cluster_rep,
@@ -853,6 +860,7 @@ _CLUSTER_SPLIT_ORACLE = _COMP_SQL + """
 # row pins their composition (filter-before-dedup ordering, rep chosen
 # among survivors, budget on the BPE-ish count).
 # ---------------------------------------------------------------------------
+
 
 def _split_bucket(idc) -> F.Column:
     """The deterministic split bucket (same idiom as
@@ -879,6 +887,7 @@ _CURATION_QUALITY_SQL = """
                  ' ?[A-Za-z]+| ?[0-9]+| ?[^A-Za-z0-9 ]+')) AS bpe_tokens
       FROM documents
 """
+
 
 _CURATION_ORACLE = _COMP_SQL + f"""
     , qual AS ({_CURATION_QUALITY_SQL})
@@ -989,6 +998,7 @@ def cluster_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 # engines/partitionings; per-source fraction overrides.
 # ---------------------------------------------------------------------------
 
+
 _SPLIT_ORACLE = """
     WITH b AS (
       SELECT doc_id, source,
@@ -1030,6 +1040,7 @@ def stratified_split_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # replacement (inspection panels, per-domain pilots).
 # ---------------------------------------------------------------------------
 
+
 _HASH_SAMPLE_ORACLE = """
     WITH h AS (
       SELECT doc_id, source,
@@ -1065,6 +1076,7 @@ def hash_stratified_sample_q(spark: SparkSession,
 # per-doc weight, without replacement, no RNG — key = ln(u)/w from the
 # salted id hash, nano-quantized before the per-stratum rank.
 # ---------------------------------------------------------------------------
+
 
 _WSAMPLE_ORACLE = """
     WITH h AS (
@@ -1111,6 +1123,7 @@ def weighted_stratified_sample_q(spark: SparkSession,
 # exactly on >= 1 chunk), exact bit_count(xor) verify. Completes the
 # SimHash family (signatures -> candidate pairs).
 # ---------------------------------------------------------------------------
+
 
 _SIMHASH_PAIRS_ORACLE = """
     WITH tok AS (
@@ -1221,6 +1234,7 @@ def simhash_capped_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # + partial-aggregable count — no shuffle of corpus text at 100 TB.
 # ---------------------------------------------------------------------------
 
+
 _DECONTAM_ORACLE = """
     WITH docs AS (
       SELECT doc_id, string_split(lower(text), ' ') AS toks FROM documents
@@ -1262,6 +1276,7 @@ def eval_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
 # in order-independent micro-nat accumulation.
 # ---------------------------------------------------------------------------
 
+
 _SURPRISAL_ORACLE = f"""
     WITH tok AS (
       SELECT doc_id, unnest(string_split(lower(text), ' ')) AS tok
@@ -1292,80 +1307,6 @@ def unigram_surprisal_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# CCNet-style perplexity buckets: rank every document by its corpus-LM
-# mean surprisal and cut the ranking into exact terciles (head =
-# lowest surprisal = most fluent). The global ranking uses
-# operators/rank.global_rank — range partition + per-bucket window +
-# offset join, NO single-partition exchange (the weak-flag class a
-# global row_number window would be). Ranking key is the micro-nat
-# QUANTIZED mean (an integer, identical on both engines), doc_id
-# tiebreak.
-# ---------------------------------------------------------------------------
-
-_PPL_BUCKETS_ORACLE = """
-    WITH tok AS (
-      SELECT doc_id, unnest(string_split(lower(text), ' ')) AS tok
-      FROM documents
-    ), freq AS (
-      SELECT tok, count(*) AS cnt FROM tok GROUP BY tok
-    ), tot AS (
-      SELECT sum(cnt) AS total FROM freq
-    ), surp AS (
-      SELECT tok, CAST(floor(-ln(cnt / total) * 1000000 + 0.5) AS BIGINT) AS q
-      FROM freq, tot
-    ), d AS (
-      SELECT t.doc_id, sum(q) AS sq, count(*) AS n
-      FROM tok t JOIN surp USING (tok) GROUP BY 1
-    ), keyed AS (
-      SELECT doc_id,
-             CAST(floor((sq / 1000000.0 / n) * 1000000 + 0.5) AS BIGINT)
-               AS mq
-      FROM d
-    ), nd AS (
-      SELECT count(*) AS n_docs FROM keyed
-    ), r AS (
-      SELECT doc_id, mq,
-             row_number() OVER (ORDER BY mq ASC, doc_id ASC) AS rank
-      FROM keyed
-    )
-    SELECT doc_id, mq / 1000000.0 AS mean_surprisal,
-           CAST(rank AS BIGINT) AS rank,
-           CASE WHEN rank * 3 <= nd.n_docs THEN 'head'
-                WHEN rank * 3 <= nd.n_docs * 2 THEN 'middle'
-                ELSE 'tail' END AS bucket
-    FROM r CROSS JOIN nd
-"""
-
-
-@register("surprisal_quality_buckets", oracle=_PPL_BUCKETS_ORACLE)
-def surprisal_quality_buckets_q(spark: SparkSession,
-                                sf_dir: str) -> DataFrame:
-    """Exact surprisal terciles over the corpus (head/middle/tail)."""
-    from ..operators.dedup import unigram_surprisal
-    from ..operators.rank import global_rank
-
-    docs = _t(spark, sf_dir, "documents")
-    surp = unigram_surprisal(docs)
-    keyed = surp.select(
-        "doc_id",
-        F.floor(F.col("mean_surprisal").cast("double") * 1e6
-                + F.lit(0.5)).cast("long").alias("__mq"))
-    ranked = global_rank(keyed, ["__mq", "doc_id"], rank_col="rank")
-    nd = keyed.agg(F.count(F.lit(1)).alias("n_docs"))
-    return (
-        ranked.crossJoin(F.broadcast(nd))
-        .select(
-            "doc_id",
-            (F.col("__mq") / F.lit(1e6)).alias("mean_surprisal"),
-            "rank",
-            F.when(F.col("rank") * 3 <= F.col("n_docs"), "head")
-            .when(F.col("rank") * 3 <= F.col("n_docs") * 2, "middle")
-            .otherwise("tail").alias("bucket"),
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
 # Training-data CAPSTONE v2 — the full modern curation gate: heuristic
 # quality AND Gopher repetition rules AND benchmark decontamination
 # (eval docs excluded, contaminated train docs dropped), then near-dup
@@ -1373,6 +1314,7 @@ def surprisal_quality_buckets_q(spark: SparkSession,
 # budgets. Every constituent is individually ⊕; this pins the composed
 # ordering with 1e-6-rounded threshold compares on both engines.
 # ---------------------------------------------------------------------------
+
 
 _FULL_GATE_ORACLE = _COMP_SQL + f"""
     , qual AS ({_CURATION_QUALITY_SQL})
@@ -1461,7 +1403,7 @@ def curation_full_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     def r6(c):
         return F.floor(c * 1000000.0 + F.lit(0.5)) / 1000000.0
 
-    from ..operators.dedup import _spread_scan
+    from ..operators._scan import spread_scan
 
     t = F.col("text")
     toks = tokens(F.lower(t))
@@ -1471,7 +1413,7 @@ def curation_full_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the quality/BPE/ngram metric expressions are the per-doc CPU
     # mass and run in the scan stage — spread the under-split scan
     # (r12, guide §2.5)
-    metrics = _spread_scan(docs, "doc_id").select(
+    metrics = spread_scan(docs, "doc_id").select(
         "doc_id",
         r6(quality_score(t)).alias("q"),
         bpe_token_count(t).alias("bpe_tokens"),
@@ -1485,7 +1427,7 @@ def curation_full_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pushdown inlines the full metric expressions into a filter BELOW
     # the spread repartition — the whole metric mass then runs (twice:
     # pushed filter + re-projection) in the single scan task,
-    # silently defeating _spread_scan (measured: 1.3s single-task
+    # silently defeating spread_scan (measured: 1.3s single-task
     # stage). A one-row-per-doc first() aggregate is a pushdown
     # barrier for predicates on aggregated columns while key
     # predicates (doc_id % 19) still reach the parquet scan; doc_id is
@@ -1521,84 +1463,6 @@ def curation_full_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.countDistinct("cluster_rep").cast("long").alias("n_clusters"),
         F.sum("bpe_tokens").cast("long").alias("total_tokens"),
     )
-
-
-# ---------------------------------------------------------------------------
-# Hybrid retrieval: reciprocal-rank fusion of the lexical (BM25) and
-# vector (cosine top-k) rankings — the standard two-tower serving
-# combiner. Contributions quantize to integer nano-units before the
-# exact sum, so fusion is order-independent for any source count.
-# Probe ids 0..3 name BOTH a text query and an embedding row.
-# ---------------------------------------------------------------------------
-
-_HYBRID_ORACLE = f"""
-    WITH {_BM25_CTES},
-    lex AS (
-      SELECT query_id, doc_id, rn AS rank FROM ranked WHERE rn <= 10
-    ), qv AS (
-      SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
-      FROM embeddings WHERE vec_id < 4
-    ), cvv AS (
-      SELECT vec_id AS neighbor_id, CAST(embedding AS DOUBLE[]) AS cv
-      FROM embeddings
-    ), vs AS (
-      SELECT query_id, neighbor_id,
-             list_dot_product(qv, cv)
-               / (sqrt(list_dot_product(qv, qv))
-                  * sqrt(list_dot_product(cv, cv))) AS cosine
-      FROM qv, cvv WHERE query_id <> neighbor_id
-    ), vec AS (
-      SELECT query_id, doc_id, rank FROM (
-        SELECT query_id, neighbor_id AS doc_id,
-               row_number() OVER (PARTITION BY query_id
-                 ORDER BY floor(cosine * 1000000000.0 + 0.5) DESC,
-                          neighbor_id) AS rank
-        FROM vs) WHERE rank <= 10
-    ), uni AS (
-      SELECT query_id, doc_id,
-             CAST(floor(1000000000.0 / (60 + rank)) AS BIGINT) AS u
-      FROM lex
-      UNION ALL
-      SELECT query_id, doc_id,
-             CAST(floor(1000000000.0 / (60 + rank)) AS BIGINT) AS u
-      FROM vec
-    ), fused AS (
-      SELECT query_id, doc_id, sum(u) AS units FROM uni GROUP BY 1, 2
-    ), fr AS (
-      SELECT query_id, doc_id, units,
-             row_number() OVER (PARTITION BY query_id
-                                ORDER BY units DESC, doc_id) AS rank
-      FROM fused
-    )
-    SELECT CAST(query_id AS BIGINT) AS query_id, doc_id,
-           CAST(units AS BIGINT) / 1000000000.0 AS rrf_score,
-           CAST(rank AS BIGINT) AS rank
-    FROM fr WHERE rank <= 5
-"""
-
-
-@register("hybrid_rrf_topk", oracle=_HYBRID_ORACLE)
-def hybrid_rrf_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RRF fusion of BM25 top-10 and cosine top-10 per probe query."""
-    from pyspark.sql import Window as W
-
-    from ..operators.search import bm25_topk, rrf_fuse
-    from ..operators.similarity import cosine_topk
-
-    docs = _t(spark, sf_dir, "documents")
-    emb = _t(spark, sf_dir, "embeddings")
-    queries = _ldf(spark, _BM25_QUERIES, "query_id int, query string")
-    lex = bm25_topk(docs, queries, k=10)
-    wl = W.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("doc_id"))
-    lex = lex.select(
-        F.col("query_id").cast("long").alias("query_id"), "doc_id",
-        "score").withColumn("rank", F.row_number().over(wl))
-    vec = cosine_topk(emb, emb.where(F.col("vec_id") < 4), k=10).select(
-        F.col("query_id").cast("long").alias("query_id"),
-        F.col("neighbor_id").alias("doc_id"), "rank")
-    return rrf_fuse([lex.select("query_id", "doc_id", "rank"), vec],
-                    topk=5)
 
 
 # Image near-duplicate detection via perceptual hashing
@@ -1888,6 +1752,7 @@ def image_resize_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 # The oracle replays all three pair pipelines + a recursive-CTE
 # component closure.
 _ASSET_PRED = "doc_id % 6 = 0"
+
 
 _ASSET_DEDUP_ORACLE = ("WITH RECURSIVE "
     + _shingles_sql(f"WHERE {_ASSET_PRED}") + """
@@ -2296,199 +2161,6 @@ def cross_section_discharge(spark: SparkSession, sf_dir: str) -> DataFrame:
                                      "use_calculated_values")})
 
 
-
-
-# ---------------------------------------------------------------------------
-# Capstone: curated corpus -> packed training manifest. The curation
-# head (quality gate -> LSH clusters -> one rep per cluster ->
-# cluster-safe split) is shared verbatim with corpus_curation's oracle;
-# the kept docs then pack next-fit into 2048-token context windows per
-# (split, shard) — the manifest a trainer consumes.
-# ---------------------------------------------------------------------------
-
-_MANIFEST_ORACLE = _CURATION_ORACLE.split("    SELECT CASE WHEN bucket")[0] + f"""
-    , sel AS (
-      SELECT doc_id, bpe_tokens AS n_tokens,
-             CASE WHEN bucket < 90 THEN 'train'
-                  WHEN bucket < 95 THEN 'val' ELSE 'test' END AS split,
-             CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)
-                  AS BIGINT) % 4 AS shard
-      FROM uniq
-    ), ord AS (
-      SELECT *, row_number() OVER (PARTITION BY split, shard
-                                   ORDER BY doc_id) AS rn
-      FROM sel
-    ), pack AS (
-      SELECT split, shard, rn, doc_id, n_tokens,
-             CAST(0 AS BIGINT) AS bin_id,
-             CAST(0 AS BIGINT) AS bin_offset,
-             n_tokens AS fill
-      FROM ord WHERE rn = 1
-      UNION ALL
-      SELECT o.split, o.shard, o.rn, o.doc_id, o.n_tokens,
-             CASE WHEN p.fill + o.n_tokens > 2048
-                  THEN p.bin_id + 1 ELSE p.bin_id END,
-             CASE WHEN p.fill + o.n_tokens > 2048
-                  THEN CAST(0 AS BIGINT) ELSE p.fill END,
-             CASE WHEN p.fill + o.n_tokens > 2048
-                  THEN o.n_tokens ELSE p.fill + o.n_tokens END
-      FROM ord o JOIN pack p
-        ON o.split = p.split AND o.shard = p.shard AND o.rn = p.rn + 1
-    )
-    SELECT split, shard, doc_id, n_tokens, bin_id, bin_offset FROM pack
-"""
-
-
-@register("curation_packed_manifest", oracle=_MANIFEST_ORACLE)
-def curation_packed_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quality gate -> near-dup clusters -> cluster reps ->
-    cluster-safe split -> next-fit packing per (split, shard): the
-    end-to-end path from raw corpus to trainer manifest."""
-    from ..functions.text import bpe_token_count, quality_score, md5_int
-    from ..operators.dedup import (
-        duplicate_clusters, lsh_candidate_pairs, minhash_signatures,
-    )
-    from ..operators.packing import pack_sequences
-
-    docs = _t(spark, sf_dir, "documents")
-    sig = minhash_signatures(docs, num_hashes=8, shingle_k=3)
-    pairs = lsh_candidate_pairs(sig, num_hashes=8, bands=4)
-    clusters = duplicate_clusters(pairs, docs.select("doc_id"))
-    q = F.floor(quality_score(F.col("text")) * 1e6 + F.lit(0.5)) / 1e6
-    qual = docs.select(
-        "doc_id", q.alias("q"),
-        bpe_token_count(F.col("text")).alias("n_tokens"),
-    )
-    kept = qual.where(F.col("q") >= 0.7).join(
-        clusters.select("doc_id", "cluster_rep"), "doc_id"
-    )
-    surv = F.min("doc_id").over(Window.partitionBy("cluster_rep"))
-    sel = (
-        kept.withColumn("__surv", surv)
-        .where(F.col("doc_id") == F.col("__surv"))
-        .withColumn("bucket", _split_bucket(F.col("cluster_rep")))
-        .select(
-            "doc_id", "n_tokens",
-            F.when(F.col("bucket") < 90, "train")
-            .when(F.col("bucket") < 95, "val").otherwise("test")
-            .alias("split"),
-            (md5_int(F.col("doc_id").cast("string")) % 4).alias("shard"),
-        )
-    )
-    return pack_sequences(sel, budget=2048, group_cols=["split", "shard"])
-
-
-# ---------------------------------------------------------------------------
-# Training-data tier: fragment-level exact-substring duplication — the
-# per-doc fraction of tokens covered by k-grams repeated verbatim in
-# other documents (the suffix-array dedup signal, approximated with a
-# hashed positional-gram inverted index; operators/dedup.py).
-# ---------------------------------------------------------------------------
-
-_SPAN_K = 8
-
-_SPAN_COV_ORACLE = f"""
-    WITH docs0 AS (
-      SELECT doc_id, string_split(lower(text), ' ') AS toks
-      FROM documents
-    ), base AS (
-      SELECT doc_id, len(toks) AS n_tokens, toks FROM docs0
-    ), grams AS (
-      SELECT doc_id, i - 1 AS pos,
-             CAST('0x' || substr(md5(array_to_string(
-               toks[i : i + {_SPAN_K} - 1], ' ')), 1, 15) AS BIGINT) AS h
-      FROM base, unnest(generate_series(1, len(toks) - {_SPAN_K} + 1)) AS t(i)
-      WHERE len(toks) >= {_SPAN_K}
-    ), repeated AS (
-      SELECT h FROM grams GROUP BY h HAVING count(DISTINCT doc_id) >= 2
-    ), dup AS (
-      SELECT g.doc_id, g.pos FROM grams g JOIN repeated USING (h)
-    ), cov AS (
-      SELECT doc_id,
-             CAST(sum(contrib) AS BIGINT) AS dup_tokens,
-             count(*) AS dup_spans
-      FROM (
-        SELECT doc_id, pos,
-               CASE WHEN lag(pos) OVER (PARTITION BY doc_id ORDER BY pos)
-                         IS NULL THEN {_SPAN_K}
-                    ELSE LEAST({_SPAN_K},
-                               pos - lag(pos) OVER (PARTITION BY doc_id
-                                                    ORDER BY pos))
-               END AS contrib
-        FROM dup
-      ) GROUP BY doc_id
-    )
-    SELECT b.doc_id, CAST(b.n_tokens AS INT) AS n_tokens,
-           coalesce(c.dup_spans, 0) AS dup_spans,
-           coalesce(c.dup_tokens, 0) AS dup_tokens,
-           {R('coalesce(c.dup_tokens, 0)'
-              ' / CAST(greatest(b.n_tokens, 1) AS DOUBLE)', 6)}
-             AS coverage_frac
-    FROM base b LEFT JOIN cov c USING (doc_id)
-"""
-
-
-@register("repeated_span_coverage", oracle=_SPAN_COV_ORACLE)
-def repeated_span_coverage_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-doc verbatim-duplication coverage over 8-token grams
-    (operators/dedup.repeated_span_coverage)."""
-    from ..operators.dedup import repeated_span_coverage
-
-    docs = _t(spark, sf_dir, "documents")
-    out = repeated_span_coverage(docs, k=_SPAN_K)
-    return _round(out, {"coverage_frac": 6})
-
-
-_SPAN_RM_ORACLE = f"""
-    WITH docs0 AS (
-      SELECT doc_id, string_split(lower(text), ' ') AS toks
-      FROM documents
-    ), base AS (
-      SELECT doc_id, len(toks) AS n_tokens, toks FROM docs0
-    ), grams AS (
-      SELECT doc_id, i - 1 AS pos,
-             CAST('0x' || substr(md5(array_to_string(
-               toks[i : i + {_SPAN_K} - 1], ' ')), 1, 15) AS BIGINT) AS h
-      FROM base, unnest(generate_series(1, len(toks) - {_SPAN_K} + 1)) AS t(i)
-      WHERE len(toks) >= {_SPAN_K}
-    ), repeated AS (
-      SELECT h FROM grams GROUP BY h HAVING count(DISTINCT doc_id) >= 2
-    ), dup AS (
-      SELECT g.doc_id, g.pos FROM grams g JOIN repeated USING (h)
-    ), covered AS (
-      SELECT DISTINCT doc_id, pos + j AS idx
-      FROM dup, unnest(generate_series(0, {_SPAN_K} - 1)) AS t(j)
-    ), tokidx AS (
-      SELECT doc_id, i - 1 AS idx, toks[i] AS tok
-      FROM base, unnest(generate_series(1, len(toks))) AS t(i)
-    ), kept AS (
-      SELECT t.doc_id, t.idx, t.tok
-      FROM tokidx t LEFT JOIN covered c
-        ON c.doc_id = t.doc_id AND c.idx = t.idx
-      WHERE c.idx IS NULL
-    ), agg AS (
-      SELECT doc_id, count(*) AS kept_tokens,
-             string_agg(tok, ' ' ORDER BY idx) AS cleaned_text
-      FROM kept GROUP BY doc_id
-    )
-    SELECT b.doc_id, CAST(b.n_tokens AS INT) AS n_tokens,
-           coalesce(a.kept_tokens, 0) AS kept_tokens,
-           coalesce(a.cleaned_text, '') AS cleaned_text
-    FROM base b LEFT JOIN agg a USING (doc_id)
-"""
-
-
-@register("repeated_span_removal", oracle=_SPAN_RM_ORACLE)
-def repeated_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact-substring dedup ACTION: cut every token covered by a
-    cross-document repeated {_SPAN_K}-gram and reassemble the text
-    (operators/dedup.remove_repeated_spans)."""
-    from ..operators.dedup import remove_repeated_spans
-
-    docs = _t(spark, sf_dir, "documents")
-    return remove_repeated_spans(docs, k=_SPAN_K)
-
-
 # ---------------------------------------------------------------------------
 # Spectral (DFT) audio fingerprint variant (operators/multimodal.
 # audio_spectral_fingerprint64): real WAV decode -> 4-sample chunk
@@ -2498,6 +2170,7 @@ def repeated_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Gain invariance exact (energies quadratic in the samples), so group
 # twins fingerprint identically.
 # ---------------------------------------------------------------------------
+
 
 def _audio_spec_oracle() -> str:
     from ..operators.multimodal import _spec_basis
@@ -2576,6 +2249,7 @@ def audio_spectral_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # + 0.25*c(w)/N from the corpus itself, per-bigram micro-nat
 # quantization, NULL mean for sub-2-token docs.
 # ---------------------------------------------------------------------------
+
 
 _BIGRAM_SURPRISAL_ORACLE = f"""
     WITH base AS (
@@ -2733,294 +2407,6 @@ def pmi_collocations_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Kneser-Ney: the continuation-count rung above deleted interpolation.
-# The float expression shape (operand order, promotion points) is
-# mirrored verbatim so both engines agree to the ulp.
-_KN_BIGRAM_ORACLE = f"""
-    WITH base AS (
-      SELECT doc_id, string_split(lower(text), ' ') AS toks
-      FROM documents
-    ), pairs AS (
-      SELECT doc_id, toks[i] AS p, toks[i + 1] AS w
-      FROM base, unnest(generate_series(1, len(toks) - 1)) AS t(i)
-    ), bgc AS (
-      SELECT p, w, count(*) AS cb FROM pairs GROUP BY 1, 2
-    ), lft AS (
-      SELECT p, sum(cb) AS cu, count(*) AS n1u FROM bgc GROUP BY 1
-    ), rgt AS (
-      SELECT w, count(*) AS n1w FROM bgc GROUP BY 1
-    ), tot AS (
-      SELECT count(*) AS nbb FROM bgc
-    ), score AS (
-      SELECT bgc.p, bgc.w,
-             CAST(floor(
-               -ln((greatest(bgc.cb - CAST(0.75 AS DOUBLE),
-                             CAST(0 AS DOUBLE))
-                    + CAST(0.75 AS DOUBLE) * lft.n1u
-                    * (rgt.n1w / tot.nbb))
-                   / lft.cu)
-               * 1000000.0 + CAST(0.5 AS DOUBLE)) AS BIGINT) AS q
-      FROM bgc JOIN lft ON lft.p = bgc.p JOIN rgt ON rgt.w = bgc.w
-      CROSS JOIN tot
-    ), per_doc AS (
-      SELECT pairs.doc_id,
-             CAST(count(*) AS BIGINT) AS n_bigrams,
-             {R('sum(q) / 1000000.0 / count(*)', 6)} AS mean_surprisal
-      FROM pairs JOIN score ON score.p = pairs.p AND score.w = pairs.w
-      GROUP BY 1
-    )
-    SELECT b.doc_id,
-           coalesce(d.n_bigrams, 0) AS n_bigrams,
-           d.mean_surprisal
-    FROM base b LEFT JOIN per_doc d ON d.doc_id = b.doc_id
-"""
-
-
-@register("kn_bigram_surprisal", oracle=_KN_BIGRAM_ORACLE)
-def kn_bigram_surprisal_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Interpolated Kneser-Ney bigram surprisal (continuation counts:
-    p_cont(w) = distinct histories of w / distinct bigram types)."""
-    from ..operators.dedup import kn_bigram_surprisal
-
-    docs = _t(spark, sf_dir, "documents")
-    out = kn_bigram_surprisal(docs, discount=0.75)
-    return _round(out, {"mean_surprisal": 6})
-
-
-# ---------------------------------------------------------------------------
-# Chunk-level cross-document near-dup: chunking x MinHash/LSH composed
-# at sub-document granularity — catches partial overlap (quotation,
-# boilerplate sections, plagiarized passages) that document-level
-# signatures dilute away. Same-document pairs are excluded (adjacent
-# chunks trivially share their overlap region).
-# ---------------------------------------------------------------------------
-
-_CHUNK_NEARDUP_ORACLE = """
-    WITH cbase AS (
-      SELECT doc_id, string_split(text, ' ') AS toks,
-             len(string_split(text, ' ')) AS n
-      FROM documents
-    ), chunks AS (
-      SELECT doc_id * 1000 + i AS cid,
-             array_to_string(toks[i * 16 + 1 : i * 16 + 24], ' ') AS ctext
-      FROM cbase,
-           unnest(generate_series(0,
-             greatest(CAST(floor(CAST(n - 1 - 8 AS DOUBLE) / 16) AS INT),
-                      0))) AS t(i)
-    ), shingled AS (
-      SELECT cid, toks, n,
-             unnest(generate_series(0, greatest(n - 3, 0))) AS i
-      FROM (SELECT cid, string_split(lower(ctext), ' ') AS toks,
-                   len(string_split(lower(ctext), ' ')) AS n
-            FROM chunks)
-    ), shingles AS (
-      SELECT DISTINCT cid,
-             array_to_string(toks[i + 1 : i + 3], ' ') AS sh
-      FROM shingled
-    ), hashed AS (
-      SELECT cid, CAST('0x' || substr(md5(sh), 1, 8) AS BIGINT)
-             % 2147483647 AS base
-      FROM shingles
-    ), sig AS (
-      SELECT cid,
-""" + ",\n".join(
-    f"{_minhash_hash_sql(i)} AS h{i}"
-    for i in range(8)
-) + """
-      FROM hashed GROUP BY cid
-    ), banded AS (
-      SELECT cid, band, key FROM (
-        SELECT cid,
-               unnest([0, 1, 2, 3]) AS band,
-               unnest([CAST(h0 AS VARCHAR) || ',' || CAST(h1 AS VARCHAR),
-                       CAST(h2 AS VARCHAR) || ',' || CAST(h3 AS VARCHAR),
-                       CAST(h4 AS VARCHAR) || ',' || CAST(h5 AS VARCHAR),
-                       CAST(h6 AS VARCHAR) || ',' || CAST(h7 AS VARCHAR)])
-                 AS key
-        FROM sig
-      )
-    ), pairs AS (
-      SELECT DISTINCT a.cid AS id_a, b.cid AS id_b
-      FROM banded a JOIN banded b
-        ON a.band = b.band AND a.key = b.key AND a.cid < b.cid
-    )
-    SELECT id_a // 1000 AS doc_a, id_a % 1000 AS chunk_a,
-           id_b // 1000 AS doc_b, id_b % 1000 AS chunk_b
-    FROM pairs
-    WHERE id_a // 1000 <> id_b // 1000
-"""
-
-
-@register("chunk_cross_doc_near_dup", oracle=_CHUNK_NEARDUP_ORACLE)
-def chunk_cross_doc_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sub-document near-dup pairs: 24/8 chunking -> per-chunk MinHash
-    -> LSH banding -> cross-document candidate pairs."""
-    from ..operators.dedup import lsh_candidate_pairs, minhash_signatures
-    from ..operators.packing import chunk_documents
-
-    docs = _t(spark, sf_dir, "documents")
-    ch = chunk_documents(docs, max_tokens=24, overlap=8).select(
-        (F.col("doc_id") * 1000 + F.col("chunk_id")).alias("cid"),
-        "chunk_text",
-    )
-    sig = minhash_signatures(ch, id_col="cid", text_col="chunk_text",
-                             num_hashes=8, shingle_k=3)
-    pairs = lsh_candidate_pairs(sig, id_col="cid", num_hashes=8, bands=4)
-    da = F.expr("id_a div 1000")
-    db = F.expr("id_b div 1000")
-    return pairs.where(da != db).select(
-        da.alias("doc_a"), (F.col("id_a") % 1000).alias("chunk_a"),
-        db.alias("doc_b"), (F.col("id_b") % 1000).alias("chunk_b"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# Document containment from chunk matches: per ordered (doc_a, doc_b),
-# the fraction of A's chunks with at least one LSH match in B — the
-# asymmetric overlap measure ("A is mostly contained in B") that
-# symmetric document signatures cannot express.
-# ---------------------------------------------------------------------------
-
-_CONTAINMENT_ORACLE = _CHUNK_NEARDUP_ORACLE.replace(
-    """    SELECT id_a // 1000 AS doc_a, id_a % 1000 AS chunk_a,
-           id_b // 1000 AS doc_b, id_b % 1000 AS chunk_b
-    FROM pairs
-    WHERE id_a // 1000 <> id_b // 1000
-""",
-    """    , cross_pairs AS (
-      SELECT id_a // 1000 AS doc_a, id_a % 1000 AS chunk_a,
-             id_b // 1000 AS doc_b, id_b % 1000 AS chunk_b
-      FROM pairs
-      WHERE id_a // 1000 <> id_b // 1000
-    ), directed AS (
-      SELECT doc_a, chunk_a, doc_b FROM cross_pairs
-      UNION
-      SELECT doc_b AS doc_a, chunk_b AS chunk_a, doc_a AS doc_b
-      FROM cross_pairs
-    ), matched AS (
-      SELECT doc_a, doc_b, count(DISTINCT chunk_a) AS m
-      FROM directed GROUP BY 1, 2
-    ), nchunks AS (
-      SELECT doc_id,
-             CAST(greatest(CAST(floor(CAST(n - 1 - 8 AS DOUBLE) / 16)
-                                AS INT), 0) + 1 AS BIGINT) AS nc
-      FROM cbase
-    )
-    SELECT m.doc_a, m.doc_b, m.m AS matched_chunks, c.nc AS total_chunks,
-           CAST(floor(CAST(m.m AS DOUBLE) / c.nc * 1000000.0
-                      + CAST(0.5 AS DOUBLE)) AS BIGINT)
-             / 1000000.0 AS containment
-    FROM matched m JOIN nchunks c ON c.doc_id = m.doc_a
-""")
-
-
-@register("doc_containment_scores", oracle=_CONTAINMENT_ORACLE)
-def doc_containment_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Asymmetric doc-overlap: fraction of A's chunks LSH-matching any
-    chunk of B, per ordered (doc_a, doc_b)."""
-    from ..operators.dedup import lsh_candidate_pairs, minhash_signatures
-    from ..operators.packing import chunk_documents
-
-    docs = _t(spark, sf_dir, "documents")
-    ch = chunk_documents(docs, max_tokens=24, overlap=8)
-    cids = ch.select(
-        (F.col("doc_id") * 1000 + F.col("chunk_id")).alias("cid"),
-        "chunk_text",
-    )
-    sig = minhash_signatures(cids, id_col="cid", text_col="chunk_text",
-                             num_hashes=8, shingle_k=3)
-    pairs = lsh_candidate_pairs(sig, id_col="cid", num_hashes=8, bands=4)
-    cross = pairs.where(
-        F.expr("id_a div 1000") != F.expr("id_b div 1000")).select(
-        F.expr("id_a div 1000").alias("doc_a"),
-        (F.col("id_a") % 1000).alias("chunk_a"),
-        F.expr("id_b div 1000").alias("doc_b"),
-        (F.col("id_b") % 1000).alias("chunk_b"),
-    )
-    directed = cross.select("doc_a", "chunk_a", "doc_b").unionByName(
-        cross.select(F.col("doc_b").alias("doc_a"),
-                     F.col("chunk_b").alias("chunk_a"),
-                     F.col("doc_a").alias("doc_b"))).distinct()
-    matched = directed.groupBy("doc_a", "doc_b").agg(
-        F.countDistinct("chunk_a").alias("matched_chunks"))
-    nchunks = ch.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("total_chunks"))
-    out = matched.join(
-        nchunks.select(F.col("doc_id").alias("doc_a"), "total_chunks"),
-        "doc_a")
-    cont = (F.floor(
-        F.col("matched_chunks").cast("double") / F.col("total_chunks")
-        * 1e6 + F.lit(0.5)) / 1e6)
-    return out.select("doc_a", "doc_b", "matched_chunks", "total_chunks",
-                      cont.alias("containment"))
-
-
-# ---------------------------------------------------------------------------
-# Deleted-interpolation trigram LM surprisal (operators/dedup.
-# trigram_surprisal): p(w|u,v) = 0.6*c(uvw)/c(uv) + 0.3*c(vw)/c(v)
-# + 0.1*c(w)/N; micro-nat quantization; NULL mean under 3 tokens.
-# ---------------------------------------------------------------------------
-
-_TRIGRAM_SURPRISAL_ORACLE = f"""
-    WITH base AS (
-      SELECT doc_id, string_split(lower(text), ' ') AS toks,
-             len(string_split(lower(text), ' ')) AS n
-      FROM documents
-    ), tok AS (
-      SELECT unnest(toks) AS w FROM base
-    ), uni AS (
-      SELECT w, count(*) AS cw FROM tok GROUP BY 1
-    ), tot AS (
-      SELECT CAST(sum(cw) AS DOUBLE) AS total FROM uni
-    ), bg AS (
-      SELECT toks[i] AS u, toks[i + 1] AS v
-      FROM base, unnest(generate_series(1, n - 1)) AS t(i)
-    ), bgc AS (
-      SELECT u, v, count(*) AS cb FROM bg GROUP BY 1, 2
-    ), tri AS (
-      SELECT doc_id, toks[i] AS u, toks[i + 1] AS v, toks[i + 2] AS w
-      FROM base, unnest(generate_series(1, n - 2)) AS t(i)
-    ), tric AS (
-      SELECT u, v, w, count(*) AS ct FROM tri GROUP BY 1, 2, 3
-    ), score AS (
-      SELECT t.u, t.v, t.w,
-             CAST(floor(
-               -ln(CAST(0.6 AS DOUBLE) * t.ct / buv.cb
-                   + CAST(0.3 AS DOUBLE) * bvw.cb / uv2.cw
-                   + (CAST(1.0 AS DOUBLE) - CAST(0.6 AS DOUBLE)
-                      - CAST(0.3 AS DOUBLE)) * uw.cw / tot.total)
-               * 1000000.0 + CAST(0.5 AS DOUBLE)) AS BIGINT) AS q
-      FROM tric t
-      JOIN bgc buv ON buv.u = t.u AND buv.v = t.v
-      JOIN bgc bvw ON bvw.u = t.v AND bvw.v = t.w
-      JOIN uni uv2 ON uv2.w = t.v
-      JOIN uni uw ON uw.w = t.w
-      CROSS JOIN tot
-    ), per_doc AS (
-      SELECT tri.doc_id,
-             CAST(count(*) AS BIGINT) AS n_trigrams,
-             {R('sum(q) / 1000000.0 / count(*)', 6)} AS mean_surprisal
-      FROM tri JOIN score
-        ON score.u = tri.u AND score.v = tri.v AND score.w = tri.w
-      GROUP BY 1
-    )
-    SELECT b.doc_id,
-           coalesce(d.n_trigrams, 0) AS n_trigrams,
-           d.mean_surprisal
-    FROM base b LEFT JOIN per_doc d ON d.doc_id = b.doc_id
-"""
-
-
-@register("trigram_surprisal", oracle=_TRIGRAM_SURPRISAL_ORACLE)
-def trigram_surprisal_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deleted-interpolation trigram LM surprisal over the corpus."""
-    from ..operators.dedup import trigram_surprisal
-
-    docs = _t(spark, sf_dir, "documents")
-    out = trigram_surprisal(docs, l3=0.6, l2=0.3)
-    return _round(out, {"mean_surprisal": 6})
-
-
 # ---------------------------------------------------------------------------
 # Unicode punctuation folding (functions/text.fold_text): curly
 # quotes / dashes / ellipsis / NBSP / zero-width folding + whitespace
@@ -3085,8 +2471,8 @@ def unicode_fold_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Shot-level video containment: per-shot brightness-offset-invariant
 # delta signatures -> fraction of clip A's shots appearing in clip B
-# (the video analog of doc_containment_scores — re-graded partial
-# copies that clip-level fingerprints dilute away).
+# (containment catches re-graded partial copies that clip-level
+# fingerprints dilute away).
 # ---------------------------------------------------------------------------
 
 _SHOT_CONTAIN_ORACLE = """
@@ -3372,6 +2758,7 @@ def video_shot_containment_capped(spark: SparkSession,
 # one bucket (CCNet buckets by perplexity VALUE thresholds, not rank).
 # ---------------------------------------------------------------------------
 
+
 _PER_LANG_ORACLE = f"""
     WITH t AS (
       SELECT doc_id, string_split(lower(text), ' ') AS toks
@@ -3487,6 +2874,7 @@ def per_language_curation_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # tiebreak; the per-cluster window is bounded by the LSH cluster size.
 # ---------------------------------------------------------------------------
 
+
 _BEST_CLUSTER_ORACLE = _COMP_SQL + f"""
     , qm AS (
       SELECT doc_id,
@@ -3558,11 +2946,9 @@ def dedup_best_of_cluster_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-
-
 # ---------------------------------------------------------------------------
-# Bloom-filter decontamination — the 100 TB scale path next to the
-# exact-overlap eval_decontamination: the eval set's 5-gram Bloom
+# Bloom-filter decontamination — the 100 TB scale path of exact
+# 5-gram eval-set overlap: the eval set's 5-gram Bloom
 # (32k bigint words — broadcastable at ANY corpus size, no false
 # negatives) probes the training corpus MAP-SIDE; only probabilistic
 # survivors would pay an exact recheck. The bit table is
@@ -3633,18 +3019,17 @@ _BLOOM_DECON_ORACLE = f"""
 @register("bloom_decontamination", oracle=_BLOOM_DECON_ORACLE)
 def bloom_decontamination_q(spark: SparkSession,
                             sf_dir: str) -> DataFrame:
-    """Eval-set 5-gram Bloom probe over the training corpus (same
-    split and threshold as eval_decontamination): per-doc distinct
-    grams, exact overlap, probabilistic hits, flag at >= 8 — the
-    sketch bits verified word-for-word through the probe."""
+    """Eval-set 5-gram Bloom probe over the training corpus: per-doc
+    distinct grams, exact overlap, probabilistic hits, flag at >= 8 —
+    the sketch bits verified word-for-word through the probe."""
     from ..functions.text import word_shingles
-    from ..operators.dedup import _spread_scan
+    from ..operators._scan import spread_scan
     from ..operators.sketch import bloom_build, bloom_probe
 
     # 5-gram construction + k md5 probes per gram are the CPU mass and
     # run in the scan stage — spread the under-split single-file scan
     # (r12, guide §2.5; no-op at real split counts)
-    docs = _spread_scan(_t(spark, sf_dir, "documents"), "doc_id")
+    docs = spread_scan(_t(spark, sf_dir, "documents"), "doc_id")
     evalset = docs.where(F.col("doc_id") % 19 == 3)
     train = docs.where(F.col("doc_id") % 19 != 3)
     # array_distinct before the explode: per-doc duplicate grams never
@@ -3684,104 +3069,10 @@ def bloom_decontamination_q(spark: SparkSession,
 
 
 # ---------------------------------------------------------------------------
-# Long-gram exact-substring coverage via gram-length doubling
-# (operators/dedup.long_repeated_span_coverage): 8 -> 16 -> 32-token
-# grams, each round hashing only positions whose two half-grams
-# survived the previous round. The oracle computes the ground truth
-# directly (hash every 32-gram) — the doubling is an optimization
-# with provably identical output.
-# ---------------------------------------------------------------------------
-
-_LONG_SPAN_K = 32
-
-_LONG_SPAN_ORACLE = f"""
-    WITH docs0 AS (
-      SELECT doc_id, string_split(lower(text), ' ') AS toks
-      FROM documents
-    ), base AS (
-      SELECT doc_id, len(toks) AS n_tokens, toks FROM docs0
-    ), grams AS (
-      SELECT doc_id, i - 1 AS pos,
-             CAST('0x' || substr(md5(array_to_string(
-               toks[i : i + {_LONG_SPAN_K} - 1], ' ')), 1, 15)
-               AS BIGINT) AS h
-      FROM base,
-           unnest(generate_series(1, len(toks) - {_LONG_SPAN_K} + 1))
-             AS t(i)
-      WHERE len(toks) >= {_LONG_SPAN_K}
-    ), repeated AS (
-      SELECT h FROM grams GROUP BY h HAVING count(DISTINCT doc_id) >= 2
-    ), dup AS (
-      SELECT g.doc_id, g.pos FROM grams g JOIN repeated USING (h)
-    ), cov AS (
-      SELECT doc_id,
-             CAST(sum(contrib) AS BIGINT) AS dup_tokens,
-             count(*) AS dup_spans
-      FROM (
-        SELECT doc_id, pos,
-               CASE WHEN lag(pos) OVER (PARTITION BY doc_id ORDER BY pos)
-                         IS NULL THEN {_LONG_SPAN_K}
-                    ELSE LEAST({_LONG_SPAN_K},
-                               pos - lag(pos) OVER (PARTITION BY doc_id
-                                                    ORDER BY pos))
-               END AS contrib
-        FROM dup
-      ) GROUP BY doc_id
-    )
-    SELECT b.doc_id, CAST(b.n_tokens AS INT) AS n_tokens,
-           coalesce(c.dup_spans, 0) AS dup_spans,
-           coalesce(c.dup_tokens, 0) AS dup_tokens,
-           {R('coalesce(c.dup_tokens, 0)'
-              ' / CAST(greatest(b.n_tokens, 1) AS DOUBLE)', 6)}
-             AS coverage_frac
-    FROM base b LEFT JOIN cov c USING (doc_id)
-"""
-
-
-@register("long_repeated_span_coverage", oracle=_LONG_SPAN_ORACLE)
-def long_repeated_span_coverage_q(spark: SparkSession,
-                                  sf_dir: str) -> DataFrame:
-    """Per-doc verbatim-duplication coverage over 32-token grams found
-    by gram-length DOUBLING — the scale path for long-n ExactSubstr
-    (operators/dedup.long_repeated_span_coverage)."""
-    from ..operators.dedup import long_repeated_span_coverage
-
-    docs = _t(spark, sf_dir, "documents")
-    out = long_repeated_span_coverage(docs, k0=8, target=_LONG_SPAN_K)
-    return _round(out, {"coverage_frac": 6})
-
-
-@register("repeated_span_coverage_owned", oracle=_SPAN_COV_ORACLE)
-def repeated_span_coverage_owned_q(spark: SparkSession,
-                                   sf_dir: str) -> DataFrame:
-    """The owned-cache variant of repeated_span_coverage (VERDICT r11
-    #2): the gram table is cached across the counts-reduction and
-    probe passes (hashed once, not twice), the per-doc output is
-    eagerly checkpointed, and the cache is released before return —
-    the lifecycle a curation gate that owns the stage wants."""
-    from ..operators.dedup import repeated_span_coverage
-
-    docs = _t(spark, sf_dir, "documents")
-    out = repeated_span_coverage(docs, k=_SPAN_K, owned_cache=True)
-    return _round(out, {"coverage_frac": 6})
-
-
-@register("repeated_span_removal_owned", oracle=_SPAN_RM_ORACLE)
-def repeated_span_removal_owned_q(spark: SparkSession,
-                                  sf_dir: str) -> DataFrame:
-    """Owned-cache exact-substring removal: grams hashed once, cleaned
-    corpus eagerly checkpointed (the capstone re-reads it across four
-    downstream tiers), gram cache released before return."""
-    from ..operators.dedup import remove_repeated_spans
-
-    docs = _t(spark, sf_dir, "documents")
-    return remove_repeated_spans(docs, k=_SPAN_K, owned_cache=True)
-
-
-# ---------------------------------------------------------------------------
 # Paragraph-level exact dedup (Dolma/RefinedWeb boilerplate pass) and
 # edit-distance pair verification
 # ---------------------------------------------------------------------------
+
 
 # The documents fixture is single-line, so the query SYNTHESIZES the
 # paragraph structure deterministically in both engines: re-delimit
@@ -3802,6 +3093,7 @@ _PARA_SYNTH_SQL = r"""
       FROM documents
     )
 """
+
 
 _PARA_DEDUP_ORACLE = "WITH " + _PARA_SYNTH_SQL + r"""
     , parts AS (

@@ -21,9 +21,6 @@ from ._common import (  # noqa: F401
     R,
     SparkSession,
     Window,
-    _BM25_CTES,
-    _BM25_QUERIES,
-    _BM25_VALUES,
     _FIXDIR,
     _GATE_ORACLE,
     _RASTER_CELLS_SQL,
@@ -450,8 +447,6 @@ ORDER_CORRECTIONS = [
 ]
 
 
-
-
 _REFRESH_E2E_ORACLE = f"""
     WITH raw AS (
       SELECT o_orderpriority AS priority,
@@ -540,8 +535,6 @@ _RASTER_ZONES_SQL = """
              (n_nationkey * 29) % 80 + 19 AS zymax
       FROM nation
 """
-
-
 
 
 @register(
@@ -840,7 +833,7 @@ def snowcourse_station_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# TF-IDF top-k terms per document (operators/search.tfidf_top_terms):
+# TF-IDF top-k terms per document (tfidf_top_terms below):
 # corpus-keyword extraction; df join stays an equi-join (vocab-sized,
 # never broadcast at web scale), n_docs is an agg + 1-row broadcast.
 # ---------------------------------------------------------------------------
@@ -875,11 +868,66 @@ _TFIDF_ORACLE = """
 """
 
 
+def tfidf_top_terms(
+    docs: DataFrame,
+    k: int = 5,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+) -> DataFrame:
+    """Top-k TF-IDF terms per document — the corpus-keyword /
+    datacard-vocabulary primitive (and the feature extractor classic
+    sparse classifiers sit on).
+
+    score(term, doc) = tf * ln((n_docs + 1) / (df + 1))   [+1 smoothing]
+
+    quantized to 1e-6 before ranking so ties and ordering are
+    bit-stable across engines; rank ties break (score DESC, term ASC).
+
+    Scale shape: (doc, term, tf) is one explode + partial-aggregable
+    count; df aggregates the SAME postings frame on term (corpus-
+    VOCAB-sized — far too big to broadcast at web scale, so the score
+    join stays an equi-join on term for AQE to plan); n_docs is an
+    agg + 1-row broadcast cross-join; top-k is a rank window per doc
+    (WindowGroupLimit pushes the limit into the sort).
+    """
+    from ..functions.text import tokens
+
+    postings = (
+        docs.select(F.col(id_col),
+                    F.explode(tokens(F.lower(F.col(text_col))))
+                    .alias("term"))
+        .groupBy(id_col, "term")
+        .agg(F.count(F.lit(1)).alias("tf"))
+    )
+    dfreq = postings.groupBy("term").agg(
+        F.count(F.lit(1)).alias("df"))
+    ndocs = docs.select(id_col).distinct().agg(
+        F.count(F.lit(1)).alias("n_docs"))
+    scored = (
+        postings.join(dfreq, "term")
+        .crossJoin(F.broadcast(ndocs))
+        .select(
+            id_col, "term",
+            F.floor(
+                F.col("tf")
+                * F.log((F.col("n_docs") + F.lit(1.0))
+                        / (F.col("df") + F.lit(1.0)))
+                * 1e6 + F.lit(0.5)
+            ).cast("long").alias("__q"),
+        )
+    )
+    w = Window.partitionBy(id_col).orderBy(F.desc("__q"), F.asc("term"))
+    return (
+        scored.withColumn("__rn", F.row_number().over(w))
+        .where(F.col("__rn") <= k)
+        .select(id_col, "term", F.col("__rn").cast("long").alias("rank"),
+                (F.col("__q") / F.lit(1e6)).alias("tfidf"))
+    )
+
+
 @register("tfidf_top_terms", oracle=_TFIDF_ORACLE)
 def tfidf_top_terms_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-3 TF-IDF keywords per document."""
-    from ..operators.search import tfidf_top_terms
-
     docs = _t(spark, sf_dir, "documents")
     return tfidf_top_terms(docs, k=3)
 
@@ -3525,8 +3573,6 @@ def station_lag_correlation_q(spark: SparkSession,
         F.col("n").alias("n_matched"), "r",
         (F.row_number().over(w) == 1).alias("is_best_lag"))
     return _round(out, {"r": 6})
-
-
 
 
 # ---------------------------------------------------------------------------

@@ -21,9 +21,6 @@ from ._common import (  # noqa: F401
     R,
     SparkSession,
     Window,
-    _BM25_CTES,
-    _BM25_QUERIES,
-    _BM25_VALUES,
     _FIXDIR,
     _GATE_ORACLE,
     _RASTER_CELLS_SQL,

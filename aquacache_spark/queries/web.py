@@ -1,6 +1,9 @@
-"""Web tier: WARC ingest, charset transcode, HTML extraction, URL canonicalization, robots/sitemaps, link graph.
+"""Text quality gates, sessionization and link-graph queries.
 
-Split out of the original flat queries.py (r9); section order preserved.
+The web-crawl-tier queries here remain only for perfbench's batch
+probe (``warc_crawl_corpus``, named in ``perfbench/batch_analytics.py``)
+and until a later change cuts the rest; tests/test_import_boundary.py
+lists them.
 """
 
 from __future__ import annotations
@@ -21,9 +24,6 @@ from ._common import (  # noqa: F401
     R,
     SparkSession,
     Window,
-    _BM25_CTES,
-    _BM25_QUERIES,
-    _BM25_VALUES,
     _FIXDIR,
     _GATE_ORACLE,
     _RASTER_CELLS_SQL,
@@ -336,34 +336,6 @@ def gopher_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
                         "alpha_frac": 6})
 
 
-# BM25 top-k per probe query (operators/search.py): postings restricted
-# to query terms via broadcast, df computed on the restricted set,
-# per-term contributions quantized at 1e-6 and summed as longs so the
-# ranking is order-independent; ties broken by doc_id. The oracle
-# replays the identical quantized pipeline.
-
-
-# shared through `ranked` so the hybrid-RRF oracle reuses the chain
-
-_BM25_ORACLE = f"""
-    WITH {_BM25_CTES}
-    SELECT query_id, doc_id,
-           {R('cl / 1000000.0', 6)} AS score
-    FROM ranked WHERE rn <= 5
-"""
-
-
-@register("bm25_topk", oracle=_BM25_ORACLE)
-def bm25_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BM25 top-5 per probe query (operators/search.bm25_topk)."""
-    from ..operators.search import bm25_topk
-
-    docs = _t(spark, sf_dir, "documents")
-    queries = _ldf(spark, _BM25_QUERIES, "query_id int, query string")
-    out = bm25_topk(docs, queries, k=5)
-    return _round(out, {"score": 6})
-
-
 # ---------------------------------------------------------------------------
 # URL normalization + domain-level curation rollup (operators/web.py):
 # canonical URLs, registered domains (public-suffix-aware), per-domain
@@ -371,6 +343,7 @@ def bm25_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # curation. URLs are synthesized deterministically from documents
 # (the fixture carries none); every normalization rule mirrors 1:1.
 # ---------------------------------------------------------------------------
+
 
 _URL_SQL = """
       lower(
@@ -386,6 +359,7 @@ _URL_SQL = """
             ELSE '' END)
       )
 """
+
 
 _URL_ROLLUP_ORACLE = f"""
     WITH raw AS (
@@ -514,7 +488,9 @@ _URL_PSL_SQL = """
       )
 """
 
+
 _PSL_CSV = _FIXDIR.parent / "public_suffix_snapshot.csv"
+
 
 _URL_PSL_ORACLE = f"""
     WITH psl AS (
@@ -665,6 +641,7 @@ _PSL_WILD_HOST_SQL = """
   END
 """
 
+
 _PSL_WILD_ORACLE = f"""
     WITH rules0 AS (
       SELECT suffix AS rule FROM read_csv('{_PSL_CSV}', header=true)
@@ -753,6 +730,12 @@ def psl_wildcard_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# ---------------------------------------------------------------------------
+# Per-domain quality gate: the top 30% of each synthetic domain by
+# quality score, rank-based so the cut is bit-exact at any partitioning.
+# ---------------------------------------------------------------------------
+
+
 @register("domain_quality_gate", oracle=_GATE_ORACLE)
 def domain_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Keep the top 30% of each domain by quality score with a
@@ -790,6 +773,7 @@ def domain_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 # URL — exact-agent group precedence over '*', longest-pattern wins,
 # Allow beats Disallow on ties, '*' wildcards and '$' end anchors.
 # ---------------------------------------------------------------------------
+
 
 _ROBOTS_SQL = """
     robots AS (
@@ -928,6 +912,7 @@ _ROBOTS_URLS_CTE = """
       FROM orders WHERE o_orderkey % 6 = 2
     )"""
 
+
 _ROBOTS_CHAIN_CTES = """, exact AS (
       SELECT * FROM rules WHERE agent = 'aquabot'
     ), eff AS (
@@ -965,7 +950,9 @@ _ROBOTS_CHAIN_CTES = """, exact AS (
     )
 """
 
+
 _ROBOTS_VERDICT_CTES = _ROBOTS_URLS_CTE + _ROBOTS_CHAIN_CTES
+
 
 _ROBOTS_FILTER_ORACLE = ("WITH " + _ROBOTS_SQL + _ROBOTS_VERDICT_CTES
                          + """
@@ -1162,126 +1149,13 @@ def host_link_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Round-7 curation capstone: LM perplexity buckets x exact-dedup
-# canonicalization x weighted A-ES sampling composed into a training
-# manifest — keep head/middle-bucket canonicals, then draw 20 docs per
-# source with head weighted 3:1 over middle. Each component is
-# independently oracled (surprisal_quality_buckets, dedup_exact,
-# weighted_stratified_sample); this verifies the COMPOSITION.
-# ---------------------------------------------------------------------------
-
-_SCORED_MANIFEST_ORACLE = """
-    WITH tok AS (
-      SELECT doc_id, unnest(string_split(lower(text), ' ')) AS tok
-      FROM documents
-    ), freq AS (
-      SELECT tok, count(*) AS cnt FROM tok GROUP BY tok
-    ), tot AS (
-      SELECT sum(cnt) AS total FROM freq
-    ), surp AS (
-      SELECT tok, CAST(floor(-ln(cnt / total) * 1000000 + 0.5) AS BIGINT) AS q
-      FROM freq, tot
-    ), d AS (
-      SELECT t.doc_id, sum(q) AS sq, count(*) AS n
-      FROM tok t JOIN surp USING (tok) GROUP BY 1
-    ), keyed AS (
-      SELECT doc_id,
-             CAST(floor((sq / 1000000.0 / n) * 1000000 + 0.5) AS BIGINT)
-               AS mq
-      FROM d
-    ), nd AS (
-      SELECT count(*) AS n_docs FROM keyed
-    ), r AS (
-      SELECT doc_id, mq,
-             row_number() OVER (ORDER BY mq ASC, doc_id ASC) AS rank
-      FROM keyed
-    ), bucketed AS (
-      SELECT doc_id,
-             CASE WHEN rank * 3 <= nd.n_docs THEN 'head'
-                  WHEN rank * 3 <= nd.n_docs * 2 THEN 'middle'
-                  ELSE 'tail' END AS bucket
-      FROM r CROSS JOIN nd
-    ), canon AS (
-      SELECT d.doc_id, d.source, b.bucket,
-             min(d.doc_id) OVER (
-               PARTITION BY md5(regexp_replace(lower(d.text), '\\s+',
-                                               ' ', 'g'))
-             ) = d.doc_id AS canonical
-      FROM documents d JOIN bucketed b ON b.doc_id = d.doc_id
-      WHERE b.bucket <> 'tail'
-    ), pool AS (
-      SELECT doc_id, source, bucket,
-             CASE WHEN bucket = 'head' THEN 3 ELSE 1 END AS weight
-      FROM canon WHERE canonical
-    ), drawn AS (
-      SELECT doc_id, source, bucket, weight,
-             row_number() OVER (
-               PARTITION BY source
-               ORDER BY CAST(floor(
-                 ln((CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)
-                     || '|manifest-v1'), 1, 15) AS BIGINT) + 1)
-                    / CAST(1152921504606846976 AS DOUBLE))
-                 / CAST(weight AS DOUBLE) * 1000000000.0) AS BIGINT)
-                 DESC, doc_id ASC) AS sample_rank
-      FROM pool
-    )
-    SELECT doc_id, source, bucket, CAST(weight AS BIGINT) AS weight,
-           CAST(sample_rank AS BIGINT) AS sample_rank
-    FROM drawn WHERE sample_rank <= 20
-"""
-
-
-@register("scored_curation_manifest", oracle=_SCORED_MANIFEST_ORACLE)
-def scored_curation_manifest_q(spark: SparkSession,
-                               sf_dir: str) -> DataFrame:
-    """Training manifest: fluent-bucket canonicals sampled 3:1
-    head-over-middle, 20 per source."""
-    from ..functions.text import fingerprint
-    from ..operators.dedup import (unigram_surprisal,
-                                  weighted_stratified_sample)
-    from ..operators.rank import global_rank
-    from pyspark.sql import Window as W
-
-    docs = _t(spark, sf_dir, "documents")
-    surp = unigram_surprisal(docs)
-    keyed = surp.select(
-        "doc_id",
-        F.floor(F.col("mean_surprisal").cast("double") * 1e6
-                + F.lit(0.5)).cast("long").alias("__mq"))
-    ranked = global_rank(keyed, ["__mq", "doc_id"], rank_col="__r")
-    nd = keyed.agg(F.count(F.lit(1)).alias("n_docs"))
-    bucketed = (
-        ranked.crossJoin(F.broadcast(nd))
-        .select(
-            "doc_id",
-            F.when(F.col("__r") * 3 <= F.col("n_docs"), "head")
-            .when(F.col("__r") * 3 <= F.col("n_docs") * 2, "middle")
-            .otherwise("tail").alias("bucket"))
-        .where(F.col("bucket") != "tail")
-    )
-    wfp = W.partitionBy("__fp")
-    canon = (
-        docs.join(bucketed, "doc_id")
-        .withColumn("__fp", fingerprint(F.col("text")))
-        .withColumn("__canon",
-                    F.min("doc_id").over(wfp) == F.col("doc_id"))
-        .where(F.col("__canon"))
-    )
-    pool = canon.select(
-        "doc_id", "source", "bucket",
-        F.when(F.col("bucket") == "head", 3).otherwise(1)
-        .cast("long").alias("weight"))
-    return weighted_stratified_sample(
-        pool, k=20, weight_col="weight", salt="manifest-v1")
-
-
-# ---------------------------------------------------------------------------
 # Crawl-frontier capstone: the web tier composed — RFC 9309 verdicts
 # gate the URL corpus, host PageRank prices each host, and the
 # frontier table carries per-host budgets (allowed/blocked counts,
 # next allowed path). Every component is independently oracled
 # (robots_url_filter, host_pagerank); this verifies the COMPOSITION.
 # ---------------------------------------------------------------------------
+
 
 _FRONTIER_ORACLE = (
     "WITH " + _ROBOTS_SQL + _ROBOTS_VERDICT_CTES + """
@@ -1368,6 +1242,7 @@ def crawl_frontier_priority_q(spark: SparkSession,
 # (robots_url_filter, gopher_quality_gate/text_metrics, dedup_exact);
 # this verifies the COMPOSITION.
 # ---------------------------------------------------------------------------
+
 
 _PROV_GATE_ORACLE = "WITH " + _ROBOTS_SQL + """
     , urls AS (
@@ -1526,6 +1401,7 @@ def provenance_curation_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 # FOLD (F.aggregate <-> DuckDB list_reduce) — no UDF, no bounded-pass
 # replace chains.
 # ---------------------------------------------------------------------------
+
 
 _URL_CANON_ORACLE = r"""
     WITH raw AS (
@@ -1699,6 +1575,7 @@ def incremental_pagerank_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Composes url_canonicalize with the exact-dedup keep rule.
 # ---------------------------------------------------------------------------
 
+
 _CANON_DEDUP_ORACLE = r"""
     WITH raw AS (
       SELECT o_orderkey AS doc_id,
@@ -1809,6 +1686,7 @@ _HTML_CLEAN_SQL = (
     " '&#39;', ''''), '&amp;', '&'),"
     " '\\s+', ' ', 'g'))"
 )
+
 
 _HTML_ORACLE = f"""
     WITH raw AS (
@@ -2087,77 +1965,12 @@ def warc_crawl_corpus_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Charset detection + UTF-8 transcoding (functions/charset.py): BOM /
-# meta-prescan / header / UTF-8-validation / windows-1252-fallback
-# detection with a mojibake footprint flag — the decode stage between
-# WARC payload bytes and HTML extraction. Fixtures run REAL encoders
-# per class (the GIF policy); the oracle recomputes every feature
-# closed-form from doc_id/text without touching bytes.
-# ---------------------------------------------------------------------------
-
-_CHARSET_ORACLE = """
-    WITH b AS (
-      SELECT doc_id,
-             text || CASE WHEN doc_id % 7 = 1 AND doc_id % 6 != 3
-                          THEN ' cafÃ©' ELSE ' café' END AS base
-      FROM documents
-    ), e AS (
-      SELECT doc_id, base,
-             CASE WHEN doc_id % 6 = 4
-                  THEN '<meta charset="windows-1252">' || base
-                  ELSE base END AS expected
-      FROM b
-    )
-    SELECT doc_id,
-           CASE doc_id % 6 WHEN 0 THEN 'utf-8' WHEN 1 THEN 'utf-16le'
-                WHEN 2 THEN 'utf-16be' WHEN 3 THEN 'windows-1252'
-                WHEN 4 THEN 'windows-1252' ELSE 'utf-8'
-           END AS detected_encoding,
-           CASE doc_id % 6 WHEN 0 THEN 'bom' WHEN 1 THEN 'bom'
-                WHEN 2 THEN 'bom' WHEN 3 THEN 'fallback'
-                WHEN 4 THEN 'meta' ELSE 'utf8-valid'
-           END AS detection_source,
-           doc_id % 6 IN (0, 1, 2) AS had_bom,
-           (doc_id % 7 = 1 AND doc_id % 6 != 3) AS mojibake,
-           CAST(0 AS INT) AS replacement_count,
-           CAST(CASE doc_id % 6
-                WHEN 0 THEN 3 + octet_length(encode(base))
-                WHEN 1 THEN 2 + 2 * length(base)
-                WHEN 2 THEN 2 + 2 * length(base)
-                WHEN 3 THEN length(base)
-                WHEN 4 THEN 29 + length(base)
-                ELSE octet_length(encode(base)) END AS BIGINT) AS n_bytes,
-           CAST(length(expected) AS BIGINT) AS n_chars,
-           md5(expected) AS text_md5
-    FROM e
-"""
-
-
-@register("charset_transcode_features", oracle=_CHARSET_ORACLE)
-def charset_transcode_features_q(spark: SparkSession,
-                                 sf_dir: str) -> DataFrame:
-    """Per-encoding golden round trip: documents encoded through real
-    codecs (UTF-8/16 BOMs, bare windows-1252, meta-declared
-    windows-1252, plain UTF-8, pre-mojibaked suffixes) -> sniff +
-    transcode kernel -> detection, byte/char counts, text hash."""
-    from ..functions.charset import (synthesize_encoded_docs,
-                                    transcode_to_utf8)
-
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    out = transcode_to_utf8(synthesize_encoded_docs(docs))
-    return out.select(
-        "doc_id", "detected_encoding", "detection_source", "had_bom",
-        "mojibake", "replacement_count", "n_bytes",
-        F.length("text").cast("long").alias("n_chars"),
-        F.md5(F.col("text").cast("binary")).alias("text_md5"))
-
-
-# ---------------------------------------------------------------------------
 # Sitemap ingestion (operators/web.parse_sitemaps): sitemaps.org
 # urlset XML -> per-URL rows with lastmod/changefreq/priority, ranked
 # into a per-host fetch order (priority desc, loc asc). Map-only +
 # one explode; the crawl-frontier feeder next to robots.txt.
 # ---------------------------------------------------------------------------
+
 
 _SITEMAP_ORACLE = """
     WITH hosts AS (
@@ -2261,329 +2074,13 @@ def sitemap_url_ingest_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Round-8 web capstone: sitemap -> canonicalize -> alias-dedup ->
-# robots verdict -> ranked crawl candidates. Sitemap XML parsed by
-# parse_sitemaps, messy locs (case, default ports, dot-segments,
-# unsorted queries, fragments, one deliberate alias entry per host)
-# collapsed by url_canonicalize, robots filtering against the shared
-# 50-host RFC 9309 fixture, fetch order by (priority desc, url).
-# ---------------------------------------------------------------------------
-
-_SCC_ORACLE = "WITH " + _ROBOTS_SQL + """
-    , sm AS (
-      SELECT DISTINCT s_suppkey % 50 AS hk FROM supplier
-    ), entries AS (
-      SELECT hk, k, hk + k AS i
-      FROM sm CROSS JOIN (SELECT unnest(generate_series(0, 10)) AS k) t
-    ), locs AS (
-      SELECT hk,
-        CASE
-          WHEN k = 10 THEN
-            'HTTPS://H' || CAST(hk AS VARCHAR)
-            || '.Example.COM:443/public/./a'
-            || CAST((hk + 3) % 40 AS VARCHAR) || '?a=2&b=1'
-          WHEN k % 5 = 0 THEN
-            'HTTPS://H' || CAST(hk AS VARCHAR)
-            || '.Example.COM/private/doc'
-            || CAST(i % 20 AS VARCHAR) || '/x/../'
-          WHEN k % 5 = 1 THEN
-            'https://h' || CAST(hk AS VARCHAR)
-            || '.example.com:443/search/q' || CAST(i % 9 AS VARCHAR)
-          WHEN k % 5 = 2 THEN
-            'https://h' || CAST(hk AS VARCHAR)
-            || '.Example.com/tmp' || CAST(i % 10 AS VARCHAR) || '/./x'
-          WHEN k % 5 = 3 THEN
-            'https://h' || CAST(hk AS VARCHAR)
-            || '.example.com/public/a' || CAST(i % 40 AS VARCHAR)
-            || '?b=1&a=2#f'
-          ELSE
-            'https://h' || CAST(hk AS VARCHAR)
-            || '.example.com/blog/./post' || CAST(i % 30 AS VARCHAR)
-        END AS url,
-        CAST('0.' || CAST(i % 9 + 1 AS VARCHAR) AS DOUBLE) AS priority
-      FROM entries
-    ), cparsed AS (
-      SELECT hk, priority,
-             lower(regexp_extract(url, '^([A-Za-z][A-Za-z0-9+.-]*)://', 1))
-               AS scheme,
-             lower(regexp_extract(
-               regexp_replace(
-                 regexp_extract(url, '^[^:/?#]+://([^/?#]*)', 1),
-                 '^[^@]*@', ''), '^([^:]*)', 1)) AS chost,
-             regexp_extract(
-               regexp_replace(
-                 regexp_extract(url, '^[^:/?#]+://([^/?#]*)', 1),
-                 '^[^@]*@', ''), ':([0-9]+)$', 1) AS port,
-             regexp_extract(url, '^[^:/?#]+://[^/?#]*([^?#]*)', 1)
-               AS rawpath,
-             regexp_extract(url, '\\?([^#]*)', 1) AS query
-      FROM locs
-    ), cnorm AS (
-      SELECT hk, priority, scheme, chost,
-             CASE WHEN port = '' OR (scheme = 'http' AND port = '80')
-                       OR (scheme = 'https' AND port = '443')
-                  THEN '' ELSE ':' || port END AS port_keep,
-             list_reduce(
-               string_split('/' || regexp_replace(rawpath, '^/', ''), '/'),
-               (acc, x) -> CASE WHEN x = '' OR x = '.' THEN acc
-                                WHEN x = '..'
-                                  THEN regexp_replace(acc, '/[^/]*$', '')
-                                ELSE acc || '/' || x END) AS folded,
-             (regexp_matches(rawpath, '(/|/\\.|/\\.\\.)$')
-              OR rawpath = '') AS keep_slash,
-             array_to_string(list_sort(string_split(query, '&')), '&')
-               AS qsorted
-      FROM cparsed
-    ), canon AS (
-      SELECT hk, priority,
-             CASE WHEN folded = '' THEN '/'
-                  ELSE folded
-                       || CASE WHEN keep_slash THEN '/' ELSE '' END
-             END AS cpath,
-             scheme || '://' || chost || port_keep
-             || CASE WHEN folded = '' THEN '/'
-                     ELSE folded
-                          || CASE WHEN keep_slash THEN '/' ELSE '' END
-                END
-             || CASE WHEN qsorted = '' THEN '' ELSE '?' || qsorted END
-               AS canonical_url
-      FROM cnorm
-    ), dedup AS (
-      SELECT 'h' || CAST(hk AS VARCHAR) AS host, canonical_url,
-             min(cpath) AS cpath,
-             CAST(count(*) AS BIGINT) AS n_aliases,
-             max(priority) AS priority
-      FROM canon GROUP BY 1, 2
-    ), exact AS (
-      SELECT * FROM rules WHERE agent = 'aquabot'
-    ), eff AS (
-      SELECT * FROM exact
-      UNION ALL
-      SELECT * FROM rules r WHERE r.agent = '*'
-        AND NOT EXISTS (SELECT 1 FROM exact e WHERE e.host = r.host)
-    ), pats AS (
-      SELECT host, rule, path, length(path) AS plen,
-             CASE WHEN ends_with(esc, '$')
-                  THEN replace(left(esc, length(esc) - 1), '*', '%')
-                  ELSE replace(esc, '*', '%') || '%' END AS likepat
-      FROM (SELECT host, rule, path,
-                   replace(replace(replace(path, '\\', '\\\\'),
-                                   '%', '\\%'), '_', '\\_') AS esc
-            FROM eff)
-    ), joined AS (
-      SELECT u.host, u.canonical_url, u.cpath, u.n_aliases, u.priority,
-             p.rule, p.path, p.plen,
-             p.likepat IS NOT NULL
-               AND u.cpath LIKE p.likepat ESCAPE '\\' AS hit
-      FROM dedup u LEFT JOIN pats p ON p.host = u.host
-    ), ranked AS (
-      SELECT *, row_number() OVER (
-               PARTITION BY host, canonical_url
-               ORDER BY hit DESC, plen DESC, rule = 'allow' DESC,
-                        path ASC) AS rn
-      FROM joined
-    ), verdicts AS (
-      SELECT host, canonical_url, n_aliases, priority,
-             CASE WHEN coalesce(hit, FALSE) THEN rule = 'allow'
-                  ELSE TRUE END AS allowed,
-             CASE WHEN hit THEN rule END AS matched_rule
-      FROM ranked WHERE rn = 1
-    )
-    SELECT host, canonical_url, n_aliases, priority, matched_rule,
-           CAST(row_number() OVER (
-             PARTITION BY host
-             ORDER BY priority DESC, canonical_url ASC) AS BIGINT)
-             AS fetch_rank
-    FROM verdicts WHERE allowed
-"""
-
-
-@register("sitemap_crawl_candidates", oracle=_SCC_ORACLE)
-def sitemap_crawl_candidates_q(spark: SparkSession,
-                               sf_dir: str) -> DataFrame:
-    """End-to-end crawl candidate list: per-host sitemap XML ->
-    canonical URLs (alias entries collapse) -> RFC 9309 verdicts ->
-    allowed URLs in fetch order."""
-    from ..operators.web import (
-        parse_robots,
-        parse_sitemaps,
-        robots_allowed,
-        url_canonicalize,
-    )
-
-    sup = _t(spark, sf_dir, "supplier").select(
-        (F.col("s_suppkey") % 50).alias("hk")).distinct()
-    hk = F.col("hk")
-    hks = hk.cast("string")
-
-    def loc(k):
-        i = hk + k
-        return (
-            F.when(k == 10, F.concat(
-                F.lit("HTTPS://H"), hks,
-                F.lit(".Example.COM:443/public/./a"),
-                ((hk + 3) % 40).cast("string"), F.lit("?a=2&b=1")))
-            .when(k % 5 == 0, F.concat(
-                F.lit("HTTPS://H"), hks, F.lit(".Example.COM/private/doc"),
-                (i % 20).cast("string"), F.lit("/x/../")))
-            .when(k % 5 == 1, F.concat(
-                F.lit("https://h"), hks,
-                F.lit(".example.com:443/search/q"),
-                (i % 9).cast("string")))
-            .when(k % 5 == 2, F.concat(
-                F.lit("https://h"), hks, F.lit(".Example.com/tmp"),
-                (i % 10).cast("string"), F.lit("/./x")))
-            .when(k % 5 == 3, F.concat(
-                F.lit("https://h"), hks, F.lit(".example.com/public/a"),
-                (i % 40).cast("string"), F.lit("?b=1&a=2#f")))
-            .otherwise(F.concat(
-                F.lit("https://h"), hks, F.lit(".example.com/blog/./post"),
-                (i % 30).cast("string")))
-        )
-
-    def entry(k):
-        i = hk + k
-        return F.concat(
-            F.lit("<url><loc>"), loc(k), F.lit("</loc><priority>0."),
-            (i % 9 + 1).cast("string"), F.lit("</priority></url>"))
-
-    xml = F.concat(
-        F.lit('<?xml version="1.0"?><urlset>'),
-        F.array_join(F.transform(F.sequence(F.lit(0), F.lit(10)),
-                                 lambda k: entry(k)), ""),
-        F.lit("</urlset>"),
-    )
-    sitemaps = sup.select(
-        F.concat(F.lit("h"), hks).alias("site_host"),
-        xml.alias("content"))
-    parsed = parse_sitemaps(sitemaps, host_col="site_host")
-    canon = url_canonicalize(
-        parsed.select("host", F.col("loc").alias("url"), "priority")
-        .withColumnRenamed("host", "site_host"), "url")
-    dedup = (
-        canon.groupBy("site_host", "canonical_url")
-        .agg(F.min("path").alias("cpath"),
-             F.count(F.lit(1)).cast("long").alias("n_aliases"),
-             F.max("priority").alias("priority"))
-    )
-    rules = _robots_rules(spark)
-    verdicts = robots_allowed(
-        dedup.select(F.col("site_host").alias("host"),
-                     F.col("cpath").alias("path"),
-                     "canonical_url", "n_aliases", "priority"),
-        rules, agent="aquabot")
-    w = Window.partitionBy("host").orderBy(
-        F.desc("priority"), F.asc("canonical_url"))
-    return (
-        verdicts.where(F.col("allowed"))
-        .select("host", "canonical_url", "n_aliases", "priority",
-                "matched_rule",
-                F.row_number().over(w).cast("long").alias("fetch_rank"))
-    )
-
-
-
-
-# ---------------------------------------------------------------------------
-# Multilingual crawl capstone: WARC ingest x charset transcode x text
-# features in ONE plan — archive files whose HTTP payloads arrive in
-# six different encodings (BOMs, bare and meta-declared windows-1252,
-# an HTTP-header-declared latin-1, plain UTF-8, pre-mojibaked bytes),
-# detection driven by the transport header the WARC reader preserves.
-# The oracle recomputes everything closed-form from doc_id/text.
-# ---------------------------------------------------------------------------
-
-_WARC_ML_ORACLE = """
-    WITH b AS (
-      SELECT doc_id,
-             text || CASE WHEN doc_id % 7 = 1 AND doc_id % 6 != 3
-                          THEN ' cafÃ©' ELSE ' café' END AS base
-      FROM documents
-    ), e AS (
-      SELECT doc_id,
-             CASE WHEN doc_id % 6 = 4
-                  THEN '<meta charset="windows-1252">' || base
-                  ELSE base END AS expected
-      FROM b
-    )
-    SELECT doc_id,
-           CASE doc_id % 6 WHEN 0 THEN 'utf-8' WHEN 1 THEN 'utf-16le'
-                WHEN 2 THEN 'utf-16be' WHEN 3 THEN 'windows-1252'
-                WHEN 4 THEN 'windows-1252' ELSE 'utf-8'
-           END AS detected_encoding,
-           CASE doc_id % 6 WHEN 0 THEN 'bom' WHEN 1 THEN 'bom'
-                WHEN 2 THEN 'bom' WHEN 3 THEN 'header'
-                WHEN 4 THEN 'meta' ELSE 'utf8-valid'
-           END AS detection_source,
-           (doc_id % 7 = 1 AND doc_id % 6 != 3) AS mojibake,
-           CAST(length(expected) AS BIGINT) AS n_chars,
-           CAST(len(regexp_extract_all(expected, '\\S+')) AS INT)
-             AS n_tokens,
-           md5(expected) AS text_md5
-    FROM e
-"""
-
-
-@register("warc_multilingual_corpus", oracle=_WARC_ML_ORACLE)
-def warc_multilingual_corpus_q(spark: SparkSession,
-                               sf_dir: str) -> DataFrame:
-    """Archive-to-corpus with real legacy encodings: synthesized
-    .warc.gz (per-class payload bytes; class 3 declares latin-1 in
-    the HTTP Content-Type, so detection takes the HEADER path that
-    charset_transcode_features cannot reach) -> record parse ->
-    charset sniff keyed by the transport header -> UTF-8 text +
-    token/char counts."""
-    from ..functions.charset import (synthesize_encoded_docs,
-                                     transcode_to_utf8)
-    from ..sources.warc import synthesize_warc_files, warc_records
-
-    docs = _t(spark, sf_dir, "documents")
-    d = F.col("doc_id")
-    enc = synthesize_encoded_docs(docs.select("doc_id", "text"))
-    date = F.date_format(
-        F.to_timestamp(F.lit("2024-01-01 00:00:00"))
-        + F.make_dt_interval(secs=(d % 86400).cast("double")),
-        "yyyy-MM-dd'T'HH:mm:ss'Z'")
-    recs_in = docs.join(enc, "doc_id").select(
-        (d % 25).alias("file_id"), d.alias("seq"),
-        F.lit("response").alias("warc_type"),
-        F.concat(F.lit("urn:example:"), d.cast("string"))
-        .alias("record_id"),
-        F.concat(F.lit("https://example.org/doc/"), d.cast("string"))
-        .alias("target_uri"),
-        date.alias("warc_date"),
-        F.lit(200).alias("http_status"),
-        F.when(d % 6 == 3, F.lit("text/html; charset=ISO-8859-1"))
-        .otherwise(F.lit("text/html")).alias("http_content_type"),
-        F.col("payload"))
-    files = synthesize_warc_files(recs_in, order_col="seq")
-    pages = warc_records(files).where(
-        F.col("ok") & (F.col("warc_type") == "response"))
-    with_hdr = pages.select(
-        F.regexp_extract("record_id", r"^urn:example:(\d+)$", 1)
-        .cast("long").alias("doc_id"),
-        "payload",
-        F.nullif(
-            F.regexp_extract("http_content_type",
-                             r"charset=([A-Za-z0-9_.:-]+)", 1),
-            F.lit("")).alias("charset"))
-    out = transcode_to_utf8(with_hdr, charset_col="charset")
-    return out.select(
-        "doc_id", "detected_encoding", "detection_source", "mojibake",
-        F.length("text").cast("long").alias("n_chars"),
-        F.size(F.regexp_extract_all(
-            F.col("text"), F.lit(r"\S+"), F.lit(0))).cast("int")
-        .alias("n_tokens"),
-        F.md5(F.col("text").cast("binary")).alias("text_md5"))
-
-
-# ---------------------------------------------------------------------------
 # Robots-gated crawl-to-corpus capstone: the FULL archive pipeline in
 # one plan — WARC ingest -> HTML main-content extraction -> RFC 3986
 # canonicalization -> RFC 9309 robots verdicts over the shared 50-host
 # robots fixture. The oracle reuses the robots chain verbatim with a
 # documents-keyed urls CTE plus the HTML parts chain.
 # ---------------------------------------------------------------------------
+
 
 _WARC_GATED_URLS = """
     , urls AS (
@@ -2600,6 +2097,7 @@ _WARC_GATED_URLS = """
              doc_id
       FROM documents
     )"""
+
 
 _WARC_GATED_ORACLE = ("WITH " + _ROBOTS_SQL + _WARC_GATED_URLS
                       + _ROBOTS_CHAIN_CTES + f"""

@@ -17,8 +17,12 @@ Scale notes:
 - corrupt/truncated members quarantine as ok=false rows (never throw
   — one bad megabyte must not kill a 1000-executor stage);
 - downstream composition: filter warc_type='response' ->
-  functions.html.with_main_text -> operators.web.url_canonicalize /
-  robots_allowed — the crawl-to-corpus capstone.
+  functions.html.with_main_text -> operators.web.url_canonicalize —
+  the crawl-to-corpus capstone.
+
+Not part of the AquaCache surface: reached only from
+``queries/web.py`` — perfbench's ``warc_crawl_corpus`` probe and the
+web-tier queries a later change still has to cut.
 """
 
 from __future__ import annotations
@@ -95,31 +99,6 @@ def read_warc(spark: SparkSession, path: str) -> DataFrame:
     return warc_records(files)
 
 
-def read_warc_stream(spark: SparkSession, landing_dir: str) -> DataFrame:
-    """Streaming .warc.gz ingest: a binaryFile FILE-SOURCE stream over
-    a crawl landing zone (each newly dropped archive processed exactly
-    once, checkpoint-tracked) through the same Arrow parse kernel as
-    the batch path — mapInPandas is stateless, so the record stream
-    composes directly with dedup_stream / streaming_near_dup
-    downstream. One file per trigger unit of work; bytes never
-    shuffle."""
-    schema = T.StructType([
-        T.StructField("path", T.StringType()),
-        T.StructField("modificationTime", T.TimestampType()),
-        T.StructField("length", T.LongType()),
-        T.StructField("content", T.BinaryType()),
-    ])
-    files = (
-        spark.readStream.format("binaryFile")
-        .schema(schema)
-        .option("pathGlobFilter", "*.warc.gz")
-        .option("maxFilesPerTrigger", 16)
-        .load(landing_dir)
-        .select(F.xxhash64("path").alias("file_id"), "content")
-    )
-    return warc_records(files)
-
-
 def synthesize_warc_files(
     records: DataFrame,
     file_col: str = "file_id",
@@ -131,8 +110,7 @@ def synthesize_warc_files(
 
     ``records`` columns: file_id, doc_id, warc_type, record_id,
     target_uri, warc_date, http_status, http_content_type,
-    payload (string, UTF-8-encoded; or binary, passed through as-is —
-    the charset-exercise fixtures need non-UTF-8 payload bytes).
+    payload (string, UTF-8-encoded).
     Non-response types encode their payload as the raw block (no HTTP
     head)."""
     from ..functions.warc import (build_warc, encode_warc_record,
@@ -147,9 +125,7 @@ def synthesize_warc_files(
         pdf = pdf.sort_values(order_col, kind="mergesort")
         recs = []
         for r in pdf.itertuples(index=False):
-            payload = (bytes(r.payload)
-                       if isinstance(r.payload, (bytes, bytearray))
-                       else str(r.payload).encode("utf-8"))
+            payload = str(r.payload).encode("utf-8")
             hdrs = {
                 "WARC-Type": str(r.warc_type),
                 "WARC-Record-ID": str(r.record_id),

@@ -89,53 +89,6 @@ def streaming_increments(
     )
 
 
-PACK_STATE_SCHEMA = "bin_id bigint, fill bigint"
-
-
-def streaming_pack(
-    stream: DataFrame,
-    budget: int,
-    shard_col: str = "shard",
-    id_col: str = "doc_id",
-    token_col: str = "n_tokens",
-) -> DataFrame:
-    """Next-fit sequence packing over a document stream: the open bin
-    (id, fill) persists per shard in the state store, so continuously
-    arriving documents pack into exactly the bins a batch run over the
-    full corpus would produce (operators/packing.scan_pack is the
-    shared recurrence).  Within a micro-batch documents sort by id;
-    cross-batch order is arrival order — the same contract as
-    streaming_increments."""
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    from ..operators.packing import scan_pack
-
-    out_schema = T.StructType(
-        list(stream.schema.fields)
-        + [T.StructField("bin_id", T.LongType()),
-           T.StructField("bin_offset", T.LongType())]
-    )
-
-    def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        st = tuple(state.get) if state.exists else (0, 0)
-        chunks = [p for p in pdfs if len(p)]
-        if chunks:
-            pdf = pd.concat(chunks, ignore_index=True)
-            pdf = pdf.sort_values(id_col).reset_index(drop=True)
-            bins, offsets, st = scan_pack(
-                pdf[token_col].astype("int64"), budget, st
-            )
-            pdf["bin_id"] = pd.Series(bins, dtype="int64")
-            pdf["bin_offset"] = pd.Series(offsets, dtype="int64")
-            yield pdf
-        state.update(tuple(int(x) for x in st))
-
-    return stream.groupBy(shard_col).applyInPandasWithState(
-        fn, out_schema, PACK_STATE_SCHEMA, "append",
-        GroupStateTimeout.NoTimeout,
-    )
-
-
 def streaming_hll_distinct(
     stream: DataFrame,
     key_col: str,
@@ -325,165 +278,6 @@ def streaming_funnel(
 
     return stream.groupBy(user_col).applyInPandasWithState(
         fn, out_schema, state_schema, "update",
-        GroupStateTimeout.NoTimeout)
-
-
-NEAR_DUP_STATE_SCHEMA = "members array<bigint>, capped boolean"
-
-
-def streaming_near_dup(
-    stream: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 8,
-    bands: int = 4,
-    shingle_k: int = 3,
-    max_bucket: int = 64,
-) -> DataFrame:
-    """Streaming MinHash/LSH near-dup front-end — the streaming mirror
-    of operators/dedup.incremental_lsh_pairs (dedup_stream covers only
-    exact hashes).
-
-    Plan shape: map-only MinHash (minhash_signatures_maponly — no
-    aggregation may precede a stateful stage) -> band-key explode ->
-    ONE applyInPandasWithState keyed on (band, key). State per band
-    bucket is a CAPPED member set: at most ``max_bucket`` doc ids;
-    when a bucket crosses the cap it collapses to its min-id anchor
-    (capped=true) and every later arrival pairs with the anchor only —
-    the stateful twin of the batch star cap, so a boilerplate bucket
-    holds O(1) state and emits O(1) edges per arrival forever.
-
-    Emission contract (append mode): each micro-batch emits exactly
-    the pairs with >= 1 endpoint new to the bucket, (id_a < id_b),
-    possibly repeated across bands — DISTINCT of the run's output
-    equals the batch ``lsh_candidate_pairs`` of everything ingested,
-    provided no bucket crosses the cap mid-run (the incremental
-    operator's identical parity contract; connectivity survives in
-    all cases because a new-minimum arrival still edges to the stored
-    anchor)."""
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    from ..operators.dedup import band_key_rows, minhash_signatures_maponly
-
-    sigs = minhash_signatures_maponly(
-        stream, id_col, text_col, num_hashes, shingle_k)
-    keys = band_key_rows(sigs, id_col, num_hashes, bands)
-
-    out_schema = T.StructType([
-        T.StructField("id_a", T.LongType()),
-        T.StructField("id_b", T.LongType()),
-    ])
-
-    def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        if state.exists:
-            members, capped = list(state.get[0]), bool(state.get[1])
-        else:
-            members, capped = [], False
-        seen = set(members)
-        new = []
-        for pdf in pdfs:
-            for d in pdf[id_col]:
-                d = int(d)
-                if d not in seen:
-                    seen.add(d)
-                    new.append(d)
-        if not new:
-            state.update((members, capped))
-            return
-        new.sort()
-        pairs: list[tuple[int, int]] = []
-        if not capped and len(members) + len(new) <= max_bucket:
-            cur = list(members)
-            for d in new:
-                pairs.extend((min(a, d), max(a, d)) for a in cur)
-                cur.append(d)
-            state.update((sorted(cur), False))
-        else:
-            # cap crossed (now or earlier): anchor-star emission with
-            # O(1) state. A new global minimum re-anchors the bucket
-            # but still edges to the old anchor, keeping the
-            # component connected.
-            anchor = min(members) if members else new[0]
-            if not capped:
-                # collapse moment: the one-shot star over everything
-                # currently known (old members + this batch)
-                allm = sorted(set(members) | set(new))
-                anchor = allm[0]
-                pairs.extend((anchor, x) for x in allm if x != anchor)
-            else:
-                for d in new:
-                    if d != anchor:
-                        pairs.append((min(anchor, d), max(anchor, d)))
-                anchor = min(anchor, new[0])
-            state.update(([anchor], True))
-        if pairs:
-            yield pd.DataFrame(
-                {"id_a": [a for a, _ in pairs],
-                 "id_b": [b for _, b in pairs]})
-
-    return keys.groupBy("band", "key").applyInPandasWithState(
-        fn, out_schema, NEAR_DUP_STATE_SCHEMA, "append",
-        GroupStateTimeout.NoTimeout)
-
-
-PARAGRAPH_STATE_SCHEMA = "seen boolean"
-
-
-def streaming_paragraph_dedup(
-    stream: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    delim: str = r"\n{2,}",
-) -> DataFrame:
-    """Streaming keep-first paragraph dedup — the streaming mirror of
-    operators/dedup.paragraph_dedup (and the stateful twin of
-    incremental_paragraph_dedup's persisted-store probe).
-
-    Plan shape: map-only paragraph explode + fingerprint (no
-    aggregation may precede a stateful stage) -> ONE
-    applyInPandasWithState keyed on the paragraph fingerprint. State
-    per fingerprint is a single boolean — O(1) forever, even for a
-    boilerplate paragraph arriving millions of times — so state size
-    is bounded by DISTINCT paragraphs, never arrivals.
-
-    Emission contract (append mode): each micro-batch emits the
-    fingerprint's FIRST-ever arrival (min (id, pos) within the batch
-    that first carries it) as (id, pos, para); later arrivals emit
-    nothing. Fed in ascending id order, the run's accumulated output
-    equals the kept-paragraph set of the batch operator over
-    everything ingested (the parity the streaming test pins);
-    downstream reassembly (group by id, order by pos) is a plain
-    batch concat, same as the batch operator's.
-    """
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    from ..operators.dedup import _paragraph_rows
-
-    paras = _paragraph_rows(stream, id_col, text_col, delim)
-
-    out_schema = T.StructType([
-        T.StructField(id_col, T.LongType()),
-        T.StructField("pos", T.IntegerType()),
-        T.StructField("para", T.StringType()),
-    ])
-
-    def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        if state.exists:
-            return
-        first = None
-        for pdf in pdfs:
-            for row in pdf.itertuples(index=False):
-                cand = (int(getattr(row, id_col)), int(row.pos), row.para)
-                if first is None or cand[:2] < first[:2]:
-                    first = cand
-        if first is None:
-            return
-        state.update((True,))
-        yield pd.DataFrame({id_col: [first[0]], "pos": [first[1]],
-                            "para": [first[2]]})
-
-    return paras.groupBy("fp").applyInPandasWithState(
-        fn, out_schema, PARAGRAPH_STATE_SCHEMA, "append",
         GroupStateTimeout.NoTimeout)
 
 

@@ -85,47 +85,6 @@ def start_incremental_sink(
     )
 
 
-DOCUMENT_SCHEMA = T.StructType([
-    T.StructField("doc_id", T.LongType()),
-    T.StructField("text", T.StringType()),
-    T.StructField("ingest_time", T.TimestampType()),
-])
-
-
-def read_document_stream(
-    spark: SparkSession, landing_dir: str, fmt: str = "parquet"
-) -> DataFrame:
-    """File-source stream of document drops (the training-data ingest
-    front door)."""
-    return (
-        spark.readStream.format(fmt)
-        .schema(DOCUMENT_SCHEMA)
-        .option("maxFilesPerTrigger", 16)
-        .load(landing_dir)
-    )
-
-
-def dedup_stream(
-    stream: DataFrame,
-    text_col: str = "text",
-    event_time: str = "ingest_time",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Streaming exact dedup: state keyed by the content fingerprint,
-    first arrival wins, watermark bounds state (duplicates older than
-    the watermark age out — the streaming counterpart of
-    operators/dedup.exact_duplicates for a continuously-ingested
-    corpus). State is distributed on the fingerprint key, so a 100 TB
-    backfill replays with the same bounded-memory plan."""
-    from ..functions.text import fingerprint
-
-    return (
-        stream.withColumn("fingerprint", fingerprint(F.col(text_col)))
-        .withWatermark(event_time, watermark)
-        .dropDuplicates(["fingerprint"])
-    )
-
-
 def sessionize_stream(
     stream: DataFrame,
     gap: str = "30 minutes",

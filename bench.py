@@ -247,10 +247,6 @@ def main() -> None:
         "watermark_ingest_trim", "winnow_fingerprints",
         "wsc_connector_daily"
     }
-    subset = round(sum(v for k, v in timings.items() if k in r01), 3)
-    subset02 = round(sum(v for k, v in timings.items() if k in r02), 3)
-    subset03 = round(sum(v for k, v in timings.items() if k in r03), 3)
-    subset04 = round(sum(v for k, v in timings.items() if k in r04), 3)
     # the 158-query round-5 suite, frozen for round-over-round
     # comparability
     r05 = {
@@ -444,8 +440,6 @@ def main() -> None:
         "winnow_fingerprints", "wsc_connector_daily", "zorder_layout_key",
     }
 
-    subset05 = round(sum(v for k, v in timings.items() if k in r05), 3)
-    subset09 = round(sum(v for k, v in timings.items() if k in r09), 3)
     # the round-10 additions (patch_36/37 transmission validators,
     # regional flood frequency, long-gram ExactSubstr doubling):
     # r10 subset = r09 + these, frozen for round-over-round comparison
@@ -465,7 +459,17 @@ def main() -> None:
         "embedding_cosine_topk_blas",
         "semdedup_blas_prune"
     }
-    subset10 = round(sum(v for k, v in timings.items() if k in r10), 3)
+    # a frozen subset's sum silently skips names that are no longer
+    # registered, so each rNN_subset_seconds carries the count of that
+    # subset's queries that actually ran: a subset that shrank through
+    # deletion must not read as a speed-up
+    subsets = {"r01": r01, "r02": r02, "r03": r03, "r04": r04,
+               "r05": r05, "r09": r09, "r10": r10}
+    subset_fields = {}
+    for tag, names in subsets.items():
+        ran = [v for k, v in timings.items() if k in names]
+        subset_fields[f"{tag}_subset_seconds"] = round(sum(ran), 3)
+        subset_fields[f"{tag}_subset_queries"] = len(ran)
 
     # The driver keeps only a 4KB stdout TAIL: a single JSON line carrying
     # all 200+ per-query timings gets its leading "metric"/"value" fields
@@ -478,13 +482,7 @@ def main() -> None:
         "unit": "sec",
         "queries": timings,
         "n_queries": len(timings),
-        "r01_subset_seconds": subset,
-        "r02_subset_seconds": subset02,
-        "r03_subset_seconds": subset03,
-        "r04_subset_seconds": subset04,
-        "r05_subset_seconds": subset05,
-        "r09_subset_seconds": subset09,
-        "r10_subset_seconds": subset10,
+        **subset_fields,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
     }
     # r13 (VERDICT r12 #4/#6): the sidecar used to be one fixed path,
@@ -509,13 +507,7 @@ def main() -> None:
         "unit": "sec",
         "queries": slowest,          # top-20 slowest; full map in sidecar
         "n_queries": len(timings),
-        "r01_subset_seconds": subset,
-        "r02_subset_seconds": subset02,
-        "r03_subset_seconds": subset03,
-        "r04_subset_seconds": subset04,
-        "r05_subset_seconds": subset05,
-        "r09_subset_seconds": subset09,
-        "r10_subset_seconds": subset10,
+        **subset_fields,
         "queries_sidecar": sidecar,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
     }))

@@ -16,7 +16,6 @@ import sys
 import tempfile
 import time
 
-from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 sys.path.insert(0, ".")
@@ -388,97 +387,6 @@ def main() -> None:
     assert timings["jpeg_progressive_decode_512"] < 0.75, \
         timings["jpeg_progressive_decode_512"]
 
-    # ---- document tier: dedup/fingerprint machinery at 20x bench scale
-    n_docs = int(sys.argv[3]) if len(sys.argv) > 3 else 100_000
-    seed = F.col("id") % (n_docs * 9 // 10)  # ~10% exact duplicates
-    text = F.concat_ws(
-        " ",
-        F.transform(
-            F.sequence(F.lit(1), F.lit(40)),
-            lambda j: F.substring(
-                F.md5(F.concat(seed.cast("string"), F.lit("-"),
-                               j.cast("string"))), 1, 6
-            ),
-        ),
-    )
-    (
-        spark.range(0, n_docs)
-        .select(F.col("id").alias("doc_id"), text.alias("text"))
-        .write.mode("overwrite").parquet(f"{base}/docs.parquet")
-    )
-    docs = spark.read.parquet(f"{base}/docs.parquet")
-
-    from aquacache_spark.operators.dedup import (
-        duplicate_clusters,
-        lsh_candidate_pairs,
-        minhash_signatures,
-        stratified_split,
-        winnow_fingerprints,
-    )
-
-    t("winnow_fingerprints", winnow_fingerprints(docs, k=8, window=4))
-    sig = minhash_signatures(docs, num_hashes=8, shingle_k=3)
-    pairs = lsh_candidate_pairs(sig, num_hashes=8, bands=4)
-    t("minhash_lsh_pairs", pairs)
-    t("dedup_clusters", duplicate_clusters(pairs, docs.select("doc_id")))
-    t("stratified_split", stratified_split(
-        docs.withColumn("source", (F.col("doc_id") % 5).cast("string")),
-        strata_col="source"))
-
-    # adversarial hot BUCKET: 50% of docs carry one identical
-    # boilerplate text, so every band key of that signature collects
-    # n_docs/2 members. Uncapped LSH would emit ~(n_docs/2)^2/2 pairs
-    # per band (10^9 at the default 100k docs — the judge-flagged
-    # quadratic pair mass AQE cannot fix); the max_bucket star cap
-    # must keep pair mass linear and duplicate_clusters must still
-    # resolve the bucket into ONE component via the anchor star.
-    hot_docs = docs.select(
-        "doc_id",
-        F.when(F.col("doc_id") % 2 == 0,
-               F.lit("all rights reserved terms of service apply "
-                     "contact the webmaster for details"))
-        .otherwise(F.col("text")).alias("text"),
-    )
-    hot_sig = minhash_signatures(hot_docs, num_hashes=8, shingle_k=3)
-    hot_pairs = lsh_candidate_pairs(hot_sig, num_hashes=8, bands=4)
-    t("lsh_hot_bucket_capped", hot_pairs)
-    t("dedup_clusters_hot_bucket", duplicate_clusters(
-        hot_pairs, hot_docs.select("doc_id")))
-
-    # adversarial hot (band, chunk) bucket for the pigeonhole banding
-    # every perceptual near-dup operator shares (simhash_near_pairs —
-    # pHash / audio / video fingerprints + the cross-modal capstone):
-    # 50% of assets carry ONE identical signature (the
-    # placeholder-thumbnail regime), so each band's hot chunk collects
-    # n_docs/2 members and uncapped banding would emit
-    # ~4*(n_docs/2)^2 candidate pairs (10^10 here, 10^12 at 10^6
-    # assets). The max_bucket star cap must keep pair mass linear AND
-    # still link every identical member to the min-id anchor at
-    # Hamming 0 so duplicate_clusters resolves one component.
-    from aquacache_spark.operators.dedup import simhash_near_pairs
-
-    hot_sigs = spark.range(0, n_docs).select(
-        F.col("id").alias("doc_id"),
-        F.when(F.col("id") % 2 == 0, F.lit(0x5A5A5A5A).cast("long"))
-        .otherwise(F.xxhash64(F.col("id"))
-                   .bitwiseAND(F.lit((1 << 32) - 1))).alias("simhash"),
-    )
-    t0 = time.perf_counter()
-    ph_pairs = simhash_near_pairs(
-        hot_sigs, bits=32, bands=4, max_hamming=3, max_bucket=128
-    ).persist()
-    n_pairs = ph_pairs.count()
-    hot_edges = ph_pairs.where(
-        (F.col("id_a") % 2 == 0) & (F.col("id_b") % 2 == 0)).count()
-    timings["simhash_hot_bucket_capped"] = round(
-        time.perf_counter() - t0, 2)
-    ph_pairs.unpersist()
-    # the identical half must star onto anchor doc_id=0: exactly
-    # n_docs/2 - 1 even-even edges, all Hamming 0; total pair mass
-    # stays linear in n_docs (the random half's buckets are capped too)
-    assert hot_edges == n_docs // 2 - 1, f"hot star edges: {hot_edges}"
-    assert n_pairs < 5 * n_docs, f"pair mass not linear: {n_pairs}"
-
     # Hilbert layout key at 3M points: the packed-table unrolled
     # arithmetic chain must stay a single codegen'd projection — the
     # F.aggregate/CASE form of this recurrence ran ~700x slower
@@ -496,78 +404,18 @@ def main() -> None:
     timings["hilbert_key_3m"] = round(time.perf_counter() - t0, 2)
     assert timings["hilbert_key_3m"] < 8.0, timings["hilbert_key_3m"]
 
-    # incremental dedup daily drop: a corpus-wide band-key store
-    # (ParquetMergeStore bucketed on the band key, 256 buckets) seeded
-    # with a large batch 1; a small batch 2 must probe ONLY the store
-    # buckets its own keys hash into — <10% of the store — and its
-    # pair output must still find the cross-batch near-dups exactly.
-    from aquacache_spark.operators.dedup import (band_key_rows,
-                                                 incremental_lsh_pairs,
-                                                 minhash_signatures)
-    from aquacache_spark.sources.store import ParquetMergeStore
-
-    n_corpus = 4000
-    # doc pair (2k, 2k+1) shares IDENTICAL group-specific text (md5
-    # word soup — zero shingle overlap across groups), so every dup
-    # pair collides on all bands deterministically and NO cross-group
-    # candidate can exist
-    grp = (F.col("id") / 2).cast("long").cast("string")
-    h = F.md5(grp)
-    inc_docs = spark.range(0, n_corpus).select(
-        F.col("id").alias("doc_id"),
-        F.concat_ws(
-            " ", F.substring(h, 1, 8), F.substring(h, 9, 8),
-            F.substring(h, 17, 8), F.substring(h, 25, 8),
-            F.substring(F.md5(F.concat(grp, F.lit("x"))), 1, 8),
-        ).alias("text"))
-    inc_sigs = minhash_signatures(inc_docs, num_hashes=8, shingle_k=3) \
-        .persist()
-    inc_store = ParquetMergeStore(
-        spark, f"{base}/inclsh_store",
-        key_cols=["band", "key", "doc_id"], series_col="key",
-        n_buckets=256)
-    t0 = time.perf_counter()
-    incremental_lsh_pairs(
-        inc_store, inc_sigs.where(F.col("doc_id") >= 8)).count()
-    batch2 = inc_sigs.where(F.col("doc_id") < 8)
-    p2 = incremental_lsh_pairs(inc_store, batch2).persist()
-    n_p2 = p2.count()
-    timings["incremental_lsh_daily_drop"] = round(
-        time.perf_counter() - t0, 2)
-    hit2 = {r["bucket"] for r in inc_store.bucket_of(
-        band_key_rows(batch2, "doc_id", 8, 4).select("key"))
-        .select("bucket").distinct().collect()}
-    assert len(hit2) < 26, (  # <10% of 256 store buckets
-        f"batch 2 touched {len(hit2)}/256 store buckets")
-    # IO-level prune assertion: the probe's bucket-pruned read must
-    # OPEN <10% of the store's parquet FILES, not merely target few
-    # bucket ids — inputFiles() on the direct read frames is the file
-    # manifest each scan will list (nothing here is persisted, so the
-    # lists are real; a cached subtree would return [])
-    probe_files = set(inc_store.read_buckets(sorted(hit2)).inputFiles())
-    store_files = set(inc_store.read().inputFiles())
-    assert probe_files and probe_files <= store_files
-    assert len(probe_files) < 0.1 * len(store_files), (
-        f"probe opened {len(probe_files)}/{len(store_files)} store files")
-    # exactly the 4 in-batch dup pairs — nothing cross-group
-    even_pairs = {(r["id_a"], r["id_b"]) for r in p2.collect()}
-    assert even_pairs == {(2 * k, 2 * k + 1) for k in range(4)}, \
-        f"batch-2 pair set wrong: {sorted(even_pairs)[:8]}"
-    assert n_p2 == 4, f"incremental pair mass: {n_p2}"
-    p2.unpersist()
-    inc_sigs.unpersist()
-
     # adversarial hot shot SIGNATURE (video tier): EVERY clip opens
     # with the same boilerplate intro shot (channel intro / test
-    # card), so the raw sig equi-join would emit n_docs^2 pairs (10^10
+    # card), so the raw sig equi-join would emit n_clips^2 pairs (10^10
     # here). shot_containment_pairs' df cap must drop the hot sig
     # before the join while the 3 discriminative group shots (8 clips
     # per group) still match, keeping pair mass linear: 8*7 directed
-    # pairs per group = 7*n_docs rows, each 3/4 contained. Synthetic
+    # pairs per group = 7*n_clips rows, each 3/4 contained. Synthetic
     # sig table — the pin stresses the JOIN, not the codec.
     from aquacache_spark.operators.multimodal import shot_containment_pairs
 
-    shot_sigs = spark.range(0, n_docs).select(
+    n_clips = 100_000
+    shot_sigs = spark.range(0, n_clips).select(
         F.col("id").alias("media_id"),
         F.explode(F.array(
             F.struct(F.lit(0).alias("shot_id"),
@@ -590,208 +438,8 @@ def main() -> None:
     timings["shot_sig_hot_bucket_capped"] = round(
         time.perf_counter() - t0, 2)
     sc_pairs.unpersist()
-    assert sc_rows == 7 * n_docs, f"shot pair mass: {sc_rows}"
+    assert sc_rows == 7 * n_clips, f"shot pair mass: {sc_rows}"
     assert sc_bad == 0, f"shot containment rows off: {sc_bad}"
-
-    from aquacache_spark.operators.dedup import repeated_span_coverage
-
-    t("repeated_span_coverage", repeated_span_coverage(docs, k=8))
-    # adversarial hot-gram fixture: one 24-token boilerplate prefix in
-    # 50% of docs — every one of its k-grams lands in n_docs/2
-    # documents; the counts-only reduction must keep max-task memory
-    # bounded (the former collect_list variant buffered n_docs/2
-    # entries per hot hash in one reducer)
-    boiler = " ".join(f"rights{j} reserved{j}" for j in range(12))
-    hot = docs.select(
-        "doc_id",
-        F.when(F.col("doc_id") % 2 == 0,
-               F.concat(F.lit(boiler + " "), F.col("text")))
-        .otherwise(F.col("text")).alias("text"),
-    )
-    t("repeated_span_hot_gram", repeated_span_coverage(hot, k=8))
-    # long-gram doubling path (8->16->32) over a 40-token boilerplate
-    # prefix shared by 50% of docs: round-0 marks every boiler gram
-    # hot, the doubling rounds must shrink to the prefix's 32-gram
-    # starts only (9 per boiler doc), and the doc bodies (unique md5
-    # soup) must contribute nothing — the candidate tail is
-    # geometric, not n_tokens * (target/k0)
-    from aquacache_spark.operators.dedup import (
-        long_repeated_span_coverage)
-
-    boiler40 = " ".join(f"w{j} ww{j}" for j in range(20))
-    lo, hi = n_docs // 10, n_docs * 9 // 10  # unique-body id range
-    # the per-doc "sep<id>" token seals the boiler/body boundary:
-    # without it, two docs whose FIRST body token collides (6-hex-char
-    # space, birthday pairs at 40k docs) legitimately share the
-    # 32-gram at pos 9 and the ==9-spans assert below would be wrong
-    hot40 = docs.where((F.col("doc_id") >= lo)
-                       & (F.col("doc_id") < hi)).select(
-        "doc_id",
-        F.when(F.col("doc_id") % 2 == 0,
-               F.concat(F.lit(boiler40 + " sep"),
-                        F.col("doc_id").cast("string"),
-                        F.lit(" "), F.col("text")))
-        .otherwise(F.col("text")).alias("text"),
-    )
-    t0 = time.perf_counter()
-    ls = long_repeated_span_coverage(hot40, k0=8, target=32) \
-        .where(F.col("dup_spans") > 0).persist()
-    n_ls = ls.count()
-    bad_ls = ls.where((F.col("doc_id") % 2 != 0)
-                      | (F.col("dup_tokens") != 40)
-                      | (F.col("dup_spans") != 9)).count()
-    timings["long_span_doubling_hot_prefix"] = round(
-        time.perf_counter() - t0, 2)
-    ls.unpersist()
-    assert n_ls == (hi - lo) // 2, f"long-span docs: {n_ls}"
-    assert bad_ls == 0, f"long-span coverage rows off: {bad_ls}"
-
-    # adversarial hot PARAGRAPH (the Dolma/RefinedWeb boilerplate
-    # shape): EVERY doc ends with the same newsletter paragraph and a
-    # quarter add a copyright footer — each shared paragraph is ONE
-    # row_number window group of n_docs rows (keep-first), never a
-    # pairwise join; bodies are made id-unique so counts close-form
-    from aquacache_spark.operators.dedup import paragraph_dedup
-
-    pdocs = docs.select(
-        "doc_id",
-        F.concat(F.col("doc_id").cast("string"), F.lit(" "),
-                 F.col("text"),
-                 F.lit("\n\nsubscribe to the weekly newsletter"),
-                 F.when(F.col("doc_id") % 4 == 0,
-                        F.lit("\n\ncopyright footer rights reserved"))
-                 .otherwise(F.lit(""))).alias("text"))
-    t0 = time.perf_counter()
-    pd_out = paragraph_dedup(pdocs).persist()
-    n_pd = pd_out.count()
-    n_with_footer = pd_out.where(
-        F.col("cleaned_text").contains("weekly newsletter")).count()
-    n_dropped_total = pd_out.agg(
-        F.sum("n_dropped").alias("d")).first()["d"]
-    timings["paragraph_dedup_hot_footer"] = round(
-        time.perf_counter() - t0, 2)
-    pd_out.unpersist()
-    assert n_pd == n_docs, f"paragraph dedup rows: {n_pd}"
-    assert n_with_footer == 1, (  # keep-first: doc 0 only
-        f"{n_with_footer} docs kept the shared newsletter paragraph")
-    want_drop = (n_docs - 1) + ((n_docs + 3) // 4 - 1)
-    assert n_dropped_total == want_drop, (
-        f"dropped {n_dropped_total}, want {want_drop}")
-
-    # ---- embedding tier: ANN paths at 1000x the bench corpus. The
-    # point is the *shape*: IVF+PQ serving time must track probed-list
-    # mass (nprobe/nlist of the corpus) and byte-compressed scan width,
-    # not the raw corpus size the brute-force baseline pays.
-    n_vec = int(sys.argv[4]) if len(sys.argv) > 4 else 500_000
-    dim = 64
-    emb_arr = F.transform(
-        F.sequence(F.lit(0), F.lit(dim - 1)),
-        lambda j: F.round(
-            F.sin(F.col("id") * 0.7919 + j * 1.04729) * 0.5, 6
-        ).cast("float"),
-    )
-    (
-        spark.range(0, n_vec)
-        .select(F.col("id").alias("vec_id"), emb_arr.alias("embedding"))
-        .write.mode("overwrite").parquet(f"{base}/emb.parquet")
-    )
-    emb = spark.read.parquet(f"{base}/emb.parquet")
-    qs = emb.where(F.col("vec_id") < 8)
-
-    from aquacache_spark.operators.similarity import (
-        ann_topk_ivfpq,
-        cosine_topk,
-        ivfpq_index,
-    )
-
-    t("cosine_topk_bruteforce", cosine_topk(emb, qs, k=5))
-    # the Arrow+BLAS twin over the same 500k x 8 workload: one int64
-    # matmul per Arrow batch vs 8 chained aggregate expressions per
-    # row — the speedup factor is the point of the pin (dense linear
-    # algebra is the one hot path where a Pandas kernel beats codegen)
-    from aquacache_spark.operators.similarity import cosine_topk_blas
-
-    t("cosine_topk_blas", cosine_topk_blas(emb, qs, k=5))
-    assert timings["cosine_topk_blas"] < timings["cosine_topk_bruteforce"], (
-        timings["cosine_topk_blas"], timings["cosine_topk_bruteforce"])
-    t0 = time.perf_counter()
-    cent, cb, codes = ivfpq_index(emb, nlist=16, m=4, ksub=8)
-    codes.write.mode("overwrite").parquet(f"{base}/pq.parquet")
-    timings["ivfpq_build"] = round(time.perf_counter() - t0, 2)
-    codes_stored = spark.read.parquet(f"{base}/pq.parquet")
-    t("ivfpq_serve", ann_topk_ivfpq(
-        emb, qs, k=5, nprobe=2, index=(cent, cb, codes_stored)))
-
-    # ---- adversarial degenerate CLUSTER for SemDeDup: 50% of the
-    # corpus is near-identical boilerplate embeddings, so one k-means
-    # cluster absorbs n/2 members. Uncapped, the within-cluster
-    # all-pairs join does (n/2)^2 cosines (2.5*10^9 at 100k — the
-    # judge-flagged quadratic pair mass); max_cluster=K bounds the
-    # comparison side so pair mass is (n/2)*K, LINEAR in cluster size.
-    # Connectivity check: every boilerplate member except the single
-    # top-keep-rank one must still be dropped through the capped side.
-    from aquacache_spark.operators.similarity import semantic_dedup
-
-    n_sem = min(n_vec, 100_000)
-    hot_vec = F.transform(
-        F.sequence(F.lit(0), F.lit(dim - 1)),
-        lambda j: F.when(j == 0, 1.0).otherwise(
-            (F.col("vec_id") % 97).cast("double") * 1e-7 * (j % 3)),
-    )
-    sem_corpus = emb.where(F.col("vec_id") < n_sem).select(
-        "vec_id",
-        F.when(F.col("vec_id") % 2 == 0, hot_vec)
-        .otherwise(F.transform(F.col("embedding"),
-                               lambda x: x.cast("double")))
-        .alias("embedding"),
-    )
-    t0 = time.perf_counter()
-    sem = semantic_dedup(sem_corpus, threshold=0.95, max_cluster=64)
-    kept_hot = sem.where(
-        (F.col("vec_id") % 2 == 0) & F.col("kept")).count()
-    timings["semdedup_hot_cluster_capped"] = round(
-        time.perf_counter() - t0, 2)
-    # the degenerate half collapses to (at most a handful of) keepers —
-    # the cap must not sever drop edges for near-identical members
-    assert kept_hot <= 4, f"hot-cluster keepers: {kept_hot}"
-    # the Arrow+BLAS pair stage over the identical workload (same
-    # k-means training + assignment inside the timed window): the
-    # m x cap score matmul must beat the per-pair aggregate-expression
-    # join, and the degenerate-cluster behavior must be unchanged
-    from aquacache_spark.operators.similarity import semantic_dedup_blas
-
-    t0 = time.perf_counter()
-    sem_b = semantic_dedup_blas(sem_corpus, threshold=0.95,
-                                max_cluster=64)
-    kept_hot_b = sem_b.where(
-        (F.col("vec_id") % 2 == 0) & F.col("kept")).count()
-    timings["semdedup_hot_cluster_blas"] = round(
-        time.perf_counter() - t0, 2)
-    assert kept_hot_b <= 4, f"hot-cluster keepers (blas): {kept_hot_b}"
-    assert (timings["semdedup_hot_cluster_blas"]
-            < timings["semdedup_hot_cluster_capped"]), (
-        timings["semdedup_hot_cluster_blas"],
-        timings["semdedup_hot_cluster_capped"])
-
-    # ---- training-batch assembly tier over the same document corpus
-    from aquacache_spark.operators.packing import (
-        importance_weights,
-        mixture_sample,
-        pack_sequences,
-    )
-
-    doc_tokens = docs.select(
-        "doc_id",
-        F.size(F.split(F.col("text"), " ")).cast("long").alias("n_tokens"),
-    )
-    t("sequence_packing", pack_sequences(doc_tokens, budget=2048,
-                                         n_shards=64))
-    t("mixture_sample", mixture_sample(
-        doc_tokens.withColumn(
-            "domain", (F.col("doc_id") % 3).cast("string")),
-        {"0": 0.5, "1": 0.3, "2": 0.2}))
-    t("dsir_importance", importance_weights(
-        docs, docs.where(F.col("doc_id") % 17 == 2), num_buckets=4096))
 
     # sketch tier at volume: state must stay BOUNDED (256 HLL
     # registers / 4x1024 CMS counters / 512 Bloom words) while the key
@@ -839,126 +487,6 @@ def main() -> None:
     # the pin is the BOUNDED state + linear probe cost, not FP rate
     assert hits == 1_000_000
 
-    # adversarial robots.txt: one host serves a rule bomb (15k
-    # Disallow lines over 26 path prefixes; the separate parse-limit
-    # probe below uses 40k) and receives 20% of the
-    # URL corpus. Two guards must hold: the RFC 9309 parse limit
-    # bounds the host's rule mass, and the first-char rule bucketing
-    # in robots_allowed means each URL probes only the same-first-char
-    # slice (~1/26th) plus catch-alls — NOT the full capped list. A
-    # single-prefix bomb ('/bombN' x 25k) remains cap_rules-per-URL by
-    # construction (one bucket) — that residual is the RFC's own
-    # bound, documented in SCALE.md.
-    from aquacache_spark.operators.web import parse_robots, robots_allowed
-
-    letters = "abcdefghijklmnopqrstuvwxyz"
-    bomb = "User-agent: *\n" + "".join(
-        f"Disallow: /{letters[i % 26]}sec{i}\n" for i in range(15_000))
-    hosts = spark.range(0, 200).select(
-        F.concat(F.lit("h"), F.col("id").cast("string")).alias("host"),
-        F.when(F.col("id") == 0, F.lit(bomb))
-        .otherwise(F.lit("User-agent: *\nDisallow: /private\n"))
-        .alias("content"),
-    )
-    urls = spark.range(0, n_docs).select(
-        F.concat(F.lit("h"),
-                 F.when(F.col("id") % 10 == 0, F.lit(0))
-                 .otherwise(F.col("id") % 200).cast("string"))
-        .alias("host"),  # 10% of URLs hit the bomb host
-        F.concat(F.lit("/"),
-                 F.substring(F.lit(letters),
-                             (F.col("id") % 26 + 1).cast("int"), 1),
-                 F.lit("sec"), (F.col("id") % 30_000).cast("string"),
-                 F.lit("/x")).alias("path"),
-        F.col("id").alias("doc_id"),
-    )
-    t0 = time.perf_counter()
-    rules = parse_robots(hosts)
-    verdicts = robots_allowed(urls, rules, agent="aquabot")
-    n_denied = verdicts.where(~F.col("allowed")).count()
-    timings["robots_bomb_capped"] = round(time.perf_counter() - t0, 2)
-    assert n_denied > 0
-    # the RFC 9309 parse limit, pinned separately on a genuinely
-    # oversized file (40k rules ~ 740 KiB > the 500 KiB cap)
-    mega = "User-agent: *\n" + "".join(
-        f"Disallow: /{letters[i % 26]}sec{i}\n" for i in range(40_000))
-    n_mega = parse_robots(
-        spark.createDataFrame([("hx", mega)], "host string, content string")
-    ).count()
-    assert n_mega < 40_000, f"parse limit inactive: {n_mega}"
-
-    # ---- round-8 tier ------------------------------------------------
-    # BPE: the kernel cost must be VOCABULARY-bounded — 300k distinct
-    # words through the Arrow encode + the training loop's per-round
-    # pair-count/argmax/replace, regardless of how many running tokens
-    # produced them.
-    from aquacache_spark.functions.bpe import (
-        bpe_train, token_frequencies_from_words)
-
-    words = spark.range(0, 300_000).select(
-        F.lower(F.conv(F.col("id").cast("string"), 10, 36)).alias("w"),
-        (F.col("id") % 50 + 1).alias("cnt"),
-    ).persist()
-    words.count()
-    t0 = time.perf_counter()
-    n_tok = token_frequencies_from_words(words).count()
-    timings["bpe_encode_300k_vocab"] = round(time.perf_counter() - t0, 2)
-    assert n_tok >= 36  # at least the single-char alphabet survives
-    t0 = time.perf_counter()
-    merges, _fw = bpe_train(words, n_merges=4)
-    timings["bpe_train_4r_300k_vocab"] = round(time.perf_counter() - t0, 2)
-    words.unpersist()
-    assert len(merges) == 4 and merges[0][3] > 0
-
-    # per-language LM with adversarial language skew: 95% of 300k docs
-    # are one language — the per-language totals stay a keyed agg +
-    # broadcast and the surprisal join shuffles on (lang, token), so
-    # the skewed language must not funnel through one task (AQE splits
-    # the skewed partition; there is no per-language window anywhere).
-    from aquacache_spark.operators.dedup import (
-        per_language_unigram_surprisal)
-
-    lang_docs = spark.range(0, 300_000).select(
-        F.col("id").alias("doc_id"),
-        F.when(
-            F.col("id") % 20 != 0,
-            F.concat(F.lit("the of and to in is it "),
-                     F.lit("w"), (F.col("id") % 5_000).cast("string"),
-                     F.lit(" the and"))
-        ).otherwise(
-            F.concat(F.lit("le la et les des une "),
-                     F.lit("m"), (F.col("id") % 5_000).cast("string"),
-                     F.lit(" le des"))
-        ).alias("text"),
-    )
-    t0 = time.perf_counter()
-    pls = per_language_unigram_surprisal(
-        lang_docs,
-        F.when(F.col("text").startswith("the"), "en").otherwise("fr"))
-    n_scored = pls.count()
-    n_langs = pls.select("lang").distinct().count()
-    timings["per_language_lm_95pct_skew"] = round(
-        time.perf_counter() - t0, 2)
-    assert n_scored == 300_000 and n_langs == 2
-
-    # URL canonicalization is map-only — 3M messy URLs, linear.
-    from aquacache_spark.operators.web import url_canonicalize
-
-    murls = spark.range(0, 3_000_000).select(
-        F.col("id").alias("url_id"),
-        F.concat(
-            F.lit("HTTP://Host"), (F.col("id") % 997).cast("string"),
-            F.lit(".Example.COM:80/a/./b"),
-            (F.col("id") % 7).cast("string"),
-            F.lit("/../c?b=2&a="), (F.col("id") % 13).cast("string"),
-            F.lit("#f")).alias("url"),
-    )
-    t0 = time.perf_counter()
-    n_canon = url_canonicalize(murls, "url") \
-        .where(F.col("canonical_url").startswith("http://host")).count()
-    timings["url_canonicalize_3m"] = round(time.perf_counter() - t0, 2)
-    assert n_canon == 3_000_000
-
     # funnel over 6M events / 500k users: three chained user-keyed
     # conditional min-aggs, no per-user sort window.
     from aquacache_spark.operators.funnel import funnel_steps
@@ -981,199 +509,8 @@ def main() -> None:
         time.perf_counter() - t0, 2)
     assert n_funnel == 500_000 and n_full > 0
 
-    # ------------------------------------------------------------------
-    # Fuzzy-dedup END-TO-END capstone (one corpus through the whole
-    # dedup tier): ExactSubstr boilerplate cut -> MinHash/LSH candidate
-    # pairs -> connected-component clusters -> quality-rep keep ->
-    # cluster-safe split. 100k docs, ~52 tokens each; every doc opens
-    # with the same 12-token boilerplate intro (the ExactSubstr target
-    # AND, if the cut failed, a corpus-sized hot LSH bucket); 10% of
-    # 5-doc groups are planted near-duplicates whose members share a
-    # group core but insert a member token every 8th position, so no
-    # 8-gram repeats INSIDE the
-    # group survive the cut while 3-shingle Jaccard stays usable for
-    # LSH (measured ~0.36 adjacent members after the cut — the 16
-    # single-hash bands make the adjacent-member CHAIN a near-certain
-    # spanning path, which is what connected components need). Group vocab is disjoint across
-    # groups, so any cross-group pair is a hard error. The integration
-    # invariant: total LSH pair mass stays LINEAR in corpus size
-    # (bands * max_bucket * n_docs is the theoretical cap; the planted
-    # corpus sits far below it), and no cluster straddles a split.
-    # ------------------------------------------------------------------
-    from aquacache_spark.operators.dedup import (
-        duplicate_clusters, lsh_candidate_pairs, minhash_signatures,
-        remove_repeated_spans, stratified_split)
-
-    n_cap = 100_000
-    gid = F.expr("id div 5")
-    member = F.col("id") % 5
-    is_dup = F.expr("(id div 5) % 10") == 0
-    intro = " ".join(f"intro{j}" for j in range(12))
-    body = F.concat_ws(
-        " ", *[
-            F.when(
-                is_dup,
-                F.when(F.lit(j % 8) == member,
-                       F.concat(F.lit(f"m{j}u"), F.col("id")))
-                .otherwise(F.concat(F.lit(f"w{j}g"), gid)))
-            .otherwise(F.concat(F.lit(f"u{j}d"), F.col("id")))
-            for j in range(40)
-        ])
-    cap_docs = spark.range(0, n_cap).select(
-        F.col("id").alias("doc_id"),
-        F.concat(F.lit(intro + " "), body).alias("text"),
-    )
-    t0 = time.perf_counter()
-    # owned_cache: grams hashed once (not once per pass), the cleaned
-    # corpus eagerly checkpointed — it IS the shared materialization
-    # the four downstream tiers re-read — and the gram cache released
-    # inside the operator (VERDICT r11 #2)
-    storage_before = len(
-        spark.sparkContext._jsc.sc().getRDDStorageInfo())
-    cleaned = remove_repeated_spans(cap_docs, k=8, owned_cache=True)
-    storage_after = len(
-        spark.sparkContext._jsc.sc().getRDDStorageInfo())
-    assert storage_after - storage_before <= 1, (
-        "owned_cache leaked persisted RDDs beyond the checkpoint")
-    # stage 1 invariants: unique docs lose EXACTLY the 12-token intro
-    # (their body never repeats); dup-group docs lose the intro plus at
-    # most a bounded boundary sliver (intro-tail grams reaching into
-    # the shared body head), never the shared core (the union of any
-    # two members' insert positions breaks every shared run at <= 7
-    # tokens, so no in-body 8-gram repeats)
-    n_bad_uniq = cleaned.where(
-        ~F.expr("(doc_id div 5) % 10 = 0")
-        & (F.col("kept_tokens") != F.col("n_tokens") - 12)).count()
-    n_bad_dup = cleaned.where(
-        F.expr("(doc_id div 5) % 10 = 0")
-        & ((F.col("kept_tokens") > F.col("n_tokens") - 12)
-           | (F.col("kept_tokens") < F.col("n_tokens") - 25))).count()
-    sig = minhash_signatures(
-        cleaned.select("doc_id", F.col("cleaned_text").alias("text")),
-        num_hashes=16, shingle_k=3)
-    # band width 1 (16 bands): each in-group pair collides w.p.
-    # 1-(1-J)^16 (measured J ~0.36 adjacent members, ~0.14 worst) —
-    # >0.999 along the adjacent-member chain — while disjoint group
-    # vocabs keep cross-group collisions at zero: spanning recall
-    # without quadratic pair mass
-    cand = lsh_candidate_pairs(
-        sig, num_hashes=16, bands=16, max_bucket=1024).persist()
-    n_cand = cand.count()
-    # width-1 bands carry single 31-bit minima whose order statistics
-    # concentrate near 0, so at 100k docs a few hundred CHANCE band
-    # collisions between unrelated docs are expected (measured ~670 =
-    # C(n,2) * bands * integral(f_min^2)); the exact-verify stage — the
-    # step every real fuzzy-dedup pipeline runs on LSH candidates —
-    # must remove every one of them (cross-group Jaccard is exactly 0)
-    from aquacache_spark.operators.dedup import jaccard_on_candidates
-
-    pairs = jaccard_on_candidates(
-        cleaned.select("doc_id", F.col("cleaned_text").alias("text")),
-        cand, threshold=0.1).select("id_a", "id_b").persist()
-    n_pairs = pairs.count()
-    n_cross = pairs.where(
-        F.expr("id_a div 5") != F.expr("id_b div 5")).count()
-    clusters = duplicate_clusters(
-        pairs, cap_docs.select("doc_id")).persist()
-    # quality-rep keep: quality = kept tokens (desc), tie -> min id —
-    # deterministic; singletons keep themselves
-    qual = cleaned.select("doc_id", "kept_tokens")
-    wq = Window.partitionBy("cluster_rep").orderBy(
-        F.desc("kept_tokens"), F.asc("doc_id"))
-    kept = (clusters.join(qual, "doc_id")
-            .withColumn("__rq", F.row_number().over(wq))
-            .where(F.col("__rq") == 1))
-    n_kept = kept.count()
-    n_clusters = clusters.select("cluster_rep").distinct().count()
-    split = stratified_split(clusters, id_col="cluster_rep")
-    straddle = (split.groupBy("cluster_rep")
-                .agg(F.count_distinct("split").alias("ns"))
-                .where(F.col("ns") > 1).count())
-    timings["fuzzy_dedup_capstone_100k"] = round(
-        time.perf_counter() - t0, 2)
-
-    # ---- streaming arm (VERDICT r11 #5): the SAME planted corpus
-    # through the incremental path — signatures arrive as 3 "daily
-    # drops" into a band-key ParquetMergeStore; the union of per-batch
-    # pair outputs, exact-verified and clustered, must assign every
-    # doc to EXACTLY the batch pipeline's cluster (the lambda-
-    # architecture parity contract at capstone scale; exactness holds
-    # because no band bucket crosses max_bucket between batches).
-    from aquacache_spark.operators.dedup import incremental_lsh_pairs
-    from aquacache_spark.sources.store import ParquetMergeStore
-
-    t0 = time.perf_counter()
-    # the parity subset is CLOSED under clustering: every planted
-    # cluster lives inside 5 consecutive ids, so docs < n_inc_cap
-    # cluster identically in the full corpus and in the subset
-    n_inc_cap = 20_000
-    cap_store = ParquetMergeStore(
-        spark, f"{base}/capstone_lsh",
-        key_cols=["band", "key", "doc_id"], series_col="key",
-        n_buckets=64)
-    sig16 = sig.where(F.col("doc_id") < n_inc_cap).persist()
-    inc_parts = []
-    for bidx in range(3):
-        batch = sig16.where(F.col("doc_id") % 3 == bidx)
-        part = incremental_lsh_pairs(
-            cap_store, batch, num_hashes=16, bands=16,
-            max_bucket=1024).persist()
-        part.count()        # materialize before the next drop merges
-        inc_parts.append(part)
-    inc_cand = inc_parts[0]
-    for part in inc_parts[1:]:
-        inc_cand = inc_cand.unionByName(part)
-    inc_pairs = jaccard_on_candidates(
-        cleaned.where(F.col("doc_id") < n_inc_cap)
-        .select("doc_id", F.col("cleaned_text").alias("text")),
-        inc_cand.distinct(), threshold=0.1).select("id_a", "id_b")
-    inc_clusters = duplicate_clusters(
-        inc_pairs,
-        cap_docs.where(F.col("doc_id") < n_inc_cap)
-        .select("doc_id")).persist()
-    n_inc = inc_clusters.count()
-    mismatch = (clusters.where(F.col("doc_id") < n_inc_cap)
-                .withColumnRenamed("cluster_rep", "__a")
-                .join(inc_clusters.withColumnRenamed(
-                    "cluster_rep", "__b"), "doc_id")
-                .where(F.col("__a") != F.col("__b")).count())
-    timings["fuzzy_dedup_incremental_parity"] = round(
-        time.perf_counter() - t0, 2)
-    assert n_inc == n_inc_cap, f"incremental cluster rows: {n_inc}"
-    assert mismatch == 0, (
-        f"{mismatch} docs cluster differently batch vs incremental")
-    sig16.unpersist()
-    for part in inc_parts:
-        part.unpersist()
-    inc_clusters.unpersist()
-
-    n_groups = n_cap // 5 // 10           # planted dup groups: 2000
-    full = (clusters.where(F.expr("(doc_id div 5) % 10 = 0"))
-            .groupBy("cluster_rep").agg(F.count(F.lit(1)).alias("m"))
-            .where(F.col("m") == 5).count())
-    assert n_bad_uniq == 0, f"{n_bad_uniq} unique docs mis-cut"
-    assert n_bad_dup == 0, f"{n_bad_dup} dup docs cut out of bounds"
-    assert n_cross == 0, f"{n_cross} cross-group verified pairs"
-    # candidate mass vs the theoretical hot-bucket cap (bands *
-    # max_bucket * n_docs): the planted corpus must sit orders of
-    # magnitude below it; verified pair mass is capped exactly at
-    # C(5,2) per planted group
-    assert n_cand < 0.001 * 16 * 1024 * n_cap, f"candidate mass {n_cand}"
-    assert n_pairs <= 10 * n_groups, f"pair mass {n_pairs}"
-    assert n_pairs >= 4 * n_groups, f"LSH recall collapsed: {n_pairs}"
-    assert full >= int(0.9 * n_groups), (
-        f"only {full}/{n_groups} planted groups fully recovered")
-    # exactly one survivor per cluster
-    assert n_kept == n_clusters, (n_kept, n_clusters)
-    assert straddle == 0, f"{straddle} clusters straddle splits"
-    # cleaned is an eager checkpoint (no persist to release; its
-    # blocks free when the frame is garbage-collected)
-    cand.unpersist()
-    pairs.unpersist()
-    clusters.unpersist()
-
     print(json.dumps({
-        "rows": n, "series": n_series, "docs": n_docs, "vecs": n_vec,
+        "rows": n, "series": n_series,
         "timings": timings,
         "total": round(sum(timings.values()), 2),
     }))

@@ -63,6 +63,10 @@ class TestCorrectedRead:
         with pytest.raises(ValueError, match="resample_seconds"):
             api.measurements_continuous_corrected(store, 1, statistic="mean")
 
+    def test_unknown_series_raises_key_error(self, store):
+        with pytest.raises(KeyError, match="unknown timeseries_id 999"):
+            api.measurements_continuous_corrected(store, 999)
+
     def test_resampled_mean(self, spark, store):
         out = api.measurements_continuous_corrected(
             store, 1, "2022-08-01 00:00:00", "2022-08-01 23:59:59",
@@ -186,6 +190,11 @@ class TestCalculatedDaily:
         assert r["doy_count"] >= 0
 
 
+    def test_unknown_series_raises_key_error(self, store):
+        with pytest.raises(KeyError, match="unknown timeseries_id 999"):
+            api.measurements_calculated_daily(store, 999)
+
+
 class TestDailyAt:
     """Point-in-time daily reconstruction (patch_50.R:128-420)."""
 
@@ -262,6 +271,16 @@ class TestDailyAt:
             start_date="2023-02-08", end_date="2023-02-12",
         ).collect()
         assert sorted(map(tuple, at)) == sorted(map(tuple, live))
+
+
+    def test_unknown_series_raises_key_error(self, store):
+        import dataclasses
+
+        bare = dataclasses.replace(store, measurement_versions=None)
+        for s in (store, bare):
+            with pytest.raises(KeyError, match="unknown timeseries_id 999"):
+                api.measurements_calculated_daily_at(
+                    s, 999, "2023-03-01 00:00:00")
 
 
 class TestTolerantCompound:

@@ -177,38 +177,3 @@ def test_weighted_sample_inclusion_probabilities(spark):
     for c, p in enumerate((1 / 7, 2 / 7, 4 / 7)):
         sd = math.sqrt(p * (1 - p) / n_strata)
         assert abs(counts[c] / n_strata - p) < 4 * sd, (c, counts)
-
-
-def test_temperature_sample_realized_rates(spark):
-    """Temperature mixture sampling: (a) keep_frac matches the
-    closed-form min(1, q_d * T / n_d) with q_d = sqrt(n_d)-shares
-    computed independently in Python; (b) the hash keep-rule realizes
-    keep_frac within 4-sigma binomial bands per domain (a u that is
-    not uniform — monotone in id — concentrates keeps and fails)."""
-    from aquacache_spark.operators.packing import temperature_mixture_sample
-
-    doms = {"big": (8000, 10), "mid": (2000, 10), "small": (500, 10)}
-    rows = []
-    i = 0
-    for d, (nd, tok) in doms.items():
-        for _ in range(nd):
-            rows.append((i, d, tok))
-            i += 1
-    docs = spark.createDataFrame(
-        rows, "doc_id long, domain string, n_tokens int")
-    out = temperature_mixture_sample(docs, budget_frac=0.5).collect()
-    # closed form (micro-unit arithmetic mirrored from the operator)
-    n_tok = {d: nd * tok for d, (nd, tok) in doms.items()}
-    squ = {d: math.floor(math.sqrt(v) * 1e6 + 0.5)
-           for d, v in n_tok.items()}
-    ssum, grand = sum(squ.values()), sum(n_tok.values())
-    T = math.floor(0.5 * grand)
-    want_kf = {d: min(1.0, squ[d] / ssum * T / n_tok[d]) for d in doms}
-    kept = {d: 0 for d in doms}
-    for r in out:
-        assert abs(r["keep_frac"] - want_kf[r["domain"]]) < 1e-9
-        kept[r["domain"]] += bool(r["kept"])
-    for d, (nd, _) in doms.items():
-        p = want_kf[d]
-        sd = math.sqrt(p * (1 - p) / nd) if 0 < p < 1 else 0.0
-        assert abs(kept[d] / nd - p) <= 4 * sd + 1e-9, (d, kept[d] / nd, p)

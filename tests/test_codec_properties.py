@@ -147,33 +147,3 @@ def test_warc_arbitrary_truncation_never_throws(blob_seed, mode):
     for victim in (base[:cut], mutated, blob_seed):
         rows = list(iter_warc_records(victim))
         assert all(isinstance(r, dict) for r in rows)
-
-
-@settings(max_examples=30, deadline=None)
-@given(st.text(alphabet=st.characters(min_codepoint=32,
-                                      max_codepoint=0xFF),
-               min_size=0, max_size=200),
-       st.sampled_from(["utf-8", "cp1252", "utf-16-le", "utf-16-be"]))
-def test_charset_decode_recovers_text(text, codec):
-    # any Latin-1-range text encoded by any supported codec (with the
-    # proper declaration) decodes back exactly
-    from aquacache_spark.functions.charset import sniff_and_decode
-
-    if codec == "utf-16-le":
-        raw, expect_src = b"\xff\xfe" + text.encode(codec), "bom"
-    elif codec == "utf-16-be":
-        raw, expect_src = b"\xfe\xff" + text.encode(codec), "bom"
-    elif codec == "cp1252":
-        try:
-            raw = text.encode("cp1252")
-        except UnicodeEncodeError:
-            return  # 0x80-0x9F gap chars unmappable: out of scope
-        r = sniff_and_decode(raw, http_charset="windows-1252")
-        assert r["text"] == text and r["detection_source"] == "header"
-        return
-    else:
-        raw, expect_src = text.encode("utf-8"), "utf8-valid"
-    r = sniff_and_decode(raw)
-    assert r["text"] == text
-    assert r["detection_source"] == expect_src
-    assert r["replacement_count"] == 0

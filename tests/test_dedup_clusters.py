@@ -66,57 +66,6 @@ def test_lsh_hot_bucket_cap_star_semantics(spark):
     assert full.count() == 16
 
 
-def test_long_span_doubling_closed_form(spark):
-    # docs 1/2 share a 35-token run -> 32-gram starts at 0..3 in the
-    # run (4 spans, union 35 tokens). docs 3/4 share only a 20-token
-    # run: its 8- and 16-grams repeat (the doubling rounds see it) but
-    # no 32-gram does -> zero coverage. doc 5 is all-unique filler.
-    from aquacache_spark.operators.dedup import (
-        long_repeated_span_coverage)
-
-    run35 = " ".join(f"shared{j}" for j in range(35))
-    run20 = " ".join(f"partial{j}" for j in range(20))
-    def filler(tag, n):
-        return " ".join(f"{tag}{j}" for j in range(n))
-    rows = [
-        (1, run35 + " " + filler("a", 10)),
-        (2, filler("b", 7) + " " + run35),
-        (3, run20 + " " + filler("c", 20)),
-        (4, filler("d", 15) + " " + run20),
-        (5, filler("e", 40)),
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    spark.catalog.clearCache()
-    # earlier tests may leave their own localCheckpoint blocks (RDD
-    # storage that clearCache doesn't touch) — assert on the DELTA
-    before = len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
-    out_df = long_repeated_span_coverage(docs, k0=8, target=32)
-    # the operator must release every internal cache before returning:
-    # toks / grams / final-round survivors were session-pinned pre-r11
-    # (4+ stored RDDs); the ONLY storage allowed to remain is the
-    # localCheckpoint block set of the small per-doc output itself
-    stored = spark.sparkContext._jsc.sc().getRDDStorageInfo()
-    assert len(stored) - before <= 1, [r.name() for r in stored]
-    out = {r["doc_id"]: r for r in out_df.collect()}
-    for d, n_tok in ((1, 45), (2, 42)):
-        assert out[d]["n_tokens"] == n_tok
-        assert out[d]["dup_spans"] == 4, out[d]
-        assert out[d]["dup_tokens"] == 35, out[d]
-        assert abs(out[d]["coverage_frac"] - 35 / n_tok) < 1e-9
-    for d in (3, 4, 5):
-        assert out[d]["dup_spans"] == 0 and out[d]["dup_tokens"] == 0
-
-    # parity with the direct (no-doubling) ground truth at target=16:
-    # one doubling round must equal hashing every 16-gram outright
-    from aquacache_spark.operators.dedup import repeated_span_coverage
-    direct = {r["doc_id"]: (r["dup_spans"], r["dup_tokens"]) for r in
-              repeated_span_coverage(docs, k=16).collect()}
-    doubled = {r["doc_id"]: (r["dup_spans"], r["dup_tokens"]) for r in
-               long_repeated_span_coverage(docs, k0=8,
-                                           target=16).collect()}
-    assert direct == doubled
-
-
 def test_minhash_family_has_independent_argmins(spark):
     # r11 regression pin: the pre-fix family h_i = (a_i*base + b_i)
     # mod 2^61-1 never wrapped (a_i*base < 2^58), so every h_i was a
@@ -143,32 +92,6 @@ def test_minhash_family_has_independent_argmins(spark):
     sig2 = {r["doc_id"]: r["sig"] for r in
             minhash_signatures_maponly(docs, num_hashes=16).collect()}
     assert sig == sig2
-
-
-def test_owned_cache_span_variants(spark):
-    """VERDICT r11 #2: owned_cache=True on the k-gram span family must
-    (a) produce byte-identical results to the lazy default, and
-    (b) leave at most the output's own checkpoint block set in RDD
-    storage — the gram cache is released inside the operator."""
-    from aquacache_spark.operators.dedup import (
-        remove_repeated_spans, repeated_span_coverage)
-
-    run = " ".join(f"shared{j}" for j in range(20))
-    rows = [
-        (1, run + " " + " ".join(f"a{j}" for j in range(10))),
-        (2, " ".join(f"b{j}" for j in range(7)) + " " + run),
-        (3, " ".join(f"c{j}" for j in range(30))),
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    spark.catalog.clearCache()
-    for op in (repeated_span_coverage, remove_repeated_spans):
-        before = len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
-        owned = op(docs, k=8, owned_cache=True)
-        stored = spark.sparkContext._jsc.sc().getRDDStorageInfo()
-        assert len(stored) - before <= 1, [r.name() for r in stored]
-        lazy_rows = sorted(map(tuple, op(docs, k=8).collect()))
-        owned_rows = sorted(map(tuple, owned.collect()))
-        assert lazy_rows == owned_rows
 
 
 def test_paragraph_dedup_keep_first(spark):

@@ -182,43 +182,6 @@ def test_stateful_streaming_increments_match_batch(spark, tmp_path):
     assert expect[(2, "2024-01-01 03:30:00")] is None  # gap broke chain
 
 
-def test_streaming_dedup_first_arrival_wins(spark, tmp_path):
-    import datetime
-
-    from aquacache_spark.streaming.structured import (
-        dedup_stream, read_document_stream)
-
-    landing = str(tmp_path / "docs_landing")
-    DT = datetime.datetime
-
-    def drop(batch_id, rows):
-        spark.createDataFrame(
-            rows, "doc_id bigint, text string, ingest_time timestamp"
-        ).write.mode("append").parquet(landing)
-
-    drop(0, [(1, "alpha beta", DT(2024, 1, 1, 0, 0)),
-             (2, "gamma delta", DT(2024, 1, 1, 0, 1)),
-             (3, "alpha  beta", DT(2024, 1, 1, 0, 2))])  # ws-normalized dup of 1
-
-    stream = dedup_stream(read_document_stream(spark, landing))
-    q = (stream.writeStream.format("memory").queryName("dedup_docs")
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination(120)
-
-    # second drop arrives after the first micro-batch finished: the
-    # cross-batch duplicate must still be suppressed by the state store
-    drop(1, [(4, "alpha beta", DT(2024, 1, 1, 0, 10)),     # dup of doc 1
-             (5, "epsilon zeta", DT(2024, 1, 1, 0, 11))])
-    q2 = (dedup_stream(read_document_stream(spark, landing))
-          .writeStream.format("memory").queryName("dedup_docs2")
-          .outputMode("append").trigger(availableNow=True).start())
-    q2.awaitTermination(120)
-
-    got = {r["doc_id"] for r in spark.sql("SELECT * FROM dedup_docs2").collect()}
-    assert 2 in got and 5 in got
-    assert len({1, 3, 4} & got) == 1  # exactly one survivor of the dup group
-
-
 def test_streaming_rollup_merges_into_store(spark, tmp_path):
     """The production write path end to end: windowed streaming rollup
     -> foreachBatch -> ParquetMergeStore MERGE keyed on (series, bin).
@@ -343,189 +306,6 @@ def test_streaming_merge_survives_restart(spark, tmp_path):
     assert got[(1, "2024-01-01 00:00:00")]["mean"] == 4.0
     assert got[(1, "2024-01-01 01:00:00")]["n"] == 1
     assert len(got) == 2
-
-
-def test_streaming_pack_matches_batch(spark, tmp_path):
-    """The open-bin state carries across micro-batches and a query
-    restart: streamed next-fit packing equals the batch kernel over
-    the full corpus."""
-    from pyspark.sql import types as T
-
-    from aquacache_spark.operators.packing import pack_sequences
-    from aquacache_spark.streaming.stateful import streaming_pack
-
-    landing = tmp_path / "docs"
-    landing.mkdir()
-    ckpt = str(tmp_path / "pack_ckpt")
-    schema = T.StructType([
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("n_tokens", T.LongType()),
-        T.StructField("shard", T.LongType()),
-    ])
-
-    # shard 0's open bin straddles the batch boundary: 700+900=1600
-    # fits 2048, doc 5 (800) overflows -> bin 1 ONLY if the state
-    # carried; a stateless second batch would restart at bin 0
-    batch1 = [(1, 700, 0), (3, 900, 0), (2, 2047, 1)]
-    batch2 = [(5, 800, 0), (7, 1300, 0), (4, 10, 1), (6, 3000, 1)]
-
-    def mk(rows):
-        return spark.createDataFrame(rows, schema)
-
-    seen = []
-
-    def run_one(rows):
-        mk(rows).coalesce(1).write.mode("append").parquet(str(landing))
-        stream = spark.readStream.schema(schema).parquet(str(landing))
-        packed = streaming_pack(stream, budget=2048)
-        q = (packed.writeStream
-             .foreachBatch(lambda df, _eid: seen.extend(df.collect()))
-             .option("checkpointLocation", ckpt)
-             .outputMode("append").start())
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
-    run_one(batch1)
-    run_one(batch2)
-
-    # batch reference over the full corpus — same shard hash? No:
-    # pack_sequences derives shards from md5(doc_id); here shards are
-    # explicit, so replay the kernel per shard on the ordered union
-    from aquacache_spark.operators.packing import scan_pack
-
-    expect = {}
-    for shard in (0, 1):
-        rows = sorted(
-            [r for b in (batch1, batch2) for r in b if r[2] == shard],
-            key=lambda r: next(
-                i for i, b in enumerate((batch1, batch2)) if r in b
-            ) * 1000 + r[0],
-        )
-        # arrival order: batch1 docs (sorted by id) then batch2 docs
-        bins, offs, _ = scan_pack([r[1] for r in rows], 2048)
-        for r, b, o in zip(rows, bins, offs):
-            expect[r[0]] = (b, o)
-
-    got = {r["doc_id"]: (r["bin_id"], r["bin_offset"]) for r in seen}
-    assert got == expect
-
-
-def test_streaming_pipeline_composed_available_now(spark, tmp_path):
-    """§2.12 end-to-end, COMPOSED (VERDICT r4 next #7): document drops
-    -> ONE Trigger.AvailableNow query chaining dedup_stream (state:
-    seen fingerprints) -> streaming_pack (state: open bin per shard)
-    -> foreachBatch MERGE into a ParquetMergeStore; a second run on
-    the SAME checkpoint resumes BOTH state stores (cross-run duplicate
-    suppressed, bins continue mid-fill); the store CDF between the two
-    commits then drives a scoped downstream refresh that reads only
-    changed-shard buckets. Every stage's output is pinned against the
-    batch recurrence (scan_pack) rather than rows-only."""
-    import datetime
-
-    from aquacache_spark.operators.packing import scan_pack
-    from aquacache_spark.sources.store import ParquetMergeStore
-    from aquacache_spark.streaming.stateful import streaming_pack
-    from aquacache_spark.streaming.structured import (
-        dedup_stream, read_document_stream)
-
-    landing = str(tmp_path / "landing")
-    ckpt = str(tmp_path / "ckpt")
-    DT = datetime.datetime
-    store = ParquetMergeStore(
-        spark, str(tmp_path / "packstore"), key_cols=["doc_id"],
-        series_col="shard", n_buckets=4)
-
-    def drop(rows):
-        spark.createDataFrame(
-            rows, "doc_id bigint, text string, ingest_time timestamp"
-        ).coalesce(1).write.mode("append").parquet(landing)
-
-    def run_pipeline():
-        stream = dedup_stream(read_document_stream(spark, landing))
-        enriched = (
-            stream
-            .withColumn("n_tokens",
-                        F.size(F.split(F.col("text"), " ")).cast("long"))
-            .withColumn("shard", F.pmod(F.col("doc_id"), F.lit(3)))
-            .select("shard", "doc_id", "n_tokens")
-        )
-        packed = streaming_pack(enriched, budget=8)
-
-        def sink(df, _eid):
-            if df.isEmpty():
-                return
-            store.merge(df, on_conflict="update")
-
-        q = (packed.writeStream.foreachBatch(sink)
-             .option("checkpointLocation", ckpt)
-             .outputMode("append").trigger(availableNow=True).start())
-        q.awaitTermination(180)
-
-    toks = {1: "a b c", 2: "d e f g", 3: "h i", 4: "j k l",
-            5: "m n o p q", 6: "r s t u",
-            7: "a b c",          # cross-run dup of doc 1
-            8: "v w x", 9: "y z aa bb"}
-    drop([(i, toks[i], DT(2024, 1, 1, 0, i)) for i in range(1, 7)])
-    run_pipeline()
-    v1 = store._load_manifest()["version"]
-    drop([(i, toks[i], DT(2024, 1, 1, 0, i)) for i in range(7, 10)])
-    run_pipeline()
-    v2 = store._load_manifest()["version"]
-    assert v2 > v1
-
-    rows = {r["doc_id"]: r for r in store.read().collect()}
-    # dedup state RESUMED across runs: doc 7 (dup of doc 1) suppressed
-    assert set(rows) == {1, 2, 3, 4, 5, 6, 8, 9}
-
-    # packing equals the batch recurrence run over arrival order
-    # (per shard: run-1 docs sorted by id, then run-2 docs), with the
-    # open-bin state carried across runs by the state store
-    arrival = {s: [[], []] for s in (0, 1, 2)}
-    for i in sorted(set(rows)):
-        arrival[i % 3][0 if i <= 6 else 1].append(i)
-    for s, (b1, b2) in arrival.items():
-        bins1, offs1, st = scan_pack(
-            [len(toks[i].split()) for i in b1], budget=8)
-        bins2, offs2, _ = scan_pack(
-            [len(toks[i].split()) for i in b2], budget=8, state=st)
-        for i, b, o in zip(b1 + b2, bins1 + bins2, offs1 + offs2):
-            assert (rows[i]["bin_id"], rows[i]["bin_offset"]) == (b, o), \
-                (s, i)
-    # the load-bearing continuation case: shard 2's open bin was at
-    # fill 5/8 after run 1, so doc 8 (3 tokens) lands INSIDE it — a
-    # fresh state would have produced (0, 0)
-    assert (rows[8]["bin_id"], rows[8]["bin_offset"]) == (1, 5)
-
-    # CDF between the two streaming commits drives the scoped refresh
-    cdf = store.changes(v1, v2)
-    assert {r["_change_type"] for r in cdf.collect()} == {"insert"}
-    changed_shards = cdf.select("shard").distinct()
-    assert {r["shard"] for r in changed_shards.collect()} == {0, 2}
-    # IO pin: the feed opened only changed-shard buckets
-    touched = {r["bucket"] for r in store._bucket(changed_shards)
-               .select("bucket").distinct().collect()}
-    bad = [f for f in cdf.inputFiles()
-           if not any(f"bucket={b}/" in f or f.rstrip("/").endswith(
-               f"bucket={b}") for b in touched)]
-    assert not bad, bad[:3]
-    # scoped recompute touches only changed shards and matches a full
-    # recompute restricted to them
-    scoped = (store.read().join(F.broadcast(changed_shards), "shard")
-              .groupBy("shard")
-              .agg(F.count(F.lit(1)).alias("n_docs"),
-                   F.sum("n_tokens").alias("total_tokens"),
-                   F.count_distinct("bin_id").alias("n_bins")))
-    full = (store.read().groupBy("shard")
-            .agg(F.count(F.lit(1)).alias("n_docs"),
-                 F.sum("n_tokens").alias("total_tokens"),
-                 F.count_distinct("bin_id").alias("n_bins")))
-    got = {r["shard"]: r for r in scoped.collect()}
-    want = {r["shard"]: r for r in full.collect() if r["shard"] in (0, 2)}
-    assert set(got) == {0, 2}
-    for s in (0, 2):
-        assert got[s].asDict() == want[s].asDict()
 
 
 def test_cdf_drives_scoped_daily_refresh(spark, tmp_path):
@@ -678,49 +458,6 @@ def test_streaming_image_phash_dedup(spark, tmp_path):
     got = {r["media_id"] for r in seen}
     assert 1 in got and 2 in got and 4 in got
     assert 3 not in got  # cross-run perceptual duplicate suppressed
-
-
-def test_streaming_chunking_matches_batch(spark, tmp_path):
-    """chunk_documents is a pure map-side projection, so it applies to
-    a readStream unchanged — streamed chunks across two AvailableNow
-    drops equal the batch result over the same landing data."""
-    import datetime
-
-    from aquacache_spark.operators.packing import chunk_documents
-
-    landing = str(tmp_path / "chunk_landing")
-    DT = datetime.datetime
-
-    def drop(rows):
-        spark.createDataFrame(
-            rows, "doc_id bigint, text string, ingest_time timestamp"
-        ).write.mode("append").parquet(landing)
-
-    long = " ".join(f"w{i}" for i in range(15))
-    drop([(1, long, DT(2024, 1, 1)), (2, "a b c", DT(2024, 1, 1))])
-
-    schema = "doc_id bigint, text string, ingest_time timestamp"
-    stream = spark.readStream.schema(schema).parquet(landing)
-    q = (chunk_documents(stream, max_tokens=6, overlap=2)
-         .writeStream.format("memory").queryName("chunks1")
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination(120)
-
-    drop([(3, " ".join(f"x{i}" for i in range(8)), DT(2024, 1, 2))])
-    q2 = (chunk_documents(spark.readStream.schema(schema).parquet(landing),
-                          max_tokens=6, overlap=2)
-          .writeStream.format("memory").queryName("chunks2")
-          .outputMode("append").trigger(availableNow=True).start())
-    q2.awaitTermination(120)
-
-    streamed = {(r["doc_id"], r["chunk_id"], r["chunk_text"])
-                for r in spark.sql("SELECT * FROM chunks2").collect()}
-    batch = {(r["doc_id"], r["chunk_id"], r["chunk_text"])
-             for r in chunk_documents(
-                 spark.read.parquet(landing), max_tokens=6,
-                 overlap=2).collect()}
-    assert streamed == batch
-    assert {d for d, _, _ in streamed} == {1, 2, 3}
 
 
 def test_streaming_sessionization_matches_batch(spark, tmp_path):
@@ -947,129 +684,6 @@ def test_streaming_funnel_matches_batch(spark, tmp_path):
             assert s[c] == b[c], (u, c, s[c], b[c])
 
 
-def test_streaming_near_dup_matches_batch(spark, tmp_path):
-    """Streaming MinHash/LSH front-end: bounded per-bucket state,
-    append-mode pair emission. DISTINCT of the whole run's output must
-    equal the one-shot batch lsh_candidate_pairs over everything
-    ingested (two micro-batch phases, no bucket near the cap)."""
-    from aquacache_spark.operators.dedup import (
-        lsh_candidate_pairs, minhash_signatures,
-        minhash_signatures_maponly)
-    from aquacache_spark.streaming.stateful import streaming_near_dup
-
-    def doc_rows(lo, hi):
-        rows = []
-        for i in range(lo, hi):
-            base = (f"alpha beta gamma delta epsilon zeta {i // 2} "
-                    * 4)
-            if i % 2 == 1:
-                base += "tail"
-            rows.append((i, base))
-        return rows
-
-    # map-only signatures are row-identical to the groupBy form
-    all_docs = spark.createDataFrame(doc_rows(0, 30),
-                                     "doc_id long, text string")
-    a = {r["doc_id"]: list(r["sig"]) for r in
-         minhash_signatures(all_docs, num_hashes=8,
-                            shingle_k=3).collect()}
-    b = {r["doc_id"]: list(r["sig"]) for r in
-         minhash_signatures_maponly(all_docs, num_hashes=8,
-                                    shingle_k=3).collect()}
-    assert a == b
-
-    landing = tmp_path / "landing"
-    landing.mkdir()
-    ckpt = str(tmp_path / "ckpt")
-    schema = "doc_id long, text string"
-    emitted = []
-
-    def process(df, epoch_id):
-        emitted.extend((r["id_a"], r["id_b"]) for r in df.collect())
-
-    stream = (spark.readStream.format("parquet").schema(schema)
-              .option("maxFilesPerTrigger", 4).load(str(landing)))
-    q = (streaming_near_dup(stream)
-         .writeStream.outputMode("append")
-         .option("checkpointLocation", ckpt)
-         .foreachBatch(process).start())
-    try:
-        spark.createDataFrame(doc_rows(0, 14), schema) \
-            .write.mode("append").parquet(str(landing))
-        q.processAllAvailable()
-        # second drop overlaps group 6 (doc 13's twin doc 12 already
-        # arrived) -> a cross-micro-batch pair must be found
-        spark.createDataFrame(doc_rows(14, 30), schema) \
-            .write.mode("append").parquet(str(landing))
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    one_shot = {(r["id_a"], r["id_b"]) for r in lsh_candidate_pairs(
-        minhash_signatures(all_docs, num_hashes=8, shingle_k=3),
-        num_hashes=8, bands=4).collect()}
-    assert set(emitted) == one_shot
-    assert (14, 15) in one_shot  # sanity: dups exist in drop 2
-
-
-def test_streaming_near_dup_cap_bounds_state(spark, tmp_path):
-    """A boilerplate bucket crossing the cap collapses to its min-id
-    anchor: edges stay linear per arrival and every member remains
-    connected to the anchor."""
-    from aquacache_spark.streaming.stateful import streaming_near_dup
-
-    landing = tmp_path / "landing"
-    landing.mkdir()
-    ckpt = str(tmp_path / "ckpt")
-    schema = "doc_id long, text string"
-    emitted = []
-
-    def process(df, epoch_id):
-        emitted.extend((r["id_a"], r["id_b"]) for r in df.collect())
-
-    stream = (spark.readStream.format("parquet").schema(schema)
-              .option("maxFilesPerTrigger", 1).load(str(landing)))
-    q = (streaming_near_dup(stream, max_bucket=3)
-         .writeStream.outputMode("append")
-         .option("checkpointLocation", ckpt)
-         .foreachBatch(process).start())
-    boiler = "same boiler plate text here " * 3
-    try:
-        spark.createDataFrame(
-            [(i, boiler) for i in range(2)], schema) \
-            .write.mode("append").parquet(str(landing))
-        q.processAllAvailable()
-        spark.createDataFrame(
-            [(i, boiler) for i in range(2, 8)], schema) \
-            .write.mode("append").parquet(str(landing))
-        q.processAllAvailable()
-        # doc -5 arrives AFTER collapse: must edge to the old anchor
-        spark.createDataFrame([(-5, boiler)], schema) \
-            .write.mode("append").parquet(str(landing))
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    pairs = set(emitted)
-    # connectivity: union-find over emitted edges -> one component
-    parent = {}
-
-    def find(x):
-        parent.setdefault(x, x)
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for x, y in pairs:
-        parent[find(x)] = find(y)
-    comps = {find(i) for i in list(range(8)) + [-5]}
-    assert len(comps) == 1, pairs
-    # linear edge mass: far fewer than the 36 all-pairs edges
-    assert len(pairs) <= 4 * (9 - 1), pairs
-    assert (-5, 0) in pairs  # the late minimum edges to the old anchor
-
-
 def test_streaming_kmv_matches_batch(spark, tmp_path):
     """KMV as bounded streaming state (k hash/key pairs per group
     forever): after two micro-batch phases the last emission per
@@ -1121,169 +735,3 @@ def test_streaming_kmv_matches_batch(spark, tmp_path):
         assert latest[g]["vk"] == bagg[g]["vk"], g
         assert latest[g]["distinct_estimate"] == bagg[g]["est"], g
         assert latest[g]["n_kept"] == 64
-
-
-def test_streaming_warc_to_corpus_matches_batch_capstone(spark, tmp_path):
-    """End-to-end streaming web on-ramp parity (r10): the batch
-    warc_crawl_corpus capstone's OWN archive fixture, split across a
-    landing zone in two micro-batch drops, driven through
-    read_warc_stream -> the identical corpus transforms (HTTP 200
-    text/html filter, HTML main-content extraction, RFC 3986 URL
-    canonicalization) -> foreachBatch, PLUS the streaming near-dup
-    stage over the streamed corpus text. The accumulated corpus rows
-    must equal the batch capstone output exactly, and DISTINCT of the
-    emitted pair stream must equal the one-shot batch
-    lsh_candidate_pairs over the batch corpus — archive bytes to
-    deduped corpus with no batch/streaming divergence."""
-    from conftest import SF_SMOKE
-
-    from aquacache_spark.functions.html import with_main_text
-    from aquacache_spark.operators.dedup import (lsh_candidate_pairs,
-                                                 minhash_signatures)
-    from aquacache_spark.operators.web import url_canonicalize
-    from aquacache_spark.queries.web import (_warc_fixture,
-                                             warc_crawl_corpus_q)
-    from aquacache_spark.sources.warc import read_warc_stream
-
-    cols = ("doc_id", "canonical_url", "host", "title", "main_text",
-            "n_blocks", "chars_kept")
-    batch_rows = {tuple(r[c] for c in cols)
-                  for r in warc_crawl_corpus_q(spark, SF_SMOKE).collect()}
-    assert batch_rows  # the capstone corpus is non-empty at sf0.001
-
-    # the SAME synthesized .warc.gz blobs, written out as real archive
-    # files split across two drops (odd/even file_id)
-    archives = _warc_fixture(spark, SF_SMOKE,
-                             html_payload=True).collect()
-    landing = tmp_path / "landing"
-    landing.mkdir()
-
-    def corpus(recs):
-        pages = recs.where(
-            F.col("ok") & (F.col("warc_type") == "response")
-            & (F.col("http_status") == 200)
-            & F.col("http_content_type").startswith("text/html")
-        ).select(
-            F.regexp_extract("record_id", r"^urn:example:(\d+)$", 1)
-            .cast("long").alias("doc_id"),
-            F.col("target_uri").alias("url"),
-            F.col("payload").cast("string").alias("html"))
-        text = with_main_text(pages, "html")
-        canon = url_canonicalize(
-            text.select("doc_id", "url", "title", "main_text",
-                        "n_blocks"), "url")
-        return canon.select(
-            "doc_id", "canonical_url", "host", "title", "main_text",
-            F.col("n_blocks").cast("int").alias("n_blocks"),
-            F.length("main_text").cast("long").alias("chars_kept"))
-
-    from aquacache_spark.streaming.stateful import streaming_near_dup
-
-    got_rows = []
-    got_pairs = []
-
-    def take_rows(df, epoch_id):
-        got_rows.extend(df.collect())
-
-    def take_pairs(df, epoch_id):
-        got_pairs.extend((r["id_a"], r["id_b"]) for r in df.collect())
-
-    stream = read_warc_stream(spark, str(landing))
-    stream_corpus = corpus(stream)
-    q1 = (stream_corpus
-          .writeStream.outputMode("append")
-          .option("checkpointLocation", str(tmp_path / "ck_corpus"))
-          .foreachBatch(take_rows).start())
-    q2 = (streaming_near_dup(
-              stream_corpus.select("doc_id",
-                                   F.col("main_text").alias("text")))
-          .writeStream.outputMode("append")
-          .option("checkpointLocation", str(tmp_path / "ck_pairs"))
-          .foreachBatch(take_pairs).start())
-    try:
-        for parity in (0, 1):  # two drops: odd then even archives
-            for r in archives:
-                if r["file_id"] % 2 == parity:
-                    (landing / f"f{r['file_id']}.warc.gz") \
-                        .write_bytes(bytes(r["content"]))
-            q1.processAllAvailable()
-            q2.processAllAvailable()
-    finally:
-        q1.stop()
-        q2.stop()
-
-    stream_rows = {tuple(r[c] for c in cols) for r in got_rows}
-    assert len(got_rows) == len(stream_rows)  # exactly-once, no dups
-    assert stream_rows == batch_rows
-
-    batch_corpus = warc_crawl_corpus_q(spark, SF_SMOKE).select(
-        "doc_id", F.col("main_text").alias("text"))
-    one_shot = {(r["id_a"], r["id_b"]) for r in lsh_candidate_pairs(
-        minhash_signatures(batch_corpus, num_hashes=8, shingle_k=3),
-        num_hashes=8, bands=4).collect()}
-    assert set(got_pairs) == one_shot
-
-
-def test_streaming_paragraph_dedup_matches_batch(spark, tmp_path):
-    """Streaming keep-first paragraph dedup: O(1) state per distinct
-    paragraph, append-mode first-arrival emission. Fed in id order,
-    the run's accumulated (doc_id, pos) kept set equals the batch
-    paragraph_dedup over everything ingested."""
-    import time
-
-    from aquacache_spark.operators.dedup import paragraph_dedup
-    from aquacache_spark.streaming.stateful import (
-        streaming_paragraph_dedup)
-
-    def doc_rows(lo, hi):
-        # unique body + shared newsletter on every doc + shared
-        # copyright on every third — the cross-doc boilerplate shape
-        return [
-            (i, f"body {i} unique paragraph"
-                "\n\nsubscribe newsletter boilerplate"
-                + ("\n\ncopyright shared footer" if i % 3 == 0 else ""))
-            for i in range(lo, hi)
-        ]
-
-    landing = tmp_path / "landing"
-    landing.mkdir()
-    ckpt = str(tmp_path / "ckpt")
-    schema = "doc_id long, text string"
-    emitted = []
-
-    def process(df, epoch_id):
-        emitted.extend((r["doc_id"], r["pos"], r["para"])
-                       for r in df.collect())
-
-    stream = (spark.readStream.format("parquet").schema(schema)
-              .option("maxFilesPerTrigger", 1).load(str(landing)))
-    q = (streaming_paragraph_dedup(stream)
-         .writeStream.outputMode("append")
-         .option("checkpointLocation", ckpt)
-         .foreachBatch(process).start())
-    try:
-        # two phases, ascending ids (the keep-first order contract)
-        spark.createDataFrame(doc_rows(0, 12), schema) \
-            .coalesce(1).write.mode("append").parquet(str(landing))
-        q.processAllAvailable()
-        spark.createDataFrame(doc_rows(12, 24), schema) \
-            .coalesce(1).write.mode("append").parquet(str(landing))
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    batch = spark.createDataFrame(doc_rows(0, 24), schema)
-    out = paragraph_dedup(batch)
-    # batch kept set, reconstructed from the per-doc outputs
-    kept_docs = {r["doc_id"]: r["cleaned_text"].split("\n\n")
-                 for r in out.collect() if r["cleaned_text"]}
-    stream_kept = {}
-    for d, pos, para in emitted:
-        stream_kept.setdefault(d, []).append((pos, para))
-    stream_docs = {d: [p for _, p in sorted(v)]
-                   for d, v in stream_kept.items()}
-    assert stream_docs == kept_docs
-    # boilerplate kept exactly once, by doc 0
-    boiler = [d for d, paras in stream_docs.items()
-              if "subscribe newsletter boilerplate" in paras]
-    assert boiler == [0]

@@ -105,37 +105,6 @@ def test_eqwin_normalize_broadcasts_dims(spark):
     assert "CartesianProduct" not in p
 
 
-def test_sequence_packing_single_shuffle(spark):
-    # one hash exchange on the shard key feeding the Arrow kernel;
-    # no joins at all
-    import re
-
-    p = plan(spark, "sequence_packing")
-    assert len(re.findall(r"^\(\d+\) Exchange", p, re.M)) == 1
-    assert "Join" not in p
-    assert "MapInPandas" in p
-
-
-def test_dsir_scoring_broadcasts_bucket_table(spark):
-    # the corpus-side score pass joins the (num_buckets)-row ratio
-    # table by broadcast; the only sort-merge join is the full-outer
-    # merge of the two bucket-sized count tables
-    import re
-
-    p = plan(spark, "dsir_importance")
-    assert "BroadcastHashJoin" in p
-    assert len(re.findall(r"^\(\d+\) SortMergeJoin", p, re.M)) <= 1
-    assert "SortMergeJoin LeftOuter" not in p and "SortMergeJoin Inner" not in p
-
-
-def test_mixture_sample_map_only_keep_rule(spark):
-    # after the catalog-sized totals aggregate, the keep/drop pass is
-    # a broadcast join + projection over the docs scan
-    p = plan(spark, "mixture_domain_sample")
-    assert "BroadcastHashJoin" in p
-    assert "SortMergeJoin" not in p
-
-
 def test_corrected_read_at_is_map_only(spark):
     # corrections reconstructed at plan-build time compile into one
     # when()-chain: zero exchanges over the fact
@@ -174,14 +143,6 @@ def test_hampel_single_window_shuffle(spark):
     p = plan(spark, "hampel_spike_flags")
     assert len(re.findall(r"^\(\d+\) Exchange", p, re.M)) == 1
     assert "Join" not in p
-
-
-def test_span_coverage_no_fact_sort_merge_blowup(spark):
-    # gram reduction groups on the hash; reattachment is the only
-    # doc-keyed join and must not be a nested loop or cartesian
-    p = plan(spark, "repeated_span_coverage")
-    assert "CartesianProduct" not in p
-    assert "BroadcastNestedLoopJoin" not in p
 
 
 def test_segment_overlay_sweep_single_exchange(spark):
@@ -228,40 +189,6 @@ def test_gridded_ingest_joins_broadcast(spark):
         assert "CartesianProduct" not in p, name
 
 
-def test_bm25_single_postings_scan_broadcast_joins(spark):
-    # the postings explode+aggregate appears ONCE (df is a count
-    # window over the query-term-restricted set, not a groupBy joined
-    # back, which would recompute the subtree); query terms and corpus
-    # stats join broadcast; no sort-merge anywhere; top-k is a
-    # WindowGroupLimit. r12: the (doc, term) count no longer needs its
-    # own exchange at all — the spread-scan repartition on doc_id
-    # already satisfies the groupBy(doc_id, __dl, term) requirement —
-    # so the pin is on the AGGREGATE appearing once (subtree not
-    # recomputed), with zero doc_id..__dl exchanges.
-    import re
-
-    p = plan(spark, "bm25_topk")
-    # exactly one tf aggregate subtree keyed (doc_id, __dl, term): the
-    # formatted plan lists Keys per HashAggregate node
-    tf_keyed = re.findall(r"Keys \[3\]: \[doc_id[^\]]*__dl[^\]]*term", p)
-    assert len(tf_keyed) == 2, tf_keyed  # partial + final, one subtree
-    assert len(re.findall(r"hashpartitioning\(doc_id[^)]*__dl", p)) == 0
-    assert "SortMergeJoin" not in p
-    assert "WindowGroupLimit" in p
-    assert "EvalPython" not in p
-
-
-def test_bm25_phrase_gram_joins_broadcast(spark):
-    # the phrase/proximity variant adds one explode+aggregate per
-    # distinct gram length; every query-gram dim joins BROADCAST
-    # (probe queries are catalog-sized by definition), no sort-merge
-    # join anywhere, top-k still a WindowGroupLimit, zero python
-    p = plan(spark, "bm25_phrase_topk")
-    assert "SortMergeJoin" not in p
-    assert "WindowGroupLimit" in p
-    assert "EvalPython" not in p
-
-
 def test_gopher_gate_map_only(spark):
     # the full Gopher rule set is one codegen'd projection — zero
     # exchanges, zero joins, zero python
@@ -298,12 +225,11 @@ def test_instrument_validators_broadcast_only(spark):
 
 
 def test_new_map_only_kernels_zero_exchange(spark):
-    # chunking, Unicode folding, and the hashed linear classifier are
-    # pure projections: zero exchanges, zero joins, zero python
+    # Unicode folding and the hashed linear classifier are pure
+    # projections: zero exchanges, zero joins, zero python
     import re
 
-    for name in ("document_chunking", "unicode_fold_normalize",
-                 "model_quality_score"):
+    for name in ("unicode_fold_normalize", "model_quality_score"):
         p = plan(spark, name)
         assert len(re.findall(r"^\(\d+\) Exchange", p, re.M)) == 0, name
         assert "Join" not in p, name
@@ -314,8 +240,7 @@ def test_lm_surprisal_no_global_window(spark):
     # the corpus total must come from agg + 1-row broadcast crossJoin,
     # never F.sum().over(Window.partitionBy()) — an unpartitioned
     # window funnels the whole vocab through ONE task at web scale
-    for name in ("unigram_surprisal", "bigram_surprisal",
-                 "trigram_surprisal"):
+    for name in ("unigram_surprisal", "bigram_surprisal"):
         p = plan(spark, name)
         assert "Window" not in p, name
         assert "Exchange SinglePartition" not in p, name
@@ -440,12 +365,11 @@ def test_discrete_metadata_views_dims_broadcast(spark):
 
 
 def test_round9_new_queries_no_pathological_joins(spark):
-    # WARC capstones, charset transcode, incremental LSH, SPI: none
-    # may plan a cartesian or nested-loop join anywhere (the robots
-    # chain, the store probe, and the rank windows are all equi-keyed)
+    # WARC capstones, incremental LSH, SPI: none may plan a cartesian
+    # or nested-loop join anywhere (the robots chain, the store probe,
+    # and the rank windows are all equi-keyed)
     for name in ("warc_record_ingest", "warc_crawl_corpus",
-                 "warc_multilingual_corpus", "warc_robots_gated_corpus",
-                 "charset_transcode_features", "spi_empirical_3mo"):
+                 "warc_robots_gated_corpus", "spi_empirical_3mo"):
         p = plan(spark, name)
         assert "CartesianProduct" not in p, name
         assert "BroadcastNestedLoopJoin" not in p, name
@@ -495,8 +419,7 @@ def test_regional_flood_family_broadcast_only(spark):
     # sort-merge anywhere, and the simulation explode is map-side
     for name in ("regional_flood_homogeneity", "regional_index_flood",
                  "regional_index_flood_gev",
-                 "regional_discordancy", "regional_screening_report",
-                 "long_repeated_span_coverage"):
+                 "regional_discordancy", "regional_screening_report"):
         p = plan(spark, name)
         assert "CartesianProduct" not in p, name
         assert "BroadcastNestedLoopJoin" not in p, name

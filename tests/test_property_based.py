@@ -218,45 +218,6 @@ def test_merge_same_value_invariants(spark, segs):
     assert deleted.isdisjoint(out_ids)
 
 
-# ---- next-fit sequence packing (operators/packing._pack_kernel) ----
-
-from aquacache_spark.operators.packing import _pack_kernel
-
-token_lists = st.lists(
-    st.integers(min_value=1, max_value=3000), min_size=1, max_size=80
-)
-
-
-@settings(max_examples=200, deadline=None)
-@given(token_lists, st.integers(min_value=100, max_value=2500))
-def test_pack_kernel_invariants(tokens, budget):
-    pdf = pd.DataFrame({
-        "doc_id": range(len(tokens)),
-        "n_tokens": tokens,
-    })
-    out = _pack_kernel(budget, "doc_id", "n_tokens")(pdf)
-    # 1. brute-force next-fit replay agrees exactly
-    bin_id, fill, exp_bins, exp_offs = 0, 0, [], []
-    for t in tokens:
-        if fill > 0 and fill + t > budget:
-            bin_id += 1
-            fill = 0
-        exp_offs.append(fill)
-        exp_bins.append(bin_id)
-        fill += t
-    assert list(out["bin_id"]) == exp_bins
-    assert list(out["bin_offset"]) == exp_offs
-    # 2. every multi-doc bin fits the budget (only a lone oversized
-    # doc may exceed it)
-    for _, g in out.groupby("bin_id"):
-        if len(g) > 1:
-            assert g["n_tokens"].sum() <= budget
-    # 3. bins are contiguous from 0 and offsets are prefix sums
-    assert sorted(out["bin_id"].unique()) == list(range(out["bin_id"].max() + 1))
-    for _, g in out.groupby("bin_id"):
-        assert list(g["bin_offset"]) == list(g["n_tokens"].cumsum().shift(1).fillna(0).astype(int))
-
-
 # ---- import-mapping resolution vs brute force ----
 
 
@@ -347,51 +308,3 @@ def test_token_entropy_matches_direct(spark, words):
     )
     assert row["n_distinct"] == len(counts)
     assert abs(row["entropy"] - (-acc / 1e6)) < 1e-12
-
-
-# ---------------------------------------------------------------------------
-# Long-gram doubling parity: on random small-alphabet corpora (repeats
-# abound), the doubling path must equal a brute-force Python reference
-# for repeated-gram start positions AND the covered-token union —
-# guards the candidate filter (p and p+k both surviving) and the
-# coverage lag-window against any future rewrite.
-# ---------------------------------------------------------------------------
-
-_docs_strategy = st.lists(
-    st.lists(st.sampled_from("abc"), min_size=1, max_size=30),
-    min_size=2, max_size=6,
-)
-
-
-def _brute_long_spans(docs, k):
-    grams = {}
-    for did, toks in docs:
-        for p in range(len(toks) - k + 1):
-            grams.setdefault(tuple(toks[p:p + k]), set()).add(did)
-    rep = {g for g, ds in grams.items() if len(ds) >= 2}
-    out = {}
-    for did, toks in docs:
-        starts = [p for p in range(len(toks) - k + 1)
-                  if tuple(toks[p:p + k]) in rep]
-        covered = set()
-        for p in starts:
-            covered.update(range(p, p + k))
-        out[did] = (len(starts), len(covered))
-    return out
-
-
-@settings(max_examples=8, deadline=None,
-          suppress_health_check=list(HealthCheck))
-@given(_docs_strategy)
-def test_long_span_doubling_matches_brute_force(spark, token_docs):
-    from aquacache_spark.operators.dedup import long_repeated_span_coverage
-
-    docs = [(i, toks) for i, toks in enumerate(token_docs)]
-    df = spark.createDataFrame(
-        [(i, " ".join(toks)) for i, toks in docs],
-        "doc_id long, text string")
-    got = {r["doc_id"]: (r["dup_spans"], r["dup_tokens"]) for r in
-           long_repeated_span_coverage(df, k0=2, target=4).collect()}
-    want = _brute_long_spans(docs, 4)
-    assert got == want
-    spark.catalog.clearCache()

@@ -168,48 +168,3 @@ def test_write_warc_roundtrip(spark, tmp_path):
             for r in write_warc(docs.repartition(7), out2,
                                 records_per_file=20).collect()}
     assert man1 == man2
-
-
-def test_streaming_warc_ingest_composes_with_dedup(spark, tmp_path):
-    # the streaming mirror of the web on-ramp: archives dropped into a
-    # landing zone stream through the same parse kernel, compose with
-    # the exact-dedup stage, and each file is processed exactly once
-    from aquacache_spark.sources.warc import read_warc_stream
-    from aquacache_spark.streaming.structured import dedup_stream
-
-    landing = tmp_path / "landing"
-    landing.mkdir()
-    ckpt = str(tmp_path / "ckpt")
-    seen = []
-
-    def process(df, epoch_id):
-        seen.extend(df.collect())
-
-    stream = read_warc_stream(spark, str(landing))
-    docs = (stream.where(F.col("ok")
-                         & (F.col("warc_type") == "response"))
-            .select(F.col("record_id").alias("doc_id"),
-                    F.col("payload").cast("string").alias("text"),
-                    F.current_timestamp().alias("ingest_time")))
-    q = (dedup_stream(docs)
-         .writeStream.outputMode("append")
-         .option("checkpointLocation", ckpt)
-         .foreachBatch(process).start())
-    try:
-        # drop 1: records 0-3; record 1 and 3 share identical payload
-        recs = [_resp(0, b"alpha"), _resp(1, b"dup body"),
-                _resp(2, b"beta"), _resp(3, b"dup body")]
-        (landing / "a.warc.gz").write_bytes(build_warc(recs))
-        q.processAllAvailable()
-        # drop 2: a re-crawl of the same payloads + one new page
-        recs2 = [_resp(10, b"alpha"), _resp(11, b"gamma")]
-        (landing / "b.warc.gz").write_bytes(build_warc(recs2))
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    texts = sorted(bytes(r["text"], "utf-8").decode()
-                   if isinstance(r["text"], str) else r["text"]
-                   for r in seen)
-    # first arrival wins: 'dup body' once, re-crawled 'alpha' dropped
-    assert texts == ["alpha", "beta", "dup body", "gamma"]
