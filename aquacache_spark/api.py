@@ -134,6 +134,27 @@ def _resolve_raw(
     return out.select("datetime", "value")
 
 
+def _corrected(
+    store: FixtureStore,
+    timeseries_id: int,
+    start: Optional[str],
+    end: Optional[str],
+    _path: tuple = (),
+) -> DataFrame:
+    """(datetime, corrected_value) plus ``period_seconds`` when the
+    store records it, for the daily read's period filter."""
+    raw = _resolve_raw(store, timeseries_id, start, end, _path)
+    corrections = [
+        c for c in store.corrections if c.timeseries_id == timeseries_id
+    ]
+    if corrections:  # fast-path dispatch: raw scan when none (patch_53.R:1871-1936)
+        raw = raw.withColumn("timeseries_id", F.lit(timeseries_id))
+        raw = apply_corrections(raw, corrections, ts_col="timeseries_id",
+                                dt_col="datetime", value_col="value",
+                                out_col="value").drop("timeseries_id")
+    return raw.withColumnRenamed("value", "corrected_value")
+
+
 def measurements_continuous_corrected(
     store: FixtureStore,
     timeseries_id: int,
@@ -152,17 +173,9 @@ def measurements_continuous_corrected(
     if statistic != "actual" and not resample_seconds:
         raise ValueError("non-'actual' statistics require resample_seconds")
 
-    raw = _resolve_raw(store, timeseries_id, start_datetime, end_datetime, _path)
-    corrections = [
-        c for c in store.corrections if c.timeseries_id == timeseries_id
-    ]
-    if corrections:  # fast-path dispatch: raw scan when none (patch_53.R:1871-1936)
-        raw = raw.withColumn("timeseries_id", F.lit(timeseries_id))
-        raw = apply_corrections(raw, corrections, ts_col="timeseries_id",
-                                dt_col="datetime", value_col="value",
-                                out_col="value").drop("timeseries_id")
-    out = raw.withColumnRenamed("value", "corrected_value")
-
+    out = _corrected(
+        store, timeseries_id, start_datetime, end_datetime, _path
+    ).select("datetime", "corrected_value")
     if resample_seconds:
         binned = resample(
             out, keys=[], dt_col="datetime", value_col="corrected_value",
@@ -191,7 +204,7 @@ def measurements_calculated_daily(
     point inside a non-zero-width unusable grade-'N' window (inclusive
     BETWEEN, ``g.start_dt <> g.end_dt``)."""
     agg_type = _catalog_field(store, timeseries_id, "aggregation_type")
-    corrected = measurements_continuous_corrected(store, timeseries_id)
+    corrected = _corrected(store, timeseries_id, None, None)
     if "period_seconds" in corrected.columns:
         corrected = corrected.where(F.col("period_seconds") <= 86400)
     grades = getattr(store, "grades", None)
@@ -238,7 +251,10 @@ def measurements_calculated_daily_at(
     timestamp wins per (series, datetime), tombstones drop the key —
     then run the IDENTICAL daily pipeline as the live read. A store
     without recorded history reads as the live table at every
-    timestamp (the reference's audit tables start empty).
+    timestamp (the reference's audit tables start empty). When the
+    store's measurements carry ``period_seconds`` the log must record it
+    too, so the replay feeds the daily read's period filter; otherwise
+    this raises ``ValueError``.
 
     Scale: the snapshot is one key-partitioned row_number over the log
     (the same key any ingest shuffles on); the version-time filter is a
@@ -253,6 +269,13 @@ def measurements_calculated_daily_at(
         return measurements_calculated_daily(
             store, timeseries_id, start_date, end_date
         )
+    period = (["period_seconds"]
+              if "period_seconds" in store.measurements.columns else [])
+    if period and "period_seconds" not in versions.columns:
+        raise ValueError(
+            "store measurements carry period_seconds but "
+            "measurement_versions does not record it"
+        )
     vis = versions.where(
         (F.col("timeseries_id") == timeseries_id)
         & (F.col("modified_at") <= F.lit(as_of).cast("timestamp"))
@@ -265,7 +288,7 @@ def measurements_calculated_daily_at(
         .where((F.col("__rn") == 1) & ~F.col("deleted"))
         .select(
             "timeseries_id", "datetime", "value", "imputed",
-            F.lit(False).alias("no_update"),
+            F.lit(False).alias("no_update"), *period,
         )
     )
     others = store.measurements.where(

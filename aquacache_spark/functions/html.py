@@ -14,9 +14,8 @@ the text-bearing tag — so navs, footers, scripts, styles, and bare
 divs drop out as boilerplate; ``boilerplate_ratio`` reports how much
 of the tag-stripped page text was discarded.
 
-Not part of the AquaCache surface: reached only from
-``queries/web.py`` — perfbench's ``warc_crawl_corpus`` probe and the
-web-tier queries a later change still has to cut.
+Not part of the AquaCache surface: reached only from perfbench's
+``warc_crawl_corpus`` probe (``queries/web.py``).
 """
 
 from __future__ import annotations

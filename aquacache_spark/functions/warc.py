@@ -6,8 +6,8 @@ The reference (YukonWRB/AquaCache) has no web-archive surface; this is
 the engine's web tier on-ramp, built the same way as the GRIB2 / GPKG
 / GIF codecs (functions/grib2.py, sources/vector.py, functions/gif.py):
 
-- a ``binaryFile`` scan fans whole files to tasks and an Arrow-batched
-  kernel parses bytes — pixels/octets never shuffle;
+- an Arrow-batched kernel parses whole-file blobs where they sit
+  (sources/warc.warc_records) — octets never shuffle;
 - oracles never parse bytes (the GIF policy): fixtures are synthesized
   closed-form from table keys through the REAL writer, so the reader
   runs on genuine WARC bytes while DuckDB recomputes the expected
@@ -35,9 +35,8 @@ each yield ONE record dict with ``ok=False`` and a diagnostic
 are still known, else stops (a corrupt mid-stream plain record has no
 resync point).
 
-Not part of the AquaCache surface: reached only from
-``queries/web.py`` — perfbench's ``warc_crawl_corpus`` probe and the
-web-tier queries a later change still has to cut.
+Not part of the AquaCache surface: reached only from perfbench's
+``warc_crawl_corpus`` probe (``queries/web.py``).
 """
 
 from __future__ import annotations

@@ -700,57 +700,6 @@ def simhash(
     return agg.select(id_col, sig.cast("long").alias("simhash"))
 
 
-def embedding_near_duplicates(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.9,
-    planes: int = 6,
-    dim: int = 64,
-) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs, LSH-bucketed.
-
-    The fifth dedup tier (reference scope: none — training-data
-    extension). Random-hyperplane buckets (similarity.lsh_buckets,
-    deterministic planes shared with the DuckDB oracle) prune the
-    pair space to same-bucket collisions; exact cosine then filters to
-    ``>= threshold``. The self-join is an equi-join on the bucket key —
-    cost ∝ collision mass, never n². Vectors whose cosine clears a high
-    threshold almost always agree on all sign bits, so recall at
-    thresholds ~0.9 is high; lower thresholds should lower ``planes``
-    or union several plane sets (banding), same trade as MinHash-LSH.
-
-    Output: id_a, id_b (a < b), cosine.
-    """
-    from .similarity import _as_double, _cosine, lsh_buckets
-
-    b = lsh_buckets(df, id_col, vec_col, planes, dim).join(
-        df.select(id_col, vec_col), id_col
-    )
-    # one bucket string per vector -> each colliding pair appears once
-    left = b.select(
-        F.col("bucket"),
-        F.col(id_col).alias("id_a"),
-        _as_double(F.col(vec_col)).alias("__va"),
-    )
-    right = b.select(
-        F.col("bucket"),
-        F.col(id_col).alias("id_b"),
-        _as_double(F.col(vec_col)).alias("__vb"),
-    )
-    return (
-        left.join(right, "bucket")
-        .where(F.col("id_a") < F.col("id_b"))
-        .withColumn("cosine", _cosine(F.col("__va"), F.col("__vb")))
-        .where(
-            # quantized threshold compare — see similarity._qrank
-            F.floor(F.col("cosine") * 1e9 + F.lit(0.5))
-            >= F.floor(F.lit(threshold) * 1e9 + F.lit(0.5))
-        )
-        .select("id_a", "id_b", "cosine")
-    )
-
-
 def jaccard_on_candidates(
     df: DataFrame,
     candidates: DataFrame,

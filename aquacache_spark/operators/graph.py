@@ -5,7 +5,7 @@ graph (which sites link which): PageRank-style centrality is the
 classic quality prior (seed lists, crawl frontiers, spam demotion).
 The reference has no link data (it is a hydrometric store); this
 module belongs to the training-data extension tier (SURVEY north
-star), next to the robots.txt / URL tiers in operators/web.py.
+star).
 
 Determinism (the repo-wide exact-sum idiom, taken further): the whole
 power iteration runs in INTEGER arithmetic — ranks are bigint

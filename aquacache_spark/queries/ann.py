@@ -1,10 +1,10 @@
 """Ranking, trend and nearest-neighbour queries: as-of joins,
 Mann-Kendall family, nearest-station search, retrieval metrics.
 
-The embedding-search-tier queries here remain only for perfbench's
-batch probe (``embedding_cosine_topk``, named in
-``perfbench/batch_analytics.py``) and until a later change cuts the
-rest; tests/test_import_boundary.py lists them.
+The module holds one embedding-search-tier query,
+``embedding_cosine_topk``: perfbench's batch probe, named in
+``perfbench/batch_analytics.py``. It stays until a benchmark change
+retargets the probe; tests/test_import_boundary.py pins it.
 """
 
 from __future__ import annotations
@@ -161,465 +161,6 @@ def embedding_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = _t(spark, sf_dir, "embeddings")
     out = cosine_topk(emb, emb.where(F.col("vec_id") < 10), k=5)
-    return _round(out, {"cosine": 6})
-
-
-# ---------------------------------------------------------------------------
-# Similarity scale path: product quantization (asymmetric top-k over
-# reconstructed codes). Deterministic codebooks (lowest-id seed slices,
-# 1e-6-quantized) + 1e-6-quantized argmin keep every engine choosing
-# the same codes; the oracle replays codebook build, encode, and the
-# reconstruction ranking in SQL.
-# ---------------------------------------------------------------------------
-
-
-_PQ_ORACLE = f"""
-    WITH c AS (
-      SELECT vec_id AS nid, CAST(embedding AS DOUBLE[]) AS cv FROM embeddings
-    ), seeds AS (
-      SELECT cv, CAST(row_number() OVER (ORDER BY h, nid) - 1 AS INTEGER)
-               AS seed
-      FROM (SELECT nid,
-                   CAST('0x' || substr(md5(CAST(nid AS VARCHAR)), 1, 15)
-                     AS BIGINT) AS h,
-                   cv
-            FROM c ORDER BY h, nid LIMIT 8)
-    ), cw AS (
-      SELECT s.sub, seeds.seed AS code,
-             list_transform(cv[s.sub * 16 + 1 : s.sub * 16 + 16],
-                            x -> floor(x * 1000000 + 0.5) / 1000000) AS w
-      FROM seeds, (SELECT unnest([0, 1, 2, 3]) AS sub) s
-    ), subs AS (
-      SELECT nid, s.sub, cv[s.sub * 16 + 1 : s.sub * 16 + 16] AS sv
-      FROM c, (SELECT unnest([0, 1, 2, 3]) AS sub) s
-    ), enc AS (
-      SELECT nid, sub, code FROM (
-        SELECT subs.nid, subs.sub, cw.code,
-               row_number() OVER (
-                 PARTITION BY subs.nid, subs.sub
-                 ORDER BY CAST(floor(list_sum(list_transform(
-                            generate_series(1, 16),
-                            i -> (sv[i] - w[i]) * (sv[i] - w[i])))
-                          * 1000000 + 0.5) AS BIGINT), cw.code) AS rk
-        FROM subs JOIN cw USING (sub)
-      ) WHERE rk = 1
-    ), rec AS (
-      SELECT e.nid, flatten(list(w ORDER BY e.sub)) AS xhat
-      FROM enc e JOIN cw ON cw.sub = e.sub AND cw.code = e.code
-      GROUP BY e.nid
-    ), q AS (
-      SELECT nid AS qid, cv AS qv FROM c WHERE nid < 10
-    ), s AS (
-      SELECT q.qid AS query_id, r2.nid AS neighbor_id,
-             list_dot_product(q.qv, r2.xhat)
-               / (sqrt(list_dot_product(q.qv, q.qv))
-                  * sqrt(list_dot_product(r2.xhat, r2.xhat))) AS cosine
-      FROM q, rec r2 WHERE q.qid <> r2.nid
-    ), r AS (
-      SELECT *, row_number() OVER (PARTITION BY query_id
-                                   ORDER BY floor(cosine * 1000000000.0 + 0.5) DESC,
-                                            neighbor_id) AS rank
-      FROM s
-    )
-    SELECT query_id, neighbor_id, {R('cosine', 6)} AS cosine, rank
-    FROM r WHERE rank <= 5
-"""
-
-
-@register("ann_pq_topk", oracle=_PQ_ORACLE)
-def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PQ compression tier: 64-dim floats -> m=4 one-byte codes (the
-    64x memory reduction that keeps a 100 TB embedding index in
-    cluster RAM); asymmetric ranking against full-precision queries.
-    Recall vs the exact baseline gated in tests/test_ann_recall.py."""
-    from ..operators.similarity import ann_topk_pq
-
-    emb = _t(spark, sf_dir, "embeddings")
-    out = ann_topk_pq(emb, emb.where(F.col("vec_id") < 10), k=5, m=4, ksub=8)
-    return _round(out, {"cosine": 6})
-
-
-# ---------------------------------------------------------------------------
-# Similarity scale path #2: IVF ANN (inverted lists over deterministic
-# centroid seeds; nprobe probed lists per query). Recall vs brute force
-# asserted in tests/test_ann_recall.py.
-# ---------------------------------------------------------------------------
-
-
-_IVF_COS = (
-    "list_dot_product({a}, {b}) / (sqrt(list_dot_product({a}, {a}))"
-    " * sqrt(list_dot_product({b}, {b})))"
-)
-
-
-def _dot_sql(a: str, b: str, dim: int = 64) -> str:
-    """Explicit left-associative dot product — bit-identical to the
-    Spark side's sequential ``F.aggregate`` fold (((0+x1)+x2)+…), so
-    argmax decisions in iterated k-means cannot drift between engines."""
-    return "(" + " + ".join(f"{a}[{i}] * {b}[{i}]" for i in range(1, dim + 1)) + ")"
-
-
-def _cos_sql(a: str, b: str, dim: int = 64) -> str:
-    return (
-        f"{_dot_sql(a, b, dim)} / (sqrt({_dot_sql(a, a, dim)})"
-        f" * sqrt({_dot_sql(b, b, dim)}))"
-    )
-
-
-def _kmeans_cte(nlist: int = 16, iters: int = 3, dim: int = 64,
-                corp_sql: str | None = None) -> str:
-    """CTE chain replaying operators/similarity.kmeans_centroids: seeds
-    = nlist lowest-id vectors quantized to 1e-6; each iteration assigns
-    by cosine argmax (ties -> lowest cid) and re-centers with the
-    quantized integer-sum mean. Ends with ``cent_f(cid, centv)``.
-    ``corp_sql`` overrides the corpus CTE body (must yield
-    (vec_id, emb DOUBLE[]))."""
-    Q = "1000000.0"
-    seed_list = "[" + ", ".join(
-        f"floor(emb[{i}] * {Q} + 0.5) / {Q}" for i in range(1, dim + 1)
-    ) + "]"
-    mean_list = "[" + ", ".join(
-        f"floor(sum(CAST(floor(emb[{i}] * {Q} + 0.5) AS BIGINT)) * 1.0"
-        f" / count(*) + 0.5) / {Q}"
-        for i in range(1, dim + 1)
-    ) + "]"
-    corp_body = corp_sql or (
-        "SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings"
-    )
-    sql = f"""
-    corp AS (
-      {corp_body}
-    ), cent_0 AS (
-      SELECT (row_number() OVER (ORDER BY h, vec_id)) - 1 AS cid,
-             {seed_list} AS centv
-      FROM (SELECT vec_id,
-                   CAST('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 15)
-                     AS BIGINT) AS h,
-                   emb
-            FROM corp ORDER BY h, vec_id LIMIT {nlist})
-    )"""
-    for t in range(iters):
-        sql += f"""
-    , assign_{t} AS (
-      SELECT vec_id, emb, cid FROM (
-        SELECT corp.vec_id, corp.emb, c.cid,
-               row_number() OVER (PARTITION BY corp.vec_id
-                 ORDER BY floor(({_cos_sql('corp.emb', 'c.centv', dim)})
-                                * 1000000000.0 + 0.5) DESC,
-                          c.cid) AS rn
-        FROM corp, cent_{t} c) WHERE rn = 1
-    ), upd_{t} AS (
-      SELECT cid, {mean_list} AS centv FROM assign_{t} GROUP BY cid
-    ), cent_{t + 1} AS (
-      SELECT c.cid, COALESCE(u.centv, c.centv) AS centv
-      FROM cent_{t} c LEFT JOIN upd_{t} u USING (cid)
-    )"""
-    return sql + f"""
-    , cent_f AS (SELECT cid, centv FROM cent_{iters})"""
-
-
-_KMEANS_CENTROIDS_ORACLE = "WITH " + _kmeans_cte(16, 3, 64) + f"""
-    SELECT cid AS centroid_id, CAST(i AS BIGINT) AS pos,
-           {R('centv[CAST(i AS INTEGER)]', 6)} AS value
-    FROM cent_f, (SELECT unnest(generate_series(1, 64)) AS i)
-"""
-
-
-# SemDeDup (Abbas et al. 2023): deterministic k-means partition, then
-# within-cluster "similar to any lower-centroid-sim member -> drop".
-# The corpus is the embeddings table UNIONed with perturbed twins
-# (v'_k = v_k + 0.05 * v_{(k mod 64)+1}, ids +100000) so the prune has
-# real semantic duplicates to find; every stage — Lloyd iterations,
-# final assignment, rank, pairwise cosine gate — replays in SQL.
-_SEMDEDUP_CORP_SQL = """
-      SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings
-      UNION ALL
-      SELECT vec_id + 100000,
-             [CAST(embedding[i] AS DOUBLE)
-              + 0.05 * CAST(embedding[(i % 64) + 1] AS DOUBLE)
-              for i in generate_series(1, 64)] AS emb
-      FROM embeddings WHERE vec_id % 5 = 0
-"""
-
-
-_SEMDEDUP_ORACLE = "WITH " + _kmeans_cte(
-    16, 3, 64, corp_sql=_SEMDEDUP_CORP_SQL) + f"""
-    , afin AS MATERIALIZED (
-      SELECT vec_id, emb, cid, s FROM (
-        SELECT corp.vec_id, corp.emb, c.cid,
-               floor(({_cos_sql('corp.emb', 'c.centv', 64)})
-                     * 1000000000.0 + 0.5) AS s,
-               row_number() OVER (PARTITION BY corp.vec_id
-                 ORDER BY floor(({_cos_sql('corp.emb', 'c.centv', 64)})
-                                * 1000000000.0 + 0.5) DESC,
-                          c.cid) AS rn
-        FROM corp, cent_f c) WHERE rn = 1
-    ), dropped AS (
-      SELECT DISTINCT a.vec_id
-      FROM afin a JOIN afin b ON a.cid = b.cid
-      WHERE (b.s < a.s OR (b.s = a.s AND b.vec_id < a.vec_id))
-        AND floor(({_cos_sql('a.emb', 'b.emb', 64)})
-                  * 1000000000.0 + 0.5) >= 950000000
-    )
-    SELECT a.vec_id, a.cid AS centroid_id,
-           {R('a.s / 1000000000.0', 6)} AS centroid_sim,
-           d.vec_id IS NULL AS kept
-    FROM afin a LEFT JOIN dropped d USING (vec_id)
-"""
-
-
-@register("semdedup_prune", oracle=_SEMDEDUP_ORACLE)
-def semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.similarity import semantic_dedup
-
-    emb = _t(spark, sf_dir, "embeddings")
-    vec = F.col("embedding")
-    twins = emb.where(F.col("vec_id") % 5 == 0).select(
-        (F.col("vec_id") + 100000).alias("vec_id"),
-        F.transform(
-            vec,
-            lambda x, i: x.cast("double")
-            + 0.05 * F.element_at(vec, ((i + 1) % 64 + 1).cast("int"))
-            .cast("double"),
-        ).alias("embedding"),
-    )
-    corpus = emb.select(
-        "vec_id",
-        F.transform(vec, lambda x: x.cast("double")).alias("embedding"),
-    ).unionByName(twins)
-    out = semantic_dedup(corpus, threshold=0.95)
-    return _round(out, {"centroid_sim": 6})
-
-
-# Capped variant: max_cluster=2 restricts the comparison side to each
-# cluster's top-2 keep-priority members (rank by centroid-sim ASC, id
-# ASC) — the degenerate-cluster guard that makes pair mass linear at
-# 100 TB. cap=2 is far below real cluster sizes at test SFs, so the
-# capped code path (rank window + restricted join) is what the hash
-# verifies, not a no-op.
-_SEMDEDUP_CAPPED_ORACLE = "WITH " + _kmeans_cte(
-    16, 3, 64, corp_sql=_SEMDEDUP_CORP_SQL) + f"""
-    , afin AS MATERIALIZED (
-      SELECT vec_id, emb, cid, s FROM (
-        SELECT corp.vec_id, corp.emb, c.cid,
-               floor(({_cos_sql('corp.emb', 'c.centv', 64)})
-                     * 1000000000.0 + 0.5) AS s,
-               row_number() OVER (PARTITION BY corp.vec_id
-                 ORDER BY floor(({_cos_sql('corp.emb', 'c.centv', 64)})
-                                * 1000000000.0 + 0.5) DESC,
-                          c.cid) AS rn
-        FROM corp, cent_f c) WHERE rn = 1
-    ), banded AS MATERIALIZED (
-      SELECT vec_id, emb, cid, s FROM (
-        SELECT vec_id, emb, cid, s,
-               row_number() OVER (PARTITION BY cid
-                 ORDER BY s ASC, vec_id ASC) AS crank
-        FROM afin) WHERE crank <= 2
-    ), dropped AS (
-      SELECT DISTINCT a.vec_id
-      FROM afin a JOIN banded b ON a.cid = b.cid
-      WHERE (b.s < a.s OR (b.s = a.s AND b.vec_id < a.vec_id))
-        AND floor(({_cos_sql('a.emb', 'b.emb', 64)})
-                  * 1000000000.0 + 0.5) >= 950000000
-    )
-    SELECT a.vec_id, a.cid AS centroid_id,
-           {R('a.s / 1000000000.0', 6)} AS centroid_sim,
-           d.vec_id IS NULL AS kept
-    FROM afin a LEFT JOIN dropped d USING (vec_id)
-"""
-
-
-@register("semdedup_capped_prune", oracle=_SEMDEDUP_CAPPED_ORACLE)
-def semdedup_capped_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.similarity import semantic_dedup
-
-    emb = _t(spark, sf_dir, "embeddings")
-    vec = F.col("embedding")
-    twins = emb.where(F.col("vec_id") % 5 == 0).select(
-        (F.col("vec_id") + 100000).alias("vec_id"),
-        F.transform(
-            vec,
-            lambda x, i: x.cast("double")
-            + 0.05 * F.element_at(vec, ((i + 1) % 64 + 1).cast("int"))
-            .cast("double"),
-        ).alias("embedding"),
-    )
-    corpus = emb.select(
-        "vec_id",
-        F.transform(vec, lambda x: x.cast("double")).alias("embedding"),
-    ).unionByName(twins)
-    out = semantic_dedup(corpus, threshold=0.95, max_cluster=2)
-    return _round(out, {"centroid_sim": 6})
-
-
-@register("ivf_kmeans_centroids", oracle=_KMEANS_CENTROIDS_ORACLE)
-def ivf_kmeans_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Trained IVF centroids: 3 deterministic Lloyd iterations over the
-    embedding corpus (quantized integer-sum updates — engine- and
-    partitioning-reproducible). The oracle replays the identical
-    iterations in SQL; a drift in any assignment or mean surfaces as a
-    hash mismatch on the exploded (centroid, component) table."""
-    from ..operators.similarity import kmeans_centroids
-
-    emb = _t(spark, sf_dir, "embeddings")
-    cent = kmeans_centroids(emb, nlist=16, iters=3, dim=64)
-    out = cent.select(
-        "centroid_id", F.posexplode("__centv").alias("pos", "value")
-    ).withColumn("pos", (F.col("pos") + 1).cast("long"))
-    return _round(out, {"value": 6})
-
-
-_IVF_ORACLE = f"""
-    WITH corp AS (
-      SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-    ), cent AS (
-      SELECT vec_id AS centroid_id, v AS cv FROM corp
-      ORDER BY CAST('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 15)
-                 AS BIGINT), vec_id LIMIT 16
-    ), lists AS (
-      SELECT vec_id AS neighbor_id, centroid_id, v FROM (
-        SELECT corp.vec_id, cent.centroid_id, corp.v,
-               row_number() OVER (
-                 PARTITION BY corp.vec_id
-                 ORDER BY floor(({_IVF_COS.format(a='corp.v', b='cent.cv')})
-                                * 1000000000.0 + 0.5) DESC,
-                          cent.centroid_id) AS rn
-        FROM corp, cent) WHERE rn = 1
-    ), probes AS (
-      SELECT vec_id AS query_id, centroid_id, v AS qv FROM (
-        SELECT corp.vec_id, cent.centroid_id, corp.v,
-               row_number() OVER (
-                 PARTITION BY corp.vec_id
-                 ORDER BY floor(({_IVF_COS.format(a='corp.v', b='cent.cv')})
-                                * 1000000000.0 + 0.5) DESC,
-                          cent.centroid_id) AS rn
-        FROM corp, cent WHERE corp.vec_id < 10) WHERE rn <= 4
-    ), s AS (
-      SELECT probes.query_id, lists.neighbor_id,
-             {_IVF_COS.format(a='probes.qv', b='lists.v')} AS cosine
-      FROM probes JOIN lists USING (centroid_id)
-      WHERE lists.neighbor_id <> probes.query_id
-    ), r AS (
-      SELECT *, row_number() OVER (PARTITION BY query_id
-                                   ORDER BY floor(cosine * 1000000000.0 + 0.5) DESC,
-                                            neighbor_id) AS rank
-      FROM s
-    )
-    SELECT query_id, neighbor_id, {R('cosine', 6)} AS cosine, rank
-    FROM r WHERE rank <= 5
-"""
-
-
-@register("ann_ivf_topk", oracle=_IVF_ORACLE)
-def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF ANN (SURVEY north-star similarity scale path): inverted-list
-    assignment on deterministic centroid seeds, nprobe=4 of nlist=16
-    lists probed per query."""
-    from ..operators.similarity import ann_topk_ivf
-
-    emb = _t(spark, sf_dir, "embeddings")
-    out = ann_topk_ivf(
-        emb, emb.where(F.col("vec_id") < 10), k=5, nlist=16, nprobe=4
-    )
-    return _round(out, {"cosine": 6})
-
-
-# ---------------------------------------------------------------------------
-# IVF x PQ composition — probe-pruned AND compressed, the production
-# serving shape. The oracle glues the IVF list/probe CTEs to the PQ
-# codebook/encode/reconstruct CTEs and ranks within probed lists only.
-# ---------------------------------------------------------------------------
-
-
-_IVFPQ_ORACLE = f"""
-    WITH corp AS (
-      SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-    ), cent AS (
-      SELECT vec_id AS centroid_id, v AS cv FROM corp
-      ORDER BY CAST('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 15)
-                 AS BIGINT), vec_id LIMIT 16
-    ), lists AS (
-      SELECT vec_id AS neighbor_id, centroid_id, v FROM (
-        SELECT corp.vec_id, cent.centroid_id, corp.v,
-               row_number() OVER (
-                 PARTITION BY corp.vec_id
-                 ORDER BY floor(({_IVF_COS.format(a='corp.v', b='cent.cv')})
-                                * 1000000000.0 + 0.5) DESC,
-                          cent.centroid_id) AS rn
-        FROM corp, cent) WHERE rn = 1
-    ), probes AS (
-      SELECT vec_id AS query_id, centroid_id, v AS qv FROM (
-        SELECT corp.vec_id, cent.centroid_id, corp.v,
-               row_number() OVER (
-                 PARTITION BY corp.vec_id
-                 ORDER BY floor(({_IVF_COS.format(a='corp.v', b='cent.cv')})
-                                * 1000000000.0 + 0.5) DESC,
-                          cent.centroid_id) AS rn
-        FROM corp, cent WHERE corp.vec_id < 10) WHERE rn <= 4
-    ), seeds AS (
-      SELECT v AS scv,
-             CAST(row_number() OVER (ORDER BY h, vec_id) - 1 AS INTEGER)
-               AS seed
-      FROM (SELECT vec_id,
-                   CAST('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 15)
-                     AS BIGINT) AS h,
-                   v
-            FROM corp ORDER BY h, vec_id LIMIT 8)
-    ), cw AS (
-      SELECT s.sub, seeds.seed AS code,
-             list_transform(scv[s.sub * 16 + 1 : s.sub * 16 + 16],
-                            x -> floor(x * 1000000 + 0.5) / 1000000) AS w
-      FROM seeds, (SELECT unnest([0, 1, 2, 3]) AS sub) s
-    ), subs AS (
-      SELECT neighbor_id AS nid, centroid_id, s.sub,
-             v[s.sub * 16 + 1 : s.sub * 16 + 16] AS sv
-      FROM lists, (SELECT unnest([0, 1, 2, 3]) AS sub) s
-    ), enc AS (
-      SELECT nid, centroid_id, sub, code FROM (
-        SELECT subs.nid, subs.centroid_id, subs.sub, cw.code,
-               row_number() OVER (
-                 PARTITION BY subs.nid, subs.sub
-                 ORDER BY CAST(floor(list_sum(list_transform(
-                            generate_series(1, 16),
-                            i -> (sv[i] - w[i]) * (sv[i] - w[i])))
-                          * 1000000 + 0.5) AS BIGINT), cw.code) AS rk
-        FROM subs JOIN cw USING (sub)
-      ) WHERE rk = 1
-    ), rec AS (
-      SELECT e.nid, e.centroid_id, flatten(list(w ORDER BY e.sub)) AS xhat
-      FROM enc e JOIN cw ON cw.sub = e.sub AND cw.code = e.code
-      GROUP BY e.nid, e.centroid_id
-    ), s AS (
-      SELECT probes.query_id, rec.nid AS neighbor_id,
-             list_dot_product(probes.qv, rec.xhat)
-               / (sqrt(list_dot_product(probes.qv, probes.qv))
-                  * sqrt(list_dot_product(rec.xhat, rec.xhat))) AS cosine
-      FROM probes JOIN rec USING (centroid_id)
-      WHERE rec.nid <> probes.query_id
-    ), r AS (
-      SELECT *, row_number() OVER (PARTITION BY query_id
-                                   ORDER BY floor(cosine * 1000000000.0 + 0.5) DESC,
-                                            neighbor_id) AS rank
-      FROM s
-    )
-    SELECT query_id, neighbor_id, {R('cosine', 6)} AS cosine, rank
-    FROM r WHERE rank <= 5
-"""
-
-
-@register("ann_ivfpq_topk", oracle=_IVFPQ_ORACLE)
-def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF probe pruning x PQ compression: each query scans ~nprobe/
-    nlist of the corpus AND reads only 4 one-byte codes per scanned
-    vector — compute and memory pruned together, which is how a 100 TB
-    embedding store actually serves."""
-    from ..operators.similarity import ann_topk_ivfpq
-
-    emb = _t(spark, sf_dir, "embeddings")
-    out = ann_topk_ivfpq(
-        emb, emb.where(F.col("vec_id") < 10),
-        k=5, nlist=16, nprobe=4, m=4, ksub=8,
-    )
     return _round(out, {"cosine": 6})
 
 
@@ -816,133 +357,6 @@ def jpeg12_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# ANN metric parity (operators/similarity.knn_topk): exact top-k under
-# inner product (MIPS) and squared-L2 next to the existing cosine —
-# the three FAISS metric families.
-# ---------------------------------------------------------------------------
-
-
-_IP_TOPK_ORACLE = f"""
-    WITH q AS (
-      SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
-      FROM embeddings WHERE vec_id % 40 = 7
-    ), c AS (
-      SELECT vec_id AS neighbor_id, CAST(embedding AS DOUBLE[]) AS cv
-      FROM embeddings
-    ), s AS (
-      SELECT query_id, neighbor_id,
-             list_dot_product(qv, cv) AS score
-      FROM q, c WHERE query_id <> neighbor_id
-    ), r AS (
-      SELECT *, row_number() OVER (
-               PARTITION BY query_id
-               ORDER BY floor(score * 1000000000.0 + CAST(0.5 AS DOUBLE))
-                          DESC,
-                        neighbor_id) AS rank
-      FROM s
-    )
-    SELECT query_id, neighbor_id, {R('score', 6)} AS score, rank
-    FROM r WHERE rank <= 5
-"""
-
-
-@register("embedding_ip_topk", oracle=_IP_TOPK_ORACLE)
-def embedding_ip_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.similarity import knn_topk
-
-    emb = _t(spark, sf_dir, "embeddings")
-    out = knn_topk(emb, emb.where(F.col("vec_id") % 40 == 7),
-                   metric="ip", k=5)
-    return _round(out, {"score": 6})
-
-
-_L2_TOPK_ORACLE = f"""
-    WITH q AS (
-      SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
-      FROM embeddings WHERE vec_id % 40 = 13
-    ), c AS (
-      SELECT vec_id AS neighbor_id, CAST(embedding AS DOUBLE[]) AS cv
-      FROM embeddings
-    ), s AS (
-      SELECT query_id, neighbor_id,
-             list_dot_product(qv, qv) - 2 * list_dot_product(qv, cv)
-               + list_dot_product(cv, cv) AS score
-      FROM q, c WHERE query_id <> neighbor_id
-    ), r AS (
-      SELECT *, row_number() OVER (
-               PARTITION BY query_id
-               ORDER BY floor(score * 1000000000.0 + CAST(0.5 AS DOUBLE))
-                          ASC,
-                        neighbor_id) AS rank
-      FROM s
-    )
-    SELECT query_id, neighbor_id, {R('score', 6)} AS score, rank
-    FROM r WHERE rank <= 5
-"""
-
-
-@register("embedding_l2_topk", oracle=_L2_TOPK_ORACLE)
-def embedding_l2_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.similarity import knn_topk
-
-    emb = _t(spark, sf_dir, "embeddings")
-    out = knn_topk(emb, emb.where(F.col("vec_id") % 40 == 13),
-                   metric="l2", k=5)
-    return _round(out, {"score": 6})
-
-
-# ---------------------------------------------------------------------------
-# Int8 scalar quantization (operators/similarity.int8_quantize_stats):
-# the vector-DB storage codec — per-dim absmax scales (one partial-
-# aggregable posexplode max, dim-row collect = the centroid idiom),
-# then map-only quantize/reconstruct with exact pico-unit error sums.
-# ---------------------------------------------------------------------------
-
-
-_INT8_ORACLE = """
-    WITH c AS (
-      SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-    ), pos AS (
-      SELECT unnest(generate_series(1, 64)) AS i
-    ), sc AS (
-      SELECT i, greatest(max(abs(v[i])), CAST(1e-12 AS DOUBLE)) AS s
-      FROM c, pos GROUP BY i
-    ), q AS (
-      SELECT vec_id, i,
-             floor(v[i] / s * 127 + CAST(0.5 AS DOUBLE)) AS raw,
-             s, v[i] AS x
-      FROM c, pos JOIN sc USING (i)
-    ), coded AS (
-      SELECT vec_id, i, s, x,
-             least(greatest(raw, -127), 127) AS code,
-             (raw > 127 OR raw < -127) AS clipped
-      FROM q
-    )
-    SELECT vec_id,
-           CAST(sum(CAST(code AS BIGINT) * i) AS BIGINT) AS code_psum,
-           CAST(sum(CASE WHEN clipped THEN 1 ELSE 0 END) AS INT)
-             AS n_clipped,
-           sum(CAST(floor((x - code * s / 127)
-                          * (x - code * s / 127) * 1e12
-                          + CAST(0.5 AS DOUBLE)) AS BIGINT))
-             / CAST(1e12 AS DOUBLE) / CAST(64 AS DOUBLE) AS mse
-    FROM coded GROUP BY 1
-"""
-
-
-@register("embedding_int8_quantization", oracle=_INT8_ORACLE)
-def embedding_int8_quantization_q(spark: SparkSession,
-                                  sf_dir: str) -> DataFrame:
-    """Symmetric-absmax int8 quantization of the embeddings corpus:
-    positional code checksum, clip count, exact reconstruction MSE."""
-    from ..operators.similarity import int8_quantize_stats, int8_scales
-
-    emb = _t(spark, sf_dir, "embeddings")
-    scales = int8_scales(emb, dim=64)
-    return int8_quantize_stats(emb, scales)
-
-
-# ---------------------------------------------------------------------------
 # Mann-Kendall trend + Sen's slope (operators/trend.mann_kendall): the
 # standard hydrologic trend test over per-(priority, year) daily
 # maxima. Pairwise self-join keyed per series-year — pair mass bounded
@@ -1115,81 +529,6 @@ def seasonal_mann_kendall_q(spark: SparkSession,
     out = seasonal_mann_kendall(
         monthly, ["series"], "mon", "date", "value")
     return _round(out, {"var_total": 6, "z": 6})
-
-
-# ---------------------------------------------------------------------------
-# Matryoshka-style truncated retrieval: exact cosine top-k at a
-# 16-dim PREFIX of the 64-dim embeddings (MRL serving: coarse search
-# on the cheap prefix), each hit flagged for membership in the
-# full-dimension top-k — the per-query recall readout.
-# ---------------------------------------------------------------------------
-
-
-_MRL_ORACLE = f"""
-    WITH q AS (
-      SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
-      FROM embeddings WHERE vec_id < 10
-    ), c AS (
-      SELECT vec_id AS neighbor_id, CAST(embedding AS DOUBLE[]) AS cv
-      FROM embeddings
-    ), st AS (
-      SELECT query_id, neighbor_id,
-             list_dot_product(qv[1:16], cv[1:16])
-               / (sqrt(list_dot_product(qv[1:16], qv[1:16]))
-                  * sqrt(list_dot_product(cv[1:16], cv[1:16])))
-               AS cos16
-      FROM q, c WHERE query_id <> neighbor_id
-    ), rt AS (
-      SELECT *, row_number() OVER (
-               PARTITION BY query_id
-               ORDER BY floor(cos16 * 1000000000.0 + 0.5) DESC,
-                        neighbor_id) AS rank
-      FROM st
-    ), sf AS (
-      SELECT query_id, neighbor_id,
-             list_dot_product(qv, cv)
-               / (sqrt(list_dot_product(qv, qv))
-                  * sqrt(list_dot_product(cv, cv))) AS cosf
-      FROM q, c WHERE query_id <> neighbor_id
-    ), rf AS (
-      SELECT query_id, neighbor_id, row_number() OVER (
-               PARTITION BY query_id
-               ORDER BY floor(cosf * 1000000000.0 + 0.5) DESC,
-                        neighbor_id) AS rank
-      FROM sf
-    )
-    SELECT t.query_id, t.neighbor_id, {R('t.cos16', 6)} AS cosine16,
-           CAST(t.rank AS BIGINT) AS rank,
-           (f.neighbor_id IS NOT NULL) AS in_full_topk
-    FROM rt t LEFT JOIN (SELECT query_id, neighbor_id FROM rf
-                         WHERE rank <= 5) f
-      ON f.query_id = t.query_id AND f.neighbor_id = t.neighbor_id
-    WHERE t.rank <= 5
-"""
-
-
-@register("matryoshka_truncated_topk", oracle=_MRL_ORACLE)
-def matryoshka_truncated_topk_q(spark: SparkSession,
-                                sf_dir: str) -> DataFrame:
-    """16-dim-prefix cosine top-5 with full-dim-agreement flags."""
-    from ..operators.similarity import cosine_topk
-
-    emb = _t(spark, sf_dir, "embeddings")
-    trunc = emb.select(
-        "vec_id", F.slice(F.col("embedding"), 1, 16).alias("embedding"))
-    queries16 = trunc.where(F.col("vec_id") < 10)
-    t16 = cosine_topk(trunc, queries16, k=5).select(
-        "query_id", "neighbor_id",
-        F.col("cosine").alias("cosine16"), "rank")
-    full = cosine_topk(emb, emb.where(F.col("vec_id") < 10), k=5) \
-        .select("query_id", "neighbor_id")
-    out = t16.join(
-        full.withColumn("__f", F.lit(True)),
-        ["query_id", "neighbor_id"], "left")
-    return _round(
-        out.select("query_id", "neighbor_id", "cosine16", "rank",
-                   F.coalesce("__f", F.lit(False)).alias("in_full_topk")),
-        {"cosine16": 6})
 
 
 # ---------------------------------------------------------------------------
@@ -1506,138 +845,6 @@ def tfpw_mann_kendall_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _round(out, {"beta": 6, "r1": 6, "var_s": 6, "z": 6})
 
 
-# ---------------------------------------------------------------------------
-# Arrow+BLAS exact brute-force cosine (operators/similarity.py
-# cosine_topk_blas): int64-quantized components make every dot/norm an
-# exact integer below 2^53, so numpy's blocked matmul and DuckDB's
-# list_dot_product agree bit-for-bit. The oracle quantizes the same
-# way (the cosine therefore differs from embedding_cosine_topk's
-# unquantized value at the ~1e-6 level — by design).
-# ---------------------------------------------------------------------------
-
-
-_COSINE_BLAS_ORACLE = f"""
-    WITH cq AS (
-      SELECT vec_id,
-             list_transform(CAST(embedding AS DOUBLE[]),
-                            x -> CAST(floor(x * 1000000 + 0.5)
-                                      AS BIGINT)) AS v
-      FROM embeddings
-    ), q AS (
-      SELECT vec_id AS query_id, v AS qv FROM cq WHERE vec_id < 10
-    ), c AS (
-      SELECT vec_id AS neighbor_id, v AS cv FROM cq
-    ), s AS (
-      SELECT query_id, neighbor_id,
-             CAST(list_dot_product(cv, qv) AS DOUBLE)
-               / sqrt(CAST(list_dot_product(cv, cv) AS DOUBLE)
-                      * CAST(list_dot_product(qv, qv) AS DOUBLE))
-               AS cosine
-      FROM q, c WHERE query_id <> neighbor_id
-    ), r AS (
-      SELECT *, row_number() OVER (
-        PARTITION BY query_id
-        ORDER BY floor(cosine * 1000000000.0 + 0.5) DESC,
-                 neighbor_id) AS rank
-      FROM s
-    )
-    SELECT query_id, neighbor_id, {R('cosine', 6)} AS cosine, rank
-    FROM r WHERE rank <= 5
-"""
-
-
-@register("embedding_cosine_topk_blas", oracle=_COSINE_BLAS_ORACLE)
-def embedding_cosine_topk_blas(spark: SparkSession,
-                               sf_dir: str) -> DataFrame:
-    from ..operators.similarity import cosine_topk_blas
-
-    emb = _t(spark, sf_dir, "embeddings")
-    out = cosine_topk_blas(emb, emb.where(F.col("vec_id") < 10), k=5)
-    return _round(out, {"cosine": 6})
-
-
-# ---------------------------------------------------------------------------
-# SemDeDup with the pair stage as the Arrow+BLAS kernel
-# (operators/similarity.semantic_dedup_blas): identical k-means
-# partition/assignment/banding; pair cosines over int64-quantized
-# components (exact < 2^53 — any summation order), gated at the same
-# 1e-9-quantized threshold. NB the kernel computes
-# dot / sqrt(na * nb) — sqrt of the PRODUCT — so the oracle mirrors
-# that exact expression (sqrt(x*y) != sqrt(x)*sqrt(y) at the ulp).
-# ---------------------------------------------------------------------------
-
-
-def _qlist_sql(e: str) -> str:
-    return (f"list_transform({e}, "
-            "x -> CAST(floor(x * 1000000 + 0.5) AS BIGINT))")
-
-
-def _qcos_sql(a: str, b: str) -> str:
-    return (
-        f"CAST(list_dot_product({_qlist_sql(a)}, {_qlist_sql(b)})"
-        " AS DOUBLE)"
-        f" / sqrt(CAST(list_dot_product({_qlist_sql(a)}, {_qlist_sql(a)})"
-        " AS DOUBLE)"
-        f" * CAST(list_dot_product({_qlist_sql(b)}, {_qlist_sql(b)})"
-        " AS DOUBLE))"
-    )
-
-
-_SEMDEDUP_BLAS_ORACLE = "WITH " + _kmeans_cte(
-    16, 3, 64, corp_sql=_SEMDEDUP_CORP_SQL) + f"""
-    , afin AS MATERIALIZED (
-      SELECT vec_id, emb, cid, s FROM (
-        SELECT corp.vec_id, corp.emb, c.cid,
-               floor(({_cos_sql('corp.emb', 'c.centv', 64)})
-                     * 1000000000.0 + 0.5) AS s,
-               row_number() OVER (PARTITION BY corp.vec_id
-                 ORDER BY floor(({_cos_sql('corp.emb', 'c.centv', 64)})
-                                * 1000000000.0 + 0.5) DESC,
-                          c.cid) AS rn
-        FROM corp, cent_f c) WHERE rn = 1
-    ), banded AS MATERIALIZED (
-      SELECT vec_id, emb, cid, s FROM (
-        SELECT vec_id, emb, cid, s,
-               row_number() OVER (PARTITION BY cid
-                 ORDER BY s ASC, vec_id ASC) AS crank
-        FROM afin) WHERE crank <= 2
-    ), dropped AS (
-      SELECT DISTINCT a.vec_id
-      FROM afin a JOIN banded b ON a.cid = b.cid
-      WHERE (b.s < a.s OR (b.s = a.s AND b.vec_id < a.vec_id))
-        AND floor(({_qcos_sql('a.emb', 'b.emb')})
-                  * 1000000000.0 + 0.5) >= 950000000
-    )
-    SELECT a.vec_id, a.cid AS centroid_id,
-           {R('a.s / 1000000000.0', 6)} AS centroid_sim,
-           d.vec_id IS NULL AS kept
-    FROM afin a LEFT JOIN dropped d USING (vec_id)
-"""
-
-
-@register("semdedup_blas_prune", oracle=_SEMDEDUP_BLAS_ORACLE)
-def semdedup_blas_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.similarity import semantic_dedup_blas
-
-    emb = _t(spark, sf_dir, "embeddings")
-    vec = F.col("embedding")
-    twins = emb.where(F.col("vec_id") % 5 == 0).select(
-        (F.col("vec_id") + 100000).alias("vec_id"),
-        F.transform(
-            vec,
-            lambda x, i: x.cast("double")
-            + 0.05 * F.element_at(vec, ((i + 1) % 64 + 1).cast("int"))
-            .cast("double"),
-        ).alias("embedding"),
-    )
-    corpus = emb.select(
-        "vec_id",
-        F.transform(vec, lambda x: x.cast("double")).alias("embedding"),
-    ).unionByName(twins)
-    out = semantic_dedup_blas(corpus, threshold=0.95, max_cluster=2)
-    return _round(out, {"centroid_sim": 6})
-
-
 @register("mann_kendall_blas", oracle=_MK_ORACLE)
 def mann_kendall_blas_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Kernel twin of mann_kendall_trend (functions/kernel_twin
@@ -1656,52 +863,3 @@ def mann_kendall_blas_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("series", "yr", "n_days", "s_stat", "var_s", "z",
                 "sen_slope")
     return _round(out, {"var_s": 6, "z": 6, "sen_slope": 6})
-
-
-# ---------------------------------------------------------------------------
-# Hard-negative mining (DPR/ANCE): top-k cosine neighbors EXCLUDING
-# the labeled positives. The fixture labels each query's true top-2
-# as its positives (realistically the most-similar items ARE the
-# labels), so the exclusion provably fires: the mined negatives are
-# exactly raw ranks 3..k+2, re-ranked 1..k.
-# ---------------------------------------------------------------------------
-
-
-_HARDNEG_ORACLE = f"""
-    WITH q AS (
-      SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
-      FROM embeddings WHERE vec_id < 10
-    ), c AS (
-      SELECT vec_id AS neighbor_id, CAST(embedding AS DOUBLE[]) AS cv
-      FROM embeddings
-    ), s AS (
-      SELECT query_id, neighbor_id,
-             list_dot_product(qv, cv)
-               / (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(cv, cv)))
-               AS cosine
-      FROM q, c WHERE query_id <> neighbor_id
-    ), r AS (
-      SELECT *, row_number() OVER (PARTITION BY query_id
-                                   ORDER BY floor(cosine * 1000000000.0 + 0.5) DESC,
-                                            neighbor_id) AS rank
-      FROM s
-    )
-    SELECT query_id, neighbor_id, {R('cosine', 6)} AS cosine,
-           rank - 2 AS rank
-    FROM r WHERE rank > 2 AND rank <= 7
-"""
-
-
-@register("hard_negative_mining", oracle=_HARDNEG_ORACLE)
-def hard_negative_mining_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hard negatives per query with the true top-2 labeled positive
-    (operators/similarity.hard_negative_mining): exclusion on the
-    scored pairs before the rank window."""
-    from ..operators.similarity import cosine_topk, hard_negative_mining
-
-    emb = _t(spark, sf_dir, "embeddings")
-    queries = emb.where(F.col("vec_id") < 10)
-    positives = cosine_topk(emb, queries, k=2) \
-        .select("query_id", "neighbor_id")
-    out = hard_negative_mining(emb, queries, positives, k=5)
-    return _round(out, {"cosine": 6})

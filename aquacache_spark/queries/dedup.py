@@ -426,104 +426,6 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _round(out, {"jaccard": 6})
 
 
-def _near_dup_oracle(threshold: float, planes: int) -> str:
-    from ..operators.similarity import hyperplanes
-
-    hp = hyperplanes(planes, 64)
-    bucket = " || ".join(
-        "(CASE WHEN list_dot_product(v, ["
-        + ", ".join(repr(c) for c in plane)
-        + "]) >= 0 THEN '1' ELSE '0' END)"
-        for plane in hp
-    )
-    return f"""
-    WITH e AS (
-      SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-    ), b AS (
-      SELECT vec_id, v, {bucket} AS bucket FROM e
-    ), p AS (
-      SELECT a.vec_id AS id_a, b2.vec_id AS id_b,
-             list_dot_product(a.v, b2.v)
-               / (sqrt(list_dot_product(a.v, a.v))
-                  * sqrt(list_dot_product(b2.v, b2.v))) AS cosine
-      FROM b a JOIN b b2 USING (bucket) WHERE a.vec_id < b2.vec_id
-    )
-    SELECT id_a, id_b, {R('cosine', 6)} AS cosine
-    FROM p WHERE floor(cosine * 1000000000.0 + 0.5)
-               >= floor({threshold!r} * 1000000000.0 + 0.5)
-"""
-
-
-@register("embedding_near_dup")
-def embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs (LSH-bucketed, exact
-    cosine verify) — the fifth dedup tier over the embeddings table.
-
-    The 0.3 threshold is tuned to the synthetic corpus (near-random
-    vectors, max pairwise cosine ~0.44) so the declared query returns
-    real pairs; production near-dup removal would run 0.85-0.95."""
-    from ..operators.dedup import embedding_near_duplicates
-
-    emb = _t(spark, sf_dir, "embeddings")
-    out = embedding_near_duplicates(emb, threshold=0.3, planes=6)
-    return _round(out, {"cosine": 6})
-
-
-ORACLES["embedding_near_dup"] = _near_dup_oracle(0.3, 6)
-
-
-# ---------------------------------------------------------------------------
-# Similarity scale path: LSH-bucketed ANN (rows-only; recall vs the
-# brute-force baseline asserted in tests/test_ann_recall.py)
-# ---------------------------------------------------------------------------
-
-
-def _ann_oracle() -> str:
-    from ..operators.similarity import hyperplanes
-
-    planes = hyperplanes(6, 64)
-    bucket = " || ".join(
-        "(CASE WHEN list_dot_product(cv, ["
-        + ", ".join(repr(c) for c in plane)
-        + "]) >= 0 THEN '1' ELSE '0' END)"
-        for plane in planes
-    )
-    return f"""
-    WITH c AS (
-      SELECT vec_id AS nid, CAST(embedding AS DOUBLE[]) AS cv FROM embeddings
-    ), b AS (
-      SELECT nid, cv, {bucket} AS bucket FROM c
-    ), q AS (
-      SELECT nid AS qid, cv AS qv, bucket FROM b WHERE nid < 10
-    ), s AS (
-      SELECT q.qid AS query_id, b.nid AS neighbor_id,
-             list_dot_product(q.qv, b.cv)
-               / (sqrt(list_dot_product(q.qv, q.qv))
-                  * sqrt(list_dot_product(b.cv, b.cv))) AS cosine
-      FROM q JOIN b USING (bucket) WHERE b.nid <> q.qid
-    ), r AS (
-      SELECT *, row_number() OVER (PARTITION BY query_id
-                                   ORDER BY floor(cosine * 1000000000.0 + 0.5) DESC,
-                                            neighbor_id) AS rank
-      FROM s
-    )
-    SELECT query_id, neighbor_id, {R('cosine', 6)} AS cosine, rank
-    FROM r WHERE rank <= 5
-"""
-
-
-@register("ann_lsh_topk")
-def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.similarity import ann_topk_lsh
-
-    emb = _t(spark, sf_dir, "embeddings")
-    out = ann_topk_lsh(emb, emb.where(F.col("vec_id") < 10), k=5, planes=6)
-    return _round(out, {"cosine": 6})
-
-
-ORACLES["ann_lsh_topk"] = _ann_oracle()
-
-
 # ---------------------------------------------------------------------------
 # Vector subsystem (insertACVector.R:5-23 feature store, load_nhn.R).
 # Geometry rings are array<struct<x,y>> so containment runs in JVM

@@ -1,28 +1,16 @@
-"""WARC web-archive source — the web tier's crawl-to-corpus on-ramp.
+"""WARC web-archive source: parse .warc.gz blobs into record rows.
 
-The reference (YukonWRB/AquaCache) ingests domain files (HYDAT, GRIB2,
-SWOB-ML, GeoPackage — sources/*.py); a training-data pipeline's
-equivalent bulk drop is the WARC crawl archive. Same Spark shape as
-sources/gridded.py: a ``binaryFile`` scan fans whole .warc.gz files to
-tasks (one file per task — gzip members are only splittable after an
-index pass, and a single file is bounded by crawler rotation policy,
-~1 GB in Common Crawl practice), and an Arrow-batched ``mapInPandas``
-kernel inflates members and parses records. Record rows — not raw
-octets — are what shuffles downstream.
+Same Spark shape as sources/gridded.py: whole .warc.gz blobs sit one
+per row, and an Arrow-batched ``mapInPandas`` kernel inflates members
+and parses records where the rows already are. Record rows — not raw
+octets — are what shuffles downstream. Corrupt or truncated members
+quarantine as ok=false rows (never throw). ``synthesize_warc_files``
+builds deterministic fixtures through the real writer.
 
-Scale notes:
-- a 100 TB crawl is ~100k files; the scan parallelizes per file and
-  the kernel streams member-at-a-time, so task memory is bounded by
-  the largest single record, not the file;
-- corrupt/truncated members quarantine as ok=false rows (never throw
-  — one bad megabyte must not kill a 1000-executor stage);
-- downstream composition: filter warc_type='response' ->
-  functions.html.with_main_text -> operators.web.url_canonicalize —
-  the crawl-to-corpus capstone.
-
-Not part of the AquaCache surface: reached only from
-``queries/web.py`` — perfbench's ``warc_crawl_corpus`` probe and the
-web-tier queries a later change still has to cut.
+Not part of the AquaCache surface: the module holds only the source of
+perfbench's ``warc_crawl_corpus`` probe (``queries/web.py``), which
+composes filter warc_type='response' -> functions.html.with_main_text
+-> operators.web.url_canonicalize.
 """
 
 from __future__ import annotations
@@ -30,8 +18,7 @@ from __future__ import annotations
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 WARC_RECORD_SCHEMA = T.StructType([
@@ -88,17 +75,6 @@ def warc_records(
     return df.mapInPandas(kernel, schema=WARC_RECORD_SCHEMA)
 
 
-def read_warc(spark: SparkSession, path: str) -> DataFrame:
-    """Distributed .warc/.warc.gz ingest: binaryFile scan (one file
-    per task) -> record rows. file_id is a deterministic hash of the
-    file path (xxhash64), stable across re-reads."""
-    files = (
-        spark.read.format("binaryFile").load(path)
-        .select(F.xxhash64("path").alias("file_id"), "content")
-    )
-    return warc_records(files)
-
-
 def synthesize_warc_files(
     records: DataFrame,
     file_col: str = "file_id",
@@ -149,78 +125,3 @@ def synthesize_warc_files(
         })
 
     return records.groupBy(file_col).applyInPandas(build, out_schema)
-
-
-def write_warc(
-    df: DataFrame,
-    out_dir: str,
-    id_col: str = "doc_id",
-    url_col: str = "url",
-    payload_col: str = "payload",
-    date_col: str | None = None,
-    records_per_file: int = 1000,
-) -> DataFrame:
-    """Distributed WARC EXPORT — corpus rows back out as .warc.gz
-    response records (the archival sink mirroring :func:`read_warc`).
-
-    Rows are bucketed into files of ``records_per_file`` by a
-    deterministic id hash (NOT by partition layout, so output is
-    stable across cluster sizes/AQE decisions); each task writes its
-    whole bucket as one file, one gzip member per record. Returns the
-    (file_name, n_records, n_bytes) manifest frame.
-
-    Payload may be string (UTF-8-encoded) or binary."""
-    import os
-
-    from ..functions.warc import (build_warc, encode_warc_record,
-                                  http_response_block)
-
-    man_schema = T.StructType([
-        T.StructField("file_name", T.StringType()),
-        T.StructField("n_records", T.LongType()),
-        T.StructField("n_bytes", T.LongType()),
-    ])
-    # deterministic file assignment: dense rank of id hash would need
-    # a global sort; hash-bucket count derived from an approximate
-    # row count keeps assignment one map-side expression
-    n_rows = df.count()
-    n_files = max(1, (n_rows + records_per_file - 1) // records_per_file)
-    with_file = df.withColumn(
-        "__file", F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_files)))
-
-    def writer(pdf):
-        os.makedirs(out_dir, exist_ok=True)
-        fid = int(pdf["__file"].iloc[0])
-        pdf = pdf.sort_values(id_col, kind="mergesort")
-        recs = []
-        for r in pdf.itertuples(index=False):
-            payload = getattr(r, payload_col)
-            payload = (bytes(payload)
-                       if isinstance(payload, (bytes, bytearray))
-                       else str(payload).encode("utf-8"))
-            date = (getattr(r, date_col) if date_col
-                    else "2024-01-01T00:00:00Z")
-            hdrs = {
-                "WARC-Type": "response",
-                "WARC-Record-ID":
-                    f"urn:export:{getattr(r, id_col)}",
-                "WARC-Date": str(date),
-                "WARC-Target-URI": str(getattr(r, url_col)),
-                "Content-Type": "application/http; msgtype=response",
-            }
-            block = http_response_block(
-                200, "OK", {"Content-Type": "text/html"}, payload)
-            recs.append(encode_warc_record(hdrs, block))
-        blob = build_warc(recs, gz=True)
-        name = f"export-{fid:05d}.warc.gz"
-        tmp = os.path.join(out_dir, f".{name}.tmp-{os.getpid()}")
-        with open(tmp, "wb") as f:
-            f.write(blob)
-        os.replace(tmp, os.path.join(out_dir, name))  # atomic publish
-        import pandas as _pd
-        return _pd.DataFrame({"file_name": [name],
-                              "n_records": [len(recs)],
-                              "n_bytes": [len(blob)]})
-
-    return with_file.groupBy("__file").applyInPandas(
-        writer, man_schema)

@@ -22,6 +22,16 @@ def closed_form_ts1(epoch: float) -> float:
     return round(10 + math.sin(epoch / 86400) * 0.25, 3)
 
 
+def _long_period():
+    """period_seconds: two days for points on 2023-02-15/16, else 900."""
+    return F.when(
+        F.col("datetime").between(
+            F.lit("2023-02-15 00:00:00").cast("timestamp"),
+            F.lit("2023-02-16 23:59:59").cast("timestamp")),
+        F.lit(172800.0),
+    ).otherwise(F.lit(900.0))
+
+
 class TestCorrectedRead:
     def test_raw_scan_matches_closed_form(self, spark, store):
         rows = (
@@ -66,6 +76,16 @@ class TestCorrectedRead:
     def test_unknown_series_raises_key_error(self, store):
         with pytest.raises(KeyError, match="unknown timeseries_id 999"):
             api.measurements_continuous_corrected(store, 999)
+
+    def test_period_column_not_leaked(self, store):
+        import dataclasses
+
+        store2 = dataclasses.replace(
+            store, measurements=store.measurements.withColumn(
+                "period_seconds", _long_period()))
+        out = api.measurements_continuous_corrected(
+            store2, 1, "2023-02-14 00:00:00", "2023-02-17 00:00:00")
+        assert out.columns == ["datetime", "corrected_value"]
 
     def test_resampled_mean(self, spark, store):
         out = api.measurements_continuous_corrected(
@@ -272,6 +292,49 @@ class TestDailyAt:
         ).collect()
         assert sorted(map(tuple, at)) == sorted(map(tuple, live))
 
+
+    def test_period_carried_through_replay(self, spark, store):
+        import dataclasses
+        import datetime as dt
+
+        store2 = dataclasses.replace(
+            store,
+            measurements=store.measurements.withColumn(
+                "period_seconds", _long_period()),
+            measurement_versions=store.measurement_versions.withColumn(
+                "period_seconds", _long_period()),
+        )
+        live = {
+            r["date"]: r["value"]
+            for r in api.measurements_calculated_daily(
+                store2, 1, start_date="2023-02-13", end_date="2023-02-18"
+            ).collect()
+        }
+        at = {
+            r["date"]: r["value"]
+            for r in api.measurements_calculated_daily_at(
+                store2, 1, "2023-04-01 00:00:00",
+                start_date="2023-02-13", end_date="2023-02-18",
+            ).collect()
+        }
+        assert at == live
+        # the replayed rows keep their period: two-day points are
+        # filtered out of the as-of read as they are out of the live one
+        long_days = {dt.date(2023, 2, 15), dt.date(2023, 2, 16)}
+        assert long_days.isdisjoint(d for d, v in at.items()
+                                    if v is not None)
+        assert {dt.date(2023, 2, 14), dt.date(2023, 2, 17)} <= {
+            d for d, v in at.items() if v is not None}
+
+    def test_period_missing_from_log_raises(self, store):
+        import dataclasses
+
+        store2 = dataclasses.replace(
+            store, measurements=store.measurements.withColumn(
+                "period_seconds", _long_period()))
+        with pytest.raises(ValueError, match="period_seconds"):
+            api.measurements_calculated_daily_at(
+                store2, 1, "2023-04-01 00:00:00")
 
     def test_unknown_series_raises_key_error(self, store):
         import dataclasses

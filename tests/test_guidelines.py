@@ -186,27 +186,6 @@ def test_applicability_include_unresolved_filters(spark):
     assert rolled_t[0]["derivation_inputs"].startswith('[{"rule_id":1,')
 
 
-def test_cosine_blas_contract_guards(spark):
-    # ADVICE r10: empty query set raises; dim * max|code|^2 >= 2^53
-    # raises instead of silently degrading the bit-exact contract
-    import pytest
-
-    from aquacache_spark.operators.similarity import cosine_topk_blas
-
-    corpus = spark.createDataFrame(
-        [(0, [1.0, 0.0]), (1, [0.0, 1.0])],
-        "vec_id long, embedding array<double>")
-    empty = corpus.where("vec_id < 0")
-    with pytest.raises(ValueError, match="empty query set"):
-        cosine_topk_blas(corpus, empty, k=1)
-    big = spark.createDataFrame(
-        [(0, [1e5, 0.0]), (1, [0.0, 1e5])],
-        "vec_id long, embedding array<double>")
-    with pytest.raises(ValueError, match="2\\^53"):
-        # |code| = 1e5 * 1e6 = 1e11; dim * code^2 = 2e22 >> 2^53
-        cosine_topk_blas(big, big, k=1)
-
-
 def test_validate_guideline_value_rule_arms():
     """Every arm of the write-side trigger port
     (patch_55.R:849-1060) fires with the trigger's first-violation

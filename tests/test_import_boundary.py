@@ -5,7 +5,9 @@ Static AST scan, no Spark: the tier modules may be imported only by
 the three query modules that host perfbench's batch probes and by each
 other, and each of those query modules registers exactly the listed
 queries that reach tier code — its probe plus the tier queries not yet
-cut. The lists may only shrink.
+cut. The lists may only shrink. Every definition in the tier files
+that only the probes keep must be reachable from a registered query,
+so dead tier code cannot hide behind a live probe.
 """
 
 import ast
@@ -33,12 +35,11 @@ GONE = {
 TIER_QUERIES = {
     "aquacache_spark.queries.dedup": {
         "minhash_lsh_pairs",
-        "ann_lsh_topk", "asset_cross_modal_dedup",
-        "audio_fingerprint_near_dup", "audio_spectral_near_dup",
-        "bigram_surprisal", "cluster_safe_split", "corpus_curation",
-        "curation_full_gate", "dedup_best_of_cluster", "dedup_clusters",
-        "dedup_exact", "edit_verified_clusters", "edit_verified_pairs",
-        "embedding_near_dup", "eval_decontamination",
+        "asset_cross_modal_dedup", "audio_fingerprint_near_dup",
+        "audio_spectral_near_dup", "bigram_surprisal", "cluster_safe_split",
+        "corpus_curation", "curation_full_gate", "dedup_best_of_cluster",
+        "dedup_clusters", "dedup_exact", "edit_verified_clusters",
+        "edit_verified_pairs", "eval_decontamination",
         "hash_stratified_sample", "image_phash_near_dup",
         "incremental_lsh_parity", "incremental_paragraph_parity",
         "lsh_capped_pairs", "minhash_signatures", "ngram_jaccard_pairs",
@@ -47,24 +48,18 @@ TIER_QUERIES = {
         "unigram_surprisal", "video_fingerprint_near_dup",
         "weighted_stratified_sample", "winnow_fingerprints",
     },
-    "aquacache_spark.queries.ann": {
-        "embedding_cosine_topk",
-        "ann_ivf_topk", "ann_ivfpq_topk", "ann_pq_topk",
-        "embedding_cosine_topk_blas", "embedding_int8_quantization",
-        "embedding_ip_topk", "embedding_l2_topk", "hard_negative_mining",
-        "ivf_kmeans_centroids", "matryoshka_truncated_topk",
-        "semdedup_blas_prune", "semdedup_capped_prune", "semdedup_prune",
-    },
-    "aquacache_spark.queries.web": {
-        "warc_crawl_corpus",
-        "canonical_url_dedup", "crawl_frontier_priority",
-        "html_main_text_extract", "provenance_curation_gate",
-        "psl_wildcard_resolution", "robots_rules_parse",
-        "robots_url_filter", "sitemap_url_ingest", "url_canonicalization",
-        "url_domain_rollup", "url_domain_rollup_psl", "warc_record_ingest",
-        "warc_robots_gated_corpus",
-    },
+    "aquacache_spark.queries.ann": {"embedding_cosine_topk"},
+    "aquacache_spark.queries.web": {"warc_crawl_corpus"},
 }
+# Tier files that only the probes keep: each top-level definition in
+# them must be reached from a registered query.
+PROBE_ONLY = (
+    "aquacache_spark.operators.similarity",
+    "aquacache_spark.operators.web",
+    "aquacache_spark.functions.html",
+    "aquacache_spark.functions.warc",
+    "aquacache_spark.sources.warc",
+)
 
 
 def _modules() -> dict[str, Path]:
@@ -80,18 +75,22 @@ def _modules() -> dict[str, Path]:
 MODULES = _modules()
 
 
+def _from_base(mod: str, is_pkg: bool, node: ast.ImportFrom) -> str:
+    """Absolute module name of a ``from ... import`` statement."""
+    if not node.level:
+        return node.module or ""
+    parts = mod.split(".") if is_pkg else mod.split(".")[:-1]
+    parts = parts[:len(parts) - node.level + 1]
+    return ".".join(parts + ([node.module] if node.module else []))
+
+
 def _imported(mod: str, is_pkg: bool, node: ast.AST) -> set[str]:
     """Package modules named by one import statement."""
     if isinstance(node, ast.Import):
         return {a.name for a in node.names if a.name in MODULES}
     if not isinstance(node, ast.ImportFrom):
         return set()
-    if node.level:
-        parts = mod.split(".") if is_pkg else mod.split(".")[:-1]
-        parts = parts[:len(parts) - node.level + 1]
-        base = ".".join(parts + ([node.module] if node.module else []))
-    else:
-        base = node.module or ""
+    base = _from_base(mod, is_pkg, node)
     out = {f"{base}.{a.name}" for a in node.names
            if f"{base}.{a.name}" in MODULES}
     if base in MODULES and len(out) < len(node.names):
@@ -149,3 +148,48 @@ def test_each_probe_host_registers_only_its_listed_tier_queries():
         on_tier = {_registered(fn) for name, fn in funcs.items()
                    if _registered(fn) and reaches_tier(name, set())}
         assert on_tier == listed, mod
+
+
+def test_probe_only_tier_definitions_are_reached_from_queries():
+    trees = {m: ast.parse(p.read_text()) for m, p in MODULES.items()}
+    defs = {m: {n.name: n for n in t.body
+                if isinstance(n, (ast.FunctionDef, ast.ClassDef))}
+            for m, t in trees.items()}
+    # module-level ``from x import name [as alias]`` -> (x, name)
+    aliases = {
+        m: {a.asname or a.name:
+            (_from_base(m, MODULES[m].name == "__init__.py", n), a.name)
+            for n in t.body if isinstance(n, ast.ImportFrom)
+            for a in n.names}
+        for m, t in trees.items()}
+
+    def refs(mod: str, node: ast.AST) -> set:
+        """(module, name) definitions one definition names or imports."""
+        is_pkg = MODULES[mod].name == "__init__.py"
+        out = set()
+        for n in ast.walk(node):
+            if isinstance(n, ast.ImportFrom):
+                base = _from_base(mod, is_pkg, n)
+                out |= {(base, a.name) for a in n.names
+                        if a.name in defs.get(base, {})}
+            elif isinstance(n, ast.Name):
+                if n.id in defs[mod]:
+                    out.add((mod, n.id))
+                elif n.id in aliases[mod]:
+                    out.add(aliases[mod][n.id])
+        return out
+
+    stack = [(m, name) for m in MODULES
+             if m.startswith("aquacache_spark.queries.")
+             for name, fn in defs[m].items()
+             if isinstance(fn, ast.FunctionDef) and _registered(fn)]
+    seen = set()
+    while stack:
+        mod, name = stack.pop()
+        if (mod, name) in seen or name not in defs.get(mod, {}):
+            continue
+        seen.add((mod, name))
+        stack.extend(refs(mod, defs[mod][name]))
+    unreached = sorted(f"{m}.{name}" for m in PROBE_ONLY
+                       for name in defs[m] if (m, name) not in seen)
+    assert unreached == []

@@ -365,11 +365,10 @@ def test_discrete_metadata_views_dims_broadcast(spark):
 
 
 def test_round9_new_queries_no_pathological_joins(spark):
-    # WARC capstones, incremental LSH, SPI: none may plan a cartesian
-    # or nested-loop join anywhere (the robots chain, the store probe,
-    # and the rank windows are all equi-keyed)
-    for name in ("warc_record_ingest", "warc_crawl_corpus",
-                 "warc_robots_gated_corpus", "spi_empirical_3mo"):
+    # WARC capstone, SPI: neither may plan a cartesian or nested-loop
+    # join anywhere (the store probe and the rank windows are all
+    # equi-keyed)
+    for name in ("warc_crawl_corpus", "spi_empirical_3mo"):
         p = plan(spark, name)
         assert "CartesianProduct" not in p, name
         assert "BroadcastNestedLoopJoin" not in p, name

@@ -1,4 +1,4 @@
-"""WARC codec + source: roundtrip, quarantine, distributed ingest."""
+"""WARC codec + source: roundtrip, quarantine, distributed record parse."""
 
 import gzip
 
@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 from aquacache_spark.functions.warc import (
     build_warc, encode_warc_record, gzip_member, http_response_block,
     iter_warc_records, parse_http_response)
-from aquacache_spark.sources.warc import read_warc, warc_records
+from aquacache_spark.sources.warc import warc_records
 
 
 def _resp(i: int, payload: bytes = b"<html>x</html>",
@@ -107,23 +107,6 @@ def test_http_block_without_head_is_passthrough():
     assert r["payload"] == b"no http head here"
 
 
-def test_distributed_read_warc(spark, tmp_path):
-    d = tmp_path / "warcs"
-    d.mkdir()
-    for f in range(3):
-        recs = [_resp(f * 10 + i) for i in range(4)] + [_req(f * 10)]
-        (d / f"crawl-{f}.warc.gz").write_bytes(build_warc(recs))
-    out = read_warc(spark, str(d))
-    rows = out.collect()
-    assert len(rows) == 15
-    resp = out.where(F.col("warc_type") == "response")
-    assert resp.count() == 12
-    assert resp.where(~F.col("ok")).count() == 0
-    # file identity is stable per path: 3 distinct file_ids, 5 rows each
-    per = out.groupBy("file_id").count().collect()
-    assert sorted(r["count"] for r in per) == [5, 5, 5]
-
-
 def test_warc_records_quarantine_distributed(spark):
     good = build_warc([_resp(1), _resp(2)])
     bad = good[:25] + b"\xff\xff\xff\xff" + good[29:]
@@ -137,34 +120,3 @@ def test_warc_records_quarantine_distributed(spark):
     # the good file parses fully even when a sibling file is corrupt
     assert out.where(F.col("ok")
                      & (F.col("file_id") == 0)).count() == 2
-
-
-def test_write_warc_roundtrip(spark, tmp_path):
-    # export -> re-ingest: every record survives with its URL and
-    # payload; file assignment is deterministic (id-hash, not
-    # partition layout)
-    from aquacache_spark.sources.warc import write_warc
-
-    docs = spark.createDataFrame(
-        [(i, f"https://example.org/d/{i}", f"body {i} text")
-         for i in range(57)],
-        "doc_id long, url string, payload string")
-    out = str(tmp_path / "export")
-    man1 = {r["file_name"]: (r["n_records"], r["n_bytes"])
-            for r in write_warc(docs, out,
-                                records_per_file=20).collect()}
-    assert sum(n for n, _ in man1.values()) == 57
-    assert len(man1) == 3  # ceil(57/20) hash buckets
-    back = read_warc(spark, out)
-    rows = back.collect()
-    assert len(rows) == 57
-    assert all(r["ok"] and r["warc_type"] == "response" for r in rows)
-    got = {int(r["record_id"].split(":")[-1]):
-           bytes(r["payload"]).decode() for r in rows}
-    assert got == {i: f"body {i} text" for i in range(57)}
-    # repartitioned input produces the identical file assignment
-    out2 = str(tmp_path / "export2")
-    man2 = {r["file_name"]: (r["n_records"], r["n_bytes"])
-            for r in write_warc(docs.repartition(7), out2,
-                                records_per_file=20).collect()}
-    assert man1 == man2
