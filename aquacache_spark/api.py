@@ -249,7 +249,9 @@ def measurements_calculated_daily_at(
     inst/patches/patch_50.R:128-420): replay the measurement version
     log to ``as_of`` — latest version committed at or before the
     timestamp wins per (series, datetime), tombstones drop the key —
-    then run the IDENTICAL daily pipeline as the live read. A store
+    then run the IDENTICAL daily pipeline as the live read. The replay
+    covers the series and every member series its compound definition
+    reaches, so a compound reads its members as of ``as_of`` too. A store
     without recorded history reads as the live table at every
     timestamp (the reference's audit tables start empty). When the
     store's measurements carry ``period_seconds`` the log must record it
@@ -276,9 +278,17 @@ def measurements_calculated_daily_at(
             "store measurements carry period_seconds but "
             "measurement_versions does not record it"
         )
+    # a compound reads its members, so replay every series it reaches
+    closure, todo = set(), [timeseries_id]
+    while todo:
+        s = todo.pop()
+        if s not in closure:
+            closure.add(s)
+            todo += [m["timeseries_id"]
+                     for m in store.compounds.get(s, {}).get("members", [])]
+    in_closure = F.col("timeseries_id").isin(*sorted(closure))
     vis = versions.where(
-        (F.col("timeseries_id") == timeseries_id)
-        & (F.col("modified_at") <= F.lit(as_of).cast("timestamp"))
+        in_closure & (F.col("modified_at") <= F.lit(as_of).cast("timestamp"))
     )
     w = Window.partitionBy("timeseries_id", "datetime").orderBy(
         F.desc("modified_at"), F.desc("version_id")
@@ -291,9 +301,7 @@ def measurements_calculated_daily_at(
             F.lit(False).alias("no_update"), *period,
         )
     )
-    others = store.measurements.where(
-        F.col("timeseries_id") != timeseries_id
-    )
+    others = store.measurements.where(~in_closure)
     at_store = dataclasses.replace(
         store, measurements=snap.unionByName(others)
     )

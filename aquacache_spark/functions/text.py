@@ -159,23 +159,6 @@ def lang_id_multi(text: Column, threshold: float = 0.05) -> Column:
     return bind(lang_scores(text), pick)
 
 
-def word_ngrams(text: Column, k: int) -> Column:
-    """All k-word n-grams in document order, NOT deduplicated —
-    repetition metrics need occurrence multiplicities (word_shingles
-    dedups for set semantics). Short docs (< k tokens) yield an empty
-    array rather than a partial gram."""
-
-    def grams_of(toks: Column) -> Column:
-        n = F.size(toks)
-        idx = F.sequence(F.lit(0), n - k)
-        return F.when(
-            n >= k,
-            F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i + 1, k))),
-        ).otherwise(F.array().cast("array<string>"))
-
-    return bind(tokens(F.lower(text)), grams_of)
-
-
 def top_count(arr: Column) -> Column:
     """Max multiplicity of any element in the array, computed within
     the row: sort, then fold counting the longest run of equal adjacent

@@ -192,8 +192,8 @@ def extract_bmp_features(
 def resize_image_blob(blob: bytes, out_h: int, out_w: int) -> bytes:
     """BMP bytes -> block-mean-downscaled BMP bytes. EXACT integer
     arithmetic: each output pixel is the floor-divided sum of its
-    source block (crop to the divisible region first, like the pHash
-    pooling) — deterministic and SQL-replayable, no float resampling."""
+    source block (crop to the divisible region first) — deterministic
+    and SQL-replayable, no float resampling."""
     import numpy as np
 
     px = decode_bmp(blob)
@@ -841,63 +841,15 @@ def synthesize_progressive_jpegs(
 
 
 # ---------------------------------------------------------------------------
-# Video temporal fingerprint: decode every frame through the real
-# MJPEG/JPEG path, take each frame's EXACT integer luma sum, and set
-# bit f iff luma rises from frame f to f+1 — the shot-rhythm
-# signature. Brightness-offset copies (uniform per-video re-grade)
-# fingerprint identically (constant offsets cancel in deltas). Exact
-# integers end to end, so the oracle replays the closed-form frames.
+# Video temporal analysis: decode every frame through the real
+# MJPEG/JPEG path and take each frame's EXACT integer luma sum; scene
+# cuts and shot signatures work on those sums and their deltas.
+# Brightness-offset copies (uniform per-video re-grade) cancel in the
+# deltas. Exact integers end to end, so the oracle replays the
+# closed-form frames.
 # ---------------------------------------------------------------------------
 
 _VFP_FRAMES = 16
-
-
-def video_fingerprint(frames_luma_sums) -> int:
-    """Frame-ordered integer luma sums -> (n-1)-bit rise/fall code."""
-    fp = 0
-    s = list(frames_luma_sums)[:_VFP_FRAMES]
-    for f in range(len(s) - 1):
-        if s[f + 1] > s[f]:
-            fp |= 1 << f
-    return fp
-
-
-def extract_video_fingerprint(
-    df: DataFrame,
-    id_col: str = "media_id",
-    blob_col: str = "content",
-) -> DataFrame:
-    """(id, fingerprint) over MJPEG-AVI blobs: every retained frame is
-    entropy-decoded (no sampling — the fingerprint needs the full
-    temporal sequence); undecodable inputs quarantine as NULL."""
-    from ..functions.avi import decode_avi
-    from ..functions.jpeg import decode_jpeg
-
-    schema = T.StructType([
-        T.StructField(id_col, T.LongType()),
-        T.StructField("fingerprint", T.LongType()),
-    ])
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in it:
-            out = []
-            for blob in pdf[blob_col]:
-                try:
-                    v = decode_avi(bytes(blob))
-                    sums = [int(np.asarray(decode_jpeg(fr)[:, :, 0],
-                                           dtype=np.int64).sum())
-                            for fr in v["frames"][:_VFP_FRAMES]]
-                    out.append(video_fingerprint(sums))
-                except (ValueError, IndexError):
-                    out.append(None)
-            yield pd.DataFrame({
-                id_col: pdf[id_col].astype("int64"),
-                "fingerprint": pd.Series(out, dtype="Int64"),
-            })
-
-    return df.select(id_col, blob_col).mapInPandas(batches, schema)
 
 
 def scene_cuts(frame_luma_sums, n_pixels: int, tau: int = 8) -> tuple:
@@ -986,7 +938,7 @@ def extract_video_shot_signatures(
     - ``mode='exact'``: md5 of the comma-joined integer deltas — the
       bit-exact tier and the differential-oracle regime;
     - ``mode='sign'``: md5 of the delta SIGN string (+/-/0 per
-      transition, the video-fingerprint quantization) — a lossy
+      transition) — a lossy
       re-encode perturbs delta magnitudes but rarely their direction,
       so sign signatures survive recompression that breaks the exact
       tier (kept alongside it, not instead: sign mode trades a
@@ -1222,11 +1174,11 @@ def synthesize_group_avis(
     n_frames: int = _VFP_FRAMES,
     fps: int = 10,
 ) -> DataFrame:
-    """16-frame MJPEG AVIs for the fingerprint tier: frame f of item i
+    """16-frame MJPEG AVIs for the video queries: frame f of item i
     is the 16x16 four-block mosaic of its GROUP g = i % 8 — block b
     valued (g*7 + f*11 + b*37) % 200 + 28 — plus a per-item uniform
     brightness offset (i % 3) * 4, so group twins are re-graded copies
-    that must fingerprint identically. Quality-100 block-constant
+    with identical luma deltas. Quality-100 block-constant
     frames are bit-exact through the JPEG round trip, keeping the
     frame luma sums the closed form the oracle replays."""
     from ..functions.avi import encode_avi
@@ -1261,142 +1213,22 @@ def synthesize_group_avis(
 
 
 # ---------------------------------------------------------------------------
-# Perceptual hashing (pHash): decode -> grayscale -> 32x32 block-mean
-# pool -> 2D DCT -> top-left 8x8 band (DC excluded) -> 63-bit
-# signature. The image-side near-duplicate detector: identical or
-# lightly re-encoded/re-scaled images land within a few Hamming bits,
-# then a pigeonhole banding over the bits finds pairs without an
-# all-pairs join. Two threshold modes:
-#
-# - 'median' (the classic pHash, production default): bit = coefficient
-#   above the band median — illumination-invariant, ~32 bits set, well
-#   spread across bands;
-# - 'fixed' (the differential-oracle regime): bit = quantized
-#   coefficient > tau. Median thresholding ranks near-zero noise
-#   coefficients, so a one-count pixel difference (e.g. a libm cos ulp
-#   between engines) can flip noise-rank bits — a determinism hazard
-#   for cross-engine verification, not a robustness feature. The fixed
-#   threshold keeps every bit decided by a >= 6-sigma margin, so the
-#   DuckDB oracle can replay pixels -> DCT -> hash exactly.
-# ---------------------------------------------------------------------------
-
-_PHASH_Q = 1_000_000  # coefficient quantum (repo exact-sum idiom)
-
-
-def _dct_basis(n: int):
-    import numpy as np
-
-    t = np.arange(n)
-    b = np.cos((2 * t[None, :] + 1) * np.arange(n)[:, None] * np.pi
-               / (2 * n))
-    b *= np.sqrt(2.0 / n)
-    b[0] *= np.sqrt(0.5)
-    return b
-
-
-def phash64(gray, method: str = "median", tau: float = 100.0) -> int:
-    """(h, w) uint8 grayscale -> 63-bit perceptual hash (top-left 8x8
-    DCT band, DC excluded; bit index = u*8 + v - 1, row-major)."""
-    import numpy as np
-
-    img = np.asarray(gray, dtype=np.float64)
-    h, w = img.shape
-    if (h, w) != (32, 32):  # block-mean pool onto the 32x32 grid
-        ph, pw = h // 32, w // 32
-        if ph < 1 or pw < 1:
-            raise ValueError("pHash input must be at least 32x32")
-        img = img[:ph * 32, :pw * 32].reshape(32, ph, 32, pw).mean((1, 3))
-    b = _dct_basis(32)
-    c = b @ img.T @ b.T  # C[u, v]: u along x (cols), v along y (rows)
-    band = c[:8, :8]
-    q = np.floor(band * _PHASH_Q + 0.5).astype(np.int64).reshape(64)[1:]
-    if method == "median":
-        thr = int(np.median(q))
-    elif method == "fixed":
-        thr = int(tau * _PHASH_Q)
-    else:
-        raise ValueError("method must be 'median' or 'fixed'")
-    bits = q > thr
-    return int(sum(1 << i for i in range(63) if bits[i]))
-
-
-def extract_image_phash(
-    df: DataFrame,
-    id_col: str = "media_id",
-    blob_col: str = "content",
-    method: str = "median",
-    tau: float = 100.0,
-) -> DataFrame:
-    """(id, phash) over BMP blobs — map-only Arrow kernel; undecodable
-    inputs quarantine as NULL hash."""
-    schema = T.StructType([
-        T.StructField(id_col, T.LongType()),
-        T.StructField("phash", T.LongType()),
-    ])
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in it:
-            out = []
-            for blob in pdf[blob_col]:
-                try:
-                    px = decode_bmp(bytes(blob))
-                    gray = np.asarray(px[:, :, 0], dtype=np.float64)
-                    out.append(phash64(gray, method=method, tau=tau))
-                except (ValueError, IndexError):
-                    out.append(None)
-            yield pd.DataFrame({
-                id_col: pdf[id_col].astype("int64"),
-                "phash": pd.Series(out, dtype="Int64"),
-            })
-
-    return df.select(id_col, blob_col).mapInPandas(batches, schema)
-
-
-# ---------------------------------------------------------------------------
-# Audio fingerprinting: the Haitsma-Kalker/Shazam-family shape reduced
-# to EXACT integer arithmetic — per-frame per-band energies (sums of
-# squared PCM samples, int64-exact) and sign-of-delta bits across
-# adjacent frames. Monotone gain changes scale every energy by the
-# same factor, so re-levelled copies of a recording fingerprint
-# identically; the pair stage reuses the pigeonhole banding. All-int
-# energies make the DuckDB oracle an exact replay, no float-sum risk.
+# Audio spectral analysis in EXACT integer arithmetic: the clip is cut
+# into 16 frames of 256 samples, and energies are sums of squared PCM
+# samples (int64-exact), so the DuckDB oracle is an exact replay with
+# no float-sum risk.
 # ---------------------------------------------------------------------------
 
 _FP_FRAMES = 16   # frames considered
 _FP_FRAME = 256   # samples per frame
-_FP_BANDS = 4     # sub-bands per frame (time-domain energy quarters)
 
 
-def audio_fingerprint64(samples) -> int:
-    """int16 PCM -> 60-bit fingerprint: bit b*15+f set iff band b's
-    energy RISES from frame f to f+1 (f < 15). Exact integer sums."""
-    import numpy as np
-
-    s = np.asarray(samples, dtype=np.int64)
-    need = _FP_FRAMES * _FP_FRAME
-    if s.size < need:
-        s = np.pad(s, (0, need - s.size))
-    s = s[:need]
-    e = (s * s).reshape(_FP_FRAMES, _FP_BANDS,
-                        _FP_FRAME // _FP_BANDS).sum(axis=2)
-    fp = 0
-    for b in range(_FP_BANDS):
-        for f in range(_FP_FRAMES - 1):
-            if e[f + 1, b] > e[f, b]:
-                fp |= 1 << (b * (_FP_FRAMES - 1) + f)
-    return fp
-
-
-# Spectral variant (the Haitsma-Kalker shape): per frame, an INTEGER
-# DFT over 4-sample chunk pre-sums, 16 bins grouped into 4 frequency
-# bands; bit = band energy rises between adjacent frames. The basis is
-# a fixed-point cosine/sine table (scale 128) computed once with
-# math.cos/sin and shared VERBATIM with the DuckDB oracle (embedded as
-# list literals), so both engines do exact int64 arithmetic — no
-# cross-engine trig drift can flip a sign-of-delta bit. Gain
-# invariance is exact: energies are quadratic forms in the samples.
+# Per frame, an INTEGER DFT over 4-sample chunk pre-sums, 16 bins. The
+# basis is a fixed-point cosine/sine table (scale 128) computed once
+# with math.cos/sin and shared VERBATIM with the DuckDB oracle
+# (embedded as list literals), so both engines do exact int64
+# arithmetic — no cross-engine trig drift. Gain invariance is exact:
+# energies are quadratic forms in the samples.
 _SPEC_CHUNK = 4                      # samples pre-summed per DFT point
 _SPEC_N = _FP_FRAME // _SPEC_CHUNK   # DFT length (64)
 _SPEC_BINS = 16                      # bins 1..16 (DC skipped)
@@ -1420,73 +1252,10 @@ def _spec_basis() -> tuple[list[list[int]], list[list[int]]]:
     return bc, bs
 
 
-def audio_spectral_fingerprint64(samples) -> int:
-    """int16 PCM -> 60-bit spectral fingerprint: bit b*15+f set iff
-    frequency band b's DFT energy RISES from frame f to f+1.
-
-    Exact for ANY int16 input: the per-frame per-bin energy is int64-
-    safe by construction (|chunk sum| <= 4*32768 = 2^17, so |cr| <=
-    64 * 2^17 * 128 = 2^30 and cr^2 + ci^2 <= 2^61), while the 4-bin
-    band sums — which CAN reach 2^63 on full-scale PCM — accumulate in
-    Python big ints, so the rise/fall comparisons never wrap."""
-    import numpy as np
-
-    bc, bs = _spec_basis()
-    cb = np.asarray(bc, dtype=np.int64)   # (BINS, N)
-    sb = np.asarray(bs, dtype=np.int64)
-    s = np.asarray(samples, dtype=np.int64)
-    need = _FP_FRAMES * _FP_FRAME
-    if s.size < need:
-        s = np.pad(s, (0, need - s.size))
-    cs = s[:need].reshape(_FP_FRAMES, _SPEC_N, _SPEC_CHUNK).sum(axis=2)
-    cr = cs @ cb.T                        # (FRAMES, BINS)
-    ci = cs @ sb.T
-    eraw = cr * cr + ci * ci              # (FRAMES, BINS) exact int64
-    g = _SPEC_BINS // _FP_BANDS
-    e = [[sum(int(eraw[f, b * g + j]) for j in range(g))
-          for b in range(_FP_BANDS)] for f in range(_FP_FRAMES)]
-    fp = 0
-    for b in range(_FP_BANDS):
-        for f in range(_FP_FRAMES - 1):
-            if e[f + 1][b] > e[f][b]:
-                fp |= 1 << (b * (_FP_FRAMES - 1) + f)
-    return fp
-
-
-def extract_audio_spectral_fingerprint(
-    df: DataFrame,
-    id_col: str = "media_id",
-    blob_col: str = "content",
-) -> DataFrame:
-    """(id, fingerprint) over WAV blobs using the spectral (DFT)
-    kernel — map-only Arrow kernel; undecodable inputs quarantine as
-    NULL."""
-    schema = T.StructType([
-        T.StructField(id_col, T.LongType()),
-        T.StructField("fingerprint", T.LongType()),
-    ])
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = []
-            for blob in pdf[blob_col]:
-                try:
-                    _rate, _ch, samples = decode_wav(bytes(blob))
-                    out.append(audio_spectral_fingerprint64(samples[:, 0]))
-                except (ValueError, IndexError):
-                    out.append(None)
-            yield pd.DataFrame({
-                id_col: pdf[id_col].astype("int64"),
-                "fingerprint": pd.Series(out, dtype="Int64"),
-            })
-
-    return df.select(id_col, blob_col).mapInPandas(batches, schema)
-
-
 def audio_spectral_features(samples) -> tuple:
     """int16 PCM -> (spectral_centroid, rolloff_bin, total_energy):
-    whole-clip DFT bin energies via the SAME fixed-point integer basis
-    as the fingerprint, then
+    whole-clip DFT bin energies via the fixed-point integer basis
+    above, then
 
     - centroid = sum(bin * E_bin) / sum(E_bin)  (bins 1..16);
     - rolloff  = smallest bin with cumulative energy >= 85% of total
@@ -1568,35 +1337,6 @@ def extract_audio_spectral_features(
     return df.select(id_col, blob_col).mapInPandas(batches, schema)
 
 
-def extract_audio_fingerprint(
-    df: DataFrame,
-    id_col: str = "media_id",
-    blob_col: str = "content",
-) -> DataFrame:
-    """(id, fingerprint) over WAV blobs — map-only Arrow kernel;
-    undecodable inputs quarantine as NULL."""
-    schema = T.StructType([
-        T.StructField(id_col, T.LongType()),
-        T.StructField("fingerprint", T.LongType()),
-    ])
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = []
-            for blob in pdf[blob_col]:
-                try:
-                    _rate, _ch, samples = decode_wav(bytes(blob))
-                    out.append(audio_fingerprint64(samples[:, 0]))
-                except (ValueError, IndexError):
-                    out.append(None)
-            yield pd.DataFrame({
-                id_col: pdf[id_col].astype("int64"),
-                "fingerprint": pd.Series(out, dtype="Int64"),
-            })
-
-    return df.select(id_col, blob_col).mapInPandas(batches, schema)
-
-
 def image_sharpness(gray) -> tuple:
     """Grayscale pixels -> (n_interior, lap_sum, lap_var): the
     4-neighbor integer Laplacian over interior pixels, and its
@@ -1656,12 +1396,11 @@ def synthesize_tone_wavs(
     df: DataFrame,
     id_col: str = "media_id",
 ) -> DataFrame:
-    """16-frame WAV fixtures for the fingerprint tier: item i plays
+    """16-frame WAV fixtures for the audio queries: item i plays
     the waveform of its GROUP i % 8 — sample k is
     (1 + i % 3) * (((i % 8) * 37 + k * 101) % 4001 - 2000) — so items
-    sharing a group are re-levelled copies (per-item gain 1-3x) that
-    must fingerprint identically; encoded through the real PCM16
-    writer."""
+    sharing a group are re-levelled copies (per-item gain 1-3x);
+    encoded through the real PCM16 writer."""
     schema = T.StructType([
         T.StructField(id_col, T.LongType()),
         T.StructField("content", T.BinaryType()),
@@ -1691,12 +1430,10 @@ def synthesize_pattern_bmps(
     """32x32 grayscale cosine-pattern BMPs (lossless, via the real BMP
     writer): item i superposes three DCT basis modes selected by its
     PATTERN KEY i % 16 — so items sharing a key are near-duplicates
-    (identical hash; amplitudes carry a small per-item jitter that
-    moves pixels but no hash bit) — at amplitudes (40 + i % 3, 25, 15)
-    around mid-gray. No clipping occurs (128 +- 83), so the DCT
-    coefficients are the closed form 16*amplitude at the chosen modes
-    and rounding noise (<= ~32 pre-quantization) everywhere else: every
-    hash bit is decided by a wide margin the SQL oracle reproduces."""
+    (amplitudes carry a small per-item jitter that moves pixels) — at
+    amplitudes (40 + i % 3, 25, 15) around mid-gray. No clipping
+    occurs (128 +- 83), so the pixels are the closed form the SQL
+    oracle reproduces."""
     schema = T.StructType([
         T.StructField(id_col, T.LongType()),
         T.StructField("content", T.BinaryType()),

@@ -1,14 +1,13 @@
 """Query registry package: one module per query family, the shared
 registry/fixture core in ``_common``. Importing this package registers
-all 252 queries (each module registers into ``_common.QUERIES`` /
+all 222 queries (each module registers into ``_common.QUERIES`` /
 ``_common.ORACLES`` at import time).
 
 ``core``, ``hydrology`` and ``multimodal`` hold the AquaCache surface.
 ``dedup``, ``ann`` and ``web`` hold text, trend and graph queries plus
 what is left of the LLM-corpus dedup, ANN-search and web-crawl tiers:
 one perfbench batch probe each (``minhash_lsh_pairs``,
-``embedding_cosine_topk``, ``warc_crawl_corpus``) and, in ``dedup``,
-the dedup-tier queries a later change still has to cut (listed in
+``embedding_cosine_topk``, ``warc_crawl_corpus``; listed in
 tests/test_import_boundary.py). Only these three modules may import
 the tier modules (``operators/{dedup,similarity,web}.py``,
 ``functions/{html,warc}.py``, ``sources/warc.py``).

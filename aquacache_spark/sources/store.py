@@ -11,8 +11,8 @@ write amplification unit is a *partition*, so the design constraint
 - the store is hash-bucketed by series into ``bucket=N`` directories;
 - a merge rewrites only buckets containing touched series — the
   partition-pruned subset, never the full table;
-- conflict modes mirror the reference: ``do_nothing`` keeps existing
-  rows on key collision, ``update`` replaces them.
+- a key collision replaces the existing row (the reference's
+  ``ON CONFLICT DO UPDATE``).
 
 Commit protocol (the Delta-log idea reduced to one file per commit):
 bucket data lives in immutable versioned directories ``v<k>/bucket=N``;
@@ -49,11 +49,10 @@ _MANIFEST = "_MANIFEST.json"
 
 class ParquetMergeStore:
     def __init__(self, spark: SparkSession, path: str, key_cols: Sequence[str],
-                 series_col: str = "timeseries_id", n_buckets: int = 16):
+                 n_buckets: int = 16):
         self.spark = spark
         self.path = path
         self.key_cols = list(key_cols)
-        self.series_col = series_col
         self.n_buckets = n_buckets
 
     # -- manifest -----------------------------------------------------
@@ -81,10 +80,7 @@ class ParquetMergeStore:
         # move was a data change then, so the buckets map IS the map
         data = ({int(k): int(v) for k, v in m["data"].items()}
                 if "data" in m else dict(buckets))
-        out = {"version": m["version"], "buckets": buckets, "data": data}
-        if "props" in m:
-            out["props"] = dict(m["props"])
-        return out
+        return {"version": m["version"], "buckets": buckets, "data": data}
 
     def _commit_manifest(self, manifest: dict) -> None:
         """Publish atomically: the retained per-commit manifest first,
@@ -164,7 +160,7 @@ class ParquetMergeStore:
     # -- store API ----------------------------------------------------
     def _bucket(self, df: DataFrame) -> DataFrame:
         return df.withColumn(
-            "bucket", F.pmod(F.hash(F.col(self.series_col)), F.lit(self.n_buckets))
+            "bucket", F.pmod(F.hash(F.col("timeseries_id")), F.lit(self.n_buckets))
         )
 
     def exists(self) -> bool:
@@ -218,23 +214,6 @@ class ParquetMergeStore:
         for fr in frames[1:]:
             out = out.unionByName(fr)
         return out
-
-    def read_buckets(self, buckets: Sequence[int],
-                     version: int | None = None) -> DataFrame | None:
-        """Bucket-pruned read: ONLY the listed buckets' files are
-        opened (each bucket is a ``bucket=N`` directory — nothing else
-        even gets listed). The probe primitive for incremental LSH
-        dedup: a daily batch reads just the store buckets its own band
-        keys hash into, not the corpus-wide signature store. Returns
-        None when no listed bucket exists in the manifest."""
-        return self._read_buckets(self._load_manifest(version),
-                                  set(int(b) for b in buckets))
-
-    def bucket_of(self, df: DataFrame) -> DataFrame:
-        """Expose the store's bucketing function (hash(series) mod N)
-        so callers can compute which buckets a batch would touch
-        WITHOUT writing — the probe side of read_buckets."""
-        return self._bucket(df)
 
     def changes(self, since_version: int, to_version: int | None = None) -> DataFrame:
         """Change data feed between two committed snapshots (Delta CDF
@@ -346,18 +325,13 @@ class ParquetMergeStore:
         df.repartition("bucket").write.mode("overwrite").partitionBy(
             "bucket").parquet(self._vdir(version))
 
-    def overwrite(self, df: DataFrame, props: dict | None = None) -> None:
+    def overwrite(self, df: DataFrame) -> None:
         """Replace the store contents. An EMPTY frame is rejected: a
         zero-bucket commit would be unreadable (partitionBy writes no
         bucket= dirs, so no schema survives) — truncation is not a
-        store operation the reference has either.
-
-        Existing manifest ``props`` carry forward (overwrite replaces
-        rows, not the parameters the state was built under); pass
-        ``props`` to restamp when the rebuild changed them.
-        """
-        old = self._load_manifest() if self.exists() else {}
-        version = old.get("version", 0) + 1
+        store operation the reference has either."""
+        version = (self._load_manifest()["version"] if self.exists()
+                   else 0) + 1
         os.makedirs(self.path, exist_ok=True)
         self._write_version(self._bucket(df), version)
         buckets = self._written_buckets(version)
@@ -370,9 +344,6 @@ class ParquetMergeStore:
             "buckets": {b: version for b in buckets},
             "data": {b: version for b in buckets},
         }
-        carried = {**old.get("props", {}), **(props or {})}
-        if carried:
-            manifest["props"] = carried
         self._commit_manifest(manifest)
         self._gc()
 
@@ -417,11 +388,6 @@ class ParquetMergeStore:
         new_buckets.update({b: version for b in written})
         manifest = {"version": version, "buckets": new_buckets,
                     "data": dict(old["data"])}  # dataChange=false
-        if old.get("props"):
-            # compaction must not strip the parameter stamp — a
-            # props-less manifest makes the next check_props-gated
-            # increment hard-fail on a perfectly valid store
-            manifest["props"] = dict(old["props"])
         self._commit_manifest(manifest)
         self._gc()
         return {"version": version, "buckets_rewritten": len(written),
@@ -444,64 +410,13 @@ class ParquetMergeStore:
             return None
         return self.optimize(buckets)
 
-    def props(self) -> dict:
-        """Application properties stamped into the manifest (e.g. the
-        minhash hash-family version) — {} for stores never stamped."""
-        return dict(self._load_manifest().get("props", {}))
-
-    def check_props(self, expected: dict) -> None:
-        """Fail loudly when persisted state was built under different
-        application parameters (ADVICE r11: a hash-family change makes
-        old signatures silently collision-free, not wrong-looking).
-        An UNSTAMPED pre-existing store is treated as incompatible —
-        rebuild it, or stamp it explicitly via ``stamp_props`` after
-        verifying compatibility out-of-band."""
-        if not expected or not self.exists():
-            return
-        have = self.props()
-        missing = [k for k in expected if k not in have]
-        if missing:
-            raise ValueError(
-                f"store at {self.path} has no recorded props for "
-                f"{missing} (built before prop stamping?) — expected "
-                f"{expected}; rebuild the store or stamp_props() after "
-                "verifying it was built with these parameters")
-        bad = {k: (have[k], v) for k, v in expected.items()
-               if have[k] != v}
-        if bad:
-            raise ValueError(
-                f"store at {self.path} was built under different "
-                f"parameters: {bad} (have vs expected) — stale state "
-                "would produce silently wrong results; rebuild it")
-
-    def stamp_props(self, props: dict) -> None:
-        """Commit a manifest that records ``props`` without touching
-        data — the explicit migration path for pre-stamp stores."""
-        old = self._load_manifest()
-        manifest = dict(old)
-        manifest["version"] = old["version"] + 1
-        manifest["props"] = {**old.get("props", {}), **props}
-        # retained per-commit manifest requires a version dir to exist
-        # only for buckets it references; data pointers are unchanged
-        self._commit_manifest(manifest)
-
-    def merge(self, updates: DataFrame, on_conflict: str = "update",
-              props: dict | None = None) -> dict:
+    def merge(self, updates: DataFrame) -> dict:
         """Upsert ``updates`` by key. Returns counts per action.
 
         Only buckets containing updated series are rewritten (partition
         pruning on the write side — the Delta MERGE behavior), and the
         rewrite becomes visible atomically at the manifest replace.
-
-        ``props``: application parameters this state depends on; the
-        first merge stamps them into the manifest, every later merge
-        (and ``check_props``) verifies them — mixed-parameter
-        increments fail loudly instead of silently losing collisions.
         """
-        if on_conflict not in ("update", "do_nothing"):
-            raise ValueError("on_conflict must be 'update' or 'do_nothing'")
-        if props and self.exists():
-            self.check_props(props)
         # one materialization of the update plan serves the touched-
         # bucket probe, both counts, and the merge write (the unpersisted
         # version re-executed a possibly-expensive connector plan 3x —
@@ -521,12 +436,10 @@ class ParquetMergeStore:
                 "buckets": {b: 1 for b in initial},
                 "data": {b: 1 for b in initial},
             }
-            if props:
-                manifest["props"] = dict(props)
             self._commit_manifest(manifest)
             n = updates.count()
             updates.unpersist()
-            return {"inserted": n, "updated": 0, "kept": 0}
+            return {"inserted": n, "updated": 0}
 
         old = self._load_manifest()
         touched = [
@@ -544,16 +457,10 @@ class ParquetMergeStore:
             existing = updates.limit(0)
 
         total = updates.count()
-        if on_conflict == "update":
-            survivors = existing.join(updates, self.key_cols, "left_anti")
-            merged = survivors.unionByName(updates)
-            n_updated = existing.join(updates, self.key_cols, "left_semi").count()
-            counts = {"inserted": total - n_updated, "updated": n_updated, "kept": 0}
-        else:
-            fresh = updates.join(existing, self.key_cols, "left_anti")
-            merged = existing.unionByName(fresh)
-            n_fresh = fresh.count()
-            counts = {"inserted": n_fresh, "updated": 0, "kept": total - n_fresh}
+        survivors = existing.join(updates, self.key_cols, "left_anti")
+        merged = survivors.unionByName(updates)
+        n_updated = existing.join(updates, self.key_cols, "left_semi").count()
+        counts = {"inserted": total - n_updated, "updated": n_updated}
 
         version = old["version"] + 1
         self._write_version(merged, version)
@@ -563,9 +470,6 @@ class ParquetMergeStore:
         data = dict(old["data"])
         data.update({b: version for b in written})
         manifest = {"version": version, "buckets": buckets, "data": data}
-        carried = {**old.get("props", {}), **(props or {})}
-        if carried:
-            manifest["props"] = carried
         self._commit_manifest(manifest)
         self._gc()
         updates.unpersist()

@@ -259,6 +259,32 @@ class TestDailyAt:
             else:
                 assert abs(v - live[d]) < 1e-9, d
 
+    def test_compound_replays_its_members(self, spark, store):
+        """Compound 6's primary member is series 1, so its as-of read
+        sees series 1's biased first ingest too. The window stays in
+        February: the log holds no rows for backup member 2, which
+        therefore reads empty as of any time."""
+        import datetime as dt
+
+        def daily(fn, *args):
+            return {
+                r["date"]: r["value"]
+                for r in fn(store, 6, *args, start_date="2023-02-08",
+                            end_date="2023-02-17").collect()
+            }
+
+        live = daily(api.measurements_calculated_daily)
+        before = daily(api.measurements_calculated_daily_at,
+                       "2023-03-01 00:00:00")
+        after = daily(api.measurements_calculated_daily_at,
+                      "2023-04-01 00:00:00")
+        assert after == live
+        w0, w1 = dt.date(2023, 2, 10), dt.date(2023, 2, 14)
+        assert set(before) == set(live)
+        for d, v in before.items():
+            bias = 1.0 if w0 <= d <= w1 else 0.0
+            assert abs(v - (live[d] + bias)) < 1e-9, d
+
     def test_as_of_resurrects_tombstoned_gap_points(self, spark, store):
         import datetime as dt
 

@@ -3,11 +3,10 @@ LLM-corpus dedup, ANN-search and web-crawl tier modules.
 
 Static AST scan, no Spark: the tier modules may be imported only by
 the three query modules that host perfbench's batch probes and by each
-other, and each of those query modules registers exactly the listed
-queries that reach tier code — its probe plus the tier queries not yet
-cut. The lists may only shrink. Every definition in the tier files
-that only the probes keep must be reachable from a registered query,
-so dead tier code cannot hide behind a live probe.
+other, and each of those query modules registers exactly one query
+that reaches tier code: its probe. The lists may only shrink. Every
+definition in the tier files must be reachable from a registered
+query, so dead tier code cannot hide behind a live probe.
 """
 
 import ast
@@ -31,29 +30,16 @@ GONE = {
     "aquacache_spark.functions.charset",
 }
 # Each probe host's queries that reach tier code: perfbench's batch
-# probe first, then the tier queries a later change still has to cut.
+# probe only.
 TIER_QUERIES = {
-    "aquacache_spark.queries.dedup": {
-        "minhash_lsh_pairs",
-        "asset_cross_modal_dedup", "audio_fingerprint_near_dup",
-        "audio_spectral_near_dup", "bigram_surprisal", "cluster_safe_split",
-        "corpus_curation", "curation_full_gate", "dedup_best_of_cluster",
-        "dedup_clusters", "dedup_exact", "edit_verified_clusters",
-        "edit_verified_pairs", "eval_decontamination",
-        "hash_stratified_sample", "image_phash_near_dup",
-        "incremental_lsh_parity", "incremental_paragraph_parity",
-        "lsh_capped_pairs", "minhash_signatures", "ngram_jaccard_pairs",
-        "paragraph_dedup", "per_language_curation", "simhash_capped_pairs",
-        "simhash_near_pairs", "simhash_signatures", "stratified_split",
-        "unigram_surprisal", "video_fingerprint_near_dup",
-        "weighted_stratified_sample", "winnow_fingerprints",
-    },
+    "aquacache_spark.queries.dedup": {"minhash_lsh_pairs"},
     "aquacache_spark.queries.ann": {"embedding_cosine_topk"},
     "aquacache_spark.queries.web": {"warc_crawl_corpus"},
 }
 # Tier files that only the probes keep: each top-level definition in
 # them must be reached from a registered query.
 PROBE_ONLY = (
+    "aquacache_spark.operators.dedup",
     "aquacache_spark.operators.similarity",
     "aquacache_spark.operators.web",
     "aquacache_spark.functions.html",

@@ -210,9 +210,7 @@ def test_streaming_rollup_merges_into_store(spark, tmp_path):
         if df.isEmpty():
             return
         store.merge(
-            df.select("timeseries_id", "bin_start", "n", "min", "max", "mean"),
-            on_conflict="update",
-        )
+            df.select("timeseries_id", "bin_start", "n", "min", "max", "mean"))
 
     stream = read_measurement_stream(spark, str(landing))
     rolled = windowed_rollup(stream, window_seconds=3600, watermark="10 minutes")
@@ -269,9 +267,7 @@ def test_streaming_merge_survives_restart(spark, tmp_path):
         if not df.isEmpty():
             store.merge(
                 df.select("timeseries_id", "bin_start", "n", "min", "max",
-                          "mean"),
-                on_conflict="update",
-            )
+                          "mean"))
 
     def start():
         stream = read_measurement_stream(spark, str(landing))
@@ -359,105 +355,6 @@ def test_cdf_drives_scoped_daily_refresh(spark, tmp_path):
     assert rows[(1, "2024-01-01")]["value"] == (999.0 + 113.0) / 2
     assert rows[(3, "2024-01-03")]["merge_action"] == "insert"
     assert rows[(3, "2024-01-03")]["value"] == 7.0
-
-
-def test_streaming_image_phash_dedup(spark, tmp_path):
-    """Streaming x multimodal composition: BMP drops -> real decode ->
-    pHash (map-only Arrow kernel inside a streaming query) -> stateful
-    dropDuplicates on the hash. A second Trigger.AvailableNow run on
-    the same checkpoint suppresses a cross-run perceptual duplicate
-    (same pattern key, different amplitude jitter -> same hash)."""
-    import numpy as np
-
-    from aquacache_spark.operators.multimodal import encode_bmp
-    from aquacache_spark.operators.multimodal import (
-        extract_image_phash as _unused)  # noqa: F401 (import check)
-
-    landing = str(tmp_path / "img_landing")
-    ckpt = str(tmp_path / "img_ckpt")
-
-    x = np.arange(32)[None, :]
-    y = np.arange(32)[:, None]
-
-    def mode(u, v):
-        return (np.cos((2 * x + 1) * u * np.pi / 64.0)
-                * np.cos((2 * y + 1) * v * np.pi / 64.0))
-
-    def blob(pattern_key, jitter):
-        p = pattern_key
-        img = (128.0 + (40 + jitter) * mode(p % 7 + 1, p % 5 + 1)
-               + 25 * mode(p % 6 + 1, p % 4 + 2)
-               + 15 * mode(p % 5 + 2, p % 3 + 3))
-        g = np.clip(np.floor(img + 0.5), 0, 255).astype(np.uint8)
-        return encode_bmp(np.stack([g, g, g], axis=-1))
-
-    import datetime
-    DT = datetime.datetime
-    seen = []
-
-    def drop(rows):
-        spark.createDataFrame(
-            rows, "media_id bigint, content binary, ingest_time timestamp"
-        ).coalesce(1).write.mode("append").parquet(landing)
-
-    def run():
-        from pyspark.sql import functions as F
-        from pyspark.sql import types as T
-
-        from aquacache_spark.operators.multimodal import phash64
-
-        schema = T.StructType([
-            T.StructField("media_id", T.LongType()),
-            T.StructField("content", T.BinaryType()),
-            T.StructField("ingest_time", T.TimestampType()),
-        ])
-        stream = (spark.readStream.format("parquet").schema(schema)
-                  .option("maxFilesPerTrigger", 16).load(landing))
-
-        def batches(it):
-            import numpy as np
-            import pandas as pd
-
-            from aquacache_spark.operators.multimodal import decode_bmp
-
-            for pdf in it:
-                hashes = []
-                for b in pdf["content"]:
-                    px = decode_bmp(bytes(b))
-                    hashes.append(phash64(
-                        np.asarray(px[:, :, 0], dtype=np.float64),
-                        method="fixed", tau=100.0))
-                yield pd.DataFrame({
-                    "media_id": pdf["media_id"].astype("int64"),
-                    "ingest_time": pdf["ingest_time"],
-                    "phash": pd.Series(hashes, dtype="int64"),
-                })
-        out_schema = T.StructType([
-            T.StructField("media_id", T.LongType()),
-            T.StructField("ingest_time", T.TimestampType()),
-            T.StructField("phash", T.LongType()),
-        ])
-        dedup = (stream.mapInPandas(batches, out_schema)
-                 .withWatermark("ingest_time", "1 hour")
-                 .dropDuplicates(["phash"]))
-        q = (dedup.writeStream
-             .foreachBatch(lambda df, _eid: seen.extend(df.collect()))
-             .option("checkpointLocation", ckpt)
-             .outputMode("append").trigger(availableNow=True).start())
-        q.awaitTermination(180)
-
-    # run 1: patterns 3 and 4 (one in-run amplitude twin of pattern 3)
-    drop([(1, blob(3, 0), DT(2024, 1, 1, 0, 0)),
-          (2, blob(4, 1), DT(2024, 1, 1, 0, 1))])
-    run()
-    # run 2: pattern-3 twin (jitter 2 -> SAME hash, cross-run dup)
-    # plus a genuinely new pattern
-    drop([(3, blob(3, 2), DT(2024, 1, 1, 0, 10)),
-          (4, blob(7, 0), DT(2024, 1, 1, 0, 11))])
-    run()
-    got = {r["media_id"] for r in seen}
-    assert 1 in got and 2 in got and 4 in got
-    assert 3 not in got  # cross-run perceptual duplicate suppressed
 
 
 def test_streaming_sessionization_matches_batch(spark, tmp_path):

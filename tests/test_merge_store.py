@@ -9,7 +9,7 @@ def make_df(spark, rows):
     ).withColumn("datetime", F.col("datetime").cast("timestamp"))
 
 
-def test_merge_update_and_do_nothing(spark, tmp_path):
+def test_merge_update(spark, tmp_path):
     path = str(tmp_path / "store")
     store = ParquetMergeStore(spark, path, ["timeseries_id", "datetime"])
 
@@ -21,13 +21,13 @@ def test_merge_update_and_do_nothing(spark, tmp_path):
     stats = store.merge(base)
     assert stats["inserted"] == 3
 
-    # update mode: collision replaces, new row inserts
+    # collision replaces, new row inserts
     upd = make_df(spark, [
         (1, "2024-01-01 01:00:00", 20.0),
         (1, "2024-01-01 02:00:00", 3.0),
     ])
-    stats = store.merge(upd, on_conflict="update")
-    assert stats == {"inserted": 1, "updated": 1, "kept": 0}
+    stats = store.merge(upd)
+    assert stats == {"inserted": 1, "updated": 1}
     got = {
         (r["timeseries_id"], str(r["datetime"])): r["value"]
         for r in store.read().collect()
@@ -35,20 +35,6 @@ def test_merge_update_and_do_nothing(spark, tmp_path):
     assert got[(1, "2024-01-01 01:00:00")] == 20.0
     assert got[(1, "2024-01-01 02:00:00")] == 3.0
     assert got[(2, "2024-01-01 00:00:00")] == 5.0  # untouched series intact
-
-    # do_nothing mode: collision keeps existing
-    upd2 = make_df(spark, [
-        (1, "2024-01-01 02:00:00", 99.0),
-        (3, "2024-01-01 00:00:00", 7.0),
-    ])
-    stats = store.merge(upd2, on_conflict="do_nothing")
-    assert stats["kept"] == 1 and stats["inserted"] == 1
-    got = {
-        (r["timeseries_id"], str(r["datetime"])): r["value"]
-        for r in store.read().collect()
-    }
-    assert got[(1, "2024-01-01 02:00:00")] == 3.0  # kept
-    assert got[(3, "2024-01-01 00:00:00")] == 7.0  # inserted
 
 
 def test_merge_rewrites_only_touched_buckets(spark, tmp_path):
@@ -160,8 +146,9 @@ def test_change_data_feed_between_versions(spark, tmp_path):
     store.merge(make_df(spark, [(1, "2024-01-01 00:00:00", 10.0),
                                 (3, "2024-01-01 00:00:00", 3.0)]))
 
+    ch = store.changes(1, 2)
     rows = {(r["timeseries_id"], r["_change_type"]): r["value"]
-            for r in store.changes(1, 2).collect()}
+            for r in ch.collect()}
     assert rows == {
         (1, "update_preimage"): 1.0,
         (1, "update_postimage"): 10.0,
@@ -169,6 +156,13 @@ def test_change_data_feed_between_versions(spark, tmp_path):
     }
     assert all(r["_commit_version"] == 2
                for r in store.changes(1, 2).collect())
+    # only the buckets whose pointer moved are opened
+    data = store._load_manifest()["data"]
+    touched = {b for b, v in data.items() if v == 2}
+    assert set(data) - touched  # an untouched bucket exists to skip
+    read = {int(f.split("bucket=")[1].split("/")[0])
+            for f in ch.inputFiles() if "bucket=" in f}
+    assert read and read <= touched
     # no-op diff
     assert store.changes(2, 2).count() == 0
     # vacuumed-away version refuses
@@ -216,7 +210,7 @@ def test_empty_commits_rejected(spark, tmp_path):
     # a real store then works, and an empty MERGE into it is a no-op
     store.merge(make_df(spark, [(1, "2024-01-01 00:00:00", 1.0)]))
     stats = store.merge(empty)
-    assert stats == {"inserted": 0, "updated": 0, "kept": 0}
+    assert stats == {"inserted": 0, "updated": 0}
     assert store.read().count() == 1
 
 

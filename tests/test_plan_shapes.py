@@ -59,23 +59,6 @@ def test_corrections_compile_to_single_stage(spark):
     assert "Exchange" not in p
 
 
-def test_winnow_is_map_only_until_distinct(spark):
-    # gram hashing + window minima are per-row array expressions; the
-    # ONLY exchange is the final distinct on (doc_id, fp)
-    p = plan(spark, "winnow_fingerprints")
-    assert "Join" not in p
-    import re
-
-    assert len(re.findall(r"\(\d+\) Exchange", p)) == 1
-
-
-def test_split_is_pure_projection(spark):
-    # split assignment shuffles nothing — pure function of the id
-    p = plan(spark, "stratified_split")
-    assert "Exchange" not in p
-    assert "Join" not in p
-
-
 def test_code_generation_broadcasts_polygons(spark):
     # PIP join must broadcast the catalog-sized basin side; the point
     # batch never becomes the build side of a nested loop
@@ -234,16 +217,6 @@ def test_new_map_only_kernels_zero_exchange(spark):
         assert len(re.findall(r"^\(\d+\) Exchange", p, re.M)) == 0, name
         assert "Join" not in p, name
         assert "EvalPython" not in p, name
-
-
-def test_lm_surprisal_no_global_window(spark):
-    # the corpus total must come from agg + 1-row broadcast crossJoin,
-    # never F.sum().over(Window.partitionBy()) — an unpartitioned
-    # window funnels the whole vocab through ONE task at web scale
-    for name in ("unigram_surprisal", "bigram_surprisal"):
-        p = plan(spark, name)
-        assert "Window" not in p, name
-        assert "Exchange SinglePartition" not in p, name
 
 
 def test_sketch_and_tfidf_plan_shapes(spark):

@@ -110,37 +110,6 @@ def test_bloom_no_false_negatives_and_low_fp(spark):
             and bloom.exceptAll(merged).count() == 0)
 
 
-def test_weighted_sample_favours_heavy_weights(spark):
-    """A-ES inclusion probability tracks the weight: with half the
-    rows at weight 10 and half at weight 1, a k=100 sample from 2000
-    rows should be dominated by the heavy class (E[heavy] ~ 90+), and
-    the draw is a pure function of (id, salt) — repartitioning cannot
-    change it."""
-    from pyspark.sql import functions as F
-
-    from aquacache_spark.operators.dedup import weighted_stratified_sample
-
-    df = spark.range(2000).select(
-        F.col("id").alias("doc_id"),
-        F.lit("s").alias("source"),
-        F.when(F.col("id") % 2 == 0, 10).otherwise(1).alias("weight"),
-    )
-    out = weighted_stratified_sample(df, k=100, weight_col="weight")
-    rows = out.collect()
-    heavy = sum(1 for r in rows if r["weight"] == 10)
-    assert len(rows) == 100
-    assert heavy > 70, heavy
-    again = weighted_stratified_sample(
-        df.repartition(17), k=100, weight_col="weight").collect()
-    assert {r["doc_id"] for r in rows} == {r["doc_id"] for r in again}
-    # zero/negative weights are excluded, small strata pass whole
-    tiny = spark.createDataFrame(
-        [(1, "t", 5), (2, "t", 0), (3, "t", -1)],
-        "doc_id long, source string, weight int")
-    got = weighted_stratified_sample(tiny, k=10, weight_col="weight")
-    assert [r["doc_id"] for r in got.collect()] == [1]
-
-
 def test_histogram_quantiles_accuracy_and_merge(spark):
     """Estimates land within one bin width of the exact quantile, and
     summing two shard histograms equals the whole-corpus histogram

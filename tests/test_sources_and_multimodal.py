@@ -356,76 +356,6 @@ def test_avi_container_roundtrip_and_quarantine(spark):
     assert not rows[2]["decoded"]
 
 
-def test_phash_modes_and_pooling():
-    import numpy as np
-
-    from aquacache_spark.operators.multimodal import (decode_bmp,
-                                                      encode_bmp, phash64,
-                                                      synthesize_pattern_bmps)
-
-    rng = np.random.default_rng(5)
-    img = rng.integers(0, 200, (64, 64)).astype(np.uint8)
-    # deterministic; 64x64 exercises the block-mean pooling path
-    assert phash64(img, "median") == phash64(img, "median")
-    # median mode: brightness shift moves only DC -> hash ~unchanged
-    shifted = np.clip(img.astype(int) + 25, 0, 255).astype(np.uint8)
-    d = bin(phash64(img, "median") ^ phash64(shifted, "median")).count("1")
-    assert d <= 6
-    # too-small input fails loudly
-    import pytest
-
-    with pytest.raises(ValueError, match="at least 32x32"):
-        phash64(img[:16, :16])
-    # fixed mode on a cosine-pattern fixture: exactly the 3 chosen
-    # mode bits are set (every bit decided by a wide margin)
-    i, p = 18, 18 % 16
-    x = np.arange(32)[None, :]
-    y = np.arange(32)[:, None]
-
-    def mode(u, v):
-        return (np.cos((2 * x + 1) * u * np.pi / 64.0)
-                * np.cos((2 * y + 1) * v * np.pi / 64.0))
-
-    g = np.clip(np.floor(
-        128.0 + (40 + i % 3) * mode(p % 7 + 1, p % 5 + 1)
-        + 25 * mode(p % 6 + 1, p % 4 + 2)
-        + 15 * mode(p % 5 + 2, p % 3 + 3) + 0.5), 0, 255).astype(np.uint8)
-    got = phash64(g, "fixed", 100.0)
-    expect = sum(1 << (u * 8 + v - 1) for u, v in
-                 ((p % 7 + 1, p % 5 + 1), (p % 6 + 1, p % 4 + 2),
-                  (p % 5 + 2, p % 3 + 3)))
-    assert got == expect
-    # and the BMP round trip preserves it
-    blob = encode_bmp(np.stack([g, g, g], axis=-1))
-    assert phash64(decode_bmp(blob)[:, :, 0], "fixed", 100.0) == expect
-    assert synthesize_pattern_bmps is not None
-
-
-def test_audio_fingerprint_gain_invariance():
-    import numpy as np
-
-    from aquacache_spark.operators.multimodal import (audio_fingerprint64,
-                                                      decode_wav, encode_wav)
-
-    k = np.arange(4096)
-    base = ((3 * 37 + k * 101) % 4001) - 2000
-    fp1 = audio_fingerprint64(base)
-    # re-levelled copies fingerprint identically (energies scale by
-    # the square of the gain; comparisons unchanged)
-    assert audio_fingerprint64(2 * base) == fp1
-    assert audio_fingerprint64(3 * base) == fp1
-    assert fp1 != 0 and fp1 < (1 << 60)
-    # a different waveform differs
-    other = ((5 * 37 + k * 101) % 4001) - 2000
-    assert audio_fingerprint64(other) != fp1
-    # short input zero-pads (trailing-silence frames decided as drops)
-    assert audio_fingerprint64(base[:1000]) == audio_fingerprint64(
-        np.pad(base[:1000], (0, 4096 - 1000)))
-    # survives the real PCM16 round trip
-    _r, _c, arr = decode_wav(encode_wav(base))
-    assert audio_fingerprint64(arr[:, 0]) == fp1
-
-
 def test_resize_image_blob_exact_and_guards():
     import numpy as np
     import pytest
@@ -491,34 +421,6 @@ def test_gopher_flags_whitespace_robust(spark):
     assert out[1]["sh"] == out[2]["sh"]
 
 
-def test_audio_spectral_fingerprint_properties():
-    """Closed-form checks: exact gain invariance, sensitivity to
-    frequency CONTENT at equal total energy (where the time-domain
-    band-energy fingerprint is blind), and quarantine parity."""
-    import numpy as np
-
-    from aquacache_spark.operators.multimodal import (
-        _FP_FRAME, _FP_FRAMES, audio_fingerprint64,
-        audio_spectral_fingerprint64)
-
-    n = _FP_FRAMES * _FP_FRAME
-    k = np.arange(n)
-    base = ((k * 101 + 17) % 4001) - 2000
-    # exact gain invariance (integer scaling)
-    assert (audio_spectral_fingerprint64(base)
-            == audio_spectral_fingerprint64(3 * base))
-    # alternating frames of LOW (bin 2) vs HIGH (bin 14) square waves
-    # at identical amplitude: total per-frame energy is flat, so the
-    # time-domain fingerprint sees nothing — the spectral one must.
-    lo = np.where((k // 16) % 2 == 0, 1000, -1000)   # period 32 -> bin 2
-    hi = np.where((k // 2) % 2 == 0, 1000, -1000)    # period 4 -> bin 16
-    frames = k // _FP_FRAME
-    mixed = np.where(frames % 2 == 0, lo, hi)
-    spec = audio_spectral_fingerprint64(mixed)
-    assert spec != 0  # band energies alternate frame to frame
-    assert audio_fingerprint64(mixed) == 0  # time-domain is blind
-
-
 def test_audio_spectral_full_scale_int16_no_wrap():
     """Full-scale int16 PCM: per-frame-bin energies are int64-safe by
     construction, but cross-frame/cross-bin sums exceed 2^63 — they
@@ -531,9 +433,8 @@ def test_audio_spectral_full_scale_int16_no_wrap():
     import pytest
 
     from aquacache_spark.operators.multimodal import (
-        _FP_BANDS, _FP_FRAME, _FP_FRAMES, _SPEC_BINS, _SPEC_CHUNK,
-        _SPEC_N, _spec_basis, audio_spectral_features,
-        audio_spectral_fingerprint64)
+        _FP_FRAME, _FP_FRAMES, _SPEC_BINS, _SPEC_CHUNK, _SPEC_N,
+        _spec_basis, audio_spectral_features)
 
     n = _FP_FRAMES * _FP_FRAME
     k = np.arange(n)
@@ -555,14 +456,6 @@ def test_audio_spectral_full_scale_int16_no_wrap():
             ci = sum(cs[i] * bs[b][i] for i in range(_SPEC_N))
             row.append(cr * cr + ci * ci)
         ref_e.append(row)
-    g = _SPEC_BINS // _FP_BANDS
-    ref_fp = 0
-    for b in range(_FP_BANDS):
-        for f in range(_FP_FRAMES - 1):
-            if (sum(ref_e[f + 1][b * g:(b + 1) * g])
-                    > sum(ref_e[f][b * g:(b + 1) * g])):
-                ref_fp |= 1 << (b * (_FP_FRAMES - 1) + f)
-    assert audio_spectral_fingerprint64(loud) == ref_fp
 
     total = sum(sum(r) for r in ref_e)
     if total > 2**63 - 1:
@@ -649,12 +542,10 @@ def test_all_media_extractors_quarantine_fuzz(spark):
     from aquacache_spark.functions.avi import encode_avi
     from aquacache_spark.functions.jpeg import encode_jpeg
     from aquacache_spark.operators.multimodal import (
-        encode_bmp, encode_png, encode_wav, extract_audio_fingerprint,
-        extract_audio_spectral_features, extract_audio_spectral_fingerprint,
-        extract_bmp_features, extract_image_phash, extract_image_sharpness,
-        extract_jpeg_features, extract_png_features, extract_video_features,
-        extract_video_fingerprint, extract_video_scene_cuts,
-        extract_wav_features)
+        encode_bmp, encode_png, encode_wav, extract_audio_spectral_features,
+        extract_bmp_features, extract_image_sharpness, extract_jpeg_features,
+        extract_png_features, extract_video_features,
+        extract_video_scene_cuts, extract_wav_features)
 
     rng = random.Random(60815)
     img = np.full((8, 8), 99, dtype=np.uint8)
@@ -679,9 +570,7 @@ def test_all_media_extractors_quarantine_fuzz(spark):
     extractors = [
         extract_bmp_features, extract_png_features, extract_jpeg_features,
         extract_wav_features, extract_video_features,
-        extract_video_fingerprint, extract_video_scene_cuts,
-        extract_image_phash, extract_image_sharpness,
-        extract_audio_fingerprint, extract_audio_spectral_fingerprint,
+        extract_video_scene_cuts, extract_image_sharpness,
         extract_audio_spectral_features,
     ]
     for ex in extractors:
