@@ -12,22 +12,41 @@ write amplification unit is a *partition*, so the design constraint
 - a merge rewrites only buckets containing touched series — the
   partition-pruned subset, never the full table;
 - a key collision replaces the existing row (the reference's
-  ``ON CONFLICT DO UPDATE``).
+  ``ON CONFLICT DO UPDATE``); like PostgreSQL, a batch that holds one
+  key twice is rejected.
 
 Commit protocol (the Delta-log idea reduced to one file per commit):
 bucket data lives in immutable versioned directories ``v<k>/bucket=N``;
-a JSON manifest maps each bucket to the version directory holding its
-data at that commit. A merge writes the touched buckets under a NEW
-version dir, writes ``_MANIFEST.v<k>.json``, then publishes with one
-atomic ``os.replace`` of the current-pointer ``_MANIFEST.json`` —
-readers resolve through a manifest, so a crash at any point leaves
-either the old or the new store, never a mixed one. Because commit
-manifests are retained, ``read(version=k)`` is Delta-style TIME
-TRAVEL (the audit/as-of emulation's storage analog); ``vacuum``
-drops old manifests and sweeps bucket dirs no retained commit
-references; ``optimize`` is the Delta-OPTIMIZE analog — a
-``dataChange=false`` compaction commit that collapses many-small-
-commit fragmentation into one version dir with one file per bucket.
+a JSON manifest ``_MANIFEST.v<k>.json`` describes commit ``k``:
+
+- ``operation``: ``merge``, ``overwrite`` or ``optimize``;
+- ``schema``: the store schema (Spark JSON), fixed when the store is
+  created. Reads pass it to ``spark.read.schema``, so planning a read
+  runs no Spark job, and writes cast their input to it;
+- ``buckets``: bucket -> version dir holding its data at this commit;
+- ``data``: bucket -> version of its last data change (``optimize``
+  moves ``buckets`` but not ``data``);
+- ``rows``: bucket -> row count, taken on the driver from the parquet
+  footers of the files the commit wrote.
+
+A merge writes the touched buckets under a NEW version dir, writes its
+manifest, then publishes with one atomic ``os.replace`` of the
+current-pointer ``_MANIFEST.json`` — readers resolve through a
+manifest, so a crash at any point leaves either the old or the new
+store, never a mixed one. Because commit manifests are retained,
+``read(version=k)`` is Delta-style TIME TRAVEL (the audit/as-of
+emulation's storage analog); ``vacuum`` drops old manifests and sweeps
+bucket dirs no retained commit references; ``optimize`` is the
+Delta-OPTIMIZE analog — a ``dataChange=false`` compaction commit that
+collapses many-small-commit fragmentation into one version dir with
+one file per bucket.
+
+Change files (Delta's CDC files): a merge into an existing store also
+writes ``v<k>/_changes/``, one parquet file holding the batch's
+inserts, update pre-images and update post-images with
+``_change_type`` and ``_commit_version``. Rows whose values did not
+change are left out. ``changes()`` reads these files instead of
+diffing snapshots.
 
 At 100 TB the same API maps 1:1 onto Delta MERGE with the bucket
 column as a clustering key; nothing above this module would change.
@@ -39,12 +58,20 @@ import json
 import os
 import shutil
 import uuid
+from functools import reduce
 from typing import Sequence
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
 _MANIFEST = "_MANIFEST.json"
+_CHANGES = "_changes"
+
+
+def _int_map(m: dict) -> dict[int, int]:
+    return {int(k): int(v) for k, v in m.items()}
 
 
 class ParquetMergeStore:
@@ -75,12 +102,9 @@ class ParquetMergeStore:
                     f"version {version} is not available (never committed "
                     "or vacuumed away)") from None
             raise
-        buckets = {int(k): int(v) for k, v in m["buckets"].items()}
-        # pre-optimize manifests carry no "data" map: every pointer
-        # move was a data change then, so the buckets map IS the map
-        data = ({int(k): int(v) for k, v in m["data"].items()}
-                if "data" in m else dict(buckets))
-        return {"version": m["version"], "buckets": buckets, "data": data}
+        return {"version": m["version"], "operation": m["operation"],
+                "schema": m["schema"], "buckets": _int_map(m["buckets"]),
+                "data": _int_map(m["data"]), "rows": _int_map(m["rows"])}
 
     def _commit_manifest(self, manifest: dict) -> None:
         """Publish atomically: the retained per-commit manifest first,
@@ -100,12 +124,20 @@ class ParquetMergeStore:
     def _vdir(self, version: int) -> str:
         return os.path.join(self.path, f"v{version}")
 
-    def _written_buckets(self, version: int) -> list[int]:
+    def _written_rows(self, version: int) -> dict[int, int]:
+        """Rows per bucket dir of version ``version``, summed from the
+        parquet footers on the driver — no Spark job."""
         vdir = self._vdir(version)
-        return sorted(
-            int(d.split("=", 1)[1]) for d in os.listdir(vdir)
-            if d.startswith("bucket=")
-        )
+        out = {}
+        for d in os.listdir(vdir):
+            if not d.startswith("bucket="):
+                continue
+            bdir = os.path.join(vdir, d)
+            out[int(d.split("=", 1)[1])] = sum(
+                pq.read_metadata(os.path.join(bdir, f)).num_rows
+                for f in os.listdir(bdir)
+                if f.endswith(".parquet") and not f.startswith((".", "_")))
+        return out
 
     def _retained_versions(self) -> list[int]:
         """Committed versions only: a per-commit manifest NEWER than
@@ -157,6 +189,28 @@ class ParquetMergeStore:
         self._gc()
         return self._retained_versions()
 
+    # -- schema -------------------------------------------------------
+    def _new_schema(self, df: DataFrame) -> dict:
+        """The schema a store created from ``df`` records: its columns
+        and types, nullable as parquet reads them back."""
+        if "bucket" in df.columns:
+            raise ValueError("'bucket' is the store's partition column")
+        return StructType([StructField(f.name, f.dataType)
+                           for f in df.schema]).jsonValue()
+
+    def _conform(self, df: DataFrame, schema: dict) -> DataFrame:
+        """``df``'s columns by name, in the recorded order and cast to
+        the recorded types (the reference's INSERT column list)."""
+        fields = StructType.fromJson(schema).fields
+        names = [f.name for f in fields]
+        missing = [c for c in names if c not in df.columns]
+        extra = [c for c in df.columns if c not in names]
+        if missing or extra:
+            raise ValueError(
+                f"columns do not match the store schema {names}: "
+                f"missing {missing}, extra {extra}")
+        return df.select(*[F.col(f.name).cast(f.dataType) for f in fields])
+
     # -- store API ----------------------------------------------------
     def _bucket(self, df: DataFrame) -> DataFrame:
         return df.withColumn(
@@ -168,10 +222,7 @@ class ParquetMergeStore:
 
     def read(self, version: int | None = None) -> DataFrame:
         """Resolve bucket dirs through a manifest — the current one,
-        or commit ``version`` for TIME TRAVEL over retained history.
-        One read per referenced version dir (each with ``basePath`` at
-        its version dir so the ``bucket=N`` partition column survives
-        and bucket pruning still works), unioned."""
+        or commit ``version`` for TIME TRAVEL over retained history."""
         if version is not None and version not in self._retained_versions():
             raise ValueError(
                 f"version {version} is not available (never committed "
@@ -183,49 +234,46 @@ class ParquetMergeStore:
             raise ValueError(
                 f"manifest for version {m['version']} references no "
                 "buckets")
-        by_version: dict[int, list[int]] = {}
-        for b, v in m["buckets"].items():
-            by_version.setdefault(v, []).append(b)
-        frames = [
-            self.spark.read.option("basePath", self._vdir(v)).parquet(
-                *[os.path.join(self._vdir(v), f"bucket={b}") for b in sorted(bs)]
-            )
-            for v, bs in sorted(by_version.items())
-        ]
-        out = frames[0]
-        for fr in frames[1:]:
-            out = out.unionByName(fr)
-        return out
+        return self._read_buckets(m, set(m["buckets"]))
 
     def _read_buckets(self, manifest: dict, buckets: "set[int]") -> DataFrame | None:
+        """One scan per referenced version dir (each with ``basePath``
+        at its version dir so the ``bucket=N`` partition column
+        survives and bucket pruning still works), unioned. The
+        manifest schema spares the per-dir schema-inference job."""
+        schema = StructType.fromJson(manifest["schema"]).add(
+            "bucket", IntegerType())
         by_version: dict[int, list[int]] = {}
         for b, v in manifest["buckets"].items():
             if b in buckets:
                 by_version.setdefault(v, []).append(b)
         frames = [
-            self.spark.read.option("basePath", self._vdir(v)).parquet(
-                *[os.path.join(self._vdir(v), f"bucket={b}") for b in sorted(bs)]
-            )
+            self.spark.read.schema(schema).option("basePath", self._vdir(v))
+            .parquet(*[os.path.join(self._vdir(v), f"bucket={b}") for b in sorted(bs)])
             for v, bs in sorted(by_version.items())
         ]
         if not frames:
             return None
-        out = frames[0]
-        for fr in frames[1:]:
-            out = out.unionByName(fr)
-        return out
+        return reduce(DataFrame.unionByName, frames)
 
     def changes(self, since_version: int, to_version: int | None = None) -> DataFrame:
-        """Change data feed between two committed snapshots (Delta CDF
-        shape): rows tagged ``_change_type`` in {'insert', 'delete',
-        'update_preimage', 'update_postimage'} plus ``_commit_version``.
+        """Change data feed of the commits ``since_version + 1`` through
+        ``to_version`` (Delta ``table_changes`` shape): key_cols +
+        data_cols + ``_change_type`` in {'insert', 'delete',
+        'update_preimage', 'update_postimage'} + ``_commit_version``.
 
-        Partition-pruned: only buckets whose DATA version moved
-        between the two manifests are read at all — untouched buckets
-        cost nothing, the same write-amplification unit as the merge.
-        Buckets whose pointer moved only because ``optimize`` rewrote
-        them are skipped too (the Delta ``dataChange=false`` CDF
-        semantics): a pure compaction commit contributes no changes."""
+        Each commit contributes its own rows, tagged with its own
+        version:
+
+        - a merge commit reads its change file ``v<k>/_changes``;
+        - an overwrite commit reads the previous snapshot as
+          ``delete`` rows and its own buckets as ``insert`` rows
+          (Delta's CDF for commits without CDC files);
+        - an optimize commit is ``dataChange=false`` and reads as
+          nothing.
+
+        No bucket file is opened for merge commits, and planning runs
+        no Spark job. An empty range returns an empty frame."""
         retained = self._retained_versions()
         if to_version is None:
             to_version = self._load_manifest()["version"]
@@ -234,81 +282,34 @@ class ParquetMergeStore:
                 raise ValueError(
                     f"version {v} is not available (never committed "
                     "or vacuumed away)")
-        m_from = self._load_manifest(since_version)
-        m_to = self._load_manifest(to_version)
-        changed = {
-            b for b in set(m_from["data"]) | set(m_to["data"])
-            if m_from["data"].get(b) != m_to["data"].get(b)
-        }
-        old = self._read_buckets(m_from, changed)
-        new = self._read_buckets(m_to, changed)
-        ver = F.lit(to_version).alias("_commit_version")
+        prev = self._load_manifest(since_version)
+        schema = StructType.fromJson(prev["schema"])
+        cols = self.key_cols + [c for c in schema.names if c not in self.key_cols]
+        feed = StructType([schema[c] for c in cols]).add(
+            "_change_type", StringType()).add("_commit_version", IntegerType())
 
-        def project(df: DataFrame, change_type: str,
-                    cols: list[str]) -> DataFrame:
-            # one schema on EVERY branch: key_cols + data_cols +
-            # _change_type + _commit_version, never the bucket
-            # partition column (ADVICE r3: the full-outer path dropped
-            # it while the one-sided paths kept it)
-            return df.select(
-                *self.key_cols, *cols,
-                F.lit(change_type).alias("_change_type"), ver)
+        def tagged(m: dict, change_type: str, version: int) -> DataFrame:
+            return self._read_buckets(m, set(m["buckets"])).select(
+                *cols, F.lit(change_type).alias("_change_type"),
+                F.lit(version).alias("_commit_version"))
 
-        if old is None and new is None:  # no bucket moved: empty feed
-            base = self.read(to_version).limit(0)
-            cols = [c for c in base.columns
-                    if c not in self.key_cols and c != "bucket"]
-            return project(base, "insert", cols)
-        data_cols = [c for c in (old if old is not None else new).columns
-                     if c not in self.key_cols and c != "bucket"]
-        if old is None:
-            return project(new, "insert", data_cols)
-        if new is None:
-            return project(old, "delete", data_cols)
-        o = old.select(
-            *self.key_cols,
-            *[F.col(c).alias(f"__old_{c}") for c in data_cols],
-        )
-        n = new.select(
-            *self.key_cols,
-            *[F.col(c).alias(f"__new_{c}") for c in data_cols],
-        )
-        # side-presence markers: inferring presence from data columns
-        # is ambiguous when a present row has all-NULL data
-        o = o.withColumn("__old_present", F.lit(True))
-        n = n.withColumn("__new_present", F.lit(True))
-        j = o.join(n, self.key_cols, "full_outer")
-        differs = F.lit(False)
-        for c in data_cols:
-            differs = differs | ~F.col(f"__old_{c}").eqNullSafe(
-                F.col(f"__new_{c}"))
-        inserts = j.where(F.col("__old_present").isNull()).select(
-            *self.key_cols,
-            *[F.col(f"__new_{c}").alias(c) for c in data_cols],
-            F.lit("insert").alias("_change_type"), ver,
-        )
-        deletes = j.where(F.col("__new_present").isNull()).select(
-            *self.key_cols,
-            *[F.col(f"__old_{c}").alias(c) for c in data_cols],
-            F.lit("delete").alias("_change_type"), ver,
-        )
-        upd = j.where(
-            F.col("__old_present").isNotNull()
-            & F.col("__new_present").isNotNull() & differs
-        )
-        pre = upd.select(
-            *self.key_cols,
-            *[F.col(f"__old_{c}").alias(c) for c in data_cols],
-            F.lit("update_preimage").alias("_change_type"), ver,
-        )
-        post = upd.select(
-            *self.key_cols,
-            *[F.col(f"__new_{c}").alias(c) for c in data_cols],
-            F.lit("update_postimage").alias("_change_type"), ver,
-        )
-        return inserts.unionByName(deletes).unionByName(pre).unionByName(post)
+        change_dirs, frames = [], []
+        for v in range(since_version + 1, to_version + 1):
+            m = self._load_manifest(v)
+            if m["operation"] == "merge":
+                change_dirs.append(os.path.join(self._vdir(v), _CHANGES))
+            elif m["operation"] == "overwrite":
+                frames += [tagged(prev, "delete", v), tagged(m, "insert", v)]
+            prev = m
+        if change_dirs:
+            frames.append(self.spark.read.schema(feed).parquet(*change_dirs))
+        if not frames:
+            return self.spark.createDataFrame([], feed)
+        return reduce(DataFrame.unionByName, frames)
 
-    def _write_version(self, df: DataFrame, version: int) -> None:
+    def _write_version(self, df: DataFrame, version: int) -> dict[int, int]:
+        """Write ``df`` as the bucket dirs of ``version``; returns the
+        rows written per bucket."""
         # overwrite clobbers partial output from a crashed attempt at
         # the same (never-committed) version number.
         # r12 (guide §6 small files): cluster rows by bucket BEFORE
@@ -324,27 +325,27 @@ class ParquetMergeStore:
         # write-distribution trade (Iceberg write.distribution-mode).
         df.repartition("bucket").write.mode("overwrite").partitionBy(
             "bucket").parquet(self._vdir(version))
+        return self._written_rows(version)
 
     def overwrite(self, df: DataFrame) -> None:
         """Replace the store contents. An EMPTY frame is rejected: a
-        zero-bucket commit would be unreadable (partitionBy writes no
-        bucket= dirs, so no schema survives) — truncation is not a
+        zero-bucket commit would be unreadable — truncation is not a
         store operation the reference has either."""
-        version = (self._load_manifest()["version"] if self.exists()
-                   else 0) + 1
+        old = self._load_manifest() if self.exists() else None
+        schema = old["schema"] if old else self._new_schema(df)
+        version = (old["version"] if old else 0) + 1
         os.makedirs(self.path, exist_ok=True)
-        self._write_version(self._bucket(df), version)
-        buckets = self._written_buckets(version)
-        if not buckets:
+        rows = self._write_version(self._bucket(self._conform(df, schema)),
+                                   version)
+        if not rows:
             raise ValueError(
                 "refusing to commit an empty store (overwrite received "
                 "a frame with no rows)")
-        manifest = {
-            "version": version,
-            "buckets": {b: version for b in buckets},
-            "data": {b: version for b in buckets},
-        }
-        self._commit_manifest(manifest)
+        self._commit_manifest({
+            "version": version, "operation": "overwrite", "schema": schema,
+            "buckets": {b: version for b in rows},
+            "data": {b: version for b in rows}, "rows": rows,
+        })
         self._gc()
 
     def optimize(self, buckets: Sequence[int] | None = None) -> dict:
@@ -356,9 +357,8 @@ class ParquetMergeStore:
           (a current manifest referencing k version dirs makes
           ``read()`` a k-way union; after optimize it is one scan);
         - the commit is ``dataChange=false``: the manifest's ``data``
-          map keeps each bucket's last data-changing version, so
-          ``changes()`` across an optimize commit prunes to nothing
-          instead of full-outer-joining identical snapshots;
+          map keeps each bucket's last data-changing version, and
+          ``changes()`` reads an optimize commit as no rows;
         - time travel within retention is untouched (old manifests
           still reference the old dirs; ``vacuum`` reclaims them).
 
@@ -376,19 +376,18 @@ class ParquetMergeStore:
         version = old["version"] + 1
         # one file per bucket: the small-file rewrite. At 100 TB this
         # maps to Delta OPTIMIZE's bin packing (a bucket is the
-        # clustering unit). _write_version now clusters by bucket
-        # itself, so no extra repartition here.
-        self._write_version(current, version)
-        written = set(self._written_buckets(version))
-        if written != target:
+        # clustering unit). _write_version clusters by bucket itself,
+        # so no extra repartition here.
+        written = self._write_version(current, version)
+        expected = {b: old["rows"][b] for b in target}
+        if written != expected:
             raise RuntimeError(
-                f"optimize rewrote buckets {sorted(written)} but expected "
-                f"{sorted(target)}")
-        new_buckets = dict(old["buckets"])
-        new_buckets.update({b: version for b in written})
-        manifest = {"version": version, "buckets": new_buckets,
-                    "data": dict(old["data"])}  # dataChange=false
-        self._commit_manifest(manifest)
+                f"optimize rewrote rows per bucket {written} but expected "
+                f"{expected}")
+        self._commit_manifest({
+            **old, "version": version, "operation": "optimize",
+            "buckets": {**old["buckets"], **{b: version for b in written}},
+        })  # dataChange=false: data and rows carry over
         self._gc()
         return {"version": version, "buckets_rewritten": len(written),
                 "dirs_before": dirs_before}
@@ -410,67 +409,115 @@ class ParquetMergeStore:
             return None
         return self.optimize(buckets)
 
+    def _probe(self, updates: DataFrame) -> dict[int, int]:
+        """Rows per touched bucket, from one collect that also finds
+        the largest number of batch rows for one key. A key that
+        appears twice is rejected, as PostgreSQL's ``ON CONFLICT DO
+        UPDATE`` rejects a batch that hits one row twice."""
+        per_key = updates.groupBy("bucket", *self.key_cols).count()
+        probe = per_key.groupBy("bucket").agg(
+            F.sum("count").alias("rows"), F.max("count").alias("most"),
+            F.max_by(F.struct(*self.key_cols), "count").alias("key"),
+        ).collect()
+        for r in probe:
+            if r["most"] > 1:
+                raise ValueError(
+                    f"merge batch holds {r['most']} rows for key "
+                    f"{r['key'].asDict()}; a batch may hold each key once")
+        return {r["bucket"]: r["rows"] for r in probe}
+
+    def _write_changes(self, updates: DataFrame, existing: DataFrame,
+                       version: int) -> None:
+        """One ``updates ⟕ existing`` pass writes the commit's inserts,
+        pre-images and post-images to ``v<k>/_changes`` as one file;
+        rows whose values did not change are left out."""
+        data_cols = [c for c in updates.columns
+                     if c not in self.key_cols and c != "bucket"]
+        old = existing.select(
+            *self.key_cols, *[F.col(c).alias(f"__old_{c}") for c in data_cols],
+            F.lit(True).alias("__old_present"))
+        j = updates.join(old, self.key_cols, "left")
+        fresh = F.col("__old_present").isNull()
+        differs = reduce(lambda a, b: a | b, [
+            ~F.col(c).eqNullSafe(F.col(f"__old_{c}")) for c in data_cols],
+            F.lit(False))
+
+        def image(change_type: str, prefix: str):
+            return F.struct(*self.key_cols,
+                            *[F.col(f"{prefix}{c}").alias(c) for c in data_cols],
+                            F.lit(change_type).alias("_change_type"))
+
+        images = F.when(fresh, F.array(image("insert", ""))).otherwise(
+            F.array(image("update_preimage", "__old_"),
+                    image("update_postimage", "")))
+        (j.where(fresh | differs)
+         .select(F.explode(images).alias("c"))
+         .select("c.*", F.lit(version).alias("_commit_version"))
+         .coalesce(1).write.mode("overwrite")
+         .parquet(os.path.join(self._vdir(version), _CHANGES)))
+
     def merge(self, updates: DataFrame) -> dict:
         """Upsert ``updates`` by key. Returns counts per action.
 
         Only buckets containing updated series are rewritten (partition
         pruning on the write side — the Delta MERGE behavior), and the
         rewrite becomes visible atomically at the manifest replace.
+        The update columns are matched to the store schema by name and
+        cast to its types; a missing or extra column raises
+        ``ValueError``, as does a key that appears twice in the batch.
+        An empty batch into an existing store commits nothing.
         """
-        # one materialization of the update plan serves the touched-
-        # bucket probe, both counts, and the merge write (the unpersisted
-        # version re-executed a possibly-expensive connector plan 3x —
-        # VERDICT r1 finding)
-        updates = self._bucket(updates).persist()
-        if not self.exists():
-            os.makedirs(self.path, exist_ok=True)
-            self._write_version(updates, 1)
-            initial = self._written_buckets(1)
-            if not initial:
-                updates.unpersist()
+        old = self._load_manifest() if self.exists() else None
+        schema = old["schema"] if old else self._new_schema(updates)
+        # one materialization of the update plan serves the probe, the
+        # merge write and the change file (the unpersisted version
+        # re-executed a possibly-expensive connector plan 3x — VERDICT
+        # r1 finding)
+        updates = self._bucket(self._conform(updates, schema)).persist()
+        try:
+            return self._merge(updates, old, schema)
+        finally:
+            updates.unpersist()
+
+    def _merge(self, updates: DataFrame, old: dict | None, schema: dict) -> dict:
+        touched = self._probe(updates)
+        total = sum(touched.values())
+        if old is None:
+            if not total:
                 raise ValueError(
                     "refusing to create an empty store (initial merge "
                     "received a frame with no rows)")
-            manifest = {
-                "version": 1,
-                "buckets": {b: 1 for b in initial},
-                "data": {b: 1 for b in initial},
-            }
-            self._commit_manifest(manifest)
-            n = updates.count()
-            updates.unpersist()
-            return {"inserted": n, "updated": 0}
+            # the creating commit writes no change file: no changes()
+            # range can include version 1
+            os.makedirs(self.path, exist_ok=True)
+            rows = self._write_version(updates, 1)
+            self._commit_manifest({
+                "version": 1, "operation": "merge", "schema": schema,
+                "buckets": {b: 1 for b in rows},
+                "data": {b: 1 for b in rows}, "rows": rows,
+            })
+            return {"inserted": total, "updated": 0}
+        if not total:
+            return {"inserted": 0, "updated": 0}
 
-        old = self._load_manifest()
-        touched = [
-            r["bucket"] for r in updates.select("bucket").distinct().collect()
-        ]
         # bucket-pruned read through the manifest (NOT read().where):
-        # read() plans one scan node per retained version dir, so on a
-        # fragmented store every small merge re-plans a union over the
-        # whole version history; _read_buckets references only the
-        # touched buckets' dirs — the merge plan stays O(touched), not
-        # O(versions), which is what a daily-increment cadence needs
+        # the merge plan stays O(touched buckets), not O(versions),
+        # which is what a daily-increment cadence needs
         existing = self._read_buckets(old, set(touched))
         if existing is None:
             # none of the touched buckets exist yet: pure insert
             existing = updates.limit(0)
-
-        total = updates.count()
         survivors = existing.join(updates, self.key_cols, "left_anti")
-        merged = survivors.unionByName(updates)
-        n_updated = existing.join(updates, self.key_cols, "left_semi").count()
-        counts = {"inserted": total - n_updated, "updated": n_updated}
-
         version = old["version"] + 1
-        self._write_version(merged, version)
-        written = self._written_buckets(version)
-        buckets = dict(old["buckets"])
-        buckets.update({b: version for b in written})
-        data = dict(old["data"])
-        data.update({b: version for b in written})
-        manifest = {"version": version, "buckets": buckets, "data": data}
-        self._commit_manifest(manifest)
+        written = self._write_version(survivors.unionByName(updates), version)
+        self._write_changes(updates, existing, version)
+        before = sum(old["rows"].get(b, 0) for b in touched)
+        updated = before + total - sum(written.values())
+        self._commit_manifest({
+            **old, "version": version, "operation": "merge",
+            "buckets": {**old["buckets"], **{b: version for b in written}},
+            "data": {**old["data"], **{b: version for b in written}},
+            "rows": {**old["rows"], **written},
+        })
         self._gc()
-        updates.unpersist()
-        return counts
+        return {"inserted": total - updated, "updated": updated}

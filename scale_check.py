@@ -200,7 +200,7 @@ def main() -> None:
     # argument (SCALE.md: write amplification unit = bucket) is IO-
     # PINNED here, not just claimed: the incremental version dir must
     # contain ONLY the touched buckets, and the CDF read must open
-    # ONLY moved-bucket files.
+    # ONLY the commit's change file, no bucket file.
     import os as _os2
 
     from aquacache_spark.sources.store import ParquetMergeStore
@@ -229,7 +229,7 @@ def main() -> None:
     touched = {r["bucket"] for r in store._bucket(
         spark.range(0, 8).select(F.col("id").alias("timeseries_id"))
     ).select("bucket").distinct().collect()}
-    written = set(store._written_buckets(2))
+    written = set(store._written_rows(2))
     assert written == touched, (
         f"incremental merge rewrote {len(written)} buckets, expected the "
         f"{len(touched)} touched ones: {sorted(written ^ touched)}")
@@ -239,11 +239,10 @@ def main() -> None:
     n_changes = cdf.count()
     timings["store_cdf_1m"] = round(time.perf_counter() - t0, 2)
     assert n_changes == upd.count() * 2  # pre+post image per updated row
-    opened = {f for f in cdf.inputFiles()}
-    bad = [f for f in opened
-           if not any(f"bucket={b}/" in f or f.rstrip("/").endswith(f"bucket={b}")
-                      for b in touched)]
-    assert not bad, f"CDF read opened untouched-bucket files: {bad[:3]}"
+    changes_dir = _os2.path.join(store._vdir(2), "_changes") + "/"
+    opened = cdf.inputFiles()
+    bad = [f for f in opened if changes_dir not in f or "bucket=" in f]
+    assert opened and not bad, f"CDF read opened bucket files: {bad[:3]}"
     n_v1_dirs = len(_os2.listdir(store._vdir(1)))
     assert n_v1_dirs >= 250, n_v1_dirs  # the full store really is wide
 

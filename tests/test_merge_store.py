@@ -1,3 +1,5 @@
+import os
+
 from pyspark.sql import functions as F
 
 from aquacache_spark.sources.store import ParquetMergeStore
@@ -135,8 +137,8 @@ def test_time_travel_and_vacuum(spark, tmp_path):
 
 
 def test_change_data_feed_between_versions(spark, tmp_path):
-    """changes(v_from, v_to): Delta-CDF-shaped diff reading only
-    buckets whose version pointer moved."""
+    """changes(v_from, v_to): Delta-CDF-shaped feed read from the
+    commit's change file alone."""
     path = str(tmp_path / "store5")
     store = ParquetMergeStore(spark, path, ["timeseries_id", "datetime"],
                               n_buckets=4)
@@ -156,13 +158,12 @@ def test_change_data_feed_between_versions(spark, tmp_path):
     }
     assert all(r["_commit_version"] == 2
                for r in store.changes(1, 2).collect())
-    # only the buckets whose pointer moved are opened
-    data = store._load_manifest()["data"]
-    touched = {b for b, v in data.items() if v == 2}
-    assert set(data) - touched  # an untouched bucket exists to skip
-    read = {int(f.split("bucket=")[1].split("/")[0])
-            for f in ch.inputFiles() if "bucket=" in f}
-    assert read and read <= touched
+    # only the commit's change file is opened, no bucket file
+    from urllib.parse import urlparse
+
+    opened = [urlparse(f).path for f in ch.inputFiles()]
+    changes_dir = os.path.join(store._vdir(2), "_changes")
+    assert opened and all(os.path.dirname(f) == changes_dir for f in opened)
     # no-op diff
     assert store.changes(2, 2).count() == 0
     # vacuumed-away version refuses
@@ -174,8 +175,8 @@ def test_change_data_feed_between_versions(spark, tmp_path):
 
 
 def test_changes_schema_identical_across_branches(spark, tmp_path):
-    """Every changes() branch (full-outer diff, insert-only, empty
-    feed) returns key_cols + data_cols + _change_type +
+    """Every changes() branch (update commit, insert-only commit,
+    empty feed) returns key_cols + data_cols + _change_type +
     _commit_version — never the bucket partition column."""
     path = str(tmp_path / "store6")
     store = ParquetMergeStore(spark, path, ["timeseries_id", "datetime"],
@@ -187,7 +188,7 @@ def test_changes_schema_identical_across_branches(spark, tmp_path):
 
     expected = ["timeseries_id", "datetime", "value", "_change_type",
                 "_commit_version"]
-    assert store.changes(1, 2).columns == expected  # full-outer path
+    assert store.changes(1, 2).columns == expected  # update commit
     assert store.changes(2, 3).columns == expected  # insert-heavy path
     assert store.changes(3, 3).columns == expected  # empty feed
     # and the union of any two branches is therefore legal
@@ -211,6 +212,7 @@ def test_empty_commits_rejected(spark, tmp_path):
     store.merge(make_df(spark, [(1, "2024-01-01 00:00:00", 1.0)]))
     stats = store.merge(empty)
     assert stats == {"inserted": 0, "updated": 0}
+    assert store._load_manifest()["version"] == 1  # nothing committed
     assert store.read().count() == 1
 
 
@@ -309,8 +311,7 @@ def test_manifest_accumulation_and_retention_sweep(spark, tmp_path):
     store.merge(make_df(spark, [(1, "2024-01-01 00:00:00", 1.0)]))
     base = store._load_manifest()
     for v in range(2, 1001):  # manifest-only commits (same bucket dirs)
-        store._commit_manifest({"version": v, "buckets": base["buckets"],
-                                "data": base["data"]})
+        store._commit_manifest({**base, "version": v})
     assert store._retained_versions() == list(range(1, 1001))
     assert store._load_manifest()["version"] == 1000
     kept = store.vacuum(retain_last=5)
@@ -320,6 +321,197 @@ def test_manifest_accumulation_and_retention_sweep(spark, tmp_path):
 
     with pytest.raises(ValueError, match="not available"):
         store.read(version=995)
+
+
+def test_duplicate_keys_in_one_batch_rejected(spark, tmp_path):
+    """A batch that holds one key twice is rejected, as PostgreSQL's
+    ON CONFLICT DO UPDATE refuses to affect one row twice, and the
+    rejected merge commits nothing."""
+    import pytest
+
+    store = ParquetMergeStore(spark, str(tmp_path / "store_dup"),
+                              ["timeseries_id", "datetime"], n_buckets=4)
+    dup = make_df(spark, [(1, "2024-01-01 00:00:00", 5.0),
+                          (1, "2024-01-01 00:00:00", 6.0),
+                          (2, "2024-01-01 00:00:00", 7.0)])
+    with pytest.raises(ValueError, match="'timeseries_id': 1,"):
+        store.merge(dup)
+    assert not store.exists()
+    store.merge(make_df(spark, [(1, "2024-01-01 00:00:00", 1.0),
+                                (2, "2024-01-01 00:00:00", 2.0)]))
+    with pytest.raises(ValueError, match="'timeseries_id': 1,"):
+        store.merge(dup)
+    assert store._load_manifest()["version"] == 1
+    assert sorted((r["timeseries_id"], r["value"])
+                  for r in store.read().collect()) == [(1, 1.0), (2, 2.0)]
+
+
+def _plan_jobs(spark, plan) -> int:
+    """Spark jobs started while ``plan()`` builds a DataFrame, before
+    any action runs, counted by job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"plan-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "plan only")
+    try:
+        plan()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_reads_and_changes_plan_without_spark_jobs(spark, tmp_path):
+    """The manifest carries the schema, so planning a read, a time-
+    travel read, a change feed or a fresh instance's read infers
+    nothing from the files."""
+    path = str(tmp_path / "store_plan")
+    keys = ["timeseries_id", "datetime"]
+    store = ParquetMergeStore(spark, path, keys, n_buckets=4)
+    store.merge(make_df(spark, [(i, "2024-01-01 00:00:00", float(i))
+                                for i in range(8)]))
+    store.merge(make_df(spark, [(1, "2024-01-01 00:00:00", 10.0),
+                                (9, "2024-01-01 00:00:00", 9.0)]))
+    assert len(set(store._load_manifest()["buckets"].values())) == 2
+
+    assert _plan_jobs(spark, store.read) == 0
+    assert _plan_jobs(spark, lambda: store.read(version=1)) == 0
+    assert _plan_jobs(spark, lambda: store.changes(1)) == 0
+    assert _plan_jobs(spark, ParquetMergeStore(spark, path, keys).read) == 0
+    # the planned frames still run
+    assert store.read().count() == 9
+    assert store.read(version=1).count() == 8
+    assert store.changes(1).count() == 3
+    assert sum(store._load_manifest()["rows"].values()) == 9
+
+
+def test_changes_range_keeps_each_commits_version(spark, tmp_path):
+    """A range of commits is the union of each commit's own rows,
+    tagged with its own version (Delta table_changes): merge commits
+    give their change file, an overwrite gives delete-all plus
+    insert-all, an optimize gives nothing."""
+    store = ParquetMergeStore(spark, str(tmp_path / "store_range"),
+                              ["timeseries_id", "datetime"], n_buckets=4)
+    t = "2024-01-01 00:00:00"
+    store.merge(make_df(spark, [(1, t, 1.0), (2, t, 2.0)]))
+    assert store.merge(make_df(spark, [(1, t, 10.0), (3, t, 3.0)])) == {
+        "inserted": 1, "updated": 1}
+    # (3, 3.0) is re-sent unchanged: counted as updated, not a change
+    assert store.merge(make_df(spark, [(1, t, 100.0), (3, t, 3.0),
+                                       (4, t, 4.0)])) == {
+        "inserted": 1, "updated": 2}
+
+    def feed(since, to=None):
+        return sorted((r["timeseries_id"], r["_change_type"], r["value"],
+                       r["_commit_version"])
+                      for r in store.changes(since, to).collect())
+
+    v2 = [(1, "update_postimage", 10.0, 2), (1, "update_preimage", 1.0, 2),
+          (3, "insert", 3.0, 2)]
+    v3 = [(1, "update_postimage", 100.0, 3), (1, "update_preimage", 10.0, 3),
+          (4, "insert", 4.0, 3)]
+    assert feed(1, 2) == v2
+    assert feed(2, 3) == v3
+    assert feed(1, 3) == sorted(v2 + v3)
+
+    store.overwrite(make_df(spark, [(1, t, 100.0), (5, t, 5.0)]))  # v4
+    v4 = sorted([(s, "delete", v, 4) for s, v in
+                 ((1, 100.0), (2, 2.0), (3, 3.0), (4, 4.0))]
+                + [(1, "insert", 100.0, 4), (5, "insert", 5.0, 4)])
+    assert feed(3, 4) == v4
+    store.optimize()  # v5
+    assert feed(4, 5) == []
+    assert feed(3, 5) == v4
+    assert feed(2) == sorted(v3 + v4)
+    assert sum(store._load_manifest()["rows"].values()) == 2
+
+
+def test_merge_casts_to_store_schema(spark, tmp_path):
+    """Update columns are matched by name and cast to the schema the
+    store recorded at creation: a bigint value lands as double even in
+    a bucket the store never had; a missing or extra column raises."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    import pytest
+
+    store = ParquetMergeStore(spark, str(tmp_path / "store_cast"),
+                              ["timeseries_id", "datetime"], n_buckets=4)
+    t = "2024-01-01 00:00:00"
+    store.merge(make_df(spark, [(1, t, 1.5)]))
+    first = set(store._load_manifest()["buckets"])
+    tsid = store._bucket(
+        spark.range(2, 100).withColumnRenamed("id", "timeseries_id")
+    ).where(~F.col("bucket").isin(first)).first()["timeseries_id"]
+    longs = spark.createDataFrame(
+        [(7, t, tsid)], "value bigint, datetime string, timeseries_id bigint",
+    ).withColumn("datetime", F.col("datetime").cast("timestamp"))
+    assert store.merge(longs) == {"inserted": 1, "updated": 0}
+
+    m = store._load_manifest()
+    (new,) = [b for b, v in m["buckets"].items() if v == 2]
+    assert new not in first
+    bdir = os.path.join(store._vdir(2), f"bucket={new}")
+    for f in os.listdir(bdir):
+        if f.endswith(".parquet"):
+            assert pq.read_schema(os.path.join(bdir, f)).field(
+                "value").type == pa.float64()
+    got = store.read()
+    assert dict(got.dtypes)["value"] == "double"
+    assert sorted((r["timeseries_id"], r["value"]) for r in got.collect()) \
+        == [(1, 1.5), (tsid, 7.0)]
+
+    with pytest.raises(ValueError, match=r"missing \['value'\]"):
+        store.merge(longs.drop("value"))
+    with pytest.raises(ValueError, match=r"extra \['note'\]"):
+        store.merge(longs.withColumn("note", F.lit("x")))
+    assert store._load_manifest()["version"] == 2
+
+
+def test_two_commit_feed_drives_daily_refresh(spark, tmp_path):
+    """changes() over two merge commits -> changed ranges -> scoped
+    daily refresh: the refreshed rows equal daily means recomputed in
+    pandas from the final rows, for exactly the changed slices."""
+    import pandas as pd
+    import pytest
+
+    from aquacache_spark.operators.daily import daily_rollup
+    from aquacache_spark.streaming.incremental import (
+        changed_ranges_from_cdf, incremental_daily_refresh,
+    )
+
+    def rollup(df):
+        return daily_rollup(df, keys=["timeseries_id"], dt_col="datetime",
+                            value_col="value", agg_type="mean")
+
+    store = ParquetMergeStore(spark, str(tmp_path / "store_refresh"),
+                              ["timeseries_id", "datetime"], n_buckets=4)
+    base = [(s, f"2024-01-{d:02d} {h:02d}:00:00", float(s * 100 + d + h))
+            for s in (1, 2, 3) for d in (1, 2, 3) for h in (0, 6, 12)]
+    store.merge(make_df(spark, base))
+    daily_v1 = rollup(store.read(1))
+    v2 = [(1, "2024-01-02 06:00:00", 500.0), (2, "2024-01-04 00:00:00", 9.0)]
+    v3 = [(1, "2024-01-02 12:00:00", 600.0), (3, "2024-01-01 00:00:00", -1.0),
+          (2, "2024-01-04 06:00:00", 11.0)]
+    store.merge(make_df(spark, v2))
+    store.merge(make_df(spark, v3))
+
+    ranges = changed_ranges_from_cdf(store.changes(1, 3))
+    out = incremental_daily_refresh(store.read(), ranges, daily_v1, rollup)
+    got = {(r["timeseries_id"], str(r["date"])): (r["value"], r["merge_action"])
+           for r in out.collect()}
+
+    model = pd.DataFrame(base + v2 + v3,
+                         columns=["timeseries_id", "datetime", "value"])
+    model = model.drop_duplicates(["timeseries_id", "datetime"], keep="last")
+    model["date"] = model["datetime"].str[:10]
+    means = model.groupby(["timeseries_id", "date"])["value"].mean()
+    want = {(1, "2024-01-02"): "update", (2, "2024-01-04"): "insert",
+            (3, "2024-01-01"): "update"}
+    assert set(got) == set(want)
+    for k, action in want.items():
+        assert got[k][1] == action
+        assert got[k][0] == pytest.approx(means[k], rel=1e-12)
 
 
 def test_delta_spark_recheck():
