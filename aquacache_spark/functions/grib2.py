@@ -1,8 +1,7 @@
 """Minimal pure-stdlib+numpy GRIB2 decoder (WMO FM 92 GRIB Edition 2).
 
 The reference's gridded connectors hand GRIB urls to ``terra::rast``
-(R/downloadHRDPA.R:155-181); this engine decodes the payload itself —
-the raster-ingest sibling of the BMP codec in operators/multimodal.py,
+(R/downloadHRDPA.R:155-181); this engine decodes the payload itself,
 so no GDAL binary is required for the supported product shape:
 
 - Section 3 grid templates 3.0 (regular latitude/longitude) and 3.1

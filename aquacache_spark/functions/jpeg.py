@@ -1,26 +1,17 @@
 """Baseline JPEG codec (stdlib struct + numpy — no libjpeg).
 
-The third real image format of the multimodal tier (after BMP and PNG
-in operators/multimodal.py), and the one web corpora are mostly made
-of. Scope is baseline sequential DCT (SOF0), extended sequential
-(SOF1, incl. 12-bit), plus progressive (SOF2):
+The image format web corpora are mostly made of. Scope is 8-bit
+sequential DCT with Huffman coding (SOF0 baseline, SOF1 extended):
 
 - markers: SOI/APPn/COM (skipped), DQT (8- and 16-bit tables), SOF0,
-  SOF2, DHT, DRI + RST0-7 restarts, SOS, EOI;
+  SOF1, DHT, DRI + RST0-7 restarts, SOS, EOI;
 - 8-bit samples, grayscale or YCbCr with 4:4:4 / 4:2:2 / 4:2:0
   sampling (nearest-neighbor chroma upsampling, the libjpeg "fancy
   upsampling off" behavior);
-- progressive: spectral selection, successive approximation (DC and
-  AC initial + refinement scans, EOB runs), interleaved DC scans —
-  real web corpora are ~10% progressive, so the decode path is
-  first-class and pinned by :func:`encode_jpeg_progressive`
-  round-trips (same quantized coefficients as baseline, so the two
-  decodes are bit-identical at any quality);
-- 12-bit samples decode via SOF1/SOF2 and encode via
-  :func:`encode_jpeg_12bit` (grayscale extended sequential);
-- arithmetic coding (SOF9-11), lossless, and hierarchical
-  modes raise ValueError loudly — corrupt/exotic inputs quarantine at
-  the feature-extraction layer, never produce garbage pixels.
+- progressive (SOF2), 12-bit precision, arithmetic coding (SOF9-11),
+  lossless, and hierarchical modes raise ValueError loudly — such
+  inputs quarantine at the feature-extraction layer, never produce
+  garbage pixels.
 
 Entropy decoding is a per-symbol Python loop (Huffman is inherently
 sequential); dequantization and the IDCT are vectorized numpy over
@@ -145,14 +136,10 @@ def _build_huffman(bits, symbols) -> _HuffTable:
 
 
 class _BitReader:
-    """MSB-first cursor over de-stuffed entropy bytes.
-
-    Multi-bit reads go through a 3-4 byte ``int.from_bytes`` window
-    (one slice + shift per read) and symbol decode through the
-    :class:`_HuffTable` peek LUT — the per-SYMBOL cost replaces the
-    former per-BIT Python call, the decoder's documented throughput
-    bound. Symbol reads that *start* past the end of the real data
-    raise loudly, and magnitude/EOB-run receives additionally check
+    """MSB-first cursor over de-stuffed entropy bytes: the padded
+    buffer, the bit position and the real bit count that the inlined
+    scan loop reads. Symbol reads that *start* past the end of the
+    real data raise loudly, and magnitude receives additionally check
     their full extent (start + n) — a receive is not prefix-free, so
     one extending into the padding would fabricate a coefficient. A
     final symbol's CODE may extend into the zero padding, which is
@@ -166,13 +153,6 @@ class _BitReader:
         self.data = data + b"\x00\x00\x00\x00\x00"
         self.pos = 0  # bit position
         self.nbits = len(data) * 8
-
-    def get_bit(self) -> int:
-        p = self.pos
-        if p >= self.nbits:
-            raise ValueError("JPEG entropy data exhausted")
-        self.pos = p + 1
-        return (self.data[p >> 3] >> (7 - (p & 7))) & 1
 
     def get_bits(self, n: int) -> int:
         if n == 0:
@@ -189,25 +169,6 @@ class _BitReader:
         chunk = int.from_bytes(self.data[b:b + 4], "big")
         self.pos = p + n
         return (chunk >> (32 - (p & 7) - n)) & ((1 << n) - 1)
-
-    def decode_symbol(self, table: _HuffTable) -> int:
-        p = self.pos
-        if p >= self.nbits:
-            raise ValueError("JPEG entropy data exhausted")
-        b = p >> 3
-        chunk = int.from_bytes(self.data[b:b + 3], "big")
-        key = (chunk >> (8 - (p & 7))) & 0xFFFF
-        length = table.lens[key]
-        if length == 0:
-            raise ValueError("invalid JPEG Huffman code")
-        self.pos = p + length
-        return table.syms[key]
-
-
-def _extend(v: int, nbits: int) -> int:
-    if nbits == 0:
-        return 0
-    return v if v >= (1 << (nbits - 1)) else v - (1 << nbits) + 1
 
 
 def _destuff(blob: bytes, pos: int):
@@ -243,16 +204,13 @@ def _decode_baseline_scan(frame, order, ri, data) -> None:
     window serving both the 16-bit symbol peek and the magnitude
     receive — no per-coefficient method calls. This is the documented
     throughput bound of the codec (module docstring), so the hot loop
-    trades abstraction for ~4x over the _BitReader path (which the
-    colder progressive scans still use)."""
-    buf = data + b"\x00\x00\x00\x00\x00"
-    nbits = len(data) * 8
-    pos = 0
+    trades abstraction for ~4x over per-read method calls."""
+    br = _BitReader(data)
+    buf, nbits = br.data, br.nbits
     preds = {c["id"]: 0 for c in order}
 
     def block(c, idx):
-        nonlocal pos
-        p = pos
+        p = br.pos
         if p >= nbits:
             raise ValueError("JPEG entropy data exhausted")
         dlens, dsyms = c["hdc"].lens, c["hdc"].syms
@@ -303,13 +261,12 @@ def _decode_baseline_scan(frame, order, ri, data) -> None:
             p += s
             blk[k] = v if v >= (1 << (s - 1)) else v - (1 << s) + 1
             k += 1
-        pos = p
+        br.pos = p
         c["coef"][idx] = blk  # one bulk row store per block
 
     def restart(unit_index):
-        nonlocal pos
         if ri and unit_index and unit_index % ri == 0:
-            pos = (pos + 7) // 8 * 8
+            br.pos = (br.pos + 7) // 8 * 8
             for cid in preds:
                 preds[cid] = 0
 
@@ -339,211 +296,8 @@ def _decode_baseline_scan(frame, order, ri, data) -> None:
             block(c, row * c["bx"] + col)
 
 
-def _ac_first_block(br, coef, hac, ss, se, al, state) -> None:
-    """Progressive AC initial scan (Ah=0) for one block's band.
-    Inlined bit cursor (same discipline as _decode_baseline_scan):
-    one 5-byte window serves the symbol peek and the receive."""
-    if state["eobrun"] > 0:
-        state["eobrun"] -= 1
-        return
-    buf, nbits = br.data, br.nbits
-    p = br.pos
-    lens, syms = hac.lens, hac.syms
-    k = ss
-    while k <= se:
-        if p >= nbits:
-            raise ValueError("JPEG entropy data exhausted")
-        b = p >> 3
-        chunk = int.from_bytes(buf[b:b + 5], "big")
-        off = 40 - (p & 7)
-        key = (chunk >> (off - 16)) & 0xFFFF
-        length = lens[key]
-        if length == 0:
-            raise ValueError("invalid JPEG Huffman code")
-        rs = syms[key]
-        p += length
-        r, s = rs >> 4, rs & 0x0F
-        if s == 0:
-            if r < 15:
-                state["eobrun"] = (1 << r) - 1
-                if r:
-                    if p + r > nbits:  # receive is not prefix-free
-                        raise ValueError("JPEG entropy data exhausted")
-                    state["eobrun"] += (
-                        chunk >> (off - length - r)) & ((1 << r) - 1)
-                    p += r
-                break
-            k += 16
-            continue
-        k += r
-        if k > se:
-            raise ValueError("AC run past spectral band end")
-        if p + s > nbits:  # receive is not prefix-free
-            raise ValueError("JPEG entropy data exhausted")
-        v = (chunk >> (off - length - s)) & ((1 << s) - 1)
-        p += s
-        coef[k] = (v if v >= (1 << (s - 1)) else v - (1 << s) + 1) << al
-        k += 1
-    br.pos = p
-
-
-def _ac_refine_block(br, coef, hac, ss, se, al, state) -> None:
-    """Progressive AC refinement scan (Ah>0): libjpeg's
-    decode_mcu_AC_refine — newly-significant coefficients arrive as
-    ±1<<Al, already-significant ones take a correction bit as the
-    cursor passes them. Inlined bit cursor; correction bits are
-    single-byte reads (they never cross a window)."""
-    p1 = 1 << al
-    m1 = -1 << al
-    buf, nbits = br.data, br.nbits
-    p = br.pos
-    lens, syms = hac.lens, hac.syms
-    k = ss
-    if state["eobrun"] == 0:
-        while k <= se:
-            if p >= nbits:
-                raise ValueError("JPEG entropy data exhausted")
-            b = p >> 3
-            chunk = int.from_bytes(buf[b:b + 5], "big")
-            off = 40 - (p & 7)
-            key = (chunk >> (off - 16)) & 0xFFFF
-            length = lens[key]
-            if length == 0:
-                raise ValueError("invalid JPEG Huffman code")
-            rs = syms[key]
-            p += length
-            r, s = rs >> 4, rs & 0x0F
-            val = 0
-            if s == 0:
-                if r < 15:
-                    state["eobrun"] = 1 << r
-                    if r:
-                        if p + r > nbits:  # receive, not prefix-free
-                            raise ValueError(
-                                "JPEG entropy data exhausted")
-                        state["eobrun"] += (
-                            chunk >> (off - length - r)) & ((1 << r) - 1)
-                        p += r
-                    break
-                # r == 15 (ZRL): skip 16 zero-history positions
-            else:
-                if s != 1:
-                    raise ValueError("bad refinement magnitude category")
-                if p + 1 > nbits:  # receive, not prefix-free
-                    raise ValueError("JPEG entropy data exhausted")
-                val = p1 if (chunk >> (off - length - 1)) & 1 else m1
-                p += 1
-            while k <= se:
-                ck = coef[k]
-                if ck != 0:
-                    if p >= nbits:
-                        raise ValueError("JPEG entropy data exhausted")
-                    bit = (buf[p >> 3] >> (7 - (p & 7))) & 1
-                    p += 1
-                    if bit and (ck & p1) == 0:
-                        coef[k] = ck + (p1 if ck >= 0 else m1)
-                else:
-                    if r == 0:
-                        break
-                    r -= 1
-                k += 1
-            if s and k <= se:
-                coef[k] = val
-            k += 1
-    if state["eobrun"] > 0:
-        while k <= se:
-            ck = coef[k]
-            if ck != 0:
-                if p >= nbits:
-                    raise ValueError("JPEG entropy data exhausted")
-                bit = (buf[p >> 3] >> (7 - (p & 7))) & 1
-                p += 1
-                if bit and (ck & p1) == 0:
-                    coef[k] = ck + (p1 if ck >= 0 else m1)
-            k += 1
-        state["eobrun"] -= 1
-    br.pos = p
-
-
-def _decode_scan(frame, order, ss, se, ah, al, ri, data,
-                 progressive) -> None:
-    if not progressive:  # baseline: the inlined hot loop
-        return _decode_baseline_scan(frame, order, ri, data)
-    br = _BitReader(data)
-    state = {"eobrun": 0}
-    preds = {c["id"]: 0 for c in order}
-
-    def restart(unit_index: int) -> None:
-        if ri and unit_index and unit_index % ri == 0:
-            br.pos = (br.pos + 7) // 8 * 8
-            for cid in preds:
-                preds[cid] = 0
-            state["eobrun"] = 0
-
-    interleaved = len(order) > 1
-    if interleaved:
-        if ss != 0:
-            raise ValueError(
-                "progressive AC scans must be non-interleaved")
-        # MCU walk: progressive DC (Ss=Se=0)
-        unit = 0
-        for my in range(frame["mcus_y"]):
-            for mx in range(frame["mcus_x"]):
-                restart(unit)
-                unit += 1
-                for c in order:
-                    for vy in range(c["v"]):
-                        for vx in range(c["h"]):
-                            idx = ((my * c["v"] + vy) * c["bx"]
-                                   + mx * c["h"] + vx)
-                            if ah == 0:
-                                t = br.decode_symbol(c["hdc"])
-                                diff = _extend(br.get_bits(t), t)
-                                preds[c["id"]] += diff
-                                c["coef"][idx][0] = preds[c["id"]] << al
-                            else:
-                                c["coef"][idx][0] |= br.get_bit() << al
-        return
-    # non-interleaved scan (single component): the MCU is ONE block and
-    # the walk covers the component's own ceil(comp_w/8) x ceil(comp_h/8)
-    # grid — NOT the MCU-padded c["bx"]/c["by"] grid (F.2.3 / libjpeg
-    # per-component scan geometry). Holds for all progressive AC scans.
-    c = order[0]
-    comp_w = -(-frame["w"] * c["h"] // frame["hmax"])
-    comp_h = -(-frame["h"] * c["v"] // frame["vmax"])
-    cw, ch = -(-comp_w // 8), -(-comp_h // 8)
-    unit = 0
-    for row in range(ch):
-        for col in range(cw):
-            restart(unit)
-            unit += 1
-            blk = c["coef"][row * c["bx"] + col]
-            if ss == 0:
-                if ah == 0:
-                    t = br.decode_symbol(c["hdc"])
-                    diff = _extend(br.get_bits(t), t)
-                    preds[c["id"]] += diff
-                    blk[0] = preds[c["id"]] << al
-                else:
-                    blk[0] |= br.get_bit() << al
-            elif ah == 0:
-                # operate on a plain list: the per-coefficient walks in
-                # the AC scans pay Python-int costs, not numpy-scalar
-                lst = blk.tolist()
-                _ac_first_block(br, lst, c["hac"], ss, se, al, state)
-                blk[:] = lst
-            else:
-                lst = blk.tolist()
-                _ac_refine_block(br, lst, c["hac"], ss, se, al, state)
-                blk[:] = lst
-
-
 def decode_jpeg(blob: bytes) -> np.ndarray:
-    """Baseline or PROGRESSIVE JPEG bytes -> (h, w, 3) RGB uint8.
-
-    Progressive (SOF2) support is complete: spectral selection,
-    successive approximation (DC and AC initial + refinement scans,
-    EOB runs), interleaved DC scans, per-scan restart intervals."""
+    """8-bit sequential Huffman JPEG bytes -> (h, w, 3) RGB uint8."""
     if blob is None or len(blob) < 4 or blob[:2] != b"\xff\xd8":
         raise ValueError("not a JPEG (missing SOI)")
     pos = 2
@@ -552,7 +306,6 @@ def decode_jpeg(blob: bytes) -> np.ndarray:
     huff_ac = {}
     frame = None
     restart_interval = 0
-    progressive = False
     scans_done = 0
     while pos + 1 < len(blob):
         if blob[pos] != 0xFF:
@@ -578,13 +331,9 @@ def decode_jpeg(blob: bytes) -> np.ndarray:
                     qtables[tq] = np.frombuffer(
                         seg, ">u2", 64, off).astype(np.int64)
                     off += 128
-        elif marker in (0xC0, 0xC1, 0xC2):  # SOF0/1 seq, SOF2 prog
-            progressive = marker == 0xC2
+        elif marker in (0xC0, 0xC1):  # SOF0 baseline, SOF1 extended
             precision = seg[0]
-            # T.81 B.2.2: baseline (SOF0) is 8-bit only; extended
-            # sequential (SOF1) and progressive (SOF2) also allow 12
-            if precision != 8 and not (precision == 12
-                                       and marker in (0xC1, 0xC2)):
+            if precision != 8:
                 raise ValueError(f"unsupported precision {precision}")
             h, w = struct.unpack_from(">HH", seg, 1)
             ncomp = seg[5]
@@ -603,13 +352,12 @@ def decode_jpeg(blob: bytes) -> np.ndarray:
                 c["coef"] = np.zeros((c["by"] * c["bx"], 64),
                                      dtype=np.int64)
             frame = {"h": h, "w": w, "comps": comps, "hmax": hmax,
-                     "vmax": vmax, "mcus_x": mcus_x, "mcus_y": mcus_y,
-                     "prec": precision}
-        elif marker in (0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA,
+                     "vmax": vmax, "mcus_x": mcus_x, "mcus_y": mcus_y}
+        elif marker in (0xC2, 0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA,
                         0xCB, 0xCD, 0xCE, 0xCF):
             raise ValueError(
                 f"unsupported JPEG mode (SOF marker 0x{marker:02X}; "
-                "baseline sequential and progressive only)")
+                "sequential Huffman only)")
         elif marker == 0xC4:  # DHT
             off = 0
             while off < len(seg):
@@ -636,13 +384,8 @@ def decode_jpeg(blob: bytes) -> np.ndarray:
                 if tables & 0x0F in huff_ac:
                     c["hac"] = huff_ac[tables & 0x0F]
                 order.append(c)
-            ss, se, a = seg[1 + 2 * ns], seg[2 + 2 * ns], seg[3 + 2 * ns]
-            ah, al = a >> 4, a & 0x0F
-            if not progressive:
-                ss, se, ah, al = 0, 63, 0, 0
             data, nxt = _destuff(blob, pos + seg_len)
-            _decode_scan(frame, order, ss, se, ah, al,
-                         restart_interval, data, progressive)
+            _decode_baseline_scan(frame, order, restart_interval, data)
             scans_done += 1
             pos = nxt
             continue
@@ -651,9 +394,6 @@ def decode_jpeg(blob: bytes) -> np.ndarray:
         raise ValueError("JPEG missing SOF/SOS")
     comps = frame["comps"]
     hmax, vmax = frame["hmax"], frame["vmax"]
-    mid = float(1 << (frame["prec"] - 1))
-    maxv = (1 << frame["prec"]) - 1
-    out_dtype = np.uint16 if frame["prec"] > 8 else np.uint8
 
     # dequant + de-zigzag + batch IDCT per component
     planes = []
@@ -667,7 +407,7 @@ def decode_jpeg(blob: bytes) -> np.ndarray:
         nat[:, _ZZ] = coefs
         blocks = nat.reshape(-1, 8, 8).astype(np.float64)
         pix = np.einsum("ux,nuv,vy->nxy", _A, blocks, _A)
-        pix = np.clip(np.round(pix + mid), 0, maxv).astype(out_dtype)
+        pix = np.clip(np.round(pix + 128.0), 0, 255).astype(np.uint8)
         plane = (pix.reshape(c["by"], c["bx"], 8, 8)
                  .transpose(0, 2, 1, 3)
                  .reshape(c["by"] * 8, c["bx"] * 8))
@@ -681,14 +421,14 @@ def decode_jpeg(blob: bytes) -> np.ndarray:
         rgb = np.stack([y, y, y], axis=-1)
     else:
         y = planes[0].astype(np.float64)
-        cb = planes[1].astype(np.float64) - mid
-        cr = planes[2].astype(np.float64) - mid
+        cb = planes[1].astype(np.float64) - 128.0
+        cr = planes[2].astype(np.float64) - 128.0
         rgb = np.stack([
             y + 1.402 * cr,
             y - 0.344136 * cb - 0.714136 * cr,
             y + 1.772 * cb,
         ], axis=-1)
-    return np.clip(np.round(rgb), 0, maxv).astype(out_dtype)
+    return np.clip(np.round(rgb), 0, 255).astype(np.uint8)
 
 
 # ---------------------------------------------------------------------------
@@ -720,15 +460,6 @@ def _enc_codes(bits, symbols):
 _DC_CODES = _enc_codes(_ENC_DC_BITS, _ENC_DC_SYMS)
 _AC_CODES = _enc_codes(_ENC_AC_BITS, _ENC_AC_SYMS)
 
-# 12-bit DC table: 16 categories (diffs reach +-32760 -> SSSS <= 15)
-# at 5 bits each — Kraft 16/32, all-ones code 31 unused. The flat
-# 256-symbol AC table above already covers every (run, size) the
-# 12-bit range can produce.
-_ENC12_DC_BITS = [0, 0, 0, 0, 16] + [0] * 11
-_ENC12_DC_SYMS = list(range(16))
-_DC12_CODES = _enc_codes(_ENC12_DC_BITS, _ENC12_DC_SYMS)
-
-
 class _BitWriter:
     def __init__(self):
         self.out = bytearray()
@@ -752,15 +483,14 @@ class _BitWriter:
         return bytes(self.out)
 
 
-def _encode_block(bw: _BitWriter, zz: np.ndarray, pred: int,
-                  dc_codes=_DC_CODES) -> int:
+def _encode_block(bw: _BitWriter, zz: np.ndarray, pred: int) -> int:
     dc = int(zz[0])
     diff = dc - pred
     mag = abs(diff)
     t = mag.bit_length()
-    if t >= len(dc_codes):
+    if t >= len(_DC_CODES):
         raise ValueError("DC difference exceeds Huffman category range")
-    bw.put(*dc_codes[t])
+    bw.put(*_DC_CODES[t])
     if t:
         bw.put(diff if diff >= 0 else diff + (1 << t) - 1, t)
     run = 0
@@ -788,13 +518,12 @@ def _encode_block(bw: _BitWriter, zz: np.ndarray, pred: int,
     return dc
 
 
-def _plane_blocks(plane, q, bx, by, mid: float = 128.0):
-    """Pad to (by*8, bx*8), forward DCT + quantize, -> (by*bx, 64)
-    zigzag-ordered quantized coefficients. ``mid`` is the level shift
-    (128 for 8-bit samples, 2048 for 12-bit)."""
+def _plane_blocks(plane, q, bx, by):
+    """Pad to (by*8, bx*8), level-shift, forward DCT + quantize,
+    -> (by*bx, 64) zigzag-ordered quantized coefficients."""
     h, w = plane.shape
     padded = np.pad(plane, ((0, by * 8 - h), (0, bx * 8 - w)),
-                    mode="edge") - mid
+                    mode="edge") - 128.0
     blocks = (padded.reshape(by, 8, bx, 8)
               .transpose(0, 2, 1, 3).reshape(-1, 8, 8))
     coefs = np.einsum("ux,nxy,vy->nuv", _A, blocks, _A)
@@ -802,10 +531,14 @@ def _plane_blocks(plane, q, bx, by, mid: float = 128.0):
                     / q[_ZZ][None, :]).astype(np.int64)
 
 
-def _quantized_planes(pixels, quality: int, subsampling: str):
-    """Shared encoder front half: color convert, subsample, forward
-    DCT + quantize. Returns (gray, h, w, factors, qlum, qchr,
-    zz_planes, dims, mcus_x, mcus_y)."""
+def encode_jpeg(pixels, quality: int = 90,
+                subsampling: str = "444",
+                restart_interval: int = 0) -> bytes:
+    """(h, w, 3) RGB or (h, w) grayscale uint8 -> baseline JPEG bytes.
+    ``subsampling``: '444' or '420' (2x2-mean chroma downsample).
+    Quality 100 gives all-ones quantization, so MCU-constant grayscale
+    content round-trips bit-exact."""
+    # color convert, subsample, forward DCT + quantize
     px = np.asarray(pixels, dtype=np.uint8)
     gray = px.ndim == 2
     h, w = px.shape[:2]
@@ -847,40 +580,6 @@ def _quantized_planes(pixels, quality: int, subsampling: str):
         bx, by = mcus_x * fh, mcus_y * fv
         zz_planes.append(_plane_blocks(plane, q, bx, by))
         dims.append((bx, by))
-    return gray, h, w, factors, qlum, qchr, zz_planes, dims, mcus_x, mcus_y
-
-
-def _header_segments(out, gray, h, w, factors, qlum, qchr,
-                     sof_marker: int) -> None:
-    """DQT + SOF + DHT segments shared by both encoders."""
-
-    def seg(marker, body):
-        out.extend(bytes([0xFF, marker]))
-        out.extend(struct.pack(">H", len(body) + 2))
-        out.extend(body)
-
-    seg(0xDB, bytes([0]) + bytes(qlum[_ZZ].astype(np.uint8)))
-    if not gray:
-        seg(0xDB, bytes([1]) + bytes(qchr[_ZZ].astype(np.uint8)))
-    ncomp = 1 if gray else 3
-    sof = struct.pack(">BHHB", 8, h, w, ncomp)
-    for cid in range(1, ncomp + 1):
-        fh, fv = factors[cid - 1]
-        sof += bytes([cid, (fh << 4) | fv, 0 if cid == 1 else 1])
-    seg(sof_marker, sof)
-    seg(0xC4, bytes([0x00] + _ENC_DC_BITS) + bytes(_ENC_DC_SYMS))
-    seg(0xC4, bytes([0x10] + _ENC_AC_BITS) + bytes(_ENC_AC_SYMS))
-
-
-def encode_jpeg(pixels, quality: int = 90,
-                subsampling: str = "444",
-                restart_interval: int = 0) -> bytes:
-    """(h, w, 3) RGB or (h, w) grayscale uint8 -> baseline JPEG bytes.
-    ``subsampling``: '444' or '420' (2x2-mean chroma downsample).
-    Quality 100 gives all-ones quantization, so MCU-constant grayscale
-    content round-trips bit-exact."""
-    (gray, h, w, factors, qlum, qchr, zz_planes, dims,
-     mcus_x, mcus_y) = _quantized_planes(pixels, quality, subsampling)
     ncomp = len(zz_planes)
 
     out = bytearray(b"\xff\xd8")
@@ -890,7 +589,16 @@ def encode_jpeg(pixels, quality: int = 90,
         out.extend(struct.pack(">H", len(body) + 2))
         out.extend(body)
 
-    _header_segments(out, gray, h, w, factors, qlum, qchr, 0xC0)
+    seg(0xDB, bytes([0]) + bytes(qlum[_ZZ].astype(np.uint8)))
+    if not gray:
+        seg(0xDB, bytes([1]) + bytes(qchr[_ZZ].astype(np.uint8)))
+    sof = struct.pack(">BHHB", 8, h, w, ncomp)
+    for cid in range(1, ncomp + 1):
+        fh, fv = factors[cid - 1]
+        sof += bytes([cid, (fh << 4) | fv, 0 if cid == 1 else 1])
+    seg(0xC0, sof)
+    seg(0xC4, bytes([0x00] + _ENC_DC_BITS) + bytes(_ENC_DC_SYMS))
+    seg(0xC4, bytes([0x10] + _ENC_AC_BITS) + bytes(_ENC_AC_SYMS))
     if restart_interval:
         seg(0xDD, struct.pack(">H", restart_interval))
     sos = bytes([ncomp])
@@ -921,226 +629,5 @@ def encode_jpeg(pixels, quality: int = 90,
                         preds[ci] = _encode_block(
                             bw, zz_planes[ci][n], preds[ci])
     out.extend(bw.flush())
-    out.extend(b"\xff\xd9")
-    return bytes(out)
-
-
-def encode_jpeg_12bit(pixels, quality: int = 90) -> bytes:
-    """(h, w) GRAYSCALE uint16 samples in [0, 4095] -> 12-bit extended
-    sequential JPEG (SOF1, precision 12). The scientific/medical
-    profile: single component, level shift 2048, the 16-category DC
-    table (12-bit DC diffs reach SSSS 15). Quality 100 gives all-ones
-    quantization, so block-constant content round-trips bit-exact
-    through :func:`decode_jpeg` (which returns uint16 for 12-bit
-    streams). Reference analog: none (the reference stores imagery as
-    opaque blobs); this extends the codec tier's raster-export path
-    (functions/geotiff.py) to high-bit-depth instrument imagery."""
-    px = np.asarray(pixels)
-    if px.ndim != 2:
-        raise ValueError("12-bit encoder is grayscale-only")
-    if px.size and (int(px.max()) > 4095 or int(px.min()) < 0):
-        raise ValueError("12-bit samples must be in [0, 4095]")
-    h, w = px.shape
-    qlum = _scaled_qt(_QT_LUM, quality)
-    bx, by = -(-w // 8), -(-h // 8)
-    zz = _plane_blocks(px.astype(np.float64), qlum, bx, by, mid=2048.0)
-
-    out = bytearray(b"\xff\xd8")
-
-    def seg(marker, body):
-        out.extend(bytes([0xFF, marker]))
-        out.extend(struct.pack(">H", len(body) + 2))
-        out.extend(body)
-
-    seg(0xDB, bytes([0]) + bytes(qlum[_ZZ].astype(np.uint8)))
-    sof = struct.pack(">BHHB", 12, h, w, 1) + bytes([1, 0x11, 0])
-    seg(0xC1, sof)
-    seg(0xC4, bytes([0x00] + _ENC12_DC_BITS) + bytes(_ENC12_DC_SYMS))
-    seg(0xC4, bytes([0x10] + _ENC_AC_BITS) + bytes(_ENC_AC_SYMS))
-    seg(0xDA, bytes([1, 1, 0x00, 0, 63, 0]))
-    bw = _BitWriter()
-    pred = 0
-    for n in range(by * bx):
-        pred = _encode_block(bw, zz[n], pred, dc_codes=_DC12_CODES)
-    out.extend(bw.flush())
-    out.extend(b"\xff\xd9")
-    return bytes(out)
-
-
-# ---------------------------------------------------------------------------
-# Progressive encoder (fixtures + round-trip tests for the SOF2 path)
-# ---------------------------------------------------------------------------
-# Scan script: interleaved DC first (Al=1) -> per-component AC bands
-# 1-5 and 6-63 (Ah=0, Al=1) -> interleaved DC refinement (Ah=1) ->
-# per-component AC refinement 1-63 (Ah=1, Al=0). Covers every decoder
-# branch: spectral selection, DC+AC successive approximation, EOB
-# runs, ZRL-with-correction-bits. The walk-coverage model mirrors the
-# decoder exactly (each ZRL/(r,1) symbol carries the correction bits
-# for precisely the positions its decode walk visits), which is also
-# the T.81 G.1.2.3 consumption order.
-
-
-def _emit_eobrun(bw: "_BitWriter", state: dict) -> None:
-    if state["eobrun"] > 0:
-        eb = state["eobrun"]
-        nbits = eb.bit_length() - 1
-        bw.put(*_AC_CODES[nbits << 4])
-        if nbits:
-            bw.put(eb - (1 << nbits), nbits)
-        state["eobrun"] = 0
-        for b in state["be"]:
-            bw.put(b, 1)
-        state["be"] = []
-
-
-def _enc_ac_first_block(bw, zz, ss, se, al, state) -> None:
-    r = 0
-    for k in range(ss, se + 1):
-        v = int(zz[k])
-        mag = abs(v) >> al  # G.1.2.2 point transform: truncate toward 0
-        if mag == 0:
-            r += 1
-            continue
-        _emit_eobrun(bw, state)
-        while r > 15:
-            bw.put(*_AC_CODES[0xF0])
-            r -= 16
-        nbits = mag.bit_length()
-        bw.put(*_AC_CODES[(r << 4) | nbits])
-        enc = mag if v >= 0 else (-mag) + (1 << nbits) - 1
-        bw.put(enc, nbits)
-        r = 0
-    if r > 0:
-        state["eobrun"] += 1
-        if state["eobrun"] == 0x7FFF:
-            _emit_eobrun(bw, state)
-
-
-def _enc_ac_refine_block(bw, zz, ss, se, al, state) -> None:
-    """Refinement: newly-significant coefficients (shifted magnitude
-    == 1) emit (run,1)+sign; already-significant ones emit one
-    correction bit, attached to the symbol whose decode walk passes
-    them (or folded into the EOB run's buffered bits)."""
-    band = list(range(ss, se + 1))
-    mags = {k: abs(int(zz[k])) >> al for k in band}
-    new_sigs = [k for k in band if mags[k] == 1]
-    cursor = ss
-
-    def corrections(lo, hi):  # correction bits for history-nonzero in [lo,hi)
-        return [(abs(int(zz[k])) >> al) & 1
-                for k in range(lo, hi) if mags[k] > 1]
-
-    for n in new_sigs:
-        zeros = [k for k in range(cursor, n) if mags[k] == 0]
-        while len(zeros) > 15:
-            _emit_eobrun(bw, state)
-            bw.put(*_AC_CODES[0xF0])
-            pos16 = zeros[15]  # decode walk stops AT the 16th zero
-            for b in corrections(cursor, pos16):
-                bw.put(b, 1)
-            cursor = pos16 + 1
-            zeros = zeros[16:]
-        _emit_eobrun(bw, state)
-        bw.put(*_AC_CODES[(len(zeros) << 4) | 1])
-        bw.put(1 if int(zz[n]) >= 0 else 0, 1)
-        for b in corrections(cursor, n):
-            bw.put(b, 1)
-        cursor = n + 1
-    tail = corrections(cursor, se + 1)
-    if cursor <= se:
-        state["eobrun"] += 1
-        state["be"].extend(tail)
-        if state["eobrun"] == 0x7FFF:
-            _emit_eobrun(bw, state)
-
-
-def encode_jpeg_progressive(pixels, quality: int = 90,
-                            subsampling: str = "444") -> bytes:
-    """(h, w, 3) RGB or (h, w) grayscale uint8 -> progressive (SOF2)
-    JPEG bytes. Same quantized coefficients as :func:`encode_jpeg`,
-    re-ordered into progressive scans — so ``decode_jpeg`` of the
-    progressive stream is bit-identical to the baseline stream's
-    decode at any quality."""
-    (gray, h, w, factors, qlum, qchr, zz_planes, dims,
-     mcus_x, mcus_y) = _quantized_planes(pixels, quality, subsampling)
-    ncomp = len(zz_planes)
-    hmax = max(f[0] for f in factors)
-    vmax = max(f[1] for f in factors)
-
-    out = bytearray(b"\xff\xd8")
-
-    def seg(marker, body):
-        out.extend(bytes([0xFF, marker]))
-        out.extend(struct.pack(">H", len(body) + 2))
-        out.extend(body)
-
-    _header_segments(out, gray, h, w, factors, qlum, qchr, 0xC2)
-
-    def sos(comps, ss, se, ah, al, body_writer):
-        hdr = bytes([len(comps)])
-        for cid in comps:
-            hdr += bytes([cid, 0x00])
-        hdr += bytes([ss, se, (ah << 4) | al])
-        seg(0xDA, hdr)
-        bw = _BitWriter()
-        body_writer(bw)
-        out.extend(bw.flush())
-
-    def comp_grid(ci):
-        fh, fv = factors[ci]
-        cw = -(-(-(-w * fh // hmax)) // 8)
-        ch = -(-(-(-h * fv // vmax)) // 8)
-        return cw, ch
-
-    def dc_first(bw):  # interleaved, Al=1
-        preds = [0] * ncomp
-        for my in range(mcus_y):
-            for mx in range(mcus_x):
-                for ci in range(ncomp):
-                    fh, fv = factors[ci]
-                    bx = dims[ci][0]
-                    for vy in range(fv):
-                        for vx in range(fh):
-                            nblk = (my * fv + vy) * bx + (mx * fh + vx)
-                            d = int(zz_planes[ci][nblk][0]) >> 1
-                            diff = d - preds[ci]
-                            preds[ci] = d
-                            t = abs(diff).bit_length()
-                            bw.put(*_DC_CODES[t])
-                            if t:
-                                bw.put(diff if diff >= 0
-                                       else diff + (1 << t) - 1, t)
-
-    def dc_refine(bw):  # interleaved, Ah=1 -> one raw bit per block
-        for my in range(mcus_y):
-            for mx in range(mcus_x):
-                for ci in range(ncomp):
-                    fh, fv = factors[ci]
-                    bx = dims[ci][0]
-                    for vy in range(fv):
-                        for vx in range(fh):
-                            nblk = (my * fv + vy) * bx + (mx * fh + vx)
-                            bw.put(int(zz_planes[ci][nblk][0]) & 1, 1)
-
-    def ac_scan(ci, ss, se, ah, al):
-        def writer(bw):
-            state = {"eobrun": 0, "be": []}
-            cw, ch = comp_grid(ci)
-            bx = dims[ci][0]
-            enc = _enc_ac_refine_block if ah else _enc_ac_first_block
-            for row in range(ch):
-                for col in range(cw):
-                    enc(bw, zz_planes[ci][row * bx + col],
-                        ss, se, al, state)
-            _emit_eobrun(bw, state)
-        return writer
-
-    sos(list(range(1, ncomp + 1)), 0, 0, 0, 1, dc_first)
-    for ci in range(ncomp):
-        sos([ci + 1], 1, 5, 0, 1, ac_scan(ci, 1, 5, 0, 1))
-        sos([ci + 1], 6, 63, 0, 1, ac_scan(ci, 6, 63, 0, 1))
-    sos(list(range(1, ncomp + 1)), 0, 0, 1, 0, dc_refine)
-    for ci in range(ncomp):
-        sos([ci + 1], 1, 63, 1, 0, ac_scan(ci, 1, 63, 1, 0))
     out.extend(b"\xff\xd9")
     return bytes(out)

@@ -389,8 +389,8 @@ def hashed_linear_score(
     broadcast-join a trained model in production. ``None`` uses a
     deterministic STAND-IN derived from the bucket index (the training
     container has no model artifacts; this keeps the full hashing /
-    scoring plumbing real and oracle-able, mirroring the multimodal
-    decode-stub policy): w[b] = ((b * 2654435761) % 2001 - 1000) / 1000.
+    scoring plumbing real and oracle-able):
+    w[b] = ((b * 2654435761) % 2001 - 1000) / 1000.
 
     Pure codegen (aggregate over the token array — no explode, no
     shuffle, no UDF): score rows at 100 TB as a map-only projection.

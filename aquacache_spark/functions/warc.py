@@ -4,11 +4,11 @@ specifications).
 
 The reference (YukonWRB/AquaCache) has no web-archive surface; this is
 the engine's web tier on-ramp, built the same way as the GRIB2 / GPKG
-/ GIF codecs (functions/grib2.py, sources/vector.py, functions/gif.py):
+codecs (functions/grib2.py, sources/vector.py):
 
 - an Arrow-batched kernel parses whole-file blobs where they sit
   (sources/warc.warc_records) — octets never shuffle;
-- oracles never parse bytes (the GIF policy): fixtures are synthesized
+- oracles never parse bytes: fixtures are synthesized
   closed-form from table keys through the REAL writer, so the reader
   runs on genuine WARC bytes while DuckDB recomputes the expected
   features from the keys alone.

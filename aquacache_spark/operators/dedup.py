@@ -138,8 +138,7 @@ def lsh_candidate_pairs(
     docs would otherwise emit 10¹² pairs.
     """
     banded = band_key_rows(signatures, id_col, num_hashes, bands)
-    # r12 single-pass shape (guide §2.4, same restructure as
-    # shot_containment_pairs): the banded frame is the output of the
+    # r12 single-pass shape (guide §2.4): the banded frame is the output of the
     # expensive shingle->md5->MinHash pipeline, and the previous form
     # consumed it from 3 branches (bucket stats + both self-join
     # sides) behind a persist. ONE (band, key) aggregation now

@@ -1,16 +1,17 @@
 """Query registry package: one module per query family, the shared
 registry/fixture core in ``_common``. Importing this package registers
-all 222 queries (each module registers into ``_common.QUERIES`` /
+all 207 queries (each module registers into ``_common.QUERIES`` /
 ``_common.ORACLES`` at import time).
 
-``core``, ``hydrology`` and ``multimodal`` hold the AquaCache surface.
-``dedup``, ``ann`` and ``web`` hold text, trend and graph queries plus
-what is left of the LLM-corpus dedup, ANN-search and web-crawl tiers:
-one perfbench batch probe each (``minhash_lsh_pairs``,
-``embedding_cosine_topk``, ``warc_crawl_corpus``; listed in
-tests/test_import_boundary.py). Only these three modules may import
-the tier modules (``operators/{dedup,similarity,web}.py``,
-``functions/{html,warc}.py``, ``sources/warc.py``).
+``core`` and ``hydrology`` hold the AquaCache surface. ``dedup``,
+``ann``, ``web`` and ``multimodal`` hold text, trend, graph and
+media-store queries plus what is left of the LLM-corpus dedup,
+ANN-search, web-crawl and media-decoding tiers: one perfbench batch
+probe each (``minhash_lsh_pairs``, ``embedding_cosine_topk``,
+``warc_crawl_corpus``, ``jpeg_decode_features``; listed in
+tests/test_import_boundary.py). Only these four modules may import
+the tier modules (``operators/{dedup,similarity,web,multimodal}.py``,
+``functions/{html,warc,jpeg}.py``, ``sources/warc.py``).
 
 ``from aquacache_spark import queries as Q`` keeps working: this
 module re-exports QUERIES, ORACLES, and every name the original flat

@@ -318,44 +318,6 @@ def compound_asof_expression(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _round(out, {"value": 6, "a": 6, "b": 6})
 
 
-# 12-bit sibling: SOF1 extended-sequential streams with precision 12
-# (functions/jpeg.encode_jpeg_12bit), so the high-bit-depth decode
-# path (16-category DC Huffman, 2048 level shift, uint16 output) is
-# differentially verified in the bit-exact q100 block-constant regime.
-_JPEG12_ORACLE = f"""
-    WITH ids AS (
-      SELECT doc_id AS media_id FROM documents WHERE doc_id % 5 = 4
-    ), blocks AS (
-      SELECT media_id, b,
-             (media_id * 13 + b * 911) % 4000 + 48 AS v
-      FROM ids, (SELECT unnest(range(0, 4)) AS b)
-    )
-    SELECT media_id, TRUE AS decoded,
-           CAST(16 AS INT) AS width, CAST(16 AS INT) AS height,
-           {R('avg(v)', 6)} AS mean_r,
-           {R('avg(v)', 6)} AS mean_g,
-           {R('avg(v)', 6)} AS mean_b
-    FROM blocks GROUP BY media_id
-"""
-
-
-@register("jpeg12_decode_features", oracle=_JPEG12_ORACLE)
-def jpeg12_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.multimodal import (extract_jpeg_features,
-                                       synthesize_jpegs12)
-
-    docs = _t(spark, sf_dir, "documents")
-    ids = docs.where(F.col("doc_id") % 5 == 4).select(
-        F.col("doc_id").alias("media_id"))
-    out = extract_jpeg_features(synthesize_jpegs12(ids))
-    return _round(
-        out.select("media_id", "decoded", F.col("width").cast("int"),
-                   F.col("height").cast("int"), "mean_r", "mean_g",
-                   "mean_b"),
-        {"mean_r": 6, "mean_g": 6, "mean_b": 6},
-    )
-
-
 # ---------------------------------------------------------------------------
 # Mann-Kendall trend + Sen's slope (operators/trend.mann_kendall): the
 # standard hydrologic trend test over per-(priority, year) daily

@@ -1,6 +1,6 @@
 """Text-corpus queries over ``documents`` (text metrics, language id,
 token quantiles, collocations, Unicode folding, Bloom decontamination),
-plus cross-section, vector, image-resize and video-shot queries.
+plus cross-section and vector queries.
 
 Of the deduplication tier only ``minhash_lsh_pairs`` is left: it is
 perfbench's batch probe (named in ``perfbench/batch_analytics.py``),
@@ -487,51 +487,6 @@ def corpus_token_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
                                        "chars_p50", "chars_p99")})
 
 
-# Image resize kernel (operators/multimodal.resize_images): block-mean
-# downscale in EXACT integer arithmetic (sum // block-size per output
-# pixel), re-encoded through the real BMP writer, then features
-# re-extracted through the real decoder — the thumbnail/normalization
-# step of an image-corpus pipeline, fully differentially verified
-# because every stage is integer-exact.
-_RESIZE_ORACLE = f"""
-    WITH ids AS (
-      SELECT doc_id AS media_id FROM documents WHERE doc_id % 5 = 1
-    ), rc AS (
-      SELECT rr.t AS r, cc.t AS c
-      FROM (SELECT unnest(range(0, 16)) AS t) rr,
-           (SELECT unnest(range(0, 16)) AS t) cc
-    ), cells AS (
-      SELECT media_id, r // 4 AS cr, c // 4 AS cc,
-             sum((media_id * 7 + r * 16 + c) % 256) // 16 AS vr,
-             sum((media_id * 11 + r * 5 + c * 3) % 256) // 16 AS vg,
-             sum((media_id * 13 + r * 2 + c * 7) % 256) // 16 AS vb
-      FROM ids, rc GROUP BY 1, 2, 3
-    )
-    SELECT media_id, TRUE AS decoded,
-           CAST(4 AS INT) AS width, CAST(4 AS INT) AS height,
-           {R('sum(vr) / 16.0', 6)} AS mean_r,
-           {R('sum(vg) / 16.0', 6)} AS mean_g,
-           {R('sum(vb) / 16.0', 6)} AS mean_b
-    FROM cells GROUP BY media_id
-"""
-
-
-@register("image_resize_features", oracle=_RESIZE_ORACLE)
-def image_resize_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """16x16 BMPs block-mean-resized to 4x4 (integer-exact), features
-    re-extracted through the real decoder."""
-    from ..operators.multimodal import (extract_bmp_features, resize_images,
-                                       synthesize_bmps)
-
-    docs = _t(spark, sf_dir, "documents")
-    ids = docs.where(F.col("doc_id") % 5 == 1).select(
-        F.col("doc_id").alias("media_id"))
-    small = resize_images(synthesize_bmps(ids, width=16, height=16),
-                          out_h=4, out_w=4)
-    out = extract_bmp_features(small)
-    return _round(out, {"mean_r": 6, "mean_g": 6, "mean_b": 6})
-
-
 # Stream cross-section hydraulics (inst/patches/patch_54.R views 1-4,
 # operators/cross_section.py): points -> panel calculated hydraulics
 # -> manual/calculated preference -> section rollup (wetted width, net
@@ -950,283 +905,6 @@ def unicode_fold_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", folded.alias("folded"),
         fingerprint(folded).alias("fingerprint"),
     )
-
-
-# ---------------------------------------------------------------------------
-# Shot-level video containment: per-shot brightness-offset-invariant
-# delta signatures -> fraction of clip A's shots appearing in clip B
-# (containment catches re-graded partial copies that clip-level
-# fingerprints dilute away).
-# ---------------------------------------------------------------------------
-
-_SHOT_CONTAIN_ORACLE = """
-    WITH ids AS (
-      SELECT doc_id AS media_id, doc_id % 8 AS g,
-             (doc_id % 3) * 4 AS off
-      FROM documents WHERE doc_id % 24 = 2
-    ), fr AS (
-      SELECT unnest(range(0, 16)) AS f
-    ), bl AS (
-      SELECT unnest(range(0, 4)) AS b
-    ), luma AS (
-      SELECT media_id, f,
-             sum(CAST(64 AS BIGINT)
-                 * ((g * 7 + f * 11 + b * 37) % 200 + 28 + off)) AS s
-      FROM ids, fr, bl GROUP BY 1, 2
-    ), marked AS (
-      SELECT media_id, f, s,
-             s - lag(s) OVER w AS d,
-             CASE WHEN f = 0 THEN 0
-                  WHEN abs(s - lag(s) OVER w) > 16 * 256 THEN 1
-                  ELSE 0 END AS cut_before
-      FROM luma WINDOW w AS (PARTITION BY media_id ORDER BY f)
-    ), shots AS (
-      SELECT media_id, f, d, cut_before,
-             sum(cut_before) OVER (PARTITION BY media_id ORDER BY f)
-               AS shot_id
-      FROM marked
-    ), sigs AS (
-      -- within-shot deltas exclude each shot's first frame (f=0 or a
-      -- cut frame)
-      SELECT media_id, shot_id,
-             md5(coalesce(string_agg(CAST(d AS VARCHAR), ',' ORDER BY f)
-                 FILTER (WHERE f > 0 AND cut_before = 0), '')) AS sig
-      FROM shots GROUP BY 1, 2
-    ), nshots AS (
-      SELECT media_id, count(*) AS total_shots FROM sigs GROUP BY 1
-    ), matched AS (
-      SELECT a.media_id AS media_a, b.media_id AS media_b,
-             count(DISTINCT a.shot_id) AS matched_shots
-      FROM sigs a JOIN sigs b
-        ON a.sig = b.sig AND a.media_id <> b.media_id
-      GROUP BY 1, 2
-    )
-    SELECT m.media_a, m.media_b,
-           CAST(m.matched_shots AS BIGINT) AS matched_shots,
-           CAST(n.total_shots AS BIGINT) AS total_shots,
-           CAST(floor(CAST(m.matched_shots AS DOUBLE) / n.total_shots
-                      * 1000000.0 + CAST(0.5 AS DOUBLE)) AS BIGINT)
-             / 1000000.0 AS containment
-    FROM matched m JOIN nshots n ON n.media_id = m.media_a
-"""
-
-
-@register("video_shot_containment", oracle=_SHOT_CONTAIN_ORACLE)
-def video_shot_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Directed shot-overlap between clips via offset-invariant shot
-    delta signatures (uncapped all-pairs regime — the group fixture
-    has no boilerplate signature; the web-scale df-capped path is
-    video_shot_containment_capped)."""
-    from ..operators.multimodal import (extract_video_shot_signatures,
-                                       shot_containment_pairs,
-                                       synthesize_group_avis)
-
-    docs = _t(spark, sf_dir, "documents")
-    ids = docs.where(F.col("doc_id") % 24 == 2).select(
-        F.col("doc_id").alias("media_id"))
-    sigs = extract_video_shot_signatures(
-        synthesize_group_avis(ids), tau=16)
-    return shot_containment_pairs(sigs, max_sig_clips=None)
-
-
-# Capped variant: the intro fixture gives EVERY clip a shared
-# boilerplate intro shot (the m² hot-signature class); the df cap
-# drops it from the join while group shots (runs of 4 twins) still
-# match, and total_shots keeps counting the intro. Closed-form luma
-# trace: frames 0-7 block value 40 + f*9 + b*20 + off; frames 8-15
-# value 170 + prefix-sum of (3 + 2*bit_{j-1}(g)) + b*2 + off with
-# g = ((doc_id-2)/24)//4 — no modular wraps, one cut at f=8.
-_SHOT_CONTAIN_CAPPED_ORACLE = """
-    WITH ids AS (
-      SELECT doc_id AS media_id,
-             ((doc_id - 2) // 24) // 4 AS g
-      FROM documents
-      WHERE doc_id % 24 = 2 AND (doc_id - 2) // 24 < 60
-    ), fr AS (
-      SELECT unnest(range(0, 16)) AS f
-    ), pre AS (
-      SELECT media_id, g, f,
-             CASE WHEN f < 8 THEN 0 ELSE (
-               SELECT coalesce(sum(3 + 2 * ((g // power(2, j - 1)::BIGINT)
-                                            % 2)), 0)
-               FROM unnest(generate_series(1, f - 8)) AS t(j))
-             END AS p
-      FROM ids, fr
-    ), luma AS (
-      -- per-frame luma sum over the four 8x8 blocks; the (i%3)*4
-      -- regrade offset cancels in deltas, so it is omitted here and
-      -- the absolute sums below are offset-free ONLY in the deltas
-      -- the sigs consume
-      SELECT media_id, f,
-             CASE WHEN f < 8
-                  THEN 64 * (4 * (40 + f * 9 + (media_id % 3) * 4)
-                             + 20 * 6)
-                  ELSE 64 * (4 * (170 + p + (media_id % 3) * 4) + 2 * 6)
-             END AS s
-      FROM pre
-    ), marked AS (
-      SELECT media_id, f, s,
-             s - lag(s) OVER w AS d,
-             CASE WHEN f = 0 THEN 0
-                  WHEN abs(s - lag(s) OVER w) > 16 * 256 THEN 1
-                  ELSE 0 END AS cut_before
-      FROM luma WINDOW w AS (PARTITION BY media_id ORDER BY f)
-    ), shots AS (
-      SELECT media_id, f, d, cut_before,
-             sum(cut_before) OVER (PARTITION BY media_id ORDER BY f)
-               AS shot_id
-      FROM marked
-    ), sigs AS (
-      SELECT media_id, shot_id,
-             md5(coalesce(string_agg(CAST(d AS VARCHAR), ',' ORDER BY f)
-                 FILTER (WHERE f > 0 AND cut_before = 0), '')) AS sig
-      FROM shots GROUP BY 1, 2
-    ), nshots AS (
-      SELECT media_id, count(*) AS total_shots FROM sigs GROUP BY 1
-    ), hot AS (
-      SELECT sig FROM (SELECT sig, media_id FROM sigs GROUP BY 1, 2)
-      GROUP BY sig HAVING count(*) > 10
-    ), joinable AS (
-      SELECT * FROM sigs WHERE sig NOT IN (SELECT sig FROM hot)
-    ), matched AS (
-      SELECT a.media_id AS media_a, b.media_id AS media_b,
-             count(DISTINCT a.shot_id) AS matched_shots
-      FROM joinable a JOIN joinable b
-        ON a.sig = b.sig AND a.media_id <> b.media_id
-      GROUP BY 1, 2
-    )
-    SELECT m.media_a, m.media_b,
-           CAST(m.matched_shots AS BIGINT) AS matched_shots,
-           CAST(n.total_shots AS BIGINT) AS total_shots,
-           CAST(floor(CAST(m.matched_shots AS DOUBLE) / n.total_shots
-                      * 1000000.0 + CAST(0.5 AS DOUBLE)) AS BIGINT)
-             / 1000000.0 AS containment
-    FROM matched m JOIN nshots n ON n.media_id = m.media_a
-"""
-
-
-# Sign-of-delta (quantized) signature regime on the jittered fixture:
-# twins of opposite t-parity differ in every delta magnitude (the
-# lossy re-encode stand-in) but never in delta sign, so sign sigs
-# match all four group twins while exact sigs would split them 2/2.
-# The boilerplate intro ('+++++++' for every clip) is the hot sig the
-# cap drops.
-_SHOT_CONTAIN_SIGN_ORACLE = """
-    WITH ids AS (
-      SELECT doc_id AS media_id,
-             (doc_id - 2) // 24 AS t,
-             ((doc_id - 2) // 24) // 4 AS g
-      FROM documents
-      WHERE doc_id % 24 = 2 AND (doc_id - 2) // 24 < 60
-    ), fr AS (
-      SELECT unnest(range(0, 16)) AS f
-    ), pre AS (
-      SELECT media_id, t, g, f,
-             CASE WHEN f < 8 THEN 0 ELSE (
-               SELECT coalesce(sum(CASE WHEN
-                   (g // power(2, j - 1)::BIGINT) % 2 = 1
-                   THEN 4 ELSE -4 END), 0)
-               FROM unnest(generate_series(1, f - 8)) AS q(j))
-             END AS p
-      FROM ids, fr
-    ), luma AS (
-      SELECT media_id, f,
-             CASE WHEN f < 8
-                  THEN 64 * (4 * (40 + f * 9 + (media_id % 3) * 4)
-                             + 20 * 6)
-                  ELSE 64 * (4 * (190 + p + (media_id % 3) * 4
-                                  + (t + f) % 2) + 2 * 6)
-             END AS s
-      FROM pre
-    ), marked AS (
-      SELECT media_id, f, s,
-             s - lag(s) OVER w AS d,
-             CASE WHEN f = 0 THEN 0
-                  WHEN abs(s - lag(s) OVER w) > 16 * 256 THEN 1
-                  ELSE 0 END AS cut_before
-      FROM luma WINDOW w AS (PARTITION BY media_id ORDER BY f)
-    ), shots AS (
-      SELECT media_id, f, d, cut_before,
-             sum(cut_before) OVER (PARTITION BY media_id ORDER BY f)
-               AS shot_id
-      FROM marked
-    ), sigs AS (
-      SELECT media_id, shot_id,
-             md5(coalesce(string_agg(
-                 CASE WHEN d > 0 THEN '+' WHEN d < 0 THEN '-'
-                      ELSE '0' END, '' ORDER BY f)
-                 FILTER (WHERE f > 0 AND cut_before = 0), '')) AS sig
-      FROM shots GROUP BY 1, 2
-    ), nshots AS (
-      SELECT media_id, count(*) AS total_shots FROM sigs GROUP BY 1
-    ), hot AS (
-      SELECT sig FROM (SELECT sig, media_id FROM sigs GROUP BY 1, 2)
-      GROUP BY sig HAVING count(*) > 10
-    ), joinable AS (
-      SELECT * FROM sigs WHERE sig NOT IN (SELECT sig FROM hot)
-    ), matched AS (
-      SELECT a.media_id AS media_a, b.media_id AS media_b,
-             count(DISTINCT a.shot_id) AS matched_shots
-      FROM joinable a JOIN joinable b
-        ON a.sig = b.sig AND a.media_id <> b.media_id
-      GROUP BY 1, 2
-    )
-    SELECT m.media_a, m.media_b,
-           CAST(m.matched_shots AS BIGINT) AS matched_shots,
-           CAST(n.total_shots AS BIGINT) AS total_shots,
-           CAST(floor(CAST(m.matched_shots AS DOUBLE) / n.total_shots
-                      * 1000000.0 + CAST(0.5 AS DOUBLE)) AS BIGINT)
-             / 1000000.0 AS containment
-    FROM matched m JOIN nshots n ON n.media_id = m.media_a
-"""
-
-
-@register("video_shot_containment_sign",
-          oracle=_SHOT_CONTAIN_SIGN_ORACLE)
-def video_shot_containment_sign(spark: SparkSession,
-                                sf_dir: str) -> DataFrame:
-    """Shot containment under the SIGN-quantized signature regime: the
-    jittered fixture's re-encode twins differ in delta magnitudes but
-    match on delta signs, so the sign tier recovers all four group
-    twins where the exact tier splits them by dither parity; the
-    boilerplate intro still drops under the df cap."""
-    from ..operators.multimodal import (extract_video_shot_signatures,
-                                       shot_containment_pairs,
-                                       synthesize_intro_avis)
-
-    docs = _t(spark, sf_dir, "documents")
-    ids = docs.where(
-        (F.col("doc_id") % 24 == 2)
-        & F.expr("(doc_id - 2) div 24 < 60")
-    ).select(F.col("doc_id").alias("media_id"))
-    sigs = extract_video_shot_signatures(
-        synthesize_intro_avis(ids, jitter=True), tau=16, mode="sign")
-    return shot_containment_pairs(sigs, max_sig_clips=10)
-
-
-@register("video_shot_containment_capped",
-          oracle=_SHOT_CONTAIN_CAPPED_ORACLE)
-def video_shot_containment_capped(spark: SparkSession,
-                                  sf_dir: str) -> DataFrame:
-    """Shot containment under the hot-signature df cap: every clip
-    shares a boilerplate intro shot (> cap clips -> dropped before the
-    equi-join), group shots still match, and total_shots keeps the
-    full count so containment never inflates."""
-    from ..operators.multimodal import (extract_video_shot_signatures,
-                                       shot_containment_pairs,
-                                       synthesize_intro_avis)
-
-    docs = _t(spark, sf_dir, "documents")
-    # first 60 clips only: the cap/containment SEMANTICS are what this
-    # variant verifies; codec throughput at full fixture scale is
-    # already priced by video_shot_containment
-    ids = docs.where(
-        (F.col("doc_id") % 24 == 2)
-        & F.expr("(doc_id - 2) div 24 < 60")
-    ).select(F.col("doc_id").alias("media_id"))
-    sigs = extract_video_shot_signatures(
-        synthesize_intro_avis(ids), tau=16)
-    return shot_containment_pairs(sigs, max_sig_clips=10)
 
 
 # ---------------------------------------------------------------------------

@@ -1,4 +1,10 @@
-"""Multimodal tier: image/audio/video codecs (JPEG/GIF/BMP/PNG/WAV/AVI) and the feature/near-dup operators over them.
+"""Stateful sequential operators, the as-of daily recomputation, media
+stores, add-new actions, audit field diffs and the PostGIS raster export.
+
+Of the media-decoding tier only ``jpeg_decode_features`` is left: it
+is perfbench's batch probe (named in ``perfbench/batch_analytics.py``),
+and it is the one query here that reaches ``operators/multimodal.py``
+and ``functions/jpeg.py``. tests/test_import_boundary.py pins that.
 
 Split out of the original flat queries.py (r9); section order preserved.
 """
@@ -333,30 +339,6 @@ def calculate_period_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         out.select("user_id", "ts", "event_id", "period_hours", "period"),
         {"period_hours": 6},
     )
-
-
-_MULTIMODAL_ORACLE = """
-    SELECT doc_id AS media_id,
-           CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
-           sha256(text) AS sha256
-    FROM documents
-"""
-
-
-@register("multimodal_features", oracle=_MULTIMODAL_ORACLE)
-def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Binary-column feature extraction plumbing (decode stubbed — see
-    operators/multimodal.py): treats document text bytes as media blobs.
-    The byte-count and content digest are oracle-checked; the decoded
-    feature vector itself is the stubbed step."""
-    from ..operators.multimodal import extract_media_features
-
-    docs = _t(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("media_id"),
-        F.encode("text", "utf-8").alias("content"),
-    )
-    out = extract_media_features(docs)
-    return out.select("media_id", "n_bytes", "sha256")
 
 
 # ---------------------------------------------------------------------------
@@ -1095,36 +1077,6 @@ def audit_changed_fields(spark: SparkSession, sf_dir: str) -> DataFrame:
     return imgs.select("row_id", bind(om, diff).alias("changed_fields"))
 
 
-# ---------------------------------------------------------------------------
-# REAL image decode end to end: deterministic BMPs are written with the
-# actual 24-bit encoder, then the actual parser extracts dimensions and
-# per-channel means inside an Arrow mapInPandas stage; the oracle
-# averages the same pixel closed form without parsing. (The generic
-# decoder hook stays stubbed for codec-library formats.)
-# ---------------------------------------------------------------------------
-
-_BMP_ORACLE = f"""
-    WITH ids AS (
-      SELECT doc_id AS media_id FROM documents WHERE doc_id % 3 = 1
-    ), grid AS (
-      SELECT r, c
-      FROM (SELECT unnest(range(0, 8)) AS r), (SELECT unnest(range(0, 8)) AS c)
-    ), px AS (
-      SELECT media_id,
-             (media_id * 7 + r * 16 + c) % 256 AS pr,
-             (media_id * 11 + r * 5 + c * 3) % 256 AS pg,
-             (media_id * 13 + r * 2 + c * 7) % 256 AS pb
-      FROM ids CROSS JOIN grid
-    )
-    SELECT media_id, TRUE AS decoded,
-           CAST(8 AS INT) AS width, CAST(8 AS INT) AS height,
-           {R('avg(pr)', 6)} AS mean_r,
-           {R('avg(pg)', 6)} AS mean_g,
-           {R('avg(pb)', 6)} AS mean_b
-    FROM px GROUP BY media_id
-"""
-
-
 # writeRaster's BINARY path (R/writeRaster.R:330-361): tiles -> real
 # PostGIS raster WKB (raster2pgsql wire format, functions/pgraster.py)
 # -> decode back -> per-tile stats. The oracle recomputes the stats
@@ -1187,49 +1139,6 @@ def pgraster_wkb_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _round(out, {"ip_x": 6, "ip_y": 6, "vmean": 6})
 
 
-@register("bmp_decode_features", oracle=_BMP_ORACLE)
-def bmp_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.multimodal import extract_bmp_features, synthesize_bmps
-
-    docs = _t(spark, sf_dir, "documents")
-    ids = docs.where(F.col("doc_id") % 3 == 1).select(
-        F.col("doc_id").alias("media_id"))
-    bmps = synthesize_bmps(ids, width=8, height=8)
-    out = extract_bmp_features(bmps)
-    return _round(
-        out.select("media_id", "decoded", F.col("width").cast("int"),
-                   F.col("height").cast("int"), "mean_r", "mean_g", "mean_b"),
-        {"mean_r": 6, "mean_g": 6, "mean_b": 6},
-    )
-
-
-# PNG sibling: same closed-form pixels, different id slice; the bytes
-# under decode are genuine deflate streams with cycling row filters
-# (every unfilter path: None/Sub/Up/Average/Paeth), so inflation,
-# CRC checking, and filter reconstruction are all differentially
-# verified (operators/multimodal.py:decode_png).
-_PNG_ORACLE = f"""
-    WITH ids AS (
-      SELECT doc_id AS media_id FROM documents WHERE doc_id % 3 = 2
-    ), grid AS (
-      SELECT r, c
-      FROM (SELECT unnest(range(0, 8)) AS r), (SELECT unnest(range(0, 8)) AS c)
-    ), px AS (
-      SELECT media_id,
-             (media_id * 7 + r * 16 + c) % 256 AS pr,
-             (media_id * 11 + r * 5 + c * 3) % 256 AS pg,
-             (media_id * 13 + r * 2 + c * 7) % 256 AS pb
-      FROM ids CROSS JOIN grid
-    )
-    SELECT media_id, TRUE AS decoded,
-           CAST(8 AS INT) AS width, CAST(8 AS INT) AS height,
-           {R('avg(pr)', 6)} AS mean_r,
-           {R('avg(pg)', 6)} AS mean_g,
-           {R('avg(pb)', 6)} AS mean_b
-    FROM px GROUP BY media_id
-"""
-
-
 # JPEG tier: real baseline decode (Huffman entropy decode, dequant,
 # batch IDCT, color convert — functions/jpeg.py) under the features.
 # Fixtures are quality-100 block-constant grayscale, the regime where
@@ -1270,411 +1179,3 @@ def jpeg_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
                    "mean_b"),
         {"mean_r": 6, "mean_g": 6, "mean_b": 6},
     )
-
-
-# Progressive sibling: the fixtures are multi-scan SOF2 streams
-# (spectral selection bands 1-5/6-63, DC+AC successive approximation,
-# EOB runs — functions/jpeg.py:encode_jpeg_progressive), so the full
-# progressive decode path (_ac_first_block/_ac_refine_block, DC
-# refinement) is differentially verified, not just unit-tested.
-_JPEG_PROG_ORACLE = f"""
-    WITH ids AS (
-      SELECT doc_id AS media_id FROM documents WHERE doc_id % 4 = 1
-    ), blocks AS (
-      SELECT media_id, b,
-             (media_id * 9 + b * 31) % 200 + 30 AS v
-      FROM ids, (SELECT unnest(range(0, 4)) AS b)
-    )
-    SELECT media_id, TRUE AS decoded,
-           CAST(16 AS INT) AS width, CAST(16 AS INT) AS height,
-           {R('avg(v)', 6)} AS mean_r,
-           {R('avg(v)', 6)} AS mean_g,
-           {R('avg(v)', 6)} AS mean_b
-    FROM blocks GROUP BY media_id
-"""
-
-
-@register("jpeg_progressive_features", oracle=_JPEG_PROG_ORACLE)
-def jpeg_progressive_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.multimodal import (extract_jpeg_features,
-                                       synthesize_progressive_jpegs)
-
-    docs = _t(spark, sf_dir, "documents")
-    ids = docs.where(F.col("doc_id") % 4 == 1).select(
-        F.col("doc_id").alias("media_id"))
-    jpegs = synthesize_progressive_jpegs(ids)
-    out = extract_jpeg_features(jpegs)
-    return _round(
-        out.select("media_id", "decoded", F.col("width").cast("int"),
-                   F.col("height").cast("int"), "mean_r", "mean_g",
-                   "mean_b"),
-        {"mean_r": 6, "mean_g": 6, "mean_b": 6},
-    )
-
-
-# VIDEO tier: MJPEG-in-AVI container walk + frame sampling + per-frame
-# baseline JPEG decode (functions/avi.py + functions/jpeg.py). Every
-# sampled frame runs the full entropy-decode/IDCT pipeline in the
-# bit-exact q100 regime; unsampled payloads are never decoded.
-_VIDEO_ORACLE = f"""
-    WITH ids AS (
-      SELECT doc_id AS media_id FROM documents WHERE doc_id % 5 = 3
-    ), cells AS (
-      SELECT media_id, f, b,
-             (media_id * 7 + f * 11 + b * 37) % 200 + 28 AS v
-      FROM ids,
-           (SELECT unnest([0, 2, 4]) AS f),
-           (SELECT unnest(range(0, 4)) AS b)
-    )
-    SELECT media_id, TRUE AS decoded,
-           CAST(16 AS INT) AS width, CAST(16 AS INT) AS height,
-           CAST(10 AS INT) AS fps,
-           CAST(6 AS BIGINT) AS n_frames,
-           CAST(3 AS BIGINT) AS n_sampled,
-           {R('avg(v)', 6)} AS mean_luma
-    FROM cells GROUP BY media_id
-"""
-
-
-@register("video_frame_features", oracle=_VIDEO_ORACLE)
-def video_frame_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.multimodal import (extract_video_features,
-                                       synthesize_avis)
-
-    docs = _t(spark, sf_dir, "documents")
-    ids = docs.where(F.col("doc_id") % 5 == 3).select(
-        F.col("doc_id").alias("media_id"))
-    avis = synthesize_avis(ids, n_frames=6, fps=10)
-    out = extract_video_features(avis, sample_every=2)
-    return _round(
-        out.select("media_id", "decoded", "width", "height", "fps",
-                   "n_frames", "n_sampled", "mean_luma"),
-        {"mean_luma": 6},
-    )
-
-
-# WAV sibling for the AUDIO tier: real RIFF/PCM decode under the
-# features; integer closed-form samples make every aggregate exact on
-# both sides (sum and sum-of-squares stay in int64 range).
-_WAV_ORACLE = f"""
-    WITH ids AS (
-      SELECT doc_id AS media_id FROM documents WHERE doc_id % 4 = 1
-    ), grid AS (
-      SELECT unnest(range(0, 256)) AS k
-    ), s AS (
-      SELECT media_id, k,
-             ((media_id * 37 + k * 101) % 4001) - 2000 AS samp
-      FROM ids CROSS JOIN grid
-    ), lagged AS (
-      SELECT media_id, k, samp,
-             lag(samp) OVER (PARTITION BY media_id ORDER BY k) AS prev
-      FROM s
-    ), zc AS (
-      SELECT media_id,
-             sum(CASE WHEN prev IS NOT NULL
-                       AND ((samp >= 0) <> (prev >= 0))
-                 THEN 1 ELSE 0 END) AS zero_crossings
-      FROM lagged GROUP BY 1
-    ), agg AS (
-      SELECT media_id,
-             sum(samp) AS ssum, sum(samp * samp) AS ssq,
-             max(abs(samp)) AS peak
-      FROM s GROUP BY 1
-    )
-    SELECT a.media_id, TRUE AS decoded,
-           CAST(8000 AS INT) AS sample_rate,
-           CAST(256 AS BIGINT) AS n_frames,
-           {R('256.0 / 8000', 6)} AS duration_s,
-           {R('a.ssum / 256.0', 6)} AS mean_amp,
-           {R('sqrt(a.ssq / 256.0)', 6)} AS rms,
-           CAST(a.peak AS INT) AS peak,
-           CAST(z.zero_crossings AS BIGINT) AS zero_crossings
-    FROM agg a JOIN zc z USING (media_id)
-"""
-
-
-@register("wav_decode_features", oracle=_WAV_ORACLE)
-def wav_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.multimodal import extract_wav_features, synthesize_wavs
-
-    docs = _t(spark, sf_dir, "documents")
-    ids = docs.where(F.col("doc_id") % 4 == 1).select(
-        F.col("doc_id").alias("media_id"))
-    wavs = synthesize_wavs(ids, n_samples=256, sample_rate=8000)
-    out = extract_wav_features(wavs)
-    return _round(
-        out.select("media_id", "decoded", "sample_rate", "n_frames",
-                   "duration_s", "mean_amp", "rms", "peak",
-                   "zero_crossings"),
-        {"duration_s": 6, "mean_amp": 6, "rms": 6},
-    )
-
-
-@register("png_decode_features", oracle=_PNG_ORACLE)
-def png_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.multimodal import extract_png_features, synthesize_pngs
-
-    docs = _t(spark, sf_dir, "documents")
-    ids = docs.where(F.col("doc_id") % 3 == 2).select(
-        F.col("doc_id").alias("media_id"))
-    pngs = synthesize_pngs(ids, width=8, height=8)
-    out = extract_png_features(pngs)
-    return _round(
-        out.select("media_id", "decoded", F.col("width").cast("int"),
-                   F.col("height").cast("int"), "mean_r", "mean_g", "mean_b"),
-        {"mean_r": 6, "mean_g": 6, "mean_b": 6},
-    )
-
-
-# ---------------------------------------------------------------------------
-# Audio spectral features (operators/multimodal.audio_spectral_
-# features): whole-clip bin energies via the shared fixed-point
-# integer DFT basis -> spectral centroid + 85% rolloff bin + total
-# energy, all exact-integer until the final division.
-# ---------------------------------------------------------------------------
-
-def _audio_specfeat_oracle() -> str:
-    from ..operators.multimodal import _spec_basis
-
-    bc, bs = _spec_basis()
-    lc = ",".join(str(v) for row in bc for v in row)
-    ls = ",".join(str(v) for row in bs for v in row)
-    return f"""
-    WITH ids AS (
-      SELECT doc_id AS media_id, doc_id % 8 AS g, 1 + doc_id % 3 AS fac
-      FROM documents WHERE doc_id % 4 = 0
-    ), t AS (
-      SELECT unnest(range(0, 4096)) AS k
-    ), s AS (
-      SELECT media_id, k // 256 AS f, (k % 256) // 4 AS j,
-             fac * (((g * 37 + k * 101) % 4001) - 2000) AS v
-      FROM ids, t
-    ), ch AS (
-      SELECT media_id, f, j, sum(v) AS cs FROM s GROUP BY 1, 2, 3
-    ), bas AS (
-      SELECT [{lc}] AS bc, [{ls}] AS bs
-    ), bins AS (
-      SELECT unnest(range(1, 17)) AS n
-    ), sp AS (
-      SELECT media_id, f, n,
-             sum(cs * bc[(n - 1) * 64 + j + 1]) AS cr,
-             sum(cs * bs[(n - 1) * 64 + j + 1]) AS ci
-      FROM ch, bins, bas
-      GROUP BY media_id, f, n
-    ), eb AS (
-      SELECT media_id, n, sum(cr * cr + ci * ci) AS e
-      FROM sp GROUP BY 1, 2
-    ), tot AS (
-      SELECT media_id, sum(e) AS total FROM eb GROUP BY 1
-    ), cum AS (
-      SELECT media_id, n,
-             sum(e) OVER (PARTITION BY media_id ORDER BY n) AS c
-      FROM eb
-    ), rol AS (
-      SELECT cum.media_id, CAST(min(n) AS BIGINT) AS rolloff_bin
-      FROM cum JOIN tot ON tot.media_id = cum.media_id
-      WHERE 20 * c >= 17 * total GROUP BY 1
-    )
-    SELECT eb.media_id,
-           {R('sum(eb.n * eb.e) / CAST(t.total AS DOUBLE)', 6)}
-             AS spectral_centroid,
-           r.rolloff_bin,
-           CAST(t.total AS BIGINT) AS total_energy
-    FROM eb
-    JOIN tot t ON t.media_id = eb.media_id
-    JOIN rol r ON r.media_id = eb.media_id
-    GROUP BY eb.media_id, t.total, r.rolloff_bin
-"""
-
-
-_AUDIO_SPECFEAT_ORACLE = _audio_specfeat_oracle()
-
-
-@register("audio_spectral_features", oracle=_AUDIO_SPECFEAT_ORACLE)
-def audio_spectral_features_q(spark: SparkSession,
-                              sf_dir: str) -> DataFrame:
-    """Spectral centroid / rolloff / energy over decoded WAV clips."""
-    from ..operators.multimodal import (extract_audio_spectral_features,
-                                       synthesize_tone_wavs)
-
-    docs = _t(spark, sf_dir, "documents")
-    ids = docs.where(F.col("doc_id") % 4 == 0).select(
-        F.col("doc_id").alias("media_id"))
-    out = extract_audio_spectral_features(synthesize_tone_wavs(ids))
-    return _round(out, {"spectral_centroid": 6})
-
-
-# ---------------------------------------------------------------------------
-# Image sharpness (operators/multimodal.image_sharpness): 4-neighbor
-# integer Laplacian variance over interior pixels — the blur signal.
-# Exact-integer sums; the oracle replays pixels -> Laplacian -> sums.
-# ---------------------------------------------------------------------------
-
-_SHARPNESS_ORACLE = f"""
-    WITH ids AS (
-      SELECT doc_id AS media_id, doc_id % 16 AS p
-      FROM documents WHERE doc_id % 4 = 2
-    ), grid AS (
-      SELECT unnest(range(0, 32)) AS t
-    ), px AS (
-      SELECT i.media_id, yy.t AS y, xx.t AS x,
-             least(CAST(255 AS DOUBLE), greatest(CAST(0 AS DOUBLE),
-               floor(128.0
-                 + (40 + i.media_id % 3)
-                   * cos((2*xx.t+1) * (i.p % 7 + 1) * pi() / 64.0)
-                   * cos((2*yy.t+1) * (i.p % 5 + 1) * pi() / 64.0)
-                 + 25 * cos((2*xx.t+1) * (i.p % 6 + 1) * pi() / 64.0)
-                      * cos((2*yy.t+1) * (i.p % 4 + 2) * pi() / 64.0)
-                 + 15 * cos((2*xx.t+1) * (i.p % 5 + 2) * pi() / 64.0)
-                      * cos((2*yy.t+1) * (i.p % 3 + 3) * pi() / 64.0)
-                 + 0.5))) AS v
-      FROM ids i, grid xx, grid yy
-    ), lap AS (
-      SELECT c.media_id,
-             4*c.v - u.v - d.v - l.v - r.v AS lv
-      FROM px c
-      JOIN px u ON u.media_id = c.media_id AND u.y = c.y - 1
-               AND u.x = c.x
-      JOIN px d ON d.media_id = c.media_id AND d.y = c.y + 1
-               AND d.x = c.x
-      JOIN px l ON l.media_id = c.media_id AND l.y = c.y
-               AND l.x = c.x - 1
-      JOIN px r ON r.media_id = c.media_id AND r.y = c.y
-               AND r.x = c.x + 1
-      WHERE c.y BETWEEN 1 AND 30 AND c.x BETWEEN 1 AND 30
-    ), agg AS (
-      SELECT media_id, count(*) AS n, sum(lv) AS s, sum(lv*lv) AS q
-      FROM lap GROUP BY 1
-    )
-    SELECT media_id,
-           CAST(n AS BIGINT) AS n_interior,
-           CAST(s AS BIGINT) AS lap_sum,
-           {R('(q * n - s * s) / (CAST(n AS DOUBLE) * n)', 6)} AS lap_var
-    FROM agg
-"""
-
-
-@register("image_sharpness_metrics", oracle=_SHARPNESS_ORACLE)
-def image_sharpness_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Laplacian-variance sharpness over decoded pattern BMPs."""
-    from ..operators.multimodal import (extract_image_sharpness,
-                                       synthesize_pattern_bmps)
-
-    docs = _t(spark, sf_dir, "documents")
-    ids = docs.where(F.col("doc_id") % 4 == 2).select(
-        F.col("doc_id").alias("media_id"))
-    out = extract_image_sharpness(synthesize_pattern_bmps(ids))
-    return _round(out, {"lap_var": 6})
-
-
-# ---------------------------------------------------------------------------
-# Video scene-cut detection (operators/multimodal.scene_cuts): exact
-# integer luma-sum deltas between adjacent decoded frames; a cut when
-# the per-pixel mean jumps > tau grey levels. Shot islands via the
-# cumulative-cut window. tau=16: the fixture's steady +11/frame drift
-# stays within a shot; mod-200 block wraps exceed it.
-# ---------------------------------------------------------------------------
-
-_SCENE_CUT_ORACLE = """
-    WITH ids AS (
-      SELECT doc_id AS media_id, doc_id % 8 AS g,
-             (doc_id % 3) * 4 AS off
-      FROM documents WHERE doc_id % 9 = 1
-    ), fr AS (
-      SELECT unnest(range(0, 16)) AS f
-    ), bl AS (
-      SELECT unnest(range(0, 4)) AS b
-    ), luma AS (
-      SELECT media_id, f,
-             sum(CAST(64 AS BIGINT)
-                 * ((g * 7 + f * 11 + b * 37) % 200 + 28 + off)) AS s
-      FROM ids, fr, bl GROUP BY 1, 2
-    ), marked AS (
-      SELECT media_id, f,
-             CASE WHEN f = 0 THEN 0
-                  WHEN abs(s - lag(s) OVER w) > 16 * 256 THEN 1
-                  ELSE 0 END AS cut_before
-      FROM luma WINDOW w AS (PARTITION BY media_id ORDER BY f)
-    ), shots AS (
-      SELECT media_id, f,
-             sum(cut_before) OVER (PARTITION BY media_id ORDER BY f)
-               AS shot_id
-      FROM marked
-    ), per_shot AS (
-      SELECT media_id, shot_id, count(*) AS len FROM shots GROUP BY 1, 2
-    )
-    SELECT m.media_id,
-           CAST(16 AS BIGINT) AS n_frames,
-           CAST(sum(m.cut_before) AS BIGINT) AS n_cuts,
-           CAST(sum(m.cut_before) + 1 AS BIGINT) AS shot_count,
-           CAST(p.longest AS BIGINT) AS longest_shot
-    FROM marked m
-    JOIN (SELECT media_id, max(len) AS longest FROM per_shot GROUP BY 1) p
-      ON p.media_id = m.media_id
-    GROUP BY m.media_id, p.longest
-"""
-
-
-@register("video_scene_cuts", oracle=_SCENE_CUT_ORACLE)
-def video_scene_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scene-cut / shot statistics over decoded MJPEG-AVI clips."""
-    from ..operators.multimodal import (extract_video_scene_cuts,
-                                       synthesize_group_avis)
-
-    docs = _t(spark, sf_dir, "documents")
-    ids = docs.where(F.col("doc_id") % 9 == 1).select(
-        F.col("doc_id").alias("media_id"))
-    return extract_video_scene_cuts(synthesize_group_avis(ids), tau=16)
-
-
-# ---------------------------------------------------------------------------
-# GIF decode (functions/gif.py): the dictionary-compression codec
-# family (variable-width LZW, 9->12 bits, CLEAR/EOI, 4096 reset,
-# sub-blocks, global color table) — encoded through the real writer,
-# decoded back; the oracle maps the closed-form palette indices
-# without parsing a byte.
-# ---------------------------------------------------------------------------
-
-_GIF_ORACLE = f"""
-    WITH ids AS (
-      SELECT doc_id AS media_id FROM documents WHERE doc_id % 4 = 3
-    ), grid AS (
-      SELECT r, c
-      FROM (SELECT unnest(range(0, 16)) AS r),
-           (SELECT unnest(range(0, 16)) AS c)
-    ), px AS (
-      SELECT media_id,
-             (media_id * 7 + r * 16 + c) % 256 AS idx
-      FROM ids CROSS JOIN grid
-    ), rgb AS (
-      SELECT media_id,
-             (idx * 3 + 13) % 256 AS pr,
-             (idx * 5 + 29) % 256 AS pg,
-             (idx * 7 + 43) % 256 AS pb
-      FROM px
-    )
-    SELECT media_id, TRUE AS decoded,
-           CAST(16 AS INT) AS width, CAST(16 AS INT) AS height,
-           {R('avg(pr)', 6)} AS mean_r,
-           {R('avg(pg)', 6)} AS mean_g,
-           {R('avg(pb)', 6)} AS mean_b
-    FROM rgb GROUP BY media_id
-"""
-
-
-@register("gif_decode_features", oracle=_GIF_ORACLE)
-def gif_decode_features_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.multimodal import extract_gif_features, synthesize_gifs
-
-    docs = _t(spark, sf_dir, "documents")
-    ids = docs.where(F.col("doc_id") % 4 == 3).select(
-        F.col("doc_id").alias("media_id"))
-    gifs = synthesize_gifs(ids, width=16, height=16)
-    out = extract_gif_features(gifs)
-    return _round(
-        out.select("media_id", "decoded", F.col("width").cast("int"),
-                   F.col("height").cast("int"), "mean_r", "mean_g",
-                   "mean_b"),
-        {"mean_r": 6, "mean_g": 6, "mean_b": 6})
-
-

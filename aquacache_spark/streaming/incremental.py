@@ -11,9 +11,9 @@ patch_48.R:215-218,401-408):
 
 Spark-first realization: the change feed is any DataFrame of changed
 ranges (in production: Delta Change Data Feed micro-batches via
-``foreachBatch``); the dependency closure is a driver-side iterative
-join to fixpoint (compound graphs are catalog-sized — thousands of
-rows, not data-sized); the recompute is an ordinary partition-pruned
+``foreachBatch``); the dependency closure is a driver-side BFS over
+the collected member graph (compound graphs are catalog-sized —
+thousands of rows, not data-sized); the recompute is an ordinary partition-pruned
 batch over only the touched slices; the merge plan classifies
 insert/update/unchanged so a Delta MERGE writes only real changes.
 At 100 TB correctness of this design rests on partition pruning by
@@ -29,6 +29,48 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+def _member_graph(
+    compound_members: DataFrame,
+    member_col: str,
+    compound_col: str,
+    seed_ids: DataFrame | None = None,
+) -> tuple[dict, set]:
+    """Member -> compounds adjacency (deduplicated on the driver) and
+    the seed ids, fetched together in ONE Spark job: the compound graph
+    is catalog-sized, so both fit on the driver."""
+    rows = compound_members.select(
+        F.col(member_col).alias("src"), F.col(compound_col).alias("dst"),
+        F.lit(False).alias("is_seed"))
+    if seed_ids is not None:
+        seed = F.col(seed_ids.columns[0])
+        rows = rows.unionByName(seed_ids.select(
+            seed.alias("src"), seed.alias("dst"),
+            F.lit(True).alias("is_seed")))
+    adj: dict = {}
+    seeds = set()
+    for src, dst, is_seed in rows.collect():
+        if is_seed:
+            seeds.add(src)
+        else:
+            adj.setdefault(src, set()).add(dst)
+    return adj, seeds
+
+
+def _reach(adj: dict, start, max_depth: int = 32) -> set:
+    """Everything ``start`` reaches in at most ``max_depth`` hops
+    (driver-side BFS); ``start`` itself only through a cycle.
+    ``max_depth`` guards accidental cycles (the reference also carries
+    an explicit visited path, patch_53.R:876-878)."""
+    seen, frontier = set(), set(start)
+    for _ in range(max_depth):
+        frontier = {d for s in frontier for d in adj.get(s, ())
+                    if d not in seen}
+        if not frontier:
+            break
+        seen |= frontier
+    return seen
+
+
 def downstream_closure(
     compound_members: DataFrame,
     seed_ids: DataFrame,
@@ -37,53 +79,19 @@ def downstream_closure(
     max_depth: int = 32,
 ) -> DataFrame:
     """Transitive closure: all compounds depending (directly or through
-    nested compounds) on the seed series.
+    nested compounds) on the seed series, seeds included.
 
     Port of WITH RECURSIVE downstream_timeseries_ids
     (patch_41.R:2516-2538). The compound graph is *catalog*-sized
     (thousands of definitions, never fact-scale), so the closure runs
-    as a driver-side BFS over the collected edge list — one Spark job
-    to fetch edges, zero per-iteration jobs. A distributed join-loop
-    fallback kicks in only if the edge list is unexpectedly huge.
-    ``max_depth`` guards accidental cycles (the reference also carries
-    an explicit visited path, patch_53.R:876-878).
+    as a driver-side BFS: one Spark job fetches the edges and the
+    seeds, and no job runs per iteration.
     """
-    edges = compound_members.select(
-        F.col(member_col).alias("src"), F.col(compound_col).alias("dst")
-    ).distinct()
-    n_edges = edges.limit(1_000_001).count()
-    if n_edges <= 1_000_000:
-        adj: dict = {}
-        for r in edges.collect():
-            adj.setdefault(r["src"], []).append(r["dst"])
-        seen = {r[0] for r in seed_ids.select(seed_ids.columns[0]).collect()}
-        frontier = set(seen)
-        for _ in range(max_depth):
-            nxt = {
-                d for s in frontier for d in adj.get(s, ()) if d not in seen
-            }
-            if not nxt:
-                break
-            seen |= nxt
-            frontier = nxt
-        spark = compound_members.sparkSession
-        return spark.createDataFrame([(i,) for i in sorted(seen)], ["id"])
-
-    edges = edges.cache()
-    acc = seed_ids.select(F.col(seed_ids.columns[0]).alias("id")).distinct()
-    frontier = acc
-    for _ in range(max_depth):
-        nxt = (
-            frontier.join(edges, frontier["id"] == edges["src"])
-            .select(F.col("dst").alias("id"))
-            .distinct()
-            .join(acc, "id", "left_anti")
-        )
-        if nxt.isEmpty():
-            break
-        acc = acc.unionByName(nxt)
-        frontier = nxt
-    return acc
+    adj, seeds = _member_graph(compound_members, member_col, compound_col,
+                               seed_ids)
+    ids = seeds | _reach(adj, seeds, max_depth)
+    spark = compound_members.sparkSession
+    return spark.createDataFrame([(i,) for i in sorted(ids)], ["id"])
 
 
 def expand_changed_ranges(
@@ -100,25 +108,9 @@ def expand_changed_ranges(
     from the catalog-sized member graph, then applied to the changed
     ranges with ONE broadcast join — no per-level Spark jobs.
     """
-    edges = compound_members.select(
-        F.col("member_timeseries_id").alias("src"),
-        F.col("timeseries_id").alias("dst"),
-    ).distinct()
-    adj: dict = {}
-    for r in edges.collect():
-        adj.setdefault(r["src"], []).append(r["dst"])
-
-    def reach(start):
-        seen, frontier = set(), {start}
-        for _ in range(32):
-            nxt = {d for s in frontier for d in adj.get(s, ()) if d not in seen}
-            if not nxt:
-                break
-            seen |= nxt
-            frontier = nxt
-        return seen
-
-    pairs = [(s, d) for s in adj for d in reach(s)]
+    adj, _ = _member_graph(compound_members, "member_timeseries_id",
+                           "timeseries_id")
+    pairs = [(s, d) for s in adj for d in _reach(adj, {s})]
     spark = changes.sparkSession
     out = changes
     if pairs:

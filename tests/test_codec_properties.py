@@ -64,28 +64,6 @@ def test_grib2_complex_roundtrip(grid, packing):
 
 
 @settings(max_examples=25, deadline=None)
-@given(st.integers(1, 64), st.integers(1, 48), st.integers(0, 2 ** 32))
-def test_png_roundtrip_random(w, h, seed):
-    from aquacache_spark.operators.multimodal import decode_png, encode_png
-
-    px = np.random.default_rng(seed).integers(
-        0, 256, (h, w, 3), dtype=np.uint8)
-    assert (decode_png(encode_png(px)) == px).all()
-
-
-@settings(max_examples=25, deadline=None)
-@given(st.integers(1, 2000), st.integers(0, 2 ** 32))
-def test_wav_roundtrip_random(n, seed):
-    from aquacache_spark.operators.multimodal import decode_wav, encode_wav
-
-    s = np.random.default_rng(seed).integers(
-        -32768, 32768, n, dtype=np.int64).astype(np.int16)
-    sr, ch, frames = decode_wav(encode_wav(s, 22050))
-    assert sr == 22050 and ch == 1
-    assert (frames[:, 0] == s).all()
-
-
-@settings(max_examples=25, deadline=None)
 @given(grids(max_side=10))
 def test_pgraster_and_geotiff_roundtrip_random(grid):
     from aquacache_spark.functions.geotiff import (decode_geotiff,

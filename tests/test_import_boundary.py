@@ -1,12 +1,14 @@
 """Import boundary between the AquaCache package and the leftover
-LLM-corpus dedup, ANN-search and web-crawl tier modules.
+LLM-corpus dedup, ANN-search, web-crawl and media-decoding tier
+modules.
 
 Static AST scan, no Spark: the tier modules may be imported only by
-the three query modules that host perfbench's batch probes and by each
+the four query modules that host perfbench's batch probes and by each
 other, and each of those query modules registers exactly one query
 that reaches tier code: its probe. The lists may only shrink. Every
 definition in the tier files must be reachable from a registered
-query, so dead tier code cannot hide behind a live probe.
+query (module constants count as definitions), so dead tier code
+cannot hide behind a live probe.
 """
 
 import ast
@@ -21,6 +23,8 @@ TIER = {
     "aquacache_spark.functions.html",
     "aquacache_spark.functions.warc",
     "aquacache_spark.sources.warc",
+    "aquacache_spark.operators.multimodal",
+    "aquacache_spark.functions.jpeg",
 }
 GONE = {
     "aquacache_spark.operators.packing",
@@ -28,6 +32,8 @@ GONE = {
     "aquacache_spark.operators.search",
     "aquacache_spark.functions.bpe",
     "aquacache_spark.functions.charset",
+    "aquacache_spark.functions.gif",
+    "aquacache_spark.functions.avi",
 }
 # Each probe host's queries that reach tier code: perfbench's batch
 # probe only.
@@ -35,6 +41,7 @@ TIER_QUERIES = {
     "aquacache_spark.queries.dedup": {"minhash_lsh_pairs"},
     "aquacache_spark.queries.ann": {"embedding_cosine_topk"},
     "aquacache_spark.queries.web": {"warc_crawl_corpus"},
+    "aquacache_spark.queries.multimodal": {"jpeg_decode_features"},
 }
 # Tier files that only the probes keep: each top-level definition in
 # them must be reached from a registered query.
@@ -45,6 +52,8 @@ PROBE_ONLY = (
     "aquacache_spark.functions.html",
     "aquacache_spark.functions.warc",
     "aquacache_spark.sources.warc",
+    "aquacache_spark.operators.multimodal",
+    "aquacache_spark.functions.jpeg",
 )
 
 
@@ -136,11 +145,25 @@ def test_each_probe_host_registers_only_its_listed_tier_queries():
         assert on_tier == listed, mod
 
 
+def _top_level_defs(tree: ast.Module) -> dict[str, ast.AST]:
+    """Functions, classes and single-name module constants: a constant
+    built at import (``_ZZ = _zigzag_order()``) reaches what it calls."""
+    out = {}
+    for n in tree.body:
+        if isinstance(n, (ast.FunctionDef, ast.ClassDef)):
+            out[n.name] = n
+        elif isinstance(n, ast.Assign) and isinstance(n.targets[0],
+                                                      ast.Name):
+            out[n.targets[0].id] = n
+        elif isinstance(n, ast.AnnAssign) and isinstance(n.target,
+                                                         ast.Name):
+            out[n.target.id] = n
+    return out
+
+
 def test_probe_only_tier_definitions_are_reached_from_queries():
     trees = {m: ast.parse(p.read_text()) for m, p in MODULES.items()}
-    defs = {m: {n.name: n for n in t.body
-                if isinstance(n, (ast.FunctionDef, ast.ClassDef))}
-            for m, t in trees.items()}
+    defs = {m: _top_level_defs(t) for m, t in trees.items()}
     # module-level ``from x import name [as alias]`` -> (x, name)
     aliases = {
         m: {a.asname or a.name:

@@ -34,6 +34,24 @@ def test_downstream_closure_transitive(spark, compound_members):
     assert got == [2, 6, 10, 20]  # nested compound 20 reached through 10
 
 
+def test_downstream_closure_starts_one_spark_job(spark, compound_members):
+    """The closure is a driver-side BFS: one job collects the edges and
+    the seeds, and none runs per level or to pick a path."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"closure-{uuid.uuid4().hex}"
+    seeds = spark.createDataFrame([(2,), (9,)], ["id"])
+    sc.setJobGroup(group, "downstream_closure")
+    try:
+        out = downstream_closure(compound_members, seeds)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    assert sorted(r["id"] for r in out.collect()) == [2, 6, 9, 10, 20]
+
+
 def test_expand_changed_ranges_fans_out(spark, compound_members):
     changes = spark.createDataFrame(
         [(2, "2024-01-01 00:00:00", "2024-01-02 00:00:00")],
