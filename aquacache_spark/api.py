@@ -13,7 +13,9 @@ reference dispatches them:
    since the fold IS set-based here);
 3. compound: recursive member resolution with explicit-path cycle
    detection (:845-1296) — priority coalesce or safe-expression
-   projection over aligned members;
+   projection over aligned members. One catalog ``collect()`` per read
+   (``_catalog``) types the series and every member ``reach`` finds,
+   so planning starts one Spark job however deep the compound nests;
 4. optional resampling: dense bin spine + per-bin stats (:2009-2260)
    with ``statistic`` ∈ {actual, min, max, mean, median}.
 
@@ -35,6 +37,7 @@ from .operators.compound import (
     expression_compound,
     expression_compound_asof,
     priority_coalesce,
+    reach,
 )
 from .operators.corrections import apply_corrections
 from .operators.daily import daily_rollup
@@ -57,35 +60,40 @@ def _window(df: DataFrame, start: Optional[str], end: Optional[str],
     return df
 
 
-def _catalog_field(store: FixtureStore, timeseries_id: int, field: str):
-    row = (
-        store.timeseries.where(F.col("timeseries_id") == timeseries_id)
-        .select(field)
-        .collect()
-    )
-    if not row:
-        raise KeyError(f"unknown timeseries_id {timeseries_id}")
-    return row[0][0]
+def _closure(store: FixtureStore, timeseries_id: int) -> set:
+    """The series and every member its compound definition reaches."""
+    adj = {c: [m["timeseries_id"] for m in spec["members"]]
+           for c, spec in store.compounds.items()}
+    return {timeseries_id} | reach(adj, {timeseries_id})
 
 
-def _series_type(store: FixtureStore, timeseries_id: int) -> str:
-    return _catalog_field(store, timeseries_id, "timeseries_type")
+def _catalog(store: FixtureStore, timeseries_id: int) -> dict:
+    """``timeseries_id -> (timeseries_type, aggregation_type)`` for the
+    series and every member it reaches: one catalog ``collect()`` per
+    read, however deep the compound nests."""
+    ids = sorted(_closure(store, timeseries_id))
+    rows = store.timeseries.where(F.col("timeseries_id").isin(*ids)).select(
+        "timeseries_id", "timeseries_type", "aggregation_type").collect()
+    return {r[0]: (r[1], r[2]) for r in rows}
 
 
 def _resolve_raw(
     store: FixtureStore,
+    catalog: dict,
     timeseries_id: int,
     start: Optional[str],
     end: Optional[str],
-    _path: tuple = (),
+    path: tuple,
 ) -> DataFrame:
     """Raw (pre-correction) window for a basic or compound series —
     resolve_compound_timeseries_raw_window (patch_53.R:845-1296)."""
-    if timeseries_id in _path:
+    if timeseries_id in path:
         raise CompoundCycleError(
-            f"compound cycle: {' -> '.join(map(str, _path + (timeseries_id,)))}"
+            f"compound cycle: {' -> '.join(map(str, path + (timeseries_id,)))}"
         )
-    if _series_type(store, timeseries_id) != "compound":
+    if timeseries_id not in catalog:
+        raise KeyError(f"unknown timeseries_id {timeseries_id}")
+    if catalog[timeseries_id][0] != "compound":
         # carry the measurement period through when the store records it
         # (the daily calc filters period > 1 day, patch_48.R:340)
         extra = (
@@ -105,9 +113,9 @@ def _resolve_raw(
             # members are themselves corrected reads (nested compounds
             # recurse; corrections of the member series apply first —
             # patch_53.R:987-1006)
-            measurements_continuous_corrected(
-                store, m["timeseries_id"], start, end,
-                _path=_path + (timeseries_id,),
+            _corrected(
+                store, catalog, m["timeseries_id"], start, end,
+                path + (timeseries_id,),
             ).select("datetime", F.col("corrected_value").alias("value")),
             m["priority"],
             m["use_from"],
@@ -136,14 +144,15 @@ def _resolve_raw(
 
 def _corrected(
     store: FixtureStore,
+    catalog: dict,
     timeseries_id: int,
     start: Optional[str],
     end: Optional[str],
-    _path: tuple = (),
+    path: tuple = (),
 ) -> DataFrame:
     """(datetime, corrected_value) plus ``period_seconds`` when the
     store records it, for the daily read's period filter."""
-    raw = _resolve_raw(store, timeseries_id, start, end, _path)
+    raw = _resolve_raw(store, catalog, timeseries_id, start, end, path)
     corrections = [
         c for c in store.corrections if c.timeseries_id == timeseries_id
     ]
@@ -162,7 +171,6 @@ def measurements_continuous_corrected(
     end_datetime: Optional[str] = None,
     statistic: str = "actual",
     resample_seconds: Optional[int] = None,
-    _path: tuple = (),
 ) -> DataFrame:
     """Corrected read window; columns (datetime, corrected_value) for
     statistic='actual', else resampled bins."""
@@ -174,7 +182,8 @@ def measurements_continuous_corrected(
         raise ValueError("non-'actual' statistics require resample_seconds")
 
     out = _corrected(
-        store, timeseries_id, start_datetime, end_datetime, _path
+        store, _catalog(store, timeseries_id), timeseries_id,
+        start_datetime, end_datetime,
     ).select("datetime", "corrected_value")
     if resample_seconds:
         binned = resample(
@@ -203,8 +212,9 @@ def measurements_calculated_daily(
     excluded (when the store carries a period column), and so is any
     point inside a non-zero-width unusable grade-'N' window (inclusive
     BETWEEN, ``g.start_dt <> g.end_dt``)."""
-    agg_type = _catalog_field(store, timeseries_id, "aggregation_type")
-    corrected = _corrected(store, timeseries_id, None, None)
+    catalog = _catalog(store, timeseries_id)
+    corrected = _corrected(store, catalog, timeseries_id, None, None)
+    agg_type = catalog[timeseries_id][1]
     if "period_seconds" in corrected.columns:
         corrected = corrected.where(F.col("period_seconds") <= 86400)
     grades = getattr(store, "grades", None)
@@ -279,14 +289,8 @@ def measurements_calculated_daily_at(
             "measurement_versions does not record it"
         )
     # a compound reads its members, so replay every series it reaches
-    closure, todo = set(), [timeseries_id]
-    while todo:
-        s = todo.pop()
-        if s not in closure:
-            closure.add(s)
-            todo += [m["timeseries_id"]
-                     for m in store.compounds.get(s, {}).get("members", [])]
-    in_closure = F.col("timeseries_id").isin(*sorted(closure))
+    in_closure = F.col("timeseries_id").isin(
+        *sorted(_closure(store, timeseries_id)))
     vis = versions.where(
         in_closure & (F.col("modified_at") <= F.lit(as_of).cast("timestamp"))
     )

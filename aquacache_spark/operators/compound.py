@@ -9,8 +9,13 @@ Reference semantics (inst/patches/patch_53.R:845-1296):
   :1087-1096, or as-of with tolerance — operators/asof.py), project the
   member columns through the compound's safe SQL expression
   (:1273-1294).
-- cycle detection over nested compounds: driver-side DFS with explicit
-  path (:876-878) — compound graphs are catalog-sized, never data-sized.
+- nested compounds: the compound graph is catalog-sized, never
+  data-sized, so it is walked on the driver and only in this module:
+  ``reach`` is one BFS with a visited set and no depth cap, used by the
+  read resolver (api.py, which keeps the reference's explicit path for
+  cycle errors, :876-878) and the downstream closure
+  (streaming/incremental.py); ``compound_metadata_rollup`` resolves its
+  levels on the driver too.
 
 Spark-first: both paths are pure DataFrame compositions; the dynamic
 expression goes through ``F.expr`` gated by the ported safety validator
@@ -159,13 +164,48 @@ def expression_compound_asof(
     )
 
 
+def reach(adj: dict, start) -> set:
+    """Every id reachable from the ids in ``start`` along ``adj``
+    (id -> iterable of ids), by a driver-side BFS with no depth cap;
+    ``start`` itself only through a cycle. The visited set ends every
+    cycle."""
+    seen, frontier = set(), set(start)
+    while frontier:
+        frontier = {d for s in frontier for d in adj.get(s, ())
+                    if d not in seen}
+        seen |= frontier
+    return seen
+
+
+def _rollup_one(members: list, known: dict, has_expression: bool):
+    """(start, end, record rate) of one compound from its resolved
+    members' rows."""
+    windows = []
+    for m, use_from, use_to in members:
+        s, e, _ = known[m]  # NULL series bounds stay NULL
+        if s is not None and use_from is not None:
+            s = max(s, use_from)
+        if e is not None and use_to is not None:
+            e = min(e, use_to)
+        windows.append((s, e))
+    valid = [(s, e) for s, e in windows
+             if s is not None and e is not None and e >= s]
+    starts, ends = [s for s, _ in valid], [e for _, e in valid]
+    rate = min((known[m][2] for m, _, _ in members
+                if known[m][2] is not None), default=None)
+    if not has_expression:
+        return min(starts, default=None), max(ends, default=None), rate
+    if len(valid) == len(windows) and max(starts) <= min(ends):
+        return max(starts), min(ends), rate
+    return None, None, rate
+
+
 def compound_metadata_rollup(
     basics: DataFrame,
     compound_members: DataFrame,
     has_expression: DataFrame,
-    max_depth: int = 20,
 ) -> DataFrame:
-    """Compound timeseries metadata maintenance, set-wise
+    """Compound timeseries metadata maintenance
     (refresh_compound_timeseries_datetime_bounds, patch_41.R:684-806;
     fastest_compound_member_record_rate, patch_53.R:306-318):
 
@@ -183,98 +223,41 @@ def compound_metadata_rollup(
     ``basics``: (timeseries_id, start_datetime, end_datetime,
     record_rate_seconds) for basic series; ``compound_members``:
     (timeseries_id, member_timeseries_id, use_from, use_to);
-    ``has_expression``: (timeseries_id, has_expression). Nested
-    compounds resolve level by level — the level schedule comes from
-    the collected (catalog-sized) membership graph, each level is one
-    broadcast join + aggregation.
+    ``has_expression``: (timeseries_id, has_expression). All three are
+    catalog-sized: they are collected and the nested levels resolve on
+    the driver with no depth cap, a compound once all its members have.
+    A cycle or a missing member raises ``ValueError``. Returns a local
+    frame.
     """
-    edges = [
-        (r["timeseries_id"], r["member_timeseries_id"])
-        for r in compound_members.select(
-            "timeseries_id", "member_timeseries_id").collect()
-    ]
-    children: dict = {}
-    for cid, mid in edges:
-        children.setdefault(cid, set()).add(mid)
-    known_ids = set(r[0] for r in basics.select("timeseries_id").collect())
-    levels: list[list] = []
-    pending = dict(children)
-    for _ in range(max_depth):
-        ready = [c for c, ms in pending.items() if ms <= known_ids]
-        if not ready:
-            break
-        levels.append(ready)
-        known_ids |= set(ready)
-        for c in ready:
-            del pending[c]
-    if pending:
-        raise ValueError(
-            f"unresolvable compound graph (cycle or missing member): "
-            f"{sorted(pending)}"
-        )
+    from pyspark.sql.types import StructField, StructType
 
-    known = basics.select(
-        "timeseries_id", "start_datetime", "end_datetime",
-        "record_rate_seconds",
-    )
-    out = None
-    for level in levels:
-        lvl_members = compound_members.where(
-            F.col("timeseries_id").isin([int(c) for c in level])
-        )
-        j = lvl_members.join(
-            known.select(
-                F.col("timeseries_id").alias("member_timeseries_id"),
-                F.col("start_datetime").alias("__ms"),
-                F.col("end_datetime").alias("__me"),
-                F.col("record_rate_seconds").alias("__mr"),
-            ),
-            "member_timeseries_id",
-        )
-        eff_s = F.when(
-            F.col("__ms").isNotNull(),
-            F.when(F.col("use_from").isNull(), F.col("__ms"))
-            .otherwise(F.greatest(F.col("__ms"), F.col("use_from"))),
-        )
-        eff_e = F.when(
-            F.col("__me").isNotNull(),
-            F.when(F.col("use_to").isNull(), F.col("__me"))
-            .otherwise(F.least(F.col("__me"), F.col("use_to"))),
-        )
-        j = j.select(
-            "timeseries_id", eff_s.alias("__es"), eff_e.alias("__ee"),
-            F.col("__mr"),
-        )
-        valid = (F.col("__es").isNotNull() & F.col("__ee").isNotNull()
-                 & (F.col("__ee") >= F.col("__es")))
-        agg = j.groupBy("timeseries_id").agg(
-            F.count(F.lit(1)).alias("__n"),
-            F.count(F.when(valid, F.lit(1))).alias("__n_valid"),
-            F.min(F.when(valid, F.col("__es"))).alias("__u_s"),
-            F.max(F.when(valid, F.col("__ee"))).alias("__u_e"),
-            F.max(F.when(valid, F.col("__es"))).alias("__i_s"),
-            F.min(F.when(valid, F.col("__ee"))).alias("__i_e"),
-            F.min("__mr").alias("record_rate_seconds"),
-        ).join(F.broadcast(has_expression), "timeseries_id", "left")
-        ix_ok = (
-            (F.col("__n") > 0) & (F.col("__n_valid") == F.col("__n"))
-            & (F.col("__i_s") <= F.col("__i_e"))
-        )
-        lvl = agg.select(
-            "timeseries_id",
-            F.when(F.coalesce("has_expression", F.lit(False)),
-                   F.when(ix_ok, F.col("__i_s")))
-            .otherwise(F.col("__u_s")).alias("start_datetime"),
-            F.when(F.coalesce("has_expression", F.lit(False)),
-                   F.when(ix_ok, F.col("__i_e")))
-            .otherwise(F.col("__u_e")).alias("end_datetime"),
-            "record_rate_seconds",
-        )
-        # persist each resolved level: the next level joins against it,
-        # and without a barrier the lineage re-derives every prior level
-        lvl = lvl.persist()
-        known = known.unionByName(lvl)
-        out = lvl if out is None else out.unionByName(lvl)
-    if out is None:
-        return known.limit(0)
-    return out
+    from ..session import local_df
+
+    cols = ["timeseries_id", "start_datetime", "end_datetime",
+            "record_rate_seconds"]
+    known = {r[0]: tuple(r[1:]) for r in basics.select(*cols).collect()}
+    members: dict = {}
+    for cid, mid, use_from, use_to in compound_members.select(
+            "timeseries_id", "member_timeseries_id", "use_from",
+            "use_to").collect():
+        members.setdefault(cid, []).append((mid, use_from, use_to))
+    expr = {cid: bool(h) for cid, h in has_expression.select(
+        "timeseries_id", "has_expression").collect()}
+
+    out, pending = [], dict(members)
+    while pending:
+        ready = [c for c, ms in pending.items()
+                 if all(m in known for m, _, _ in ms)]
+        if not ready:
+            raise ValueError(
+                f"unresolvable compound graph (cycle or missing member): "
+                f"{sorted(pending)}"
+            )
+        for c in ready:
+            known[c] = _rollup_one(pending.pop(c), known, expr.get(c, False))
+            out.append((c, *known[c]))
+    schema = StructType([
+        StructField(c, src.schema[c].dataType)
+        for c, src in zip(cols, [compound_members] + [basics] * 3)
+    ])
+    return local_df(basics.sparkSession, out, schema)

@@ -180,114 +180,3 @@ def feb29_smooth(
     keep = [c for c in doy_df.columns]
     return others.select(*keep).unionByName(smoothed.select(*keep))
 
-
-def doy_stats_expanding(
-    daily: DataFrame,
-    keys: Sequence[str],
-    date_col: str = "date",
-    value_col: str = "value",
-    years_window: int | None = None,
-) -> DataFrame:
-    """Scale path for years-deep history: same semantics as
-    :func:`doy_stats`, computed as an expanding window per (series,
-    DOY) cell inside an Arrow kernel instead of a self-join.
-
-    The join design materializes O(years²/2) pairs per (series, doy)
-    cell. Measured at 200 series x 50 years of daily data (3.65M daily
-    rows, ~91M joined pairs): join 18.1s, this kernel 8.0s on
-    local[32] — and the gap widens with history depth (pairs grow y²,
-    the kernel's C-implemented pandas expanding aggregates grow ~y).
-    At shallow history (<= a few years) the JVM join wins; pick by
-    years-depth. Shuffle volume here is |daily| (no pair blow-up).
-    Group key is the series (not the cell), so Feb-29 rows (NULL
-    normalized DOY) ride along and keep their NULL stats, and Arrow
-    batch economics stay per-partition (operators/_grouped.py).
-
-    The 30-year variant mirrors ``add_months(date, -360)`` month-clamp
-    semantics via pd.DateOffset. Equivalence with :func:`doy_stats` is
-    asserted in tests/test_doy_expanding.py; the driver oracle keeps
-    the join variant (exact same outputs either way).
-    """
-    import numpy as np
-    import pandas as pd
-
-    from pyspark.sql import types as T
-
-    from ._grouped import grouped_apply
-
-    d = daily.withColumn("doy", normalized_doy(F.col(date_col))).select(
-        *keys, date_col, F.col(value_col).cast("double").alias(value_col), "doy"
-    )
-    in_fields = {f.name: f for f in d.schema.fields}
-    stat_fields = [T.StructField("doy_count", T.LongType())] + [
-        T.StructField(c, T.DoubleType())
-        for c in ("hist_min", "hist_max", "hist_mean",
-                  "q10", "q25", "q50", "q75", "q90")
-    ]
-    schema = T.StructType(list(in_fields.values()) + stat_fields)
-    cols = [f.name for f in schema.fields]
-    qs = [10.0, 25.0, 50.0, 75.0, 90.0]
-    qnames = ["q10", "q25", "q50", "q75", "q90"]
-
-    def fn(g: pd.DataFrame) -> pd.DataFrame:
-        g = g.reset_index(drop=True)
-        n = len(g)
-        counts = np.zeros(n, dtype="int64")
-        stats = {c: np.full(n, np.nan) for c in
-                 ("hist_min", "hist_max", "hist_mean", *qnames)}
-        for _, cell in g.groupby("doy", sort=False):  # NaN doy: stays NULL
-            cell = cell.sort_values(date_col)
-            idx = cell.index.to_numpy()
-            vals = cell[value_col].to_numpy(dtype="float64")
-            if years_window is None:
-                # expanding stats over the strictly-prior prefix: the C
-                # paths of pandas.expanding (NaN-skipping), shifted one
-                # row — avoids a Python-level percentile call per row
-                s = pd.Series(vals)
-                exp = s.expanding(min_periods=1)
-                counts[idx] = np.nan_to_num(
-                    exp.count().shift(1).to_numpy()).astype("int64")
-                stats["hist_min"][idx] = exp.min().shift(1).to_numpy()
-                stats["hist_max"][idx] = exp.max().shift(1).to_numpy()
-                stats["hist_mean"][idx] = exp.mean().shift(1).to_numpy()
-                for name, q in zip(qnames, qs):
-                    stats[name][idx] = (
-                        exp.quantile(q / 100.0).shift(1).to_numpy())
-                # rows whose prior prefix was all-NaN keep NULL stats
-                empty = counts[idx] == 0
-                if empty.any():
-                    for c in ("hist_min", "hist_max", "hist_mean", *qnames):
-                        stats[c][idx[empty]] = np.nan
-                continue
-            dates = pd.to_datetime(cell[date_col])
-            lo = 0
-            for j in range(1, len(idx)):
-                cutoff = dates.iloc[j] - pd.DateOffset(
-                    months=12 * years_window)
-                while lo < j and dates.iloc[lo] < cutoff:
-                    lo += 1
-                w = vals[lo:j]
-                w = w[~np.isnan(w)]
-                if not len(w):
-                    continue
-                i = idx[j]
-                counts[i] = len(w)
-                stats["hist_min"][i] = w.min()
-                stats["hist_max"][i] = w.max()
-                stats["hist_mean"][i] = w.mean()
-                pct = np.percentile(w, qs)  # linear interp == percentile()
-                for name, v in zip(qnames, pct):
-                    stats[name][i] = v
-        g["doy_count"] = counts
-        for c, arr in stats.items():
-            g[c] = arr
-        return g[cols]
-
-    out = grouped_apply(d, list(keys), fn, schema)
-    phr = F.when(
-        (F.col("doy_count") > 1) & F.col("doy").isNotNull(),
-        (F.col(value_col) - F.col("hist_min"))
-        / F.nullif(F.col("hist_max") - F.col("hist_min"), F.lit(0.0))
-        * 100.0,
-    )
-    return out.withColumn("percent_historic_range", phr)

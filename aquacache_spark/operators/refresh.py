@@ -84,7 +84,8 @@ def feb29_smooth_ref(
     keys: Sequence[str],
     date_col: str = "date",
     value_col: str = "value",
-    today: str = "2026-01-15",
+    *,
+    today: str,
 ) -> DataFrame:
     """Reference-exact Feb-29 smoothing over LADDERED columns
     (patch_48.R:604-686): each leap-day row takes the pairwise average
@@ -202,7 +203,8 @@ def refresh_calculated_daily(
     value_col: str = "value",
     agg_type: str = "mean",
     offset_hours: int = 0,
-    today: str = "2026-01-15",
+    *,
+    today: str,
 ) -> DataFrame:
     """The full refresh composition in reference order
     (patch_48.R:215-702): corrected read -> daily rollup -> dense spine

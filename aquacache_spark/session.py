@@ -88,10 +88,9 @@ def configure(builder: SparkSession.Builder) -> SparkSession.Builder:
         # the expensive part (an md5 per gram/shingle inside a
         # transform()), so the inferred filter re-evaluates the whole
         # hash array once per row just to test emptiness and the gram
-        # hashing runs 2x per explode (measured in
-        # plans/r12/repeated_span_coverage_before.txt: Filters (4)/(13)
-        # re-evaluate the full 8-gram md5 transform of Generates
-        # (6)/(12)). The rule only ever saves work when skipping
+        # hashing runs 2x per explode (measured: the pushed filters
+        # re-evaluated the full 8-gram md5 transform of the Generates
+        # below them). The rule only ever saves work when skipping
         # empty-array rows is cheaper than generating them — never true
         # here; Generate itself already emits nothing for empty arrays
         # (guide §4.4's duplicated-evaluation class, expression form).
@@ -103,11 +102,11 @@ def configure(builder: SparkSession.Builder) -> SparkSession.Builder:
         # fills the JVM's default 240 MB reserved code cache (measured:
         # 201 MB used at the end of a full bench run). Near the cap the
         # sweeper evicts warm compiled methods and random CPU-bound
-        # queries degrade 5-10x run-to-run (measured: simhash_capped
-        # 11.2s vs 0.7s, jpeg12_decode 5.6s vs 0.5s across two
-        # otherwise-identical full-bench runs). 512 MB gives the
-        # codegen workload headroom at any scale — this is a per-JVM
-        # constant, not a data-size-dependent tunable.
+        # queries degrade 5-10x run-to-run (measured: two CPU-bound
+        # queries 16x and 11x slower across two otherwise-identical
+        # full-bench runs). 512 MB gives the codegen workload headroom
+        # at any scale — this is a per-JVM constant, not a
+        # data-size-dependent tunable.
         # Whole-stage codegen over very wide stages emits one enormous
         # generated method per span: the results-metadata star (11
         # broadcast joins, 76+ output columns in one span) compiles
@@ -127,12 +126,6 @@ def configure(builder: SparkSession.Builder) -> SparkSession.Builder:
                 "-XX:ReservedCodeCacheSize=512m")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
         .config("spark.ui.enabled", "false")
-        # reliable checkpoints (the owned-cache span family prefers
-        # them when a checkpoint dir is set) are only deleted by the
-        # ContextCleaner when this is on — the default (false) leaks a
-        # full output copy per call onto checkpoint storage for
-        # daily-cadence callers
-        .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
     )
 
 

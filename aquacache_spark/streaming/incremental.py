@@ -11,11 +11,12 @@ patch_48.R:215-218,401-408):
 
 Spark-first realization: the change feed is any DataFrame of changed
 ranges (in production: Delta Change Data Feed micro-batches via
-``foreachBatch``); the dependency closure is a driver-side BFS over
-the collected member graph (compound graphs are catalog-sized —
-thousands of rows, not data-sized); the recompute is an ordinary partition-pruned
-batch over only the touched slices; the merge plan classifies
-insert/update/unchanged so a Delta MERGE writes only real changes.
+``foreachBatch``); the dependency closure is ``operators.compound.reach``,
+a driver-side BFS with no depth cap over the collected member graph
+(compound graphs are catalog-sized, not data-sized); the recompute is
+an ordinary partition-pruned batch over only the touched slices; the
+merge plan classifies insert/update/unchanged so a Delta MERGE writes
+only real changes.
 At 100 TB correctness of this design rests on partition pruning by
 ``(timeseries_id, date)`` — recompute cost is proportional to changed
 data, never table size.
@@ -27,6 +28,8 @@ from typing import Callable, Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..operators.compound import reach
 
 
 def _member_graph(
@@ -56,27 +59,11 @@ def _member_graph(
     return adj, seeds
 
 
-def _reach(adj: dict, start, max_depth: int = 32) -> set:
-    """Everything ``start`` reaches in at most ``max_depth`` hops
-    (driver-side BFS); ``start`` itself only through a cycle.
-    ``max_depth`` guards accidental cycles (the reference also carries
-    an explicit visited path, patch_53.R:876-878)."""
-    seen, frontier = set(), set(start)
-    for _ in range(max_depth):
-        frontier = {d for s in frontier for d in adj.get(s, ())
-                    if d not in seen}
-        if not frontier:
-            break
-        seen |= frontier
-    return seen
-
-
 def downstream_closure(
     compound_members: DataFrame,
     seed_ids: DataFrame,
     member_col: str = "member_timeseries_id",
     compound_col: str = "timeseries_id",
-    max_depth: int = 32,
 ) -> DataFrame:
     """Transitive closure: all compounds depending (directly or through
     nested compounds) on the seed series, seeds included.
@@ -84,12 +71,12 @@ def downstream_closure(
     Port of WITH RECURSIVE downstream_timeseries_ids
     (patch_41.R:2516-2538). The compound graph is *catalog*-sized
     (thousands of definitions, never fact-scale), so the closure runs
-    as a driver-side BFS: one Spark job fetches the edges and the
-    seeds, and no job runs per iteration.
+    as a driver-side BFS with no depth cap: one Spark job fetches the
+    edges and the seeds, and no job runs per iteration.
     """
     adj, seeds = _member_graph(compound_members, member_col, compound_col,
                                seed_ids)
-    ids = seeds | _reach(adj, seeds, max_depth)
+    ids = seeds | reach(adj, seeds)
     spark = compound_members.sparkSession
     return spark.createDataFrame([(i,) for i in sorted(ids)], ["id"])
 
@@ -110,7 +97,7 @@ def expand_changed_ranges(
     """
     adj, _ = _member_graph(compound_members, "member_timeseries_id",
                            "timeseries_id")
-    pairs = [(s, d) for s in adj for d in _reach(adj, {s})]
+    pairs = [(s, d) for s in adj for d in reach(adj, {s})]
     spark = changes.sparkSession
     out = changes
     if pairs:

@@ -54,16 +54,23 @@ def _run(base: str, n_series: int, n_points: int) -> None:
     df.write.mode("overwrite").parquet(f"{base}/m.parquet")
     meas = spark.read.parquet(f"{base}/m.parquet")
     timings: dict[str, float] = {}
+    failed_pins: list[str] = []
 
     def t(name, frame):
         t0 = time.perf_counter()
         frame.write.format("noop").mode("overwrite").save()
         timings[name] = round(time.perf_counter() - t0, 2)
 
+    def pin(name, bound):
+        # a timing pin that fails is reported after the last section and
+        # the total, so one slow reading does not hide the rest of the run
+        if not timings[name] < bound:
+            failed_pins.append(f"{name} {timings[name]} >= {bound}")
+
     from aquacache_spark.operators.asof import asof_join
     from aquacache_spark.operators.corrections import Correction, apply_corrections
     from aquacache_spark.operators.daily import daily_rollup
-    from aquacache_spark.operators.doy import doy_stats, doy_stats_expanding
+    from aquacache_spark.operators.doy import doy_stats
     from aquacache_spark.operators.increments import compute_increments
     from aquacache_spark.operators.resample import resample
 
@@ -81,8 +88,6 @@ def _run(base: str, n_series: int, n_points: int) -> None:
     daily_c.count()
     t("doy_stats", doy_stats(daily_c, keys=["timeseries_id"],
                              date_col="date", value_col="value"))
-    t("doy_stats_expanding", doy_stats_expanding(
-        daily_c, keys=["timeseries_id"], date_col="date", value_col="value"))
     t("resample_1h", resample(meas, keys=["timeseries_id"],
                               dt_col="datetime", value_col="value",
                               seconds=3600))
@@ -381,7 +386,7 @@ def _run(base: str, n_series: int, n_points: int) -> None:
     t0 = time.perf_counter()
     decode_jpeg(_jb)
     timings["jpeg_decode_512"] = round(time.perf_counter() - t0, 2)
-    assert timings["jpeg_decode_512"] < 0.6, timings["jpeg_decode_512"]
+    pin("jpeg_decode_512", 0.6)
 
     # Hilbert layout key at 3M points: the packed-table unrolled
     # arithmetic chain must stay a single codegen'd projection — the
@@ -398,7 +403,7 @@ def _run(base: str, n_series: int, n_points: int) -> None:
         bits=16).alias("hk")).write.format("noop") \
         .mode("overwrite").save()
     timings["hilbert_key_3m"] = round(time.perf_counter() - t0, 2)
-    assert timings["hilbert_key_3m"] < 8.0, timings["hilbert_key_3m"]
+    pin("hilbert_key_3m", 8.0)
 
     # sketch tier at volume: state must stay BOUNDED (256 HLL
     # registers / 4x1024 CMS counters / 512 Bloom words) while the key
@@ -473,6 +478,8 @@ def _run(base: str, n_series: int, n_points: int) -> None:
         "timings": timings,
         "total": round(sum(timings.values()), 2),
     }))
+    if failed_pins:
+        raise AssertionError("timing pins failed: " + "; ".join(failed_pins))
 
 
 if __name__ == "__main__":

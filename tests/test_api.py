@@ -478,3 +478,64 @@ def test_compound_metadata_rollup_cycle_detected(spark):
         [(6, False), (7, False)], "timeseries_id int, has_expression boolean")
     with _pytest.raises(ValueError, match="unresolvable"):
         compound_metadata_rollup(basics, members, he)
+
+
+def test_compound_metadata_rollup_resolves_a_21_deep_chain(spark):
+    """No depth cap: compound k + 1 has compound k as its only member,
+    21 levels above one basic series, and each level's use_from clips
+    the window one more day."""
+    import datetime as dt
+
+    from aquacache_spark.operators.compound import compound_metadata_rollup
+
+    t0, t1 = dt.datetime(2024, 1, 1), dt.datetime(2024, 3, 1)
+    basics = spark.createDataFrame(
+        [(1, t0, t1, 900.0)],
+        "timeseries_id int, start_datetime timestamp,"
+        " end_datetime timestamp, record_rate_seconds double",
+    )
+    members = spark.createDataFrame(
+        [(k + 1, k, t0 + dt.timedelta(days=k), None) for k in range(1, 22)],
+        "timeseries_id int, member_timeseries_id int,"
+        " use_from timestamp, use_to timestamp",
+    )
+    he = spark.createDataFrame(
+        [(k, k % 2 == 0) for k in range(2, 23)],
+        "timeseries_id int, has_expression boolean")
+    got = {r["timeseries_id"]: r for r in
+           compound_metadata_rollup(basics, members, he).collect()}
+    assert sorted(got) == list(range(2, 23))
+    for k, r in got.items():
+        assert r["start_datetime"] == t0 + dt.timedelta(days=k - 1)
+        assert r["end_datetime"] == t1
+        assert r["record_rate_seconds"] == 900.0
+
+
+def _plan_jobs(spark, plan) -> int:
+    """Spark jobs started while ``plan()`` builds a DataFrame, before
+    any action runs, counted by job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"plan-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "plan only")
+    try:
+        plan()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("read", [
+    lambda s: api.measurements_continuous_corrected(
+        s, 6, "2023-01-06 00:00:00", "2023-01-06 01:00:00"),
+    lambda s: api.measurements_continuous_corrected(
+        s, 10, "2022-08-01 00:00:00", "2022-08-01 03:00:00"),
+    lambda s: api.measurements_calculated_daily(
+        s, 9, "2023-01-01", "2023-01-31"),
+], ids=["compound_priority_6", "compound_expr_10", "daily_9"])
+def test_read_plans_with_one_catalog_job(spark, store, read):
+    """One catalog collect types the series and every member it
+    reaches; no job runs per compound level."""
+    assert _plan_jobs(spark, lambda: read(store)) == 1

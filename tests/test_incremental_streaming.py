@@ -62,6 +62,32 @@ def test_expand_changed_ranges_fans_out(spark, compound_members):
     assert ids == [2, 6, 10, 20]
 
 
+@pytest.fixture()
+def member_chain(spark):
+    # series k + 1 has series k as its only member: 40 series, 39 links
+    return spark.createDataFrame(
+        [(k + 1, k) for k in range(1, 40)],
+        ["timeseries_id", "member_timeseries_id"],
+    )
+
+
+def test_downstream_closure_has_no_depth_cap(spark, member_chain):
+    seeds = spark.createDataFrame([(1,)], ["id"])
+    got = sorted(
+        r["id"] for r in downstream_closure(member_chain, seeds).collect())
+    assert got == list(range(1, 41))
+
+
+def test_expand_changed_ranges_has_no_depth_cap(spark, member_chain):
+    changes = spark.createDataFrame(
+        [(1, "2024-01-01 00:00:00", "2024-01-02 00:00:00")],
+        ["timeseries_id", "min_dt", "max_dt"],
+    )
+    out = expand_changed_ranges(changes, member_chain)
+    assert sorted(r["timeseries_id"] for r in out.collect()) == list(
+        range(1, 41))
+
+
 def test_incremental_refresh_touches_only_changed_slices(spark):
     meas = spark.createDataFrame(
         [(1, f"2024-01-0{d} 0{h}:00:00", float(10 * d + h))
