@@ -154,22 +154,6 @@ class _BitReader:
         self.pos = 0  # bit position
         self.nbits = len(data) * 8
 
-    def get_bits(self, n: int) -> int:
-        if n == 0:
-            return 0
-        p = self.pos
-        # strict end check (p + n, not just p): a magnitude/receive
-        # read is NOT prefix-free, so one that starts in-bounds but
-        # extends past the last real bit would silently consume zero
-        # padding and fabricate a coefficient — truncation mid-value
-        # must quarantine like every other corrupt-input path
-        if p + n > self.nbits:
-            raise ValueError("JPEG entropy data exhausted")
-        b = p >> 3
-        chunk = int.from_bytes(self.data[b:b + 4], "big")
-        self.pos = p + n
-        return (chunk >> (32 - (p & 7) - n)) & ((1 << n) - 1)
-
 
 def _destuff(blob: bytes, pos: int):
     """Entropy bytes from ``pos`` to the next true marker: 0xFF00

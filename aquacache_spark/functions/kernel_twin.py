@@ -4,11 +4,9 @@ A *kernel twin* is an Arrow/numpy re-expression of an existing JVM
 DataFrame operator that produces BIT-IDENTICAL output — the engine
 keeps the declarative plan as the semantic source of truth and offers
 the twin where the JVM expression tree re-does per-instance work a
-per-task kernel can amortize (measured wins:
-hashed_linear_score_frame at ~10x, mann_kendall_blas).  The proven
-instances shared an implicit
-contract; this module makes it explicit so the next twin is a page,
-not a module:
+per-task kernel can amortize (the measured instance:
+mann_kendall_blas).  This module makes the twin contract explicit so
+the next twin is a page, not a module:
 
 1. **Exact-integer envelope** (:func:`assert_exact_int64`): all
    accumulation is integer over pre-quantized values, and the twin
@@ -24,10 +22,7 @@ not a module:
    input is NULL), and must ship NULLs back through Arrow as masked
    values — pandas nullable dtypes, never NaN-in-float or None-in-
    object (which crash or coerce in the Arrow cast).
-3. **Per-task cache cap** (:func:`TaskCache`): task-lifetime
-   memoization is the twin's speed source, but the cache must be
-   bounded and correctness must never depend on a hit.
-4. **Bit-parity pin** (:func:`assert_bit_parity`): every twin ships a
+3. **Bit-parity pin** (:func:`assert_bit_parity`): every twin ships a
    unit test asserting exact equality (NULLs included, floats by
    bit pattern) between the JVM operator and the twin on a fixture
    that exercises the NULL arms — the template the existing twins'
@@ -65,26 +60,6 @@ def nullable_series(values: Sequence, dtype: str):
     import pandas as pd
 
     return pd.array(values, dtype=dtype)
-
-
-class TaskCache(dict):
-    """Bounded task-lifetime memo: inserts stop at ``cap``; lookups
-    always work.  Correctness must never depend on a hit — the cap
-    only bounds executor memory under adversarial key cardinality."""
-
-    def __init__(self, cap: int = 1 << 20):
-        super().__init__()
-        self.cap = cap
-
-    _MISS = object()
-
-    def get_or(self, key, compute):
-        v = self.get(key, TaskCache._MISS)
-        if v is TaskCache._MISS:
-            v = compute(key)
-            if len(self) < self.cap:
-                self[key] = v
-        return v
 
 
 def assert_bit_parity(jvm_df, twin_df, keys: Sequence[str]) -> None:

@@ -96,18 +96,6 @@ def hll_registers(
     )
 
 
-def hll_merge(a: DataFrame, b: DataFrame,
-              group_cols: list[str] | None = None) -> DataFrame:
-    """Union two register frames: register-wise MAX — the HLL merge
-    property (sketch of A ∪ B without rescanning either side)."""
-    group_cols = group_cols or []
-    return (
-        a.unionByName(b)
-        .groupBy(*group_cols, "__idx")
-        .agg(F.max("__M").alias("__M"))
-    )
-
-
 def hll_finalize(
     regs: DataFrame,
     group_cols: list[str] | None = None,
@@ -366,115 +354,3 @@ def histogram_quantiles(
                       edge.alias("upper_edge"),
                       F.col("n").cast("long").alias("n"))
 
-
-def distribution_psi(
-    df: DataFrame,
-    value_col: str,
-    group_col: str,
-    lo: float = 0.0,
-    hi: float = 2048.0,
-    bins: int = 32,
-) -> DataFrame:
-    """Population stability index of each group's value distribution
-    against the whole corpus — the standard drift screen between data
-    batches/sources: PSI = sum_i (p_i - q_i) ln(p_i / q_i) over a
-    fixed-bound histogram, Laplace-smoothed (+1 per bin) so empty
-    bins stay finite.
-
-    Scale shape: two partial-aggregable histogram aggregations
-    (group x bins and bins), a (groups x bins) spine built by
-    crossJoin of two CATALOG-sized frames, everything downstream
-    bounded by groups*bins rows. Cross-engine exactness: p and q are
-    exact integer ratios cast to double identically on both engines;
-    each ln term is quantized to nano-units before the sum, so the
-    PSI is an exact integer total (the repo's transcendental-parity
-    idiom).
-
-    Output: (group, n_rows, psi). PSI > 0.25 is the conventional
-    "major shift" threshold; the caller applies its own cut.
-    """
-    b = F.least(
-        F.greatest(
-            F.floor((F.col(value_col).cast("double") - F.lit(lo))
-                    / F.lit(hi - lo) * bins).cast("int"),
-            F.lit(0)),
-        F.lit(bins - 1)).alias("bin")
-    binned = df.where(F.col(value_col).isNotNull()).select(
-        F.col(group_col).alias("grp"), b)
-    gc = binned.groupBy("grp", "bin").agg(
-        F.count(F.lit(1)).alias("cg"))
-    ac = binned.groupBy("bin").agg(F.count(F.lit(1)).alias("ca"))
-    gtot = binned.groupBy("grp").agg(F.count(F.lit(1)).alias("ng"))
-    atot = binned.count()
-    spine = gtot.crossJoin(
-        F.broadcast(binned.sparkSession.range(bins)
-                    .select(F.col("id").cast("int").alias("bin"))))
-    full = (
-        spine.join(gc, ["grp", "bin"], "left")
-        .join(F.broadcast(ac), "bin", "left")
-        .withColumn("cg", F.coalesce("cg", F.lit(0)))
-        .withColumn("ca", F.coalesce("ca", F.lit(0)))
-    )
-    p = (F.col("cg") + 1).cast("double") / (F.col("ng") + bins) \
-        .cast("double")
-    q = (F.col("ca") + 1).cast("double") / F.lit(float(atot + bins))
-    term = F.floor((p - q) * F.log(p / q) * 1e9 + F.lit(0.5)) \
-        .cast("long")
-    return (
-        full.withColumn("__t", term)
-        .groupBy("grp", "ng")
-        .agg((F.sum("__t") / F.lit(1e9)).alias("psi"))
-        .select(F.col("grp").alias(group_col),
-                F.col("ng").cast("long").alias("n_rows"),
-                "psi")
-    )
-
-
-def kmv_bottom_k(
-    df: DataFrame,
-    key_col: str,
-    group_col: str | None = None,
-    k: int = 64,
-) -> DataFrame:
-    """K-minimum-values sketch: the k smallest md5 hashes of the
-    DISTINCT keys per group — simultaneously a deterministic uniform
-    sample of the key space AND a distinct-count estimator
-    (Bar-Yossef 2002): with v_k = the k-th smallest hash mapped to
-    (0, 1), D ≈ (k - 1) / v_k.
-
-    Scale shape: one distinct-key aggregation (partial-aggregable),
-    then a per-group bottom-k — a WindowGroupLimit rank filter, never
-    a global sort; state is k hashes per group forever, and two
-    groups' sketches merge by union + re-take-k (the bottom-k of a
-    union is the bottom-k of the merged bottom-ks). Estimation is
-    exact integer hash arithmetic until one final division.
-
-    Output: one row per surviving key — (group, key, h, rank) — plus
-    the estimate columns repeated per group (n_seen exact distinct at
-    test scale is NOT computed; the estimator is the point).
-    """
-    from pyspark.sql import Window as W
-
-    gcols = [group_col] if group_col else []
-    h = md5_int(F.col(key_col).cast("string"), 15)
-    dk = df.select(*gcols, F.col(key_col)).distinct() \
-        .withColumn("h", h)
-    w = W.partitionBy(*gcols).orderBy("h", key_col)
-    ranked = dk.withColumn("rank", F.row_number().over(w)) \
-        .where(F.col("rank") <= k)
-    # v_k as an exact integer over the 60-bit hash space; estimate
-    # computed in one double division (identical both engines)
-    vk = ranked.groupBy(*gcols).agg(
-        F.max("h").alias("__vk"),
-        F.count(F.lit(1)).alias("__got"))
-    est = F.when(
-        F.col("__got") < k,  # fewer keys than k: count is exact
-        F.col("__got").cast("double")
-    ).otherwise(
-        F.lit(float(k - 1)) * F.lit(float(1 << 60)) /
-        F.col("__vk").cast("double"))
-    out = ranked.join(F.broadcast(vk), gcols) if gcols else \
-        ranked.crossJoin(F.broadcast(vk))
-    return out.select(
-        *gcols, key_col, "h", "rank",
-        est.alias("distinct_estimate"))

@@ -159,182 +159,3 @@ def upsert_features(
         .drop("__ex_id")
     )
 
-
-def zorder_key(
-    x: Column,
-    y: Column,
-    x_min: float,
-    x_max: float,
-    y_min: float,
-    y_max: float,
-    bits: int = 16,
-) -> Column:
-    """Morton (Z-order) key for two coordinates: quantize each axis to
-    ``bits`` levels over FIXED bounds, then interleave the bits — the
-    space-filling-curve sort key that makes 2-D locality survive a 1-D
-    file layout.
-
-    The 100 TB use: sorting/bucketing a spatial table (stations,
-    raster tiles, masked points) by this key before writing means a
-    bbox query's row-group min/max statistics prune to O(perimeter)
-    z-runs instead of scanning every file — the Delta/Iceberg
-    OPTIMIZE ZORDER layout, reproduced as a plain codegen'd sort key
-    (no UDF, no shuffle beyond the write's own sort). Bounds are
-    explicit arguments (data-independent, so the key is stable as the
-    table grows); out-of-range coordinates clamp to the edge cells.
-
-    Integer-exact in both engines: quantization is floor() of a
-    bounded double expression, interleave is shifts/masks of bigints.
-    """
-    span_x = x_max - x_min
-    span_y = y_max - y_min
-    n = (1 << bits) - 1
-    qx = F.floor(
-        F.least(F.greatest((x - F.lit(x_min)) / F.lit(span_x),
-                           F.lit(0.0)), F.lit(1.0)) * n
-    ).cast("long")
-    qy = F.floor(
-        F.least(F.greatest((y - F.lit(y_min)) / F.lit(span_y),
-                           F.lit(0.0)), F.lit(1.0)) * n
-    ).cast("long")
-    z = F.lit(0).cast("long")
-    for i in range(bits):
-        z = (
-            z
-            + F.shiftleft(F.shiftright(qx, i).bitwiseAND(F.lit(1)), 2 * i)
-            + F.shiftleft(F.shiftright(qy, i).bitwiseAND(F.lit(1)),
-                          2 * i + 1)
-        )
-    return z
-
-
-def _hilbert_machine() -> dict:
-    """Derive the classic 4-state Hilbert-curve machine from the
-    textbook xy2d rotation loop (public algorithm — the Wikipedia /
-    'Programming the Hilbert curve' form): processing bit planes
-    MSB-first, the pending swap/reflect transform of the lower bits
-    takes only 4 values, so (state, bit-pair) -> (quadrant digit,
-    next state) is a 16-entry table. Derived, not transcribed, so it
-    cannot rot; tests pin it against the reference loop point by
-    point."""
-    ident = {(a, b): (a, b) for a in (0, 1) for b in (0, 1)}
-    swap = {(a, b): (b, a) for a in (0, 1) for b in (0, 1)}
-    rswap = {(a, b): (1 - b, 1 - a) for a in (0, 1) for b in (0, 1)}
-
-    def compose(u, t):
-        return {k: u[t[k]] for k in t}
-
-    def tkey(t):
-        return tuple(sorted(t.items()))
-
-    states = {tkey(ident): 0}
-    frontier = [ident]
-    table: dict = {}
-    while frontier:
-        t = frontier.pop()
-        sid = states[tkey(t)]
-        for xb in (0, 1):
-            for yb in (0, 1):
-                rx, ry = t[(xb, yb)]
-                u = ident if ry == 1 else (swap if rx == 0 else rswap)
-                nt = compose(u, t)
-                if tkey(nt) not in states:
-                    states[tkey(nt)] = len(states)
-                    frontier.append(nt)
-                table[(sid, 2 * xb + yb)] = ((3 * rx) ^ ry,
-                                             states[tkey(nt)])
-    return table
-
-
-HILBERT_TABLE = _hilbert_machine()
-
-
-def hilbert_key(
-    x: Column,
-    y: Column,
-    x_min: float,
-    x_max: float,
-    y_min: float,
-    y_max: float,
-    bits: int = 16,
-) -> Column:
-    """Hilbert-curve key — :func:`zorder_key`'s stronger sibling: the
-    Hilbert curve is the space-filling order with NO long jumps
-    (consecutive keys are always grid neighbors), so bbox row-group
-    pruning wastes fewer runs than Morton's quadrant seams; it is
-    what Delta's liquid clustering uses where OPTIMIZE ZORDER used
-    Morton.
-
-    Same quantization contract as zorder_key (fixed explicit bounds,
-    edge clamping). The MSB-first 4-state machine is evaluated as an
-    UNROLLED arithmetic chain with the 16-entry table PACKED into two
-    integer literals (2 bits per entry): digit(k) = (DP >> 2k) & 3
-    via exact power-of-two double division, likewise next-state. The
-    state thread is a single chain (each step references the previous
-    state exactly once through its key expression), so the collapsed
-    projection stays O(bits^2) nodes and the whole key is one
-    WholeStageCodegen projection — the first cut ran this recurrence
-    through an F.aggregate lambda with 16-way CASEs and was ~700x
-    slower (interpreted HOF per element); measured, not guessed."""
-    span_x = x_max - x_min
-    span_y = y_max - y_min
-    n = (1 << bits) - 1
-    qx = F.floor(
-        F.least(F.greatest((x - F.lit(x_min)) / F.lit(span_x),
-                           F.lit(0.0)), F.lit(1.0)) * n
-    ).cast("long")
-    qy = F.floor(
-        F.least(F.greatest((y - F.lit(y_min)) / F.lit(span_y),
-                           F.lit(0.0)), F.lit(1.0)) * n
-    ).cast("long")
-    dp = 0
-    np_ = 0
-    for (st, pair), (d, ns) in HILBERT_TABLE.items():
-        k = st * 4 + pair
-        dp |= d << (2 * k)
-        np_ |= ns << (2 * k)
-    state = F.lit(0).cast("long")
-    out = F.lit(0).cast("long")
-    for i in range(bits - 1, -1, -1):
-        xb = F.shiftright(qx, i).bitwiseAND(F.lit(1))
-        yb = F.shiftright(qy, i).bitwiseAND(F.lit(1))
-        key = state * 4 + xb * 2 + yb
-        p4 = F.pow(F.lit(4.0), key.cast("double"))
-        digit = F.floor(F.lit(float(dp)) / p4).cast("long") % 4
-        state = F.floor(F.lit(float(np_)) / p4).cast("long") % 4
-        out = out * 4 + digit
-    return out
-
-
-def hilbert_sql_ctes(qx: str, qy: str, bits: int,
-                     carry: str) -> str:
-    """The DuckDB mirror of :func:`hilbert_key`'s fold: one chained
-    CTE per bit plane (hstep{i}), each advancing (st, hd) via the
-    same derived 16-entry table. ``carry``: comma-led column list to
-    thread through (e.g. ``c_custkey``). The final CTE is
-    ``hstep0``; read ``hd`` from it."""
-    digit_case = " ".join(
-        f"WHEN {st * 4 + pair} THEN {d}"
-        for (st, pair), (d, ns) in sorted(HILBERT_TABLE.items()))
-    next_case = " ".join(
-        f"WHEN {st * 4 + pair} THEN {ns}"
-        for (st, pair), (d, ns) in sorted(HILBERT_TABLE.items()))
-    out = [f"""
-    , hstep{bits} AS (
-      SELECT {carry}, {qx} AS hqx, {qy} AS hqy,
-             CAST(0 AS BIGINT) AS st, CAST(0 AS BIGINT) AS hd
-      FROM q
-    )"""]
-    for i in range(bits - 1, -1, -1):
-        out.append(f"""
-    , hstep{i} AS (
-      SELECT {carry}, hqx, hqy,
-             CAST(CASE kk {next_case} END AS BIGINT) AS st,
-             hd * 4 + CAST(CASE kk {digit_case} END AS BIGINT) AS hd
-      FROM (
-        SELECT *, st * 4
-               + (CAST(floor(hqx / pow(2.0, {i})) AS BIGINT) % 2) * 2
-               + CAST(floor(hqy / pow(2.0, {i})) AS BIGINT) % 2 AS kk
-        FROM hstep{i + 1})
-    )""")
-    return "".join(out)

@@ -1,10 +1,10 @@
 """Query registry package: one module per query family, the shared
 registry/fixture core in ``_common``. Importing this package registers
-all 207 queries (each module registers into ``_common.QUERIES`` /
+all 177 queries (each module registers into ``_common.QUERIES`` /
 ``_common.ORACLES`` at import time).
 
 ``core`` and ``hydrology`` hold the AquaCache surface. ``dedup``,
-``ann``, ``web`` and ``multimodal`` hold text, trend, graph and
+``ann``, ``web`` and ``multimodal`` hold text, trend, spatial and
 media-store queries plus what is left of the LLM-corpus dedup,
 ANN-search, web-crawl and media-decoding tiers: one perfbench batch
 probe each (``minhash_lsh_pairs``, ``embedding_cosine_topk``,

@@ -252,36 +252,3 @@ def _raster_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
         "value",
     )
 
-
-_GATE_ORACLE = f"""
-    WITH m AS (
-      SELECT doc_id,
-             CASE CAST(doc_id % 4 AS INT)
-               WHEN 0 THEN 'web' WHEN 1 THEN 'code'
-               WHEN 2 THEN 'wiki' ELSE 'books' END AS domain,
-             length(text) AS n_chars,
-             length(text) - length(regexp_replace(text, '[^a-zA-Z0-9 ]',
-                                                  '', 'g')) AS n_punct,
-             string_split(lower(text), ' ') AS ltoks
-      FROM documents
-    ), q AS (
-      SELECT doc_id, domain,
-             {R('(least(n_chars / 200.0, 1.0)'
-                " + least(CAST(len(list_filter(ltoks, t -> t IN"
-                " ('the','a','an','and','or','of','to','in','is','it',"
-                "'that','for','on','with','as','are','was','at','by','be')))"
-                ' AS DOUBLE) / greatest(len(ltoks), 1) * 5.0, 1.0)'
-                ' + (1.0 - least(CAST(n_punct AS DOUBLE)'
-                ' / greatest(n_chars, 1) * 4.0, 1.0))) / 3.0', 6)} AS quality
-      FROM m
-    ), ranked AS (
-      SELECT *,
-             row_number() OVER (PARTITION BY domain
-                                ORDER BY quality DESC, doc_id) AS rnk,
-             count(*) OVER (PARTITION BY domain) AS n
-      FROM q
-    )
-    SELECT doc_id, domain, quality, CAST(rnk AS BIGINT) AS rnk,
-           rnk <= CAST(ceil(0.3 * n) AS BIGINT) AS kept
-    FROM ranked
-"""

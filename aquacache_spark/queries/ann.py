@@ -1,5 +1,5 @@
 """Ranking, trend and nearest-neighbour queries: as-of joins,
-Mann-Kendall family, nearest-station search, retrieval metrics.
+Mann-Kendall family, nearest-station search.
 
 The module holds one embedding-search-tier query,
 ``embedding_cosine_topk``: perfbench's batch probe, named in
@@ -26,7 +26,6 @@ from ._common import (  # noqa: F401
     SparkSession,
     Window,
     _FIXDIR,
-    _GATE_ORACLE,
     _RASTER_CELLS_SQL,
     _REFRESH_LADDER_AVG,
     _exact_mean_of,
@@ -491,118 +490,6 @@ def seasonal_mann_kendall_q(spark: SparkSession,
     out = seasonal_mann_kendall(
         monthly, ["series"], "mon", "date", "value")
     return _round(out, {"var_total": 6, "z": 6})
-
-
-# ---------------------------------------------------------------------------
-# Retrieval evaluation metrics: MRR, precision@5, DCG@5 / NDCG@5 with
-# graded relevance — the eval tier for the BM25/hybrid stack. DCG
-# weights 1/log2(r+1) are INLINED literals (no cross-engine log2);
-# each DCG term is micro-quantized before summing; the ideal ranking
-# is a per-query window over the judged pool (judgment-count bounded).
-# ---------------------------------------------------------------------------
-
-_DCG_W = {1: 1.0, 2: 0.6309297535714575, 3: 0.5,
-          4: 0.43067655807339306, 5: 0.38685280723454163}
-
-_DCG_W_CASE = "CASE r " + " ".join(
-    f"WHEN {r} THEN CAST({w!r} AS DOUBLE)" for r, w in _DCG_W.items()
-) + " ELSE CAST(0 AS DOUBLE) END"
-
-_REL_SQL = ("CASE WHEN (d * 7 + q) % 97 = 0 THEN 2 "
-            "WHEN (d * 7 + q) % 11 = 0 THEN 1 ELSE 0 END")
-
-_RANKMETRICS_ORACLE = f"""
-    WITH queries AS (
-      SELECT unnest(generate_series(0, 9)) AS q
-    ), run AS (
-      SELECT q, r, (q * 37 + r * 13) % 200 AS d
-      FROM queries CROSS JOIN (SELECT unnest(generate_series(1, 10)) AS r) t
-    ), judged AS (
-      SELECT q, r, d, {_REL_SQL} AS rel FROM run
-    ), pool AS (
-      SELECT q, d, {_REL_SQL} AS rel
-      FROM queries CROSS JOIN (SELECT unnest(generate_series(0, 199)) AS d) t
-    ), ideal AS (
-      SELECT q, rel,
-             row_number() OVER (PARTITION BY q
-                                ORDER BY rel DESC, d ASC) AS r
-      FROM pool
-    ), idcg AS (
-      SELECT q, sum(CAST(floor((power(2, rel) - 1) * ({_DCG_W_CASE})
-                               * 1000000 + CAST(0.5 AS DOUBLE))
-                         AS BIGINT)) AS iu
-      FROM ideal WHERE r <= 5 GROUP BY 1
-    ), agg AS (
-      SELECT q,
-             min(CASE WHEN rel > 0 THEN r END) AS first_rel,
-             sum(CASE WHEN r <= 5 AND rel > 0 THEN 1 ELSE 0 END) AS hits5,
-             sum(CASE WHEN r <= 5 THEN
-                   CAST(floor((power(2, rel) - 1) * ({_DCG_W_CASE})
-                              * 1000000 + CAST(0.5 AS DOUBLE)) AS BIGINT)
-                 ELSE 0 END) AS du
-      FROM judged GROUP BY 1
-    )
-    SELECT a.q AS query_id,
-           {R("coalesce(CAST(1 AS DOUBLE) / a.first_rel,"
-              " CAST(0 AS DOUBLE))", 6)} AS mrr,
-           {R("CAST(a.hits5 AS DOUBLE) / CAST(5 AS DOUBLE)", 6)}
-             AS p_at_5,
-           {R("a.du / CAST(1e6 AS DOUBLE)", 6)} AS dcg5,
-           {R("i.iu / CAST(1e6 AS DOUBLE)", 6)} AS idcg5,
-           {R("CASE WHEN i.iu > 0 THEN CAST(a.du AS DOUBLE) / i.iu"
-              " ELSE CAST(0 AS DOUBLE) END", 6)} AS ndcg5
-    FROM agg a JOIN idcg i ON i.q = a.q
-"""
-
-
-@register("retrieval_ranking_metrics", oracle=_RANKMETRICS_ORACLE)
-def retrieval_ranking_metrics_q(spark: SparkSession,
-                                sf_dir: str) -> DataFrame:
-    """MRR / P@5 / DCG@5 / NDCG@5 over a deterministic 10-query run
-    with graded judgments (ideal ranking from the 200-doc judged
-    pool)."""
-    qd = F.col("q") * 37 + F.col("r") * 13
-    run = _ldf(spark, [(q,) for q in range(10)], "q int").crossJoin(
-        _ldf(spark, [(r,) for r in range(1, 11)], "r int")).select(
-        "q", "r", (qd % 200).alias("d"))
-    rel_of = (
-        F.when((F.col("d") * 7 + F.col("q")) % 97 == 0, 2)
-        .when((F.col("d") * 7 + F.col("q")) % 11 == 0, 1)
-        .otherwise(0))
-    judged = run.withColumn("rel", rel_of)
-    w_case = None
-    for r, wgt in _DCG_W.items():
-        w_case = (F.when(F.col("r") == r, F.lit(wgt)) if w_case is None
-                  else w_case.when(F.col("r") == r, F.lit(wgt)))
-    w_case = w_case.otherwise(F.lit(0.0))
-    term = F.floor((F.pow(F.lit(2.0), F.col("rel")) - 1) * w_case
-                   * 1e6 + F.lit(0.5)).cast("long")
-    agg = judged.groupBy("q").agg(
-        F.min(F.when(F.col("rel") > 0, F.col("r"))).alias("first_rel"),
-        F.sum(F.when((F.col("r") <= 5) & (F.col("rel") > 0), 1)
-              .otherwise(0)).alias("hits5"),
-        F.sum(F.when(F.col("r") <= 5, term).otherwise(0)).alias("du"),
-    )
-    pool = _ldf(spark, [(q,) for q in range(10)], "q int").crossJoin(
-        _ldf(spark, [(d,) for d in range(200)], "d int")).withColumn(
-        "rel", rel_of)
-    wi = Window.partitionBy("q").orderBy(F.desc("rel"), F.asc("d"))
-    ideal = pool.withColumn("r", F.row_number().over(wi)) \
-        .where(F.col("r") <= 5)
-    idcg = ideal.groupBy("q").agg(F.sum(term).alias("iu"))
-    out = agg.join(idcg, "q").select(
-        F.col("q").alias("query_id"),
-        F.coalesce(F.lit(1.0) / F.col("first_rel"), F.lit(0.0))
-        .alias("mrr"),
-        (F.col("hits5").cast("double") / 5.0).alias("p_at_5"),
-        (F.col("du") / F.lit(1e6)).alias("dcg5"),
-        (F.col("iu") / F.lit(1e6)).alias("idcg5"),
-        F.when(F.col("iu") > 0,
-               F.col("du").cast("double") / F.col("iu"))
-        .otherwise(F.lit(0.0)).alias("ndcg5"),
-    )
-    return _round(out, {"mrr": 6, "p_at_5": 6, "dcg5": 6, "idcg5": 6,
-                        "ndcg5": 6})
 
 
 # ---------------------------------------------------------------------------

@@ -22,7 +22,6 @@ from ._common import (  # noqa: F401
     SparkSession,
     Window,
     _FIXDIR,
-    _GATE_ORACLE,
     _RASTER_CELLS_SQL,
     _REFRESH_LADDER_AVG,
     _exact_mean_of,
@@ -2674,10 +2673,10 @@ def countmin_heavy_hitters_q(spark: SparkSession,
     docs = spread_scan(_t(spark, sf_dir, "documents"), "doc_id")
     tok = docs.select(
         F.explode(tokens(F.lower(F.col("text")))).alias("tokk"))
-    # r12 single-derivation (see verified_heavy_hitters): the CMS build
-    # and the exact side share one token-count aggregate — tokenize
-    # executes once and the d md5 counter hashes run per token TYPE,
-    # weighted (cell sums identical in exact long arithmetic)
+    # r12 single-derivation: the CMS build and the exact side share one
+    # token-count aggregate — tokenize executes once and the d md5
+    # counter hashes run per token TYPE, weighted (cell sums identical
+    # in exact long arithmetic)
     cnts = tok.groupBy("tokk").agg(F.count(F.lit(1)).alias("__c"))
     sk = countmin_build(cnts, "tokk", d=4, w=1024, weight_col="__c")
     probes = _ldf(spark, [(w,) for w in _CMS_PROBES], "word string")
@@ -4035,45 +4034,6 @@ def share_with_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Training-data tier: within-doc token-distribution entropy (the
-# low-entropy-boilerplate signal), exact integer micro-nat accumulation.
-# ---------------------------------------------------------------------------
-
-_ENTROPY_ORACLE = f"""
-    WITH toks AS (
-      SELECT doc_id, unnest(string_split(lower(text), ' ')) AS tok
-      FROM documents
-    ), counts AS (
-      SELECT doc_id, tok, count(*) AS c FROM toks GROUP BY 1, 2
-    ), totals AS (
-      SELECT doc_id, sum(c) AS n FROM counts GROUP BY 1
-    ), per_doc AS (
-      SELECT counts.doc_id,
-             sum(CAST(floor(
-               (CAST(c AS DOUBLE) / n) * ln(CAST(c AS DOUBLE) / n)
-               * 1000000 + 0.5) AS BIGINT)) AS acc,
-             CAST(count(*) AS INT) AS n_distinct
-      FROM counts JOIN totals USING (doc_id)
-      GROUP BY counts.doc_id
-    )
-    SELECT doc_id, {R('-CAST(acc AS DOUBLE) / 1000000.0', 6)} AS entropy,
-           n_distinct
-    FROM per_doc
-"""
-
-
-@register("token_entropy", oracle=_ENTROPY_ORACLE)
-def token_entropy_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-doc token entropy + distinct count via staged array
-    columns (functions/text.token_entropy_cols)."""
-    from ..functions.text import token_entropy_cols
-
-    docs = _t(spark, sf_dir, "documents")
-    out = token_entropy_cols(docs).select("doc_id", "entropy", "n_distinct")
-    return _round(out, {"entropy": 6})
-
-
-# ---------------------------------------------------------------------------
 # §2.6/§2.11 adjust() end to end (R/adjust_functions.R:18-250,540-620):
 # incoming point-wise QC codes -> run-length segments (prevailing until
 # the next change) -> overlay onto the existing interval table (new
@@ -5008,224 +4968,6 @@ def chain_components_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         b, (b["id_b"] == a["id_a"] + 1)
         & ((a["id_a"] + 1) % 97 != 0))
     return connected_components(edges, ids)
-
-
-# ---------------------------------------------------------------------------
-# Z-order layout key (operators/vector.zorder_key): the OPTIMIZE-ZORDER
-# story as a plain codegen'd sort key — bbox queries over a z-sorted table
-# prune on
-# row-group min/max stats instead of scanning every file.
-# ---------------------------------------------------------------------------
-
-_Z_INTERLEAVE = " + ".join(
-    f"(((qx >> {i}) & 1) << {2 * i}) + (((qy >> {i}) & 1) << {2 * i + 1})"
-    for i in range(16))
-
-_ZORDER_ORACLE = f"""
-    WITH pts AS (
-      SELECT c_custkey,
-             50.0 + (c_custkey % 2000) / CAST(100 AS DOUBLE) AS lat,
-             -140.0 + (c_custkey % 3500) / CAST(100 AS DOUBLE) AS lon
-      FROM customer
-    ), q AS (
-      SELECT c_custkey,
-             CAST(floor(least(greatest(
-               (lat - CAST(50 AS DOUBLE)) / CAST(20 AS DOUBLE),
-               CAST(0 AS DOUBLE)), CAST(1 AS DOUBLE)) * 65535)
-               AS BIGINT) AS qx,
-             CAST(floor(least(greatest(
-               (lon - CAST(-140 AS DOUBLE)) / CAST(35 AS DOUBLE),
-               CAST(0 AS DOUBLE)), CAST(1 AS DOUBLE)) * 65535)
-               AS BIGINT) AS qy
-      FROM pts
-    )
-    SELECT c_custkey, CAST({_Z_INTERLEAVE} AS BIGINT) AS zkey
-    FROM q
-"""
-
-
-@register("zorder_layout_key", oracle=_ZORDER_ORACLE)
-def zorder_layout_key_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """16-bit-per-axis Morton key over synthesized station
-    coordinates (fixed Yukon-ish bounds; out-of-range clamps)."""
-    from ..operators.vector import zorder_key
-
-    c = _t(spark, sf_dir, "customer")
-    lat = F.lit(50.0) + (F.col("c_custkey") % 2000) / F.lit(100.0)
-    lon = F.lit(-140.0) + (F.col("c_custkey") % 3500) / F.lit(100.0)
-    return c.select(
-        "c_custkey",
-        zorder_key(lat, lon, 50.0, 70.0, -140.0, -105.0, bits=16)
-        .alias("zkey"))
-
-
-# ---------------------------------------------------------------------------
-# Model-based quality scoring (functions/text.hashed_linear_score):
-# the DCLM/FineWeb-Edu filtering shape — unigram+bigram feature
-# hashing into 4096 buckets, tf-weighted dot product with a weight
-# vector (deterministic stand-in here; broadcast a trained model in
-# production), sigmoid squash. Pure codegen, map-only.
-# ---------------------------------------------------------------------------
-
-_MODEL_QUALITY_ORACLE = f"""
-    WITH base AS (
-      SELECT doc_id, string_split(lower(text), ' ') AS toks,
-             len(string_split(lower(text), ' ')) AS n
-      FROM documents
-    ), grams AS (
-      SELECT doc_id,
-             unnest(list_concat(
-               toks,
-               CASE WHEN n >= 2
-                    THEN list_transform(range(1, n),
-                           i -> toks[i] || ' ' || toks[i + 1])
-                    ELSE [] END)) AS gm
-      FROM base
-    ), feats AS (
-      SELECT doc_id,
-             CAST('0x' || substr(md5(gm), 1, 13) AS BIGINT) % 4096 AS b
-      FROM grams
-    ), scored AS (
-      SELECT doc_id,
-             CAST(count(*) AS BIGINT) AS n_features,
-             sum(CAST(floor(
-               ((b * 2654435761) % 2001 - 1000)
-                 / CAST(1000 AS DOUBLE) * 1000000.0
-                 + CAST(0.5 AS DOUBLE)) AS BIGINT)) AS q
-      FROM feats GROUP BY 1
-    )
-    SELECT doc_id, n_features,
-           {R('1 / (1 + exp(-(q / 1000000.0 / n_features)))', 6)}
-             AS quality_prob
-    FROM scored
-"""
-
-
-@register("model_quality_score", oracle=_MODEL_QUALITY_ORACLE)
-def model_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hashed linear quality classifier over the documents corpus.
-
-    r12 optimization: routed through the Arrow kernel
-    (functions/text.hashed_linear_score_frame) instead of the JVM
-    expression fold — the fold md5-hashes every gram INSTANCE and was
-    the #2 standalone bench cost (5.0s at sf0.1 vs 0.48s for the
-    kernel, same oracle); bit-parity between the two paths stays
-    pinned at the operator level
-    (tests/test_blas_kernels.py::
-    test_model_quality_blas_matches_jvm_exact),
-    so the JVM fold remains covered without burning 4.5s of bench
-    wall per run (guide §4.2: hand whole batches to native code)."""
-    from ..functions.text import hashed_linear_score_frame
-
-    docs = _t(spark, sf_dir, "documents")
-    out = hashed_linear_score_frame(docs, num_buckets=4096)
-    return _round(out, {"quality_prob": 6})
-
-
-@register("model_quality_score_blas", oracle=_MODEL_QUALITY_ORACLE)
-def model_quality_score_blas(spark: SparkSession,
-                             sf_dir: str) -> DataFrame:
-    """Arrow-kernel twin of model_quality_score (same DuckDB oracle):
-    unique-gram hash caching per task instead of per-instance md5 in
-    the JVM fold — the r10 BLAS-kernel pattern applied to the #1 bench
-    query. Integer-exact weight sums, identical sigmoid."""
-    from ..functions.text import hashed_linear_score_frame
-
-    docs = _t(spark, sf_dir, "documents")
-    out = hashed_linear_score_frame(docs, num_buckets=4096)
-    return _round(out, {"quality_prob": 6})
-
-
-# ---------------------------------------------------------------------------
-# Corpus datacard (the dataset-documentation rollup): per source —
-# doc/token counts (whitespace + BPE-ish), within-source exact-dup
-# doc count, mean heuristic quality (per-doc micro-quantized then
-# exact-summed), and English share via the EXACT integer form of the
-# stopword threshold (20*hits >= n_tokens == ratio >= 0.05).
-# ---------------------------------------------------------------------------
-
-_DATACARD_ORACLE = f"""
-    WITH base AS (
-      SELECT doc_id,
-             'src-' || CAST(doc_id % 5 AS VARCHAR) AS source,
-             len(string_split(text, ' ')) AS ws_tokens,
-             len(regexp_extract_all(text,
-                 ' ?[A-Za-z]+| ?[0-9]+| ?[^A-Za-z0-9 ]+')) AS bpe_tokens,
-             md5(regexp_replace(lower(text), '\\s+', ' ', 'g')) AS fp,
-             CAST(floor(((least(length(text) / 200.0, 1.0)
-               + least(CAST(len(list_filter(string_split(lower(text), ' '),
-                   t -> t IN ('the','a','an','and','or','of','to','in','is',
-                              'it','that','for','on','with','as','are','was',
-                              'at','by','be'))) AS DOUBLE)
-                 / greatest(len(string_split(lower(text), ' ')), 1)
-                 * 5.0, 1.0)
-               + (1.0 - least((length(text) - length(regexp_replace(
-                   text, '[^a-zA-Z0-9 ]', '', 'g')))
-                 / greatest(length(text), 1) * 4.0, 1.0))) / 3.0)
-               * 1000000 + 0.5) AS BIGINT) AS ql,
-             (20 * len(list_filter(string_split(lower(text), ' '),
-                   t -> t IN ('the','a','an','and','or','of','to','in','is',
-                              'it','that','for','on','with','as','are','was',
-                              'at','by','be')))
-              >= greatest(len(string_split(lower(text), ' ')), 1)) AS en
-      FROM documents
-    ), dup AS (
-      SELECT source, fp, count(*) AS m FROM base GROUP BY 1, 2
-    ), dupdocs AS (
-      SELECT source, CAST(sum(CASE WHEN m > 1 THEN m ELSE 0 END)
-                          AS BIGINT) AS n_dup_docs
-      FROM dup GROUP BY 1
-    )
-    SELECT b.source,
-           CAST(count(*) AS BIGINT) AS n_docs,
-           CAST(sum(b.ws_tokens) AS BIGINT) AS total_ws_tokens,
-           CAST(sum(b.bpe_tokens) AS BIGINT) AS total_bpe_tokens,
-           d.n_dup_docs,
-           {R('sum(b.ql) / 1000000.0 / count(*)', 6)} AS mean_quality,
-           {R('CAST(sum(CASE WHEN b.en THEN 1 ELSE 0 END) AS DOUBLE)'
-              ' / count(*)', 6)} AS en_share
-    FROM base b JOIN dupdocs d ON d.source = b.source
-    GROUP BY b.source, d.n_dup_docs
-"""
-
-
-@register("corpus_datacard", oracle=_DATACARD_ORACLE)
-def corpus_datacard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source dataset-documentation rollup."""
-    from pyspark.sql import Window as W
-
-    from ..functions.text import (EN_STOPWORDS, bpe_token_count,
-                                 fingerprint, quality_score, tokens)
-
-    docs = _t(spark, sf_dir, "documents")
-    t = F.col("text")
-    toks = tokens(F.lower(t))
-    hits = F.size(F.filter(
-        toks, lambda x: F.array_contains(
-            F.array(*[F.lit(w) for w in EN_STOPWORDS]), x)))
-    base = docs.select(
-        F.concat(F.lit("src-"), (F.col("doc_id") % 5).cast("string"))
-        .alias("source"),
-        F.size(tokens(t)).cast("long").alias("ws_tokens"),
-        bpe_token_count(t).cast("long").alias("bpe_tokens"),
-        fingerprint(t).alias("fp"),
-        F.floor(quality_score(t) * 1e6 + F.lit(0.5)).cast("long")
-        .alias("ql"),
-        (20 * hits >= F.greatest(F.size(toks), F.lit(1))).alias("en"),
-    )
-    base = base.withColumn(
-        "__m", F.count(F.lit(1)).over(W.partitionBy("source", "fp")))
-    out = base.groupBy("source").agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum("ws_tokens").alias("total_ws_tokens"),
-        F.sum("bpe_tokens").alias("total_bpe_tokens"),
-        F.sum(F.when(F.col("__m") > 1, 1).otherwise(0)).cast("long")
-        .alias("n_dup_docs"),
-        (F.sum("ql") / 1e6 / F.count(F.lit(1))).alias("mean_quality"),
-        (F.sum(F.col("en").cast("int")).cast("double")
-         / F.count(F.lit(1))).alias("en_share"),
-    )
-    return _round(out, {"mean_quality": 6, "en_share": 6})
 
 
 # ---------------------------------------------------------------------------
@@ -6530,936 +6272,6 @@ def results_metadata_fr_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """discrete.results_metadata_fr (patch_43.R:529-652)."""
     return _join_arrays(_results_meta(spark, sf_dir, "fr"),
                         ("projets", "réseaux"))
-
-
-# ---------------------------------------------------------------------------
-# Ordered funnel (operators/funnel.funnel_steps): first-match greedy
-# view -> click -> purchase chain with a 72h per-step window — chained
-# conditional min-aggregations on user_id, no per-user sort window.
-# ---------------------------------------------------------------------------
-
-_FUNNEL_ORACLE = """
-    WITH e AS (
-      SELECT user_id, event_type, CAST(ts AS TIMESTAMP) AS ts FROM events
-    ), s1 AS (
-      SELECT user_id, min(ts) AS t1 FROM e
-      WHERE event_type = 'view' GROUP BY 1
-    ), s2 AS (
-      SELECT e.user_id, min(ts) AS t2 FROM e JOIN s1 USING (user_id)
-      WHERE event_type = 'click' AND ts > t1
-        AND ts <= t1 + INTERVAL 72 HOUR
-      GROUP BY 1
-    ), s3 AS (
-      SELECT e.user_id, min(ts) AS t3 FROM e JOIN s2 USING (user_id)
-      WHERE event_type = 'purchase' AND ts > t2
-        AND ts <= t2 + INTERVAL 72 HOUR
-      GROUP BY 1
-    )
-    SELECT s1.user_id, t1, t2, t3,
-           CAST(1 + CASE WHEN t2 IS NULL THEN 0 ELSE 1 END
-                  + CASE WHEN t3 IS NULL THEN 0 ELSE 1 END AS INT)
-             AS steps_completed
-    FROM s1 LEFT JOIN s2 USING (user_id) LEFT JOIN s3 USING (user_id)
-"""
-
-
-@register("event_funnel", oracle=_FUNNEL_ORACLE)
-def event_funnel_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """view -> click -> purchase funnel, 72h conversion window per
-    step, first-match greedy semantics."""
-    from ..operators.funnel import funnel_steps
-
-    ev = _t(spark, sf_dir, "events")
-    return funnel_steps(ev, ["view", "click", "purchase"],
-                        max_gap_hours=72)
-
-
-# ---------------------------------------------------------------------------
-# HLL set algebra (operators/sketch.hll_merge): union by register-wise
-# max — the merge property — and intersection by inclusion-exclusion,
-# WITHOUT rescanning either side. The distinct-token overlap between
-# two sources from three bounded sketches.
-# ---------------------------------------------------------------------------
-
-def _hll_est_sql(tag: str, src_filter: str) -> str:
-    a = _HLL_ALPHA
-    return f"""
-    tok_{tag} AS (
-      SELECT unnest(string_split(lower(text), ' ')) AS tokk
-      FROM documents WHERE {src_filter}
-    ), regs_{tag} AS (
-      SELECT hh % 256 AS idx,
-             max(CASE WHEN hh // 256 > 0
-                      THEN 52 - (length(bin(hh // 256)) - 1)
-                      ELSE 53 END) AS m
-      FROM (SELECT CAST('0x' || substr(md5(tokk), 1, 15) AS BIGINT) AS hh
-            FROM tok_{tag})
-      GROUP BY 1
-    ), est_{tag} AS (
-      SELECT CASE WHEN CAST({a!r} AS DOUBLE) * 256.0 * 256.0
-                       * 9007199254740992.0 / s_units <= 640.0
-                       AND zeros > 0
-                  THEN 256.0 * ln(CAST(256 AS DOUBLE) / zeros)
-                  ELSE CAST({a!r} AS DOUBLE) * 256.0 * 256.0
-                       * 9007199254740992.0 / s_units END AS est
-      FROM (SELECT 256 - count(*) AS zeros,
-                   sum(CAST(1 AS BIGINT) << (53 - m))
-                     + (256 - count(*)) * (CAST(1 AS BIGINT) << 53)
-                     AS s_units
-            FROM regs_{tag})
-    )"""
-
-
-_HLL_IX_ORACLE = f"""
-    WITH {_hll_est_sql('a', "source = 'src0'")},
-    {_hll_est_sql('b', "source = 'src1'")},
-    {_hll_est_sql('u', "source IN ('src0', 'src1')")}
-    SELECT {R('a.est', 6)} AS est_a, {R('b.est', 6)} AS est_b,
-           {R('u.est', 6)} AS est_union,
-           {R('a.est + b.est - u.est', 6)} AS est_intersection
-    FROM est_a a, est_b b, est_u u
-"""
-
-
-@register("hll_token_intersection", oracle=_HLL_IX_ORACLE)
-def hll_token_intersection_q(spark: SparkSession,
-                             sf_dir: str) -> DataFrame:
-    """Distinct-token overlap between src0 and src1 via HLL
-    inclusion-exclusion; the union sketch is a register-wise MERGE of
-    the two per-source sketches (never a rescan)."""
-    from ..functions.text import tokens
-    from ..operators.sketch import hll_finalize, hll_merge, hll_registers
-
-    docs = _t(spark, sf_dir, "documents")
-
-    def regs_of(src):
-        tok = docs.where(F.col("source") == src).select(
-            F.explode(tokens(F.lower(F.col("text")))).alias("tokk"))
-        return hll_registers(tok, "tokk", [], 8)
-
-    ra, rb = regs_of("src0"), regs_of("src1")
-    ea = hll_finalize(ra, [], 8).select(F.col("estimate").alias("est_a"))
-    eb = hll_finalize(rb, [], 8).select(F.col("estimate").alias("est_b"))
-    eu = hll_finalize(hll_merge(ra, rb), [], 8).select(
-        F.col("estimate").alias("est_union"))
-    out = (
-        ea.crossJoin(F.broadcast(eb)).crossJoin(F.broadcast(eu))
-        .withColumn("est_intersection",
-                    F.col("est_a") + F.col("est_b") - F.col("est_union"))
-    )
-    return _round(out, {"est_a": 6, "est_b": 6, "est_union": 6,
-                        "est_intersection": 6})
-
-
-# ---------------------------------------------------------------------------
-# Code-data quality filters (The Stack / StarCoder family): line-length
-# profile, alphanumeric and alphabetic-token fractions, digit fraction,
-# markup density, auto-generated-marker detection, and the composite
-# keep gate. Map-only codegen; the fixture deterministically mutates a
-# slice of the documents (injected newlines + hex dumps, markup, and
-# AUTO-GENERATED headers) so every gate fires both ways.
-# ---------------------------------------------------------------------------
-
-_CODE_FILTERS_ORACLE = f"""
-    WITH mut AS (
-      SELECT doc_id,
-             (CASE WHEN doc_id % 11 = 0
-                   THEN 'AUTO-GENERATED do not edit' || chr(10) ELSE ''
-              END)
-             || text
-             || (CASE WHEN doc_id % 7 = 0
-                      THEN chr(10) || '<div><span>'
-                           || repeat('0xDEADBEEF4242 ', 40)
-                      ELSE '' END) AS t
-      FROM documents
-    ), m AS (
-      SELECT doc_id, t,
-             string_split(t, chr(10)) AS lines,
-             string_split(t, ' ') AS toks,
-             length(t) AS nch
-      FROM mut
-    ), r AS (
-      SELECT doc_id,
-             list_max(list_transform(lines, l -> length(l)))
-               AS max_line_len,
-             CAST(list_sum(list_transform(lines, l -> length(l)))
-                  AS DOUBLE) / len(lines) AS mean_line_len,
-             CAST(length(regexp_replace(t, '[^A-Za-z0-9]', '', 'g'))
-                  AS DOUBLE) / greatest(nch, 1) AS alnum_frac,
-             CAST(len(list_filter(toks,
-                                  x -> regexp_matches(x, '[A-Za-z]')))
-                  AS DOUBLE) / greatest(len(toks), 1) AS alpha_tok_frac,
-             CAST(length(regexp_replace(t, '[^0-9]', '', 'g'))
-                  AS DOUBLE) / greatest(nch, 1) AS digit_frac,
-             CAST(nch - length(replace(t, '<', '')) AS DOUBLE)
-               / greatest(nch, 1) AS tag_density,
-             (lower(t) LIKE '%auto-generated%'
-              OR lower(t) LIKE '%do not edit%') AS autogen
-      FROM m
-    )
-    SELECT doc_id, CAST(max_line_len AS BIGINT) AS max_line_len,
-           {R('mean_line_len', 6)} AS mean_line_len,
-           {R('alnum_frac', 6)} AS alnum_frac,
-           {R('alpha_tok_frac', 6)} AS alpha_tok_frac,
-           {R('digit_frac', 6)} AS digit_frac,
-           {R('tag_density', 6)} AS tag_density,
-           autogen,
-           (max_line_len <= 600 AND alnum_frac >= 0.25
-            AND alpha_tok_frac >= 0.25 AND digit_frac <= 0.3
-            AND tag_density <= 0.01 AND NOT autogen) AS kept
-    FROM r
-"""
-
-
-@register("code_quality_filters", oracle=_CODE_FILTERS_ORACLE)
-def code_quality_filters_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The Stack-style source-file gates over deterministically
-    mutated documents."""
-    from ..operators._scan import spread_scan
-
-    # regex + higher-order line/token folds per row otherwise run in
-    # the single scan task of the small parquet (r12, guide §2.5)
-    docs = spread_scan(_t(spark, sf_dir, "documents"), "doc_id")
-    d = F.col("doc_id")
-    t = F.concat(
-        F.when(d % 11 == 0, "AUTO-GENERATED do not edit\n").otherwise(""),
-        F.col("text"),
-        F.when(d % 7 == 0,
-               F.concat(F.lit("\n<div><span>"),
-                        F.repeat(F.lit("0xDEADBEEF4242 "), 40)))
-        .otherwise(""),
-    )
-    lines = F.split(t, "\n")
-    toks = F.split(t, " ")
-    nch = F.length(t)
-    line_lens = F.transform(lines, lambda line: F.length(line))
-    sum_lines = F.aggregate(line_lens, F.lit(0),
-                            lambda acc, x: acc + x)
-    out = docs.select(
-        "doc_id",
-        F.array_max(line_lens).cast("long").alias("max_line_len"),
-        (sum_lines.cast("double") / F.size(lines)).alias("mean_line_len"),
-        (F.length(F.regexp_replace(t, "[^A-Za-z0-9]", "")).cast("double")
-         / F.greatest(nch, F.lit(1))).alias("alnum_frac"),
-        (F.size(F.filter(toks, lambda x: x.rlike("[A-Za-z]")))
-         .cast("double") / F.greatest(F.size(toks), F.lit(1)))
-        .alias("alpha_tok_frac"),
-        (F.length(F.regexp_replace(t, "[^0-9]", "")).cast("double")
-         / F.greatest(nch, F.lit(1))).alias("digit_frac"),
-        ((nch - F.length(F.replace(t, F.lit("<"), F.lit(""))))
-         .cast("double") / F.greatest(nch, F.lit(1)))
-        .alias("tag_density"),
-        (F.lower(t).contains("auto-generated")
-         | F.lower(t).contains("do not edit")).alias("autogen"),
-    )
-    out = out.withColumn(
-        "kept",
-        (F.col("max_line_len") <= 600) & (F.col("alnum_frac") >= 0.25)
-        & (F.col("alpha_tok_frac") >= 0.25) & (F.col("digit_frac") <= 0.3)
-        & (F.col("tag_density") <= 0.01) & ~F.col("autogen"))
-    return _round(out, {"mean_line_len": 6, "alnum_frac": 6,
-                        "alpha_tok_frac": 6, "digit_frac": 6,
-                        "tag_density": 6})
-
-
-# ---------------------------------------------------------------------------
-# Luhn checksum validation (ISO/IEC 7812): the PII-redaction upgrade —
-# 16-digit sequences are only credit-card candidates if the check
-# digit verifies, cutting false redactions. The checksum is a 16-term
-# closed form (per-position digit doubling with the >9 fold-back),
-# identical map-only codegen on both engines.
-# ---------------------------------------------------------------------------
-
-def _luhn_terms(col_sql: str, n: int = 16) -> str:
-    """SQL sum of Luhn terms over an n-digit string column: position j
-    (1-based from the left), doubling positions where (n - j) is odd
-    counted from the right -> (n - j + 1) even."""
-    terms = []
-    for j in range(1, n + 1):
-        d = f"CAST(substr({col_sql}, {j}, 1) AS INT)"
-        if (n - j + 1) % 2 == 0:  # doubled position
-            terms.append(f"(CASE WHEN {d} > 4 THEN 2 * {d} - 9"
-                         f" ELSE 2 * {d} END)")
-        else:
-            terms.append(d)
-    return " + ".join(terms)
-
-
-_LUHN_ORACLE = f"""
-    WITH cand AS (
-      SELECT doc_id,
-             lpad(CAST((doc_id * 7919 + 123456789) % 10000000000000000
-                       AS VARCHAR), 16, '0') AS card_candidate
-      FROM documents
-    )
-    SELECT doc_id, card_candidate,
-           ({_luhn_terms('card_candidate')}) % 10 = 0 AS luhn_valid
-    FROM cand
-"""
-
-
-@register("luhn_card_validation", oracle=_LUHN_ORACLE)
-def luhn_card_validation_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Luhn checks over deterministic 16-digit candidates (~10% pass,
-    exactly the true-checksum subset)."""
-    d = F.col("doc_id")
-    cand = F.lpad(
-        ((d * 7919 + 123456789) % (10 ** 16)).cast("string"), 16, "0")
-    digits = F.transform(
-        F.sequence(F.lit(1), F.lit(16)),
-        lambda j: F.substring(F.col("card_candidate"), 1, 16)
-        .substr(j, F.lit(1)).cast("int"))
-    # position j doubled when (16 - j + 1) is even; fold-back 2d-9
-    terms = F.zip_with(
-        digits, F.sequence(F.lit(1), F.lit(16)),
-        lambda x, j: F.when(
-            (17 - j) % 2 == 0,
-            F.when(x > 4, 2 * x - 9).otherwise(2 * x)).otherwise(x))
-    total = F.aggregate(terms, F.lit(0), lambda a, x: a + x)
-    return (
-        _t(spark, sf_dir, "documents")
-        .select("doc_id", cand.alias("card_candidate"))
-        .withColumn("luhn_valid", total % 10 == 0)
-    )
-
-
-# ---------------------------------------------------------------------------
-# Benford's-law screening: first-digit distribution of a value column
-# vs the Benford expectation — the classic tampering/quality signal
-# for measured data. Expected shares are INLINED literals (no
-# cross-engine log10), counts exact, chi-square from exact counts.
-# ---------------------------------------------------------------------------
-
-_BENFORD_SHARES = {
-    1: 0.3010299956639812, 2: 0.17609125905568124,
-    3: 0.12493873660829992, 4: 0.09691001300805642,
-    5: 0.07918124604762482, 6: 0.06694678963061322,
-    7: 0.05799194697768673, 8: 0.05115252244738129,
-    9: 0.04575749056067514,
-}
-
-_BENFORD_CASE = "CASE digit " + " ".join(
-    f"WHEN {d} THEN CAST({s!r} AS DOUBLE)"
-    for d, s in _BENFORD_SHARES.items()) + " END"
-
-_BENFORD_ORACLE = f"""
-    WITH v AS (
-      SELECT o_orderpriority AS series,
-             CAST(substr(CAST(CAST(floor(o_totalprice) AS BIGINT)
-                              AS VARCHAR), 1, 1) AS INT) AS digit
-      FROM orders WHERE o_totalprice >= 1
-    ), counts AS (
-      SELECT series, digit, CAST(count(*) AS BIGINT) AS n_obs
-      FROM v GROUP BY 1, 2
-    ), tot AS (
-      SELECT series, sum(n_obs) AS n FROM counts GROUP BY 1
-    ), ex AS (
-      SELECT c.series, c.digit, c.n_obs,
-             CAST(t.n AS DOUBLE) * ({_BENFORD_CASE}) AS expected
-      FROM counts c JOIN tot t USING (series)
-    ), chi AS (
-      SELECT series,
-             sum(CAST(floor((n_obs - expected) * (n_obs - expected)
-                            / expected * 1000000
-                            + CAST(0.5 AS DOUBLE)) AS BIGINT))
-               / CAST(1e6 AS DOUBLE) AS chi2
-      FROM ex GROUP BY 1
-    )
-    SELECT e.series, e.digit, e.n_obs, {R('e.expected', 6)} AS expected,
-           {R('c.chi2', 4)} AS chi2
-    FROM ex e JOIN chi c USING (series)
-"""
-
-
-@register("benford_digit_screen", oracle=_BENFORD_ORACLE)
-def benford_digit_screen_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """First-digit counts of order totals per priority with Benford
-    expectations and the per-series chi-square statistic."""
-    o = _t(spark, sf_dir, "orders").where(F.col("o_totalprice") >= 1)
-    digit = F.substring(
-        F.floor(F.col("o_totalprice")).cast("long").cast("string"),
-        1, 1).cast("int")
-    counts = o.groupBy(
-        F.col("o_orderpriority").alias("series"), digit.alias("digit")
-    ).agg(F.count(F.lit(1)).cast("long").alias("n_obs"))
-    tot = counts.groupBy("series").agg(F.sum("n_obs").alias("n"))
-    share = F.col("digit")
-    share_expr = None
-    for dgt, s in _BENFORD_SHARES.items():
-        share_expr = (F.when(share == dgt, F.lit(s)) if share_expr is None
-                      else share_expr.when(share == dgt, F.lit(s)))
-    ex = counts.join(F.broadcast(tot), "series").withColumn(
-        "expected", F.col("n").cast("double") * share_expr)
-    # chi2 sums <= 9 doubles per series: quantize contributions to
-    # exact micro-units first so the sum is order-independent
-    contrib = F.floor(
-        (F.col("n_obs") - F.col("expected"))
-        * (F.col("n_obs") - F.col("expected")) / F.col("expected")
-        * 1e6 + F.lit(0.5)).cast("long")
-    chi = ex.withColumn("__c", contrib).groupBy("series").agg(
-        (F.sum("__c") / 1e6).alias("chi2"))
-    out = ex.join(F.broadcast(chi), "series").select(
-        "series", "digit", "n_obs", "expected", "chi2")
-    return _round(out, {"expected": 6, "chi2": 4})
-
-
-# ---------------------------------------------------------------------------
-# SCD Type-2 dimension build: turn an attribute change log into
-# validity intervals (effective_from/effective_to, version, is_current)
-# — the warehouse-standard history table the reference's time-bounded
-# catalogs (owners, approvals, qualifiers) all follow. One per-key
-# window (lead over change times), change-log-bounded.
-# ---------------------------------------------------------------------------
-
-_SCD2_ORACLE = """
-    WITH changes AS (
-      SELECT user_id, CAST(ts AS TIMESTAMP) AS ts,
-             event_type AS attr_value
-      FROM events WHERE event_id % 5 = 0
-    ), dedup AS (
-      -- one change per (key, instant): keep the max attr (stable rule)
-      SELECT user_id, ts, max(attr_value) AS attr_value
-      FROM changes GROUP BY 1, 2
-    ), collapsed AS (
-      -- drop no-op changes (same value as the previous row)
-      SELECT * FROM (
-        SELECT user_id, ts, attr_value,
-               lag(attr_value) OVER (PARTITION BY user_id ORDER BY ts)
-                 AS prev_value
-        FROM dedup)
-      WHERE prev_value IS NULL OR prev_value <> attr_value
-    )
-    SELECT user_id, attr_value,
-           ts AS effective_from,
-           lead(ts) OVER (PARTITION BY user_id ORDER BY ts)
-             AS effective_to,
-           CAST(row_number() OVER (PARTITION BY user_id ORDER BY ts)
-                AS BIGINT) AS version,
-           lead(ts) OVER (PARTITION BY user_id ORDER BY ts) IS NULL
-             AS is_current
-    FROM collapsed
-"""
-
-
-@register("scd2_dimension_build", oracle=_SCD2_ORACLE)
-def scd2_dimension_build_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Attribute change log (every 5th event: user's event_type as the
-    tracked attribute) -> SCD2 validity intervals with no-op changes
-    collapsed and per-instant duplicates resolved deterministically."""
-    ev = _t(spark, sf_dir, "events").where(F.col("event_id") % 5 == 0)
-    changes = ev.groupBy(
-        F.col("user_id"), F.col("ts")
-    ).agg(F.max("event_type").alias("attr_value"))
-    w = Window.partitionBy("user_id").orderBy("ts")
-    collapsed = (
-        changes.withColumn("__prev", F.lag("attr_value").over(w))
-        .where(F.col("__prev").isNull()
-               | (F.col("__prev") != F.col("attr_value")))
-    )
-    w2 = Window.partitionBy("user_id").orderBy("ts")
-    return collapsed.select(
-        "user_id", "attr_value",
-        F.col("ts").alias("effective_from"),
-        F.lead("ts").over(w2).alias("effective_to"),
-        F.row_number().over(w2).cast("long").alias("version"),
-        F.lead("ts").over(w2).isNull().alias("is_current"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# Event co-occurrence lift: per ordered event-type pair, support,
-# confidence, and lift over per-user presence sets — pair mass bounded
-# at n_types^2 after a per-user distinct (the market-basket shape).
-# ---------------------------------------------------------------------------
-
-_LIFT_ORACLE = f"""
-    WITH pres AS (
-      SELECT DISTINCT user_id, event_type FROM events
-    ), nu AS (
-      SELECT count(DISTINCT user_id) AS n FROM events
-    ), singles AS (
-      SELECT event_type, count(*) AS c FROM pres GROUP BY 1
-    ), pairs AS (
-      SELECT a.event_type AS lhs, b.event_type AS rhs, count(*) AS cb
-      FROM pres a JOIN pres b
-        ON b.user_id = a.user_id AND b.event_type != a.event_type
-      GROUP BY 1, 2
-    )
-    SELECT p.lhs, p.rhs, CAST(p.cb AS BIGINT) AS n_both,
-           {R('CAST(p.cb AS DOUBLE) / nu.n', 6)} AS support,
-           {R('CAST(p.cb AS DOUBLE) / sl.c', 6)} AS confidence,
-           {R('CAST(p.cb AS DOUBLE) * nu.n'
-              ' / (CAST(sl.c AS BIGINT) * sr.c)', 6)} AS lift
-    FROM pairs p
-    JOIN singles sl ON sl.event_type = p.lhs
-    JOIN singles sr ON sr.event_type = p.rhs
-    CROSS JOIN nu
-"""
-
-
-@register("event_cooccurrence_lift", oracle=_LIFT_ORACLE)
-def event_cooccurrence_lift_q(spark: SparkSession,
-                              sf_dir: str) -> DataFrame:
-    """Support / confidence / lift for ordered event-type pairs over
-    per-user presence sets."""
-    ev = _t(spark, sf_dir, "events")
-    pres = ev.select("user_id", "event_type").distinct()
-    nu = pres.select("user_id").distinct().agg(
-        F.count(F.lit(1)).alias("n"))
-    singles = pres.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("c"))
-    a = pres.select("user_id", F.col("event_type").alias("lhs"))
-    b = pres.select("user_id", F.col("event_type").alias("rhs"))
-    pairs = a.join(b, "user_id").where(F.col("lhs") != F.col("rhs")) \
-        .groupBy("lhs", "rhs").agg(F.count(F.lit(1)).alias("cb"))
-    out = (
-        pairs
-        .join(F.broadcast(singles.select(
-            F.col("event_type").alias("lhs"), F.col("c").alias("cl"))),
-            "lhs")
-        .join(F.broadcast(singles.select(
-            F.col("event_type").alias("rhs"), F.col("c").alias("cr"))),
-            "rhs")
-        .crossJoin(F.broadcast(nu))
-        .select(
-            "lhs", "rhs", F.col("cb").cast("long").alias("n_both"),
-            (F.col("cb").cast("double") / F.col("n")).alias("support"),
-            (F.col("cb").cast("double") / F.col("cl"))
-            .alias("confidence"),
-            (F.col("cb").cast("double") * F.col("n")
-             / (F.col("cl").cast("long") * F.col("cr"))).alias("lift"),
-        )
-    )
-    return _round(out, {"support": 6, "confidence": 6, "lift": 6})
-
-
-# ---------------------------------------------------------------------------
-# Table profile: the per-column data-quality card (row/null counts,
-# min/max, HLL distinct estimate, top value) in long form — distinct
-# counts ride the bounded HLL sketch (exact COUNT DISTINCT of a
-# web-scale column is the shuffle the sketch tier exists to avoid);
-# the top-1 pass is exact with a deterministic tiebreak.
-# ---------------------------------------------------------------------------
-
-_PROFILE_COLS = ["o_orderpriority", "o_orderstatus", "o_custkey"]
-
-
-def _profile_col_sql(c: str) -> str:
-    a = _HLL_ALPHA
-    return f"""
-    SELECT '{c}' AS column_name,
-           CAST(count(*) AS BIGINT) AS n_rows,
-           CAST(sum(CASE WHEN {c} IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_nulls,
-           CAST(min(CAST({c} AS VARCHAR)) AS VARCHAR) AS min_value,
-           CAST(max(CAST({c} AS VARCHAR)) AS VARCHAR) AS max_value,
-           (SELECT {R(f'''CASE WHEN CAST({a!r} AS DOUBLE) * 256.0 * 256.0
-                       * 9007199254740992.0 / s_units <= 640.0
-                       AND zeros > 0
-                  THEN 256.0 * ln(CAST(256 AS DOUBLE) / zeros)
-                  ELSE CAST({a!r} AS DOUBLE) * 256.0 * 256.0
-                       * 9007199254740992.0 / s_units END''', 2)}
-            FROM (SELECT 256 - count(*) AS zeros,
-                         sum(CAST(1 AS BIGINT) << (53 - m))
-                           + (256 - count(*))
-                             * (CAST(1 AS BIGINT) << 53) AS s_units
-                  FROM (SELECT hh % 256 AS idx,
-                               max(CASE WHEN hh // 256 > 0
-                                        THEN 52 - (length(bin(hh // 256))
-                                                   - 1)
-                                        ELSE 53 END) AS m
-                        FROM (SELECT CAST('0x' || substr(md5(
-                                       CAST({c} AS VARCHAR)), 1, 15)
-                                     AS BIGINT) AS hh
-                              FROM orders WHERE {c} IS NOT NULL)
-                        GROUP BY 1))) AS distinct_est,
-           (SELECT CAST(v AS VARCHAR) FROM (
-              SELECT CAST({c} AS VARCHAR) AS v, count(*) AS cnt
-              FROM orders GROUP BY 1
-              ORDER BY cnt DESC, v ASC LIMIT 1)) AS top_value
-    FROM orders
-"""
-
-
-_PROFILE_ORACLE = " UNION ALL ".join(
-    _profile_col_sql(c) for c in _PROFILE_COLS)
-
-
-@register("table_profile", oracle=_PROFILE_ORACLE)
-def table_profile_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Long-form profile of three orders columns."""
-    from ..operators.sketch import hll_distinct
-
-    o = _t(spark, sf_dir, "orders")
-    parts = []
-    for c in _PROFILE_COLS:
-        s = F.col(c).cast("string")
-        base = o.agg(
-            F.count(F.lit(1)).cast("long").alias("n_rows"),
-            F.sum(F.col(c).isNull().cast("int")).cast("long")
-            .alias("n_nulls"),
-            F.min(s).alias("min_value"),
-            F.max(s).alias("max_value"),
-        ).withColumn("column_name", F.lit(c))
-        est = hll_distinct(o.select(s.alias("__k")), "__k", [], 8) \
-            .select(F.col("estimate").alias("distinct_est"))
-        top = (
-            o.where(F.col(c).isNotNull())
-            .groupBy(s.alias("v")).agg(F.count(F.lit(1)).alias("cnt"))
-            .orderBy(F.desc("cnt"), F.asc("v")).limit(1)
-            .select(F.col("v").alias("top_value"))
-        )
-        parts.append(
-            base.crossJoin(F.broadcast(est)).crossJoin(F.broadcast(top))
-            .select("column_name", "n_rows", "n_nulls", "min_value",
-                    "max_value", "distinct_est", "top_value"))
-    out = parts[0]
-    for x in parts[1:]:
-        out = out.unionByName(x)
-    return _round(out, {"distinct_est": 2})
-
-
-# ---------------------------------------------------------------------------
-# Verified heavy hitters: the standard two-pass shape at scale —
-# pass 1 probes EVERY distinct token against the broadcast count-min
-# sketch (map-side) and keeps est >= threshold candidates (CMS is
-# one-sided, so no true hitter is missed); pass 2 computes EXACT
-# counts for the candidate set only (broadcast semi-restriction before
-# the shuffle — the full-vocabulary exact count never happens).
-# ---------------------------------------------------------------------------
-
-_VHH_ORACLE = """
-    WITH tok AS (
-      SELECT unnest(string_split(lower(text), ' ')) AS tokk
-      FROM documents
-    ), tot AS (
-      SELECT count(*) AS n FROM tok
-    ), cells AS (
-      SELECT i,
-             CAST('0x' || substr(md5(CAST(i AS VARCHAR) || '|' || tokk),
-                                 1, 15) AS BIGINT) % 1024 AS cell
-      FROM tok, (SELECT unnest(range(0, 4)) AS i)
-    ), sk AS (
-      SELECT i AS row, cell, count(*) AS cnt FROM cells GROUP BY 1, 2
-    ), dist AS (
-      SELECT DISTINCT tokk FROM tok
-    ), pc AS (
-      SELECT tokk, i AS row,
-             CAST('0x' || substr(md5(CAST(i AS VARCHAR) || '|' || tokk),
-                                 1, 15) AS BIGINT) % 1024 AS cell
-      FROM dist, (SELECT unnest(range(0, 4)) AS i)
-    ), probed AS (
-      SELECT tokk, min(coalesce(cnt, 0)) AS est
-      FROM pc LEFT JOIN sk USING (row, cell) GROUP BY 1
-    ), cand AS (
-      SELECT tokk, est FROM probed, tot WHERE est * 200 >= tot.n
-    ), exact AS (
-      SELECT t.tokk, count(*) AS exact
-      FROM tok t JOIN cand USING (tokk) GROUP BY 1
-    )
-    SELECT c.tokk AS token, CAST(x.exact AS BIGINT) AS exact_count,
-           CAST(c.est AS BIGINT) AS est_count
-    FROM cand c JOIN exact x USING (tokk) CROSS JOIN tot
-    WHERE x.exact * 200 >= tot.n
-"""
-
-
-@register("verified_heavy_hitters", oracle=_VHH_ORACLE)
-def verified_heavy_hitters_q(spark: SparkSession,
-                             sf_dir: str) -> DataFrame:
-    """Tokens above 0.5% corpus frequency: CMS candidate pass, exact
-    recheck restricted to candidates."""
-    from ..functions.text import tokens
-    from ..operators._scan import spread_scan
-    from ..operators.sketch import countmin_build, countmin_estimate
-
-    # see countmin_heavy_hitters: counter hashes run in the scan stage
-    docs = spread_scan(_t(spark, sf_dir, "documents"), "doc_id")
-    tok = docs.select(
-        F.explode(tokens(F.lower(F.col("text")))).alias("tokk"))
-    # r12 single-derivation (guide §2.4): the token stream was consumed
-    # by FOUR subtrees (total, CMS build, distinct probe list, exact
-    # recheck), each re-tokenizing the corpus — and the CMS build
-    # hashed d md5s PER TOKEN. One token-count aggregate now feeds all
-    # four: tokenize+explode executes once, the sketch builds WEIGHTED
-    # over token TYPES (sum of counts per cell == sum of 1s per
-    # occurrence, exact long arithmetic), the probe list is the
-    # aggregate itself, and the exact count IS the aggregate's count.
-    dtok = tok.groupBy("tokk").agg(F.count(F.lit(1)).alias("__c"))
-    tot = dtok.agg(F.sum("__c").alias("n"))
-    sk = countmin_build(dtok, "tokk", d=4, w=1024, weight_col="__c")
-    probed = countmin_estimate(sk, dtok.select("tokk"), "tokk",
-                               d=4, w=1024)
-    cand = probed.crossJoin(F.broadcast(tot)) \
-        .where(F.col("est") * 200 >= F.col("n")) \
-        .select("tokk", F.col("est").alias("est_count"))
-    exact = (
-        dtok.join(F.broadcast(cand.select("tokk")), "tokk")
-        .select("tokk", F.col("__c").alias("exact_count"))
-    )
-    return (
-        cand.join(exact, "tokk").crossJoin(F.broadcast(tot))
-        .where(F.col("exact_count") * 200 >= F.col("n"))
-        .select(F.col("tokk").alias("token"),
-                F.col("exact_count").cast("long"),
-                F.col("est_count").cast("long"))
-    )
-
-
-# ---------------------------------------------------------------------------
-# Wald-Wolfowitz runs test: randomness screen on daily values around
-# the series median (persistence / regime detection). Median from
-# exact quantized ints (both engines interpolate midpoints
-# identically); exact-median days drop (the standard rule); runs =
-# 1 + sign changes via a lag window; mu/sigma closed form over exact
-# integer counts.
-# ---------------------------------------------------------------------------
-
-_RUNS_ORACLE = """
-    WITH daily AS (
-      SELECT o_orderpriority AS series, CAST(o_orderdate AS DATE) AS d,
-             sum(CAST(floor(o_totalprice * 100
-                            + CAST(0.5 AS DOUBLE)) AS BIGINT)) AS vq
-      FROM orders GROUP BY 1, 2
-    ), med AS (
-      SELECT series, quantile_cont(vq, 0.5) AS m FROM daily GROUP BY 1
-    ), signed AS (
-      SELECT d.series, d.d,
-             CASE WHEN d.vq > me.m THEN 1 ELSE -1 END AS s
-      FROM daily d JOIN med me USING (series)
-      WHERE CAST(d.vq AS DOUBLE) <> me.m
-    ), flips AS (
-      SELECT series, s,
-             CASE WHEN lag(s) OVER (PARTITION BY series ORDER BY d)
-                       IS DISTINCT FROM s THEN 1 ELSE 0 END AS flip
-      FROM signed
-    ), agg AS (
-      SELECT series,
-             CAST(sum(CASE WHEN s = 1 THEN 1 ELSE 0 END) AS BIGINT)
-               AS n1,
-             CAST(sum(CASE WHEN s = -1 THEN 1 ELSE 0 END) AS BIGINT)
-               AS n2,
-             CAST(sum(flip) AS BIGINT) AS runs
-      FROM flips GROUP BY 1
-    ), stat AS (
-      SELECT series, n1, n2, runs,
-             CAST(2 AS DOUBLE) * n1 * n2 / (n1 + n2) + 1 AS mu,
-             sqrt(CAST(2 AS DOUBLE) * n1 * n2
-                  * (CAST(2 AS DOUBLE) * n1 * n2 - n1 - n2)
-                  / (CAST(n1 + n2 AS DOUBLE) * (n1 + n2)
-                     * (n1 + n2 - 1))) AS sigma
-      FROM agg WHERE n1 > 0 AND n2 > 0 AND n1 + n2 > 1
-    )
-    SELECT series, n1, n2, runs, {mu} AS mu_runs,
-           {zz} AS z
-    FROM stat
-""".format(
-    mu=R("mu", 6),
-    zz=R("CASE WHEN sigma > 0 THEN (runs - mu) / sigma END", 6),
-)
-
-
-@register("runs_randomness_test", oracle=_RUNS_ORACLE)
-def runs_randomness_test_q(spark: SparkSession,
-                           sf_dir: str) -> DataFrame:
-    """Wald-Wolfowitz runs z per priority over daily totals."""
-    o = _t(spark, sf_dir, "orders")
-    daily = o.groupBy(
-        F.col("o_orderpriority").alias("series"),
-        F.col("o_orderdate").cast("date").alias("d"),
-    ).agg(F.sum(F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-                .cast("long")).alias("vq"))
-    med = daily.groupBy("series").agg(
-        F.expr("percentile(vq, 0.5)").alias("m"))
-    signed = (daily.join(med, "series")
-              .where(F.col("vq").cast("double") != F.col("m"))
-              .select("series", "d",
-                      F.when(F.col("vq") > F.col("m"), 1)
-                      .otherwise(-1).alias("s")))
-    w = Window.partitionBy("series").orderBy("d")
-    flips = signed.withColumn(
-        "flip",
-        (~F.lag("s").over(w).eqNullSafe(F.col("s"))).cast("int"))
-    agg = flips.groupBy("series").agg(
-        F.sum(F.when(F.col("s") == 1, 1).otherwise(0)).cast("long")
-        .alias("n1"),
-        F.sum(F.when(F.col("s") == -1, 1).otherwise(0)).cast("long")
-        .alias("n2"),
-        F.sum("flip").cast("long").alias("runs"))
-    n1, n2 = F.col("n1"), F.col("n2")
-    mu = F.lit(2.0) * n1 * n2 / (n1 + n2) + 1
-    sigma = F.sqrt(
-        F.lit(2.0) * n1 * n2 * (F.lit(2.0) * n1 * n2 - n1 - n2)
-        / ((n1 + n2).cast("double") * (n1 + n2) * (n1 + n2 - 1)))
-    out = (agg.where((n1 > 0) & (n2 > 0) & (n1 + n2 > 1))
-           .withColumn("mu_runs", mu).withColumn("__sig", sigma)
-           .select("series", "n1", "n2", "runs", "mu_runs",
-                   F.when(F.col("__sig") > 0,
-                          (F.col("runs") - F.col("mu_runs"))
-                          / F.col("__sig")).alias("z")))
-    return _round(out, {"mu_runs": 6, "z": 6})
-
-
-# ---------------------------------------------------------------------------
-# Per-source distribution drift (operators/sketch.distribution_psi):
-# the population stability index of each source's doc-length
-# distribution against the whole corpus — the standard batch-drift
-# screen. Exact integer histogram counts, Laplace smoothing, each ln
-# term nano-quantized before the sum (transcendental-parity idiom).
-# ---------------------------------------------------------------------------
-
-_PSI_ORACLE = """
-    WITH binned AS (
-      SELECT source AS grp,
-             least(greatest(CAST(floor(CAST(n_chars AS DOUBLE)
-                                       / 2048.0 * 32) AS INT), 0), 31)
-               AS bin
-      FROM documents WHERE n_chars IS NOT NULL
-    ), gc AS (
-      SELECT grp, bin, count(*) AS cg FROM binned GROUP BY 1, 2
-    ), ac AS (
-      SELECT bin, count(*) AS ca FROM binned GROUP BY 1
-    ), gtot AS (
-      SELECT grp, count(*) AS ng FROM binned GROUP BY 1
-    ), atot AS (
-      SELECT count(*) AS na FROM binned
-    ), spine AS (
-      SELECT grp, ng, i AS bin
-      FROM gtot CROSS JOIN (SELECT unnest(range(0, 32)) AS i)
-    ), filled AS (
-      SELECT s.grp, s.ng, s.bin,
-             coalesce(gc.cg, 0) AS cg, coalesce(ac.ca, 0) AS ca,
-             atot.na
-      FROM spine s
-      LEFT JOIN gc ON gc.grp = s.grp AND gc.bin = s.bin
-      LEFT JOIN ac ON ac.bin = s.bin
-      CROSS JOIN atot
-    ), terms AS (
-      SELECT grp, ng,
-             CAST(floor((CAST(cg + 1 AS DOUBLE)
-                         / CAST(ng + 32 AS DOUBLE)
-                         - CAST(ca + 1 AS DOUBLE)
-                           / CAST(na + 32 AS DOUBLE))
-                        * ln((CAST(cg + 1 AS DOUBLE)
-                              / CAST(ng + 32 AS DOUBLE))
-                             / (CAST(ca + 1 AS DOUBLE)
-                                / CAST(na + 32 AS DOUBLE)))
-                        * 1e9 + CAST(0.5 AS DOUBLE)) AS BIGINT) AS t
-      FROM filled
-    )
-    SELECT grp AS source, CAST(ng AS BIGINT) AS n_rows,
-           sum(t) / 1e9 AS psi
-    FROM terms GROUP BY 1, 2
-"""
-
-
-@register("source_drift_psi", oracle=_PSI_ORACLE)
-def source_drift_psi_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PSI of each source's doc-length histogram vs the corpus."""
-    from ..operators.sketch import distribution_psi
-
-    docs = _t(spark, sf_dir, "documents")
-    return distribution_psi(docs, "n_chars", "source",
-                            lo=0.0, hi=2048.0, bins=32)
-
-
-# ---------------------------------------------------------------------------
-# KMV bottom-k sketch (operators/sketch.kmv_bottom_k): deterministic
-# uniform key sample + distinct-count estimator in one pass — the
-# mergeable companion to HLL that also RETURNS representatives. Rank
-# filter rides WindowGroupLimit; estimate is exact integer hashes
-# until one final double division.
-# ---------------------------------------------------------------------------
-
-_KMV_ORACLE = """
-    WITH dk AS (
-      SELECT DISTINCT o_orderpriority AS grp,
-             CAST(o_custkey AS VARCHAR) AS key
-      FROM orders
-    ), hashed AS (
-      SELECT grp, key,
-             CAST('0x' || substr(md5(key), 1, 15) AS BIGINT) AS h
-      FROM dk
-    ), ranked AS (
-      SELECT grp, key, h,
-             CAST(row_number() OVER (PARTITION BY grp
-                                     ORDER BY h, key) AS INT) AS rank
-      FROM hashed
-    ), topk AS (
-      SELECT * FROM ranked WHERE rank <= 64
-    ), vk AS (
-      SELECT grp, max(h) AS vkh, count(*) AS got FROM topk GROUP BY 1
-    )
-    SELECT t.grp AS priority, t.key AS custkey, t.h, t.rank,
-           CASE WHEN vk.got < 64 THEN CAST(vk.got AS DOUBLE)
-                ELSE CAST(63 AS DOUBLE)
-                     * CAST(1152921504606846976 AS DOUBLE)
-                     / CAST(vk.vkh AS DOUBLE)
-           END AS distinct_estimate
-    FROM topk t JOIN vk USING (grp)
-"""
-
-
-@register("kmv_distinct_sample", oracle=_KMV_ORACLE)
-def kmv_distinct_sample_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-priority KMV: the 64 minimum customer-key hashes with the
-    (k-1)/v_k distinct estimate attached."""
-    from ..operators.sketch import kmv_bottom_k
-
-    o = _t(spark, sf_dir, "orders").select(
-        F.col("o_orderpriority").alias("priority"),
-        F.col("o_custkey").cast("string").alias("custkey"))
-    return kmv_bottom_k(o, "custkey", group_col="priority", k=64)
-
-
-# ---------------------------------------------------------------------------
-# Hilbert layout key (operators/vector.hilbert_key): the no-long-jump
-# space-filling order (Delta liquid clustering's curve) next to the
-# Morton key — same quantization contract, MSB-first 4-state machine
-# derived from the textbook rotation loop and pinned point-by-point
-# against it; oracle replays the identical 16-entry table as chained
-# per-bit CTEs.
-# ---------------------------------------------------------------------------
-
-def _hilbert_oracle() -> str:
-    from ..operators.vector import hilbert_sql_ctes
-
-    return f"""
-    WITH pts AS (
-      SELECT c_custkey,
-             50.0 + (c_custkey % 2000) / CAST(100 AS DOUBLE) AS lat,
-             -140.0 + (c_custkey % 3500) / CAST(100 AS DOUBLE) AS lon
-      FROM customer
-    ), q AS (
-      SELECT c_custkey,
-             CAST(floor(least(greatest(
-               (lat - CAST(50 AS DOUBLE)) / CAST(20 AS DOUBLE),
-               CAST(0 AS DOUBLE)), CAST(1 AS DOUBLE)) * 65535)
-               AS BIGINT) AS qx,
-             CAST(floor(least(greatest(
-               (lon - CAST(-140 AS DOUBLE)) / CAST(35 AS DOUBLE),
-               CAST(0 AS DOUBLE)), CAST(1 AS DOUBLE)) * 65535)
-               AS BIGINT) AS qy
-      FROM pts
-    )
-    {hilbert_sql_ctes("qx", "qy", 16, "c_custkey")}
-    SELECT c_custkey, hd AS hkey FROM hstep0
-"""
-
-
-@register("hilbert_layout_key", oracle=_hilbert_oracle())
-def hilbert_layout_key_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """16-bit-per-axis Hilbert key over the zorder fixture's station
-    coordinates."""
-    from ..operators.vector import hilbert_key
-
-    c = _t(spark, sf_dir, "customer")
-    lat = F.lit(50.0) + (F.col("c_custkey") % 2000) / F.lit(100.0)
-    lon = F.lit(-140.0) + (F.col("c_custkey") % 3500) / F.lit(100.0)
-    return c.select(
-        "c_custkey",
-        hilbert_key(lat, lon, 50.0, 70.0, -140.0, -105.0, bits=16)
-        .alias("hkey"))
 
 
 # ---------------------------------------------------------------------------

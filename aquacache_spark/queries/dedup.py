@@ -1,6 +1,5 @@
 """Text-corpus queries over ``documents`` (text metrics, language id,
-token quantiles, collocations, Unicode folding, Bloom decontamination),
-plus cross-section and vector queries.
+Unicode folding), plus cross-section and vector queries.
 
 Of the deduplication tier only ``minhash_lsh_pairs`` is left: it is
 perfbench's batch probe (named in ``perfbench/batch_analytics.py``),
@@ -27,7 +26,6 @@ from ._common import (  # noqa: F401
     SparkSession,
     Window,
     _FIXDIR,
-    _GATE_ORACLE,
     _RASTER_CELLS_SQL,
     _REFRESH_LADDER_AVG,
     _exact_mean_of,
@@ -445,48 +443,6 @@ def nhn_gpkg_layer_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Corpus health monitoring: EXACT per-source token/char quantiles
-# (p50/p90/p99, linear interpolation over sorted values — Spark
-# percentile == DuckDB quantile_cont definition; integer inputs keep
-# the interpolation arithmetic deterministic) plus doc counts — the
-# distribution dashboard a curation pipeline watches between rounds.
-_TOKEN_QUANTILES_ORACLE = f"""
-    WITH m AS (
-      SELECT source, len(string_split(text, ' ')) AS n_tok, n_chars
-      FROM documents
-    )
-    SELECT source, count(*) AS n_docs,
-           {R('quantile_cont(n_tok, 0.5)', 6)} AS tok_p50,
-           {R('quantile_cont(n_tok, 0.9)', 6)} AS tok_p90,
-           {R('quantile_cont(n_tok, 0.99)', 6)} AS tok_p99,
-           {R('quantile_cont(n_chars, 0.5)', 6)} AS chars_p50,
-           {R('quantile_cont(n_chars, 0.99)', 6)} AS chars_p99
-    FROM m GROUP BY source
-"""
-
-
-@register("corpus_token_quantiles", oracle=_TOKEN_QUANTILES_ORACLE)
-def corpus_token_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact per-source token/char quantiles (no approx sketch — the
-    exact percentile is a single per-group sort, the right tool at
-    dashboard cardinality; sketches belong on the full-corpus axis)."""
-    from ..functions.text import token_count
-
-    docs = _t(spark, sf_dir, "documents")
-    m = docs.select(
-        "source", token_count(F.col("text")).alias("n_tok"), "n_chars")
-    out = m.groupBy("source").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.percentile("n_tok", F.lit(0.5)).alias("tok_p50"),
-        F.percentile("n_tok", F.lit(0.9)).alias("tok_p90"),
-        F.percentile("n_tok", F.lit(0.99)).alias("tok_p99"),
-        F.percentile("n_chars", F.lit(0.5)).alias("chars_p50"),
-        F.percentile("n_chars", F.lit(0.99)).alias("chars_p99"),
-    )
-    return _round(out, {c: 6 for c in ("tok_p50", "tok_p90", "tok_p99",
-                                       "chars_p50", "chars_p99")})
-
-
 # Stream cross-section hydraulics (inst/patches/patch_54.R views 1-4,
 # operators/cross_section.py): points -> panel calculated hydraulics
 # -> manual/calculated preference -> section rollup (wetted width, net
@@ -739,113 +695,6 @@ def cross_section_discharge(spark: SparkSession, sf_dir: str) -> DataFrame:
                                      "use_calculated_values")})
 
 
-# PMI collocations: pointwise mutual information over adjacent token
-# pairs — the classic corpus collocation extractor ("new york"-class
-# multiword expressions). pmi = ln(c(a,b) * T / (c(a) * c(b))) with T
-# = total bigram positions; min-count floor keeps the head of the
-# distribution; micro-nat quantization makes ranking bit-stable.
-_PMI_ORACLE = f"""
-    WITH base AS (
-      SELECT doc_id, string_split(lower(text), ' ') AS toks
-      FROM documents
-    ), tok AS (
-      SELECT unnest(toks) AS w FROM base
-    ), uni AS (
-      SELECT w, count(*) AS cw FROM tok GROUP BY 1
-    ), pairs AS (
-      SELECT toks[i] AS a, toks[i + 1] AS b
-      FROM base, unnest(generate_series(1, len(toks) - 1)) AS t(i)
-    ), bgc AS (
-      SELECT a, b, count(*) AS cb FROM pairs GROUP BY 1, 2
-    ), tot AS (
-      SELECT count(*) AS t FROM pairs
-    ), scored AS (
-      SELECT bgc.a, bgc.b, bgc.cb,
-             CAST(floor(
-               ln(CAST(bgc.cb AS DOUBLE) * tot.t
-                  / (CAST(ua.cw AS DOUBLE) * ub.cw))
-               * 1000000.0 + CAST(0.5 AS DOUBLE)) AS BIGINT) AS q
-      FROM bgc
-      JOIN uni ua ON ua.w = bgc.a
-      JOIN uni ub ON ub.w = bgc.b
-      CROSS JOIN tot
-      WHERE bgc.cb >= 5
-    ), ranked AS (
-      SELECT a, b, cb, q,
-             row_number() OVER (ORDER BY q DESC, a ASC, b ASC) AS rank
-      FROM scored
-    )
-    SELECT a, b, CAST(cb AS BIGINT) AS pair_count,
-           q / 1000000.0 AS pmi, CAST(rank AS BIGINT) AS rank
-    FROM ranked WHERE rank <= 20
-"""
-
-
-@register("pmi_collocations", oracle=_PMI_ORACLE)
-def pmi_collocations_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-20 adjacent-pair collocations by PMI (min pair count 5).
-
-    Scale: one bigram aggregation (corpus-token shuffle class), uni
-    dims joined on the token key (vocab-sized, AQE decides), total via
-    agg + 1-row broadcast. The final global top-20 ranks a frame
-    already cut to cb >= 5 collocation candidates — bigram-TYPE
-    cardinality, not corpus cardinality; at web scale raise the floor
-    (or rank per shard then merge) before the single-partition sort."""
-    docs = _t(spark, sf_dir, "documents")
-    from ..functions.text import tokens
-    from pyspark.sql import Window as W
-
-    base = docs.select(tokens(F.lower(F.col("text"))).alias("__toks"))
-    base = base.withColumn("__n", F.size("__toks"))
-    toks = F.col("__toks")
-    uni = (
-        base.select(F.explode(toks).alias("w"))
-        .groupBy("w").agg(F.count(F.lit(1)).alias("cw"))
-    )
-    pairs = base.select(
-        F.explode(
-            F.when(
-                F.col("__n") >= 2,
-                F.transform(
-                    F.sequence(F.lit(1), F.col("__n") - 1),
-                    lambda i: F.struct(
-                        F.element_at(toks, i).alias("a"),
-                        F.element_at(toks, i + 1).alias("b")),
-                ),
-            )
-        ).alias("bg"),
-    ).select(F.col("bg.a").alias("a"), F.col("bg.b").alias("b"))
-    bgc = pairs.groupBy("a", "b").agg(F.count(F.lit(1)).alias("cb"))
-    tot = pairs.agg(F.count(F.lit(1)).alias("t"))
-    scored = (
-        bgc.where(F.col("cb") >= 5)
-        .join(uni.select(F.col("w").alias("a"),
-                         F.col("cw").alias("ca")), "a")
-        .join(uni.select(F.col("w").alias("b"),
-                         F.col("cw").alias("cb2")), "b")
-        .crossJoin(F.broadcast(tot))
-        .select(
-            "a", "b", "cb",
-            F.floor(
-                F.log(F.col("cb").cast("double") * F.col("t")
-                      / (F.col("ca").cast("double") * F.col("cb2")))
-                * 1e6 + F.lit(0.5)
-            ).cast("long").alias("__q"),
-        )
-    )
-    # distributed top-k: orderBy+limit compiles to TakeOrderedAndProject
-    # (per-partition heaps, k-row merge) — no single-partition window
-    # over the candidate frame; the rank window then runs on 20 rows
-    top = scored.orderBy(F.desc("__q"), F.asc("a"), F.asc("b")).limit(20)
-    w = W.orderBy(F.desc("__q"), F.asc("a"), F.asc("b"))
-    return (
-        top.withColumn("rank", F.row_number().over(w))
-        .select("a", "b", F.col("cb").alias("pair_count"),
-                (F.col("__q") / F.lit(1e6)).alias("pmi"),
-                F.col("rank").cast("long").alias("rank"))
-    )
-
-
 # ---------------------------------------------------------------------------
 # Unicode punctuation folding (functions/text.fold_text): curly
 # quotes / dashes / ellipsis / NBSP / zero-width folding + whitespace
@@ -905,125 +754,3 @@ def unicode_fold_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", folded.alias("folded"),
         fingerprint(folded).alias("fingerprint"),
     )
-
-
-# ---------------------------------------------------------------------------
-# Bloom-filter decontamination — the 100 TB scale path of exact
-# 5-gram eval-set overlap: the eval set's 5-gram Bloom
-# (32k bigint words — broadcastable at ANY corpus size, no false
-# negatives) probes the training corpus MAP-SIDE; only probabilistic
-# survivors would pay an exact recheck. The bit table is
-# deterministic integer md5 math, so the ORACLE rebuilds the exact
-# same words and probes them — the sketch state itself is
-# differentially verified, FP mass included (exact_hits <= maybe_hits
-# by construction).
-# ---------------------------------------------------------------------------
-
-_BLOOM_DECON_M = 1 << 20
-_BLOOM_DECON_K = 5
-
-_BLOOM_DECON_ORACLE = f"""
-    WITH g5 AS (
-      SELECT DISTINCT doc_id, array_to_string(toks[i + 1 : i + 5], ' ')
-               AS sh
-      FROM (
-        SELECT doc_id, toks,
-               unnest(generate_series(0, greatest(n - 5, 0))) AS i
-        FROM (SELECT doc_id, string_split(lower(text), ' ') AS toks,
-                     len(string_split(lower(text), ' ')) AS n
-              FROM documents)
-      )
-    ), ev AS (
-      SELECT DISTINCT sh FROM g5 WHERE doc_id % 19 = 3
-    ), tr AS (
-      SELECT doc_id, sh FROM g5 WHERE doc_id % 19 != 3
-    ), epos AS (
-      SELECT CAST('0x' || substr(md5('b' || CAST(i AS VARCHAR) || '|'
-                                     || sh), 1, 15) AS BIGINT)
-               % {_BLOOM_DECON_M} AS p
-      FROM ev CROSS JOIN (SELECT unnest(range(0, {_BLOOM_DECON_K}))
-                          AS i)
-    ), bloom AS (
-      SELECT CAST(p // 32 AS INT) AS word_idx,
-             bit_or(CAST(1 AS BIGINT) << CAST(p % 32 AS INT)) AS word
-      FROM epos GROUP BY 1
-    ), tp AS (
-      SELECT doc_id, sh,
-             CAST('0x' || substr(md5('b' || CAST(i AS VARCHAR) || '|'
-                                     || sh), 1, 15) AS BIGINT)
-               % {_BLOOM_DECON_M} AS p
-      FROM tr CROSS JOIN (SELECT unnest(range(0, {_BLOOM_DECON_K}))
-                          AS i)
-    ), tb AS (
-      SELECT doc_id, sh,
-             min(CASE WHEN (coalesce(word, CAST(0 AS BIGINT))
-                            & (CAST(1 AS BIGINT) << CAST(p % 32 AS INT)))
-                      = (CAST(1 AS BIGINT) << CAST(p % 32 AS INT))
-                 THEN 1 ELSE 0 END) AS maybe
-      FROM tp LEFT JOIN bloom ON bloom.word_idx = CAST(p // 32 AS INT)
-      GROUP BY 1, 2
-    ), ex AS (
-      SELECT t.doc_id, t.sh,
-             CASE WHEN e.sh IS NOT NULL THEN 1 ELSE 0 END AS ehit
-      FROM tr t LEFT JOIN ev e USING (sh)
-    )
-    SELECT tb.doc_id,
-           CAST(count(*) AS BIGINT) AS n_grams,
-           CAST(sum(ex.ehit) AS BIGINT) AS exact_hits,
-           CAST(sum(tb.maybe) AS BIGINT) AS maybe_hits,
-           sum(tb.maybe) >= 8 AS flagged
-    FROM tb JOIN ex USING (doc_id, sh)
-    GROUP BY 1
-"""
-
-
-@register("bloom_decontamination", oracle=_BLOOM_DECON_ORACLE)
-def bloom_decontamination_q(spark: SparkSession,
-                            sf_dir: str) -> DataFrame:
-    """Eval-set 5-gram Bloom probe over the training corpus: per-doc
-    distinct grams, exact overlap, probabilistic hits, flag at >= 8 —
-    the sketch bits verified word-for-word through the probe."""
-    from ..functions.text import word_shingles
-    from ..operators._scan import spread_scan
-    from ..operators.sketch import bloom_build, bloom_probe
-
-    # 5-gram construction + k md5 probes per gram are the CPU mass and
-    # run in the scan stage — spread the under-split single-file scan
-    # (r12, guide §2.5; no-op at real split counts)
-    docs = spread_scan(_t(spark, sf_dir, "documents"), "doc_id")
-    evalset = docs.where(F.col("doc_id") % 19 == 3)
-    train = docs.where(F.col("doc_id") % 19 != 3)
-    # array_distinct before the explode: per-doc duplicate grams never
-    # reach the md5 probes or the dedup exchange (pure mass reduction
-    # — the probe-level distinct still owns cross-row dedup)
-    eg = evalset.select(
-        F.explode(F.array_distinct(word_shingles(F.col("text"), 5)))
-        .alias("gram"))
-    bloom = bloom_build(eg, "gram", m_bits=_BLOOM_DECON_M,
-                        k_hashes=_BLOOM_DECON_K)
-    ev_dim = eg.distinct().withColumn("__e", F.lit(1))
-    tg = train.select(
-        "doc_id",
-        F.explode(F.array_distinct(word_shingles(F.col("text"), 5)))
-        .alias("gram"))
-    # r12 (guide §3.2): probe the Bloom map-side; the exact-hit column
-    # comes from ONE broadcast left join of the eval-gram dim (an eval
-    # set is bounded by construction — a benchmark suite, not a
-    # corpus — so the dim broadcasts at any corpus scale). The earlier
-    # union-of-branches shape re-derived the whole k-md5 probe subtree
-    # once per branch (the map mass x2); a single derivation with the
-    # no-false-negative gate expressed as when() is value-identical
-    # (a non-survivor's exact join is NULL by Bloom's contract).
-    probed = bloom_probe(bloom, tg, "gram", m_bits=_BLOOM_DECON_M,
-                         k_hashes=_BLOOM_DECON_K)
-    out = (probed.join(F.broadcast(ev_dim), "gram", "left")
-           .withColumn("__e", F.when(F.col("maybe_present"),
-                                     F.col("__e"))))
-    return out.groupBy("doc_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_grams"),
-        F.sum(F.when(F.col("__e").isNotNull(), 1).otherwise(0))
-        .cast("long").alias("exact_hits"),
-        F.sum(F.col("maybe_present").cast("int")).cast("long")
-        .alias("maybe_hits"),
-        (F.sum(F.col("maybe_present").cast("int")) >= 8)
-        .alias("flagged"))

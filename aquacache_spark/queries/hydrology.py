@@ -22,7 +22,6 @@ from ._common import (  # noqa: F401
     SparkSession,
     Window,
     _FIXDIR,
-    _GATE_ORACLE,
     _RASTER_CELLS_SQL,
     _REFRESH_LADDER_AVG,
     _exact_mean_of,

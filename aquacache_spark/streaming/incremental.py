@@ -24,6 +24,7 @@ data, never table size.
 
 from __future__ import annotations
 
+from functools import reduce
 from typing import Callable, Sequence
 
 from pyspark.sql import DataFrame
@@ -147,6 +148,11 @@ def incremental_daily_refresh(
     Output: recomputed daily rows + ``merge_action`` ∈
     {insert, update, unchanged} — exactly what feeds a Delta MERGE with
     ``WHEN MATCHED AND <changed> THEN UPDATE`` (patch_48.R:401-408).
+    A row is ``unchanged`` only when every non-key column that both
+    the recomputed and the existing frame carry is null-safe equal
+    (the ``IS DISTINCT FROM`` guard over the whole row), so a revision
+    that keeps the daily value but moves min, max, mean or count is an
+    ``update``.
     Rows needing deletion (tail-trim, patch_48.R:113-200) are handled by
     trim_daily_tail.
     """
@@ -163,17 +169,21 @@ def incremental_daily_refresh(
     ).drop("__r_ts", "__d_lo", "__d_hi")
     fresh = rollup(scoped)
 
+    shared = [c for c in fresh.columns
+              if c in existing_daily.columns and c not in (ts_col, date_col)]
     old = existing_daily.select(
         F.col(ts_col), F.col(date_col),
-        F.col(value_col).alias("__old_value"),
+        *(F.col(c).alias(f"__old_{c}") for c in shared),
     )
     joined = fresh.join(old, [ts_col, date_col], "left")
+    same = [F.col(c).eqNullSafe(F.col(f"__old_{c}")) for c in shared]
     action = (
-        F.when(F.col("__old_value").isNull() & F.col(value_col).isNotNull(), "insert")
-        .when(F.col(value_col).eqNullSafe(F.col("__old_value")), "unchanged")
+        F.when(F.col(f"__old_{value_col}").isNull() & F.col(value_col).isNotNull(), "insert")
+        .when(reduce(lambda a, b: a & b, same), "unchanged")
         .otherwise("update")
     )
-    return joined.withColumn("merge_action", action).drop("__old_value")
+    return (joined.withColumn("merge_action", action)
+            .drop(*(f"__old_{c}" for c in shared)))
 
 
 def trim_daily_tail(

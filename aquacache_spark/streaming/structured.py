@@ -1,4 +1,5 @@
-"""Structured Streaming front-end for the ingest path.
+"""Structured Streaming front-end for the ingest path: the landing-zone
+reader, the windowed rollup and the ``foreachBatch`` sink.
 
 The reference is batch-incremental (SURVEY §2.12: no event-time
 watermarks or stream state) — its analog here is the natural Spark
@@ -84,26 +85,3 @@ def start_incremental_sink(
         .start()
     )
 
-
-def sessionize_stream(
-    stream: DataFrame,
-    gap: str = "30 minutes",
-    watermark: str = "1 hour",
-    key_col: str = "timeseries_id",
-) -> DataFrame:
-    """Streaming gap-sessionization: Spark's native session_window
-    with a late-data watermark. Sessions MERGE across micro-batches
-    while open; in append mode a session emits exactly once, when the
-    watermark passes its end — the streaming twin of the batch
-    event_sessionization query, state bounded by the watermark."""
-    return (
-        stream.withWatermark("datetime", watermark)
-        .groupBy(key_col, F.session_window("datetime", gap).alias("win"))
-        .agg(F.count(F.lit(1)).cast("long").alias("n_events"))
-        .select(
-            key_col,
-            F.col("win.start").alias("session_start"),
-            F.col("win.end").alias("session_end"),
-            "n_events",
-        )
-    )

@@ -388,23 +388,6 @@ def _run(base: str, n_series: int, n_points: int) -> None:
     timings["jpeg_decode_512"] = round(time.perf_counter() - t0, 2)
     pin("jpeg_decode_512", 0.6)
 
-    # Hilbert layout key at 3M points: the packed-table unrolled
-    # arithmetic chain must stay a single codegen'd projection — the
-    # F.aggregate/CASE form of this recurrence ran ~700x slower
-    # (interpreted HOF), so the pin guards against regressing into it
-    from aquacache_spark.operators.vector import hilbert_key
-
-    hpts = spark.range(0, 3_000_000).select(
-        (50.0 + (F.col("id") % 2000) / 100.0).alias("lat"),
-        (-140.0 + (F.col("id") % 3500) / 100.0).alias("lon"))
-    t0 = time.perf_counter()
-    hpts.select(hilbert_key(
-        F.col("lat"), F.col("lon"), 50.0, 70.0, -140.0, -105.0,
-        bits=16).alias("hk")).write.format("noop") \
-        .mode("overwrite").save()
-    timings["hilbert_key_3m"] = round(time.perf_counter() - t0, 2)
-    pin("hilbert_key_3m", 8.0)
-
     # sketch tier at volume: state must stay BOUNDED (256 HLL
     # registers / 4x1024 CMS counters / 512 Bloom words) while the key
     # stream grows — 5M keys here, any n at 100 TB; the shuffles carry
@@ -450,28 +433,6 @@ def _run(base: str, n_series: int, n_points: int) -> None:
     # 2M keys into 16384 bits: saturated -> everything maybe-present;
     # the pin is the BOUNDED state + linear probe cost, not FP rate
     assert hits == 1_000_000
-
-    # funnel over 6M events / 500k users: three chained user-keyed
-    # conditional min-aggs, no per-user sort window.
-    from aquacache_spark.operators.funnel import funnel_steps
-
-    fev = spark.range(0, 6_000_000).select(
-        (F.col("id") % 500_000).alias("user_id"),
-        F.when(F.col("id") % 3 == 0, "view")
-        .when(F.col("id") % 3 == 1, "click")
-        .otherwise("purchase").alias("event_type"),
-        F.timestamp_seconds(F.lit(1700000000)
-                            + (F.col("id") / 500_000).cast("long") * 60
-                            ).alias("ts"),
-    )
-    t0 = time.perf_counter()
-    fun = funnel_steps(fev, ["view", "click", "purchase"],
-                       max_gap_hours=24)
-    n_funnel = fun.count()
-    n_full = fun.where(F.col("steps_completed") == 3).count()
-    timings["funnel_6m_events_500k_users"] = round(
-        time.perf_counter() - t0, 2)
-    assert n_funnel == 500_000 and n_full > 0
 
     print(json.dumps({
         "rows": n, "series": n_series,

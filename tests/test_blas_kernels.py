@@ -3,44 +3,6 @@ fixtures whose values sit far from any quantization grid, the two
 paths must agree exactly — pins the semantic relationship that
 input-quantization variance could otherwise silently erode."""
 
-from pyspark.sql import functions as F
-
-
-def test_model_quality_blas_matches_jvm_exact(spark):
-    from aquacache_spark.functions.text import (hashed_linear_score,
-                                                hashed_linear_score_frame,
-                                                tokens)
-
-    rows = [
-        (0, "the quick brown fox jumps over the lazy dog"),
-        (1, "the the the the repeated token stress case"),
-        (2, "single"),
-        (3, ""),  # empty text -> split gives [''], n_features = 1
-        (6, None),  # NULL text -> NULL features / NULL score, no crash
-        (4, "two words"),
-        (5, "a much longer document " * 12 + "with a tail"),
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    toks = tokens(F.lower(F.col("text")))
-    n = F.size(toks)
-    jvm = {r["doc_id"]: (r["n_features"], r["quality_prob"]) for r in
-           docs.select(
-               "doc_id",
-               (n + F.greatest(n - 1, F.lit(0))).cast("long")
-               .alias("n_features"),
-               hashed_linear_score(F.col("text"), num_buckets=4096)
-               .alias("quality_prob")).collect()}
-    kern = {r["doc_id"]: (r["n_features"], r["quality_prob"]) for r in
-            hashed_linear_score_frame(docs, num_buckets=4096).collect()}
-    assert set(jvm) == set(kern)
-    for d in jvm:
-        assert jvm[d][0] == kern[d][0], d            # n_features exact
-        # the integer q and the two IEEE divisions are identical by
-        # construction; only exp() libm ulps could differ — require
-        # bit-equality here (same host libm through JVM and CPython
-        # on these inputs) to pin the contract
-        assert jvm[d][1] == kern[d][1], (d, jvm[d], kern[d])
-
 
 def test_mann_kendall_twin_bit_parity(spark):
     """The kernel-twin contract pin (functions/kernel_twin) for
@@ -93,28 +55,3 @@ def test_mann_kendall_twin_exactness_guard(spark):
         "series string, date date, value double")
     with pytest.raises(Exception, match="exceeds the exact"):
         mann_kendall_blas(daily, ["series"]).collect()
-
-
-def test_task_cache_caches_none_values():
-    """r12 review find: ``get_or`` used ``is None`` as the miss
-    sentinel, so a legitimately-None computed value was recomputed on
-    every lookup — a twin memoizing a nullable result got a silent 0%
-    hit rate. None must cache like any other value, and the cap must
-    still bound inserts."""
-    from aquacache_spark.functions.kernel_twin import TaskCache
-
-    calls = []
-
-    def compute(key):
-        calls.append(key)
-        return None if key == "null-key" else key.upper()
-
-    c = TaskCache(cap=2)
-    assert c.get_or("null-key", compute) is None
-    assert c.get_or("null-key", compute) is None
-    assert calls == ["null-key"]  # second lookup was a HIT
-    assert c.get_or("a", compute) == "A"
-    # cap reached: further inserts skipped, lookups still compute
-    assert c.get_or("b", compute) == "B"
-    assert c.get_or("b", compute) == "B"
-    assert calls == ["null-key", "a", "b", "b"]

@@ -1,17 +1,22 @@
 """Import boundary between the AquaCache package and the leftover
 LLM-corpus dedup, ANN-search, web-crawl and media-decoding tier
-modules.
+modules, and the record of what the cuts toward the AquaCache surface
+deleted.
 
 Static AST scan, no Spark: the tier modules may be imported only by
 the four query modules that host perfbench's batch probes and by each
 other, and each of those query modules registers exactly one query
-that reaches tier code: its probe. The lists may only shrink. Every
-definition in the tier files must be reachable from a registered
-query (module constants count as definitions), so dead tier code
-cannot hide behind a live probe.
+that reaches tier code: its probe. The lists may only shrink. Deleted
+modules stay gone and deleted queries stay unregistered. Every
+definition in the tier files, and in the library files listed in
+``QUERY_REACHED``, must be reachable from a registered query (module
+constants count as definitions; the walk follows plain names, imported
+names and ``module.name`` attribute references), so dead code cannot
+hide behind a live query.
 """
 
 import ast
+import functools
 from pathlib import Path
 
 PKG = Path(__file__).resolve().parent.parent / "aquacache_spark"
@@ -34,6 +39,22 @@ GONE = {
     "aquacache_spark.functions.charset",
     "aquacache_spark.functions.gif",
     "aquacache_spark.functions.avi",
+    "aquacache_spark.operators.funnel",
+}
+# Queries deleted with the generic-analytics, LLM-text and web-graph
+# families: none of them may be registered again.
+GONE_QUERIES = {
+    "event_funnel", "event_cooccurrence_lift", "luhn_card_validation",
+    "benford_digit_screen", "scd2_dimension_build", "table_profile",
+    "source_drift_psi", "runs_randomness_test", "kmv_distinct_sample",
+    "hilbert_layout_key", "zorder_layout_key", "verified_heavy_hitters",
+    "hll_token_intersection", "model_quality_score",
+    "model_quality_score_blas", "event_sessionization",
+    "session_features", "token_entropy", "corpus_datacard",
+    "code_quality_filters", "c4_line_filter", "gopher_quality_gate",
+    "domain_quality_gate", "corpus_token_quantiles", "pmi_collocations",
+    "bloom_decontamination", "retrieval_ranking_metrics",
+    "host_pagerank", "host_link_stats", "incremental_pagerank",
 }
 # Each probe host's queries that reach tier code: perfbench's batch
 # probe only.
@@ -54,6 +75,13 @@ PROBE_ONLY = (
     "aquacache_spark.sources.warc",
     "aquacache_spark.operators.multimodal",
     "aquacache_spark.functions.jpeg",
+)
+# Library files whose every top-level definition must stay reached
+# from a registered query.
+QUERY_REACHED = (
+    "aquacache_spark.operators.sketch",
+    "aquacache_spark.operators.graph",
+    "aquacache_spark.operators.vector",
 )
 
 
@@ -161,7 +189,9 @@ def _top_level_defs(tree: ast.Module) -> dict[str, ast.AST]:
     return out
 
 
-def test_probe_only_tier_definitions_are_reached_from_queries():
+@functools.cache
+def _reached_from_queries() -> frozenset:
+    """(module, name) of every definition a registered query reaches."""
     trees = {m: ast.parse(p.read_text()) for m, p in MODULES.items()}
     defs = {m: _top_level_defs(t) for m, t in trees.items()}
     # module-level ``from x import name [as alias]`` -> (x, name)
@@ -175,12 +205,22 @@ def test_probe_only_tier_definitions_are_reached_from_queries():
     def refs(mod: str, node: ast.AST) -> set:
         """(module, name) definitions one definition names or imports."""
         is_pkg = MODULES[mod].name == "__init__.py"
+        names = dict(aliases[mod])
         out = set()
         for n in ast.walk(node):
             if isinstance(n, ast.ImportFrom):
                 base = _from_base(mod, is_pkg, n)
                 out |= {(base, a.name) for a in n.names
                         if a.name in defs.get(base, {})}
+                names.update({a.asname or a.name: (base, a.name)
+                              for a in n.names})
+        for n in ast.walk(node):
+            if isinstance(n, ast.Attribute) and isinstance(n.value,
+                                                           ast.Name):
+                # ``X.lang_id`` after ``from ..functions import text as X``
+                base, name = names.get(n.value.id, ("", ""))
+                if f"{base}.{name}" in MODULES:
+                    out.add((f"{base}.{name}", n.attr))
             elif isinstance(n, ast.Name):
                 if n.id in defs[mod]:
                     out.add((mod, n.id))
@@ -199,6 +239,29 @@ def test_probe_only_tier_definitions_are_reached_from_queries():
             continue
         seen.add((mod, name))
         stack.extend(refs(mod, defs[mod][name]))
-    unreached = sorted(f"{m}.{name}" for m in PROBE_ONLY
-                       for name in defs[m] if (m, name) not in seen)
-    assert unreached == []
+    return frozenset(seen)
+
+
+def _unreached(mods) -> list[str]:
+    seen = _reached_from_queries()
+    return sorted(
+        f"{m}.{name}" for m in mods
+        for name in _top_level_defs(ast.parse(MODULES[m].read_text()))
+        if (m, name) not in seen)
+
+
+def test_probe_only_tier_definitions_are_reached_from_queries():
+    assert _unreached(PROBE_ONLY) == []
+
+
+def test_listed_library_definitions_are_reached_from_queries():
+    assert _unreached(QUERY_REACHED) == []
+
+
+def test_deleted_queries_stay_unregistered():
+    registered = {
+        _registered(fn) for m, p in MODULES.items()
+        if m.startswith("aquacache_spark.queries.")
+        for fn in ast.parse(p.read_text()).body
+        if isinstance(fn, ast.FunctionDef)}
+    assert registered & GONE_QUERIES == set()

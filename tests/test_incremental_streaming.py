@@ -114,6 +114,48 @@ def test_incremental_refresh_touches_only_changed_slices(spark):
     assert rows["2024-01-02"]["value"] == 20.5
 
 
+def test_incremental_refresh_classifies_on_every_shared_column(spark):
+    """A revision that keeps the daily value but moves min/max (points
+    [1, 2, 3] -> [0, 2, 4]) or only the count (a point equal to the
+    mean added to [1, 3]) must be an update: a value-only comparison
+    leaves stale min/max/count in the daily store."""
+    new_points = {1: [0.0, 2.0, 4.0], 2: [1.0, 2.0, 3.0], 3: [5.0, 5.0],
+                  4: [7.0]}
+    meas = spark.createDataFrame(
+        [(1, f"2024-01-0{d} 0{h}:00:00", v)
+         for d, vs in new_points.items() for h, v in enumerate(vs)],
+        ["timeseries_id", "datetime", "value"],
+    ).withColumn("datetime", F.col("datetime").cast("timestamp"))
+    # the stored rows, written from the old points: day 1 [1, 2, 3],
+    # day 2 [1, 3], day 3 [5, 5] (untouched); day 4 is new
+    existing = spark.createDataFrame(
+        [(1, "2024-01-01", 2.0, 1.0, 3.0, 2.0, 3),
+         (1, "2024-01-02", 2.0, 1.0, 3.0, 2.0, 2),
+         (1, "2024-01-03", 5.0, 5.0, 5.0, 5.0, 2)],
+        "timeseries_id long, date string, value double, min double, "
+        "max double, mean double, count long",
+    ).withColumn("date", F.col("date").cast("date"))
+    changes = spark.createDataFrame(
+        [(1, "2024-01-01 00:00:00", "2024-01-04 23:59:59")],
+        ["timeseries_id", "min_dt", "max_dt"],
+    )
+
+    def rollup(df):
+        return daily_rollup(df, keys=["timeseries_id"], dt_col="datetime",
+                            value_col="value", agg_type="mean")
+
+    out = incremental_daily_refresh(meas, changes, existing, rollup)
+    rows = {str(r["date"]): r for r in out.collect()}
+    assert {d: r["merge_action"] for d, r in rows.items()} == {
+        "2024-01-01": "update", "2024-01-02": "update",
+        "2024-01-03": "unchanged", "2024-01-04": "insert"}
+    assert [rows["2024-01-01"][c] for c in ("value", "min", "max")] == \
+        [2.0, 0.0, 4.0]
+    assert (rows["2024-01-02"]["value"], rows["2024-01-02"]["count"]) == \
+        (2.0, 3)
+    assert not any(c.startswith("__old") for c in out.columns)
+
+
 def test_trim_tail_and_bounds_and_watermarks(spark):
     meas = spark.createDataFrame(
         [(1, "2024-01-01 05:00:00", 1.0), (1, "2024-01-02 07:00:00", 2.0)],
@@ -400,279 +442,3 @@ def test_cdf_drives_scoped_daily_refresh(spark, tmp_path):
     assert rows[(3, "2024-01-03")]["merge_action"] == "insert"
     assert rows[(3, "2024-01-03")]["value"] == 7.0
 
-
-def test_streaming_sessionization_matches_batch(spark, tmp_path):
-    """Append-mode session_window: sessions merge across micro-batches
-    while open and emit exactly once when the watermark passes their
-    end — the emitted set must equal the batch sessionization of the
-    closed history, and the still-open tail must NOT emit."""
-    from aquacache_spark.streaming.structured import (
-        read_measurement_stream, sessionize_stream, start_incremental_sink,
-    )
-
-    landing = tmp_path / "landing"
-    landing.mkdir()
-    ckpt = str(tmp_path / "ckpt")
-
-    def write(rows):
-        spark.createDataFrame(
-            rows, ["timeseries_id", "datetime", "value"],
-        ).withColumn("datetime", F.col("datetime").cast("timestamp")) \
-         .write.mode("append").parquet(str(landing))
-
-    seen = []
-
-    def process(df, epoch_id):
-        seen.append(df.collect())
-
-    stream = read_measurement_stream(spark, str(landing))
-    rolled = sessionize_stream(stream, gap="30 minutes",
-                               watermark="1 hour")
-    q = start_incremental_sink(rolled, process, ckpt,
-                               output_mode="append")
-    try:
-        # two sessions for series 1 (gap > 30 min), one for series 2;
-        # the second event of session A arrives in a LATER micro-batch
-        # and must merge into the open session
-        write([(1, "2024-01-01 00:00:00", 1.0),
-               (2, "2024-01-01 00:05:00", 1.0)])
-        q.processAllAvailable()
-        write([(1, "2024-01-01 00:10:00", 1.0),
-               (1, "2024-01-01 01:30:00", 1.0)])
-        q.processAllAvailable()
-        # watermark pusher: 10:00 - 1h closes everything above
-        write([(1, "2024-01-01 10:00:00", 1.0)])
-        q.processAllAvailable()
-        # far-future tail: closes the 10:00 session, stays open itself
-        write([(2, "2024-01-02 12:00:00", 1.0)])
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    got = {(r["timeseries_id"], str(r["session_start"]),
-            str(r["session_end"]), r["n_events"])
-           for batch in seen for r in batch}
-    assert got == {
-        (1, "2024-01-01 00:00:00", "2024-01-01 00:40:00", 2),
-        (1, "2024-01-01 01:30:00", "2024-01-01 02:00:00", 1),
-        (2, "2024-01-01 00:05:00", "2024-01-01 00:35:00", 1),
-        (1, "2024-01-01 10:00:00", "2024-01-01 10:30:00", 1),
-    }  # the 2024-01-02 session is still open -> not emitted
-
-
-def test_streaming_hll_matches_batch(spark, tmp_path):
-    """The HLL register vector as applyInPandasWithState state: 2^p
-    ints per group FOREVER (bounded-state streaming distinct-count).
-    After two micro-batch phases the last emission per group must
-    equal the batch sketch over the full history — s_units
-    bit-identical, not just the estimate."""
-    from aquacache_spark.operators.sketch import hll_distinct
-    from aquacache_spark.streaming.stateful import streaming_hll_distinct
-
-    landing = tmp_path / "landing"
-    landing.mkdir()
-    ckpt = str(tmp_path / "ckpt")
-    schema = "source string, k string"
-
-    def write(lo, hi):
-        spark.range(lo, hi).select(
-            F.when(F.col("id") % 2 == 0, "a").otherwise("b")
-            .alias("source"),
-            (F.col("id") % 700).cast("string").alias("k"),
-        ).write.mode("append").parquet(str(landing))
-
-    latest = {}
-
-    def process(df, epoch_id):
-        for r in df.collect():
-            latest[r["source"]] = r
-
-    stream = (spark.readStream.format("parquet").schema(schema)
-              .option("maxFilesPerTrigger", 4).load(str(landing)))
-    q = (streaming_hll_distinct(stream, "k", group_col="source")
-         .writeStream.outputMode("update")
-         .option("checkpointLocation", ckpt)
-         .foreachBatch(process).start())
-    try:
-        write(0, 600)
-        q.processAllAvailable()
-        write(600, 2000)
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    full = spark.range(0, 2000).select(
-        F.when(F.col("id") % 2 == 0, "a").otherwise("b").alias("source"),
-        (F.col("id") % 700).cast("string").alias("k"))
-    batch = {r["source"]: r for r in hll_distinct(
-        full, "k", group_cols=["source"]).collect()}
-    for g in ("a", "b"):
-        assert latest[g]["s_units"] == batch[g]["s_units"], g
-        assert latest[g]["estimate"] == batch[g]["estimate"], g
-        assert latest[g]["n_registers"] == batch[g]["n_registers"], g
-
-
-def test_streaming_countmin_matches_batch(spark, tmp_path):
-    """The d x w count-min counter matrix as per-sketch-row streaming
-    state (w bigints per row forever). After two micro-batch phases
-    the final counters must equal the batch sketch counter-for-counter
-    and the probe estimates must agree."""
-    from aquacache_spark.operators.sketch import countmin_build
-    from aquacache_spark.streaming.stateful import streaming_countmin
-
-    landing = tmp_path / "landing"
-    landing.mkdir()
-    ckpt = str(tmp_path / "ckpt")
-    schema = "k string"
-    d, w = 4, 64
-
-    def write(lo, hi):
-        spark.range(lo, hi).select(
-            (F.col("id") % 37).cast("string").alias("k"),
-        ).write.mode("append").parquet(str(landing))
-
-    latest = {}
-
-    def process(df, epoch_id):
-        for r in df.collect():
-            latest[r["row"]] = r
-
-    stream = (spark.readStream.format("parquet").schema(schema)
-              .option("maxFilesPerTrigger", 4).load(str(landing)))
-    q = (streaming_countmin(stream, "k", d=d, w=w)
-         .writeStream.outputMode("update")
-         .option("checkpointLocation", ckpt)
-         .foreachBatch(process).start())
-    try:
-        write(0, 300)
-        q.processAllAvailable()
-        write(300, 1000)
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    full = spark.range(0, 1000).select(
-        (F.col("id") % 37).cast("string").alias("k"))
-    batch = {}
-    for r in countmin_build(full, "k", d=d, w=w).collect():
-        batch.setdefault(r["row"], {})[r["cell"]] = r["cnt"]
-    assert set(latest) == set(range(d))
-    for i in range(d):
-        got = {j: c for j, c in enumerate(latest[i]["counters"]) if c}
-        assert got == batch[i], f"row {i}"
-        assert latest[i]["total"] == 1000 * 1  # every key hits every row
-
-
-def test_streaming_funnel_matches_batch(spark, tmp_path):
-    """Per-user funnel state (len(steps) bigints, no event history)
-    across two in-order micro-batch phases must equal the batch
-    funnel_steps over the full history."""
-    from aquacache_spark.operators.funnel import funnel_steps
-    from aquacache_spark.streaming.stateful import streaming_funnel
-
-    landing = tmp_path / "landing"
-    landing.mkdir()
-    ckpt = str(tmp_path / "ckpt")
-    schema = "user_id long, event_type string, ts timestamp"
-    steps = ["view", "click", "purchase"]
-
-    def frame(lo, hi):
-        return spark.range(lo, hi).select(
-            (F.col("id") % 40).alias("user_id"),
-            F.when(F.col("id") % 3 == 0, "view")
-            .when(F.col("id") % 3 == 1, "click")
-            .otherwise("purchase").alias("event_type"),
-            F.timestamp_seconds(F.lit(1700000000)
-                                + F.col("id") * 1800).alias("ts"),
-        )
-
-    latest = {}
-
-    def process(df, epoch_id):
-        for r in df.collect():
-            latest[r["user_id"]] = r
-
-    # one file per phase + one file per trigger: the in-order-arrival
-    # contract the operator documents (file-source tie order between
-    # same-mtime part files is not name-sorted)
-    stream = (spark.readStream.format("parquet").schema(schema)
-              .option("maxFilesPerTrigger", 1).load(str(landing)))
-    q = (streaming_funnel(stream, steps, max_gap_hours=24)
-         .writeStream.outputMode("update")
-         .option("checkpointLocation", ckpt)
-         .foreachBatch(process).start())
-    try:
-        frame(0, 300).coalesce(1).write.mode("append") \
-            .parquet(str(landing))
-        q.processAllAvailable()
-        frame(300, 900).coalesce(1).write.mode("append") \
-            .parquet(str(landing))
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    batch = {r["user_id"]: r for r in
-             funnel_steps(frame(0, 900), steps,
-                          max_gap_hours=24).collect()}
-    # streaming emits a row per touched user incl. those that never
-    # reached step 1; the batch frame starts at step-1 users
-    stream_started = {u: r for u, r in latest.items()
-                      if r["t1"] is not None}
-    assert set(stream_started) == set(batch)
-    for u, b in batch.items():
-        s = stream_started[u]
-        for c in ("t1", "t2", "t3", "steps_completed"):
-            assert s[c] == b[c], (u, c, s[c], b[c])
-
-
-def test_streaming_kmv_matches_batch(spark, tmp_path):
-    """KMV as bounded streaming state (k hash/key pairs per group
-    forever): after two micro-batch phases the last emission per
-    group equals the batch sketch over the full history — v_k and
-    the estimate bit-identical."""
-    from aquacache_spark.operators.sketch import kmv_bottom_k
-    from aquacache_spark.streaming.stateful import streaming_kmv_distinct
-
-    landing = tmp_path / "landing"
-    landing.mkdir()
-    ckpt = str(tmp_path / "ckpt")
-    schema = "source string, k string"
-
-    def write(lo, hi):
-        spark.range(lo, hi).select(
-            F.when(F.col("id") % 2 == 0, "a").otherwise("b")
-            .alias("source"),
-            (F.col("id") % 900).cast("string").alias("k"),
-        ).write.mode("append").parquet(str(landing))
-
-    latest = {}
-
-    def process(df, epoch_id):
-        for r in df.collect():
-            latest[r["source"]] = r
-
-    stream = (spark.readStream.format("parquet").schema(schema)
-              .option("maxFilesPerTrigger", 4).load(str(landing)))
-    q = (streaming_kmv_distinct(stream, "k", group_col="source")
-         .writeStream.outputMode("update")
-         .option("checkpointLocation", ckpt)
-         .foreachBatch(process).start())
-    try:
-        write(0, 500)
-        q.processAllAvailable()
-        write(500, 2400)
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    full = spark.range(0, 2400).select(
-        F.when(F.col("id") % 2 == 0, "a").otherwise("b").alias("source"),
-        (F.col("id") % 900).cast("string").alias("k"))
-    batch = kmv_bottom_k(full, "k", group_col="source", k=64)
-    bagg = {r["source"]: r for r in batch.groupBy("source").agg(
-        F.max("h").alias("vk"),
-        F.max("distinct_estimate").alias("est")).collect()}
-    for g in ("a", "b"):
-        assert latest[g]["vk"] == bagg[g]["vk"], g
-        assert latest[g]["distinct_estimate"] == bagg[g]["est"], g
-        assert latest[g]["n_kept"] == 64

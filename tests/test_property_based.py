@@ -278,33 +278,3 @@ def test_resolve_mappings_matches_bruteforce(spark, mapping_rows, record_rows):
             assert got[rid] == ("ambiguous", None), rid
         else:
             assert got[rid] == ("matched", hits[0][2]), rid
-
-
-# ---- token entropy fold vs direct computation ----
-
-import math
-
-
-@settings(max_examples=40, deadline=None,
-          suppress_health_check=[HealthCheck.too_slow])
-@given(st.lists(st.sampled_from(["a", "bb", "ccc", "d", "e f"]),
-                min_size=1, max_size=30))
-def test_token_entropy_matches_direct(spark, words):
-    from collections import Counter
-
-    from pyspark.sql import functions as F
-
-    from aquacache_spark.functions.text import token_entropy_cols
-    from aquacache_spark.session import local_df
-
-    text = " ".join(words)
-    row = token_entropy_cols(local_df(spark, [(text,)], ["text"])).first()
-    toks = text.lower().split(" ")
-    counts = Counter(toks)
-    n = len(toks)
-    acc = sum(
-        math.floor((c / n) * math.log(c / n) * 1e6 + 0.5)
-        for c in counts.values()
-    )
-    assert row["n_distinct"] == len(counts)
-    assert abs(row["entropy"] - (-acc / 1e6)) < 1e-12

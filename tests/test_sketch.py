@@ -136,81 +136,3 @@ def test_histogram_quantiles_accuracy_and_merge(spark):
     # is structural (counts are partial-aggregable sums)
     assert qa["n"] == n // 2
 
-
-def test_distribution_psi_closed_form(spark):
-    from aquacache_spark.operators.sketch import distribution_psi
-    import math
-
-    # group "a" mirrors the corpus exactly at half mass; group "b" is
-    # shifted entirely into the top bin
-    rows = ([("a", float(v)) for v in (10, 10, 500, 500)]
-            + [("b", 1000.0)] * 4)
-    df = spark.createDataFrame(rows, "src string, v double")
-    out = {r["src"]: r for r in distribution_psi(
-        df, "v", "src", lo=0.0, hi=1024.0, bins=4).collect()}
-    assert out["a"]["n_rows"] == 4 and out["b"]["n_rows"] == 4
-
-    def psi(counts_g, counts_all, n_g, n_all, bins=4):
-        tot = 0
-        for i in range(bins):
-            p = (counts_g.get(i, 0) + 1) / (n_g + bins)
-            q = (counts_all.get(i, 0) + 1) / (n_all + bins)
-            tot += math.floor((p - q) * math.log(p / q) * 1e9 + 0.5)
-        return tot / 1e9
-
-    ca = {0: 2, 1: 2, 3: 4}  # corpus: bins of 10->0, 500->1, 1000->3
-    assert out["a"]["psi"] == psi({0: 2, 1: 2}, ca, 4, 8)
-    assert out["b"]["psi"] == psi({3: 4}, ca, 4, 8)
-    assert out["a"]["psi"] > 0 and out["b"]["psi"] > 0
-    # NULL values drop from bins AND totals
-    df2 = spark.createDataFrame(
-        rows + [("a", None)], "src string, v double")
-    out2 = {r["src"]: r for r in distribution_psi(
-        df2, "v", "src", lo=0.0, hi=1024.0, bins=4).collect()}
-    assert out2["a"]["n_rows"] == 4
-    assert out2["a"]["psi"] == out["a"]["psi"]
-
-
-def test_kmv_estimate_and_merge(spark):
-    from aquacache_spark.operators.sketch import kmv_bottom_k
-
-    # ~1500 distinct keys, one group: (k-1)/v_k lands within the
-    # expected O(1/sqrt(k)) band of the truth
-    df = spark.range(1500).select(
-        F.lit("g").alias("grp"), F.col("id").cast("string").alias("k"))
-    out = kmv_bottom_k(df, "k", group_col="grp", k=64).collect()
-    assert len(out) == 64
-    est = out[0]["distinct_estimate"]
-    assert abs(est - 1500) / 1500 < 0.35
-    # below-k group: the estimate is the exact count
-    small = spark.range(10).select(
-        F.lit("g").alias("grp"), F.col("id").cast("string").alias("k"))
-    souts = kmv_bottom_k(small, "k", group_col="grp", k=64).collect()
-    assert len(souts) == 10
-    assert souts[0]["distinct_estimate"] == 10.0
-    # mergeability: bottom-k of the union == bottom-k over the merged
-    # per-shard bottom-ks
-    a = spark.range(0, 800).select(
-        F.lit("g").alias("grp"), F.col("id").cast("string").alias("k"))
-    b = spark.range(400, 1500).select(
-        F.lit("g").alias("grp"), F.col("id").cast("string").alias("k"))
-    direct = {(r["k"], r["rank"]) for r in kmv_bottom_k(
-        a.unionByName(b), "k", group_col="grp", k=64).collect()}
-    ka = kmv_bottom_k(a, "k", group_col="grp", k=64) \
-        .select("grp", "k")
-    kb = kmv_bottom_k(b, "k", group_col="grp", k=64) \
-        .select("grp", "k")
-    remerged = {(r["k"], r["rank"]) for r in kmv_bottom_k(
-        ka.unionByName(kb), "k", group_col="grp", k=64).collect()}
-    assert direct == remerged
-
-
-def test_kmv_rank_filter_uses_window_group_limit(spark):
-    from aquacache_spark import queries as Q
-
-    df = Q.QUERIES["kmv_distinct_sample"](
-        spark, "/root/testdata/sf0.001")
-    p = df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted")
-    assert "WindowGroupLimit" in p
-    assert "SinglePartition" not in p

@@ -114,72 +114,24 @@ def test_jpeg_features_quarantine(spark):
 
 
 def test_jpeg_receive_truncation_is_strict():
-    """A bit receive (magnitude / EOB-run) that starts in-bounds but
-    extends past the last real bit must raise, not silently consume
-    the zero padding — only prefix-free SYMBOL reads may overrun into
-    padding (they resolve on their own bits)."""
+    """A magnitude receive that starts in-bounds but extends past the
+    last real bit must raise, not silently consume the zero padding —
+    only prefix-free SYMBOL reads may overrun into padding (they
+    resolve on their own bits). An 8x8 checkerboard at quality 100
+    puts a 10-bit magnitude in the last zigzag slot, so the block has
+    no EOB and the stream ends on that receive plus at most 7 pad
+    bits; dropping the final entropy byte cuts into the receive."""
+    import numpy as np
     import pytest
 
-    from aquacache_spark.functions.jpeg import _BitReader
+    from aquacache_spark.functions.jpeg import decode_jpeg, encode_jpeg
 
-    br = _BitReader(b"\xa5")  # 8 real bits
-    br.pos = 4
-    with pytest.raises(ValueError):
-        br.get_bits(8)  # starts in-bounds, needs 12
-    br.pos = 4
-    assert br.get_bits(4) == 0x5  # exact fit still fine
-    with pytest.raises(ValueError):
-        br.get_bits(1)  # now exhausted
-
-
-def test_gopher_flags_whitespace_robust(spark):
-    """Mean word length / word count / alpha fraction must agree
-    between single-space-joined text and the same text with messy
-    whitespace (tabs, newlines, double spaces)."""
-    from pyspark.sql import functions as F
-
-    from aquacache_spark.functions.text import gopher_flags
-
-    clean = "the quick brown fox jumps over the lazy dog"
-    messy = "the  quick\tbrown fox\n jumps over\t\tthe lazy  dog "
-    df = spark.createDataFrame([(1, clean), (2, messy)], "i int, t string")
-    flags = gopher_flags(F.col("t"), min_words=1)
-    out = {r["i"]: r for r in df.select(
-        "i", flags["n_words"].alias("n"),
-        flags["mean_word_len"].alias("mwl"),
-        flags["alpha_frac"].alias("af"),
-        flags["stopword_hits"].alias("sh")).collect()}
-    assert out[1]["n"] == out[2]["n"] == 9
-    assert abs(out[1]["mwl"] - out[2]["mwl"]) < 1e-12
-    assert out[1]["af"] == out[2]["af"] == 1.0
-    assert out[1]["sh"] == out[2]["sh"]
-
-
-def test_hashed_linear_score_with_real_weights(spark):
-    """The weights-column path (the production shape): a broadcast
-    weight vector replaces the stand-in, and an all-zeros model scores
-    exactly 0.5 for every document."""
-    from pyspark.sql import functions as F
-
-    from aquacache_spark.functions.text import hashed_linear_score
-
-    df = spark.createDataFrame(
-        [(1, "the quick brown fox"), (2, "a b"), (3, "single")],
-        "doc_id int, text string")
-    zeros = F.array_repeat(F.lit(0.0), 64)
-    out = df.select(
-        "doc_id",
-        hashed_linear_score(F.col("text"), num_buckets=64,
-                            weights=zeros).alias("p"))
-    assert all(r["p"] == 0.5 for r in out.collect())
-    # a biased model moves the score off 0.5 deterministically
-    ones = F.array_repeat(F.lit(1.0), 64)
-    out2 = df.select(
-        hashed_linear_score(F.col("text"), num_buckets=64,
-                            weights=ones).alias("p"))
-    import math
-    expect = 1.0 / (1.0 + math.exp(-1.0))
-    assert all(abs(r["p"] - expect) < 1e-9 for r in out2.collect())
+    px = (np.indices((8, 8)).sum(axis=0) % 2 * 255).astype(np.uint8)
+    blob = encode_jpeg(px, quality=100)
+    assert blob[-2:] == b"\xff\xd9" and blob[-4:-2] != b"\xff\x00"
+    assert (decode_jpeg(blob)[:, :, 0] == px).all()
+    with pytest.raises(ValueError, match="exhausted"):
+        decode_jpeg(blob[:-3] + blob[-2:])
 
 
 def test_jpeg_rejects_progressive_and_12bit(spark):

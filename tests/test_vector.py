@@ -4,7 +4,6 @@ classification with geom_id recycling, NHN layer loading."""
 import json
 
 import pytest
-from pyspark.sql import functions as F
 
 from aquacache_spark.functions import wkb
 from aquacache_spark.operators import vector as V
@@ -217,89 +216,3 @@ class TestGpkgReader:
 
         assert key(gp) == key(cs)
 
-
-def test_zorder_key_locality_and_clamping(spark):
-    """The Morton key must (a) clamp out-of-range coordinates to the
-    edge cells, (b) keep bbox neighbours in FEW contiguous z-runs —
-    the property that makes min/max row-group pruning work on a
-    z-sorted layout (a row-major key would shatter a tall bbox into
-    one run per row of cells)."""
-    from pyspark.sql import functions as F
-
-    from aquacache_spark.operators.vector import zorder_key
-
-    pts = spark.range(10_000).select(
-        F.col("id"),
-        (F.lit(50.0) + (F.col("id") % 100) / F.lit(5.0)).alias("lat"),
-        (F.lit(-140.0) + (F.col("id") / 100).cast("int") / F.lit(3.0))
-        .alias("lon"),
-    )
-    z = pts.select(
-        "id", "lat", "lon",
-        zorder_key(F.col("lat"), F.col("lon"),
-                   50.0, 70.0, -140.0, -105.0).alias("zkey"))
-    rows = sorted(z.collect(), key=lambda r: r["zkey"])
-    # bbox = a 4x4-degree square in the middle
-    in_box = [i for i, r in enumerate(rows)
-              if 58 <= r["lat"] <= 62 and -130 <= r["lon"] <= -126]
-    runs = 1 + sum(1 for a, b in zip(in_box, in_box[1:]) if b != a + 1)
-    assert len(in_box) > 200
-    # locality: the bbox occupies far fewer sorted runs than points
-    assert runs < len(in_box) / 4, (runs, len(in_box))
-
-    clamped = spark.createDataFrame(
-        [(1, -999.0, 999.0), (2, 50.0, -140.0), (3, 70.0, -105.0)],
-        "id long, lat double, lon double")
-    out = {r["id"]: r["zkey"] for r in clamped.select(
-        "id", zorder_key(F.col("lat"), F.col("lon"),
-                         50.0, 70.0, -140.0, -105.0).alias("zkey"))
-        .collect()}
-    assert out[2] == 0                      # both mins -> cell (0, 0)
-    assert out[3] == (1 << 32) - 1          # both maxes -> all bits set
-    assert 0 <= out[1] <= (1 << 32) - 1     # clamped inside the domain
-
-
-def test_hilbert_key_matches_reference_loop(spark):
-    # the derived state machine == the textbook xy2d rotation loop,
-    # point by point on a 32x32 grid, evaluated through the REAL
-    # Column fold
-    from pyspark.sql import functions as F
-
-    from aquacache_spark.operators.vector import hilbert_key
-
-    def xy2d(n, x, y):
-        d = 0
-        s = n // 2
-        while s > 0:
-            rx = 1 if (x & s) > 0 else 0
-            ry = 1 if (y & s) > 0 else 0
-            d += s * s * ((3 * rx) ^ ry)
-            if ry == 0:
-                if rx == 1:
-                    x = s - 1 - x
-                    y = s - 1 - y
-                x, y = y, x
-            s //= 2
-        return d
-
-    bits, n = 5, 32
-    grid = spark.range(n * n).select(
-        (F.col("id") % n).alias("gx"),
-        (F.col("id") / n).cast("long").alias("gy"))
-    # map the integer grid through the quantizer's identity window
-    out = grid.select(
-        "gx", "gy",
-        hilbert_key(F.col("gx").cast("double") / (n - 1),
-                    F.col("gy").cast("double") / (n - 1),
-                    0.0, 1.0, 0.0, 1.0, bits=bits).alias("h"))
-    rows = out.collect()
-    assert len(rows) == n * n
-    for r in rows:
-        assert r["h"] == xy2d(n, r["gx"], r["gy"]), (r["gx"], r["gy"])
-    # the defining Hilbert property Morton lacks: consecutive keys
-    # are always 4-neighbour grid steps (no long jumps)
-    byd = {r["h"]: (r["gx"], r["gy"]) for r in rows}
-    assert sorted(byd) == list(range(n * n))
-    for d in range(1, n * n):
-        (x1, y1), (x2, y2) = byd[d - 1], byd[d]
-        assert abs(x1 - x2) + abs(y1 - y2) == 1, d
