@@ -10,5 +10,3 @@ only where a true sequential scan is required (cumulative reset-aware
 increments, change-point detection), always as Arrow-batched
 ``applyInPandas`` per-series groups.
 """
-
-__version__ = "0.1.0"

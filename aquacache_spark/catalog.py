@@ -19,24 +19,7 @@ operator below already groups/filters on those keys.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
-
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -73,12 +56,3 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         for c in ntz_cols:
             df = df.withColumn(c, F.col(c).cast("timestamp"))
     return df
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: table(spark, sf_dir, name) for name in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    for name in TABLES:
-        table(spark, sf_dir, name).createOrReplaceTempView(name)

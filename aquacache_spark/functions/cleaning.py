@@ -1,8 +1,6 @@
 """Null-safety / cleaning expressions (§2.9).
 
 - ``inf_to_na``: ±Inf/NaN -> NULL (reference R/utils.R:785)
-- ``same_or_na``: null-safe equality where NULL == NULL
-  (R/synchronize_continuous.R:659-668) — thin wrapper over eqNullSafe.
 """
 
 from __future__ import annotations
@@ -17,7 +15,3 @@ def inf_to_na(col: Column) -> Column:
     return F.when(
         F.isnan(col) | (col == F.lit(_INF)) | (col == F.lit(-_INF)), F.lit(None)
     ).otherwise(col)
-
-
-def same_or_na(a: Column, b: Column) -> Column:
-    return a.eqNullSafe(b)

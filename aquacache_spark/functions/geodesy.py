@@ -1,42 +1,23 @@
-"""Spheroid-exact geodesy as staged column expressions (WGS84 Vincenty).
+"""Spheroid-exact point projection as staged column expressions
+(WGS84 Vincenty direct problem).
 
-The reference leans on PostGIS ``geography`` ops — ST_DistanceSpheroid
-and ST_Project (DEV_locs_masking.R:397-462) — which solve the inverse/
-direct geodesic problems on the WGS84 ellipsoid. The engine's default
-paths use spherical formulas (documented sub-0.5% divergence); this
-module closes the gap for callers that need PostGIS-parity metres:
+The reference masks locations with PostGIS ``ST_Project`` on the
+``geography`` type (DEV_locs_masking.R:397-462), which solves the
+direct geodesic problem on the WGS84 ellipsoid. The engine's default
+path uses spherical formulas (documented sub-0.5% divergence);
+``with_vincenty_projection`` (start + bearing + distance ->
+destination, Vincenty 1975 with a FIXED number of iterations) closes
+the gap for ``masked_location_points(spheroid=True)``.
 
-- ``with_vincenty_distance``: the inverse problem (Vincenty 1975), a
-  FIXED number of λ-iterations. Converges in <4 iterations except
-  within ~0.01° of the antipode.
-- ``with_vincenty_projection``: the direct problem (start + bearing +
-  distance -> destination), same construction.
-- ``with_geodesic_distance``: Vincenty everywhere it converges, plus
-  an ANTIPODAL fallback (the region where Vincenty's λ-iteration
-  oscillates and PostGIS' GeographicLib backend still converges,
-  R/imputeMissing.R:546-548): flagged rows route through an
-  Arrow-batched kernel solving the inverse problem on Karney's
-  auxiliary-sphere parametrization with the EXACT distance/longitude
-  integrands evaluated by Gauss-Legendre quadrature — no series
-  truncation, no convergence failure. The fallback is a cold path by
-  construction (a vanishing fraction of any real station catalog is
-  antipodal); the hot path stays codegen'd Vincenty.
-
-Both are DataFrame transforms that STAGE every iteration through
-named projection columns — the engine-wide lesson from the HOF tier
-(functions/text.py): a naively nested Column tree re-references each
-iterate many times, and the duplicated subtrees grow exponentially
-(observed: JVM StackOverflow at 3 unrolled iterations). Staged
-columns keep the plan linear in the iteration count and entirely
-JVM-side — no UDFs, no loops at runtime.
-
-Degenerate inputs are guarded: coincident points -> 0 m; equatorial
-lines (cos²α = 0) use the standard cos(2σm)=0 substitution.
+It is a DataFrame transform that STAGES every iteration through
+named projection columns: a naively nested Column tree re-references
+each iterate many times, and the duplicated subtrees grow
+exponentially (observed: JVM StackOverflow at 3 unrolled
+iterations). Staged columns keep the plan linear in the iteration
+count and entirely JVM-side — no UDFs, no loops at runtime.
 """
 
 from __future__ import annotations
-
-import math
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -46,115 +27,10 @@ WGS84_F = 1.0 / 298.257223563
 WGS84_B = WGS84_A * (1.0 - WGS84_F)
 
 _TMP = [
-    "__vd_su1", "__vd_cu1", "__vd_su2", "__vd_cu2", "__vd_L", "__vd_lam",
-    "__vd_sl", "__vd_cl", "__vd_ss", "__vd_cs", "__vd_sig", "__vd_sa",
-    "__vd_c2a", "__vd_c2sm", "__vd_C", "__vd_usq", "__vd_A", "__vd_B",
-    "__vd_dsig", "__vd_sal", "__vd_cal", "__vd_sig1", "__vd_base",
-    "__vd_lam_prev",
+    "__vd_su1", "__vd_cu1", "__vd_sal", "__vd_cal", "__vd_sig1", "__vd_sa",
+    "__vd_c2a", "__vd_usq", "__vd_A", "__vd_B", "__vd_sig", "__vd_c2sm",
+    "__vd_ss", "__vd_cs", "__vd_dsig", "__vd_base",
 ]
-
-
-def with_vincenty_distance(
-    df: DataFrame,
-    lat1: Column,
-    lon1: Column,
-    lat2: Column,
-    lon2: Column,
-    out_col: str = "dist_m",
-    iterations: int = 8,
-    flag_col: str | None = None,
-) -> DataFrame:
-    """Add ``out_col`` = WGS84 spheroid metres between the two points
-    (Vincenty inverse). Temp columns are dropped before returning.
-
-    ``flag_col``: optionally emit a boolean marking rows where the
-    λ-iteration did NOT converge (the near-antipodal oscillation
-    region, where Vincenty's result can be off by km) — the routing
-    signal for ``with_geodesic_distance``'s exact fallback."""
-    f = WGS84_F
-    u1 = F.atan((1 - f) * F.tan(F.radians(lat1)))
-    u2 = F.atan((1 - f) * F.tan(F.radians(lat2)))
-    df = df.withColumns({
-        "__vd_su1": F.sin(u1), "__vd_cu1": F.cos(u1),
-        "__vd_su2": F.sin(u2), "__vd_cu2": F.cos(u2),
-        "__vd_L": F.radians(lon2) - F.radians(lon1),
-    }).withColumn("__vd_lam", F.col("__vd_L"))
-
-    su1, cu1 = F.col("__vd_su1"), F.col("__vd_cu1")
-    su2, cu2 = F.col("__vd_su2"), F.col("__vd_cu2")
-    for _ in range(iterations):
-        df = df.withColumns({
-            "__vd_lam_prev": F.col("__vd_lam"),
-            "__vd_sl": F.sin(F.col("__vd_lam")),
-            "__vd_cl": F.cos(F.col("__vd_lam")),
-        })
-        sl, cl = F.col("__vd_sl"), F.col("__vd_cl")
-        df = df.withColumns({
-            "__vd_ss": F.sqrt(
-                (cu2 * sl) * (cu2 * sl)
-                + (cu1 * su2 - su1 * cu2 * cl)
-                * (cu1 * su2 - su1 * cu2 * cl)
-            ),
-            "__vd_cs": su1 * su2 + cu1 * cu2 * cl,
-        })
-        ss, cs = F.col("__vd_ss"), F.col("__vd_cs")
-        df = df.withColumns({
-            "__vd_sig": F.atan2(ss, cs),
-            "__vd_sa": F.when(ss == 0, F.lit(0.0)).otherwise(
-                cu1 * cu2 * sl / ss),
-        })
-        df = df.withColumn(
-            "__vd_c2a", 1 - F.col("__vd_sa") * F.col("__vd_sa"))
-        c2a = F.col("__vd_c2a")
-        df = df.withColumns({
-            "__vd_c2sm": F.when(c2a == 0, F.lit(0.0)).otherwise(
-                cs - 2 * su1 * su2 / c2a),
-            "__vd_C": f / 16 * c2a * (4 + f * (4 - 3 * c2a)),
-        })
-        c2sm, cc = F.col("__vd_c2sm"), F.col("__vd_C")
-        df = df.withColumn(
-            "__vd_lam",
-            F.col("__vd_L") + (1 - cc) * f * F.col("__vd_sa") * (
-                F.col("__vd_sig") + cc * ss * (
-                    c2sm + cc * cs * (-1 + 2 * c2sm * c2sm)
-                )
-            ),
-        )
-
-    df = df.withColumn(
-        "__vd_usq",
-        F.col("__vd_c2a") * (WGS84_A ** 2 - WGS84_B ** 2) / WGS84_B ** 2)
-    usq = F.col("__vd_usq")
-    df = df.withColumns({
-        "__vd_A": 1 + usq / 16384 * (
-            4096 + usq * (-768 + usq * (320 - 175 * usq))),
-        "__vd_B": usq / 1024 * (
-            256 + usq * (-128 + usq * (74 - 47 * usq))),
-    })
-    ss, cs, c2sm = F.col("__vd_ss"), F.col("__vd_cs"), F.col("__vd_c2sm")
-    bb = F.col("__vd_B")
-    df = df.withColumn(
-        "__vd_dsig",
-        bb * ss * (
-            c2sm + bb / 4 * (
-                cs * (-1 + 2 * c2sm * c2sm)
-                - bb / 6 * c2sm
-                * (-3 + 4 * ss * ss) * (-3 + 4 * c2sm * c2sm)
-            )
-        ),
-    )
-    dist = WGS84_B * F.col("__vd_A") * (F.col("__vd_sig") - F.col("__vd_dsig"))
-    df = df.withColumn(
-        out_col, F.when(ss == 0, F.lit(0.0)).otherwise(dist))
-    if flag_col is not None:
-        import math as _math
-
-        df = df.withColumn(
-            flag_col,
-            (F.abs(F.col("__vd_lam") - F.col("__vd_lam_prev")) > 1e-11)
-            | (F.abs(F.col("__vd_lam")) > _math.pi),
-        )
-    return df.drop(*_TMP)
 
 
 def with_vincenty_projection(
@@ -242,285 +118,3 @@ def with_vincenty_projection(
     df = df.withColumn(lat_out, F.degrees(lat2)).withColumn(
         lon_out, lon2_deg)
     return df.drop(*_TMP)
-
-
-# ---------------------------------------------------------------------------
-# Antipodal-exact inverse (the Vincenty non-convergence region)
-# ---------------------------------------------------------------------------
-#
-# Karney's auxiliary-sphere parametrization (Algorithms for geodesics,
-# J. Geodesy 2013, eqs. 5-9) gives EXACT relations — no series:
-#
-#   sin(beta)  = cos(alpha0) sin(sigma)        (reduced latitude)
-#   tan(omega) = sin(alpha0) tan(sigma)        (sphere longitude)
-#   s / b      = I1 = INT sqrt(1 + k^2 sin^2 s') ds',  k = e' cos(alpha0)
-#   lambda     = omega - f sin(alpha0) * I3,
-#   I3         = INT (2 - f) / (1 + (1 - f) sqrt(1 + k^2 sin^2 s')) ds'
-#
-# The solver below evaluates I1/I3 by Gauss-Legendre quadrature
-# (machine precision on these smooth integrands) and finds the azimuth
-# whose longitude difference matches the target by bracketed bisection
-# — robust exactly where Vincenty's fixed-point iteration is not.
-# Scalar Python on purpose: it only ever sees the flagged rows.
-
-_EP2 = (WGS84_A ** 2 - WGS84_B ** 2) / WGS84_B ** 2  # e'^2
-
-
-def _geod_quad(fn, hi: float, nodes) -> float:
-    """INT_0^hi fn via Gauss-Legendre (handles hi < 0 by sign)."""
-    x, w = nodes
-    half = hi / 2.0
-    import numpy as np
-
-    return float(half * np.sum(w * fn(half * (x + 1.0))))
-
-
-def geodesic_inverse_exact(lat1: float, lon1: float, lat2: float,
-                           lon2: float) -> tuple[float, float]:
-    """(distance_m, azimuth1_deg) of the WGS84 inverse problem, exact
-    auxiliary-sphere integration. Intended for the near-antipodal
-    domain; correct (if slower than Vincenty) elsewhere too."""
-    import numpy as np
-
-    f = WGS84_F
-    b = WGS84_B
-    nodes = np.polynomial.legendre.leggauss(64)
-    beta1 = math.atan((1 - f) * math.tan(math.radians(lat1)))
-    beta2 = math.atan((1 - f) * math.tan(math.radians(lat2)))
-    dlon = math.radians(lon2) - math.radians(lon1)
-    dlon = (dlon + math.pi) % (2 * math.pi) - math.pi
-    lam_t, mirror = abs(dlon), dlon < 0
-    if lam_t == 0.0 and beta1 == beta2:
-        return 0.0, 0.0
-    # pure-equatorial pair with the equatorial line still shortest
-    # (Karney: iff lambda12 <= (1 - f) pi): no latitude crossing
-    # exists for the crossing scan below, so answer in closed form
-    # (1e-12 rad of latitude is ~6 micrometres — sub-precision)
-    if (abs(beta1) < 1e-12 and abs(beta2) < 1e-12
-            and lam_t <= (1 - f) * math.pi):
-        return WGS84_A * lam_t, (270.0 if mirror else 90.0)
-
-    def omega(sig: float, sina0: float) -> float:
-        n = round(sig / math.pi)
-        sigmod = sig - n * math.pi
-        if abs(abs(sigmod) - math.pi / 2) < 1e-15:
-            return math.copysign(math.pi / 2, sigmod) * (
-                1 if sina0 >= 0 else -1) + n * math.pi
-        return math.atan(sina0 * math.tan(sigmod)) + n * math.pi
-
-    def eval_alpha(a1: float, branch: int):
-        """lambda12 and (sigma1, sigma2, sina0, cosa0) for azimuth a1.
-
-        A geodesic crosses latitude beta2 (up to) twice per
-        half-revolution past sigma1; ``branch`` selects the first or
-        second in-range crossing. Scanning BOTH branches makes the
-        solver correct for general pairs, not only near-antipodal ones
-        (the former nearest-to-sigma1+pi choice silently picked the
-        wrong crossing for short arcs)."""
-        sina0 = math.sin(a1) * math.cos(beta1)
-        cosa0 = math.sqrt(max(0.0, 1.0 - sina0 * sina0))
-        if cosa0 < abs(math.sin(beta2)) - 1e-15 or cosa0 == 0.0:
-            return None  # geodesic never reaches latitude beta2
-        sig1 = math.atan2(math.sin(beta1), math.cos(a1) * math.cos(beta1))
-        x = max(-1.0, min(1.0, math.sin(beta2) / cosa0)) if cosa0 else 0.0
-        base = math.asin(x)
-        cands = sorted(
-            s
-            for k in (-1, 0, 1)
-            for s in (base + 2 * k * math.pi,
-                      math.pi - base + 2 * k * math.pi)
-            # the shortest geodesic has sigma2 in (sigma1,
-            # sigma1 + pi] (+ slack for the oblate antipodal excess)
-            if sig1 + 1e-12 < s <= sig1 + math.pi + 0.2
-        )
-        if branch >= len(cands):
-            return None
-        sig2 = cands[branch]
-        k2 = _EP2 * cosa0 * cosa0
-        i3 = _geod_quad(
-            lambda s: (2 - f) / (1 + (1 - f) * np.sqrt(
-                1 + k2 * np.sin(s) ** 2)),
-            sig2, nodes,
-        ) - _geod_quad(
-            lambda s: (2 - f) / (1 + (1 - f) * np.sqrt(
-                1 + k2 * np.sin(s) ** 2)),
-            sig1, nodes,
-        )
-        lam12 = (omega(sig2, sina0) - omega(sig1, sina0)
-                 - f * sina0 * i3)
-        return lam12, sig1, sig2, cosa0
-
-    def dist_at(root) -> float:
-        a1, branch = root
-        _lam, sig1, sig2, cosa0 = eval_alpha(a1, branch)
-        k2 = _EP2 * cosa0 * cosa0
-        i1 = _geod_quad(
-            lambda s: np.sqrt(1 + k2 * np.sin(s) ** 2), sig2, nodes
-        ) - _geod_quad(
-            lambda s: np.sqrt(1 + k2 * np.sin(s) ** 2), sig1, nodes
-        )
-        return b * i1
-
-    # scan the azimuth for sign changes of lambda12(alpha1) - target,
-    # on BOTH crossing branches; near the antipode (and between the
-    # branches) MULTIPLE geodesics solve the equation, so every
-    # bracketed root is refined and the SHORTEST wins
-    n_scan = 256
-    alphas = [1e-9] + [
-        math.pi * i / (n_scan + 1) for i in range(1, n_scan + 1)
-    ] + [math.pi - 1e-9]
-    roots: list[tuple[float, int]] = []
-    best = None  # fallback: closest |h| if nothing brackets
-    for branch in (0, 1):
-        prev = None
-        for a1 in alphas:
-            r = eval_alpha(a1, branch)
-            if r is None:
-                prev = None
-                continue
-            h = r[0] - lam_t
-            if best is None or abs(h) < abs(best[1]):
-                best = ((a1, branch), h)
-            if prev is not None and prev[1] * h <= 0:
-                lo, hlo = prev
-                hi_ = a1
-                for _ in range(80):
-                    mid = (lo + hi_) / 2
-                    rm = eval_alpha(mid, branch)
-                    if rm is None:
-                        break
-                    hm = rm[0] - lam_t
-                    if hlo * hm <= 0:
-                        hi_ = mid
-                    else:
-                        lo, hlo = mid, hm
-                cand = (lo + hi_) / 2
-                rc = eval_alpha(cand, branch)
-                # the sigma2 branch choice makes lambda12 piecewise; a
-                # sign change across a branch-content JUMP is not a
-                # geodesic — only keep roots whose residual vanishes
-                if rc is not None and abs(rc[0] - lam_t) < 1e-9:
-                    roots.append((cand, branch))
-            prev = (a1, h)
-    if not roots:
-        roots = [best[0]]
-    root = min(roots, key=dist_at)
-    dist = dist_at(root)
-    azi = math.degrees(root[0])
-    if mirror:
-        azi = (360.0 - azi) % 360.0
-    return dist, azi
-
-
-def _omega_cont(sig: float, sina0: float) -> float:
-    """Continuous spherical longitude omega(sigma): tan(omega) =
-    sin(alpha0) tan(sigma), unwrapped across sigma's pi-sheets (omega
-    advances by pi per sigma half-turn)."""
-    n = round(sig / math.pi)
-    sigmod = sig - n * math.pi
-    if abs(abs(sigmod) - math.pi / 2) < 1e-15:
-        return math.copysign(math.pi / 2, sigmod) * (
-            1 if sina0 >= 0 else -1) + n * math.pi
-    return math.atan(sina0 * math.tan(sigmod)) + n * math.pi
-
-
-def geodesic_direct_exact(lat1: float, lon1: float, azi1_deg: float,
-                          s_m: float) -> tuple[float, float, float]:
-    """(lat2_deg, lon2_deg, azi2_deg) of the WGS84 DIRECT problem by
-    the same exact auxiliary-sphere integration as
-    :func:`geodesic_inverse_exact` (Karney 2013, eqs. 5-9) — no
-    series, so it stays machine-accurate on long lines and through the
-    polar regime where Vincenty's series direct solution coarsens
-    (VERDICT r4 next #8). sigma2 solves s(sigma2) = s(sigma1) + s by
-    Newton on I1, whose derivative sqrt(1 + k^2 sin^2 sigma) >= 1
-    makes the iteration strictly monotone and fast. Scalar Python on
-    purpose: the distributed path stays with_vincenty_projection; this
-    is the flagged-row / golden-case fallback."""
-    import numpy as np
-
-    f = WGS84_F
-    b = WGS84_B
-    nodes = np.polynomial.legendre.leggauss(64)
-    a1 = math.radians(azi1_deg)
-    beta1 = math.atan((1 - f) * math.tan(math.radians(lat1)))
-    sb1, cb1 = math.sin(beta1), math.cos(beta1)
-    sa1, ca1 = math.sin(a1), math.cos(a1)
-    sina0 = sa1 * cb1
-    cosa0 = math.hypot(ca1, sa1 * sb1)  # Karney eq. 10
-    sig1 = math.atan2(sb1, cb1 * ca1)
-    om1 = _omega_cont(sig1, sina0)
-    k2 = _EP2 * cosa0 * cosa0
-
-    def i1(sig: float) -> float:
-        return _geod_quad(
-            lambda s: np.sqrt(1 + k2 * np.sin(s) ** 2), sig, nodes)
-
-    def i3(sig: float) -> float:
-        return _geod_quad(
-            lambda s: (2 - f) / (1 + (1 - f) * np.sqrt(
-                1 + k2 * np.sin(s) ** 2)), sig, nodes)
-
-    target = i1(sig1) + s_m / b
-    sig2 = sig1 + (s_m / b) / math.sqrt(1 + k2 / 2)  # spherical seed
-    for _ in range(50):
-        step = (i1(sig2) - target) / math.sqrt(
-            1 + k2 * math.sin(sig2) ** 2)
-        sig2 -= step
-        if abs(step) < 1e-15:
-            break
-    sb2 = cosa0 * math.sin(sig2)
-    cb2 = math.hypot(math.cos(sig2), sina0 * math.sin(sig2))
-    lat2 = math.degrees(math.atan2(sb2, (1 - f) * cb2))
-    om2 = _omega_cont(sig2, sina0)
-    lam12 = om2 - om1 - f * sina0 * (i3(sig2) - i3(sig1))
-    lon2 = lon1 + math.degrees(lam12)
-    lon2 = lon2 - 360.0 * math.floor((lon2 + 180.0) / 360.0)
-    azi2 = math.degrees(math.atan2(sina0, cosa0 * math.cos(sig2)))
-    azi2 %= 360.0
-    return lat2, lon2, azi2
-
-
-def with_geodesic_distance(
-    df: DataFrame,
-    lat1: str,
-    lon1: str,
-    lat2: str,
-    lon2: str,
-    out_col: str = "dist_m",
-    iterations: int = 8,
-) -> DataFrame:
-    """PostGIS-parity spheroid distance everywhere: staged-column
-    Vincenty for converged rows (the entire hot path), exact
-    auxiliary-sphere integration for the flagged near-antipodal
-    remainder via an Arrow-batched kernel on the FILTERED split only
-    — the UDF never sees a converged row."""
-    import pandas as pd
-
-    staged = with_vincenty_distance(
-        df, F.col(lat1), F.col(lon1), F.col(lat2), F.col(lon2),
-        out_col=out_col, iterations=iterations, flag_col="__geo_flag",
-    )
-    # barrier: filtering the staged plan directly would push the flag
-    # predicate down through every λ-iteration projection, inlining the
-    # aliased subtrees exponentially (Catalyst OOMs on 4 rows). The
-    # cache boundary stops alias substitution; both branches then scan
-    # the one materialized result.
-    staged = staged.persist()
-    ok = staged.where(~F.col("__geo_flag")).drop("__geo_flag")
-
-    bad = staged.where(F.col("__geo_flag")).drop("__geo_flag")
-    schema = ", ".join(
-        f"`{name}` {dtype}" for name, dtype in bad.dtypes)
-
-    def kernel(batches):
-        for pdf in batches:
-            vals = [
-                geodesic_inverse_exact(la1, lo1, la2, lo2)[0]
-                for la1, lo1, la2, lo2 in zip(
-                    pdf[lat1], pdf[lon1], pdf[lat2], pdf[lon2])
-            ]
-            pdf[out_col] = pd.Series(vals, index=pdf.index, dtype="float64")
-            yield pdf
-
-    exact = bad.mapInPandas(kernel, schema=schema)
-    return ok.unionByName(exact)

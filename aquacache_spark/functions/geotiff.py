@@ -1,4 +1,4 @@
-"""Minimal GeoTIFF writer/reader (stdlib struct + numpy).
+"""Minimal GeoTIFF writer (stdlib struct + numpy).
 
 The reference's writeRaster first materializes a GTiff via
 ``terra::writeRaster`` (R/writeRaster.R:330) before raster2pgsql picks
@@ -12,15 +12,11 @@ it up; this module produces the equivalent artifact without GDAL:
   connector here produces;
 - nodata advertised through the GDAL_NODATA ASCII tag (42113), the
   de-facto standard GDAL/terra read back.
-
-``decode_geotiff`` reads exactly this subset (any strip layout,
-float32/float64) for round-trip tests and re-ingest.
 """
 
 from __future__ import annotations
 
 import struct
-from typing import Optional
 
 import numpy as np
 
@@ -43,9 +39,6 @@ _TYPE_SHORT = 3
 _TYPE_LONG = 4
 _TYPE_ASCII = 2
 _TYPE_DOUBLE = 12
-
-_TYPE_SIZE = {_TYPE_SHORT: 2, _TYPE_LONG: 4, _TYPE_ASCII: 1,
-              _TYPE_DOUBLE: 8}
 
 
 def encode_geotiff(
@@ -130,69 +123,3 @@ def encode_geotiff(
     out += extras
     out += data
     return bytes(out)
-
-
-def decode_geotiff(blob: bytes) -> dict:
-    """Parse the subset written above. Returns grid metadata and a
-    row-major values list with None at nodata cells."""
-    if blob[:4] not in (b"II*\x00", b"MM\x00*"):
-        raise ValueError("not a TIFF (bad magic)")
-    en = "<" if blob[:2] == b"II" else ">"
-    (ifd_off,) = struct.unpack_from(f"{en}I", blob, 4)
-    (n_entries,) = struct.unpack_from(f"{en}H", blob, ifd_off)
-    tags = {}
-    for k in range(n_entries):
-        tag, typ, count = struct.unpack_from(
-            f"{en}HHI", blob, ifd_off + 2 + 12 * k)
-        voff = ifd_off + 2 + 12 * k + 8
-        size = _TYPE_SIZE.get(typ, 1) * count
-        if size > 4:
-            (ptr,) = struct.unpack_from(f"{en}I", blob, voff)
-            raw = blob[ptr:ptr + size]
-        else:
-            raw = blob[voff:voff + size]
-        if typ == _TYPE_SHORT:
-            vals = struct.unpack_from(f"{en}{count}H", raw)
-        elif typ == _TYPE_LONG:
-            vals = struct.unpack_from(f"{en}{count}I", raw)
-        elif typ == _TYPE_DOUBLE:
-            vals = struct.unpack_from(f"{en}{count}d", raw)
-        elif typ == _TYPE_ASCII:
-            vals = (raw.split(b"\x00")[0].decode(),)
-        else:
-            continue
-        tags[tag] = vals
-    w = tags[_TAG_WIDTH][0]
-    h = tags[_TAG_HEIGHT][0]
-    if tags.get(_TAG_COMPRESSION, (1,))[0] != 1:
-        raise ValueError("compressed TIFF unsupported")
-    bits = tags[_TAG_BITS][0]
-    fmt = tags.get(_TAG_SAMPLE_FORMAT, (1,))[0]
-    if fmt != 3 or bits not in (32, 64):
-        raise ValueError(
-            f"unsupported sample layout (format={fmt}, bits={bits})")
-    dt = np.dtype(f"{en}f{bits // 8}")
-    offs = tags[_TAG_STRIP_OFFSETS]
-    counts = tags[_TAG_STRIP_COUNTS]
-    raw = b"".join(blob[o:o + c] for o, c in zip(offs, counts))
-    arr = np.frombuffer(raw, dtype=dt, count=w * h)
-    nodata = None
-    if _TAG_GDAL_NODATA in tags:
-        nodata = float(tags[_TAG_GDAL_NODATA][0])
-    vals: list[Optional[float]] = arr.astype(float).tolist()
-    if nodata is not None:
-        vals = [None if v == nodata else v for v in vals]
-    sx, sy = tags.get(_TAG_PIXEL_SCALE, (0.0, 0.0, 0.0))[:2]
-    tie = tags.get(_TAG_TIEPOINT, (0.0,) * 6)
-    geo = tags.get(_TAG_GEOKEYS, ())
-    epsg = None
-    if len(geo) >= 4:
-        for k in range(geo[3]):
-            kid, loc, _cnt, val = geo[4 + 4 * k:8 + 4 * k]
-            if kid == 2048 and loc == 0:
-                epsg = val
-    return {
-        "width": w, "height": h, "scale_x": sx, "scale_y": sy,
-        "origin_x": tie[3], "origin_y": tie[4], "epsg": epsg,
-        "nodata": nodata, "values": vals,
-    }

@@ -447,34 +447,3 @@ def _unpack_complex_present(packed: bytes, ndata: int, sec5: bytes,
             x = np.concatenate(([h[0]], d1)).cumsum()
             x[0] = h[0]
     return _scale(x, miss, ref, e, d)
-
-
-def _unpack_simple(
-    packed: bytes,
-    ngrid: int,
-    ref: float,
-    e: int,
-    d: int,
-    nbits: int,
-    bitmap: Optional[bytes],
-    ndata: Optional[int] = None,
-) -> List[Optional[float]]:
-    """Back-compat scalar helper used by golden-byte tests: simple
-    packing over a ``ngrid``-cell grid with an optional bitmap.
-    ``ndata`` (the section-5 present count) defaults to the bitmap
-    popcount / grid size per spec."""
-    if ndata is None:
-        if bitmap is None:
-            ndata = ngrid
-        else:
-            ndata = int(np.unpackbits(
-                np.frombuffer(bitmap, dtype=np.uint8))[:ngrid].sum())
-    sec5 = struct.pack(
-        ">IBIHfHHBB", 21, 5, ndata, 0, ref,
-        (0x8000 | -e) if e < 0 else e,
-        (0x8000 | -d) if d < 0 else d,
-        nbits, 0,
-    )
-    present = _unpack_simple_present(packed, ndata, sec5)
-    out = _expand_bitmap(present, ngrid, bitmap)
-    return [None if np.isnan(v) else v for v in out.tolist()]

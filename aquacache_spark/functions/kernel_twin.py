@@ -22,11 +22,10 @@ the next twin is a page, not a module:
    input is NULL), and must ship NULLs back through Arrow as masked
    values — pandas nullable dtypes, never NaN-in-float or None-in-
    object (which crash or coerce in the Arrow cast).
-3. **Bit-parity pin** (:func:`assert_bit_parity`): every twin ships a
-   unit test asserting exact equality (NULLs included, floats by
-   bit pattern) between the JVM operator and the twin on a fixture
-   that exercises the NULL arms — the template the existing twins'
-   tests follow (tests/test_blas_kernels.py).
+3. **Bit-parity pin**: every twin ships a unit test asserting exact
+   equality (NULLs included, floats by bit pattern) between the JVM
+   operator and the twin on a fixture that exercises the NULL arms
+   (``assert_bit_parity`` in tests/test_blas_kernels.py).
 """
 
 from __future__ import annotations
@@ -60,33 +59,3 @@ def nullable_series(values: Sequence, dtype: str):
     import pandas as pd
 
     return pd.array(values, dtype=dtype)
-
-
-def assert_bit_parity(jvm_df, twin_df, keys: Sequence[str]) -> None:
-    """The parity pin shared by every twin's unit test: collect both
-    frames, align on ``keys``, and require EXACT equality — floats by
-    bit pattern (struct.pack), NULL == NULL, schema column set equal.
-    Raises AssertionError with the first diverging (key, column)."""
-    import math
-    import struct
-
-    def norm(v):
-        if isinstance(v, float):
-            if math.isnan(v):
-                return ("f64", "nan")
-            return ("f64", struct.pack("<d", v))
-        return v
-
-    a_rows = {tuple(r[k] for k in keys): r.asDict() for r in jvm_df.collect()}
-    b_rows = {tuple(r[k] for k in keys): r.asDict() for r in twin_df.collect()}
-    assert a_rows.keys() == b_rows.keys(), (
-        f"key sets differ: only-jvm={sorted(set(a_rows) - set(b_rows))[:5]} "
-        f"only-twin={sorted(set(b_rows) - set(a_rows))[:5]}")
-    cols = set(next(iter(a_rows.values())).keys()) if a_rows else set()
-    for key, ra in a_rows.items():
-        rb = b_rows[key]
-        assert set(rb.keys()) == cols, (key, sorted(rb.keys()), sorted(cols))
-        for c in cols:
-            assert norm(ra[c]) == norm(rb[c]), (
-                f"bit-parity broken at key={key} col={c}: "
-                f"jvm={ra[c]!r} twin={rb[c]!r}")

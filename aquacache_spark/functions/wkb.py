@@ -24,7 +24,6 @@ import struct
 from typing import List, Sequence, Tuple
 
 _POINT, _LINESTRING, _POLYGON = 1, 2, 3
-_NAMES = {_POINT: "point", _LINESTRING: "line", _POLYGON: "polygon"}
 
 
 def encode_point(x: float, y: float) -> bytes:

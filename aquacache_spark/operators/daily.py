@@ -29,8 +29,6 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-AGG_TYPES = ("instantaneous", "mean", "sum", "median", "min", "max", "(min+max)/2")
-
 # Mean/sum accumulate through exact integer micro-units so the result is
 # bit-identical regardless of partition count / merge order — floating
 # sums are order-dependent, which would make daily values depend on the

@@ -725,7 +725,6 @@ FORMULA_VOLATILE = (
     r"(?i)\b(?:(?:pg_catalog|criteria|discrete|public)\.)?("
     + "|".join(sorted(VOLATILE_FUNCTIONS)) + r")\s*\("
 )
-FORMULA_BAD_SCHEMA_CALL = FORMULA_FUNCTION_CALL  # extract group 1
 
 
 class GuidelineRuleError(ValueError):

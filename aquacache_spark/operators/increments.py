@@ -22,8 +22,9 @@ Reference semantics (R/compute_increments.R:16-121), matched exactly:
 Spark-first shape: the NA expansion never needs to be *materialized*
 for the scan — an inter-point gap contributes ``floor(gap/period)-1``
 to the NA run length, so the kernel scans only observed rows and the
-NA spine rows (increment NA by construction) are emitted by a separate
-map-only generator when callers want the reference's exact row set.
+NA spine rows (increment NA by construction) are emitted by the same
+kernel, vectorized, when callers want the reference's exact row set
+(``emit_gap_rows``).
 At 100 TB that avoids inflating sparse series (the scan is ∝ observed
 points, not grid cells), and gives the streaming variant
 (streaming/stateful.py) a constant-size carryable state:
@@ -41,7 +42,6 @@ from typing import Sequence
 import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 
 # (last_max, prev_value, prev_ts, na_run) — None/0-seeded.
@@ -126,31 +126,6 @@ def scan_increments(
     )
 
 
-def compute_increments_pd(
-    pdf: pd.DataFrame,
-    dt_col: str,
-    value_col: str,
-    reset_drop: float,
-    min_pos: float,
-    period_seconds: float | None = None,
-    max_gap: int = 0,
-    emit_gap_rows: bool = False,
-    keys: Sequence[str] = (),
-) -> pd.DataFrame:
-    """Pure-pandas sequential kernel over one series' observed rows.
-
-    With ``emit_gap_rows=True`` the reference's inserted NA-cadence
-    rows (R/compute_increments.R:33-67) are appended in the same pass
-    (vectorized — cost ∝ gap mass), so the operator reads its input
-    exactly once instead of running the upstream lineage a second time
-    for a separate spine generator."""
-    parts = _increments_parts(
-        pdf, dt_col, value_col, reset_drop, min_pos, period_seconds,
-        max_gap, emit_gap_rows, keys,
-    )
-    return parts[0] if len(parts) == 1 else pd.concat(parts, ignore_index=True)
-
-
 def _increments_parts(
     pdf: pd.DataFrame,
     dt_col: str,
@@ -191,48 +166,6 @@ def _increments_parts(
                 pad[c] = pdf[c].iloc[0]
             return [pdf, pad]
     return [pdf]
-
-
-def gap_rows(
-    df: DataFrame,
-    keys: Sequence[str],
-    dt_col: str,
-    period_seconds: float,
-) -> DataFrame:
-    """The reference's inserted NA rows (R/compute_increments.R:33-67):
-    for each consecutive observed pair, ``floor(gap/period)-1`` ticks at
-    the cadence strictly between them, all non-key columns NULL. One
-    lead() window + one generator — output ∝ gap mass, no Python."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(*keys).orderBy(dt_col)
-    n_missing = (
-        F.floor(
-            (F.unix_timestamp(F.col("__next")) - F.unix_timestamp(F.col(dt_col)))
-            / F.lit(float(period_seconds))
-        ) - 1
-    )
-    return (
-        df.withColumn("__next", F.lead(dt_col).over(w))
-        .where(F.col("__next").isNotNull())
-        .withColumn("__n_missing", n_missing)
-        # sequence(1, 0) would generate a *descending* sequence
-        .where(F.col("__n_missing") >= 1)
-        .select(
-            *keys,
-            F.col(dt_col).alias("__base"),
-            F.explode(F.sequence(F.lit(1), F.col("__n_missing"))).alias("__k"),
-        )
-        .select(
-            *keys,
-            (
-                F.timestamp_seconds(
-                    F.unix_timestamp("__base")
-                    + F.col("__k") * F.lit(int(period_seconds))
-                )
-            ).alias(dt_col),
-        )
-    )
 
 
 def compute_increments(

@@ -1,4 +1,4 @@
-"""Tiled raster algebra: ingest, clip, zonal stats, pyramids, forecast
+"""Tiled raster algebra: ingest, zonal stats, pyramids, forecast
 lifecycle.
 
 Reference data model (R/writeRaster.R:1-45, R/insertACRaster.R:4-8):
@@ -33,10 +33,10 @@ from __future__ import annotations
 
 from typing import Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .daily import exact_mean, exact_sum
+from .daily import exact_mean
 
 
 def tile_cells(
@@ -142,22 +142,6 @@ def untile(tiles: DataFrame, keys: Sequence[str] = ()) -> DataFrame:
              .cast("int")).cast("int").alias("y"),
             "value",
         )
-    )
-
-
-def clip(tiles: DataFrame, xmin: int, ymin: int, xmax: int, ymax: int,
-         keys: Sequence[str] = ()) -> DataFrame:
-    """Window read (rpostgis::pgGetRast boundary fetch): prune tiles by
-    bbox — a pushed parquet filter, no shuffle — then trim cells.
-    """
-    pruned = tiles.where(
-        (F.col("xmin") <= xmax) & (F.col("xmax") >= xmin)
-        & (F.col("ymin") <= ymax) & (F.col("ymax") >= ymin)
-    )
-    c = untile(pruned, keys=keys)
-    return c.where(
-        (F.col("x") >= xmin) & (F.col("x") <= xmax)
-        & (F.col("y") >= ymin) & (F.col("y") <= ymax)
     )
 
 

@@ -233,79 +233,3 @@ def recycle_split_ids(
         F.lit("delete").alias("action"),
     )
     return upserts.unionByName(deletes)
-
-
-def merge_same_value_segments(
-    segments: DataFrame,
-    keys: Sequence[str],
-    value_col: str = "value",
-    id_col: str = "segment_id",
-    start_col: str = "start_dt",
-    end_col: str = "end_dt",
-    series_col: str = "timeseries_id",
-) -> tuple[DataFrame, DataFrame]:
-    """Port of merge_overlapping_same_value_segments
-    (R/adjust_functions.R:162-250): overlapping-or-touching segments
-    with the same value merge (sweep in ``(value, start, end,
-    id-is-null)`` order); the merged segment keeps the FIRST non-null
-    id in sweep order, other merged-away non-null ids are returned as
-    ``delete_ids`` (:218-226); rows pre-marked ``timeseries_id = -1``
-    contribute their ids to ``delete_ids`` (:172-179); an id that still
-    appears on more than one merged row keeps only its first (value,
-    start)-ordered occurrence, later ones become NULL (:243-245).
-
-    Returns ``(merged_segments, delete_ids)``. Segment tables are
-    per-series interval metadata — window sweeps over catalog-sized
-    partitions, never measurement-scale.
-    """
-    marked = segments.where(
-        (F.col(series_col) == -1) & F.col(id_col).isNotNull()
-    ).select(F.col(id_col).alias("delete_id"))
-    live = segments.where(F.col(series_col) != -1)
-
-    order_cols = [
-        F.col(start_col), F.col(end_col), F.col(id_col).isNull()
-    ]
-    w = Window.partitionBy(*keys, value_col).orderBy(*order_cols)
-    cummax = F.max(end_col).over(
-        w.rowsBetween(Window.unboundedPreceding, -1)
-    )
-    runs = (
-        live.withColumn(
-            "__new_run",
-            F.when(F.col(start_col) <= cummax, 0).otherwise(1),
-        )
-        .withColumn(
-            "__run",
-            F.sum("__new_run").over(w.rowsBetween(Window.unboundedPreceding, 0)),
-        )
-    )
-    w_run = (
-        Window.partitionBy(*keys, value_col, "__run")
-        .orderBy(*order_cols)
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    )
-    tagged = runs.withColumn(
-        "__keep_id", F.first(id_col, ignorenulls=True).over(w_run)
-    )
-    conflict_ids = tagged.where(
-        F.col(id_col).isNotNull() & (F.col(id_col) != F.col("__keep_id"))
-    ).select(F.col(id_col).alias("delete_id"))
-
-    merged = tagged.groupBy(*keys, value_col, "__run").agg(
-        F.min(start_col).alias(start_col),
-        F.max(end_col).alias(end_col),
-        F.first("__keep_id").alias(id_col),
-    ).drop("__run")
-    # an id surviving on multiple merged rows: keep first (value, start)
-    w_dup = Window.partitionBy(*keys, id_col).orderBy(value_col, start_col)
-    merged = merged.withColumn(
-        "__dup", F.row_number().over(w_dup)
-    ).withColumn(
-        id_col,
-        F.when(F.col(id_col).isNotNull() & (F.col("__dup") > 1), None)
-        .otherwise(F.col(id_col)),
-    ).drop("__dup")
-
-    delete_ids = marked.unionByName(conflict_ids).distinct()
-    return merged, delete_ids

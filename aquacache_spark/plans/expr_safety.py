@@ -95,11 +95,3 @@ def substitute_identifiers(expr: str, mapping: dict[str, str]) -> str:
             out.append(expr[pos:m.end()])
         pos = m.end()
     return "".join(out)
-
-
-def is_safe_numeric_expression(expr: str, allowed_idents: tuple = ("value",)) -> bool:
-    try:
-        assert_safe_numeric_expression(expr, allowed_idents)
-        return True
-    except UnsafeExpressionError:
-        return False

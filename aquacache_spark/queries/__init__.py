@@ -13,22 +13,11 @@ tests/test_import_boundary.py). Only these four modules may import
 the tier modules (``operators/{dedup,similarity,web,multimodal}.py``,
 ``functions/{html,warc,jpeg}.py``, ``sources/warc.py``).
 
-``from aquacache_spark import queries as Q`` keeps working: this
-module re-exports QUERIES, ORACLES, and every name the original flat
-module exposed.
+The package exports the registry (``QUERIES``, ``ORACLES``) and the
+driver's flagship query (``flagship``); each module imports what it
+uses.
 """
 
-from ._common import *  # noqa: F401,F403
-from . import _common as _c
 from . import core, hydrology, dedup, ann, multimodal, web  # noqa: F401
-
-QUERIES = _c.QUERIES
-ORACLES = _c.ORACLES
-
-# compatibility: the original flat module exposed every section-level
-# symbol; keep them reachable (first definition wins, _common first)
-for _m in (_c, core, hydrology, dedup, ann, multimodal, web):
-    for _k, _v in vars(_m).items():
-        if not _k.startswith("__") and _k not in globals():
-            globals()[_k] = _v
-del _m, _k, _v, _c
+from ._common import ORACLES, QUERIES  # noqa: F401
+from .core import flagship  # noqa: F401

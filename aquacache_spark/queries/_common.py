@@ -29,16 +29,13 @@ continuous-measurement fact (event_type ≈ series key for QC operators);
 
 from __future__ import annotations
 
+import pathlib as _pathlib
 from typing import Callable, Dict
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import catalog
-from ..session import local_df as _ldf
-from ..operators.corrections import Correction, apply_corrections
-from ..operators.daily import daily_rollup
-from ..operators.doy import doy_stats
 
 QUERIES: Dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: Dict[str, str] = {}
@@ -111,9 +108,6 @@ def _lang_filter_sql(lang: str) -> str:
     words = ", ".join(f"'{w}'" for w in LANG_STOPWORDS[lang])
     return (f"CAST(len(list_filter(toks, t -> t IN ({words}))) AS DOUBLE)"
             f" / greatest(len(toks), 1)")
-
-
-import pathlib as _pathlib
 
 
 _FIXDIR = _pathlib.Path(__file__).resolve().parent.parent.parent / "fixtures" / "connectors"

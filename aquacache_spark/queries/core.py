@@ -5,38 +5,15 @@ Split out of the original flat queries.py (r9); section order preserved.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window  # noqa: F401
-from pyspark.sql import functions as F  # noqa: F401
+from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import functions as F
 
-from ._common import (  # noqa: F401
-    Callable,
-    Column,
-    Correction,
-    DSUM,
-    DataFrame,
-    Dict,
-    F,
-    ORACLES,
-    QUERIES,
-    R,
-    SparkSession,
-    Window,
-    _FIXDIR,
-    _RASTER_CELLS_SQL,
-    _REFRESH_LADDER_AVG,
-    _exact_mean_of,
-    _exact_sum_col,
-    _lang_filter_sql,
-    _ldf,
-    _pathlib,
-    _raster_cells,
-    _refresh_tail_sql,
-    _round,
-    _t,
-    apply_corrections,
-    catalog,
-    daily_rollup,
-    doy_stats,
+from ..operators.corrections import Correction, apply_corrections
+from ..operators.daily import daily_rollup
+from ..operators.doy import doy_stats
+from ..session import local_df as _ldf
+from ._common import (
+    DSUM, R, _exact_mean_of, _exact_sum_col, _refresh_tail_sql, _round, _t,
     register,
 )
 
@@ -1605,7 +1582,6 @@ def donor_offset_scoring(spark: SparkSession, sf_dir: str) -> DataFrame:
 # with min_gap/max_gap bounds :16-17): dense hourly grid for the target
 # series, gaps of 2..24 missing points filled from the donor minus the
 # mean donor-minus-target offset (:1106-1107 subtracts).
-# Full pipeline: operators/impute_pipeline.py.
 # ---------------------------------------------------------------------------
 
 _FILL_ORACLE = f"""

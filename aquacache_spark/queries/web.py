@@ -8,40 +8,11 @@ tests/test_import_boundary.py pins it.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window  # noqa: F401
-from pyspark.sql import functions as F  # noqa: F401
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
 
-from ._common import (  # noqa: F401
-    Callable,
-    Column,
-    Correction,
-    DSUM,
-    DataFrame,
-    Dict,
-    F,
-    ORACLES,
-    QUERIES,
-    R,
-    SparkSession,
-    Window,
-    _FIXDIR,
-    _RASTER_CELLS_SQL,
-    _REFRESH_LADDER_AVG,
-    _exact_mean_of,
-    _exact_sum_col,
-    _lang_filter_sql,
-    _ldf,
-    _pathlib,
-    _raster_cells,
-    _refresh_tail_sql,
-    _round,
-    _t,
-    apply_corrections,
-    catalog,
-    daily_rollup,
-    doy_stats,
-    register,
-)
+from ..session import local_df as _ldf
+from ._common import _t, register
 
 
 # ---------------------------------------------------------------------------

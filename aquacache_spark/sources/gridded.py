@@ -131,17 +131,6 @@ def hrdps_forecast_steps(
     )
 
 
-def fetch_grib(url: str):  # pragma: no cover - environment adapter
-    """GRIB *fetch* adapter (the download half of terra::rast(url) in
-    the reference). No network in this environment; a deployment
-    injects one returning the raw bytes — decode itself is real, see
-    ``grib_cells``."""
-    raise NotImplementedError(
-        "GRIB fetch requires network access; inject a fetcher returning "
-        "raw GRIB2 bytes (or stage files and use grib_cells on a path)"
-    )
-
-
 GRIB_CELL_SCHEMA = ("file string, msg int, fhours int, x int, y int, "
                     "lon double, lat double, value double")
 

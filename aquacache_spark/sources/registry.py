@@ -100,18 +100,6 @@ def read_jdbc(spark: SparkSession, url: str, table: str, **opts) -> DataFrame:
         .options(**{k: str(v) for k, v in opts.items()}).load()
 
 
-def _stub_http(name: str):
-    @register_source(name)
-    def fetch(spark: SparkSession, **kwargs) -> DataFrame:  # pragma: no cover
-        raise NotImplementedError(
-            f"{name}: network fetch not available in this environment; "
-            "the reference connector maps to an HTTP/API pull "
-            "(see sources/registry.py docstring). Pipe a fetched file "
-            "through read_csv/read_parquet instead."
-        )
-    return fetch
-
-
 @register_source("downloadAquarius")
 def download_aquarius_src(spark: SparkSession, location: str, parameter: str,
                           start_datetime: str, end_datetime: str,

@@ -17,18 +17,10 @@ openxlsx read calls at :44-96 and QC rules at :98-141):
   unresolved sheets are rejected, not imported (:142-176).
 
 The per-workbook parse is the pure-python kernel in functions/xlsx.py
-(driver-sized artifacts). ``read_snow_workbooks`` distributes a *batch*
-of workbook paths with one kernel call per file — the 100 TB shape for
-bulk ingest is "many small files, parallel by path", so the paths
-DataFrame is repartitioned and the parse runs executor-side inside
-``mapInPandas`` with no driver fan-in.
+(driver-sized artifacts).
 """
 
 from __future__ import annotations
-
-from typing import Iterator, Sequence
-
-import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -131,29 +123,6 @@ def read_snow_workbook(
         sdf = sdf.join(F.broadcast(known), "location_name", "left_semi")
         mdf = mdf.join(F.broadcast(known), "location_name", "left_semi")
     return {"surveys": sdf, "measurements": mdf, "rejected": rejected}
-
-
-def read_snow_workbooks(
-    spark: SparkSession, paths: Sequence[str], parallelism: int | None = None
-) -> DataFrame:
-    """Distributed bulk parse: measurements of many workbooks.
-
-    The path list shuffles across executors; each task runs the
-    pure-python kernel on its files. No driver fan-in — results stay
-    a DataFrame.
-    """
-    pdf = spark.createDataFrame(
-        [(p,) for p in paths], T.StructType([T.StructField("path", T.StringType())])
-    ).repartition(parallelism or min(len(paths), 32))
-
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [n for n, _ in MEASUREMENT_FIELDS]
-        for batch in batches:
-            for p in batch["path"]:
-                _, rows = parse_snow_workbook(p)
-                yield pd.DataFrame(rows, columns=cols)
-
-    return pdf.mapInPandas(parse, MEASUREMENT_SCHEMA)
 
 
 def qc_survey_batch(

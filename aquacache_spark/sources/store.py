@@ -392,8 +392,7 @@ class ParquetMergeStore:
         return {"version": version, "buckets_rewritten": len(written),
                 "dirs_before": dirs_before}
 
-    def maybe_optimize(self, max_fragments: int = 16,
-                       buckets: Sequence[int] | None = None) -> dict | None:
+    def maybe_optimize(self, max_fragments: int = 16) -> dict | None:
         """Auto-compaction policy: run ``optimize`` only when the
         current snapshot is spread across more than ``max_fragments``
         version dirs (each merge commit adds one, so read() degrades
@@ -407,7 +406,7 @@ class ParquetMergeStore:
             return None
         if len(set(m["buckets"].values())) <= max_fragments:
             return None
-        return self.optimize(buckets)
+        return self.optimize()
 
     def _probe(self, updates: DataFrame) -> dict[int, int]:
         """Rows per touched bucket, from one collect that also finds

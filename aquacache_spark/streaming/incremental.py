@@ -25,7 +25,7 @@ data, never table size.
 from __future__ import annotations
 
 from functools import reduce
-from typing import Callable, Sequence
+from typing import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -140,7 +140,6 @@ def incremental_daily_refresh(
     ts_col: str = "timeseries_id",
     dt_col: str = "datetime",
     date_col: str = "date",
-    value_col: str = "value",
 ) -> DataFrame:
     """Recompute only the changed (series, date-window) daily slices and
     classify against the existing daily rows (change-only upsert plan).
@@ -148,6 +147,9 @@ def incremental_daily_refresh(
     Output: recomputed daily rows + ``merge_action`` ∈
     {insert, update, unchanged} — exactly what feeds a Delta MERGE with
     ``WHEN MATCHED AND <changed> THEN UPDATE`` (patch_48.R:401-408).
+    A row is ``insert`` only when its (series, date) key is absent from
+    the existing frame: a stored day whose value is NULL (the dense
+    spine ``refresh_calculated_daily`` writes) is matched, not new.
     A row is ``unchanged`` only when every non-key column that both
     the recomputed and the existing frame carry is null-safe equal
     (the ``IS DISTINCT FROM`` guard over the whole row), so a revision
@@ -172,18 +174,18 @@ def incremental_daily_refresh(
     shared = [c for c in fresh.columns
               if c in existing_daily.columns and c not in (ts_col, date_col)]
     old = existing_daily.select(
-        F.col(ts_col), F.col(date_col),
+        F.col(ts_col), F.col(date_col), F.lit(True).alias("__present"),
         *(F.col(c).alias(f"__old_{c}") for c in shared),
     )
     joined = fresh.join(old, [ts_col, date_col], "left")
     same = [F.col(c).eqNullSafe(F.col(f"__old_{c}")) for c in shared]
     action = (
-        F.when(F.col(f"__old_{value_col}").isNull() & F.col(value_col).isNotNull(), "insert")
+        F.when(F.col("__present").isNull(), "insert")
         .when(reduce(lambda a, b: a & b, same), "unchanged")
         .otherwise("update")
     )
     return (joined.withColumn("merge_action", action)
-            .drop(*(f"__old_{c}" for c in shared)))
+            .drop("__present", *(f"__old_{c}" for c in shared)))
 
 
 def trim_daily_tail(

@@ -9,10 +9,11 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from aquacache_spark.session import get_spark  # noqa: E402
-from aquacache_spark import catalog  # noqa: E402
 
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_CORRECTNESS = "/root/testdata/sf0.01"
+TABLES = ("region", "nation", "customer", "supplier", "part", "orders",
+          "lineitem", "events", "documents", "embeddings")
 
 
 @pytest.fixture(scope="session")
@@ -39,7 +40,7 @@ def duck_con(sf_dir: str) -> duckdb.DuckDBPyConnection:
     # memory pressure (the same oracles pass standalone at 1.4 GB RSS)
     con.execute("SET threads = 8")
     con.execute("SET memory_limit = '24GB'")
-    for t in catalog.TABLES:
+    for t in TABLES:
         con.execute(
             f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
         )

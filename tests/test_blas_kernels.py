@@ -3,6 +3,37 @@ fixtures whose values sit far from any quantization grid, the two
 paths must agree exactly — pins the semantic relationship that
 input-quantization variance could otherwise silently erode."""
 
+import math
+import struct
+from typing import Sequence
+
+
+def assert_bit_parity(jvm_df, twin_df, keys: Sequence[str]) -> None:
+    """The kernel-twin parity pin: collect both frames, align on
+    ``keys``, and require EXACT equality — floats by bit pattern
+    (struct.pack), NULL == NULL, schema column set equal. Raises
+    AssertionError with the first diverging (key, column)."""
+    def norm(v):
+        if isinstance(v, float):
+            if math.isnan(v):
+                return ("f64", "nan")
+            return ("f64", struct.pack("<d", v))
+        return v
+
+    a_rows = {tuple(r[k] for k in keys): r.asDict() for r in jvm_df.collect()}
+    b_rows = {tuple(r[k] for k in keys): r.asDict() for r in twin_df.collect()}
+    assert a_rows.keys() == b_rows.keys(), (
+        f"key sets differ: only-jvm={sorted(set(a_rows) - set(b_rows))[:5]} "
+        f"only-twin={sorted(set(b_rows) - set(a_rows))[:5]}")
+    cols = set(next(iter(a_rows.values())).keys()) if a_rows else set()
+    for key, ra in a_rows.items():
+        rb = b_rows[key]
+        assert set(rb.keys()) == cols, (key, sorted(rb.keys()), sorted(cols))
+        for c in cols:
+            assert norm(ra[c]) == norm(rb[c]), (
+                f"bit-parity broken at key={key} col={c}: "
+                f"jvm={ra[c]!r} twin={rb[c]!r}")
+
 
 def test_mann_kendall_twin_bit_parity(spark):
     """The kernel-twin contract pin (functions/kernel_twin) for
@@ -13,7 +44,6 @@ def test_mann_kendall_twin_bit_parity(spark):
     and odd slope counts for both interpolation branches)."""
     import datetime as dt
 
-    from aquacache_spark.functions.kernel_twin import assert_bit_parity
     from aquacache_spark.operators.trend import (
         mann_kendall, mann_kendall_blas)
 

@@ -66,10 +66,10 @@ def test_grib2_complex_roundtrip(grid, packing):
 @settings(max_examples=25, deadline=None)
 @given(grids(max_side=10))
 def test_pgraster_and_geotiff_roundtrip_random(grid):
-    from aquacache_spark.functions.geotiff import (decode_geotiff,
-                                                   encode_geotiff)
+    from aquacache_spark.functions.geotiff import encode_geotiff
     from aquacache_spark.functions.pgraster import (decode_pgraster,
                                                     encode_pgraster)
+    from helpers import decode_geotiff
 
     w, h, vals = grid
     d = decode_pgraster(encode_pgraster(vals, w, h, 10.0, 20.0, 0.5, -0.5))

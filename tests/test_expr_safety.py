@@ -10,9 +10,9 @@ import pytest
 from aquacache_spark.plans.expr_safety import (
     UnsafeExpressionError,
     assert_safe_numeric_expression,
-    is_safe_numeric_expression,
     substitute_identifiers,
 )
+from helpers import is_safe_numeric_expression
 
 
 class TestCaretHazard:

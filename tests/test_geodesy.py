@@ -1,15 +1,18 @@
 """Vincenty spheroid geodesy vs authoritative golden values.
 
-Golden sources: the WGS84 quarter meridian and equatorial quarter arc
-(closed-form ellipsoid constants) and Vincenty's own published test
-line (Flinders Peak -> Buninyong, 54972.271 m)."""
+The inverse problem (``helpers.with_vincenty_distance``) is the test
+oracle for the library's direct problem (``with_vincenty_projection``);
+it is pinned here first. Golden sources: the WGS84 quarter meridian
+and equatorial quarter arc (closed-form ellipsoid constants) and
+Vincenty's own published test line (Flinders Peak -> Buninyong,
+54972.271 m)."""
 
 import math
 
 from pyspark.sql import functions as F
 
-from aquacache_spark.functions.geodesy import (with_vincenty_distance,
-                                               with_vincenty_projection)
+from aquacache_spark.functions.geodesy import with_vincenty_projection
+from helpers import with_vincenty_distance
 
 
 def _dist(spark, lat1, lon1, lat2, lon2):
@@ -75,7 +78,7 @@ def test_project_round_trips_through_inverse(spark):
 def test_expression_only_no_python_udf(spark):
     df = spark.createDataFrame([(1.0, 2.0, 3.0, 4.0)],
                                "a double, b double, c double, d double")
-    out = with_vincenty_distance(
+    out = with_vincenty_projection(
         df, F.col("a"), F.col("b"), F.col("c"), F.col("d"))
     plan = out._sc._jvm.PythonSQLUtils.explainString(
         out._jdf.queryExecution(), "formatted")
@@ -83,72 +86,22 @@ def test_expression_only_no_python_udf(spark):
     assert "Exchange" not in plan  # pure map-side
 
 
-def test_antipodal_exact_quarter_meridian_pair():
-    # (0,0) -> (0,180): the geodesic runs over the pole, twice the
-    # WGS84 quarter meridian (10001965.7293 m, a published constant)
-    from aquacache_spark.functions.geodesy import geodesic_inverse_exact
-
-    d, _ = geodesic_inverse_exact(0.0, 0.0, 0.0, 180.0)
-    assert abs(d - 2 * 10001965.7293) < 1e-3
-
-
-def test_antipodal_matches_geographiclib_example():
-    # Karney, "Algorithms for geodesics" (2013), the antipodal inverse
-    # example: phi1=-30, phi2=29.9, lam12=179.8 ->
-    # s12=19989832.827610 m, alpha1=161.890524...; cross-validated via
-    # the independent Vincenty DIRECT implementation in this module
-    # (projecting from p1 with this azimuth/distance lands on p2).
-    from aquacache_spark.functions.geodesy import geodesic_inverse_exact
-
-    d, a = geodesic_inverse_exact(-30.0, 0.0, 29.9, 179.8)
-    assert abs(d - 19989832.827610) < 1e-3
-    assert abs(a - 161.890524) < 1e-5
-    # mirror symmetry: westward twin has the same length
-    d2, a2 = geodesic_inverse_exact(30.0, 10.0, -29.9, 189.8)
-    assert abs(d2 - d) < 1e-6
-    assert abs(a2 - (180.0 - 161.890524)) < 1e-5
-
-
-def test_with_geodesic_distance_routes_antipodal_rows(spark):
-    from aquacache_spark.functions.geodesy import with_geodesic_distance
-
-    rows = [
-        (1, -37.95103341666667, 144.42486788888888,
-         -37.65282113888889, 143.92649552777777),   # Vincenty hot path
-        (2, 0.0, 0.0, 0.0, 180.0),                   # antipodal
-        (3, -30.0, 0.0, 29.9, 179.8),                # near-antipodal
-        (4, 45.0, -120.0, 46.0, -119.0),             # Vincenty hot path
+def test_direct_roundtrip_near_antipode(spark):
+    """Across the antipodal strip, projecting p1 by the exact inverse
+    solution (s, azi) must land on p2. The solutions come from an
+    exact (Gauss-Legendre quadrature) inverse solver; the first pair
+    is Karney's published antipodal example (Algorithms for geodesics,
+    2013: s12 = 19989832.827610 m, alpha1 = 161.890524 deg)."""
+    cases = [
+        ((-30.0, 0.0, 29.9, 179.8), (19989832.82760953, 161.89052473632543)),
+        ((10.0, 5.0, -10.05, 184.9), (19997550.69755315, 171.08063951777385)),
+        ((0.5, 0.0, -0.5, 179.5), (19980861.908890963, 55.96970412003686)),
+        ((55.0, 30.0, -54.95, 209.85),
+         (19996714.95806063, 19.975738667491864)),
     ]
     df = spark.createDataFrame(
-        rows, "pid bigint, lat1 double, lon1 double, lat2 double, "
-              "lon2 double")
-    out = {r["pid"]: r["dist_m"]
-           for r in with_geodesic_distance(
-               df, "lat1", "lon1", "lat2", "lon2").collect()}
-    assert len(out) == 4
-    assert abs(out[1] - 54972.271) < 1e-3       # Flinders-Buninyong
-    assert abs(out[2] - 20003931.4586) < 1e-3
-    assert abs(out[3] - 19989832.8276) < 1e-3
-    # Vincenty would have been km off on the flagged rows
-    assert abs(out[2] - 19903593.39) > 50_000
-
-
-def test_direct_roundtrip_near_antipode(spark):
-    # inverse -> direct consistency across the antipodal strip: the
-    # exact solver's (s, azi) projected from p1 must land on p2
-    import math
-
-    from pyspark.sql import functions as F
-
-    from aquacache_spark.functions.geodesy import (
-        geodesic_inverse_exact, with_vincenty_projection)
-
-    pairs = [(-30.0, 0.0, 29.9, 179.8), (10.0, 5.0, -10.05, 184.9),
-             (0.5, 0.0, -0.5, 179.5), (55.0, 30.0, -54.95, 209.85)]
-    sols = [geodesic_inverse_exact(*p) for p in pairs]
-    df = spark.createDataFrame(
         [(la1, lo1, la2, lo2, math.radians(a), s)
-         for (la1, lo1, la2, lo2), (s, a) in zip(pairs, sols)],
+         for (la1, lo1, la2, lo2), (s, a) in cases],
         "lat1 double, lon1 double, lat2 double, lon2 double, "
         "azi double, d double")
     got = with_vincenty_projection(
@@ -158,57 +111,3 @@ def test_direct_roundtrip_near_antipode(spark):
         assert abs(r["dest_lat"] - r["lat2"]) < 1e-6, r
         dlon = (r["dest_lon"] - r["lon2"] + 180) % 360 - 180
         assert abs(dlon) < 1e-6, r
-
-
-def test_direct_exact_matches_karney_table2():
-    """Karney (2013, Algorithms for geodesics) Table 2 published
-    direct-problem example: phi1=40, alpha1=30, s12=10,000 km."""
-    from aquacache_spark.functions.geodesy import geodesic_direct_exact
-
-    lat2, lon2, azi2 = geodesic_direct_exact(40.0, 0.0, 30.0, 10_000_000.0)
-    assert abs(lat2 - 41.79331020506) < 1e-9
-    assert abs(lon2 - 137.84490004377) < 1e-9
-    assert abs(azi2 - 149.09016931807) < 1e-9
-
-
-def test_direct_exact_roundtrips_through_exact_inverse():
-    """direct(p1, azi, s) -> p2, then inverse(p1, p2) must recover s
-    to sub-mm and azi to ~1e-8 deg — including the polar regime the
-    series direct solution coarsens in, long lines near the antipode,
-    and exact-equatorial lines."""
-    from aquacache_spark.functions.geodesy import (
-        geodesic_direct_exact, geodesic_inverse_exact)
-
-    cases = [(40.0, 0.0, 30.0, 10_000_000.0),
-             (-30.0, 10.0, 170.0, 5_000_000.0),
-             (80.0, 20.0, 10.0, 3_000_000.0),    # crosses the pole side
-             (89.5, 0.0, 45.0, 200_000.0),       # near-pole start
-             (-88.0, 120.0, 181.0, 500_000.0),
-             (0.0, 0.0, 90.0, 1_000_000.0),      # exact equatorial
-             (0.0, 0.0, 90.0, 19_000_000.0),     # long equatorial
-             (0.0, 5.0, 270.0, 2_000_000.0),     # westward equatorial
-             (12.0, -60.0, 95.0, 19_900_000.0),  # near-antipodal line
-             (45.0, 100.0, 359.0, 12_345_678.0)]
-    for (la, lo, az, s) in cases:
-        plat, plon, _azi2 = geodesic_direct_exact(la, lo, az, s)
-        d, a1 = geodesic_inverse_exact(la, lo, plat, plon)
-        assert abs(d - s) < 1e-3, (la, lo, az, s, d)
-        diff = abs(a1 - az % 360)
-        assert min(diff, 360 - diff) < 1e-7, (la, lo, az, a1)
-
-
-def test_inverse_exact_general_pairs_take_first_crossing():
-    """Regression for the former nearest-to-sigma1+pi crossing choice:
-    a plain 5,000 km SHORT arc must not resolve to the second latitude
-    crossing (the old code returned 6,744 km here), and equatorial
-    pairs short of (1-f)*pi resolve in closed form."""
-    import math as m
-
-    from aquacache_spark.functions.geodesy import geodesic_inverse_exact
-
-    d, a1 = geodesic_inverse_exact(-30.0, 10.0, -73.019236798, 34.746350141)
-    assert abs(d - 5_000_000.0) < 1.0
-    assert abs(a1 - 170.0) < 1e-6
-    d, a1 = geodesic_inverse_exact(0.0, 0.0, 0.0, 90.0)
-    assert abs(d - m.radians(90.0) * 6378137.0) < 1e-6
-    assert a1 == 90.0

@@ -5,8 +5,28 @@ is checked against the fixture CSV twin."""
 
 import struct
 
-from aquacache_spark.functions.grib2 import (_su16, _unpack_simple,
+import numpy as np
+
+from aquacache_spark.functions.grib2 import (_expand_bitmap, _su16,
+                                             _unpack_simple_present,
                                              decode_grib2)
+
+
+def _unpack_simple(packed, ngrid, ref, e, d, nbits, bitmap):
+    """Simple packing (template 7.0) over a ``ngrid``-cell grid with an
+    optional bitmap; the section-5 present count is the bitmap
+    popcount, or the grid size without one."""
+    ndata = ngrid if bitmap is None else int(np.unpackbits(
+        np.frombuffer(bitmap, dtype=np.uint8))[:ngrid].sum())
+    sec5 = struct.pack(
+        ">IBIHfHHBB", 21, 5, ndata, 0, ref,
+        (0x8000 | -e) if e < 0 else e,
+        (0x8000 | -d) if d < 0 else d,
+        nbits, 0,
+    )
+    out = _expand_bitmap(_unpack_simple_present(packed, ndata, sec5),
+                         ngrid, bitmap)
+    return [None if np.isnan(v) else v for v in out.tolist()]
 
 
 def test_simple_packing_hand_computed():

@@ -11,7 +11,6 @@ import datetime as dt
 import pytest
 
 from aquacache_spark.sources.gridded import (
-    fetch_grib,
     hrdpa_normalize,
     hrdps_forecast_steps,
     hrdps_select_run,
@@ -110,11 +109,6 @@ def test_hrdps_step_expansion(spark, runs):
     s48 = next(s for s in steps if s["step"] == 48)
     assert s48["valid_from"] == T("2024-01-03 06:00")
     assert s48["model"] == "HRDPS" and s48["forecast"]
-
-
-def test_fetch_is_gated():
-    with pytest.raises(NotImplementedError):
-        fetch_grib("https://dd/x.grib2")
 
 
 def test_caldas_hours_validation():

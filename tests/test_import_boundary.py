@@ -1,22 +1,27 @@
-"""Import boundary between the AquaCache package and the leftover
-LLM-corpus dedup, ANN-search, web-crawl and media-decoding tier
-modules, and the record of what the cuts toward the AquaCache surface
-deleted.
+"""Import boundary, package-wide reachability, and the record of what
+the cuts toward the AquaCache surface deleted.
 
-Static AST scan, no Spark: the tier modules may be imported only by
-the four query modules that host perfbench's batch probes and by each
-other, and each of those query modules registers exactly one query
-that reaches tier code: its probe. The lists may only shrink. Deleted
-modules stay gone and deleted queries stay unregistered. Every
-definition in the tier files, and in the library files listed in
-``QUERY_REACHED``, must be reachable from a registered query (module
-constants count as definitions; the walk follows plain names, imported
-names and ``module.name`` attribute references), so dead code cannot
-hide behind a live query.
+Static AST scan, no Spark:
+
+- The leftover LLM-corpus dedup, ANN-search, web-crawl and
+  media-decoding tier modules may be imported only by the four query
+  modules that host perfbench's batch probes and by each other, and
+  each of those query modules registers exactly one query that reaches
+  tier code: its probe. The lists may only shrink. Deleted modules
+  stay gone and deleted queries stay unregistered.
+- Every definition in the tier files, and in the library files listed
+  in ``QUERY_REACHED``, must be reachable from a registered query.
+- Every top-level definition in the package (functions, classes and
+  module constants) must be reachable from the library's entry points
+  (``_library_roots``), or be listed in ``ALLOWED_UNREACHED`` with the
+  reference file it serves. The walk follows plain names, imported
+  names, re-exports and ``M.name`` after ``M`` names a module.
+- Query modules import only what they use.
 """
 
 import ast
 import functools
+import re
 from pathlib import Path
 
 PKG = Path(__file__).resolve().parent.parent / "aquacache_spark"
@@ -40,6 +45,8 @@ GONE = {
     "aquacache_spark.functions.gif",
     "aquacache_spark.functions.avi",
     "aquacache_spark.operators.funnel",
+    "aquacache_spark.operators.skew",
+    "aquacache_spark.operators.impute_pipeline",
 }
 # Queries deleted with the generic-analytics, LLM-text and web-graph
 # families: none of them may be registered again.
@@ -174,72 +181,111 @@ def test_each_probe_host_registers_only_its_listed_tier_queries():
 
 
 def _top_level_defs(tree: ast.Module) -> dict[str, ast.AST]:
-    """Functions, classes and single-name module constants: a constant
-    built at import (``_ZZ = _zigzag_order()``) reaches what it calls."""
+    """Functions, classes and module constants (a tuple assignment
+    defines each of its names): a constant built at import
+    (``_ZZ = _zigzag_order()``) reaches what it calls."""
     out = {}
     for n in tree.body:
         if isinstance(n, (ast.FunctionDef, ast.ClassDef)):
             out[n.name] = n
-        elif isinstance(n, ast.Assign) and isinstance(n.targets[0],
-                                                      ast.Name):
-            out[n.targets[0].id] = n
-        elif isinstance(n, ast.AnnAssign) and isinstance(n.target,
-                                                         ast.Name):
-            out[n.target.id] = n
+        for name in _assigned(n):
+            out[name] = n
     return out
+
+
+def _assigned(node: ast.AST) -> list[str]:
+    """Names a module-level ``a = ...`` / ``a, b = ...`` defines."""
+    if isinstance(node, ast.Assign):
+        targets = node.targets
+    elif isinstance(node, ast.AnnAssign):
+        targets = [node.target]
+    else:
+        return []
+    return [e.id for t in targets
+            for e in (t.elts if isinstance(t, ast.Tuple) else [t])
+            if isinstance(e, ast.Name)]
+
+
+def _binds(mod: str, node: ast.AST) -> dict[str, tuple[str, str]]:
+    """Name -> (module, name) that one import statement binds; an
+    ``import a.b as M`` binds M to (a, b)."""
+    if isinstance(node, ast.ImportFrom):
+        is_pkg = mod in MODULES and MODULES[mod].name == "__init__.py"
+        base = _from_base(mod, is_pkg, node)
+        return {a.asname or a.name: (base, a.name) for a in node.names}
+    if isinstance(node, ast.Import):
+        return {a.asname: tuple(a.name.rpartition(".")[::2])
+                for a in node.names if a.asname}
+    return {}
+
+
+@functools.cache
+def _trees() -> dict[str, ast.Module]:
+    return {m: ast.parse(p.read_text()) for m, p in MODULES.items()}
+
+
+@functools.cache
+def _defs() -> dict[str, dict[str, ast.AST]]:
+    return {m: _top_level_defs(t) for m, t in _trees().items()}
+
+
+@functools.cache
+def _aliases() -> dict[str, dict[str, tuple[str, str]]]:
+    """Module-level import bindings of each package module."""
+    return {m: {k: v for n in t.body for k, v in _binds(m, n).items()}
+            for m, t in _trees().items()}
+
+
+def _refs(mod: str, node: ast.AST) -> set:
+    """(module, name) of what one definition or statement uses: plain
+    names, imported names and ``M.name`` after ``M`` names a module."""
+    local = _defs().get(mod, {})
+    names = dict(_aliases().get(mod, {}))
+    for n in ast.walk(node):
+        names.update(_binds(mod, n))
+    out = set()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Attribute) and isinstance(n.value, ast.Name):
+            base, name = names.get(n.value.id, ("", ""))
+            if f"{base}.{name}" in MODULES:
+                out.add((f"{base}.{name}", n.attr))
+        elif isinstance(n, ast.Name):
+            if n.id in local:
+                out.add((mod, n.id))
+            if n.id in names:
+                out.add(names[n.id])
+    return out
+
+
+def _reach(roots) -> frozenset:
+    """Every (module, name) definition reachable from ``roots``; a name
+    a module only imports leads on to the definition it imports."""
+    defs, aliases = _defs(), _aliases()
+    stack, seen = list(roots), set()
+    while stack:
+        key = stack.pop()
+        if key in seen:
+            continue
+        seen.add(key)
+        mod, name = key
+        if name in defs.get(mod, {}):
+            stack.extend(_refs(mod, defs[mod][name]))
+        elif name in aliases.get(mod, {}):
+            stack.append(aliases[mod][name])
+    return frozenset(k for k in seen if k[1] in defs.get(k[0], {}))
+
+
+def _query_roots() -> set:
+    return {(m, name) for m in MODULES
+            if m.startswith("aquacache_spark.queries.")
+            for name, fn in _defs()[m].items()
+            if isinstance(fn, ast.FunctionDef) and _registered(fn)}
 
 
 @functools.cache
 def _reached_from_queries() -> frozenset:
     """(module, name) of every definition a registered query reaches."""
-    trees = {m: ast.parse(p.read_text()) for m, p in MODULES.items()}
-    defs = {m: _top_level_defs(t) for m, t in trees.items()}
-    # module-level ``from x import name [as alias]`` -> (x, name)
-    aliases = {
-        m: {a.asname or a.name:
-            (_from_base(m, MODULES[m].name == "__init__.py", n), a.name)
-            for n in t.body if isinstance(n, ast.ImportFrom)
-            for a in n.names}
-        for m, t in trees.items()}
-
-    def refs(mod: str, node: ast.AST) -> set:
-        """(module, name) definitions one definition names or imports."""
-        is_pkg = MODULES[mod].name == "__init__.py"
-        names = dict(aliases[mod])
-        out = set()
-        for n in ast.walk(node):
-            if isinstance(n, ast.ImportFrom):
-                base = _from_base(mod, is_pkg, n)
-                out |= {(base, a.name) for a in n.names
-                        if a.name in defs.get(base, {})}
-                names.update({a.asname or a.name: (base, a.name)
-                              for a in n.names})
-        for n in ast.walk(node):
-            if isinstance(n, ast.Attribute) and isinstance(n.value,
-                                                           ast.Name):
-                # ``X.lang_id`` after ``from ..functions import text as X``
-                base, name = names.get(n.value.id, ("", ""))
-                if f"{base}.{name}" in MODULES:
-                    out.add((f"{base}.{name}", n.attr))
-            elif isinstance(n, ast.Name):
-                if n.id in defs[mod]:
-                    out.add((mod, n.id))
-                elif n.id in aliases[mod]:
-                    out.add(aliases[mod][n.id])
-        return out
-
-    stack = [(m, name) for m in MODULES
-             if m.startswith("aquacache_spark.queries.")
-             for name, fn in defs[m].items()
-             if isinstance(fn, ast.FunctionDef) and _registered(fn)]
-    seen = set()
-    while stack:
-        mod, name = stack.pop()
-        if (mod, name) in seen or name not in defs.get(mod, {}):
-            continue
-        seen.add((mod, name))
-        stack.extend(refs(mod, defs[mod][name]))
-    return frozenset(seen)
+    return _reach(_query_roots())
 
 
 def _unreached(mods) -> list[str]:
@@ -265,3 +311,124 @@ def test_deleted_queries_stay_unregistered():
         for fn in ast.parse(p.read_text()).body
         if isinstance(fn, ast.FunctionDef)}
     assert registered & GONE_QUERIES == set()
+
+
+# Package-wide reachability. The library's entry points: the registered
+# queries; every module-level statement that is not a definition or an
+# import (it runs at import); the public names of the modules below;
+# every ``@register_source`` connector with the dispatch that calls them
+# by name (the reference's ``source_fx``, getNewContinuous.R:481-486);
+# and every package name the driver contract, bench CLI, scale check
+# and perfbench import or reference.
+PUBLIC = (
+    "aquacache_spark.api",
+    "aquacache_spark.daily_update",
+    "aquacache_spark.session",
+    "aquacache_spark.sources.store",
+    "aquacache_spark.streaming",
+)
+DISPATCH = {("aquacache_spark.sources.registry", "dispatch"),
+            ("aquacache_spark.sources.registry", "validate_contract")}
+REPO = PKG.parent
+DRIVERS = (REPO / "__spark_entry__.py", REPO / "bench.py",
+           REPO / "scale_check.py", *sorted((REPO / "perfbench").glob("*.py")))
+# Definitions no entry point reaches that stay because they re-express
+# a reference function no query or connector calls yet; each value
+# names the reference file or patch it serves. What they reach stays
+# with them. The dict may only shrink.
+ALLOWED_UNREACHED = {
+    "aquacache_spark.sources.discrete.validate_batch":
+        "R/getNewDiscrete.R:8-35 sample/result contract",
+    "aquacache_spark.sources.discrete.map_parameters":
+        "R/downloadEQWin.R:43 import_parameter_mappings",
+    "aquacache_spark.sources.discrete.results_wide":
+        "R/getNewDiscrete.R:8-35 results per sample",
+    "aquacache_spark.operators.guidelines.validate_guideline_value_rule":
+        "inst/patches/patch_55.R:849-1060 guideline_value_rules trigger",
+    "aquacache_spark.operators.catalog_admin.insert_timeseries":
+        "R/addACTimeseries.R insert after the validation ladder",
+    "aquacache_spark.sources.raster.to_reference_and_tiles":
+        "R/insertACRaster.R:4-8 rasters_reference + tiles",
+    "aquacache_spark.sources.hydat.hydat_version_check":
+        "R/hydat_check.R:13-72",
+    "aquacache_spark.sources.hydat.update_hydat_datums":
+        "R/update_hydat_datums.R:8-17 (a warning stub there too)",
+    "aquacache_spark.operators.raster.export_geotiff":
+        "R/writeRaster.R:330-361 terra::writeRaster GTiff",
+    "aquacache_spark.sources.media.download_wsc_images":
+        "R/downloadWSCImages.R",
+    "aquacache_spark.sources.media.validate_boreholes":
+        "R/insertACBorehole.R:60-128",
+}
+REFERENCE_CITE = re.compile(r"\w\.R\b|patch_\d+")
+
+
+def _connector(fn: ast.AST) -> bool:
+    return isinstance(fn, ast.FunctionDef) and any(
+        isinstance(d, ast.Call) and getattr(d.func, "id", None)
+        == "register_source" for d in fn.decorator_list)
+
+
+def _library_roots() -> set:
+    roots = _query_roots() | DISPATCH
+    for m, tree in _trees().items():
+        public = m.startswith(PUBLIC)
+        roots |= {(m, name) for name, fn in _defs()[m].items()
+                  if _connector(fn) or (public and name[0] != "_")}
+        for n in tree.body:
+            if not (isinstance(n, (ast.FunctionDef, ast.ClassDef,
+                                   ast.Import, ast.ImportFrom))
+                    or _assigned(n)):
+                roots |= _refs(m, n)
+    for path in DRIVERS:
+        roots |= {r for r in _refs(str(path), ast.parse(path.read_text()))
+                  if r[0].startswith("aquacache_spark")}
+    return roots
+
+
+def _unreached_from(roots) -> list[str]:
+    seen = _reach(roots)
+    return sorted(f"{m}.{name}" for m, defs in _defs().items()
+                  for name in defs if (m, name) not in seen)
+
+
+def _key(name: str) -> tuple[str, str]:
+    return tuple(name.rsplit(".", 1))
+
+
+def test_every_library_definition_is_reached_or_cites_the_reference():
+    roots = _library_roots()
+    allowed = {_key(k) for k in ALLOWED_UNREACHED}
+    assert _unreached_from(roots | allowed) == []
+    # each allowed entry is still unreached from the real entry points
+    # (reach it, and it leaves the dict) ...
+    assert sorted(set(ALLOWED_UNREACHED)
+                  - set(_unreached_from(roots))) == []
+    # ... and names the reference file or patch it serves
+    assert [k for k, v in ALLOWED_UNREACHED.items()
+            if not REFERENCE_CITE.search(v)] == []
+
+
+def _unused_imports(scope: ast.AST) -> list[str]:
+    """Names an import binds that its scope (the module, or the
+    function holding a local import) never reads."""
+    used = {n.id for n in ast.walk(scope) if isinstance(n, ast.Name)}
+    out, stack = [], list(ast.iter_child_nodes(scope))
+    while stack:
+        n = stack.pop()
+        if isinstance(n, ast.FunctionDef):
+            out += _unused_imports(n)
+        elif isinstance(n, (ast.Import, ast.ImportFrom)):
+            if getattr(n, "module", None) == "__future__":
+                continue
+            bound = ((a.asname or a.name).split(".")[0] for a in n.names)
+            out += [f"line {n.lineno}: {b}" for b in bound if b not in used]
+        else:
+            stack.extend(ast.iter_child_nodes(n))
+    return out
+
+
+def test_query_modules_import_only_what_they_use():
+    unused = {m: _unused_imports(_trees()[m]) for m in MODULES
+              if m.startswith("aquacache_spark.queries.")}
+    assert {m: u for m, u in unused.items() if u} == {}

@@ -156,6 +156,33 @@ def test_incremental_refresh_classifies_on_every_shared_column(spark):
     assert not any(c.startswith("__old") for c in out.columns)
 
 
+def test_incremental_refresh_inserts_only_absent_days(spark):
+    """A stored day with a NULL value (the dense spine
+    refresh_calculated_daily writes) is matched, so its recompute is
+    an update; only a day missing from the store is an insert."""
+    meas = spark.createDataFrame(
+        [(1, "2024-01-02 00:00:00", 5.0), (1, "2024-01-03 00:00:00", 6.0)],
+        ["timeseries_id", "datetime", "value"],
+    ).withColumn("datetime", F.col("datetime").cast("timestamp"))
+    existing = spark.createDataFrame(
+        [(1, "2024-01-02", None, 0)],
+        "timeseries_id long, date string, value double, count long",
+    ).withColumn("date", F.col("date").cast("date"))
+    changes = spark.createDataFrame(
+        [(1, "2024-01-02 00:00:00", "2024-01-03 23:59:59")],
+        ["timeseries_id", "min_dt", "max_dt"],
+    )
+
+    def rollup(df):
+        return daily_rollup(df, keys=["timeseries_id"], dt_col="datetime",
+                            value_col="value", agg_type="mean")
+
+    out = incremental_daily_refresh(meas, changes, existing, rollup)
+    assert {str(r["date"]): r["merge_action"] for r in out.collect()} == {
+        "2024-01-02": "update", "2024-01-03": "insert"}
+    assert "__present" not in out.columns
+
+
 def test_trim_tail_and_bounds_and_watermarks(spark):
     meas = spark.createDataFrame(
         [(1, "2024-01-01 05:00:00", 1.0), (1, "2024-01-02 07:00:00", 2.0)],

@@ -168,8 +168,8 @@ def test_masked_points_spheroid_distance_matches_request(spark):
     back to the origin recovers the requested offset to sub-mm."""
     from pyspark.sql import functions as F
 
-    from aquacache_spark.functions.geodesy import with_vincenty_distance
     from aquacache_spark.operators.maintenance import masked_location_points
+    from helpers import with_vincenty_distance
 
     locs = spark.createDataFrame(
         [(60.72 + i * 0.3, -135.05 + i * 0.7, f"s{i}") for i in range(8)],

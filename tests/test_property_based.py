@@ -7,8 +7,7 @@ import pandas as pd
 import pytest
 from hypothesis import HealthCheck, given, settings, strategies as st
 
-from aquacache_spark.operators.increments import compute_increments_pd
-from aquacache_spark.plans.expr_safety import is_safe_numeric_expression
+from helpers import compute_increments_pd, is_safe_numeric_expression
 
 values = st.lists(
     st.floats(min_value=0, max_value=1000, allow_nan=False, width=32),
@@ -145,77 +144,6 @@ def test_split_segments_pointwise(spark, existing, new):
     for (s1, e1, v1), (s2, e2, v2) in zip(out, out[1:]):
         assert e1 <= s2  # no overlap
         assert not (e1 == s2 and v1 == v2)  # adjacent equal values merged
-
-
-# --------------------------------------------------------------------------
-# merge_overlapping_same_value_segments (operators/segments.py):
-# implementation-independent invariants — pointwise coverage
-# preservation per value, disjoint+non-touching output, id conservation
-# (each id survives at most once; deleted and surviving ids disjoint).
-# --------------------------------------------------------------------------
-
-@st.composite
-def _id_segments(draw):
-    n = draw(st.integers(0, 5))
-    segs = []
-    for i in range(n):
-        start = draw(st.integers(0, 12))
-        length = draw(st.integers(1, 5))
-        val = draw(st.integers(0, 1))
-        has_id = draw(st.booleans())
-        segs.append((start, start + length, val, i + 1 if has_id else None))
-    return segs
-
-
-@pytest.mark.usefixtures("spark")
-@settings(max_examples=25, deadline=None,
-          suppress_health_check=[HealthCheck.too_slow,
-                                 HealthCheck.function_scoped_fixture])
-@given(segs=_id_segments())
-def test_merge_same_value_invariants(spark, segs):
-    from aquacache_spark.operators.segments import merge_same_value_segments
-
-    T0 = dt.datetime(2024, 1, 1)
-
-    def ts(h):
-        return T0 + dt.timedelta(hours=h)
-
-    df = spark.createDataFrame(
-        [("k", 1, ts(s), ts(e), v, sid) for s, e, v, sid in segs],
-        "key string, timeseries_id int, start_dt timestamp,"
-        " end_dt timestamp, value int, segment_id int",
-    )
-    merged_df, deletes_df = merge_same_value_segments(
-        df, keys=["key"], value_col="value")
-    merged = [
-        ((r["start_dt"] - T0).total_seconds() / 3600,
-         (r["end_dt"] - T0).total_seconds() / 3600,
-         r["value"], r["segment_id"])
-        for r in merged_df.collect()
-    ]
-    deleted = {r["delete_id"] for r in deletes_df.collect()}
-
-    # pointwise per-value coverage preserved
-    hi = max([e for _, e, _, _ in segs], default=0)
-    for v in (0, 1):
-        for t in range(int(hi)):
-            in_cov = any(s <= t < e for s, e, vv, _ in segs if vv == v)
-            out_cov = any(s <= t < e for s, e, vv, _ in merged if vv == v)
-            assert in_cov == out_cov, (v, t, segs, merged)
-
-    # disjoint and non-touching per value
-    for v in (0, 1):
-        rows = sorted([(s, e) for s, e, vv, _ in merged if vv == v])
-        for (s1, e1), (s2, e2) in zip(rows, rows[1:]):
-            assert e1 < s2, (v, rows)
-
-    # id conservation
-    in_ids = {sid for *_, sid in segs if sid is not None}
-    out_ids = [sid for *_, sid in merged if sid is not None]
-    assert len(out_ids) == len(set(out_ids))  # no id on two rows
-    assert set(out_ids) <= in_ids
-    assert deleted <= in_ids
-    assert deleted.isdisjoint(out_ids)
 
 
 # ---- import-mapping resolution vs brute force ----

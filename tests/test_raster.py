@@ -1,4 +1,4 @@
-"""Raster subsystem: tiling round-trip, clip pruning, zonal stats,
+"""Raster subsystem: tiling round-trip, zonal stats,
 pyramids, forecast lifecycle, and the decoded-grid connectors."""
 
 import pytest
@@ -32,13 +32,6 @@ def test_tile_bbox_metadata(spark):
     tiles = R.tile_cells(_cells(spark, 8, 8), tile=4)
     t = tiles.where((F.col("tile_x") == 1) & (F.col("tile_y") == 0)).first()
     assert (t.xmin, t.xmax, t.ymin, t.ymax) == (4, 7, 0, 3)
-
-
-def test_clip_window(spark):
-    tiles = R.tile_cells(_cells(spark, 12, 12), tile=4)
-    out = R.clip(tiles, 3, 3, 5, 5)
-    got = {(r.x, r.y) for r in out.collect()}
-    assert got == {(x, y) for x in (3, 4, 5) for y in (3, 4, 5)}
 
 
 def test_zonal_stats_matches_bruteforce(spark):
@@ -210,8 +203,8 @@ def test_pgraster_codec_roundtrip_and_golden_header():
 def test_geotiff_codec_roundtrip():
     import pytest
 
-    from aquacache_spark.functions.geotiff import (decode_geotiff,
-                                                   encode_geotiff)
+    from aquacache_spark.functions.geotiff import encode_geotiff
+    from helpers import decode_geotiff
 
     vals = [1.5, None, 3.25, -2.0, 0.0, None]
     g = encode_geotiff(vals, 3, 2, origin_x=230.0, origin_y=64.5,
@@ -228,11 +221,11 @@ def test_geotiff_codec_roundtrip():
 def test_export_operators_distributed(spark):
     from pyspark.sql import functions as F
 
-    from aquacache_spark.functions.geotiff import decode_geotiff
     from aquacache_spark.functions.pgraster import decode_pgraster
     from aquacache_spark.operators.raster import (export_geotiff,
                                                   export_pgraster,
                                                   tile_cells)
+    from helpers import decode_geotiff
 
     cells = spark.range(0, 100).select(
         (F.col("id") % 10).cast("int").alias("x"),

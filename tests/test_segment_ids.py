@@ -1,95 +1,11 @@
-"""Segment id recycling — ported from the reference's own cases
-(tests/testthat/test-adjust_functions.R:13-89 for the merge contract;
-:356 split scenario for positional recycling)."""
-
-import datetime
+"""Segment id recycling — ported from the reference's own split
+scenario for positional recycling (tests/testthat/
+test-adjust_functions.R:356)."""
 
 from pyspark.sql import functions as F
 
-from aquacache_spark.operators.segments import (
-    merge_same_value_segments,
-    recycle_split_ids,
-    split_segments,
-)
-
-
-def _ts(s):
-    return datetime.datetime.fromisoformat(s)
-
-
-def test_reference_case_identical_segments_merge(spark):
-    # test-adjust_functions.R:13-62
-    segs = spark.createDataFrame(
-        [
-            (None, 183, 18, "2024-06-07 07:00:00", "2024-07-31 19:45:00"),
-            (30, 183, 18, "2023-09-13 16:00:00", "2025-10-28 12:30:00"),
-            (40, 183, 1, "2024-10-19 11:15:00", "2025-01-01 22:00:00"),
-            (None, 183, 1, "2025-05-08 08:00:00", "2025-10-28 10:45:00"),
-        ],
-        "qualifier_id int, timeseries_id int, qualifier_type_id int,"
-        " start_dt string, end_dt string",
-    ).select(
-        "qualifier_id", "timeseries_id", "qualifier_type_id",
-        F.col("start_dt").cast("timestamp").alias("start_dt"),
-        F.col("end_dt").cast("timestamp").alias("end_dt"),
-    )
-    merged, delete_ids = merge_same_value_segments(
-        segs, keys=["timeseries_id"], value_col="qualifier_type_id",
-        id_col="qualifier_id",
-    )
-    rows = merged.collect()
-    assert len(rows) == 3
-    assert sorted(r["qualifier_type_id"] for r in rows) == [1, 1, 18]
-    t18 = [r for r in rows if r["qualifier_type_id"] == 18][0]
-    assert t18["qualifier_id"] == 30
-    assert t18["start_dt"] == _ts("2023-09-13 16:00:00")
-    assert t18["end_dt"] == _ts("2025-10-28 12:30:00")
-    assert delete_ids.count() == 0
-
-
-def test_reference_case_redundant_ids_reported(spark):
-    # test-adjust_functions.R:64-89
-    segs = spark.createDataFrame(
-        [
-            (10, 183, 18, "2024-01-01 00:00:00", "2024-03-01 00:00:00"),
-            (11, 183, 18, "2024-02-01 00:00:00", "2024-04-01 00:00:00"),
-        ],
-        "qualifier_id int, timeseries_id int, qualifier_type_id int,"
-        " start_dt string, end_dt string",
-    ).select(
-        "qualifier_id", "timeseries_id", "qualifier_type_id",
-        F.col("start_dt").cast("timestamp").alias("start_dt"),
-        F.col("end_dt").cast("timestamp").alias("end_dt"),
-    )
-    merged, delete_ids = merge_same_value_segments(
-        segs, keys=["timeseries_id"], value_col="qualifier_type_id",
-        id_col="qualifier_id",
-    )
-    rows = merged.collect()
-    assert len(rows) == 1
-    assert rows[0]["qualifier_id"] == 10
-    assert [r["delete_id"] for r in delete_ids.collect()] == [11]
-
-
-def test_marked_rows_feed_delete_ids(spark):
-    segs = spark.createDataFrame(
-        [
-            (7, -1, 18, "2024-01-01 00:00:00", "2024-02-01 00:00:00"),
-            (8, 183, 18, "2024-01-01 00:00:00", "2024-02-01 00:00:00"),
-        ],
-        "qualifier_id int, timeseries_id int, qualifier_type_id int,"
-        " start_dt string, end_dt string",
-    ).select(
-        "qualifier_id", "timeseries_id", "qualifier_type_id",
-        F.col("start_dt").cast("timestamp").alias("start_dt"),
-        F.col("end_dt").cast("timestamp").alias("end_dt"),
-    )
-    merged, delete_ids = merge_same_value_segments(
-        segs, keys=["timeseries_id"], value_col="qualifier_type_id",
-        id_col="qualifier_id",
-    )
-    assert merged.count() == 1
-    assert [r["delete_id"] for r in delete_ids.collect()] == [7]
+from aquacache_spark.operators.segments import (recycle_split_ids,
+                                                split_segments)
 
 
 def _iv(spark, rows, with_id=False):

@@ -12,7 +12,6 @@ from aquacache_spark.sources.registry import dispatch
 from aquacache_spark.sources.snow_workbook import (
     parse_snow_workbook,
     read_snow_workbook,
-    read_snow_workbooks,
 )
 
 _CT = """<?xml version="1.0" encoding="UTF-8" standalone="yes"?>
@@ -138,15 +137,6 @@ def test_location_gate_and_contract(spark, workbook):
     # registry dispatch normalizes to the (datetime, value) contract
     got = dispatch(spark, "readSnowWorkbook", {"path": workbook}).collect()
     assert {r["value"] for r in got} == {12.5, 0.0, 8.0}
-
-
-def test_distributed_bulk_parse(spark, tmp_path, workbook):
-    p2 = str(tmp_path / "snow2.xlsx")
-    write_xlsx(p2, {"C2": snow_sheet("Course C", [(20.0, 5.0)])})
-    df = read_snow_workbooks(spark, [workbook, p2])
-    rows = df.collect()
-    # 2 from COURSE_A + 1 from UNKNOWN (kept: no location dim here) + 1 from C2
-    assert len(rows) == 4
 
 
 def test_error_and_date_cells_do_not_abort_parse(tmp_path):

@@ -116,27 +116,3 @@ def test_fetch_task_groups(spark):
     assert sorted(groups["downloadECCCwx|2100800|hour"]) == [1, 2]
     assert groups["downloadECCCwx|2100800|day"] == [3]
     assert len([k for k in groups if k.startswith("solo|")]) == 2
-
-
-def test_salted_stats_match_plain(spark):
-    from aquacache_spark.catalog import table
-    from aquacache_spark.operators.skew import salted_stats
-    from conftest import SF_SMOKE
-
-    ev = table(spark, SF_SMOKE, "events")
-    salted = {
-        r["event_type"]: r
-        for r in salted_stats(ev, ["event_type"], "value").collect()
-    }
-    from aquacache_spark.operators.daily import exact_mean
-    plain = {
-        r["event_type"]: r
-        for r in ev.groupBy("event_type")
-        .agg(F.count("value").alias("n"), F.min("value").alias("min"),
-             F.max("value").alias("max"), exact_mean(F.col("value")).alias("mean"))
-        .collect()
-    }
-    for k, p in plain.items():
-        s = salted[k]
-        assert s["n"] == p["n"] and s["min"] == p["min"] and s["max"] == p["max"]
-        assert s["mean"] == p["mean"]  # bit-identical via exact accumulation

@@ -8,11 +8,9 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from aquacache_spark.operators.increments import (
-    compute_increments,
-    compute_increments_pd,
-)
+from aquacache_spark.operators.increments import compute_increments
 from aquacache_spark.operators.period import calculate_period, detect_period_pd
+from helpers import compute_increments_pd
 
 
 def ts(*args):
