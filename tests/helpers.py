@@ -38,12 +38,11 @@ def with_vincenty_distance(
     lat2: Column,
     lon2: Column,
     out_col: str = "dist_m",
-    iterations: int = 8,
 ) -> DataFrame:
     """Add ``out_col`` = WGS84 spheroid metres between the two points
-    (Vincenty inverse, a FIXED number of λ-iterations; converges in <4
-    except within ~0.01° of the antipode). Temp columns are dropped
-    before returning."""
+    (Vincenty inverse, 8 λ-iterations; it converges in <4 except
+    within ~0.01° of the antipode). Temp columns are dropped before
+    returning."""
     f = WGS84_F
     u1 = F.atan((1 - f) * F.tan(F.radians(lat1)))
     u2 = F.atan((1 - f) * F.tan(F.radians(lat2)))
@@ -55,7 +54,7 @@ def with_vincenty_distance(
 
     su1, cu1 = F.col("__vd_su1"), F.col("__vd_cu1")
     su2, cu2 = F.col("__vd_su2"), F.col("__vd_cu2")
-    for _ in range(iterations):
+    for _ in range(8):
         df = df.withColumns({
             "__vd_sl": F.sin(F.col("__vd_lam")),
             "__vd_cl": F.cos(F.col("__vd_lam")),

@@ -282,26 +282,20 @@ def _query_roots() -> set:
             if isinstance(fn, ast.FunctionDef) and _registered(fn)}
 
 
-@functools.cache
-def _reached_from_queries() -> frozenset:
-    """(module, name) of every definition a registered query reaches."""
-    return _reach(_query_roots())
-
-
-def _unreached(mods) -> list[str]:
-    seen = _reached_from_queries()
-    return sorted(
-        f"{m}.{name}" for m in mods
-        for name in _top_level_defs(ast.parse(MODULES[m].read_text()))
-        if (m, name) not in seen)
+def _unreached(roots, mods=None) -> list[str]:
+    """Definitions in ``mods`` (default: the whole package) that
+    ``roots`` do not reach."""
+    seen = _reach(roots)
+    return sorted(f"{m}.{name}" for m in (mods or MODULES)
+                  for name in _defs()[m] if (m, name) not in seen)
 
 
 def test_probe_only_tier_definitions_are_reached_from_queries():
-    assert _unreached(PROBE_ONLY) == []
+    assert _unreached(_query_roots(), PROBE_ONLY) == []
 
 
 def test_listed_library_definitions_are_reached_from_queries():
-    assert _unreached(QUERY_REACHED) == []
+    assert _unreached(_query_roots(), QUERY_REACHED) == []
 
 
 def test_deleted_queries_stay_unregistered():
@@ -386,12 +380,6 @@ def _library_roots() -> set:
     return roots
 
 
-def _unreached_from(roots) -> list[str]:
-    seen = _reach(roots)
-    return sorted(f"{m}.{name}" for m, defs in _defs().items()
-                  for name in defs if (m, name) not in seen)
-
-
 def _key(name: str) -> tuple[str, str]:
     return tuple(name.rsplit(".", 1))
 
@@ -399,11 +387,11 @@ def _key(name: str) -> tuple[str, str]:
 def test_every_library_definition_is_reached_or_cites_the_reference():
     roots = _library_roots()
     allowed = {_key(k) for k in ALLOWED_UNREACHED}
-    assert _unreached_from(roots | allowed) == []
+    assert _unreached(roots | allowed) == []
     # each allowed entry is still unreached from the real entry points
     # (reach it, and it leaves the dict) ...
     assert sorted(set(ALLOWED_UNREACHED)
-                  - set(_unreached_from(roots))) == []
+                  - set(_unreached(roots))) == []
     # ... and names the reference file or patch it serves
     assert [k for k, v in ALLOWED_UNREACHED.items()
             if not REFERENCE_CITE.search(v)] == []
